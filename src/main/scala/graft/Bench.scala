@@ -5,18 +5,20 @@ object Bench {
     val procStart = System.nanoTime()
     def elapsed: Double = (System.nanoTime() - procStart) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = Sessions.local(cpus, cpus)
     // dev loop: SPARK_GRAFT_ONLY=q44,q28 benches just the named queries
     // (substring match); unset = the full suite the driver records
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
     val sorted = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.exists(n.contains)) }
-    // Whole-process CPU time (all 32 executor threads run in this JVM under
-    // local[32], so this captures every core-second the engine burns). CPU
-    // seconds are nearly invariant to external CPU steal, so the wall/cpu
-    // ratio in the artifact self-documents host contention: engine cost is
-    // ~cpu/32..cpu/1 depending on parallelism, while steal inflates wall only.
+    // Whole-process CPU time (all N executor threads run in this JVM under
+    // local[N], N = $cpus, so this captures every core-second the engine
+    // burns). CPU seconds are nearly invariant to external CPU steal, so the
+    // wall/cpu ratio in the artifact self-documents host contention: engine
+    // cost is ~cpu/N..cpu/1 depending on parallelism, while steal inflates
+    // wall only.
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .asInstanceOf[com.sun.management.OperatingSystemMXBean]
     // Queries that threw this run: their fail-fast wall time is NOT a
@@ -161,8 +163,9 @@ object Bench {
         s""""run_id":"$runId"$ratioPart,""" +
         // the artifact self-documents its core count (r19 PERF flagged the
         // scaling block as illegible without it): $SPARK_GRAFT_CPUS as
-        // requested, plus the session's actual defaultParallelism — an 8c
-        // and a 32c artifact now visibly differ in the recorded fields
+        // requested (else availableProcessors), plus the session's actual
+        // defaultParallelism — artifacts from hosts of different core
+        // counts visibly differ in the recorded fields
         s""""cpus":${spark.sparkContext.defaultParallelism},"cpus_env":"$cpus",""" +
         s""""note":"cpu_sec is whole-process CPU of the best wall rep; full artifact in BENCH_FULL.json","sf":"$sfDir"}"""
     }

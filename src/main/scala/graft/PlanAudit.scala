@@ -9,13 +9,11 @@ package graft
   *   - `explain <sfDir> <q1,q2>` — executedPlan for named queries;
   *   - `time <sfDir> <q1,q2> [reps]` — run named queries N times in one
   *     JVM, timing each pass (chasing run-count / host-contention
-  *     effects seen in Bench);
-  *   - `bpe <sfDir> [numMerges]` — scale check for BPE's driver-side
-  *     merge maintenance;
-  *   - `sem <sfDir> [reps]` — stage-level timing of the semantic-dedup
-  *     composite (q94's shape): k-means training alone, blocked-pair
-  *     generation alone, then the full operator — isolates which stage
-  *     owns the wall at a given SF.
+  *     effects seen in Bench); `-Dgraft.audit.jobs=true` adds a per-job
+  *     timeline;
+  *   - `scale <sfDir> [dst] [factor]` — regenerate the sf1 synthetic
+  *     replication (default `target/scale/sf1`, ×10) with the same
+  *     fingerprint marker as Bench's sf1 stage.
   */
 object PlanAudit {
 
@@ -52,13 +50,6 @@ object PlanAudit {
           System.err.println(s"===== $n =====")
           System.err.println(SparkEntry.queries(n)(spark, sfDir).queryExecution.executedPlan.toString)
         }
-      case "bpe" =>
-        val n = if (args.length > 2) args(2).toInt else 1000
-        val t0 = System.nanoTime()
-        val merges = graft.operators.Bpe.learnMerges(
-          Tables.documents(spark, sfDir), "text", n, minCount = 2L)
-        System.err.println(f"[audit] bpe $n merges in ${(System.nanoTime() - t0) / 1e9}%.2f s " +
-          s"(learned ${merges.size}; last=${merges.lastOption})")
       case "time" =>
         val reps = if (args.length > 3) args(3).toInt else 3
         // -Dgraft.audit.jobs=true: per-job timeline (start gap = driver-
@@ -98,93 +89,6 @@ object PlanAudit {
           System.err.println(
             f"[audit] rep $r $n: ${(System.nanoTime() - t0) / 1e9}%.2f s" + cpu)
         }
-      case "sem" =>
-        import org.apache.spark.sql.functions._
-        val reps = if (args.length > 2) args(2).toInt else 2
-        val emb = Tables.embeddings(spark, sfDir)
-        val st = emb.agg(coalesce(max(col("vec_id")), lit(0L)).as("mx"),
-          count(lit(1)).as("n")).head()
-        val planted = emb.filter(pmod(col("vec_id"), lit(10)) === 0)
-          .withColumn("vec_id", col("vec_id") + lit(st.getLong(0) + 1L))
-          .withColumn("embedding", transform(col("embedding"), x => x * lit(2.0f)))
-        val corpus = emb.unionByName(planted)
-        val k = math.max(8, (st.getLong(1) * 11L / 10L / 256L).toInt)
-        for (r <- 1 to reps) {
-          var t0 = System.nanoTime()
-          val cents = operators.Similarity.kmeansCentroids(corpus, "vec_id", "embedding", k, maxIter = 5)
-          val tK = (System.nanoTime() - t0) / 1e9
-          t0 = System.nanoTime()
-          val blocked = corpus.withColumn("__sem_cluster",
-            operators.Similarity.assignClusterApprox(Some(spark), col("embedding"), cents.map(_.toSeq).toSeq))
-          val nPairs = operators.Dedup.embeddingNearDuplicates(
-            blocked, "vec_id", "embedding", "__sem_cluster", 0.95).count()
-          val tP = (System.nanoTime() - t0) / 1e9
-          t0 = System.nanoTime()
-          operators.Dedup.semanticDeduplicate(corpus, "vec_id", "embedding",
-            k = k, threshold = 0.95, maxIter = 5)
-            .write.mode("overwrite").format("noop").save()
-          val tF = (System.nanoTime() - t0) / 1e9
-          System.err.println(f"[audit] rep $r sem k=$k: kmeans=$tK%.2f s  pairs($nPairs)=$tP%.2f s  full=$tF%.2f s")
-        }
-        // micro: one Lloyd iteration's pieces over the persisted sample
-        if (args.length > 3 && args(3) == "micro") {
-          import spark.implicits._
-          val normed = operators.Similarity.trainingSample(corpus, "vec_id", "embedding", 1 << 21).persist()
-          normed.count()
-          val pool = normed.orderBy(col("__h")).limit(k * 4)
-            .select(col("__e")).as[Seq[Double]].collect().map(_.toArray)
-          val cents = pool.take(k).map(_.toSeq).toSeq
-          val sumAgg = org.apache.spark.sql.functions.udaf(
-            graft.functions.Aggregators.VectorSum(pool.head.length))
-          for (r <- 1 to 3) {
-            var t0 = System.nanoTime()
-            normed.select(operators.Similarity.assignClusterApprox(Some(spark), col("__e"), cents).as("__c"))
-              .groupBy(col("__c")).count().collect()
-            val tA = (System.nanoTime() - t0) / 1e9
-            t0 = System.nanoTime()
-            normed.select(operators.Similarity.assignClusterApprox(Some(spark), col("__e"), cents).as("__c"), col("__e"))
-              .groupBy(col("__c")).agg(sumAgg(col("__e")).as("__s"), count(lit(1)).as("__n"))
-              .as[(Int, Seq[Double], Long)].collect()
-            val tS = (System.nanoTime() - t0) / 1e9
-            System.err.println(f"[audit] micro rep $r: assign+count=$tA%.2f s  assign+vecsum=$tS%.2f s")
-          }
-          normed.unpersist()
-        }
-      case "img" =>
-        // single-threaded image codec microbench — isolates per-image
-        // decode/encode/kernel cost from executor-level host contention
-        // (the r19-opt lesson: whole-process cpu-seconds on this host
-        // inflate up to 10x under steal, so micro-level codec changes
-        // need a contention-free measurement).
-        val n = if (args.length > 2) args(2).toInt else 2000
-        val I = graft.multimodal.ImageOps
-        val small = graft.multimodal.ImageFixtures.blockImage(42L) // 288x192
-        val bigIm = {
-          val b = new java.awt.image.BufferedImage(1400, 1000,
-            java.awt.image.BufferedImage.TYPE_INT_RGB)
-          val g = b.createGraphics()
-          try { g.drawImage(small, 0, 0, 1400, 1000, null) } finally g.dispose()
-          b
-        }
-        val smallJpg = I.encodeJpeg(small, 0.9f)
-        val bigJpg = I.encodeJpeg(bigIm, 0.9f)
-        def time(label: String, reps: Int)(body: => Unit): Unit = {
-          var i = 0; while (i < math.min(reps, 200)) { body; i += 1 } // warmup
-          val t0 = System.nanoTime()
-          i = 0; while (i < reps) { body; i += 1 }
-          System.err.println(f"[img] $label: ${(System.nanoTime() - t0) / 1e3 / reps}%.1f us/op ($reps ops)")
-        }
-        time("decode small jpg", n) { I.decode(smallJpg) }
-        time("decode big jpg", n / 10) { I.decode(bigJpg) }
-        val smallDec = I.decode(smallJpg).get
-        val bigDec = I.decode(bigJpg).get
-        time("dHash grid (small, decoded)", n) { I.dHash(smallJpg) }
-        time("transformGrids small", n) { I.dHashCanonical(smallJpg) }
-        time("encode small q65", n) { I.encodeJpeg(smallDec, 0.65f) }
-        time("encode big q65", n / 10) { I.encodeJpeg(bigDec, 0.65f) }
-        time("resize+encode big (foto shape)", n / 10) {
-          I.encodeJpeg(I.boundedResize(bigDec, 1024), 0.65f)
-        }
       case "scale" =>
         // regenerate the sf1 synthetic replication outside a full Bench
         // sweep (dev loops at SPARK_GRAFT_SF_DIR=target/scale/sf1 need
@@ -207,202 +111,8 @@ object PlanAudit {
         java.nio.file.Files.writeString(
           java.nio.file.Paths.get(dst, "_SCALE_SRC"), s"$sfDir|$factor|$srcFp\n")
         System.err.println(f"[audit] scale: $dst = $sfDir x$factor in ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      case "imgab" =>
-        // INTERLEAVED A/B of codec-path variants in one JVM: alternating
-        // A/B blocks with min-of-blocks per side, so host contention
-        // (which on this box swings whole runs 3-10x) hits both sides
-        // symmetrically and the DELTA stays meaningful.
-        val n = if (args.length > 2) args(2).toInt else 500
-        val I = graft.multimodal.ImageOps
-        val small = graft.multimodal.ImageFixtures.blockImage(42L)
-        val smallJpg = I.encodeJpeg(small, 0.9f)
-        val smallDec = I.decode(smallJpg).get
-        import javax.imageio.{IIOImage, ImageIO, ImageWriteParam}
-        def encodeFresh(im: java.awt.image.BufferedImage, q: Float): Array[Byte] = {
-          val writer = ImageIO.getImageWritersByFormatName("jpeg").next()
-          val params = writer.getDefaultWriteParam
-          params.setCompressionMode(ImageWriteParam.MODE_EXPLICIT)
-          params.setCompressionQuality(q)
-          val bos = new java.io.ByteArrayOutputStream()
-          val ios = new javax.imageio.stream.MemoryCacheImageOutputStream(bos)
-          try { writer.setOutput(ios); writer.write(null, new IIOImage(im, null, null), params) }
-          finally { ios.close(); writer.dispose() }
-          bos.toByteArray
-        }
-        def block(body: => Unit): Double = {
-          val t0 = System.nanoTime(); var i = 0
-          while (i < n) { body; i += 1 }
-          (System.nanoTime() - t0) / 1e3 / n
-        }
-        def ab(label: String, blocks: Int)(a: => Unit)(b: => Unit): Unit = {
-          var bestA = Double.MaxValue; var bestB = Double.MaxValue
-          var k = 0
-          while (k < blocks) {
-            bestA = math.min(bestA, block(a))
-            bestB = math.min(bestB, block(b))
-            k += 1
-          }
-          System.err.println(f"[imgab] $label: A=$bestA%.1f us/op  B=$bestB%.1f us/op  B/A=${bestB / bestA}%.3f")
-        }
-        def encodeNormalized(im: java.awt.image.BufferedImage, q: Float): Array[Byte] = {
-          // the pre-r19-opt path: copy any non-INT_RGB input to INT_RGB first
-          val c = new java.awt.image.BufferedImage(im.getWidth, im.getHeight,
-            java.awt.image.BufferedImage.TYPE_INT_RGB)
-          val g = c.createGraphics(); try g.drawImage(im, 0, 0, null) finally g.dispose()
-          encodeFresh(c, q)
-        }
-        // byte-identity checks, before timing: (a) encoding the decoder's
-        // native TYPE_3BYTE_BGR directly equals encoding its INT_RGB copy
-        // (the r19-opt encodeJpeg change banks on it); (b) ImageOps'
-        // encoder equals the local reference.
-        require(java.util.Arrays.equals(encodeNormalized(smallDec, 0.65f), I.encodeJpeg(smallDec, 0.65f)),
-          "direct 3BYTE_BGR encode and normalized-copy encode bytes differ")
-        require(java.util.Arrays.equals(encodeFresh(small, 0.65f), I.encodeJpeg(small, 0.65f)),
-          "ImageOps encoder and local reference bytes differ")
-        ab("encode 3BYTE_BGR q65 (A normalize-copy, B direct)", 6)(
-          encodeNormalized(smallDec, 0.65f))(I.encodeJpeg(smallDec, 0.65f))
-        ab("decode small (A useCache=true, B false)", 6)(
-          { ImageIO.setUseCache(true); I.decode(smallJpg); ImageIO.setUseCache(false) })(
-          I.decode(smallJpg))
-        // r20 measured NON-change: magic-byte dispatch to per-thread
-        // cached JPEG/PNG readers (the r19-ranked decode candidate) vs
-        // ImageIO.read's registry walk. Pixel identity holds, but the
-        // cached path measured SLOWER single-threaded (1.02–1.04×) and
-        // at 16 threads (1.11×) — the registry walk + fresh-reader
-        // lifecycle is not where decode time goes. ImageOps therefore
-        // keeps plain ImageIO.read; this probe is the receipt.
-        locally {
-          val readerTL = ThreadLocal.withInitial[javax.imageio.ImageReader](
-            () => ImageIO.getImageReadersByFormatName("jpeg").next())
-          val pngReaderTL = ThreadLocal.withInitial[javax.imageio.ImageReader](
-            () => ImageIO.getImageReadersByFormatName("png").next())
-          def cachedDecode(bytes: Array[Byte]): java.awt.image.BufferedImage = {
-            val isJpg = (bytes(0) & 0xff) == 0xff && (bytes(1) & 0xff) == 0xd8
-            val r = (if (isJpg) readerTL else pngReaderTL).get()
-            val stream = new javax.imageio.stream.MemoryCacheImageInputStream(
-              new java.io.ByteArrayInputStream(bytes))
-            try {
-              r.setInput(stream, true, true) // the exact flags ImageIO.read passes
-              r.read(0, r.getDefaultReadParam)
-            } finally { r.setInput(null); stream.close() }
-          }
-          val smallPng = {
-            val bos = new java.io.ByteArrayOutputStream()
-            ImageIO.write(small, "png", bos); bos.toByteArray
-          }
-          def px(im: java.awt.image.BufferedImage): Array[Int] =
-            im.getRGB(0, 0, im.getWidth, im.getHeight, null, 0, im.getWidth)
-          for ((label, payload) <- Seq("jpg" -> smallJpg, "png" -> smallPng)) {
-            val a = ImageIO.read(new java.io.ByteArrayInputStream(payload))
-            val b = cachedDecode(payload)
-            require(a.getType == b.getType && java.util.Arrays.equals(px(a), px(b)),
-              s"cached-reader decode differs from ImageIO.read for $label")
-          }
-          System.err.println("[imgab] cached-reader decode identity: jpg+png OK")
-          ab("decode small jpg (A ImageIO.read, B cached reader)", 6)(
-            ImageIO.read(new java.io.ByteArrayInputStream(smallJpg)))(
-            cachedDecode(smallJpg))
-          ab("decode small png (A ImageIO.read, B cached reader)", 6)(
-            ImageIO.read(new java.io.ByteArrayInputStream(smallPng)))(
-            cachedDecode(smallPng))
-          // contention probe: the single-threaded delta misses lock
-          // effects (the r19 audio lesson — AudioSystem's synchronized
-          // SPI walk only hurt at 32 threads); hammer both paths from
-          // a pool the size of the executor's
-          def mt(label: String, threads: Int, perThread: Int)(
-              a: => Unit)(b: => Unit): Unit = {
-            def run(body: => Unit): Double = {
-              val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
-              val t0 = System.nanoTime()
-              val fs = (1 to threads).map(_ => pool.submit(new Runnable {
-                def run(): Unit = { var i = 0; while (i < perThread) { body; i += 1 } }
-              }))
-              fs.foreach(_.get())
-              pool.shutdown()
-              (System.nanoTime() - t0) / 1e3 / (threads.toLong * perThread)
-            }
-            var bestA = Double.MaxValue; var bestB = Double.MaxValue
-            for (_ <- 1 to 4) {
-              bestA = math.min(bestA, run(a))
-              bestB = math.min(bestB, run(b))
-            }
-            System.err.println(
-              f"[imgab] $label (${threads}T): A=$bestA%.1f us/op  B=$bestB%.1f us/op  B/A=${bestB / bestA}%.3f")
-          }
-          mt("decode small jpg MT (A ImageIO.read, B cached reader)", 16, n / 4)(
-            ImageIO.read(new java.io.ByteArrayInputStream(smallJpg)))(
-            cachedDecode(smallJpg))
-        }
-        // resize-surface probe: is bilinear drawImage into TYPE_3BYTE_BGR
-        // pixel-identical to the INT_RGB path? (If yes, boundedResize
-        // could emit the encoder's native layout; if no, that change is
-        // off the table — the fixture resize variants must stay stable.)
-        locally {
-          val src = {
-            val b = new java.awt.image.BufferedImage(1400, 1000,
-              java.awt.image.BufferedImage.TYPE_INT_RGB)
-            val g = b.createGraphics()
-            try g.drawImage(small, 0, 0, 1400, 1000, null) finally g.dispose()
-            I.decode(I.encodeJpeg(b, 0.9f)).get // 3BYTE_BGR, photo-ish content
-          }
-          def resizeInto(tp: Int): java.awt.image.BufferedImage = {
-            val out = new java.awt.image.BufferedImage(1024, 731, tp)
-            val g = out.createGraphics()
-            try {
-              g.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
-                java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-              g.drawImage(src, 0, 0, 1024, 731, null)
-            } finally g.dispose()
-            out
-          }
-          val a = resizeInto(java.awt.image.BufferedImage.TYPE_INT_RGB)
-          val b = resizeInto(java.awt.image.BufferedImage.TYPE_3BYTE_BGR)
-          val pa = a.getRGB(0, 0, 1024, 731, null, 0, 1024)
-          val pb = b.getRGB(0, 0, 1024, 731, null, 0, 1024)
-          var diff = 0
-          var i2 = 0
-          while (i2 < pa.length) { if (pa(i2) != pb(i2)) diff += 1; i2 += 1 }
-          System.err.println(s"[imgab] resize surface probe: ${pa.length} px, $diff differ " +
-            s"(INT_RGB vs 3BYTE_BGR bilinear)")
-          ab("resize+encode big (A via INT_RGB, B via 3BYTE_BGR)", 4)(
-            I.encodeJpeg(resizeInto(java.awt.image.BufferedImage.TYPE_INT_RGB), 0.65f))(
-            I.encodeJpeg(resizeInto(java.awt.image.BufferedImage.TYPE_3BYTE_BGR), 0.65f))
-        }
-      case "lifecycle" =>
-        // INTERLEAVED A/B of the Par-overlapped lifecycle writes in one
-        // JVM (r20): alternating blocks flip -Dgraft.par.sequential, so
-        // host contention (3×+ swings this window) hits both sides
-        // symmetrically; min-of-blocks per side. Queries default to the
-        // lifecycle trio; audio rides as an untouched control.
-        val qs = if (names.nonEmpty) names
-          else Seq("q108_containment_indexed", "q127_token_takedown_lifecycle",
-            "q126_vector_takedown_lifecycle", "q139_audio_neardup")
-        val blocks = if (args.length > 3) args(3).toInt else 4
-        val bestSeq = scala.collection.mutable.Map[String, Double]()
-        val bestPar = scala.collection.mutable.Map[String, Double]()
-        // warmup both sides once (JIT + codegen + footer caches)
-        for (seqSide <- Seq(true, false); n <- qs) {
-          System.setProperty("graft.par.sequential", seqSide.toString)
-          SparkEntry.queries(n)(spark, sfDir).write.mode("overwrite").format("noop").save()
-        }
-        for (b <- 1 to blocks; seqSide <- Seq(true, false)) {
-          System.setProperty("graft.par.sequential", seqSide.toString)
-          qs.foreach { n =>
-            val t0 = System.nanoTime()
-            SparkEntry.queries(n)(spark, sfDir).write.mode("overwrite").format("noop").save()
-            val w = (System.nanoTime() - t0) / 1e9
-            val m = if (seqSide) bestSeq else bestPar
-            if (m.get(n).forall(w < _)) m(n) = w
-          }
-          System.err.println(f"[lifecycle] block $b/${blocks} side=${if (seqSide) "SEQ" else "PAR"} done")
-        }
-        System.clearProperty("graft.par.sequential")
-        qs.foreach { n =>
-          System.err.println(f"[lifecycle] $n: SEQ=${bestSeq(n)}%.2f s  PAR=${bestPar(n)}%.2f s  " +
-            f"PAR/SEQ=${bestPar(n) / bestSeq(n)}%.3f")
-        }
       case other =>
-        System.err.println(s"unknown mode '$other' (plans | explain | time | bpe | sem | img | imgab | lifecycle)")
+        System.err.println(s"unknown mode '$other' (plans | explain | time | scale)")
     }
     spark.stop()
   }

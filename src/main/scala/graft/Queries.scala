@@ -4057,7 +4057,8 @@ object Queries {
           work.toString, k = 1, nprobe = 2)
         .select(lit(phase).as("phase"), col("query_id"), col("neighbor_id"),
           round(col("cosine"), 6).as("sim"), col("rank").as("rnk"),
-          lit(VI.tombstones(s, work.toString).isDefined).as("ledger_live"))
+          lit(graft.operators.IndexStore.tombstones(s, work.toString, "vec_id")
+            .isDefined).as("ledger_live"))
       val p0 = probe(0).localCheckpoint(true) // materialize BEFORE compact
       VI.compact(s, work.toString)
       val p1 = probe(1)

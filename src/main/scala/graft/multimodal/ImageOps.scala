@@ -51,11 +51,11 @@ object ImageOps {
   // Reader acquisition stays ImageIO.read's registry walk DELIBERATELY
   // (r20 measured non-change): magic-byte dispatch to per-thread cached
   // JPEG/PNG readers — the r19 "ranked next" candidate — measured
-  // SLOWER in the interleaved imgab harness, single-threaded (1.02–
+  // SLOWER in an interleaved A/B harness, single-threaded (1.02–
   // 1.04×) AND at 16 threads (1.11×), with pixel identity confirmed.
   // The registry walk + fresh-reader lifecycle is not where decode time
   // goes (it is Huffman+IDCT); tried, measured, reverted — the probe
-  // lives on in PlanAudit imgab.
+  // is in commit e9c4d2a.
   def decode(bytes: Array[Byte]): Option[BufferedImage] =
     if (bytes == null) None
     else try Option(ImageIO.read(new ByteArrayInputStream(bytes)))
@@ -73,8 +73,9 @@ object ImageOps {
       val nw = (w * scale).toInt
       val nh = (h * scale).toInt
       // TYPE_3BYTE_BGR, not INT_RGB: the bilinear blit produces
-      // pixel-identical output on both surfaces (probed over 750k px in
-      // PlanAudit imgab — 0 differ; same fixed-point loops), and the JPEG
+      // pixel-identical output on both surfaces (probed over 750k px by
+      // the A/B harness of commit e9c4d2a — 0 differ; same fixed-point
+      // loops), and the JPEG
       // encoder consumes the byte layout natively (resize+encode 0.74× vs
       // the packed-int detour it would otherwise unpack again).
       val out = new BufferedImage(math.max(nw, 1), math.max(nh, 1), BufferedImage.TYPE_3BYTE_BGR)
@@ -93,7 +94,7 @@ object ImageOps {
     // untouched: TYPE_INT_RGB, and TYPE_3BYTE_BGR — what the JPEG/PNG
     // DECODER hands back, which the writer consumes natively (same RGB
     // channel values → same YCbCr DCT input → byte-identical JPEG,
-    // require()-checked in PlanAudit's imgab harness), and measurably
+    // require()-checked in the A/B harness of commit e9c4d2a), and measurably
     // faster than paying a full-image drawImage copy first.
     val rgb =
       if (im.getType == BufferedImage.TYPE_INT_RGB ||

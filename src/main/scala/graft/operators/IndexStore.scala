@@ -1,0 +1,177 @@
+package graft.operators
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+
+/** The lifecycle state [[TokenIndex]] and [[VectorIndex]] share, kept
+  * once and parameterised by the index's key column (`corpus_id` or
+  * `vec_id`): the takedown ledger, its horizon-aware mask, and the
+  * stored-metadata invariants of the postings table.
+  *
+  * Takedown ledger (VERDICT r15 item 5; horizon-aware since round 17):
+  * `tombstones/` holds appended parquet rows `(key, asof_run)`. A
+  * delete is a tombstone, not a rewrite: every probe anti-joins out the
+  * rows of a deleted key AT OR BELOW its `asof_run` immediately, and
+  * the index's next `compact` drops those rows physically and retires
+  * the ledger (re-add semantics after that). Because only rows at or
+  * below the horizon are masked, delete-then-append-under-a-higher-run
+  * is the UPSERT path: the stale rows are masked from the very next
+  * read while the re-ingested ones are live, never both, never neither.
+  *
+  * Scale contract: the LIVE ledger is the inter-compaction takedown
+  * volume — bounded small in practice — so every consumer broadcasts
+  * it. A takedown of most of the corpus should be a rebuild of the
+  * survivors instead.
+  */
+private[graft] object IndexStore {
+
+  /** Sentinel for a delete's `asofRun`: derive the horizon from the
+    * index's current postings. */
+  val DeriveAsof: Long = Long.MinValue
+
+  private def tombstonesDir(indexDir: String) = s"$indexDir/tombstones"
+
+  private def exists(spark: SparkSession, dir: String): Boolean = {
+    val p = new Path(dir)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
+
+  /** Append `ids` to the ledger under horizon `asofRun`. [[DeriveAsof]]
+    * records the max `run_id` of `postingsDir` (one column-pruned
+    * aggregate — deletes are rare, probes pay nothing new), so a delete
+    * covers exactly the ingests that preceded it; an index with no
+    * postings records -1 (nothing to cover). Callers that own run
+    * bookkeeping pass `asofRun` explicitly: a REDELIVERED
+    * derive-at-delete-time delete would re-derive a higher horizon and
+    * swallow an upsert appended in between. Idempotent under
+    * redelivery: a retried delete appends identical rows, and every
+    * consumer is a set operation. The caller holds the index's lease.
+    */
+  def appendTombstones(ids: DataFrame, idCol: String, key: String,
+      indexDir: String, postingsDir: String, asofRun: Long): Unit = {
+    val spark = ids.sparkSession
+    val asof =
+      if (asofRun != DeriveAsof) asofRun
+      else if (!exists(spark, postingsDir)) -1L
+      else {
+        val h = spark.read.parquet(postingsDir)
+          .agg(max(col("run_id"))).collect().head
+        if (h.isNullAt(0)) -1L else h.getLong(0)
+      }
+    ids.select(col(idCol).as(key)).distinct()
+      .withColumn("asof_run", lit(asof))
+      .coalesce(1).write.mode("append").parquet(tombstonesDir(indexDir))
+  }
+
+  /** The live `(key, asof_run)` ledger rows, or None when no delete was
+    * ever issued (the common case — consumers then skip the anti-join,
+    * so the no-takedown plans are untouched).
+    *
+    * One explicit-schema read: no schema inference, so no Spark job.
+    * Legacy (pre-horizon) ledger files carry only the key; their rows
+    * read `asof_run` as NULL and default to Long.MaxValue — "mask every
+    * run", the semantics they were written under — so an old index
+    * with pending takedowns keeps probing and compacting. The default
+    * is per ROW: a MIXED ledger (legacy files beside post-upgrade
+    * deletes) keeps both generations masking, where a NULL horizon
+    * would silently unmask (`run_id <= NULL` is never true). Keys are
+    * integral (`long`).
+    *
+    * NOT deduplicated: every consumer is a left-anti join or a physical
+    * drop, both multiplicity-blind, and a distinct would buy an
+    * exchange for nothing (measured as the dominant ledger cost in the
+    * sf1 takedown probe). A key deleted twice with different horizons
+    * carries both rows; the effective horizon is their max, the
+    * union-of-coverage semantics wanted.
+    */
+  def tombstones(spark: SparkSession, indexDir: String,
+      key: String): Option[DataFrame] =
+    if (!exists(spark, tombstonesDir(indexDir))) None
+    else Some(spark.read.schema(s"$key long, asof_run long")
+      .parquet(tombstonesDir(indexDir))
+      .select(col(key), coalesce(col("asof_run"), lit(Long.MaxValue)).as("asof_run")))
+
+  /** Drop the rows of `df` the ledger covers: `idCol` matches a
+    * tombstone AND the row's `runCol` is at or below its horizon, so an
+    * upsert's re-appended (higher-run) rows survive. Always a broadcast
+    * hash anti-join — equi on the id, the run bound rides as an extra
+    * predicate — so the scan never shuffles; None folds through.
+    */
+  def dropMasked(df: DataFrame, tomb: Option[DataFrame], idCol: String,
+      runCol: String = "run_id"): DataFrame =
+    tomb.fold(df)(t =>
+      df.join(broadcast(t.toDF("__t_id", "__t_asof")),
+        df(idCol) === col("__t_id") && df(runCol) <= col("__t_asof"),
+        "left_anti"))
+
+  /** After a compaction made the takedowns physical: retire the ledger.
+    * A crash before this leaves stale tombstones over already-dropped
+    * rows, which the mask reads as a harmless no-op. */
+  def retireTombstones(spark: SparkSession, indexDir: String): Unit = {
+    val p = new Path(tombstonesDir(indexDir))
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(p)) fs.delete(p, true)
+  }
+
+  /** Metadata column names a caller may store in the postings: none may
+    * shadow a reserved posting column or use the internal `__` working
+    * prefix (the index's write pipeline would shadow or drop it). */
+  private def requireMetaNames(names: Seq[String], reserved: Set[String]): Unit =
+    names.foreach { m =>
+      require(!reserved(m), s"metaCols name '$m' collides with a reserved posting column")
+      require(!m.startsWith("__"),
+        s"metaCols name '$m' uses the internal working-column prefix __")
+    }
+
+  /** The stored postings under their merged schema. A single footer's
+    * schema is whichever file Spark samples first, so on an index whose
+    * files carry mixed schemas a one-footer read would flip the
+    * metadata checks arbitrarily; the merged schema sees every column
+    * any file carries. */
+  private def mergedPostings(spark: SparkSession, postingsDir: String): DataFrame =
+    spark.read.option("mergeSchema", "true").parquet(postingsDir)
+
+  /** The append-side metadata invariant: `metaCols` are valid names,
+    * present in `batch`, and — once postings exist — exactly the stored
+    * metadata set. The set is index-level, not per batch: a batch with
+    * a different set writes rows a filtered probe silently excludes
+    * forever (the predicate reads NULL for the missing column). */
+  def requireMetaSet(batch: DataFrame, metaCols: Seq[String],
+      postingsDir: String, reserved: Set[String]): Unit = {
+    requireMetaNames(metaCols, reserved)
+    metaCols.foreach(m =>
+      require(batch.columns.contains(m), s"metaCols column '$m' not in batch"))
+    val spark = batch.sparkSession
+    if (exists(spark, postingsDir)) {
+      val stored = mergedPostings(spark, postingsDir).columns.filterNot(reserved).toSet
+      require(stored == metaCols.toSet,
+        s"metaCols ${metaCols.toSet} must match the index's stored metadata " +
+          s"columns $stored — every append carries the same metadata set")
+    }
+  }
+
+  /** The `evolveMetadata` preamble: validate the added columns, heal a
+    * crashed prior swap BEFORE the existence check (the postings may be
+    * parked whole under `__compact_old`), and refuse columns already
+    * stored — evolution only ADDS. Returns the merged-schema postings
+    * read, so the rewrite carries the same UNION schema the check saw
+    * (a one-footer read would drop the unsampled files' metadata
+    * through the swap). */
+  def evolvablePostings(spark: SparkSession, postingsDir: String,
+      reserved: Set[String], defaults: Seq[(String, Any)]): DataFrame = {
+    require(defaults.nonEmpty, "evolveMetadata: no columns to add")
+    requireMetaNames(defaults.map(_._1), reserved)
+    graft.sources.Compaction.recoverCrashedSwap(spark, postingsDir)
+    require(exists(spark, postingsDir),
+      s"evolveMetadata: no index postings at $postingsDir")
+    val input = mergedPostings(spark, postingsDir)
+    val stored = input.columns.filterNot(reserved).toSet
+    defaults.foreach { case (m, _) =>
+      require(!stored.contains(m),
+        s"evolveMetadata: column '$m' is already stored metadata " +
+          s"($stored) — evolution only ADDS columns")
+    }
+    input
+  }
+}

@@ -70,60 +70,31 @@ object TokenIndex {
   private def arraysDir(indexDir: String) = s"$indexDir/arrays"
   private def dfDir(indexDir: String) = s"$indexDir/df"
   private def statsDir(indexDir: String) = s"$indexDir/stats"
-  private def tombstonesDir(indexDir: String) = s"$indexDir/tombstones"
 
-  /** Takedown contract (VERDICT r15 item 5), the same tombstone ledger
-    * as [[VectorIndex.delete]]: mark corpus ids deleted. Probes
+  /** Takedown contract: mark corpus ids deleted in the tombstone ledger
+    * [[IndexStore]] keeps for both indexes (horizon `asofRun`, derived
+    * from the current postings by default). Probes
     * ([[containmentJoinIndexed]], [[flaggedCorpusIds]], [[bm25Indexed]])
-    * anti-join the ledger immediately — a taken-down document can never
+    * mask the ledger immediately — a taken-down document can never
     * again be a containment hit or a retrieval result — and the next
     * [[compact]] physically drops its postings/arrays rows, RE-DERIVES
-    * df and the BM25 (N, avgdl) stats from the survivors (healing the
-    * collection-level staleness scoring tolerates in between), then
-    * clears the ledger (re-add semantics after that).
-    *
-    * HORIZON-AWARE like the vector ledger (round 17): the tombstone
-    * records `asof_run` (derived from the current postings, or
-    * caller-supplied — see [[VectorIndex.delete]] for the redelivery
-    * race the parameter exists for), and every consumer masks/drops
-    * only rows at or below it. That makes
-    * delete-then-[[append]]-under-a-higher-run the documented UPSERT
-    * path for a CHANGED document: probes answer by the new token set
-    * from the very next read, never the stale one, never both. The one
-    * residual staleness is BM25's collection stats — (N, sum_dl) count
-    * both ingests of an upserted doc until [[compact]] re-derives them
-    * (the same documented class as a verbatim re-ingest under a new
-    * run id).
-    *
-    * Idempotent under redelivery (appended distinct ids; set-op
-    * consumers). The LIVE ledger is inter-compaction-bounded, so the
-    * probe-side anti-joins broadcast it.
+    * df and the BM25 (N, avgdl) stats from the survivors, then retires
+    * the ledger. Delete-then-[[append]]-under-a-higher-run is the
+    * UPSERT path for a CHANGED document; its one residual staleness is
+    * BM25's collection stats — (N, sum_dl) count both ingests of an
+    * upserted doc until [[compact]] re-derives them (the same
+    * documented class as a verbatim re-ingest under a new run id).
     */
   def delete(ids: DataFrame, idCol: String, indexDir: String,
-      asofRun: Long = DeriveAsof): Unit = {
-    val spark = ids.sparkSession
-    graft.sources.Lease.withLease(spark, indexDir) {
-    val asof =
-      if (asofRun != DeriveAsof) asofRun
-      else {
-        val p = new org.apache.hadoop.fs.Path(postingsDir(indexDir))
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(p)) -1L
-        else {
-          val h = spark.read.parquet(postingsDir(indexDir))
-            .agg(max(col("run_id"))).collect().head
-          if (h.isNullAt(0)) -1L else h.getLong(0)
-        }
-      }
-    ids.select(col(idCol).as("corpus_id")).distinct()
-      .withColumn("asof_run", lit(asof))
-      .coalesce(1).write.mode("append").parquet(tombstonesDir(indexDir))
+      asofRun: Long = DeriveAsof): Unit =
+    graft.sources.Lease.withLease(ids.sparkSession, indexDir) {
+      IndexStore.appendTombstones(ids, idCol, "corpus_id", indexDir,
+        postingsDir(indexDir), asofRun)
     }
-  }
 
   /** Sentinel for [[delete]]'s `asofRun`: derive the horizon from the
-    * index's current postings (mirrors [[VectorIndex.DeriveAsof]]). */
-  val DeriveAsof: Long = Long.MinValue
+    * index's current postings ([[IndexStore.DeriveAsof]]). */
+  val DeriveAsof: Long = IndexStore.DeriveAsof
 
   /** Internal posting columns [[append]]'s `metaCols` may not shadow. */
   private[graft] val ReservedPostingCols: Set[String] =
@@ -145,49 +116,6 @@ object TokenIndex {
       append(batch, idCol, textCol, indexDir, runId, metaCols)
     }
 
-  // not deduplicated — every consumer is anti-join/physical-drop
-  // (multiplicity-blind), and a distinct would buy an exchange for
-  // nothing (the sf1 takedown probe measured it as the ledger's
-  // dominant cost on the VectorIndex side). A doc deleted twice with
-  // different horizons carries both rows; the anti-joins' effective
-  // horizon is their max — union-of-coverage semantics.
-  private def tombstones(spark: SparkSession,
-      indexDir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(tombstonesDir(indexDir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) {
-      val raw = spark.read.option("mergeSchema", "true")
-        .parquet(tombstonesDir(indexDir))
-      // legacy (pre-horizon) ledger rows default to asof_run =
-      // Long.MaxValue (mask all runs — their original semantics), same
-      // fallback as VectorIndex.tombstones, so old indexes stay
-      // probe-able and compact-able after the schema gained the
-      // column. Per-ROW coalesce + mergeSchema, not a schema-level
-      // branch: a MIXED ledger (legacy files beside post-upgrade
-      // deletes) reads legacy rows as NULL, and `run_id <= NULL` would
-      // silently unmask the takedown.
-      val withHorizon =
-        if (raw.columns.contains("asof_run"))
-          raw.withColumn("asof_run",
-            coalesce(col("asof_run"), lit(Long.MaxValue)))
-        else raw.withColumn("asof_run", lit(Long.MaxValue))
-      Some(withHorizon.select(col("corpus_id"), col("asof_run")))
-    } else None
-  }
-
-  /** Drop rows covered by the ledger: `corpus_id` matches AND the row's
-    * `run_id` is at or below the delete-time horizon — so an upsert's
-    * re-appended (higher-run) postings/arrays survive the mask. Always
-    * a broadcast hash anti-join (equi on the id, the run bound rides as
-    * an extra predicate); `df` must carry corpus_id + run_id.
-    */
-  private def dropMasked(df: DataFrame, tomb: Option[DataFrame]): DataFrame =
-    tomb.fold(df)(t =>
-      df.join(broadcast(t.select(col("corpus_id").as("__t_id"),
-          col("asof_run").as("__t_asof"))),
-        df("corpus_id") === col("__t_id") && df("run_id") <= col("__t_asof"),
-        "left_anti"))
-
   /** Index one corpus ingest batch: append its postings and df delta
     * under `runId`. Contract: append-only corpus, one batch per run id
     * (retries of the SAME batch under the same run id are absorbed —
@@ -206,32 +134,8 @@ object TokenIndex {
     // doc) — that is the price of scan-level pushdown; callers with
     // wide metadata or huge vocabularies keep using the allowed-DF
     // overloads instead.
-    metaCols.foreach { m =>
-      require(!ReservedPostingCols(m),
-        s"metaCols name '$m' collides with a reserved posting column")
-      require(!m.startsWith("__"),
-        s"metaCols name '$m' uses the internal working-column prefix __" +
-          " (the tokenize pipeline would shadow or drop it)")
-      require(corpusBatch.columns.contains(m), s"metaCols column '$m' not in batch")
-    }
-    // index-level invariant, same reasoning as VectorIndex.append: a
-    // batch with a different metadata set writes rows filtered probes
-    // silently exclude (NULL predicate) — refuse loudly
-    val spark0 = corpusBatch.sparkSession
-    val pExist = new org.apache.hadoop.fs.Path(postingsDir(indexDir))
-    if (pExist.getFileSystem(spark0.sparkContext.hadoopConfiguration).exists(pExist)) {
-      // mergeSchema: a single footer's schema is whichever file Spark
-      // samples first — on a legacy index whose files already carry
-      // mixed schemas the check would flip arbitrarily; the merged
-      // schema sees every column any file carries (same reasoning as
-      // the tombstones() read)
-      val stored = spark0.read.option("mergeSchema", "true")
-        .parquet(postingsDir(indexDir)).columns
-        .filterNot(ReservedPostingCols).toSet
-      require(stored == metaCols.toSet,
-        s"metaCols ${metaCols.toSet} must match the index's stored metadata " +
-          s"columns $stored — every append carries the same metadata set")
-    }
+    IndexStore.requireMetaSet(corpusBatch, metaCols, postingsDir(indexDir),
+      ReservedPostingCols)
     // one snapshot feeds all four writes: arrays land first, postings /
     // df / stats derive from the same materialized frame (never a
     // second tokenize pass over the corpus). Only docs with a non-empty
@@ -372,13 +276,14 @@ object TokenIndex {
     val pScan = spark.read.parquet(postingsDir(indexDir))
     val postings = metaPredicate.fold(pScan)(mp => pScan.where(mp))
       .select(col("tok"), col("corpus_id"), col("run_id"))
-    val tomb = tombstones(spark, indexDir)
+    val tomb = IndexStore.tombstones(spark, indexDir, "corpus_id")
     // takedowns anti-join at the candidate (not postings) level: the
     // candidate set is already the bounded side, so the ledger filter
     // costs candidate-sized work and the postings scan is untouched.
     // run_id rides to here so the mask is horizon-aware (an upserted
     // doc's higher-run postings survive), then drops in the distinct
-    val cands = dropMasked(broadcast(prefixes).join(postings, "tok"), tomb)
+    val cands = IndexStore.dropMasked(broadcast(prefixes).join(postings, "tok"),
+        tomb, "corpus_id")
       .select(col("probe_id"), col("corpus_id")).distinct()
       // feeds the semi-filter AND the pair join; without the snapshot
       // the prefix/postings subtree would run twice
@@ -394,9 +299,9 @@ object TokenIndex {
     // re-ingests) on the matched subset — never via a corpus shuffle,
     // and never on the output (which would change pair multiplicity vs
     // the one-shot operator; r14 review)
-    val matched = dropMasked(arrays.join(
+    val matched = IndexStore.dropMasked(arrays.join(
         broadcast(cands.select(col("corpus_id")).distinct()), "corpus_id"),
-        tomb)
+        tomb, "corpus_id")
       .select(col("corpus_id"), col("toks"))
       .distinct()
     cands.join(broadcast(pa), "probe_id")
@@ -502,12 +407,12 @@ object TokenIndex {
     // columns — so both reach parquet as PushedFilters; None folds
     // through and the allowed-DF/unfiltered plans are bit-unchanged
     val scan0 = spark.read.parquet(postingsDir(indexDir))
-    val p0 = dropMasked(
+    val p0 = IndexStore.dropMasked(
         metaPredicate.fold(scan0)(mp => scan0.where(mp))
           .filter(col("tok").isin(terms: _*))
           .select(col("corpus_id"), col("tok"), col("tf"), col("dl"),
             col("run_id")),
-        tombstones(spark, indexDir))
+        IndexStore.tombstones(spark, indexDir, "corpus_id"), "corpus_id")
       .select(col("corpus_id"), col("tok"), col("tf"), col("dl"))
       .distinct() // term-bounded; absorbs retried + re-ingested rows
     // the metadata predicate restricts the term-bounded matched set —
@@ -544,7 +449,7 @@ object TokenIndex {
     // upserted doc's higher-run rows survive while the stale ones go.
     // df/stats re-derive from the folded survivors below, so the BM25
     // collection stats heal here
-    val tomb = tombstones(spark, indexDir)
+    val tomb = IndexStore.tombstones(spark, indexDir, "corpus_id")
     // mergeSchema on the postings rewrite: the ONE table whose files
     // can carry different column sets across schema generations — a
     // one-footer read here would permanently drop the unsampled files'
@@ -561,7 +466,7 @@ object TokenIndex {
         // metadata columns (append's metaCols — anything non-reserved)
         // survive the fold verbatim: they are part of the posting row
         val metaCols = df.columns.filterNot(ReservedPostingCols).toSeq
-        dropMasked(df, tomb)
+        IndexStore.dropMasked(df, tomb, "corpus_id")
           .select((Seq("tok", "corpus_id", "tf", "dl") ++ metaCols).map(col): _*)
           .distinct()
           .withColumn("run_id", lit(horizon(df)))
@@ -570,7 +475,7 @@ object TokenIndex {
       },
       () => a = graft.sources.Compaction.rewriteParquetDir(spark,
           arraysDir(indexDir), targetBytes) { df =>
-        dropMasked(df, tomb)
+        IndexStore.dropMasked(df, tomb, "corpus_id")
           .select(col("corpus_id"), col("toks")).distinct()
           .withColumn("run_id", lit(horizon(df)))
           .select(col("corpus_id"), col("toks"), col("run_id"))
@@ -597,12 +502,8 @@ object TokenIndex {
         }
         ()
       })
-    // takedowns are now physical — retire the ledger (re-add semantics
-    // after this; a crash before this line leaves stale tombstones over
-    // already-dropped rows, a harmless anti-join no-op)
-    val tp = new org.apache.hadoop.fs.Path(tombstonesDir(indexDir))
-    val tfs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (tfs.exists(tp)) tfs.delete(tp, true)
+    // takedowns are now physical — retire the ledger
+    IndexStore.retireTombstones(spark, indexDir)
     (p, d, a)
   }
 
@@ -629,31 +530,10 @@ object TokenIndex {
   def evolveMetadata(spark: SparkSession, indexDir: String,
       defaults: Seq[(String, Any)]): Unit =
       graft.sources.Lease.withLease(spark, indexDir) {
-    require(defaults.nonEmpty, "evolveMetadata: no columns to add")
-    defaults.foreach { case (m, _) =>
-      require(!ReservedPostingCols(m),
-        s"metaCols name '$m' collides with a reserved posting column")
-      require(!m.startsWith("__"),
-        s"metaCols name '$m' uses the internal working-column prefix __")
-    }
     val pDir = postingsDir(indexDir)
-    // self-heal a crashed prior swap BEFORE the existence check — the
-    // postings may be parked whole under __compact_old (same preamble
-    // as compact; VectorIndex.evolveMetadata mirrors it)
-    graft.sources.Compaction.recoverCrashedSwap(spark, pDir)
-    val p = new org.apache.hadoop.fs.Path(pDir)
-    require(p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p),
-      s"evolveMetadata: no index postings at $pDir")
-    val stored = spark.read.option("mergeSchema", "true").parquet(pDir)
-      .columns.filterNot(ReservedPostingCols).toSet
-    defaults.foreach { case (m, _) =>
-      require(!stored.contains(m),
-        s"evolveMetadata: column '$m' is already stored metadata " +
-          s"($stored) — evolution only ADDS columns")
-    }
-    // mergeSchema on the rewrite read too: the check above saw the
-    // UNION schema, so the rewrite must carry it — a one-footer read
-    // would permanently drop the unsampled files' metadata columns
+    IndexStore.evolvablePostings(spark, pDir, ReservedPostingCols, defaults)
+    // mergeSchema on the rewrite read too: the check saw the UNION
+    // schema, so the rewrite must carry it
     graft.sources.Compaction.rewriteParquetDir(spark, pDir,
         mergeSchema = true) { df =>
       defaults.foldLeft(df) { case (acc, (m, v)) => acc.withColumn(m, lit(v)) }

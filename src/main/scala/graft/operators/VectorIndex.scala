@@ -248,7 +248,7 @@ object VectorIndex {
 
   /** The centroid model as a DataFrame — shared by [[build]] and any
     * caller that wants to hand the same model to
-    * [[Similarity.ivfCosineTopK]] (the probe in `graft.Probe` does). */
+    * [[Similarity.ivfCosineTopK]]. */
   private[graft] def centroidsDf(spark: SparkSession,
       cents: Array[Array[Double]]): DataFrame = {
     import scala.jdk.CollectionConverters._
@@ -290,31 +290,10 @@ object VectorIndex {
     // into every posting row, so a filtered probe's predicate reaches
     // the parquet scan as PushedFilters instead of semi-joining a
     // caller-materialized id set. Names are stored verbatim; the
-    // internal posting columns are reserved.
-    metaCols.foreach { m =>
-      require(!ReservedPostingCols(m),
-        s"metaCols name '$m' collides with a reserved posting column")
-      require(!m.startsWith("__"),
-        s"metaCols name '$m' uses the internal working-column prefix __" +
-          " (the assignment pipeline would shadow or drop it)")
-      require(batch.columns.contains(m), s"metaCols column '$m' not in batch")
-    }
-    // the metadata SET is an index-level invariant, not a per-batch
-    // choice: a batch appended without (or with different) metaCols
-    // writes posting rows a filtered probe silently excludes forever
-    // (the predicate reads NULL for the missing column) — refuse loudly
-    val pExist = new org.apache.hadoop.fs.Path(postingsDir(indexDir))
-    if (pExist.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(pExist)) {
-      // mergeSchema: see TokenIndex.append — a one-footer read makes
-      // this check depend on which file Spark samples on a
-      // mixed-schema legacy index
-      val stored = spark.read.option("mergeSchema", "true")
-        .parquet(postingsDir(indexDir)).columns
-        .filterNot(ReservedPostingCols).toSet
-      require(stored == metaCols.toSet,
-        s"metaCols ${metaCols.toSet} must match the index's stored metadata " +
-          s"columns $stored — every append carries the same metadata set")
-    }
+    // internal posting columns are reserved, and the metadata SET is an
+    // index-level invariant.
+    IndexStore.requireMetaSet(batch, metaCols, postingsDir(indexDir),
+      ReservedPostingCols)
     val centArr = centroidArray(spark, indexDir)
     val width = bucketWidth(modelK(spark, indexDir))
     // postings bin-pack into ≤ MaxBuckets directories (see the class
@@ -407,64 +386,26 @@ object VectorIndex {
 
   private[graft] def runStatsDir(indexDir: String) = s"$indexDir/run_stats"
 
-  private[graft] def tombstonesDir(indexDir: String) = s"$indexDir/tombstones"
-
-  /** Takedown contract (VERDICT r15 item 5): mark `idCol` values
-    * deleted. Deletes are TOMBSTONES, not rewrites — one appended
-    * parquet of distinct (vec_id, asof_run) rows; every probe
-    * anti-joins out postings AT OR BELOW the recorded run horizon
-    * immediately, and the next [[compact]] physically drops those rows
-    * AND clears the tombstone set.
-    *
-    * HORIZON-AWARE since round 17 (VERDICT r16 item 8): `asof_run`
-    * defaults to the index's current max run id (one column-pruned
-    * postings aggregate — deletes are rare, probes pay nothing new),
-    * so a delete covers exactly the ingests that preceded it. That
-    * makes delete-then-[[append]]-under-a-higher-run the documented
-    * UPSERT path: the stale posting is masked from the very next probe
-    * while the re-embedded one is live, compact drops only the stale
-    * rows, and the doc never has a window where both embeddings (or
-    * neither) answer. Pass `asofRun` explicitly when the caller owns
-    * run bookkeeping (e.g. a delete stream that must stay idempotent
-    * under redelivery even if an upsert append lands in between — a
-    * REDELIVERED derive-at-delete-time delete would re-derive a higher
-    * horizon and swallow the new posting).
-    *
-    * A delete against an index with no postings records horizon -1
-    * (nothing to cover — the takedown of never-ingested data is a
-    * no-op, matching the ledger-never-outlives-its-data rule).
-    * Idempotent under redelivery: a retried delete appends identical
-    * rows, and both the probe anti-join and the compaction drop are
-    * set operations. Scale contract: the LIVE tombstone set is the
-    * inter-compaction takedown volume — bounded small in practice
-    * (probes broadcast it); a takedown of most of the corpus should be
-    * a re-[[build]] of the survivors instead.
+  /** Takedown contract: mark `idCol` values deleted in the tombstone
+    * ledger [[IndexStore]] keeps for both indexes. Every probe masks
+    * postings AT OR BELOW the recorded horizon (`asofRun`, by default
+    * the index's current max run id) immediately, and the next
+    * [[compact]] physically drops those rows and retires the ledger.
+    * Delete-then-[[append]]-under-a-higher-run is the UPSERT path: the
+    * stale posting is masked from the very next probe while the
+    * re-embedded one is live. A takedown of most of the corpus should
+    * be a re-[[build]] of the survivors instead.
     */
   def delete(ids: DataFrame, idCol: String, indexDir: String,
-      asofRun: Long = DeriveAsof): Unit = {
-    val spark = ids.sparkSession
-    graft.sources.Lease.withLease(spark, indexDir) {
-    val asof =
-      if (asofRun != DeriveAsof) asofRun
-      else {
-        val p = new org.apache.hadoop.fs.Path(postingsDir(indexDir))
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(p)) -1L
-        else {
-          val h = spark.read.parquet(postingsDir(indexDir))
-            .agg(max(col("run_id"))).collect().head
-          if (h.isNullAt(0)) -1L else h.getLong(0)
-        }
-      }
-    ids.select(col(idCol).as("vec_id")).distinct()
-      .withColumn("asof_run", lit(asof))
-      .coalesce(1).write.mode("append").parquet(tombstonesDir(indexDir))
+      asofRun: Long = DeriveAsof): Unit =
+    graft.sources.Lease.withLease(ids.sparkSession, indexDir) {
+      IndexStore.appendTombstones(ids, idCol, "vec_id", indexDir,
+        postingsDir(indexDir), asofRun)
     }
-  }
 
   /** Sentinel for [[delete]]'s `asofRun`: derive the horizon from the
-    * index's current postings. */
-  val DeriveAsof: Long = Long.MinValue
+    * index's current postings ([[IndexStore.DeriveAsof]]). */
+  val DeriveAsof: Long = IndexStore.DeriveAsof
 
   /** The upsert contract as ONE call: re-embed `batch`'s ids under
     * `runId`, masking every posting they had in runs BELOW it. The
@@ -483,43 +424,6 @@ object VectorIndex {
       delete(batch.select(col(idCol)), idCol, indexDir, asofRun = runId - 1)
       append(batch, idCol, embCol, indexDir, runId, metaCols)
     }
-
-  /** The live (vec_id, asof_run) tombstone rows, or None when no delete
-    * was ever issued (the common case — probes then skip the anti-join
-    * entirely, so the plan pins of the no-takedown path are untouched).
-    * NOT deduplicated: every consumer is a left-anti join or a physical
-    * drop, both multiplicity-blind, and a distinct here would buy an
-    * exchange for nothing (measured as the dominant ledger cost in the
-    * sf1 takedown probe). A vec_id deleted twice with different
-    * horizons carries both rows; the anti-joins' effective horizon is
-    * their max, which is the union-of-coverage semantics wanted. */
-  private[graft] def tombstones(spark: SparkSession,
-      indexDir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(tombstonesDir(indexDir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) {
-      val raw = spark.read.option("mergeSchema", "true")
-        .parquet(tombstonesDir(indexDir))
-      // legacy (pre-horizon) ledgers carry no asof_run; default those
-      // rows to Long.MaxValue — "mask every run", the exact semantics
-      // they were written under — so an old index with pending
-      // takedowns keeps probing (and compacting, the healing path)
-      // instead of dying on a missing column. A MIXED ledger (legacy
-      // files beside post-upgrade deletes) resolves the column with
-      // the legacy rows reading NULL — which `run_id <= asof_run`
-      // would silently treat as "mask nothing" — so the fallback is a
-      // per-ROW coalesce, never a schema-level branch; mergeSchema
-      // pins the resolution (without it, which file's schema wins is
-      // arbitrary and a legacy pick would coerce NEW horizons to the
-      // mask-all default, swallowing upserts).
-      val withHorizon =
-        if (raw.columns.contains("asof_run"))
-          raw.withColumn("asof_run",
-            coalesce(col("asof_run"), lit(Long.MaxValue)))
-        else raw.withColumn("asof_run", lit(Long.MaxValue))
-      Some(withHorizon.select(col("vec_id"), col("asof_run")))
-    } else None
-  }
 
   /** The frozen-centroid drift signal (VERDICT r14 item 3): per run,
     * the mean assignment cosine vs the baseline run — the LOWEST run
@@ -775,20 +679,12 @@ object VectorIndex {
         col("centroid_id").isin(cells: _*))
       .select(col("centroid_id"), col("vec_id").as("neighbor_id"),
         col("run_id").as("__run"), ce.as("__ce"))
-    // takedowns anti-join out here — broadcast (the live tombstone set
-    // is inter-compaction-bounded; see delete()), so the postings scan
-    // still never shuffles and the no-takedown plan is bit-unchanged.
-    // The mask is HORIZON-AWARE: only postings at or below the delete's
-    // asof_run drop, so an upsert's re-appended (higher-run) posting
-    // answers immediately (still a broadcast HASH join — equi on the
-    // id, the run bound rides as an extra join predicate)
-    val postings0 = tombstones(spark, indexDir).fold(postingsLive)(t =>
-      postingsLive.join(
-        broadcast(t.select(col("vec_id").as("__t_id"),
-          col("asof_run").as("__t_asof"))),
-        postingsLive("neighbor_id") === col("__t_id") &&
-          postingsLive("__run") <= col("__t_asof"),
-        "left_anti")).drop("__run")
+    // takedowns mask out here (IndexStore.dropMasked: a horizon-aware
+    // broadcast anti-join), so the postings scan still never shuffles
+    // and the no-takedown plan is bit-unchanged
+    val postings0 = IndexStore.dropMasked(postingsLive,
+        IndexStore.tombstones(spark, indexDir, "vec_id"), "neighbor_id", "__run")
+      .drop("__run")
     // the metadata predicate lands HERE — on the cell-pruned candidate
     // postings, before scoring and before the top-k, so the k list is
     // selected among allowed vectors only (queryTopKFiltered); the
@@ -1145,18 +1041,11 @@ object VectorIndex {
     val h = input.agg(max(col("run_id"))).collect().head
     val horizon = if (h.isNullAt(0)) 0L else h.getLong(0)
     // tombstoned rows drop PHYSICALLY here (probes only mask them);
-    // the ledger itself clears after the swap lands — a crash in
-    // between leaves stale tombstones over already-dropped rows, which
-    // the probe anti-join reads as a harmless no-op. The drop is
-    // horizon-aware like the probe mask (delete()): it runs BEFORE the
-    // distinct (which erases run provenance), so an upsert's
+    // the ledger itself retires after the swap lands. The drop runs
+    // BEFORE the distinct (which erases run provenance), so an upsert's
     // re-appended higher-run posting survives while the stale one goes
-    val live = tombstones(spark, indexDir).fold(input)(t =>
-      input.join(broadcast(t.select(col("vec_id").as("__t_id"),
-          col("asof_run").as("__t_asof"))),
-        input("vec_id") === col("__t_id") &&
-          input("run_id") <= col("__t_asof"),
-        "left_anti"))
+    val live = IndexStore.dropMasked(input,
+      IndexStore.tombstones(spark, indexDir, "vec_id"), "vec_id")
     // metadata columns (append's metaCols — anything non-reserved)
     // survive the fold verbatim: they are part of the posting row
     val metaCols = input.columns.filterNot(ReservedPostingCols).toSeq
@@ -1188,10 +1077,8 @@ object VectorIndex {
         (before, after)
       } finally folded.unpersist(blocking = false)
     graft.sources.Compaction.swapTmpIntoPlace(spark, dir)
-    // the takedowns are now physical — retire the ledger (re-add
-    // semantics from here; see delete())
-    val tp = new org.apache.hadoop.fs.Path(tombstonesDir(indexDir))
-    if (fs.exists(tp)) fs.delete(tp, true)
+    // the takedowns are now physical — retire the ledger
+    IndexStore.retireTombstones(spark, indexDir)
     result
   }
 
@@ -1209,29 +1096,8 @@ object VectorIndex {
   def evolveMetadata(spark: SparkSession, indexDir: String,
       defaults: Seq[(String, Any)]): Unit =
       graft.sources.Lease.withLease(spark, indexDir) {
-    require(defaults.nonEmpty, "evolveMetadata: no columns to add")
-    defaults.foreach { case (m, _) =>
-      require(!ReservedPostingCols(m),
-        s"metaCols name '$m' collides with a reserved posting column")
-      require(!m.startsWith("__"),
-        s"metaCols name '$m' uses the internal working-column prefix __")
-    }
     val dir = postingsDir(indexDir)
-    graft.sources.Compaction.recoverCrashedSwap(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(dir)
-    require(p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p),
-      s"evolveMetadata: no index postings at $dir")
-    // mergeSchema: the check AND the rewrite must both see the UNION
-    // schema on a mixed-schema legacy index — a one-footer read would
-    // let the check pass and the swap permanently drop the unsampled
-    // files' metadata columns
-    val input = spark.read.option("mergeSchema", "true").parquet(dir)
-    val stored = input.columns.filterNot(ReservedPostingCols).toSet
-    defaults.foreach { case (m, _) =>
-      require(!stored.contains(m),
-        s"evolveMetadata: column '$m' is already stored metadata " +
-          s"($stored) — evolution only ADDS columns")
-    }
+    val input = IndexStore.evolvablePostings(spark, dir, ReservedPostingCols, defaults)
     defaults.foldLeft(input) { case (acc, (m, v)) => acc.withColumn(m, lit(v)) }
       .repartition(col("cell_bucket"))
       .sortWithinPartitions(col("cell_bucket"), col("centroid_id"))

@@ -18,16 +18,8 @@ package graft.sources
   * teardown); the FIRST failure is rethrown with the rest suppressed.
   */
 object Par {
-  /** A/B kill-switch (read per call): `-Dgraft.par.sequential=true`
-    * degrades every overlap to the original sequential order — the
-    * interleaved-harness control side (PlanAudit `lifecycle`), and an
-    * escape hatch if a deployment's scheduler misbehaves under
-    * concurrent jobs. */
-  private def sequential: Boolean =
-    "true".equalsIgnoreCase(System.getProperty("graft.par.sequential", "false"))
-
   def run(bodies: (() => Unit)*): Unit = {
-    if (bodies.sizeIs <= 1 || sequential) { bodies.foreach(_()); return }
+    if (bodies.sizeIs <= 1) { bodies.foreach(_()); return }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(bodies.size)
     try {
       val futures = bodies.map { b =>

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Similarity, TokenIndex}
+import graft.operators.{IndexStore, Similarity, TokenIndex}
 
 class TokenIndexSpec extends SparkSpec {
   import spark.implicits._
@@ -343,6 +343,11 @@ class TokenIndexSpec extends SparkSpec {
     TokenIndex.delete(Seq(3L).toDF("id"), "id", idxDir)
     assert(pairs().map(_._2) == Seq(1L),
       "both ledger generations must mask beside each other")
+    // the shared ledger read is one explicit-schema read: no schema-
+    // inference job (the counter does see the mergeSchema read's job)
+    assert(jobsStartedBy(spark.read.option("mergeSchema", "true").parquet(tombDir)) == 1)
+    assert(jobsStartedBy(IndexStore.tombstones(spark, idxDir, "corpus_id").get) == 0,
+      "reading the mixed ledger must fire no Spark job")
     val scored = TokenIndex.bm25Indexed(spark, idxDir, Seq("beta"))
       .select(col("corpus_id").cast("long")).as[Long].collect().sorted.toSeq
     assert(scored == Seq(1L))

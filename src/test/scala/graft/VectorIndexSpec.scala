@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Similarity, VectorIndex}
+import graft.operators.{IndexStore, Similarity, VectorIndex}
 
 class VectorIndexSpec extends SparkSpec {
   import spark.implicits._
@@ -810,6 +810,8 @@ class VectorIndexSpec extends SparkSpec {
     assert(mixed.forall(r => !victims.contains(r._2)),
       s"legacy victims must STAY masked beside a post-upgrade delete: $mixed")
     assert(mixed.forall(r => !extra.contains(r._2)))
+    assert(jobsStartedBy(IndexStore.tombstones(spark, idxDir, "vec_id").get) == 0,
+      "reading the mixed ledger through the shared store must fire no Spark job")
     val (b, a) = VectorIndex.compact(spark, idxDir)
     assert(b - a == victims.size.toLong + extra.size.toLong,
       s"compact must drop both ledger generations' rows: $b -> $a")
