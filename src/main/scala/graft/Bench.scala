@@ -5,9 +5,8 @@ object Bench {
     val procStart = System.nanoTime()
     def elapsed: Double = (System.nanoTime() - procStart) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = Sessions.local(cpus, cpus)
+    val cpus = Sessions.localCpus
+    val spark = Sessions.local()
     // dev loop: SPARK_GRAFT_ONLY=q44,q28 benches just the named queries
     // (substring match); unset = the full suite the driver records
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)

@@ -30,7 +30,7 @@ object PlanAudit {
     val mode = args.headOption.getOrElse("plans")
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val names = if (args.length > 2) args(2).split(",").toSeq else Seq.empty
-    val spark = Sessions.local("8", "8")
+    val spark = Sessions.local()
     mode match {
       case "plans" =>
         // optional third arg: comma-separated substrings overriding the

@@ -2484,8 +2484,8 @@ object Queries {
       // snapshot pins the (id, text) survivors once; snapshot blocks
       // release via ContextCleaner when the result is GC'd (the
       // jaccardSimilarityJoin pattern). Fixture-scale evidence query —
-      // at corpus scale the pipeline itself (curate/curateObserved)
-      // owns the measured lazy-vs-materialize knob.
+      // the pipeline itself (curate/curateObserved) keeps the measured
+      // lazy near-dup plan.
       val gated = annotated.filter(gate)
         .select(col("doc_id"), col("text")).localCheckpoint()
       // snapshotGate here too (r20): without it the exact-dedup

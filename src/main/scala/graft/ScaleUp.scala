@@ -146,8 +146,7 @@ object ScaleUp {
 
   def main(args: Array[String]): Unit = {
     val Array(srcDir, outDir, factorStr) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.local(cpus, cpus)
+    val spark = Sessions.local()
     generate(spark, srcDir, outDir, factorStr.toInt)
     spark.stop()
   }

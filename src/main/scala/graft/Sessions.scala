@@ -4,8 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** Single SparkSession factory for the engine.
   *
-  * Tuned for the test harness (local[32], one JVM) but every setting is
-  * chosen to be correct on a real multi-executor cluster too:
+  * Tuned for one local JVM (`local[N]`, N from [[Sessions.localCpus]])
+  * but every setting is chosen to be correct on a real multi-executor
+  * cluster too:
   *   - AQE on: runtime coalescing of shuffle partitions + skew-join
   *     handling, which is what keeps the same code viable at 100 TB.
   *   - shuffle.partitions matches local cores here; on a cluster this is
@@ -14,11 +15,16 @@ import org.apache.spark.sql.SparkSession
   *     DuckDB oracle (naive timestamps).
   */
 object Sessions {
+  /** The one core-count rule of every main: `$SPARK_GRAFT_CPUS` when set,
+    * else the JVM's `availableProcessors`. */
+  def localCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
+
   /** `maxTaskFailures` > 1 enables task RETRY in local mode
     * (`local[N, F]`) — the default local master fails the job on first
     * task death, hiding the retry-idempotency semantics every sink must
     * honor on a real cluster. Production mains keep the default. */
-  def local(cores: String = "32", shufflePartitions: String = "32",
+  def local(cores: String = localCpus, shufflePartitions: String = localCpus,
       maxTaskFailures: Int = 1): SparkSession = {
     val master =
       if (maxTaskFailures > 1) s"local[$cores, $maxTaskFailures]" else s"local[$cores]"

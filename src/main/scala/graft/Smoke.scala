@@ -1,7 +1,7 @@
 package graft
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = Sessions.local("8", "8")
+    val spark = Sessions.local()
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     Seq("region","nation","customer","supplier","part","orders","lineitem","documents","embeddings").foreach { t =>
       val df = Tables.table(spark, dir, t)

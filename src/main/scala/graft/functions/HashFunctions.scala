@@ -11,19 +11,6 @@ import org.apache.spark.sql.functions._
   */
 object HashFunctions {
 
-  /** k-permutation MinHash signature of a string-array column (shingle
-    * set): element i is `min over s of xxhash64(i, xxhash64(s))`.
-    * Returns `array<bigint>` of length k; hashes of an empty set are
-    * Long.MaxValue so empty docs never spuriously collide with content.
-    *
-    * Each shingle STRING is hashed exactly once; the k permutations
-    * re-hash the resulting fixed-width long, which is ~10× cheaper than
-    * k string hashes and keeps the codegen tree small. (No affine
-    * `a*h+b` family here: Long multiply overflows throw under ANSI mode.)
-    */
-  def minHashSignature(shingles: Column, k: Int): Column =
-    minHashFromHashes(hashShingles(shingles), k)
-
   /** Hash every distinct shingle string to a long — materialize THIS in
     * its own projection (`.withColumn`) before calling
     * `minHashFromHashes`, so the string hashing appears once in the plan
@@ -123,14 +110,6 @@ object HashFunctions {
     hasher(
       lit(band) +: (0 until rowsPerBand).map(r =>
         element_at(signature, band * rowsPerBand + r + 1)))
-
-  /** SimHash of a token-array column, packed into a Long with `bits`
-    * significant bits (bit j = sign of the sum over tokens of ±1 driven by
-    * bit j of the token's xxhash64). Near-identical token multisets give
-    * signatures within small Hamming distance.
-    */
-  def simHash(toks: Column, bits: Int): Column =
-    simHashFromHashes(hashedTokens(toks), bits)
 
   /** SimHash over pre-hashed tokens (array<bigint>) — materialize the
     * hashed array first (one string hash per token, not per bit). Native

@@ -170,17 +170,6 @@ object TextFunctions {
       .otherwise(lit(0.0))
   }
 
-  /** Fraction of characters matching a regexp character class. */
-  def charClassRatio(text: Column, charClassRe: String): Column =
-    when(length(text) > 0,
-      (length(text) - length(regexp_replace(text, charClassRe, ""))).cast("double")
-        / length(text).cast("double"))
-      .otherwise(lit(0.0))
-
-  def punctRatio(text: Column): Column = charClassRatio(text, "[\\p{Punct}]")
-  def digitRatio(text: Column): Column = charClassRatio(text, "[0-9]")
-  def upperRatio(text: Column): Column = charClassRatio(text, "[A-Z]")
-
   /** PII redaction for training-data release: emails, then dotted-quad
     * IPs, then NNN-NNN-NNNN phone numbers → typed placeholders. Three
     * codegen'd regexp passes, no shuffle; the patterns stay within the

@@ -54,16 +54,6 @@ object VectorFunctions {
     */
   def cosineNative(a: Column, b: Column): Column = call_function("graft_cosine", a, b)
 
-  /** Squared Euclidean distance. */
-  def l2DistanceSq(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => {
-        val d = x.cast("double") - y.cast("double")
-        d * d
-      }),
-      lit(0.0),
-      (acc, x) => acc + x)
-
   /** L2-normalized copy of the vector (unit length); zero vector maps to
     * itself. Native one-pass codegen ([[graft.plans.L2Normalize]], built
     * directly as an Expression so it resolves in any session) — the HOF

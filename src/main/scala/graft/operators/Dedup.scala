@@ -56,32 +56,14 @@ object Dedup {
     * shingle sets of candidate pairs only (candidates ≪ all pairs).
     *
     * The shingle/signature projection feeds THREE consumers (banding +
-    * both verify sides), so the default LAZY plan re-derives it — and
-    * everything upstream of `df` — once per consumer. That is the right
-    * default: the whole pipeline stays ONE AQE-optimized job
+    * both verify sides), so the LAZY plan re-derives it — and
+    * everything upstream of `df` — once per consumer. That is
+    * deliberate: the whole pipeline stays ONE AQE-optimized job
     * (runtime broadcast of the tiny candidate sides, no pinned state,
     * Observation- and state-write-safe), and at fixture scale the
     * rescans are measurably cheaper than a checkpoint
     * (q44: 2.8 s lazy vs 4.4 s materialized at sf0.1 — localCheckpoint
     * materialization runs outside AQE's runtime re-planning).
-    *
-    * `materialize = true` is the CORPUS-SCALE form — when one upstream
-    * derivation costs hours, three is the bottleneck: the slim
-    * (id, hashes, sig) frame is persisted for ONE eager computation of
-    * the pair list (small by construction: verified candidates only),
-    * then released; the pair list returns as a `localCheckpoint`
-    * snapshot. Why localCheckpoint and NOT a persisted DataFrame:
-    * `persist` registers the plan — including any FILE RELATIONS under
-    * `df` — in the CacheManager, and a later `write` to one of those
-    * paths (e.g. `Incremental.appendState` in the incremental curation
-    * loop) triggers `refreshByPath`, which refreshes the SHARED file
-    * index in place and silently changes what every sibling frame built
-    * on the same read sees. A checkpoint snapshot has no CacheManager
-    * entry and no file lineage, so state-store writes cannot reach back
-    * into it (regression test: CorpusPipelineSpec's incremental no-op
-    * spec). An eager internal action also completes any enclosing
-    * `Observation`'s promise from a metrics-less checkpoint execution —
-    * keep observed pipelines on the lazy form.
     */
   def minHashNearDuplicates(
       df: DataFrame,
@@ -90,16 +72,14 @@ object Dedup {
       shingleSize: Int = 3,
       numHashes: Int = 32,
       bands: Int = 8,
-      threshold: Double = 0.7,
-      materialize: Boolean = false): DataFrame = {
+      threshold: Double = 0.7): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val rowsPerBand = numHashes / bands
 
-    val withSig0 = df
+    val withSig = df
       .select(col(idCol).as("__id"), TextFunctions.tokens(col(textCol)).as("__toks"))
       .select(col("__id"), HashFunctions.hashedWordShingles(col("__toks"), shingleSize).as("__hashes"))
       .withColumn("__sig", HashFunctions.minHashFromHashes(col("__hashes"), numHashes))
-    val withSig = if (materialize) withSig0.persist() else withSig0
 
     val banded = withSig.select(
       col("__id"),
@@ -119,7 +99,7 @@ object Dedup {
     // (~n²/2^64), and the arrays shuffled to the verify join are 8-byte
     // elements instead of shingle strings.
     val sh = withSig.select(col("__id"), col("__hashes"))
-    val pairs = candidates
+    candidates
       .join(sh.withColumnRenamed("__id", "id_a").withColumnRenamed("__hashes", "__sa"), "id_a")
       .join(sh.withColumnRenamed("__id", "id_b").withColumnRenamed("__hashes", "__sb"), "id_b")
       .withColumn("jaccard",
@@ -127,12 +107,6 @@ object Dedup {
           / size(array_union(col("__sa"), col("__sb"))).cast("double"))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
-    if (!materialize) pairs // fully lazy/stateless: the Observation-friendly form
-    else {
-      val snapshot = pairs.localCheckpoint() // eager: computed while withSig is cached
-      withSig.unpersist()
-      snapshot
-    }
   }
 
   /** The persistable MinHash state row for [[minHashNearDuplicatesVsState]]:
@@ -214,7 +188,7 @@ object Dedup {
     * cadence even though each row is only k×8 bytes. Rewrites
     * `stateDir` in place (checked two-rename swap + crash recovery via
     * [[graft.sources.Compaction.rewriteParquetDir]], sized to
-    * `targetBytes` files) keeping:
+    * [[graft.sources.Compaction.TargetFileBytes]] files) keeping:
     *
     *   - ONE row per `idCol`: the max-`versionCol` row when a version
     *     column is present (keep-latest — a re-signed document's stale
@@ -242,10 +216,8 @@ object Dedup {
       stateDir: String,
       idCol: String,
       versionCol: Option[String] = None,
-      retain: Option[Column] = None,
-      targetBytes: Long = 128L << 20): (Long, Long) =
-    compactSignatureStateKeys(spark, stateDir, Seq(idCol), versionCol,
-      retain, targetBytes)
+      retain: Option[Column] = None): (Long, Long) =
+    compactSignatureStateKeys(spark, stateDir, Seq(idCol), versionCol, retain)
 
   /** Composite-key form of [[compactSignatureState]] for SEQUENCE
     * signature states, where one state row is one (clip, frame/window)
@@ -259,10 +231,9 @@ object Dedup {
       stateDir: String,
       idCols: Seq[String],
       versionCol: Option[String] = None,
-      retain: Option[Column] = None,
-      targetBytes: Long = 128L << 20): (Long, Long) = {
+      retain: Option[Column] = None): (Long, Long) = {
     require(idCols.nonEmpty, "compactSignatureStateKeys: need at least one key column")
-    graft.sources.Compaction.rewriteParquetDir(spark, stateDir, targetBytes) { df =>
+    graft.sources.Compaction.rewriteParquetDir(spark, stateDir) { df =>
       val latest = versionCol match {
         case Some(v) =>
           // max_by keeps whole rows; ties on the version break by the
@@ -631,13 +602,12 @@ object Dedup {
       everyN: Int = 1,
       chunks: Int = 8,
       maxHamming: Int = 4,
-      minMatches: Int = 2,
-      dropDegenerate: Boolean = true): DataFrame = {
+      minMatches: Int = 2): DataFrame = {
     // the frame's composite key rides the blocked join as ONE orderable
     // struct column (hammingNearDuplicates needs min/least/< over
     // __id, all struct-total in Spark) — no synthetic id whose
     // recompute could drift between the rep join and the expansion
-    val sigs = videoSignatures(df, idCol, bytesCol, everyN, dropDegenerate).select(
+    val sigs = videoSignatures(df, idCol, bytesCol, everyN).select(
       struct(col(idCol).as("vid"), col("frame_idx").as("fidx")).as("__id"),
       col("sig").as("__sig"))
     hammingNearDuplicates(sigs, bits = 64, chunks = chunks, maxHamming = maxHamming)
@@ -692,8 +662,7 @@ object Dedup {
       chunks: Int = 8,
       maxHamming: Int = 4,
       minMatches: Int = 4,
-      hop: Int = 0,
-      dropDegenerate: Boolean = true): DataFrame = {
+      hop: Int = 0): DataFrame = {
     // the all-zero fingerprint is the degenerate fixed point of every
     // STATIC spectrum (silence, a held test tone, dropouts): no band
     // difference ever grows, so unrelated static clips collide on it
@@ -701,8 +670,7 @@ object Dedup {
     // audioSignatures drops them from matching (the audio sibling of
     // exact-dedup's empty-document rule; AudioDedupSpec pins two
     // distinct held tones to NOT match)
-    val sigs = audioSignatures(df, idCol, bytesCol, window, maxWindows, hop,
-      dropDegenerate).select(
+    val sigs = audioSignatures(df, idCol, bytesCol, window, maxWindows, hop).select(
       struct(col(idCol).as("aid"), col("window_idx").as("widx")).as("__id"),
       col("sig").as("__sig"))
     hammingNearDuplicates(sigs, bits = 64, chunks = chunks, maxHamming = maxHamming)
@@ -736,7 +704,7 @@ object Dedup {
   /** Per-keyframe canonical signatures — the state rows of the
     * INCREMENTAL video-dedup cadence (the sequence sibling of
     * [[imageSignatures]]): (idCol, frame_idx, sig) with undecodable
-    * frames dropped and, by default, the DEGENERATE all-zero canonical
+    * frames dropped and the DEGENERATE all-zero canonical
     * signature excluded. The zero class is WIDER than flat frames:
     * canonical = unsigned-min over the 8 dihedral signatures, so any
     * frame where SOME orientation's grid is monotone along every row
@@ -746,15 +714,13 @@ object Dedup {
     * unrelated footage (every fade-to-black collides at hamming 0), so
     * keeping them would pair arbitrary videos through shared
     * transitions. The cost is real too — a pair whose ONLY shared
-    * frames are fades is missed; pass `dropDegenerate = false` to
-    * restore them when the corpus is curated enough that fades are
-    * discriminating. ~12 bytes per kept keyframe is the only thing
-    * incremental video dedup ever reads back. Append each run's
+    * frames are fades is missed. ~12 bytes per kept keyframe is the
+    * only thing incremental video dedup ever reads back. Append each run's
     * survivors with a version column and maintain with
     * [[compactSignatureState]] (composite key: idCol + frame_idx).
     */
   def videoSignatures(df: DataFrame, idCol: String, bytesCol: String,
-      everyN: Int = 1, dropDegenerate: Boolean = true): DataFrame = {
+      everyN: Int = 1): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     requireIntegralId(df, idCol, "videoSignatures")
@@ -763,23 +729,20 @@ object Dedup {
         lit("video").as("media_type"), col(bytesCol).as("content"))
         .as[graft.multimodal.AvOps.AvRecord],
       everyN).toDF()
-    val sigs = frames.select(col("id").as(idCol), col("frame_idx"),
+    frames.select(col("id").as(idCol), col("frame_idx"),
         graft.multimodal.ImageOps.imageDHashCanonical(col("frame_bytes")).as("sig"))
-      .filter(col("sig").isNotNull)
-    if (dropDegenerate) sigs.filter(col("sig") =!= 0L) else sigs
+      .filter(col("sig").isNotNull && col("sig") =!= 0L)
   }
 
   /** Per-window audio fingerprints as state rows — (idCol, window_idx,
-    * sig); by default the degenerate all-zero fingerprint is excluded
+    * sig) with the degenerate all-zero fingerprint excluded
     * (see [[audioNearDuplicates]] — the class is every window whose
     * band-difference profile never GREW: static spectra, but also
-    * monotone decays like a single fading chord; `dropDegenerate =
-    * false` restores them, the [[videoSignatures]] trade). The audio
-    * sibling of [[videoSignatures]].
+    * monotone decays like a single fading chord; the [[videoSignatures]]
+    * trade). The audio sibling of [[videoSignatures]].
     */
   def audioSignatures(df: DataFrame, idCol: String, bytesCol: String,
-      window: Int = 1024, maxWindows: Int = 64, hop: Int = 0,
-      dropDegenerate: Boolean = true): DataFrame = {
+      window: Int = 1024, maxWindows: Int = 64, hop: Int = 0): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     requireIntegralId(df, idCol, "audioSignatures")
@@ -788,9 +751,8 @@ object Dedup {
         lit("audio").as("media_type"), col(bytesCol).as("content"))
         .as[graft.multimodal.AvOps.AvRecord],
       window, maxWindows, hop).toDF()
-    val sigs = fps.select(col("id").as(idCol), col("window_idx"),
-      col("fp").as("sig"))
-    if (dropDegenerate) sigs.filter(col("sig") =!= 0L) else sigs
+    fps.select(col("id").as(idCol), col("window_idx"), col("fp").as("sig"))
+      .filter(col("sig") =!= 0L)
   }
 
   /** The shared vs-state core of [[videoNearDuplicatesVsState]] /
@@ -874,9 +836,8 @@ object Dedup {
       everyN: Int = 1,
       chunks: Int = 8,
       maxHamming: Int = 4,
-      minMatches: Int = 2,
-      dropDegenerate: Boolean = true): DataFrame = {
-    val bs = videoSignatures(batch, idCol, bytesCol, everyN, dropDegenerate)
+      minMatches: Int = 2): DataFrame = {
+    val bs = videoSignatures(batch, idCol, bytesCol, everyN)
       .select(col(idCol).as("__bid"), col("frame_idx").as("__bidx"),
         col("sig").as("__bsig"))
       .localCheckpoint(true)
@@ -902,10 +863,8 @@ object Dedup {
       chunks: Int = 8,
       maxHamming: Int = 4,
       minMatches: Int = 4,
-      hop: Int = 0,
-      dropDegenerate: Boolean = true): DataFrame = {
-    val bs = audioSignatures(batch, idCol, bytesCol, window, maxWindows, hop,
-      dropDegenerate)
+      hop: Int = 0): DataFrame = {
+    val bs = audioSignatures(batch, idCol, bytesCol, window, maxWindows, hop)
       .select(col(idCol).as("__bid"), col("window_idx").as("__bidx"),
         col("sig").as("__bsig"))
       .localCheckpoint(true)
@@ -1006,46 +965,10 @@ object Dedup {
       .select(col("l.__id").as("id_a"), col("r.__id").as("id_b"), col("cosine"))
   }
 
-  /** Embedding near-duplicates with NO natural blocking key: block by
-    * random-hyperplane LSH signatures over `tables` independent tables.
-    * High-cosine pairs collide in at least one table with high
-    * probability; every candidate is verified with exact cosine, so
-    * precision is exact and only recall is approximate (tunable via
-    * tables/bits). Same equi-join scale shape as the keyed variant.
-    */
-  def embeddingNearDuplicatesLsh(
-      df: DataFrame,
-      idCol: String,
-      embCol: String,
-      dim: Int,
-      threshold: Double,
-      tables: Int = 6,
-      bitsPerTable: Int = 12,
-      seed: Long = 42L): DataFrame = {
-    val slim = df.select(col(idCol).as("__id"), col(embCol).as("__e"))
-    val bucketed = slim.select(
-      col("__id"), col("__e"),
-      explode(array((0 until tables).map(t =>
-        struct(lit(t).as("t"),
-          VectorFunctions.hyperplaneSignature(col("__e"), dim, bitsPerTable, seed + 7000L * t)
-            .as("sig"))): _*))
-        .as("ts"))
-      .select(col("__id"), col("__e"), col("ts.t"), col("ts.sig"))
-    bucketed.as("l")
-      .join(bucketed.as("r"), col("l.t") === col("r.t") && col("l.sig") === col("r.sig")
-        && col("l.__id") < col("r.__id"))
-      .select(col("l.__id").as("id_a"), col("r.__id").as("id_b"), col("l.__e").as("__ea"), col("r.__e").as("__eb"))
-      .dropDuplicates("id_a", "id_b")
-      .withColumn("cosine", VectorFunctions.cosineNative(col("__ea"), col("__eb")))
-      .filter(col("cosine") >= threshold)
-      .select(col("id_a"), col("id_b"), col("cosine"))
-  }
-
   /** Semantic deduplication (the SemDeDup shape: cluster embeddings,
     * then near-dup within clusters only): k-means learns a blocking key
-    * from the data itself — for corpora with NO natural blocking column
-    * and where hyperplane-LSH recall is not enough structure — then
-    * near-dup pairs are found by exact cosine WITHIN each learned
+    * from the data itself — for corpora with NO natural blocking column —
+    * then near-dup pairs are found by exact cosine WITHIN each learned
     * cluster and one representative per connected near-dup group
     * survives (`scoreCol` = keep the best copy; None = keep min-id).
     *
@@ -1133,48 +1056,6 @@ object Dedup {
     grams(corpus, textCol, col(idCol))
       .select(col(idCol), explode(col("__sh")).as("__h"))
       .join(benchGrams, "__h")
-      .groupBy(col(idCol))
-      .agg(count_distinct(col("__h")).as("n_hits"))
-  }
-
-  /** [[flagContaminated]]'s sketch-side scale path: when the benchmark
-    * gram set outgrows what a broadcast hash join should carry (very
-    * large eval suites, or decontaminating against another CORPUS rather
-    * than a benchmark), collapse it to a Bloom filter — `fpp` at 1e-4
-    * costs ~2.4 bytes/gram vs 8+ for the exact set, and membership
-    * pushes into the corpus scan as a `might_contain` filter instead of a
-    * join. Bloom filters have NO false negatives, so every genuinely
-    * contaminated doc is still flagged; false positives (rate `fpp`)
-    * over-flag — the conservative direction for decontamination. Counts
-    * are therefore upper bounds; callers needing exact counts re-check
-    * flagged docs (a tiny fraction) with the exact path.
-    */
-  def flagContaminatedBloom(
-      corpus: DataFrame,
-      idCol: String,
-      textCol: String,
-      benchmark: DataFrame,
-      benchTextCol: String,
-      n: Int = 5,
-      fpp: Double = 1e-4): DataFrame = {
-    val benchGrams = benchmark
-      .select(HashFunctions.hashedWordShingles(
-        TextFunctions.tokens(col(benchTextCol)), n).as("__sh"))
-      .select(explode(col("__sh")).as("__h")).distinct()
-      .persist() // two actions follow (count + bloom build): one job each,
-                 // not two full tokenize-shingle-distinct pipelines
-    val bloom =
-      try {
-        val expected = math.max(benchGrams.count(), 1L)
-        benchGrams.stat.bloomFilter("__h", expected, fpp)
-      } finally benchGrams.unpersist(blocking = false)
-    val bloomBc = corpus.sparkSession.sparkContext.broadcast(bloom)
-    val mightContain = udf((h: Long) => bloomBc.value.mightContainLong(h))
-    corpus
-      .select(col(idCol), HashFunctions.hashedWordShingles(
-        TextFunctions.tokens(col(textCol)), n).as("__sh"))
-      .select(col(idCol), explode(col("__sh")).as("__h"))
-      .filter(mightContain(col("__h")))
       .groupBy(col(idCol))
       .agg(count_distinct(col("__h")).as("n_hits"))
   }

@@ -5,17 +5,11 @@ import org.apache.spark.sql.functions._
 
 /** Incremental (skip-already-processed) processing — the reference
   * pipeline's core invariant: re-running on unchanged input produces zero
-  * new rows (`/root/reference/test.py:103-107,142-146,203-204`).
+  * new rows (reference `test.py:103-107,142-146,203-204`).
   *
   * The state table holds the natural keys of everything processed so far;
-  * new work = `input ANTI JOIN state` on the key columns.
-  *
-  * Scale posture: the anti-join shuffles both sides on the key. When state
-  * is huge (10^10 keys) but the delta is small, the optional Bloom
-  * pre-filter drops the overwhelmingly-already-seen rows with a broadcast
-  * bit array BEFORE the shuffle, so the exact anti-join only transfers
-  * probable-new rows. False positives of the filter are resolved by the
-  * exact join; false negatives are impossible, preserving exactness.
+  * new work = `input ANTI JOIN state` on the key columns — one exact
+  * anti-join that shuffles both sides on the key.
   */
 object Incremental {
 
@@ -30,26 +24,6 @@ object Incremental {
     val st = state.select(keys.map(col): _*).distinct()
     val cond = keys.map(k => input(k) <=> st(k)).reduce(_ && _)
     input.join(st, cond, "left_anti")
-  }
-
-  /** Same, with a Bloom-filter pre-pass on the concatenated key. */
-  def newRowsBloom(
-      input: DataFrame,
-      state: DataFrame,
-      keys: Seq[String],
-      expectedStateKeys: Long,
-      fpp: Double = 0.01): DataFrame = {
-    val keyExpr = concat_ws("", keys.map(col): _*)
-    val bloom = state.select(keyExpr.as("__k")).stat.bloomFilter("__k", expectedStateKeys, fpp)
-    val bc = input.sparkSession.sparkContext.broadcast(bloom)
-    val mightBeSeen = udf((k: String) => bc.value.mightContainString(k))
-    val probablyNew = input.filter(!mightBeSeen(keyExpr))
-    // exact anti-join only on the survivors (bloom false-positive cleanup
-    // happens implicitly: anything the bloom passes as "seen" that is
-    // actually new is recovered by running the remainder through the
-    // exact join)
-    val maybeSeen = input.filter(mightBeSeen(keyExpr))
-    probablyNew.unionByName(newRows(maybeSeen, state, keys))
   }
 
   /** Append-merge state update (reference `test.py:197-201`): write the

@@ -17,24 +17,17 @@ object Profiling {
     * `(col_name, n_rows, n_nulls, n_distinct, min_val, max_val)` sorted
     * by column name.
     *
-    * `exact = true` uses `count_distinct`, which Catalyst plans as one
-    * Expand-based shuffle carrying a row copy per profiled column — fine
-    * up to mid-size tables and what the q83 oracle replays. At 100 TB
-    * profile with `exact = false`: HyperLogLog `approx_count_distinct`
-    * keeps the whole profile a single map-side-partial pass with no
-    * Expand, the same sketch-for-scale trade the q46/q51 pair documents.
-    * Everything else (nulls, min/max) is exact in both modes.
+    * Distinct counts use `count_distinct`, which Catalyst plans as one
+    * Expand-based shuffle carrying a row copy per profiled column — what
+    * the q83 oracle replays.
     */
-  def profile(df: DataFrame, cols: Seq[String], exact: Boolean = true): DataFrame = {
+  def profile(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "profile needs at least one column")
-    val nd: String => org.apache.spark.sql.Column =
-      if (exact) c => count_distinct(col(c))
-      else c => approx_count_distinct(col(c))
     val aggs = count(lit(1)).as("__n") +: cols.flatMap(c => Seq(
       // coalesce: sum over ZERO rows is NULL, and an empty table is the
       // ingest failure a profile gate most needs to report as 0, not null
       coalesce(sum(when(col(c).isNull, 1L).otherwise(0L)), lit(0L)).as(s"__nulls_$c"),
-      nd(c).as(s"__nd_$c"),
+      count_distinct(col(c)).as(s"__nd_$c"),
       min(col(c)).cast("string").as(s"__min_$c"),
       max(col(c)).cast("string").as(s"__max_$c")))
     df.agg(aggs.head, aggs.tail: _*)

@@ -190,7 +190,7 @@ object Sketches {
     * state compactions.
     */
   def compactKmvState(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String, k: Int, targetBytes: Long = 128L << 20): (Long, Long) = {
+      stateDir: String, k: Int): (Long, Long) = {
     // recover a crashed swap FIRST: after a mid-swap crash the live dir
     // is empty (data parked in __compact_old), and deciding the sidecar
     // from that empty listing would skip the bound update while the
@@ -209,8 +209,7 @@ object Sketches {
     // state with no bound
     if (graft.sources.Compaction.dataFiles(spark, stateDir).nonEmpty)
       writeKmvCompactK(spark, stateDir, effK)
-    graft.sources.Compaction.rewriteParquetDir(spark, stateDir,
-        targetBytes) { df =>
+    graft.sources.Compaction.rewriteParquetDir(spark, stateDir) { df =>
       val horizon = df.agg(max(col("run_id"))).collect().head
       val h = if (horizon.isNullAt(0)) 0L else horizon.getLong(0)
       df.select(col("h")).distinct().orderBy(col("h")).limit(k)
@@ -289,9 +288,8 @@ object Sketches {
     * a stream is mid-append.
     */
   def compactHllState(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String, keyCols: Seq[String],
-      targetBytes: Long = 128L << 20): (Long, Long) =
-    graft.sources.Compaction.rewriteParquetDir(spark, stateDir, targetBytes)(
+      stateDir: String, keyCols: Seq[String]): (Long, Long) =
+    graft.sources.Compaction.rewriteParquetDir(spark, stateDir)(
       df => hllMergeStates(keyCols, df))
 
   // --------------------------------------------------- heavy hitters
@@ -449,8 +447,8 @@ object Sketches {
     * longer dedupe by `run_id` and would double-count.
     */
   def compactMgState(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String, targetBytes: Long = 128L << 20): (Long, Long) =
-    graft.sources.Compaction.rewriteParquetDir(spark, stateDir, targetBytes)(
+      stateDir: String): (Long, Long) =
+    graft.sources.Compaction.rewriteParquetDir(spark, stateDir)(
       df => mgStateSummary(df).withColumn("run_id", lit(-1L)))
 
   // ------------------------------------- incremental quantile state
@@ -533,9 +531,8 @@ object Sketches {
     * durable single-writer contract as [[compactMgState]].
     */
   def compactHistState(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String, keyCols: Seq[String],
-      targetBytes: Long = 128L << 20): (Long, Long) =
-    graft.sources.Compaction.rewriteParquetDir(spark, stateDir, targetBytes)(
+      stateDir: String, keyCols: Seq[String]): (Long, Long) =
+    graft.sources.Compaction.rewriteParquetDir(spark, stateDir)(
       df => histStateMerged(df, keyCols).withColumn("run_id", lit(-1L)))
 
   // ------------------------------------- approx FLOAT quantiles (KLL state)
@@ -625,8 +622,7 @@ object Sketches {
     * contract). Same quiesced single-writer rules.
     */
   def compactKllState(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String, keyCols: Seq[String], k: Int = 200,
-      targetBytes: Long = 128L << 20): (Long, Long) =
-    graft.sources.Compaction.rewriteParquetDir(spark, stateDir, targetBytes)(
+      stateDir: String, keyCols: Seq[String], k: Int = 200): (Long, Long) =
+    graft.sources.Compaction.rewriteParquetDir(spark, stateDir)(
       df => kllStateMerged(df, keyCols, k).withColumn("run_id", lit(-1L)))
 }

@@ -436,8 +436,8 @@ object TokenIndex {
     * postings' true count and stats to the folded corpus). Returns
     * ((postingsBefore, after), (dfBefore, after), (arraysBefore,
     * after)). */
-  def compact(spark: SparkSession, indexDir: String,
-      targetBytes: Long = 128L << 20): ((Long, Long), (Long, Long), (Long, Long)) =
+  def compact(spark: SparkSession,
+      indexDir: String): ((Long, Long), (Long, Long), (Long, Long)) =
       graft.sources.Lease.withLease(spark, indexDir) {
     def horizon(df: DataFrame): Long = {
       val h = df.agg(max(col("run_id"))).collect().head
@@ -462,7 +462,7 @@ object TokenIndex {
     var a: (Long, Long) = null
     graft.sources.Par.run(
       () => p = graft.sources.Compaction.rewriteParquetDir(spark,
-          postingsDir(indexDir), targetBytes, mergeSchema = true) { df =>
+          postingsDir(indexDir), mergeSchema = true) { df =>
         // metadata columns (append's metaCols — anything non-reserved)
         // survive the fold verbatim: they are part of the posting row
         val metaCols = df.columns.filterNot(ReservedPostingCols).toSeq
@@ -474,7 +474,7 @@ object TokenIndex {
             metaCols).map(col): _*)
       },
       () => a = graft.sources.Compaction.rewriteParquetDir(spark,
-          arraysDir(indexDir), targetBytes) { df =>
+          arraysDir(indexDir)) { df =>
         IndexStore.dropMasked(df, tomb, "corpus_id")
           .select(col("corpus_id"), col("toks")).distinct()
           .withColumn("run_id", lit(horizon(df)))
@@ -487,14 +487,14 @@ object TokenIndex {
     var d: (Long, Long) = null
     graft.sources.Par.run(
       () => d = graft.sources.Compaction.rewriteParquetDir(spark,
-          dfDir(indexDir), targetBytes) { df =>
+          dfDir(indexDir)) { df =>
         folded.groupBy(col("tok")).agg(count(lit(1)).as("df"))
           .withColumn("run_id", lit(horizon(df)))
           .select(col("tok"), col("df"), col("run_id"))
       },
       () => {
         graft.sources.Compaction.rewriteParquetDir(spark,
-            statsDir(indexDir), targetBytes) { df =>
+            statsDir(indexDir)) { df =>
           folded.select(col("corpus_id"), col("dl")).distinct()
             .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
             .withColumn("run_id", lit(horizon(df)))

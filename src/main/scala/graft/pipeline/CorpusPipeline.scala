@@ -58,13 +58,8 @@ object CorpusPipeline {
         // cross-document duplicate-span removal at this gram length;
         // kept text replaces the original text column
       tokenBudgetPerLang: Option[Long] = None,
-      materializeNearDup: Boolean = false,
-        // true = corpus-scale form: near-dup pair list computed eagerly
-        // with the shingle projection cached (one upstream derivation
-        // instead of three — flip when a derivation costs hours);
-        // false (default) = fully lazy single-AQE-job plan, faster at
-        // report scale and what curateObserved's Observation contract
-        // needs
+        // token-budget mixture sampling per predicted language
+        // (deterministic hash-prefix selection)
       snapshotGate: Boolean = false)
         // true = eager localCheckpoint of the EXACT-DEDUP survivors
         // (minus __toks) inside dedup(). The near-dup pair DAG has ~5
@@ -75,10 +70,7 @@ object CorpusPipeline {
         // q44 numbers in PLANS.md). Keep FALSE for observed pipelines
         // (an eager action completes the Observation promise from a
         // metrics-less run — curateObserved forces it off) and for
-        // corpora too large to pin as executor RDD blocks — there,
-        // materializeNearDup is the corpus-scale lever.
-        // token-budget mixture sampling per predicted language
-        // (deterministic hash-prefix selection)
+        // corpora too large to pin as executor RDD blocks.
 
   /** Annotate with language + quality signals (two stacked projections,
     * no shuffle). Per-language scores are MATERIALIZED columns before the
@@ -139,8 +131,7 @@ object CorpusPipeline {
     val nearPairs = Dedup.minHashNearDuplicates(
       exact, idCol, textCol,
       shingleSize = cfg.nearDupShingleSize, numHashes = cfg.nearDupNumHashes,
-      bands = cfg.nearDupBands, threshold = cfg.nearDupThreshold,
-      materialize = cfg.materializeNearDup)
+      bands = cfg.nearDupBands, threshold = cfg.nearDupThreshold)
     if (cfg.nearDupClusterCanonical)
       Dedup.keepOnePerCluster(exact, idCol, nearPairs)
     else {
@@ -215,18 +206,17 @@ object CorpusPipeline {
       sum(TF.tokenCount(col(textCol)).cast("long")).as("n_tokens"))
     // single-job form: an eager internal action would complete the
     // ingest observation's promise from a metrics-less checkpoint run —
-    // both eager knobs are forced off
+    // the eager snapshotGate is forced off
     val curated = curate(observedIn, idCol, textCol,
-      cfg.copy(materializeNearDup = false, snapshotGate = false))
+      cfg.copy(snapshotGate = false))
     val observedOut = curated.observe(ship,
       count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("n_tokens"))
     (observedOut, ingest, ship)
   }
 
   /** One incremental curation run — the production mode at corpus scale:
-    * anti-join the ingest against the processed-id state (Bloom pre-pass
-    * when the state dwarfs the delta, see
-    * [[graft.operators.Incremental]]), curate ONLY the new documents,
+    * anti-join the ingest against the processed-id state
+    * ([[graft.operators.Incremental.newRows]]), curate ONLY the new documents,
     * append their ids to state, and return the newly curated rows.
     * Re-running on unchanged input is a no-op (the reference pipeline's
     * core invariant, applied to the corpus pipeline).
@@ -241,10 +231,9 @@ object CorpusPipeline {
       idCol: String,
       textCol: String,
       stateDir: String,
-      cfg: Config = Config(),
-      bloomExpectedKeys: Option[Long] = None): DataFrame = {
+      cfg: Config = Config()): DataFrame = {
     val (curated, commit) =
-      curateIncrementalStaged(docs, idCol, textCol, stateDir, cfg, bloomExpectedKeys)
+      curateIncrementalStaged(docs, idCol, textCol, stateDir, cfg)
     commit()
     curated
   }
@@ -272,15 +261,11 @@ object CorpusPipeline {
       idCol: String,
       textCol: String,
       stateDir: String,
-      cfg: Config = Config(),
-      bloomExpectedKeys: Option[Long] = None): (DataFrame, () => Unit) = {
+      cfg: Config = Config()): (DataFrame, () => Unit) = {
     val spark = docs.sparkSession
     val state = graft.operators.Incremental.readState(spark, stateDir, Seq(idCol))
-    val fresh0 = bloomExpectedKeys match {
-      case Some(n) => graft.operators.Incremental.newRowsBloom(docs, state, Seq(idCol), n)
-      case None => graft.operators.Incremental.newRows(docs, state, Seq(idCol))
-    }
-    val (fresh, _) = snapshotTracked(fresh0)
+    val (fresh, _) = snapshotTracked(
+      graft.operators.Incremental.newRows(docs, state, Seq(idCol)))
     val curated = curate(fresh, idCol, textCol, cfg)
     // state must record every SEEN id (curated or filtered out) or
     // rejected docs would be re-curated forever
@@ -308,10 +293,9 @@ object CorpusPipeline {
       textCol: String,
       stateDir: String,
       sigStateDir: String,
-      cfg: Config = Config(),
-      bloomExpectedKeys: Option[Long] = None): DataFrame = {
+      cfg: Config = Config()): DataFrame = {
     val (kept, commit) = curateIncrementalNearDupStaged(
-      docs, idCol, textCol, stateDir, sigStateDir, cfg, bloomExpectedKeys)
+      docs, idCol, textCol, stateDir, sigStateDir, cfg)
     commit()
     kept
   }
@@ -328,8 +312,7 @@ object CorpusPipeline {
       textCol: String,
       stateDir: String,
       sigStateDir: String,
-      cfg: Config = Config(),
-      bloomExpectedKeys: Option[Long] = None): (DataFrame, () => Unit) = {
+      cfg: Config = Config()): (DataFrame, () => Unit) = {
     val spark = docs.sparkSession
     // Snapshot eagerly at each state boundary — with localCheckpoint, NOT
     // persist. commit() APPENDS to stateDir and sigStateDir, and an
@@ -345,7 +328,7 @@ object CorpusPipeline {
     // reference (banded side, final left join, signature write, caller's
     // terminal action).
     val (curated0, commitState) =
-      curateIncrementalStaged(docs, idCol, textCol, stateDir, cfg, bloomExpectedKeys)
+      curateIncrementalStaged(docs, idCol, textCol, stateDir, cfg)
     val (curated, curatedPinned) = snapshotTracked(curated0)
     val sigPath = new org.apache.hadoop.fs.Path(sigStateDir)
     val fs = sigPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -531,40 +514,27 @@ object CorpusPipeline {
     * prose vs forum text score on different scales). Appends the
     * stratum's cutoff as `thr` and filters.
     *
-    * `exact = true` (the oracle-checkable path) selects the cutoff by
-    * integer rank (target row `ceil(p*n)` = `(n*num + den - 1) div den`,
-    * the q50 percentile_disc construction — the k-th smallest value of a
-    * multiset is deterministic even when row_number breaks score ties
-    * arbitrarily, and integer milli-scores compare exactly, so no float
-    * interpolation can drift at the keep/drop boundary). One shuffle, of
-    * ONLY the (id, stratum, score) stream — document text never moves.
-    * Caveat at 100 TB: a window over stratum puts each stratum in one
-    * partition; with few giant strata prefer `exact = false`, which
-    * estimates the cutoff with a mergeable t-digest sketch
-    * (`percentile_approx`: map-side partials, no row stream shuffled at
-    * all) and broadcasts the tiny per-stratum cutoff table back.
+    * The cutoff is selected by integer rank (target row `ceil(p*n)` =
+    * `(n*num + den - 1) div den`, the q50 percentile_disc construction —
+    * the k-th smallest value of a multiset is deterministic even when
+    * row_number breaks score ties arbitrarily, and integer milli-scores
+    * compare exactly, so no float interpolation can drift at the
+    * keep/drop boundary). One shuffle, of ONLY the (id, stratum, score)
+    * stream — document text never moves.
     */
   def adaptiveQualityFilter(scored: DataFrame, scoreCol: String,
-      stratumCol: String, num: Int, den: Int, exact: Boolean = true): DataFrame = {
+      stratumCol: String, num: Int, den: Int): DataFrame = {
     require(num > 0 && den > 0 && num < den, "percentile must be in (0,1)")
-    if (exact) {
-      val w = Window.partitionBy(col(stratumCol)).orderBy(col(scoreCol))
-      val wn = Window.partitionBy(col(stratumCol))
-      scored
-        .withColumn("__rn", row_number().over(w))
-        .withColumn("__n", count(lit(1)).over(wn))
-        .withColumn("thr",
-          max(when(col("__rn") === expr(s"(__n * $num + ${den - 1}) div $den"),
-            col(scoreCol))).over(wn))
-        .filter(col(scoreCol) >= col("thr"))
-        .drop("__rn", "__n")
-    } else {
-      val thr = scored.groupBy(col(stratumCol))
-        .agg(percentile_approx(col(scoreCol), lit(num.toDouble / den),
-          lit(10000)).as("thr"))
-      scored.join(broadcast(thr), stratumCol)
-        .filter(col(scoreCol) >= col("thr"))
-    }
+    val w = Window.partitionBy(col(stratumCol)).orderBy(col(scoreCol))
+    val wn = Window.partitionBy(col(stratumCol))
+    scored
+      .withColumn("__rn", row_number().over(w))
+      .withColumn("__n", count(lit(1)).over(wn))
+      .withColumn("thr",
+        max(when(col("__rn") === expr(s"(__n * $num + ${den - 1}) div $den"),
+          col(scoreCol))).over(wn))
+      .filter(col(scoreCol) >= col("thr"))
+      .drop("__rn", "__n")
   }
 
   /** Deterministic uniform sample of `k` rows per stratum (the "give me

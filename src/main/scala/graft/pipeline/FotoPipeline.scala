@@ -20,9 +20,7 @@ import graft.operators.Incremental
   * Every stage is a declarative DataFrame op (Catalyst pushes the null
   * filter below the unpivot, broadcast-joins the 8-row dim, and keeps
   * everything except the image UDF in whole-stage codegen). The pipeline
-  * is one shuffle-free DAG when the state side is broadcastable; at
-  * 10^9-key state, swap the anti-join input through
-  * `Incremental.newRowsBloom`.
+  * is one shuffle-free DAG when the state side is broadcastable.
   */
 object FotoPipeline {
 

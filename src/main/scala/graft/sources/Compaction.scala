@@ -6,25 +6,30 @@ import org.apache.spark.sql.SparkSession
 /** Small-file compaction for parquet directories — the sink-hygiene pass
   * every long-lived ingest needs: incremental appends (the reference's
   * per-run appends, streaming microbatches, per-partition task outputs)
-  * accumulate files far below the efficient scan size, and at corpus
-  * scale the resulting footer/open overhead dominates read cost.
+  * accumulate files far below the efficient scan size, and the resulting
+  * footer/open overhead dominates read cost.
   *
-  * `compactParquetDir` sizes the rewrite from the ACTUAL on-disk bytes:
-  * output file count = ceil(totalBytes / targetBytes), written via one
+  * [[Compaction.rewriteParquetDir]] is the one rewrite: it reads the
+  * directory, runs the caller's row transform (identity, keep-latest,
+  * retention, a sketch fold), sizes the output from the ACTUAL on-disk
+  * bytes scaled by the row survival ratio — file count =
+  * ceil(bytes / [[Compaction.TargetFileBytes]]), written via one
   * `repartition` (a round-robin shuffle — the only way to get even
-  * output sizes from skewed inputs), then swapped into place.
+  * output sizes from skewed inputs) — and swaps the result into place
+  * under the directory's [[Lease]].
   *
-  * The swap is write-temp → delete-old → rename — NOT atomic. That is a
-  * deliberate scope line: atomic replace is a table-format commit
-  * protocol (transaction log + snapshot pointer), not a directory
-  * operation; run compaction in the same single-writer window the
-  * ingest already requires (the reference's pipeline is single-writer
-  * by construction). Readers mid-swap see a missing directory, never
-  * partial data — and a rerun after a mid-swap crash self-heals: if the
-  * live dir is absent but `__compact_old` exists, the preamble renames
-  * it back before compacting.
+  * The swap is write-temp → rename-old-aside → rename-temp — NOT atomic.
+  * That is a deliberate scope line: atomic replace is a table-format
+  * commit protocol (transaction log + snapshot pointer), not a directory
+  * operation. Readers mid-swap see a missing directory, never partial
+  * data — and a rerun after a mid-swap crash self-heals: if the live dir
+  * is absent but `__compact_old` exists, the preamble renames it back
+  * before compacting.
   */
 object Compaction {
+
+  /** Output file size every compaction rewrite aims for. */
+  val TargetFileBytes: Long = 128L << 20
 
   /** Recursive LOCAL-filesystem delete for temp/state directories the
     * engine itself created (fixture indexes, probe scratch). Null-safe
@@ -72,7 +77,7 @@ object Compaction {
     val old = new Path(dir + "__compact_old")
     if (!fs.exists(p) && fs.exists(old))
       require(fs.rename(old, p),
-        s"compactParquetDir: crash recovery rename $old -> $p failed")
+        s"Compaction: crash recovery rename $old -> $p failed")
   }
 
   /** Swap `dir + "__compact_tmp"` (already written) into `dir` with a
@@ -89,45 +94,26 @@ object Compaction {
     val tmp = new Path(dir + "__compact_tmp")
     val old = new Path(dir + "__compact_old")
     if (fs.exists(old)) fs.delete(old, true)
-    require(fs.rename(p, old), s"compactParquetDir: could not move $p aside to $old")
+    require(fs.rename(p, old), s"Compaction: could not move $p aside to $old")
     if (!fs.rename(tmp, p)) {
       val back = fs.rename(old, p) // roll back: restore the original dir
       throw new IllegalStateException(
-        s"compactParquetDir: rename $tmp -> $p failed" +
+        s"Compaction: rename $tmp -> $p failed" +
           (if (back) " (original restored)" else s" AND rollback failed — data is at $old"))
     }
     fs.delete(old, true)
   }
 
-  /** Rewrite `dir` into ~`targetBytes` files when it is fragmented
-    * (more files than the byte-optimal count). Returns
-    * (filesBefore, filesAfter); no-op (and no rewrite job) when the
-    * directory is already within budget.
-    */
-  def compactParquetDir(spark: SparkSession, dir: String,
-      targetBytes: Long = 128L << 20): (Int, Int) = {
-    recoverCrashedSwap(spark, dir)
-    val before = dataFiles(spark, dir)
-    if (before.isEmpty) return (0, 0)
-    val totalBytes = before.map(_._2).sum
-    val wantFiles = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    if (before.size <= wantFiles) return (before.size, before.size)
-
-    spark.read.parquet(dir).repartition(wantFiles)
-      .write.mode("overwrite").parquet(dir + "__compact_tmp")
-    swapTmpIntoPlace(spark, dir)
-    (before.size, dataFiles(spark, dir).size)
-  }
-
   /** Rewrite the ROWS of a parquet directory through `transform` and
-    * swap the result into place under the same checked two-rename
-    * protocol (same crash-recovery preamble, same `__compact_old`
-    * rollback window) — the primitive behind state-table compaction
-    * ([[graft.operators.Dedup.compactSignatureState]]), where the
-    * rewrite drops rows (keep-latest, retention) rather than merely
-    * re-bucketing files. Output file count is sized from the input
-    * bytes scaled by the row survival ratio, so a 90%-dropped state
-    * lands in proportionally fewer `targetBytes` files. Returns
+    * swap the result into place under the checked two-rename protocol
+    * ([[recoverCrashedSwap]] preamble, [[swapTmpIntoPlace]]'s
+    * `__compact_old` rollback window). An identity `transform` merely
+    * re-buckets fragmented files; state-table compaction
+    * ([[graft.operators.Dedup.compactSignatureState]], the sketch and
+    * index folds) drops rows (keep-latest, retention). Output file count
+    * is sized from the input bytes scaled by the row survival ratio, so
+    * a 90%-dropped state lands in proportionally fewer
+    * [[TargetFileBytes]] files. Returns
     * (rowsBefore, rowsAfter); `(0, 0)` without a write when the
     * directory is absent or empty.
     *
@@ -137,7 +123,7 @@ object Compaction {
     * this dir's own marker.
     */
   def rewriteParquetDir(spark: SparkSession, dir: String,
-      targetBytes: Long = 128L << 20, mergeSchema: Boolean = false)(
+      mergeSchema: Boolean = false)(
       transform: org.apache.spark.sql.DataFrame
         => org.apache.spark.sql.DataFrame): (Long, Long) =
       Lease.withLease(spark, dir) {
@@ -160,7 +146,7 @@ object Compaction {
         val rowsAfter = out.count()
         val keepRatio = if (rowsBefore == 0) 1.0 else rowsAfter.toDouble / rowsBefore
         val outBytes = (files.map(_._2).sum * keepRatio).toLong
-        val wantFiles = math.max(1, math.ceil(outBytes.toDouble / targetBytes).toInt)
+        val wantFiles = math.max(1, math.ceil(outBytes.toDouble / TargetFileBytes).toInt)
         out.repartition(wantFiles)
           .write.mode("overwrite").parquet(dir + "__compact_tmp")
         (rowsBefore, rowsAfter)

@@ -46,15 +46,12 @@ class BucketingSpec extends SparkSpec {
     val df = (1L to 10000L).map(i => (i, s"row$i")).toDF("id", "v")
     df.repartition(40).write.parquet(dir)
     assert(Compaction.dataFiles(spark, dir).size == 40)
-    val (before, after) = Compaction.compactParquetDir(spark, dir, targetBytes = 10L << 20)
-    assert(before == 40 && after == 1, s"$before -> $after")
+    val (before, after) = Compaction.rewriteParquetDir(spark, dir)(identity)
+    assert(before == 10000L && after == 10000L, s"$before -> $after")
+    assert(Compaction.dataFiles(spark, dir).size == 1)
     // byte-identical contents after the rewrite
     val back = spark.read.parquet(dir).as[(Long, String)].collect().toSet
     assert(back == (1L to 10000L).map(i => (i, s"row$i")).toSet)
-    // already-compact dir: reported as-is, nothing rewritten
-    val files = Compaction.dataFiles(spark, dir).map(_._1).toSet
-    assert(Compaction.compactParquetDir(spark, dir, 10L << 20) == ((1, 1)))
-    assert(Compaction.dataFiles(spark, dir).map(_._1).toSet == files, "no-op must not rewrite")
   }
 
   test("compaction self-heals a mid-swap crash (live dir gone, data parked in __compact_old)") {
@@ -70,8 +67,9 @@ class BucketingSpec extends SparkSpec {
     require(fs.rename(p, new Path(dir + "__compact_old")))
     assert(!fs.exists(p))
     // the rerun must restore the parked data and then compact it
-    val (before, after) = Compaction.compactParquetDir(spark, dir, targetBytes = 10L << 20)
-    assert(before == 8 && after == 1, s"$before -> $after")
+    val (before, after) = Compaction.rewriteParquetDir(spark, dir)(identity)
+    assert(before == 500L && after == 500L, s"$before -> $after")
+    assert(Compaction.dataFiles(spark, dir).size == 1)
     assert(!fs.exists(new Path(dir + "__compact_old")), "old dir must be cleaned up")
     val back = spark.read.parquet(dir).as[(Long, String)].collect().toSet
     assert(back == (1L to 500L).map(i => (i, s"row$i")).toSet)

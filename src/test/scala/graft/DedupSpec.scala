@@ -46,23 +46,6 @@ class DedupSpec extends SparkSpec {
     assert(pairs == Set((1L, 2L)))
   }
 
-  test("minhash materialize=true (corpus-scale snapshot form) matches the lazy default") {
-    val base = (1 to 40).map(i => s"tok$i").mkString(" ")
-    val near = ((1 to 38).map(i => s"tok$i") ++ Seq("x1", "x2")).mkString(" ")
-    val far = (100 to 140).map(i => s"zz$i").mkString(" ")
-    val df = Seq((1L, base), (2L, near), (3L, far)).toDF("doc_id", "text")
-    def run(m: Boolean) = Dedup.minHashNearDuplicates(df, "doc_id", "text",
-      shingleSize = 2, numHashes = 32, bands = 16, threshold = 0.5, materialize = m)
-    val lazyPairs = run(false).select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val snap = run(true)
-    assert(snap.select("id_a", "id_b").as[(Long, Long)].collect().toSet == lazyPairs)
-    // the snapshot must carry no file/cache lineage a state write could
-    // refresh under it (the refreshByPath regression class)
-    assert(snap.queryExecution.optimizedPlan.toString.contains("LogicalRDD")
-      || snap.queryExecution.optimizedPlan.toString.contains("Scan ExistingRDD"),
-      s"expected a checkpoint-backed plan:\n${snap.queryExecution.optimizedPlan}")
-  }
-
   test("incremental near-dup vs signature state: planted copy flagged, fresh doc survives") {
     val base = (1 to 40).map(i => s"tok$i").mkString(" ")
     val other = (50 to 90).map(i => s"yy$i").mkString(" ")
@@ -229,27 +212,6 @@ class DedupSpec extends SparkSpec {
     assert(pairs == Set((1L, 2L))) // 3 is opposite; 4 is another block
   }
 
-  test("LSH-blocked embedding near-dup finds planted high-cosine pairs with exact precision") {
-    val rnd = new scala.util.Random(11)
-    val dim = 32
-    val base = Seq.fill(20)(Array.fill(dim)(rnd.nextGaussian()))
-    // pairs (2i, 2i+1) are near-dups; everything else is random
-    val rows = base.zipWithIndex.flatMap { case (v, i) =>
-      Seq(
-        (2L * i, v.map(_.toFloat).toSeq),
-        (2L * i + 1, v.map(x => (x + 0.05 * rnd.nextGaussian()).toFloat).toSeq))
-    }
-    val df = rows.toDF("id", "emb")
-    val pairs = Dedup.embeddingNearDuplicatesLsh(df, "id", "emb", dim, threshold = 0.95,
-      tables = 8, bitsPerTable = 8)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val planted = (0 until 20).map(i => (2L * i, 2L * i + 1)).toSet
-    // exact precision: nothing below the threshold survives the verify
-    assert(pairs.subsetOf(planted))
-    // high recall on strongly-similar pairs
-    assert((pairs & planted).size >= 16, s"recall too low: ${(pairs & planted).size}/20")
-  }
-
   test("incremental: rerun on unchanged input yields zero new rows") {
     val state = Seq(("p1", "w1", "f1"), ("p1", "w1", "f2")).toDF("kode_proyek", "minggu", "nama_file")
     val input = Seq(("p1", "w1", "f1"), ("p1", "w1", "f2"), ("p2", "w1", "f1"))
@@ -259,16 +221,6 @@ class DedupSpec extends SparkSpec {
     // after appending, rerun is a no-op — the reference's core invariant
     val state2 = state.unionByName(fresh)
     assert(Incremental.newRows(input, state2, Seq("kode_proyek", "minggu", "nama_file")).count() == 0)
-  }
-
-  test("bloom-filtered incremental matches exact anti-join") {
-    val state = (1 to 500).map(i => (s"p$i", "w", s"f$i")).toDF("kode_proyek", "minggu", "nama_file")
-    val input = (400 to 600).map(i => (s"p$i", "w", s"f$i")).toDF("kode_proyek", "minggu", "nama_file")
-    val exact = Incremental.newRows(input, state, Seq("kode_proyek", "minggu", "nama_file"))
-      .as[(String, String, String)].collect().toSet
-    val bloomed = Incremental.newRowsBloom(input, state, Seq("kode_proyek", "minggu", "nama_file"), 500L)
-      .as[(String, String, String)].collect().toSet
-    assert(bloomed == exact)
   }
 
   test("decontamination flags docs sharing an n-gram with the benchmark, counts overlap") {
@@ -282,24 +234,6 @@ class DedupSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(flagged.contains(1L) && flagged.contains(3L) && !flagged.contains(2L))
     assert(flagged(3L) > flagged(1L)) // longer overlap → more distinct shared grams
-  }
-
-  test("bloom decontamination: no false negatives vs exact path, clean doc survives") {
-    val bench = Seq("the quick brown fox jumps over the lazy dog").toDF("text")
-    val corpus = Seq(
-      (1L, "prefix words the quick brown fox jumps over the lazy dog suffix"),
-      (2L, "completely unrelated clean content with plenty of words here"),
-      (3L, "the quick brown fox jumps over the lazy dog tonight and more"))
-      .toDF("doc_id", "text")
-    val exact = Dedup.flagContaminated(corpus, "doc_id", "text", bench, "text", n = 5)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val bloom = Dedup.flagContaminatedBloom(corpus, "doc_id", "text", bench, "text", n = 5)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // no false negatives: every exact hit appears with at least its count
-    exact.foreach { case (id, hits) =>
-      assert(bloom.contains(id) && bloom(id) >= hits, s"doc $id lost hits in the sketch path") }
-    // at fpp=1e-4 on this tiny vocabulary the clean doc stays clean
-    assert(!bloom.contains(2L))
   }
 
   test("keepBestPerCluster: highest score survives, ties to larger id, singletons pass") {

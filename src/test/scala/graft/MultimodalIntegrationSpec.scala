@@ -237,16 +237,9 @@ class MultimodalIntegrationSpec extends SparkSpec {
     val clipH = AvWriter.mjpegAvi(Seq.fill(4)(hJpg), Seq.fill(4)(true))
     val clipV = AvWriter.mjpegAvi(Seq.fill(4)(vJpg), Seq.fill(4)(true))
     val rows = Seq(1L -> clipH, 2L -> clipV).toDF("video_id", "content")
-    // default: the near-content-free frames are excluded, so two
-    // UNRELATED gradient clips do not pair through them
+    // the near-content-free frames are excluded, so two UNRELATED
+    // gradient clips do not pair through them
     assert(Dedup.videoNearDuplicates(rows, "video_id", "content").isEmpty,
-      "the default must not pair unrelated clips through degenerate frames")
-    // the dial restores them — and demonstrates exactly the collision
-    // the default prevents (this is the documented trade, not a bug)
-    val loose = Dedup.videoNearDuplicates(rows, "video_id", "content",
-        dropDegenerate = false)
-      .select(col("id_a"), col("id_b")).as[(Long, Long)].collect().toSeq
-    assert(loose == Seq((1L, 2L)),
-      s"dropDegenerate=false must keep zero-class frames: $loose")
+      "unrelated clips must not pair through degenerate frames")
   }
 }
