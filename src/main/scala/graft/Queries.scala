@@ -3370,20 +3370,12 @@ object Queries {
       // ArgmaxCosine co-assignment property) and the rank-1 neighbor
       // at k=1 is the source at cosine 1.0. Same oracle as q100.
       val emb = Tables.embeddings(s, d)
-      val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_q110_${Integer.toHexString(d.hashCode)}")
-      val marker = new java.io.File(dir, "_SRC_FP")
       val VI = graft.operators.VectorIndex
-      // marker = fixture fingerprint + a format/sizing-rule version:
-      // changing either must invalidate a cached index just like a
-      // rebuilt fixture does. The rule VERSION (not the derived k) is
-      // recorded, so the cached path never pays the corpus count job
-      // that only the fresh build needs.
-      val srcFp = fixtureFingerprint(d, "embeddings.parquet") + "|vecindex-v5|k=sqrt"
-      val fresh = !marker.exists() ||
-        new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8").trim != srcFp
-      if (fresh) {
-        if (dir.exists()) graft.sources.Compaction.deleteLocalDir(dir)
+      // the marker records the sizing-rule VERSION (not the derived k),
+      // so the cached path never pays the corpus count job that only
+      // the fresh build needs
+      val dir = cachedFixtureDir("q110", d, "embeddings.parquet",
+          "|vecindex-v5|k=sqrt") { dir =>
         // k ∝ √n — the IVF sizing guidance (Faiss), NOT SemDeDup's
         // k ∝ n: with k ∝ n both the add-time assignment (n·k) and the
         // per-query probe (k cosines) go quadratic-in-n, which the r14
@@ -3393,8 +3385,6 @@ object Queries {
         val n = emb.count()
         VI.build(emb, "vec_id", "embedding", dir.toString,
           k = math.max(8, math.ceil(math.sqrt(n.toDouble)).toInt), maxIter = 5)
-        java.nio.file.Files.write(marker.toPath, (srcFp + "\n").getBytes("UTF-8"))
-        ()
       }
       val offset = plantedIdOffset(emb, "vec_id")
       val planted = emb.filter(pmod(col("vec_id"), lit(5)) === 0)
@@ -3525,22 +3515,13 @@ object Queries {
       // exact in float). Index + codebooks build once per fixture
       // fingerprint (the q109/q110 idiom).
       val emb = Tables.embeddings(s, d)
-      val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_q115_${Integer.toHexString(d.hashCode)}")
-      val marker = new java.io.File(dir, "_SRC_FP")
       val VI = graft.operators.VectorIndex
-      val srcFp = fixtureFingerprint(d, "embeddings.parquet") +
-        "|vecindex-v5|k=sqrt|pq16"
-      val fresh = !marker.exists() ||
-        new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8").trim != srcFp
-      if (fresh) {
-        if (dir.exists()) graft.sources.Compaction.deleteLocalDir(dir)
+      val dir = cachedFixtureDir("q115", d, "embeddings.parquet",
+          "|vecindex-v5|k=sqrt|pq16") { dir =>
         val n = emb.count()
         VI.build(emb, "vec_id", "embedding", dir.toString,
           k = math.max(8, math.ceil(math.sqrt(n.toDouble)).toInt), maxIter = 5,
           pqM = 16)
-        java.nio.file.Files.write(marker.toPath, (srcFp + "\n").getBytes("UTF-8"))
-        ()
       }
       val offset = plantedIdOffset(emb, "vec_id")
       val planted = emb.filter(pmod(col("vec_id"), lit(7)) === 0)
@@ -3602,22 +3583,13 @@ object Queries {
       // probes (q110 f32 / q115 pq / q117 sq8) on disjoint moduli so
       // the oracles stay visually distinct in CORRECTNESS rows.
       val emb = Tables.embeddings(s, d)
-      val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_q117_${Integer.toHexString(d.hashCode)}")
-      val marker = new java.io.File(dir, "_SRC_FP")
       val VI = graft.operators.VectorIndex
-      val srcFp = fixtureFingerprint(d, "embeddings.parquet") +
-        "|vecindex-v5|k=sqrt|sq8"
-      val fresh = !marker.exists() ||
-        new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8").trim != srcFp
-      if (fresh) {
-        if (dir.exists()) graft.sources.Compaction.deleteLocalDir(dir)
+      val dir = cachedFixtureDir("q117", d, "embeddings.parquet",
+          "|vecindex-v5|k=sqrt|sq8") { dir =>
         val n = emb.count()
         VI.build(emb, "vec_id", "embedding", dir.toString,
           k = math.max(8, math.ceil(math.sqrt(n.toDouble)).toInt), maxIter = 5,
           sq8 = true)
-        java.nio.file.Files.write(marker.toPath, (srcFp + "\n").getBytes("UTF-8"))
-        ()
       }
       val offset = plantedIdOffset(emb, "vec_id")
       val planted = emb.filter(pmod(col("vec_id"), lit(11)) === 0)
@@ -3811,22 +3783,12 @@ object Queries {
         .select(col("doc_id"),
           HF.hashEmbed(transform(TF.tokens(col("text")), t => xxhash64(t)), 64)
             .as("emb"))
-      val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_q123_${Integer.toHexString(d.hashCode)}")
-      val marker = new java.io.File(dir, "_SRC_FP")
-      val srcFp = fixtureFingerprint(d, "documents.parquet") +
-        "|hashembed64|vecindex-v5|k=sqrt"
-      val fresh = !marker.exists() ||
-        new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8")
-          .trim != srcFp
-      if (fresh) {
-        if (dir.exists()) graft.sources.Compaction.deleteLocalDir(dir)
+      val dir = cachedFixtureDir("q123", d, "documents.parquet",
+          "|hashembed64|vecindex-v5|k=sqrt") { dir =>
         val corpus = embed(docs.where(col("text").isNotNull))
         val n = corpus.count()
         VI.build(corpus, "doc_id", "emb", dir.toString,
           k = math.max(8, math.ceil(math.sqrt(n.toDouble)).toInt), maxIter = 5)
-        java.nio.file.Files.write(marker.toPath, (srcFp + "\n").getBytes("UTF-8"))
-        ()
       }
       val offset = plantedIdOffset(docs, "doc_id")
       // Uniqueness is PROPORTIONAL-multiset, not raw-sorted-list
@@ -4021,18 +3983,10 @@ object Queries {
       val VI = graft.operators.VectorIndex
       val emb = Tables.embeddings(s, d)
         .where(col("embedding").isNotNull && size(col("embedding")) > 0)
-      val baseDir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_q126_${Integer.toHexString(d.hashCode)}")
-      val marker = new java.io.File(baseDir, "_SRC_FP")
-      val srcFp = fixtureFingerprint(d, "embeddings.parquet") +
-        "|vecindex-v5|k=sqrt|plant10"
       val off = Tables.embeddings(s, d)
         .agg(coalesce(max(col("vec_id")), lit(0L)) + 1L).head().getLong(0)
-      val fresh = !marker.exists() ||
-        new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8")
-          .trim != srcFp
-      if (fresh) {
-        if (baseDir.exists()) graft.sources.Compaction.deleteLocalDir(baseDir)
+      val baseDir = cachedFixtureDir("q126", d, "embeddings.parquet",
+          "|vecindex-v5|k=sqrt|plant10") { baseDir =>
         val copies = emb.filter(pmod(col("vec_id"), lit(10)) === 0)
           .select((col("vec_id") + lit(off)).as("vec_id"),
             transform(col("embedding"), x => x * lit(2.0f)).as("embedding"))
@@ -4041,8 +3995,6 @@ object Queries {
         val n = corpus.count()
         VI.build(corpus, "vec_id", "embedding", baseDir.toString,
           k = math.max(8, math.ceil(math.sqrt(n.toDouble)).toInt), maxIter = 5)
-        java.nio.file.Files.write(marker.toPath, (srcFp + "\n").getBytes("UTF-8"))
-        ()
       }
       val work = new java.io.File(System.getProperty("java.io.tmpdir"),
         s"graft_q126_work_${Integer.toHexString(d.hashCode)}")
@@ -4163,11 +4115,6 @@ object Queries {
       val VI = graft.operators.VectorIndex
       val emb = Tables.embeddings(s, d)
         .where(col("embedding").isNotNull && size(col("embedding")) > 0)
-      val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_q128_${Integer.toHexString(d.hashCode)}")
-      val marker = new java.io.File(dir, "_SRC_FP")
-      val srcFp = fixtureFingerprint(d, "embeddings.parquet") +
-        "|vecindex-v5|sq8|k=sqrt|plant5"
       val off = Tables.embeddings(s, d)
         .agg(coalesce(max(col("vec_id")), lit(0L)) + 1L).head().getLong(0)
       val copies = emb.filter(pmod(col("vec_id"), lit(5)) === 0)
@@ -4175,17 +4122,12 @@ object Queries {
           transform(col("embedding"), x => x * lit(2.0f)).as("embedding"))
       val corpus = emb.select(col("vec_id"), col("embedding"))
         .unionByName(copies)
-      val fresh = !marker.exists() ||
-        new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8")
-          .trim != srcFp
-      if (fresh) {
-        if (dir.exists()) graft.sources.Compaction.deleteLocalDir(dir)
+      val dir = cachedFixtureDir("q128", d, "embeddings.parquet",
+          "|vecindex-v5|sq8|k=sqrt|plant5") { dir =>
         val n = corpus.count()
         VI.build(corpus, "vec_id", "embedding", dir.toString,
           k = math.max(8, math.ceil(math.sqrt(n.toDouble)).toInt),
           maxIter = 5, sq8 = true)
-        java.nio.file.Files.write(marker.toPath, (srcFp + "\n").getBytes("UTF-8"))
-        ()
       }
       val queries = emb.filter(pmod(col("vec_id"), lit(5)) === 0)
         .select((col("vec_id") + lit(2 * off)).as("vec_id"),
@@ -4224,15 +4166,7 @@ object Queries {
       // header parse, HTTP split, UTF-8 body round-trip, strip parity.
       val W = graft.sources.Warc
       val docs = Tables.documents(s, d)
-      val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_q129_${Integer.toHexString(d.hashCode)}")
-      val marker = new java.io.File(dir, "_SRC_FP")
-      val srcFp = fixtureFingerprint(d, "documents.parquet") + "|warc-v1"
-      val fresh = !marker.exists() ||
-        new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8")
-          .trim != srcFp
-      if (fresh) {
-        if (dir.exists()) graft.sources.Compaction.deleteLocalDir(dir)
+      val dir = cachedFixtureDir("q129", d, "documents.parquet", "|warc-v1") { dir =>
         dir.mkdirs()
         val dirPath = dir.toString
         docs.where(col("text").isNotNull)
@@ -4258,8 +4192,6 @@ object Queries {
               ()
             }
           }
-        java.nio.file.Files.write(marker.toPath, (srcFp + "\n").getBytes("UTF-8"))
-        ()
       }
       W.responses(s, dir.toString)
         .select(regexp_extract(col("url"), "doc/(\\d+)$", 1).cast("long")
@@ -4308,15 +4240,8 @@ object Queries {
       // quarantine row breaks the hash.
       val W = graft.sources.Warc
       val docs = Tables.documents(s, d)
-      val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_q136_${Integer.toHexString(d.hashCode)}")
-      val marker = new java.io.File(dir, "_SRC_FP")
-      val srcFp = fixtureFingerprint(d, "documents.parquet") + "|warc-v2|quarantine-resync"
-      val fresh = !marker.exists() ||
-        new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8")
-          .trim != srcFp
-      if (fresh) {
-        if (dir.exists()) graft.sources.Compaction.deleteLocalDir(dir)
+      val dir = cachedFixtureDir("q136", d, "documents.parquet",
+          "|warc-v2|quarantine-resync") { dir =>
         dir.mkdirs()
         val dirPath = dir.toString
         docs.where(col("text").isNotNull)
@@ -4364,8 +4289,6 @@ object Queries {
           W.httpResponse("<p>lost</p>")))).take(12)
         java.nio.file.Files.write(victim.toPath,
           orig.take(mid) ++ badMember ++ orig.drop(mid) ++ tail)
-        java.nio.file.Files.write(marker.toPath, (srcFp + "\n").getBytes("UTF-8"))
-        ()
       }
       W.readWithCorrupt(s, dir.toString)
         .select(
@@ -4467,15 +4390,7 @@ object Queries {
       disguiseVariant: org.apache.spark.sql.Column,
       gen: (org.apache.spark.sql.Column, org.apache.spark.sql.Column) =>
         org.apache.spark.sql.Column): DataFrame = {
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_${tag}_${Integer.toHexString(d.hashCode)}")
-    val marker = new java.io.File(dir, "_SRC_FP")
-    val srcFp = fixtureFingerprint(d, "documents.parquet") + "|" + fpTag
-    val fresh = !marker.exists() ||
-      new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8")
-        .trim != srcFp
-    if (fresh) {
-      if (dir.exists()) graft.sources.Compaction.deleteLocalDir(dir)
+    val dir = cachedFixtureDir(tag, d, "documents.parquet", "|" + fpTag) { dir =>
       val docs = Tables.documents(s, d)
       val off = plantedIdOffset(docs, "doc_id")
       val base = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
@@ -4492,8 +4407,6 @@ object Queries {
       plan.repartition(s.sparkContext.defaultParallelism)
         .select(col(idName), gen(col("__seed"), col("__v")).as("content"))
         .write.mode("overwrite").parquet(s"$dir/clips")
-      java.nio.file.Files.write(marker.toPath, (srcFp + "\n").getBytes("UTF-8"))
-      ()
     }
     s.read.parquet(s"$dir/clips")
   }
@@ -4678,15 +4591,8 @@ object Queries {
       // generation cached per fixture fingerprint (q125's reasoning):
       // the operator under measurement is decode + state probe, not
       // the fixture render/encode
-      val imgDir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_q130_${Integer.toHexString(d.hashCode)}")
-      val marker = new java.io.File(imgDir, "_SRC_FP")
-      val srcFp = fixtureFingerprint(d, "documents.parquet") + "|imgfix-v1"
-      val freshGen = !marker.exists() ||
-        new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8")
-          .trim != srcFp
-      if (freshGen) {
-        if (imgDir.exists()) graft.sources.Compaction.deleteLocalDir(imgDir)
+      val imgDir = cachedFixtureDir("q130", d, "documents.parquet",
+          "|imgfix-v1") { imgDir =>
         val baseIds = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
           .select(col("doc_id"))
         val stateImgs = baseIds
@@ -4703,8 +4609,6 @@ object Queries {
           .select(col("img_id"), col("role"),
             IF.fixtureImage(col("__seed"), col("__v")).as("content"))
           .write.mode("overwrite").parquet(s"$imgDir/images")
-        java.nio.file.Files.write(marker.toPath, (srcFp + "\n").getBytes("UTF-8"))
-        ()
       }
       val imgs = s.read.parquet(s"$imgDir/images")
       val state = Dedup.imageSignatures(
@@ -4734,15 +4638,8 @@ object Queries {
     val IF = graft.multimodal.ImageFixtures
     val docs = Tables.documents(s, d)
     val off = plantedIdOffset(docs, "doc_id")
-    val imgDir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_q125_${Integer.toHexString(d.hashCode)}")
-    val marker = new java.io.File(imgDir, "_SRC_FP")
-    val srcFp = fixtureFingerprint(d, "documents.parquet") + "|imgfix-v1"
-    val fresh = !marker.exists() ||
-      new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8")
-        .trim != srcFp
-    if (fresh) {
-      if (imgDir.exists()) graft.sources.Compaction.deleteLocalDir(imgDir)
+    val imgDir = cachedFixtureDir("q125", d, "documents.parquet",
+        "|imgfix-v1") { imgDir =>
       val base = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
         .select(col("doc_id"))
       val plan = base
@@ -4757,8 +4654,6 @@ object Queries {
         .select(col("img_id"),
           IF.fixtureImage(col("__seed"), col("__v")).as("content"))
         .write.mode("overwrite").parquet(s"$imgDir/images")
-      java.nio.file.Files.write(marker.toPath, (srcFp + "\n").getBytes("UTF-8"))
-      ()
     }
     s"$imgDir/images"
   }
@@ -4803,15 +4698,8 @@ object Queries {
       val IF = graft.multimodal.ImageFixtures
       val docs = Tables.documents(s, d)
       val off = plantedIdOffset(docs, "doc_id")
-      val imgDir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_q134_${Integer.toHexString(d.hashCode)}")
-      val marker = new java.io.File(imgDir, "_SRC_FP")
-      val srcFp = fixtureFingerprint(d, "documents.parquet") + "|imgfix-v1|oriented"
-      val fresh = !marker.exists() ||
-        new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8")
-          .trim != srcFp
-      if (fresh) {
-        if (imgDir.exists()) graft.sources.Compaction.deleteLocalDir(imgDir)
+      val imgDir = cachedFixtureDir("q134", d, "documents.parquet",
+          "|imgfix-v1|oriented") { imgDir =>
         val base = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
           .select(col("doc_id"))
         val plan = base
@@ -4826,8 +4714,6 @@ object Queries {
           .select(col("img_id"),
             IF.fixtureImage(col("__seed"), col("__v")).as("content"))
           .write.mode("overwrite").parquet(s"$imgDir/images")
-        java.nio.file.Files.write(marker.toPath, (srcFp + "\n").getBytes("UTF-8"))
-        ()
       }
       Dedup.imageNearDuplicates(s.read.parquet(s"$imgDir/images"),
           "img_id", "content", chunks = 8, maxHamming = 5,
@@ -4857,16 +4743,8 @@ object Queries {
       // oracle is q131's verbatim — effective df over the even slice,
       // (N, avgdl) collection-global — because the predicate selects
       // exactly the ids q131's allowed-DF did.
-      val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_q135_${Integer.toHexString(d.hashCode)}")
-      val marker = new java.io.File(dir, "_SRC_FP")
-      val srcFp = fixtureFingerprint(d, "documents.parquet") +
-        "|tokenindex-v3|meta-lang|evolved-src"
-      val fresh = !marker.exists() ||
-        new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8")
-          .trim != srcFp
-      if (fresh) {
-        if (dir.exists()) graft.sources.Compaction.deleteLocalDir(dir)
+      val dir = cachedFixtureDir("q135", d, "documents.parquet",
+          "|tokenindex-v3|meta-lang|evolved-src") { dir =>
         // evolved-index life (round 19 — VERDICT r18 item 3 driver-
         // checked on the token family, mirroring q133): the even docs
         // ingest with metadata {lang}, evolveMetadata widens the set
@@ -4886,8 +4764,6 @@ object Queries {
           tagged.filter(pmod(col("doc_id"), lit(2)) === 1)
             .withColumn("src", lit("crawl2")),
           "doc_id", "text", dir.toString, 1L, metaCols = Seq("lang", "src"))
-        java.nio.file.Files.write(marker.toPath, (srcFp + "\n").getBytes("UTF-8"))
-        ()
       }
       graft.operators.TokenIndex.bm25IndexedFiltered(s, dir.toString,
           Seq("dup", "join", "scan"), col("lang") === "en", 1.2, 0.75)
@@ -4932,11 +4808,6 @@ object Queries {
       val VI = graft.operators.VectorIndex
       val emb = Tables.embeddings(s, d)
         .where(col("embedding").isNotNull && size(col("embedding")) > 0)
-      val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_q133_${Integer.toHexString(d.hashCode)}")
-      val marker = new java.io.File(dir, "_SRC_FP")
-      val srcFp = fixtureFingerprint(d, "embeddings.parquet") +
-        "|vecindex-meta-v2|f32|k=sqrt|plant5|region|evolved-tier"
       val off = Tables.embeddings(s, d)
         .agg(coalesce(max(col("vec_id")), lit(0L)) + 1L).head().getLong(0)
       val copies = emb.filter(pmod(col("vec_id"), lit(5)) === 0)
@@ -4946,11 +4817,8 @@ object Queries {
       val corpus = emb
         .select(col("vec_id"), col("embedding"), lit("base").as("region"))
         .unionByName(copies)
-      val fresh = !marker.exists() ||
-        new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8")
-          .trim != srcFp
-      if (fresh) {
-        if (dir.exists()) graft.sources.Compaction.deleteLocalDir(dir)
+      val dir = cachedFixtureDir("q133", d, "embeddings.parquet",
+          "|vecindex-meta-v2|f32|k=sqrt|plant5|region|evolved-tier") { dir =>
         // the index lives an EVOLVED life (round 19 — VERDICT r18
         // item 3 driver-checked over this family): the base corpus
         // builds with metadata {region}, evolveMetadata widens the set
@@ -4969,8 +4837,6 @@ object Queries {
             .withColumn("tier", lit("v2")),
           "vec_id", "embedding", dir.toString, runId = 1L,
           metaCols = Seq("region", "tier"))
-        java.nio.file.Files.write(marker.toPath, (srcFp + "\n").getBytes("UTF-8"))
-        ()
       }
       val queries = emb.filter(pmod(col("vec_id"), lit(5)) === 0)
         .select((col("vec_id") + lit(2 * off)).as("vec_id"),
@@ -5003,19 +4869,9 @@ object Queries {
     * fixture fingerprint: a TokenIndex schema change must invalidate a
     * cached index just like a rebuilt fixture does. */
   private def cachedTokenIndex(s: SparkSession, d: String): String = {
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_q109_${Integer.toHexString(d.hashCode)}")
-    val marker = new java.io.File(dir, "_SRC_FP")
-    val srcFp = fixtureFingerprint(d, "documents.parquet") + "|tokenindex-v2"
-    val fresh = !marker.exists() ||
-      new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8")
-        .trim != srcFp
-    if (fresh) {
-      if (dir.exists()) graft.sources.Compaction.deleteLocalDir(dir)
+    val dir = cachedFixtureDir("q109", d, "documents.parquet", "|tokenindex-v2") { dir =>
       graft.operators.TokenIndex.append(
         Tables.documents(s, d), "doc_id", "text", dir.toString, 0L)
-      java.nio.file.Files.write(marker.toPath, (srcFp + "\n").getBytes("UTF-8"))
-      ()
     }
     dir.toString
   }
@@ -5074,6 +4930,31 @@ object Queries {
       java.nio.file.Files.write(f.toPath, (sl + "\n").getBytes("UTF-8"))
       sl
     }
+  }
+
+  /** A derived directory cached across invocations:
+    * `java.io.tmpdir/graft_<tag>_<hex(d.hashCode)>`, valid while its
+    * marker file holds `fixtureFingerprint(d, table) + suffix`.
+    * The suffix is a format/sizing-rule version, so changing it
+    * invalidates the cache just like a rebuilt fixture does. On a
+    * missing or different marker the dir is deleted, `build(dir)`
+    * recreates it, and only then is the marker written — a build that
+    * dies midway leaves no marker and is redone next time. */
+  private def cachedFixtureDir(tag: String, d: String, table: String,
+      suffix: String)(build: java.io.File => Unit): java.io.File = {
+    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
+      s"graft_${tag}_${Integer.toHexString(d.hashCode)}")
+    val marker = new java.io.File(dir, "_SRC_FP")
+    val srcFp = fixtureFingerprint(d, table) + suffix
+    val fresh = !marker.exists() ||
+      new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8")
+        .trim != srcFp
+    if (fresh) {
+      if (dir.exists()) graft.sources.Compaction.deleteLocalDir(dir)
+      build(dir)
+      java.nio.file.Files.write(marker.toPath, (srcFp + "\n").getBytes("UTF-8"))
+    }
+    dir
   }
 
   /** Content fingerprint of one fixture table (names+sizes+mtimes

@@ -232,20 +232,11 @@ object Similarity {
     * `struct(cosine, id)` picks the winner (ties → larger id — total and
     * deterministic). No join, no shuffle: assigning a 100 TB corpus to k
     * clusters is a map-only stage.
-    */
-  def assignCluster(emb: Column, centroids: Seq[Seq[Double]]): Column =
-    assignCluster(org.apache.spark.sql.SparkSession.getActiveSession, emb, centroids)
-
-  /** [[assignCluster]] resolved against an EXPLICIT session's function
-    * registry. The no-session overload above probes
-    * `SparkSession.getActiveSession`, which in a multi-session app can
-    * be a DIFFERENT session than the one that will analyze the returned
-    * Column — an active session with GraftExtensions plus a target
-    * session without it would emit the native call and fail analysis
-    * downstream (ADVICE r12). Callers that own the target DataFrame
-    * pass `df.sparkSession` here (every in-repo caller does); the
-    * 2-arg overload remains for single-session apps, where active ==
-    * target by construction.
+    *
+    * Resolved against an EXPLICIT session's function registry: the
+    * active session can, in a multi-session app, differ from the one
+    * that will analyze the returned Column, so callers pass the target
+    * DataFrame's `sparkSession`.
     */
   def assignCluster(session: Option[org.apache.spark.sql.SparkSession],
       emb: Column, centroids: Seq[Seq[Double]]): Column = {
@@ -270,140 +261,6 @@ object Similarity {
       val scored = transform(typedLit(centroids), (c, ci) =>
         struct(VectorFunctions.cosine(emb, c).as("cd"), ci.as("cid")))
       array_max(scored).getField("cid")
-    }
-  }
-
-  /** Group `cents` into at most `c` coarse cells by driver-side mini
-    * spherical k-means OVER THE CENTROIDS (k is thousands at most, so
-    * this is microseconds of pure-Scala work, no Spark jobs).
-    * Deterministic: farthest-point seeding from index 0, fixed
-    * iteration count, ties → lower index. Empty cells are dropped.
-    * Returns (coarse vectors, member ids per cell — ascending).
-    */
-  private[graft] def coarsenCentroids(cents: Array[Array[Double]], c: Int,
-      iters: Int = 8): (Array[Array[Double]], Array[Array[Int]]) = {
-    val k = cents.length
-    val dim = cents.head.length
-    def dot(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < dim) { s += a(i) * b(i); i += 1 }
-      s
-    }
-    def norm(a: Array[Double]): Double = math.sqrt(dot(a, a))
-    def cos(a: Array[Double], b: Array[Double]): Double = {
-      val na = norm(a); val nb = norm(b)
-      if (na > 0 && nb > 0) dot(a, b) / (na * nb) else 0.0
-    }
-    val cc = math.min(c, k)
-    // farthest-point seeds (max-min cosine distance, ties → lower index).
-    // Stop early when the max remaining min-distance is ~0: every
-    // unseeded centroid is then a (cosine-)duplicate of a chosen seed,
-    // and re-selecting one would mint a duplicate coarse cell that
-    // wastes an nprobe slot for zero recall (r13 ADVICE). The cutoff is
-    // 1e-12, not 0.0: 1−cos of an exact or scaled duplicate computes as
-    // positive float noise up to ~1e-15 in a quarter of random cases
-    // (verified numerically in the r14 review), so an exact-zero test
-    // would keep seeding duplicates. 1e-12 is still ~1e5× below any
-    // genuine angular separation a coarse cell could exploit. Fewer
-    // seeds than cc is fine — every consumer iterates coarse.length.
-    val seeds = scala.collection.mutable.ArrayBuffer(0)
-    val minDist = Array.tabulate(k)(i => 1.0 - cos(cents(i), cents(0)))
-    var exhausted = false
-    while (seeds.size < cc && !exhausted) {
-      var bestI = 0
-      var i = 1
-      while (i < k) { if (minDist(i) > minDist(bestI)) bestI = i; i += 1 }
-      if (minDist(bestI) <= 1e-12) exhausted = true
-      else {
-        seeds += bestI
-        var j = 0
-        while (j < k) {
-          val d = 1.0 - cos(cents(j), cents(bestI))
-          if (d < minDist(j)) minDist(j) = d
-          j += 1
-        }
-      }
-    }
-    var coarse = seeds.map(cents(_).clone()).toArray
-    val assign = new Array[Int](k)
-    def reassign(): Unit = {
-      var i = 0
-      while (i < k) {
-        var best = 0; var bestCos = cos(cents(i), coarse(0))
-        var g = 1
-        while (g < coarse.length) {
-          val s = cos(cents(i), coarse(g))
-          if (s > bestCos) { best = g; bestCos = s }
-          g += 1
-        }
-        assign(i) = best
-        i += 1
-      }
-    }
-    var it = 0
-    while (it < iters) {
-      reassign()
-      val next = Array.fill(coarse.length)(new Array[Double](dim))
-      val cnt = new Array[Int](coarse.length)
-      var i = 0
-      while (i < k) {
-        val g = assign(i); cnt(g) += 1
-        var j = 0
-        while (j < dim) { next(g)(j) += cents(i)(j); j += 1 }
-        i += 1
-      }
-      var g = 0
-      while (g < coarse.length) {
-        if (cnt(g) > 0) {
-          val nn = norm(next(g))
-          if (nn > 1e-12) {
-            var j = 0
-            while (j < dim) { next(g)(j) /= nn; j += 1 }
-            coarse(g) = next(g)
-          }
-        } // empty or degenerate cells keep their previous coarse vector
-        g += 1
-      }
-      it += 1
-    }
-    // the loop updates `coarse` AFTER computing `assign`, so re-derive
-    // the membership once against the FINAL coarse vectors — otherwise
-    // the returned (coarse, members) pair is internally inconsistent
-    // and a vector equal to a fine centroid can probe the right cell
-    // yet not find it there (review finding, round 13)
-    reassign()
-    val byCell = (0 until k).groupBy(assign).toSeq.sortBy(_._1)
-    (byCell.map { case (g, _) => coarse(g) }.toArray,
-      byCell.map(_._2.sorted.toArray).toArray)
-  }
-
-  /** [[assignCluster]]'s corpus-scale form: EXACT argmax below
-    * `exactMax` centroids, two-level IVF-style assignment
-    * ([[graft.plans.ArgmaxCosineTwoLevel]]: √k coarse cells, top-nprobe
-    * probed, exact within) above it. SemDeDup derives k ∝ n, so exact
-    * assignment is Θ(n²·dim/256) total flops — fine to k ≈ hundreds,
-    * quadratic death at corpus scale (the sf10 probe measured it);
-    * two-level is Θ(n·√k·dim). Above the knee the assignment is
-    * APPROXIMATE (the true argmax can sit outside the probed cells —
-    * recall already bounded by blocking in every consumer), but remains
-    * a pure deterministic function of the vector: identical vectors and
-    * exact scalar multiples still ALWAYS co-assign, which is the
-    * property semantic dedup's exact-duplicate guarantee and q94's
-    * oracle rest on. Built directly as an Expression (no function
-    * registry needed), so it resolves in any session.
-    */
-  def assignClusterApprox(session: Option[org.apache.spark.sql.SparkSession],
-      emb: Column, centroids: Seq[Seq[Double]],
-      nprobe: Int = 2, exactMax: Int = 256): Column = {
-    val k = centroids.size
-    if (k <= exactMax) assignCluster(session, emb, centroids)
-    else {
-      val arr = centroids.map(_.toArray).toArray
-      val (coarse, members) = coarsenCentroids(arr, math.ceil(math.sqrt(k)).toInt)
-      org.apache.spark.sql.GraftSqlBridge.column(
-        graft.plans.ArgmaxCosineTwoLevel(
-          org.apache.spark.sql.GraftSqlBridge.expression(emb),
-          coarse, members, arr, nprobe))
     }
   }
 
@@ -475,7 +332,7 @@ object Similarity {
     // SLOWER (6.2 → 9.2 s at 20k×312) — per-iteration cost here is
     // DRIVER-side planning/codegen of the fresh centroid-literal
     // assignment expression plus per-job overheads, not executor
-    // compute (the two-level assignment is Θ(n·√k) and tiny), so
+    // compute (the fused argmax assignment is tiny), so
     // extra tasks + a shuffle only add overhead.
     // narrow job: counting `present` needs the null/size predicate but
     // none of the hash/normalize projection work
@@ -549,7 +406,7 @@ object Similarity {
       var shift = Double.MaxValue
       while (iter < maxIter && shift > tol) {
         val stats = normed
-          .select(assignClusterApprox(Some(spark), col("__e"),
+          .select(assignCluster(Some(spark), col("__e"),
             cents.map(_.toSeq).toSeq).as("__c"), col("__e"))
           .groupBy(col("__c"))
           .agg(sumAgg(col("__e")).as("__s"), count(lit(1)).as("__n"))

@@ -278,8 +278,7 @@ object VectorIndex {
     * parity with `ivfCosineTopK` (ties → lower id) and the
     * co-assignment guarantee exact at ANY k. Add-time pays
     * Θ(n·k·log k) once per batch — the Faiss flat-coarse-quantizer
-    * contract. Callers with enormous k can pre-coarsen with
-    * [[Similarity.assignClusterApprox]] at that documented recall cost.
+    * contract.
     */
   def append(batch: DataFrame, idCol: String, embCol: String,
       indexDir: String, runId: Long, metaCols: Seq[String] = Nil): Unit =

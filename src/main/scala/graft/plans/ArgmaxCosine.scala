@@ -58,7 +58,7 @@ case class ArgmaxCosine(child: Expression, cents: Array[Array[Double]])
     child.dataType.asInstanceOf[ArrayType].elementType == FloatType
   private lazy val dim: Int = cents.head.length
   private lazy val flat: Array[Double] =
-    ArgmaxCosine.flattenCentroids(cents, dim, "graft_argmax_cos")
+    ArgmaxCosine.flattenCentroids(cents, dim)
   private lazy val norms: Array[Double] = ArgmaxCosine.centroidNorms(cents)
 
   override def eval(input: InternalRow): Any = {
@@ -109,20 +109,16 @@ object ArgmaxCosine {
 
   /** (score a, idx a) strictly better than (score b, idx b) under the
     * argmax-cosine ordering (array_max's struct ordering): NaN outranks
-    * every double, ties → higher index. THE single definition — the
-    * in-order scan below and [[ArgmaxCosineTwoLevel]]'s out-of-order
-    * probe/fine stages all decide through it, so the tie rule cannot
-    * silently diverge between the exact and two-level paths.
+    * every double, ties → higher index.
     */
-  private[plans] def better(a: Double, ia: Int, b: Double, ib: Int): Boolean =
+  private def better(a: Double, ia: Int, b: Double, ib: Int): Boolean =
     if (java.lang.Double.isNaN(a)) !java.lang.Double.isNaN(b) || ia > ib
     else if (java.lang.Double.isNaN(b)) false
     else a > b || (a == b && ia > ib)
 
-  /** k×dim row-major centroid matrix (shared builder). */
-  private[plans] def flattenCentroids(m: Array[Array[Double]], dim: Int,
-      who: String): Array[Double] = {
-    require(m.forall(_.length == dim), s"$who: centroids must share one dimension")
+  /** k×dim row-major centroid matrix. */
+  private def flattenCentroids(m: Array[Array[Double]], dim: Int): Array[Double] = {
+    require(m.forall(_.length == dim), "graft_argmax_cos: centroids must share one dimension")
     val out = new Array[Double](m.length * dim)
     var c = 0
     while (c < m.length) { System.arraycopy(m(c), 0, out, c * dim, dim); c += 1 }
@@ -130,9 +126,9 @@ object ArgmaxCosine {
   }
 
   /** Per-centroid L2 norms, accumulated left-to-right like
-    * CosineSimilarity computes them (shared builder).
+    * CosineSimilarity computes them.
     */
-  private[plans] def centroidNorms(m: Array[Array[Double]]): Array[Double] =
+  private def centroidNorms(m: Array[Array[Double]]): Array[Double] =
     m.map { v =>
       var s = 0.0; var i = 0
       while (i < v.length) { s += v(i) * v(i); i += 1 }

@@ -39,7 +39,7 @@ class BucketingSpec extends SparkSpec {
     }
   }
 
-  test("compaction rewrites fragmented dirs, preserves data, no-ops when within budget") {
+  test("compaction rewrites fragmented dirs into one file, preserves data") {
     import spark.implicits._
     import graft.sources.Compaction
     val dir = java.nio.file.Files.createTempDirectory("compact").toString + "/t"

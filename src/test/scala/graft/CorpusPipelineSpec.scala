@@ -370,7 +370,7 @@ class CorpusPipelineSpec extends SparkSpec {
     assert(d3.size == 200, "k <= positive-weight rows → exactly k")
   }
 
-  test("adaptive quality filter: per-stratum discrete-p25 cutoff, ties kept, both modes") {
+  test("adaptive quality filter: per-stratum discrete-p25 cutoff, ties kept, partition-invariant") {
     // stratum "a": scores 1..8 → target row ceil(0.25*8)=2 → thr=2, keeps 2..8
     // stratum "b": scores 100x then 200 over ties → per-stratum cutoffs independent
     val a = (1 to 8).map(i => (i.toLong, "a", i.toLong))

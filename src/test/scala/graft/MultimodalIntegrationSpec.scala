@@ -214,7 +214,7 @@ class MultimodalIntegrationSpec extends SparkSpec {
       s"a first-frame-trimmed re-encode must still flag to its source: $res3")
   }
 
-  test("degenerate frame class is wider than flat: gradients hash to 0; the dial restores them") {
+  test("degenerate frame class is wider than flat: gradients hash to 0 and never pair") {
     import graft.multimodal.AvWriter
     // canonical = unsigned-min over 8 orientations, so ANY frame with a
     // monotone orientation is in the zero class — a horizontal gradient

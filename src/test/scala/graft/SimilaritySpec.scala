@@ -193,7 +193,7 @@ class SimilaritySpec extends SparkSpec {
       assert(math.abs(math.sqrt(c.map(x => x * x).sum) - 1.0) < 1e-9)
     }
     val assigned = data.withColumn("c",
-        Similarity.assignCluster(col("embedding"), cents.map(_.toSeq).toSeq))
+        Similarity.assignCluster(Some(spark), col("embedding"), cents.map(_.toSeq).toSeq))
       .select(col("vec_id"), col("c")).as[(Long, Int)].collect().toMap
     // each planted bundle lands in ONE cluster, and the three differ
     val groups = Seq(0L until 20L, 100L until 120L, 200L until 220L)
@@ -216,7 +216,7 @@ class SimilaritySpec extends SparkSpec {
     val cents = Similarity.kmeansCentroids(data, "vec_id", "embedding",
       k = 3, maxIter = 10, maxTrainRows = 30)
     val assigned = data.withColumn("c",
-        Similarity.assignCluster(col("embedding"), cents.map(_.toSeq).toSeq))
+        Similarity.assignCluster(Some(spark), col("embedding"), cents.map(_.toSeq).toSeq))
       .select(col("vec_id"), col("c")).as[(Long, Int)].collect().toMap
     val groups = Seq(0L until 20L, 100L until 120L, 200L until 220L)
       .map(r => r.map(assigned).toSet)
@@ -255,7 +255,7 @@ class SimilaritySpec extends SparkSpec {
     assert(cents.length == 5, "empty clusters keep their previous centroid")
   }
 
-  test("two-level assignment: near-exact on clustered data, co-assignment, degenerate edges") {
+  test("exact assignment above 256 centroids: co-assignment, degenerate edges") {
     val rnd = new scala.util.Random(913L)
     val dim = 16
     def unit(v: Array[Double]): Seq[Double] = {
@@ -268,26 +268,17 @@ class SimilaritySpec extends SparkSpec {
       val a = anchors(i % 20)
       unit(a.toArray.zip(Array.fill(dim)(rnd.nextGaussian() * 0.08)).map { case (x, e) => x + e })
     }
-    assert(cents.size > 256, "must cross the two-level knee")
-    // vectors near random anchors (tighter noise than the centroid spread)
-    val vecs = (0 until 400).map { i =>
+    assert(cents.size > 256, "fixture must exceed 256 centroids")
+    // a vector near a random anchor (tighter noise than the centroid spread)
+    val v = {
       val a = anchors(rnd.nextInt(20))
       unit(a.toArray.zip(Array.fill(dim)(rnd.nextGaussian() * 0.05)).map { case (x, e) => x + e })
     }
-    val df = vecs.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("id", "e")
-    val got = df.select(col("id"),
-        Similarity.assignCluster(Some(spark), col("e"), cents).as("exact"),
-        Similarity.assignClusterApprox(Some(spark), col("e"), cents).as("approx"))
-      .collect().map(r => (r.getInt(1), r.getInt(2)))
-    val agree = got.count { case (a, b) => a == b }
-    assert(agree >= (got.length * 0.95).toInt,
-      s"two-level must agree with exact argmax on clustered data: $agree/${got.length}")
-
     // exact scalar multiples co-assign (the q94 oracle property), and the
     // assignment is a pure function (identical vectors agree trivially)
-    val fdf = Seq((1L, vecs.head.map(_.toFloat)), (2L, vecs.head.map(x => (x * 2).toFloat)))
+    val fdf = Seq((1L, v.map(_.toFloat)), (2L, v.map(x => (x * 2).toFloat)))
       .toDF("id", "e")
-    val co = fdf.select(Similarity.assignClusterApprox(Some(spark), col("e"), cents))
+    val co = fdf.select(Similarity.assignCluster(Some(spark), col("e"), cents))
       .as[Int].collect()
     assert(co(0) == co(1), s"x2 copy must co-assign: ${co.toSeq}")
 
@@ -298,52 +289,9 @@ class SimilaritySpec extends SparkSpec {
       (3L, Option(Seq.fill(dim)(0.0))),
       (4L, Option(Seq(1.0, 2.0)))) // dim mismatch: all 300 norms positive → k-1
       .toDF("id", "e")
-    val degs = bad.select(Similarity.assignClusterApprox(Some(spark), col("e"), cents))
+    val degs = bad.select(Similarity.assignCluster(Some(spark), col("e"), cents))
       .as[Int].collect().toSet
     assert(degs == Set(cents.size - 1), s"degenerates must hit k-1: $degs")
-  }
-
-  test("coarsenCentroids: cells partition the centroid ids; none empty") {
-    val rnd = new scala.util.Random(7L)
-    val cents = Array.fill(57)(Array.fill(8)(rnd.nextGaussian()))
-    val (coarse, members) = Similarity.coarsenCentroids(cents, 8)
-    assert(coarse.length == members.length)
-    assert(members.forall(_.nonEmpty))
-    assert(members.flatten.sorted.toSeq == (0 until 57))
-    members.foreach(m => assert(m.sorted.toSeq == m.toSeq, "members ascending"))
-    // self-consistency: each fine centroid lives in the cell its OWN
-    // argmax against the RETURNED coarse vectors selects (first-max on
-    // ties, coarsenCentroids' rule) — the returned pair must reflect
-    // the final coarse vectors, not the pre-update assignment
-    def cos(a: Array[Double], b: Array[Double]): Double = {
-      val d = a.zip(b).map { case (x, y) => x * y }.sum
-      val na = math.sqrt(a.map(x => x * x).sum); val nb = math.sqrt(b.map(x => x * x).sum)
-      if (na > 0 && nb > 0) d / (na * nb) else 0.0
-    }
-    cents.zipWithIndex.foreach { case (c, i) =>
-      val own = coarse.indices.maxBy(g => (cos(c, coarse(g)), -g))
-      assert(members(own).contains(i),
-        s"fine centroid $i must be a member of its best coarse cell $own")
-    }
-  }
-
-  test("coarsenCentroids: duplicate fine centroids never mint duplicate coarse cells") {
-    // 3 distinct directions, each duplicated many times (plus exact
-    // scalar multiples — cosine-identical): farthest-point seeding must
-    // stop once every unseeded centroid is distance-0 from a seed,
-    // instead of re-picking a duplicate and wasting nprobe slots
-    val dirs = Array(Array(1.0, 0.0, 0.0), Array(0.0, 1.0, 0.0), Array(0.0, 0.0, 1.0))
-    val cents = Array.tabulate(30)(i => dirs(i % 3).map(_ * (1.0 + (i / 3))))
-    val (coarse, members) = Similarity.coarsenCentroids(cents, 8)
-    assert(coarse.length == 3, s"3 distinct directions -> 3 cells, got ${coarse.length}")
-    assert(members.flatten.sorted.toSeq == (0 until 30))
-    // no two coarse cells may be cosine-duplicates of each other
-    def cos(a: Array[Double], b: Array[Double]): Double = {
-      val d = a.zip(b).map { case (x, y) => x * y }.sum
-      d / (math.sqrt(a.map(x => x * x).sum) * math.sqrt(b.map(x => x * x).sum))
-    }
-    for (i <- coarse.indices; j <- coarse.indices if i < j)
-      assert(cos(coarse(i), coarse(j)) < 0.999, s"cells $i,$j are duplicates")
   }
 
   test("semanticDeduplicate drops scaled copies, keeps distinct vectors; keep-best honors score") {
@@ -419,7 +367,7 @@ class SimilaritySpec extends SparkSpec {
     // assignment: a pure projection — the corpus is never joined against
     // the model (the centroid list rides as a literal)
     val assigned = data.withColumn("c",
-      Similarity.assignCluster(col("embedding"), cents.map(_.toSeq).toSeq))
+      Similarity.assignCluster(Some(spark), col("embedding"), cents.map(_.toSeq).toSeq))
     val aPlan = assigned.queryExecution.executedPlan.toString
     assert(!aPlan.contains("Join"), s"assignment must not join:\n$aPlan")
     // pair stage: equi-join on the learned block key only

@@ -236,12 +236,12 @@ class VectorExpressionsSpec extends SparkSpec {
     val cents = cents0 ++ Seq(cents0.head) // index 7 duplicates index 0
     val diffs = emb.select(
       argmaxHof(col("embedding"), cents).as("hof"),
-      Similarity.assignCluster(col("embedding"), cents).as("nat"))
+      Similarity.assignCluster(Some(spark), col("embedding"), cents).as("nat"))
       .filter(col("hof") =!= col("nat")).count()
     assert(diffs == 0)
     // the planted duplicate: every row whose best match is centroid 0
     // must resolve to the HIGHER duplicate index (7) in both forms
-    val zeros = emb.select(Similarity.assignCluster(col("embedding"), cents).as("c"))
+    val zeros = emb.select(Similarity.assignCluster(Some(spark), col("embedding"), cents).as("c"))
       .filter(col("c") === 0).count()
     assert(zeros == 0, "exact ties must resolve to the higher index")
   }
@@ -259,7 +259,7 @@ class VectorExpressionsSpec extends SparkSpec {
     val df = rows.toDF("label", "e")
     val got = df.select(col("label"),
       argmaxHof(col("e"), cents).as("hof"),
-      Similarity.assignCluster(col("e"), cents).as("nat"))
+      Similarity.assignCluster(Some(spark), col("e"), cents).as("nat"))
       .as[(String, Integer, Integer)].collect()
     got.foreach { case (label, hof, nat) =>
       assert(hof == nat, s"$label: hof $hof vs native $nat")
@@ -268,7 +268,7 @@ class VectorExpressionsSpec extends SparkSpec {
     val nullElem = Seq(Seq[java.lang.Float](1.0f, null)).toDF("e")
     val ne = nullElem.select(
       argmaxHof(col("e"), cents).as("hof"),
-      Similarity.assignCluster(col("e"), cents).as("nat"))
+      Similarity.assignCluster(Some(spark), col("e"), cents).as("nat"))
       .as[(Integer, Integer)].collect()(0)
     assert(ne._1 == ne._2, s"null element: $ne")
     // NaN-NORM centroid under a length-mismatched input: the HOF scores
@@ -279,7 +279,7 @@ class VectorExpressionsSpec extends SparkSpec {
     val mm = Seq(Seq(1.0f, 2.0f, 3.0f)).toDF("e")
     val nm = mm.select(
       argmaxHof(col("e"), nanCents).as("hof"),
-      Similarity.assignCluster(col("e"), nanCents).as("nat"))
+      Similarity.assignCluster(Some(spark), col("e"), nanCents).as("nat"))
       .as[(Integer, Integer)].collect()(0)
     assert(nm._1 == nm._2 && nm._2 == 0, s"NaN-norm centroid on mismatch: $nm")
   }
@@ -505,11 +505,12 @@ class VectorExpressionsSpec extends SparkSpec {
           AND am IS NOT NULL AND sm IS NOT NULL AND nf IS NOT NULL AND he IS NOT NULL
       """).as[Long].head()
       assert(n == 1000)
-      // the bridge-constructed (unregistered) kernels ride the same pass
+      // the bridge-constructed (unregistered) l2Normalize and the
+      // Column-API assignCluster ride the same pass
       val df2 = (0 until 1000).map(i =>
         (Seq(0.1 * i, 0.5, -0.25, 1.0), i)).toDF("vec", "i")
       val n2 = df2.select(VF.l2Normalize(col("vec")).as("l2"),
-          Similarity.assignClusterApprox(Some(spark), col("vec"),
+          Similarity.assignCluster(Some(spark), col("vec"),
             Seq(Seq(1.0, 0.0, 0.0, 0.0), Seq(0.0, 1.0, 0.0, 0.0))).as("cl"))
         .filter(col("l2").isNotNull && col("cl").isNotNull).count()
       assert(n2 == 1000)
