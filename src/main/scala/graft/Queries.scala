@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 import graft.functions.{TextFunctions => TF, VectorFunctions => VF, HashFunctions => HF}
 import graft.operators.{Dedup, Relational, Similarity}
+import graft.sources.ParquetRead
 
 /** The engine's declared query surface (SURVEY.md §2): each entry is a
   * Spark implementation paired (where SQL-expressible) with ANSI SQL the
@@ -3948,7 +3949,7 @@ object Queries {
       // arithmetic alone, no pixel ever touched by the oracle.
       // Distances themselves are codec jitter (0..2) and stay out of
       // the output; the PAIR SET is the contract.
-      Dedup.imageNearDuplicates(s.read.parquet(cachedImageCorpus(s, d)),
+      Dedup.imageNearDuplicates(ParquetRead(s, cachedImageCorpus(s, d)),
           "img_id", "content", chunks = 8, maxHamming = 5)
         .select(col("id_a"), col("id_b"))
         .orderBy(col("id_a"), col("id_b"))
@@ -4408,7 +4409,7 @@ object Queries {
         .select(col(idName), gen(col("__seed"), col("__v")).as("content"))
         .write.mode("overwrite").parquet(s"$dir/clips")
     }
-    s.read.parquet(s"$dir/clips")
+    ParquetRead(s, s"$dir/clips")
   }
 
   private def q137Corpus(s: SparkSession, d: String): DataFrame =
@@ -4610,7 +4611,7 @@ object Queries {
             IF.fixtureImage(col("__seed"), col("__v")).as("content"))
           .write.mode("overwrite").parquet(s"$imgDir/images")
       }
-      val imgs = s.read.parquet(s"$imgDir/images")
+      val imgs = ParquetRead(s, s"$imgDir/images")
       val state = Dedup.imageSignatures(
         imgs.filter(col("role") === "state"), "img_id", "content")
       Dedup.imageNearDuplicatesVsState(
@@ -4670,7 +4671,7 @@ object Queries {
       // base id set — but the hash check pins the whole composition:
       // a missed pair leaks a disguised copy into the survivors, a
       // mislabeled component drops or swaps a base.
-      val imgs = s.read.parquet(cachedImageCorpus(s, d))
+      val imgs = ParquetRead(s, cachedImageCorpus(s, d))
       val pairs = Dedup.imageNearDuplicates(imgs, "img_id", "content",
         chunks = 8, maxHamming = 5)
       Dedup.keepOnePerCluster(imgs, "img_id", pairs)
@@ -4715,7 +4716,7 @@ object Queries {
             IF.fixtureImage(col("__seed"), col("__v")).as("content"))
           .write.mode("overwrite").parquet(s"$imgDir/images")
       }
-      Dedup.imageNearDuplicates(s.read.parquet(s"$imgDir/images"),
+      Dedup.imageNearDuplicates(ParquetRead(s, s"$imgDir/images"),
           "img_id", "content", chunks = 8, maxHamming = 5,
           orientationRobust = true)
         .select(col("id_a"), col("id_b"))

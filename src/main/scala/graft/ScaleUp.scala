@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.ParquetRead
 
 /** Synthetic scale-up generator: replicate an SF directory `factor`×
   * with FOREIGN-KEY-CONSISTENT key shifts, so the same queries run
@@ -191,10 +192,10 @@ object ScaleUp {
 
     def write(df: DataFrame, name: String): Unit = {
       df.drop("__r").write.mode("overwrite").parquet(s"$outDir/$name.parquet")
-      println(s"[scaleup] $name: ${spark.read.parquet(s"$outDir/$name.parquet").count()} rows")
+      println(s"[scaleup] $name: ${ParquetRead(spark, s"$outDir/$name.parquet").count()} rows")
     }
 
-    def src(name: String): DataFrame = spark.read.parquet(s"$srcDir/$name.parquet")
+    def src(name: String): DataFrame = ParquetRead(spark, s"$srcDir/$name.parquet")
 
     // fixed-cardinality dims: copy
     Seq("region", "nation").foreach(t => write(src(t), t))

@@ -5,7 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** Loaders for the driver-generated parquet fixtures (TESTDATA.md).
   *
-  * Every loader returns the table with its on-disk schema; `events`
+  * Every loader returns the table with its on-disk schema, read from the
+  * first footer on the driver ([[graft.sources.ParquetRead]]), so
+  * loading a table starts no Spark job; `events`
   * additionally normalizes its nanosecond timestamp column (stored as
   * TIMESTAMP(NANOS), which Spark reads as Long nanos under
   * `nanosAsLong`) into a proper TimestampType `ts` column so downstream
@@ -13,7 +15,7 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    graft.sources.ParquetRead(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame   = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = table(s, d, "nation")

@@ -59,12 +59,14 @@ object Incremental {
   }
 
   /** Read state, tolerating a first run with no state yet
-    * (reference `test.py:109-111`).
+    * (reference `test.py:109-111`). "State exists" means the dir holds
+    * data files: a first [[appendState]] that died mid-write leaves only
+    * `_temporary/`, which reads as empty state instead of failing every
+    * later run on schema inference.
     */
   def readState(spark: SparkSession, stateDir: String, keys: Seq[String]): DataFrame = {
-    val path = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(path)) spark.read.parquet(stateDir)
+    val files = graft.sources.ParquetRead.dataFiles(spark, stateDir)
+    if (files.nonEmpty) graft.sources.ParquetRead(spark, stateDir, files, merge = false)
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       org.apache.spark.sql.types.StructType(

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.ParquetRead
 
 /** The lifecycle state [[TokenIndex]] and [[VectorIndex]] share, kept
   * once and parameterised by the index's key column (`corpus_id` or
@@ -51,11 +52,14 @@ private[graft] object IndexStore {
   def appendTombstones(ids: DataFrame, idCol: String, key: String,
       indexDir: String, postingsDir: String, asofRun: Long): Unit = {
     val spark = ids.sparkSession
+    // "postings exist" means data files: a crashed first append leaves
+    // a dir holding only `_temporary/`, which is no postings
+    lazy val files = ParquetRead.dataFiles(spark, postingsDir)
     val asof =
       if (asofRun != DeriveAsof) asofRun
-      else if (!exists(spark, postingsDir)) -1L
+      else if (files.isEmpty) -1L
       else {
-        val h = spark.read.parquet(postingsDir)
+        val h = ParquetRead(spark, postingsDir, files, merge = false)
           .agg(max(col("run_id"))).collect().head
         if (h.isNullAt(0)) -1L else h.getLong(0)
       }
@@ -124,13 +128,15 @@ private[graft] object IndexStore {
         s"metaCols name '$m' uses the internal working-column prefix __")
     }
 
-  /** The stored postings under their merged schema. A single footer's
-    * schema is whichever file Spark samples first, so on an index whose
+  /** The stored postings under the merge of every file's footer. One
+    * footer's schema is whichever file sorts first, so on an index whose
     * files carry mixed schemas a one-footer read would flip the
     * metadata checks arbitrarily; the merged schema sees every column
-    * any file carries. */
-  private def mergedPostings(spark: SparkSession, postingsDir: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(postingsDir)
+    * any file carries. The footers are read on the driver, so the check
+    * starts no job. */
+  private def mergedPostings(spark: SparkSession, postingsDir: String,
+      files: Seq[FileStatus]): DataFrame =
+    ParquetRead(spark, postingsDir, files, merge = true)
 
   /** The append-side metadata invariant: `metaCols` are valid names,
     * present in `batch`, and — once postings exist — exactly the stored
@@ -143,8 +149,9 @@ private[graft] object IndexStore {
     metaCols.foreach(m =>
       require(batch.columns.contains(m), s"metaCols column '$m' not in batch"))
     val spark = batch.sparkSession
-    if (exists(spark, postingsDir)) {
-      val stored = mergedPostings(spark, postingsDir).columns.filterNot(reserved).toSet
+    val files = ParquetRead.dataFiles(spark, postingsDir)
+    if (files.nonEmpty) {
+      val stored = mergedPostings(spark, postingsDir, files).columns.filterNot(reserved).toSet
       require(stored == metaCols.toSet,
         s"metaCols ${metaCols.toSet} must match the index's stored metadata " +
           s"columns $stored — every append carries the same metadata set")
@@ -163,9 +170,9 @@ private[graft] object IndexStore {
     require(defaults.nonEmpty, "evolveMetadata: no columns to add")
     requireMetaNames(defaults.map(_._1), reserved)
     graft.sources.Compaction.recoverCrashedSwap(spark, postingsDir)
-    require(exists(spark, postingsDir),
-      s"evolveMetadata: no index postings at $postingsDir")
-    val input = mergedPostings(spark, postingsDir)
+    val files = ParquetRead.dataFiles(spark, postingsDir)
+    require(files.nonEmpty, s"evolveMetadata: no index postings at $postingsDir")
+    val input = mergedPostings(spark, postingsDir, files)
     val stored = input.columns.filterNot(reserved).toSet
     defaults.foreach { case (m, _) =>
       require(!stored.contains(m),

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.sources.ParquetRead
 
 /** KMV (k-minimum-values) distinct-count sketches — the mergeable
   * estimator for the corpus-merge questions HLL cannot answer: HLL gives
@@ -130,7 +131,7 @@ object Sketches {
           s"$k-sketch read would be silently partial and kmvEstimate would report " +
           "it as an exact count. Read with k <= the smallest k any compaction used.")
     }
-    kmvStateSketch(spark.read.parquet(stateDir), k, maxRunId)
+    kmvStateSketch(ParquetRead(spark, stateDir), k, maxRunId)
   }
 
   private[graft] val KmvKSidecar = "__kmv_k"
@@ -207,7 +208,7 @@ object Sketches {
     // leaves a bound at least as tight as the data (reads refuse more
     // than strictly necessary — the safe direction), never a truncated
     // state with no bound
-    if (graft.sources.Compaction.dataFiles(spark, stateDir).nonEmpty)
+    if (ParquetRead.dataFiles(spark, stateDir).nonEmpty)
       writeKmvCompactK(spark, stateDir, effK)
     graft.sources.Compaction.rewriteParquetDir(spark, stateDir) { df =>
       val horizon = df.agg(max(col("run_id"))).collect().head
@@ -275,7 +276,7 @@ object Sketches {
     */
   def hllStateEstimates(spark: org.apache.spark.sql.SparkSession,
       stateDir: String, keyCols: Seq[String]): DataFrame =
-    hllEstimate(hllMergeStates(keyCols, spark.read.parquet(stateDir)))
+    hllEstimate(hllMergeStates(keyCols, ParquetRead(spark, stateDir)))
 
   /** Compact an append-only HLL state directory to ONE merged sketch
     * row per key, in place (checked two-rename swap + crash recovery,
@@ -435,7 +436,7 @@ object Sketches {
   /** [[mgStateSummary]] over a state directory. */
   def mgStateSummary(spark: org.apache.spark.sql.SparkSession,
       stateDir: String): DataFrame =
-    mgStateSummary(spark.read.parquet(stateDir))
+    mgStateSummary(ParquetRead(spark, stateDir))
 
   /** Compact an append-only MG state directory to ONE merged summary
     * run (`run_id = -1`), in place — same two-rename swap and crash
@@ -523,7 +524,7 @@ object Sketches {
   /** [[histStateQuantiles]] over a state directory. */
   def histStateQuantiles(spark: org.apache.spark.sql.SparkSession,
       stateDir: String, keyCols: Seq[String], qs: Seq[Double]): DataFrame =
-    histStateQuantiles(spark.read.parquet(stateDir), keyCols, qs)
+    histStateQuantiles(ParquetRead(spark, stateDir), keyCols, qs)
 
   /** Compact an append-only histogram state directory to one summed
     * run (`run_id = -1`), in place. The fold IS the read path's merge,
@@ -613,7 +614,7 @@ object Sketches {
   def kllStateQuantiles(spark: org.apache.spark.sql.SparkSession,
       stateDir: String, keyCols: Seq[String], qs: Seq[Double],
       k: Int): DataFrame =
-    kllStateQuantiles(spark.read.parquet(stateDir), keyCols, qs, k)
+    kllStateQuantiles(ParquetRead(spark, stateDir), keyCols, qs, k)
 
   /** Compact an append-only KLL state directory to one merged sketch
     * row per key (`run_id = -1`), in place. The fold IS the read

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFunctions => TF}
+import graft.sources.ParquetRead
 
 /** Persisted corpus-token index for REPEATED-probe containment search
   * and decontamination (VERDICT r13 item 4).
@@ -190,7 +191,7 @@ object TokenIndex {
     * redelivered rows, then runs sum (disjoint append-only batches).
     * Vocabulary-sized — orders of magnitude under the postings. */
   def dfTable(spark: SparkSession, indexDir: String): DataFrame =
-    spark.read.parquet(dfDir(indexDir))
+    ParquetRead(spark, dfDir(indexDir))
       .groupBy(col("tok"), col("run_id")).agg(max(col("df")).as("df"))
       .groupBy(col("tok")).agg(sum(col("df")).as("df"))
 
@@ -273,7 +274,7 @@ object TokenIndex {
       .select(col("probe_id"), explode(col("pre.tok")).as("tok"))
     // the metadata predicate applies ON the scan before the projection
     // drops its columns (PushedFilters); None folds through unchanged
-    val pScan = spark.read.parquet(postingsDir(indexDir))
+    val pScan = ParquetRead(spark, postingsDir(indexDir))
     val postings = metaPredicate.fold(pScan)(mp => pScan.where(mp))
       .select(col("tok"), col("corpus_id"), col("run_id"))
     val tomb = IndexStore.tombstones(spark, indexDir, "corpus_id")
@@ -288,7 +289,7 @@ object TokenIndex {
       // feeds the semi-filter AND the pair join; without the snapshot
       // the prefix/postings subtree would run twice
       .localCheckpoint(true)
-    val arrays = spark.read.parquet(arraysDir(indexDir))
+    val arrays = ParquetRead(spark, arraysDir(indexDir))
       .select(col("corpus_id"), col("toks"), col("run_id"))
     // candidate-doc semi-filter, broadcast so the corpus-sized arrays
     // scan never shuffles: only matched documents' arrays (candidate-
@@ -391,7 +392,7 @@ object TokenIndex {
       allowed: Option[DataFrame],
       metaPredicate: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     require(terms.nonEmpty, "query terms must be non-empty")
-    val st = spark.read.parquet(statsDir(indexDir))
+    val st = ParquetRead(spark, statsDir(indexDir))
       .groupBy(col("run_id"))
       .agg(max(col("n_docs")).as("n_docs"), max(col("sum_dl")).as("sum_dl"))
       .agg(sum(col("n_docs")).as("n_docs"),
@@ -406,7 +407,7 @@ object TokenIndex {
     // beside the term filter — before the projection drops the metadata
     // columns — so both reach parquet as PushedFilters; None folds
     // through and the allowed-DF/unfiltered plans are bit-unchanged
-    val scan0 = spark.read.parquet(postingsDir(indexDir))
+    val scan0 = ParquetRead(spark, postingsDir(indexDir))
     val p0 = IndexStore.dropMasked(
         metaPredicate.fold(scan0)(mp => scan0.where(mp))
           .filter(col("tok").isin(terms: _*))
@@ -450,9 +451,9 @@ object TokenIndex {
     // df/stats re-derive from the folded survivors below, so the BM25
     // collection stats heal here
     val tomb = IndexStore.tombstones(spark, indexDir, "corpus_id")
-    // mergeSchema on the postings rewrite: the ONE table whose files
-    // can carry different column sets across schema generations — a
-    // one-footer read here would permanently drop the unsampled files'
+    // merge on the postings rewrite: the ONE table whose files can
+    // carry different column sets across schema generations — a
+    // one-footer read here would permanently drop the other files'
     // metadata columns through the swap.
     // The postings and arrays folds are independent (disjoint dirs,
     // disjoint leases) — overlapped per guide §2.6; df/stats re-derive
@@ -462,7 +463,7 @@ object TokenIndex {
     var a: (Long, Long) = null
     graft.sources.Par.run(
       () => p = graft.sources.Compaction.rewriteParquetDir(spark,
-          postingsDir(indexDir), mergeSchema = true) { df =>
+          postingsDir(indexDir), merge = true) { df =>
         // metadata columns (append's metaCols — anything non-reserved)
         // survive the fold verbatim: they are part of the posting row
         val metaCols = df.columns.filterNot(ReservedPostingCols).toSeq
@@ -483,7 +484,7 @@ object TokenIndex {
     // df and stats re-derive from the FOLDED postings/arrays rather
     // than folding their own rows: the distinct above is the ground
     // truth, so this also heals any re-ingest drift
-    val folded = spark.read.parquet(postingsDir(indexDir))
+    val folded = ParquetRead(spark, postingsDir(indexDir))
     var d: (Long, Long) = null
     graft.sources.Par.run(
       () => d = graft.sources.Compaction.rewriteParquetDir(spark,
@@ -532,10 +533,10 @@ object TokenIndex {
       graft.sources.Lease.withLease(spark, indexDir) {
     val pDir = postingsDir(indexDir)
     IndexStore.evolvablePostings(spark, pDir, ReservedPostingCols, defaults)
-    // mergeSchema on the rewrite read too: the check saw the UNION
-    // schema, so the rewrite must carry it
+    // merge on the rewrite read too: the check saw the UNION schema,
+    // so the rewrite must carry it
     graft.sources.Compaction.rewriteParquetDir(spark, pDir,
-        mergeSchema = true) { df =>
+        merge = true) { df =>
       defaults.foldLeft(df) { case (acc, (m, v)) => acc.withColumn(m, lit(v)) }
     }
     ()

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions
+import graft.sources.ParquetRead
 
 /** Persisted IVF ANN index — [[TokenIndex]]'s pattern applied to the
   * embedding column: [[Similarity.ivfCosineTopK]] re-trains k-means and
@@ -84,7 +85,7 @@ object VectorIndex {
   /** The model's cell count — one tiny read of the k-row centroid
     * table (single file, written by coalesce(1)). */
   private[graft] def modelK(spark: SparkSession, indexDir: String): Int =
-    spark.read.parquet(centroidsDir(indexDir)).count().toInt
+    ParquetRead(spark, centroidsDir(indexDir)).count().toInt
   // SIBLING of centroids/ and postings/ (indexDir itself is never
   // swapped), so neither compact()'s two-rename nor a postings rewrite
   // can destroy it — the KMV __kmv_k sidecar lesson
@@ -125,7 +126,7 @@ object VectorIndex {
   private[graft] def loadCodebooks(spark: SparkSession,
       indexDir: String): Array[Array[Array[Double]]] = {
     import spark.implicits._
-    val rows = spark.read.parquet(pqCodebooksDir(indexDir))
+    val rows = ParquetRead(spark, pqCodebooksDir(indexDir))
       .select(col("sub"), col("code"), col("codeword"))
       .as[(Int, Int, Seq[Double])].collect()
     require(rows.nonEmpty, s"VectorIndex at $indexDir: empty pq_codebooks/")
@@ -320,7 +321,7 @@ object VectorIndex {
       "emb", centArr, nprobe = 1)
     val assigned = fmt match {
       case Pq => assigned0.join(
-        broadcast(spark.read.parquet(centroidsDir(indexDir))), "centroid_id")
+        broadcast(ParquetRead(spark, centroidsDir(indexDir))), "centroid_id")
       case _ => assigned0
     }
     val stored = fmt match {
@@ -353,7 +354,7 @@ object VectorIndex {
     // max() read absorbs the duplicate stats row (n is "rows observed
     // at stats time", ≥ batch size under redelivery — the mean is the
     // signal, n is context).
-    val centsB = broadcast(spark.read.parquet(centroidsDir(indexDir)))
+    val centsB = broadcast(ParquetRead(spark, centroidsDir(indexDir)))
     // cosine is scale-invariant, so sq8 codes score against the
     // centroid directly — no dequantization pass. PQ scores the codes
     // through PqCosine (centroid as the full-precision side); the
@@ -367,7 +368,7 @@ object VectorIndex {
         col("centroid"), col("emb"), col("centroid"), cbs)
       case F32 => VectorFunctions.cosineNative(col("emb"), col("centroid"))
     }
-    spark.read.parquet(postingsDir(indexDir))
+    ParquetRead(spark, postingsDir(indexDir))
       .where(col("run_id") === runId)
       .join(centsB, "centroid_id")
       .agg(count(lit(1)).as("n"),
@@ -454,7 +455,7 @@ object VectorIndex {
       throw new IllegalStateException(
         s"VectorIndex at $indexDir has no run_stats/ — the index predates " +
           "drift accounting (layout v5); re-build, or append a batch, to start it")
-    val stats = spark.read.parquet(runStatsDir(indexDir))
+    val stats = ParquetRead(spark, runStatsDir(indexDir))
       .groupBy(col("run_id"))
       // redelivered runs write identical stats rows; max is the
       // bit-deterministic pick
@@ -472,7 +473,7 @@ object VectorIndex {
 
   /** One broadcast row holding every (centroid_id, centroid). */
   private[graft] def centroidArray(spark: SparkSession, indexDir: String): DataFrame =
-    broadcast(spark.read.parquet(centroidsDir(indexDir))
+    broadcast(ParquetRead(spark, centroidsDir(indexDir))
       .agg(collect_list(struct(col("centroid_id"), col("centroid"))).as("__cents")))
 
   /** ONE read of the k-row centroid table serving BOTH probe-time
@@ -486,7 +487,7 @@ object VectorIndex {
     * round-trip is wall. Returns (centArr, k, local centroid rows). */
   private def centroidState(spark: SparkSession, indexDir: String)
       : (DataFrame, Int, DataFrame) = {
-    val rows = spark.read.parquet(centroidsDir(indexDir))
+    val rows = ParquetRead(spark, centroidsDir(indexDir))
       .select(col("centroid_id"), col("centroid")).collect()
     import scala.jdk.CollectionConverters._
     val schema = org.apache.spark.sql.types.StructType(Seq(
@@ -672,7 +673,7 @@ object VectorIndex {
     // columns, so simple comparisons reach parquet as PushedFilters and
     // compound ones still run scan-side; the unfiltered plan is
     // bit-unchanged (None folds through)
-    val scan = spark.read.parquet(postingsDir(indexDir))
+    val scan = ParquetRead(spark, postingsDir(indexDir))
     val postingsLive = metaPredicate.fold(scan)(p => scan.where(p))
       .where(col("cell_bucket").isin(buckets: _*) &&
         col("centroid_id").isin(cells: _*))
@@ -864,7 +865,7 @@ object VectorIndex {
   def maxProbeCandidates(spark: SparkSession, indexDir: String,
       nprobe: Int): Long = {
     require(nprobe >= 1, "nprobe must be at least 1")
-    val top = spark.read.parquet(postingsDir(indexDir))
+    val top = ParquetRead(spark, postingsDir(indexDir))
       .groupBy(col("centroid_id"))
       .agg(count_distinct(col("vec_id")).as("n"))
       .orderBy(col("n").desc).limit(nprobe)
@@ -1020,23 +1021,21 @@ object VectorIndex {
     * Hand-rolled rather than `rewriteParquetDir` because the postings
     * are PARTITIONED by cell bucket and must stay so through the fold —
     * the generic rewrite's round-robin repartition would flatten the
-    * layout and silently kill the probe path's partition pruning (and
-    * its non-recursive file listing would no-op on a partitioned dir
-    * anyway). Same crash-recovery preamble and checked two-rename swap,
-    * same quiesced single-writer contract. Returns
-    * (rowsBefore, rowsAfter); `(0, 0)` when the directory is absent.
+    * layout and silently kill the probe path's partition pruning. Same
+    * crash-recovery preamble and checked two-rename swap, same quiesced
+    * single-writer contract. Returns (rowsBefore, rowsAfter); `(0, 0)`
+    * when the directory holds no data files.
     */
   def compact(spark: SparkSession, indexDir: String): (Long, Long) =
       graft.sources.Lease.withLease(spark, indexDir) {
     val dir = postingsDir(indexDir)
     graft.sources.Compaction.recoverCrashedSwap(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return (0L, 0L)
-    // mergeSchema: the fold's metaCols derive from this read's columns
-    // — a one-footer read on a mixed-schema legacy index would drop
-    // the unsampled files' metadata through the swap
-    val input = spark.read.option("mergeSchema", "true").parquet(dir)
+    val files = ParquetRead.dataFiles(spark, dir)
+    if (files.isEmpty) return (0L, 0L)
+    // merge: the fold's metaCols derive from this read's columns — a
+    // one-footer read on a mixed-schema legacy index would drop the
+    // other files' metadata through the swap
+    val input = ParquetRead(spark, dir, files, merge = true)
     val h = input.agg(max(col("run_id"))).collect().head
     val horizon = if (h.isNullAt(0)) 0L else h.getLong(0)
     // tombstoned rows drop PHYSICALLY here (probes only mask them);

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{TextFunctions => TF}
 import graft.operators.Dedup
+import graft.sources.ParquetRead
 
 /** End-to-end training-data curation pipeline over a document corpus —
   * the composite the individual operators exist for:
@@ -330,11 +331,12 @@ object CorpusPipeline {
     val (curated0, commitState) =
       curateIncrementalStaged(docs, idCol, textCol, stateDir, cfg)
     val (curated, curatedPinned) = snapshotTracked(curated0)
-    val sigPath = new org.apache.hadoop.fs.Path(sigStateDir)
-    val fs = sigPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // a store holding no data files (never committed, or only a crashed
+    // first append's `_temporary/`) has no signatures to match against
+    val sigFiles = ParquetRead.dataFiles(spark, sigStateDir)
     val kept =
-      if (fs.exists(sigPath)) {
-        val sigs = spark.read.parquet(sigStateDir)
+      if (sigFiles.nonEmpty) {
+        val sigs = ParquetRead(spark, sigStateDir, sigFiles, merge = false)
         val (k, _) = snapshotTracked(
           Dedup.minHashNearDuplicatesVsState(curated, idCol, textCol, sigs,
             cfg.nearDupShingleSize, cfg.nearDupNumHashes, cfg.nearDupBands,
@@ -424,7 +426,7 @@ object CorpusPipeline {
   def writeRelease(df: DataFrame, dir: String, partCol: String,
       textCol: String): DataFrame = {
     df.write.mode("overwrite").partitionBy(partCol).parquet(dir)
-    val back = df.sparkSession.read.parquet(dir)
+    val back = ParquetRead(df.sparkSession, dir)
     val manifest = back
       .groupBy(col(partCol))
       .agg(count(lit(1)).as("n_docs"),

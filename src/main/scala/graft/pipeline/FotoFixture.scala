@@ -7,6 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.multimodal.ImageOps
+import graft.sources.ParquetRead
 
 /** Deterministic synthetic photo corpus for benching the reference's
   * LITERAL workload (`test.py`: forms export → unpivot → dedup →
@@ -96,8 +97,8 @@ object FotoFixture {
     * Returns the metadata row count (one action drives the image
     * write too, via writeOutputs). */
   def runPipeline(spark: SparkSession, corpusDir: String, outDir: String): Long = {
-    val wide = spark.read.parquet(s"$corpusDir/wide")
-    val blobs = spark.read.parquet(s"$corpusDir/blobs")
+    val wide = ParquetRead(spark, s"$corpusDir/wide")
+    val blobs = ParquetRead(spark, s"$corpusDir/blobs")
     val emptyState = spark.createDataFrame(
       java.util.Collections.emptyList[org.apache.spark.sql.Row](),
       org.apache.spark.sql.types.StructType(Seq(
@@ -110,7 +111,7 @@ object FotoFixture {
       .join(blobs, Seq("link_foto"))
     val processed = FotoPipeline.processImages(work, "content")
     FotoPipeline.writeOutputs(processed, s"$outDir/images", s"$outDir/metadata")
-    spark.read.parquet(s"$outDir/metadata").count()
+    ParquetRead(spark, s"$outDir/metadata").count()
   }
 
   /** SURVEY §5.2 golden contract over a pipeline run's output: every
@@ -122,7 +123,7 @@ object FotoFixture {
   def checkGolden(spark: SparkSession, outDir: String, maxDim: Int = 1024): (Long, Long) = {
     val outDims = udf((bytes: Array[Byte]) =>
       ImageOps.decodeDims(bytes).map { case (w, h) => Array(w, h) }.orNull)
-    val imgs = spark.read.parquet(s"$outDir/images")
+    val imgs = ParquetRead(spark, s"$outDir/images")
       .withColumn("img_id",
         regexp_extract(col("nama_file"), "img_(\\d+)\\.jpg", 1).cast("long"))
       .withColumn("od", outDims(col("compressed")))

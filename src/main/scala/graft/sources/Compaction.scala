@@ -55,16 +55,6 @@ object Compaction {
         java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
   }
 
-  /** Parquet data files under `dir` (non-recursive), with sizes. */
-  def dataFiles(spark: SparkSession, dir: String): Seq[(String, Long)] = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Seq.empty
-    fs.listStatus(p).toSeq
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map(s => (s.getPath.toString, s.getLen))
-  }
-
   /** Crash recovery preamble: a previous run that died between
     * rename(dir, old) and rename(tmp, dir) leaves the live directory
     * absent with every byte parked under `__compact_old` — restore it
@@ -115,7 +105,9 @@ object Compaction {
     * a 90%-dropped state lands in proportionally fewer
     * [[TargetFileBytes]] files. Returns
     * (rowsBefore, rowsAfter); `(0, 0)` without a write when the
-    * directory is absent or empty.
+    * directory holds no data files ([[ParquetRead.dataFiles]], listed
+    * once: the same listing sizes the output and feeds the schema
+    * read).
     *
     * Single-writer contract ENFORCED via [[Lease]] (fail-fast on a
     * concurrent writer, stale-takeover on a crashed one); reentrant, so
@@ -123,19 +115,19 @@ object Compaction {
     * this dir's own marker.
     */
   def rewriteParquetDir(spark: SparkSession, dir: String,
-      mergeSchema: Boolean = false)(
+      merge: Boolean = false)(
       transform: org.apache.spark.sql.DataFrame
         => org.apache.spark.sql.DataFrame): (Long, Long) =
       Lease.withLease(spark, dir) {
     recoverCrashedSwap(spark, dir)
-    val files = dataFiles(spark, dir)
+    val files = ParquetRead.dataFiles(spark, dir)
     if (files.isEmpty) return (0L, 0L)
-    // mergeSchema: tables whose files may legitimately differ in
-    // columns (an index's metadata-carrying postings written across
-    // schema generations) must rewrite the UNION schema — a one-footer
-    // read silently drops whichever columns the sampled file lacks,
-    // and the swap makes that loss permanent
-    val input = spark.read.option("mergeSchema", mergeSchema.toString).parquet(dir)
+    // merge: tables whose files may legitimately differ in columns (an
+    // index's metadata-carrying postings written across schema
+    // generations) must rewrite the UNION of every footer's schema — a
+    // one-footer read silently drops whichever columns the first file
+    // lacks, and the swap makes that loss permanent
+    val input = ParquetRead(spark, dir, files, merge)
     // persist: three actions follow (two counts + the write), all over
     // the transformed rows; the cache is released before the swap so no
     // live plan holds the OLD directory's file listing
@@ -145,7 +137,7 @@ object Compaction {
         val rowsBefore = input.count()
         val rowsAfter = out.count()
         val keepRatio = if (rowsBefore == 0) 1.0 else rowsAfter.toDouble / rowsBefore
-        val outBytes = (files.map(_._2).sum * keepRatio).toLong
+        val outBytes = (files.map(_.getLen).sum * keepRatio).toLong
         val wantFiles = math.max(1, math.ceil(outBytes.toDouble / TargetFileBytes).toInt)
         out.repartition(wantFiles)
           .write.mode("overwrite").parquet(dir + "__compact_tmp")

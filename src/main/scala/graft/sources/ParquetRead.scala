@@ -1,0 +1,68 @@
+package graft.sources
+
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
+
+/** The one reader of every parquet directory graft owns: fixtures,
+  * index tables, incremental and sketch state, pipeline outputs.
+  *
+  * `spark.read.parquet(dir)` infers the schema through
+  * `mergeSchemasInParallel`, which runs one Spark job per read even for
+  * a single footer. Here the schema comes from the footers on the
+  * driver and the read is `spark.read.schema(s).parquet(dir)`: no job
+  * before the caller's own actions. The footer conversion and merge
+  * rules stay Spark's ([[GraftParquetBridge]]), and the file choice is
+  * schema inference's: the first data file by path, or every data file
+  * when `merge`. Partition columns are still discovered from the
+  * directory names and appended last.
+  *
+  * No schema is cached: a footer read is cheap, and a cache would need
+  * invalidation on every index append. Not for a streaming file sink's
+  * output (`_spark_metadata/`), whose committed files are its log's,
+  * not the listing's.
+  */
+object ParquetRead {
+
+  /** Spark's hidden-path rule (`HadoopFSUtils.shouldFilterOutPathName`
+    * plus the file index's data-path check): `_`- and `.`-prefixed
+    * names are not data, except partition directories (`_x=1`), and
+    * neither is an in-flight `._COPYING_` upload. */
+  private def hidden(name: String): Boolean =
+    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")
+
+  /** The data files under `dir`, recursively through partition
+    * directories, sorted by path; empty when `dir` is missing or holds
+    * none (e.g. only `_temporary/` left by a crashed first write). A
+    * file path lists as itself. "A table exists" means this is
+    * non-empty. */
+  def dataFiles(spark: SparkSession, dir: String): Seq[FileStatus] = {
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def leaves(s: FileStatus): Seq[FileStatus] =
+      if (!s.isDirectory) Seq(s)
+      else fs.listStatus(s.getPath).toSeq
+        .filterNot(c => hidden(c.getPath.getName)).flatMap(leaves)
+    val top = try Some(fs.getFileStatus(root))
+      catch { case _: java.io.FileNotFoundException => None }
+    top.toSeq.flatMap(leaves).sortBy(_.getPath.toString)
+  }
+
+  /** `dir` with the schema of its first data file. */
+  def apply(spark: SparkSession, dir: String): DataFrame =
+    apply(spark, dir, dataFiles(spark, dir), merge = false)
+
+  /** `dir` with the schema of `files` (its [[dataFiles]], listed once by
+    * the caller): the first one's, or all of them merged when `merge` —
+    * for tables whose files may differ in columns, where one footer
+    * would silently drop whichever columns the others add. With no
+    * data files, Spark's own read raises its usual error
+    * (`PATH_NOT_FOUND`, `UNABLE_TO_INFER_SCHEMA`). */
+  def apply(spark: SparkSession, dir: String, files: Seq[FileStatus],
+      merge: Boolean): DataFrame =
+    GraftParquetBridge.schemaOf(spark, if (merge) files else files.take(1)) match {
+      case Some(schema) => spark.read.schema(schema).parquet(dir)
+      case None => spark.read.parquet(dir)
+    }
+}

@@ -45,10 +45,10 @@ class BucketingSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("compact").toString + "/t"
     val df = (1L to 10000L).map(i => (i, s"row$i")).toDF("id", "v")
     df.repartition(40).write.parquet(dir)
-    assert(Compaction.dataFiles(spark, dir).size == 40)
+    assert(graft.sources.ParquetRead.dataFiles(spark, dir).size == 40)
     val (before, after) = Compaction.rewriteParquetDir(spark, dir)(identity)
     assert(before == 10000L && after == 10000L, s"$before -> $after")
-    assert(Compaction.dataFiles(spark, dir).size == 1)
+    assert(graft.sources.ParquetRead.dataFiles(spark, dir).size == 1)
     // byte-identical contents after the rewrite
     val back = spark.read.parquet(dir).as[(Long, String)].collect().toSet
     assert(back == (1L to 10000L).map(i => (i, s"row$i")).toSet)
@@ -69,7 +69,7 @@ class BucketingSpec extends SparkSpec {
     // the rerun must restore the parked data and then compact it
     val (before, after) = Compaction.rewriteParquetDir(spark, dir)(identity)
     assert(before == 500L && after == 500L, s"$before -> $after")
-    assert(Compaction.dataFiles(spark, dir).size == 1)
+    assert(graft.sources.ParquetRead.dataFiles(spark, dir).size == 1)
     assert(!fs.exists(new Path(dir + "__compact_old")), "old dir must be cleaned up")
     val back = spark.read.parquet(dir).as[(Long, String)].collect().toSet
     assert(back == (1L to 500L).map(i => (i, s"row$i")).toSet)
