@@ -158,27 +158,31 @@ private[graft] object IndexStore {
     }
   }
 
-  /** The `evolveMetadata` preamble: validate the added columns, heal a
-    * crashed prior swap BEFORE the existence check (the postings may be
-    * parked whole under `__compact_old`), and refuse columns already
-    * stored — evolution only ADDS. Returns the merged-schema postings
-    * read, so the rewrite carries the same UNION schema the check saw
-    * (a one-footer read would drop the unsampled files' metadata
-    * through the swap). */
-  def evolvablePostings(spark: SparkSession, postingsDir: String,
-      reserved: Set[String], defaults: Seq[(String, Any)]): DataFrame = {
+  /** The one `evolveMetadata` rewrite of both indexes: every stored
+    * posting gains each new column as its literal default, in the
+    * index's row layout (`layout`), swapped into place by
+    * [[graft.sources.Compaction.rewriteParquetDir]]. The added names
+    * are validated up front; the refusal of columns already stored
+    * (evolution only ADDS) runs inside the rewrite, so it sees the
+    * postings after crash recovery (they may be parked whole under the
+    * swap's old dir) and under the union of every file's schema. An
+    * index with no postings is refused after the rewrite found none.
+    * The caller holds the index's lease. */
+  def evolvePostings(spark: SparkSession, postingsDir: String,
+      reserved: Set[String], defaults: Seq[(String, Any)])(
+      layout: DataFrame => DataFrame): Unit = {
     require(defaults.nonEmpty, "evolveMetadata: no columns to add")
     requireMetaNames(defaults.map(_._1), reserved)
-    graft.sources.Compaction.recoverCrashedSwap(spark, postingsDir)
-    val files = ParquetRead.dataFiles(spark, postingsDir)
-    require(files.nonEmpty, s"evolveMetadata: no index postings at $postingsDir")
-    val input = mergedPostings(spark, postingsDir, files)
-    val stored = input.columns.filterNot(reserved).toSet
-    defaults.foreach { case (m, _) =>
-      require(!stored.contains(m),
-        s"evolveMetadata: column '$m' is already stored metadata " +
-          s"($stored) — evolution only ADDS columns")
+    graft.sources.Compaction.rewriteParquetDir(spark, postingsDir) { input =>
+      val stored = input.columns.filterNot(reserved).toSet
+      defaults.foreach { case (m, _) =>
+        require(!stored.contains(m),
+          s"evolveMetadata: column '$m' is already stored metadata " +
+            s"($stored) — evolution only ADDS columns")
+      }
+      layout(defaults.foldLeft(input) { case (acc, (m, v)) => acc.withColumn(m, lit(v)) })
     }
-    input
+    require(ParquetRead.dataFiles(spark, postingsDir).nonEmpty,
+      s"evolveMetadata: no index postings at $postingsDir")
   }
 }

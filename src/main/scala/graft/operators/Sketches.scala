@@ -191,26 +191,26 @@ object Sketches {
     * state compactions.
     */
   def compactKmvState(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String, k: Int): (Long, Long) = {
-    // recover a crashed swap FIRST: after a mid-swap crash the live dir
-    // is empty (data parked in __compact_old), and deciding the sidecar
-    // from that empty listing would skip the bound update while the
-    // rewrite below restores-and-truncates the data anyway — the rerun
-    // would reopen the silent-undercount hole (r14 review 2)
-    graft.sources.Compaction.recoverCrashedSwap(spark, stateDir)
-    // the binding bound across compactions is the SMALLEST k ever used
-    // (a later, larger-k compaction cannot restore hashes an earlier one
-    // dropped). The sidecar is a SIBLING file (see kmvKPath) so the
-    // directory swap cannot destroy it; same quiesced single-writer
-    // window as the rewrite itself.
-    val effK = readKmvCompactK(spark, stateDir).fold(k)(math.min(_, k))
-    // record the bound BEFORE truncating: a crash mid-rewrite then
-    // leaves a bound at least as tight as the data (reads refuse more
-    // than strictly necessary — the safe direction), never a truncated
-    // state with no bound
-    if (ParquetRead.dataFiles(spark, stateDir).nonEmpty)
-      writeKmvCompactK(spark, stateDir, effK)
+      stateDir: String, k: Int): (Long, Long) =
+      graft.sources.Lease.withLease(spark, stateDir) {
+    // the bound decision runs inside the rewrite: after its crash
+    // recovery (a mid-swap crash leaves the live dir empty, its data
+    // parked aside, and deciding the sidecar from that empty listing
+    // would skip the bound update while the rewrite restores-and-
+    // truncates the data anyway — the silent-undercount hole, r14
+    // review 2), only when there is data, and under the lease held
+    // around the whole call, so a refused writer changes nothing
     graft.sources.Compaction.rewriteParquetDir(spark, stateDir) { df =>
+      // the binding bound across compactions is the SMALLEST k ever
+      // used (a later, larger-k compaction cannot restore hashes an
+      // earlier one dropped). The sidecar is a SIBLING file (see
+      // kmvKPath) so the directory swap cannot destroy it. Recorded
+      // BEFORE truncating: a crash mid-rewrite then leaves a bound at
+      // least as tight as the data (reads refuse more than strictly
+      // necessary — the safe direction), never a truncated state with
+      // no bound
+      writeKmvCompactK(spark, stateDir,
+        readKmvCompactK(spark, stateDir).fold(k)(math.min(_, k)))
       val horizon = df.agg(max(col("run_id"))).collect().head
       val h = if (horizon.isNullAt(0)) 0L else horizon.getLong(0)
       df.select(col("h")).distinct().orderBy(col("h")).limit(k)

@@ -150,41 +150,32 @@ object TokenIndex {
         metaCols.map(col): _*)
       .filter(size(col("__raw")) > 0)
       .localCheckpoint(true) // the ONE tokenize pass; feeds all four writes
+    // arrays land strictly BEFORE postings — a lock-free probe racing
+    // this append then sees a candidate's array whenever it sees its
+    // postings
+    toked.select(col("corpus_id"), array_distinct(col("__raw")).as("toks"),
+        lit(runId).as("run_id"))
+      .write.mode("append").parquet(arraysDir(indexDir))
     // postings carry per-doc term frequency and (denormalized) doc
     // length, so BM25 probes need NO join back to the corpus at all
-    var postsTf: DataFrame = null
-    // stage 1, overlapped (guide §2.6 — the four state writes of one
-    // append have no data dependency beyond the shared snapshots, and
-    // on small deltas the sequential per-job round-trips, not compute,
-    // are the append's wall): the arrays write runs beside the postings
-    // tf aggregation's checkpoint. Arrays still land strictly BEFORE
-    // postings — a lock-free probe racing this append then sees a
-    // candidate's array whenever it sees its postings.
-    graft.sources.Par.run(
-      () => toked.select(col("corpus_id"), array_distinct(col("__raw")).as("toks"),
-          lit(runId).as("run_id"))
-        .write.mode("append").parquet(arraysDir(indexDir)),
-      () => postsTf = toked
-        .select(col("corpus_id") +: size(col("__raw")).cast("long").as("dl") +:
-          explode(col("__raw")).as("tok") +: metaCols.map(col): _*)
-        .groupBy(col("corpus_id"), col("tok"))
-        // dl and metadata are constant per doc, first() is exact
-        .agg(count(lit(1)).as("tf"),
-          first(col("dl")).as("dl") +: metaCols.map(m => first(col(m)).as(m)): _*)
-        .localCheckpoint(true)) // feeds postings AND df
-    // stage 2, overlapped: postings, df and stats derive from already-
-    // materialized snapshots and write to three disjoint directories
-    graft.sources.Par.run(
-      () => postsTf.select(Seq(col("tok"), col("corpus_id"), col("tf"), col("dl"),
-          lit(runId).as("run_id")) ++ metaCols.map(col): _*)
-        .write.mode("append").parquet(postingsDir(indexDir)),
-      () => postsTf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-        .select(col("tok"), col("df"), lit(runId).as("run_id"))
-        .write.mode("append").parquet(dfDir(indexDir)),
-      () => toked.agg(count(lit(1)).as("n_docs"),
-          sum(size(col("__raw")).cast("long")).as("sum_dl"))
-        .select(col("n_docs"), col("sum_dl"), lit(runId).as("run_id"))
-        .write.mode("append").parquet(statsDir(indexDir)))
+    val postsTf = toked
+      .select(col("corpus_id") +: size(col("__raw")).cast("long").as("dl") +:
+        explode(col("__raw")).as("tok") +: metaCols.map(col): _*)
+      .groupBy(col("corpus_id"), col("tok"))
+      // dl and metadata are constant per doc, first() is exact
+      .agg(count(lit(1)).as("tf"),
+        first(col("dl")).as("dl") +: metaCols.map(m => first(col(m)).as(m)): _*)
+      .localCheckpoint(true) // feeds postings AND df
+    postsTf.select(Seq(col("tok"), col("corpus_id"), col("tf"), col("dl"),
+        lit(runId).as("run_id")) ++ metaCols.map(col): _*)
+      .write.mode("append").parquet(postingsDir(indexDir))
+    postsTf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
+      .select(col("tok"), col("df"), lit(runId).as("run_id"))
+      .write.mode("append").parquet(dfDir(indexDir))
+    toked.agg(count(lit(1)).as("n_docs"),
+        sum(size(col("__raw")).cast("long")).as("sum_dl"))
+      .select(col("n_docs"), col("sum_dl"), lit(runId).as("run_id"))
+      .write.mode("append").parquet(statsDir(indexDir))
   }
 
   /** Merged `(tok, df)` across all runs: per-(run, tok) max absorbs
@@ -451,58 +442,41 @@ object TokenIndex {
     // df/stats re-derive from the folded survivors below, so the BM25
     // collection stats heal here
     val tomb = IndexStore.tombstones(spark, indexDir, "corpus_id")
-    // merge on the postings rewrite: the ONE table whose files can
-    // carry different column sets across schema generations — a
-    // one-footer read here would permanently drop the other files'
-    // metadata columns through the swap.
-    // The postings and arrays folds are independent (disjoint dirs,
-    // disjoint leases) — overlapped per guide §2.6; df/stats re-derive
-    // from the FOLDED postings, so they run strictly after, overlapped
-    // with each other.
-    var p: (Long, Long) = null
-    var a: (Long, Long) = null
-    graft.sources.Par.run(
-      () => p = graft.sources.Compaction.rewriteParquetDir(spark,
-          postingsDir(indexDir), merge = true) { df =>
-        // metadata columns (append's metaCols — anything non-reserved)
-        // survive the fold verbatim: they are part of the posting row
-        val metaCols = df.columns.filterNot(ReservedPostingCols).toSeq
-        IndexStore.dropMasked(df, tomb, "corpus_id")
-          .select((Seq("tok", "corpus_id", "tf", "dl") ++ metaCols).map(col): _*)
-          .distinct()
-          .withColumn("run_id", lit(horizon(df)))
-          .select((Seq("tok", "corpus_id", "tf", "dl", "run_id") ++
-            metaCols).map(col): _*)
-      },
-      () => a = graft.sources.Compaction.rewriteParquetDir(spark,
-          arraysDir(indexDir)) { df =>
-        IndexStore.dropMasked(df, tomb, "corpus_id")
-          .select(col("corpus_id"), col("toks")).distinct()
-          .withColumn("run_id", lit(horizon(df)))
-          .select(col("corpus_id"), col("toks"), col("run_id"))
-      })
-    // df and stats re-derive from the FOLDED postings/arrays rather
-    // than folding their own rows: the distinct above is the ground
-    // truth, so this also heals any re-ingest drift
+    val p = graft.sources.Compaction.rewriteParquetDir(spark,
+        postingsDir(indexDir)) { df =>
+      // metadata columns (append's metaCols — anything non-reserved)
+      // survive the fold verbatim: they are part of the posting row
+      val metaCols = df.columns.filterNot(ReservedPostingCols).toSeq
+      IndexStore.dropMasked(df, tomb, "corpus_id")
+        .select((Seq("tok", "corpus_id", "tf", "dl") ++ metaCols).map(col): _*)
+        .distinct()
+        .withColumn("run_id", lit(horizon(df)))
+        .select((Seq("tok", "corpus_id", "tf", "dl", "run_id") ++
+          metaCols).map(col): _*)
+    }
+    val a = graft.sources.Compaction.rewriteParquetDir(spark,
+        arraysDir(indexDir)) { df =>
+      IndexStore.dropMasked(df, tomb, "corpus_id")
+        .select(col("corpus_id"), col("toks")).distinct()
+        .withColumn("run_id", lit(horizon(df)))
+        .select(col("corpus_id"), col("toks"), col("run_id"))
+    }
+    // df and stats re-derive from the FOLDED postings rather than
+    // folding their own rows: the distinct above is the ground truth,
+    // so this also heals any re-ingest drift
     val folded = ParquetRead(spark, postingsDir(indexDir))
-    var d: (Long, Long) = null
-    graft.sources.Par.run(
-      () => d = graft.sources.Compaction.rewriteParquetDir(spark,
-          dfDir(indexDir)) { df =>
-        folded.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-          .withColumn("run_id", lit(horizon(df)))
-          .select(col("tok"), col("df"), col("run_id"))
-      },
-      () => {
-        graft.sources.Compaction.rewriteParquetDir(spark,
-            statsDir(indexDir)) { df =>
-          folded.select(col("corpus_id"), col("dl")).distinct()
-            .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-            .withColumn("run_id", lit(horizon(df)))
-            .select(col("n_docs"), col("sum_dl"), col("run_id"))
-        }
-        ()
-      })
+    val d = graft.sources.Compaction.rewriteParquetDir(spark,
+        dfDir(indexDir)) { df =>
+      folded.groupBy(col("tok")).agg(count(lit(1)).as("df"))
+        .withColumn("run_id", lit(horizon(df)))
+        .select(col("tok"), col("df"), col("run_id"))
+    }
+    graft.sources.Compaction.rewriteParquetDir(spark, statsDir(indexDir)) { df =>
+      folded.select(col("corpus_id"), col("dl")).distinct()
+        .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
+        .withColumn("run_id", lit(horizon(df)))
+        .select(col("n_docs"), col("sum_dl"), col("run_id"))
+    }
     // takedowns are now physical — retire the ledger
     IndexStore.retireTombstones(spark, indexDir)
     (p, d, a)
@@ -531,14 +505,7 @@ object TokenIndex {
   def evolveMetadata(spark: SparkSession, indexDir: String,
       defaults: Seq[(String, Any)]): Unit =
       graft.sources.Lease.withLease(spark, indexDir) {
-    val pDir = postingsDir(indexDir)
-    IndexStore.evolvablePostings(spark, pDir, ReservedPostingCols, defaults)
-    // merge on the rewrite read too: the check saw the UNION schema,
-    // so the rewrite must carry it
-    graft.sources.Compaction.rewriteParquetDir(spark, pDir,
-        merge = true) { df =>
-      defaults.foldLeft(df) { case (acc, (m, v)) => acc.withColumn(m, lit(v)) }
-    }
-    ()
+    IndexStore.evolvePostings(spark, postingsDir(indexDir), ReservedPostingCols,
+      defaults)(identity)
   }
 }

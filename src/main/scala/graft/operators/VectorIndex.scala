@@ -82,10 +82,20 @@ object VectorIndex {
   private[graft] def bucketWidth(k: Int): Int =
     math.max(1, math.ceil(k.toDouble / MaxBuckets).toInt)
 
-  /** The model's cell count — one tiny read of the k-row centroid
-    * table (single file, written by coalesce(1)). */
+  /** The model's cell count: the k-row centroid table's footer row
+    * count, read on the driver (no job). */
   private[graft] def modelK(spark: SparkSession, indexDir: String): Int =
-    ParquetRead(spark, centroidsDir(indexDir)).count().toInt
+    ParquetRead.rowCount(spark, ParquetRead.dataFiles(spark, centroidsDir(indexDir))).toInt
+
+  /** The postings' row layout, written by every append and rewrite:
+    * one task, hence one file, per cell bucket, rows sorted by
+    * centroid_id within it. The bucket-prefixed sort satisfies
+    * FileFormatWriter's required ordering (the partition column) so the
+    * writer inserts no second sort, while the centroid_id suffix keeps
+    * row groups stats-tight for the probe's cell filter. */
+  private def bucketLayout(postings: DataFrame): DataFrame =
+    postings.repartition(col("cell_bucket"))
+      .sortWithinPartitions(col("cell_bucket"), col("centroid_id"))
   // SIBLING of centroids/ and postings/ (indexDir itself is never
   // swapped), so neither compact()'s two-rename nor a postings rewrite
   // can destroy it — the KMV __kmv_k sidecar lesson
@@ -336,11 +346,7 @@ object VectorIndex {
         col("centroid_id"),
         (col("centroid_id") / lit(width)).cast("int").as("cell_bucket")) ++
         metaCols.map(col): _*)
-      .repartition(col("cell_bucket"))
-      // bucket-prefixed sort: satisfies FileFormatWriter's required
-      // ordering (the partition column) so the writer inserts no second
-      // sort, while the centroid_id suffix keeps row groups stats-tight
-      .sortWithinPartitions(col("cell_bucket"), col("centroid_id"))
+      .transform(bucketLayout)
       .write.partitionBy("cell_bucket").mode("append")
       .parquet(postingsDir(indexDir))
     // drift accounting (VERDICT r14 item 3): one stats row per run —
@@ -1017,64 +1023,38 @@ object VectorIndex {
   }
 
   /** Fold the postings to the distinct vector set, in place,
-    * horizon-tagged (retries and verbatim re-ingests collapse).
-    * Hand-rolled rather than `rewriteParquetDir` because the postings
-    * are PARTITIONED by cell bucket and must stay so through the fold —
-    * the generic rewrite's round-robin repartition would flatten the
-    * layout and silently kill the probe path's partition pruning. Same
-    * crash-recovery preamble and checked two-rename swap, same quiesced
-    * single-writer contract. Returns (rowsBefore, rowsAfter); `(0, 0)`
-    * when the directory holds no data files.
+    * horizon-tagged (retries and verbatim re-ingests collapse), through
+    * [[graft.sources.Compaction.rewriteParquetDir]]: its crash recovery,
+    * checked two-rename swap and single-writer lease. The postings are
+    * partitioned by cell bucket on disk, so the rewrite keeps that
+    * partitioning, and the fold lays its rows out as [[append]] does
+    * ([[bucketLayout]]) so the probe path's partition and row-group
+    * pruning survive. Returns (rowsBefore, rowsAfter); `(0, 0)` when
+    * the directory holds no data files.
     */
   def compact(spark: SparkSession, indexDir: String): (Long, Long) =
       graft.sources.Lease.withLease(spark, indexDir) {
-    val dir = postingsDir(indexDir)
-    graft.sources.Compaction.recoverCrashedSwap(spark, dir)
-    val files = ParquetRead.dataFiles(spark, dir)
-    if (files.isEmpty) return (0L, 0L)
-    // merge: the fold's metaCols derive from this read's columns — a
-    // one-footer read on a mixed-schema legacy index would drop the
-    // other files' metadata through the swap
-    val input = ParquetRead(spark, dir, files, merge = true)
-    val h = input.agg(max(col("run_id"))).collect().head
-    val horizon = if (h.isNullAt(0)) 0L else h.getLong(0)
-    // tombstoned rows drop PHYSICALLY here (probes only mask them);
-    // the ledger itself retires after the swap lands. The drop runs
-    // BEFORE the distinct (which erases run provenance), so an upsert's
-    // re-appended higher-run posting survives while the stale one goes
-    val live = IndexStore.dropMasked(input,
-      IndexStore.tombstones(spark, indexDir, "vec_id"), "vec_id")
-    // metadata columns (append's metaCols — anything non-reserved)
-    // survive the fold verbatim: they are part of the posting row
-    val metaCols = input.columns.filterNot(ReservedPostingCols).toSeq
-    val survivors = live.select((Seq("centroid_id", "vec_id",
-        "emb", "cell_bucket") ++ metaCols).map(col): _*)
-      .distinct()
-    val folded = survivors
-      .select(Seq(col("vec_id"), col("emb"), lit(horizon).as("run_id"),
-        col("centroid_id"), col("cell_bucket")) ++ metaCols.map(col): _*)
-      .persist()
-    val result =
-      try {
-        // the two counts are independent actions (input reads the raw
-        // dir, folded materializes its own cache) — overlapped per
-        // guide §2.6; on the job-latency-bound takedown cadence the
-        // sequential round-trip, not compute, was the cost
-        var before = 0L
-        var after = 0L
-        graft.sources.Par.run(
-          () => before = input.count(),
-          () => after = folded.count())
-        // same layout discipline as append: one file per bucket, rows
-        // sorted by centroid_id so row-group stats pruning survives
-        // compaction
-        folded.repartition(col("cell_bucket"))
-          .sortWithinPartitions(col("cell_bucket"), col("centroid_id"))
-          .write.partitionBy("cell_bucket").mode("overwrite")
-          .parquet(dir + "__compact_tmp")
-        (before, after)
-      } finally folded.unpersist(blocking = false)
-    graft.sources.Compaction.swapTmpIntoPlace(spark, dir)
+    val tomb = IndexStore.tombstones(spark, indexDir, "vec_id")
+    val result = graft.sources.Compaction.rewriteParquetDir(spark,
+        postingsDir(indexDir)) { input =>
+      val h = input.agg(max(col("run_id"))).collect().head
+      val horizon = if (h.isNullAt(0)) 0L else h.getLong(0)
+      // tombstoned rows drop PHYSICALLY here (probes only mask them);
+      // the ledger itself retires after the swap lands. The drop runs
+      // BEFORE the distinct (which erases run provenance), so an
+      // upsert's re-appended higher-run posting survives while the
+      // stale one goes
+      val live = IndexStore.dropMasked(input, tomb, "vec_id")
+      // metadata columns (append's metaCols — anything non-reserved)
+      // survive the fold verbatim: they are part of the posting row
+      val metaCols = input.columns.filterNot(ReservedPostingCols).toSeq
+      live.select((Seq("centroid_id", "vec_id", "emb", "cell_bucket") ++
+          metaCols).map(col): _*)
+        .distinct()
+        .select(Seq(col("vec_id"), col("emb"), lit(horizon).as("run_id"),
+          col("centroid_id"), col("cell_bucket")) ++ metaCols.map(col): _*)
+        .transform(bucketLayout)
+    }
     // the takedowns are now physical — retire the ledger
     IndexStore.retireTombstones(spark, indexDir)
     result
@@ -1082,25 +1062,14 @@ object VectorIndex {
 
   /** Evolve the index's stored metadata SET by adding columns with
     * backfill defaults (VERDICT r18 item 3; mirrors
-    * [[TokenIndex.evolveMetadata]] — see its contract notes). Hand-
-    * rolled like [[compact]] rather than `rewriteParquetDir` because
-    * the postings are PARTITIONED by cell bucket and must stay so
-    * through the rewrite (the generic round-robin repartition would
-    * flatten the layout and kill probe-time partition pruning); same
-    * crash-recovery preamble, same checked two-rename swap, same
-    * append layout discipline (one file per bucket, centroid-sorted
-    * row groups), under the index dir's writer lease.
+    * [[TokenIndex.evolveMetadata]] — see its contract notes): the one
+    * postings rewrite of [[IndexStore.evolvePostings]], laid out as
+    * [[append]] lays postings out, under the index dir's writer lease.
     */
   def evolveMetadata(spark: SparkSession, indexDir: String,
       defaults: Seq[(String, Any)]): Unit =
       graft.sources.Lease.withLease(spark, indexDir) {
-    val dir = postingsDir(indexDir)
-    val input = IndexStore.evolvablePostings(spark, dir, ReservedPostingCols, defaults)
-    defaults.foldLeft(input) { case (acc, (m, v)) => acc.withColumn(m, lit(v)) }
-      .repartition(col("cell_bucket"))
-      .sortWithinPartitions(col("cell_bucket"), col("centroid_id"))
-      .write.partitionBy("cell_bucket").mode("overwrite")
-      .parquet(dir + "__compact_tmp")
-    graft.sources.Compaction.swapTmpIntoPlace(spark, dir)
+    IndexStore.evolvePostings(spark, postingsDir(indexDir), ReservedPostingCols,
+      defaults)(bucketLayout)
   }
 }

@@ -9,21 +9,26 @@ import org.apache.spark.sql.SparkSession
   * accumulate files far below the efficient scan size, and the resulting
   * footer/open overhead dominates read cost.
   *
-  * [[Compaction.rewriteParquetDir]] is the one rewrite: it reads the
-  * directory, runs the caller's row transform (identity, keep-latest,
-  * retention, a sketch fold), sizes the output from the ACTUAL on-disk
-  * bytes scaled by the row survival ratio — file count =
-  * ceil(bytes / [[Compaction.TargetFileBytes]]), written via one
-  * `repartition` (a round-robin shuffle — the only way to get even
-  * output sizes from skewed inputs) — and swaps the result into place
-  * under the directory's [[Lease]].
+  * [[Compaction.rewriteParquetDir]] is the one in-place rewrite, for
+  * flat and partitioned directories alike: every index, sketch and
+  * signature-state compaction and every metadata evolution goes through
+  * it. It reads the directory under the union of its footers' schemas,
+  * runs the caller's row transform (identity, keep-latest, retention, a
+  * sketch fold, a backfill), writes the result to `__compact_tmp` and
+  * swaps it into place under the directory's [[Lease]]. The input row
+  * count comes from the footers; only the output is counted, because it
+  * sizes a flat directory's files — ceil(bytes / [[Compaction.TargetFileBytes]])
+  * with the bytes scaled by the row survival ratio, written via one
+  * round-robin `repartition` (the only way to get even output sizes
+  * from skewed inputs). A directory partitioned on disk is written with
+  * the same partition columns, in the transform's own row layout.
   *
   * The swap is write-temp → rename-old-aside → rename-temp — NOT atomic.
   * That is a deliberate scope line: atomic replace is a table-format
   * commit protocol (transaction log + snapshot pointer), not a directory
   * operation. Readers mid-swap see a missing directory, never partial
   * data — and a rerun after a mid-swap crash self-heals: if the live dir
-  * is absent but `__compact_old` exists, the preamble renames it back
+  * is absent but `__compact_old` exists, the rerun renames it back
   * before compacting.
   */
 object Compaction {
@@ -61,7 +66,7 @@ object Compaction {
     * before proceeding so the rerun compacts instead of failing the
     * read.
     */
-  private[graft] def recoverCrashedSwap(spark: SparkSession, dir: String): Unit = {
+  private def recoverCrashedSwap(spark: SparkSession, dir: String): Unit = {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val old = new Path(dir + "__compact_old")
@@ -78,7 +83,7 @@ object Compaction {
     * reports success). Keeping the original under `__compact_old` until
     * the swap lands also gives a rollback path.
     */
-  private[graft] def swapTmpIntoPlace(spark: SparkSession, dir: String): Unit = {
+  private def swapTmpIntoPlace(spark: SparkSession, dir: String): Unit = {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new Path(dir + "__compact_tmp")
@@ -96,54 +101,73 @@ object Compaction {
 
   /** Rewrite the ROWS of a parquet directory through `transform` and
     * swap the result into place under the checked two-rename protocol
-    * ([[recoverCrashedSwap]] preamble, [[swapTmpIntoPlace]]'s
+    * ([[recoverCrashedSwap]] first, [[swapTmpIntoPlace]]'s
     * `__compact_old` rollback window). An identity `transform` merely
     * re-buckets fragmented files; state-table compaction
     * ([[graft.operators.Dedup.compactSignatureState]], the sketch and
-    * index folds) drops rows (keep-latest, retention). Output file count
-    * is sized from the input bytes scaled by the row survival ratio, so
-    * a 90%-dropped state lands in proportionally fewer
-    * [[TargetFileBytes]] files. Returns
-    * (rowsBefore, rowsAfter); `(0, 0)` without a write when the
-    * directory holds no data files ([[ParquetRead.dataFiles]], listed
-    * once: the same listing sizes the output and feeds the schema
-    * read).
+    * index folds) drops rows (keep-latest, retention).
+    *
+    * `transform` sees the directory read under the union of every
+    * footer's schema: files written across schema generations (an
+    * index's metadata-carrying postings) may differ in columns, and a
+    * one-footer read would drop the others' columns, permanently once
+    * swapped. It runs only after crash recovery and only when the
+    * directory holds data files ([[ParquetRead.dataFiles]], listed
+    * once), so a caller's checks and sidecar writes belong inside it.
+    *
+    * A flat directory's output file count is sized from the input bytes
+    * scaled by the row survival ratio, so a 90%-dropped state lands in
+    * proportionally fewer [[TargetFileBytes]] files. A directory
+    * partitioned on disk (`col=value` segments in its listing) is
+    * written with the same partition columns and NOT repartitioned: the
+    * transform lays out its rows (repartition by the partition columns
+    * for one file each, a sort prefixed by them to keep row-group
+    * order) and the writer keeps that order.
+    *
+    * Returns (rowsBefore, rowsAfter): the input footers' row count and
+    * a count of the transformed rows; `(0, 0)` without a write when the
+    * directory holds no data files.
     *
     * Single-writer contract ENFORCED via [[Lease]] (fail-fast on a
     * concurrent writer, stale-takeover on a crashed one); reentrant, so
     * an index compact already holding its state dir's lease pays only
     * this dir's own marker.
     */
-  def rewriteParquetDir(spark: SparkSession, dir: String,
-      merge: Boolean = false)(
+  def rewriteParquetDir(spark: SparkSession, dir: String)(
       transform: org.apache.spark.sql.DataFrame
         => org.apache.spark.sql.DataFrame): (Long, Long) =
       Lease.withLease(spark, dir) {
     recoverCrashedSwap(spark, dir)
     val files = ParquetRead.dataFiles(spark, dir)
     if (files.isEmpty) return (0L, 0L)
-    // merge: tables whose files may legitimately differ in columns (an
-    // index's metadata-carrying postings written across schema
-    // generations) must rewrite the UNION of every footer's schema — a
-    // one-footer read silently drops whichever columns the first file
-    // lacks, and the swap makes that loss permanent
-    val input = ParquetRead(spark, dir, files, merge)
-    // persist: three actions follow (two counts + the write), all over
-    // the transformed rows; the cache is released before the swap so no
-    // live plan holds the OLD directory's file listing
+    val input = ParquetRead(spark, dir, files, merge = true)
+    val rowsBefore = ParquetRead.rowCount(spark, files)
+    // the partition columns: the `col=value` dirs between `dir` and a
+    // data file
+    val root = new Path(dir)
+    val depth = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .makeQualified(root).depth
+    val partitionCols = Iterator.iterate(files.head.getPath.getParent)(_.getParent)
+      .takeWhile(_.depth > depth).map(_.getName.takeWhile(_ != '=')).toSeq.reverse
+    // persist: the count and the write both read the transformed rows;
+    // the cache is released before the swap so no live plan holds the
+    // OLD directory's file listing
     val out = transform(input).persist()
-    val result =
+    val rowsAfter =
       try {
-        val rowsBefore = input.count()
-        val rowsAfter = out.count()
-        val keepRatio = if (rowsBefore == 0) 1.0 else rowsAfter.toDouble / rowsBefore
-        val outBytes = (files.map(_.getLen).sum * keepRatio).toLong
-        val wantFiles = math.max(1, math.ceil(outBytes.toDouble / TargetFileBytes).toInt)
-        out.repartition(wantFiles)
-          .write.mode("overwrite").parquet(dir + "__compact_tmp")
-        (rowsBefore, rowsAfter)
+        val n = out.count()
+        val tmp = dir + "__compact_tmp"
+        if (partitionCols.nonEmpty)
+          out.write.partitionBy(partitionCols: _*).mode("overwrite").parquet(tmp)
+        else {
+          val keepRatio = if (rowsBefore == 0) 1.0 else n.toDouble / rowsBefore
+          val outBytes = (files.map(_.getLen).sum * keepRatio).toLong
+          val wantFiles = math.max(1, math.ceil(outBytes.toDouble / TargetFileBytes).toInt)
+          out.repartition(wantFiles).write.mode("overwrite").parquet(tmp)
+        }
+        n
       } finally out.unpersist(blocking = false)
     swapTmpIntoPlace(spark, dir)
-    result
+    (rowsBefore, rowsAfter)
   }
 }

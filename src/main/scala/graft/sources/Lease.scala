@@ -62,7 +62,10 @@ import org.apache.spark.sql.SparkSession
   * Reentrant per thread and state dir: `upsert` (= delete + append) or
   * a compact that rewrites a nested dir holds ONE lease across its
   * steps, so composed operations are protected end-to-end, not
-  * step-by-step. Readers never touch the lease — probes stay lock-free
+  * step-by-step. The steps must run on the thread that took the lease:
+  * a body that hands a step to another thread is a second writer there
+  * and is refused, so every writer issues its steps in sequence on its
+  * own thread. Readers never touch the lease — probes stay lock-free
   * (snapshot isolation comes from parquet immutability + the swap
   * protocol in [[Compaction]]).
   */

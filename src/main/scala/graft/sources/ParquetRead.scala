@@ -1,6 +1,8 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
 
@@ -11,7 +13,8 @@ import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
   * `mergeSchemasInParallel`, which runs one Spark job per read even for
   * a single footer. Here the schema comes from the footers on the
   * driver and the read is `spark.read.schema(s).parquet(dir)`: no job
-  * before the caller's own actions. The footer conversion and merge
+  * before the caller's own actions. A table's row count comes from its
+  * footers the same way ([[rowCount]]). The footer conversion and merge
   * rules stay Spark's ([[GraftParquetBridge]]), and the file choice is
   * schema inference's: the first data file by path, or every data file
   * when `merge`. Partition columns are still discovered from the
@@ -65,4 +68,14 @@ object ParquetRead {
       case Some(schema) => spark.read.schema(schema).parquet(dir)
       case None => spark.read.parquet(dir)
     }
+
+  /** The rows `files` hold (a [[dataFiles]] listing), summed from
+    * their footers on the driver: no job. */
+  def rowCount(spark: SparkSession, files: Seq[FileStatus]): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    files.map { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+      try reader.getRecordCount finally reader.close()
+    }.sum
+  }
 }

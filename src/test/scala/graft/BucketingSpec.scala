@@ -75,6 +75,25 @@ class BucketingSpec extends SparkSpec {
     assert(back == (1L to 500L).map(i => (i, s"row$i")).toSet)
   }
 
+  test("compaction of a mixed-schema dir keeps the union of its columns; rowsBefore = rows read") {
+    import spark.implicits._
+    import graft.sources.Compaction
+    val dir = java.nio.file.Files.createTempDirectory("compactmixed").toString + "/t"
+    (1L to 30L).map(i => (i, s"a$i")).toDF("id", "a").repartition(3).write.parquet(dir)
+    (31L to 50L).map(i => (i, i * 10)).toDF("id", "b").repartition(2)
+      .write.mode("append").parquet(dir)
+    val seen = spark.read.parquet(dir).count()
+    val (before, after) = Compaction.rewriteParquetDir(spark, dir)(identity)
+    assert(before == seen && before == 50L && after == 50L, s"$seen: $before -> $after")
+    assert(graft.sources.ParquetRead.dataFiles(spark, dir).size == 1)
+    val back = spark.read.parquet(dir)
+    assert(back.columns.toSet == Set("id", "a", "b"), back.columns.mkString(","))
+    val rows = back.select("id", "a", "b").as[(Long, Option[String], Option[Long])]
+      .collect().sortBy(_._1).toSeq
+    assert(rows == (1L to 30L).map(i => (i, Some(s"a$i"), None)) ++
+      (31L to 50L).map(i => (i, None, Some(i * 10))))
+  }
+
   test("morton z-value round-trips: de-interleaving the bits recovers both keys") {
     import spark.implicits._
     import graft.sources.Layout

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.Sketches
+import graft.sources.Lease
 
 class SketchesSpec extends SparkSpec {
   import spark.implicits._
@@ -303,5 +304,38 @@ class SketchesSpec extends SparkSpec {
       val v = compacted((k, q))._1
       assert(v >= lo && v <= hi, s"post-compact ($k, $q): $v outside [$lo, $hi]")
     }
+  }
+
+  test("kmv compaction under a foreign writer's lease is refused before it touches the sidecar or a parked swap") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import org.apache.hadoop.fs.Path
+    val stDir = s"${java.nio.file.Files.createTempDirectory("kmvlease")}/state"
+    Sketches.kmvSketch((1 to 500).map("v" + _).toDF("x"), col("x"), 128)
+      .withColumn("run_id", lit(0L)).write.parquet(stDir)
+    Sketches.compactKmvState(spark, stDir, 64)
+    assert(Sketches.readKmvCompactK(spark, stDir).contains(64))
+    val fs = new Path(stDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val parked = new Path(stDir + "__compact_old")
+    // another writer holds the lease, mid-swap: its old dir is parked
+    val held = new CountDownLatch(1)
+    val done = new CountDownLatch(1)
+    val writer = new Thread(() => Lease.withLease(spark, stDir) {
+      require(fs.rename(new Path(stDir), parked))
+      held.countDown()
+      done.await(60, TimeUnit.SECONDS)
+      require(fs.rename(parked, new Path(stDir)))
+    })
+    writer.start()
+    try {
+      assert(held.await(30, TimeUnit.SECONDS))
+      intercept[Lease.LeaseHeldException] { Sketches.compactKmvState(spark, stDir, 32) }
+      assert(Sketches.readKmvCompactK(spark, stDir).contains(64),
+        "a refused compaction must leave the recorded bound unchanged")
+      assert(fs.exists(parked) && !fs.exists(new Path(stDir)),
+        "a refused compaction must not restore the live writer's parked dir")
+    } finally { done.countDown(); writer.join(30000) }
+    assert(spark.read.parquet(stDir).count() == 64L)
+    Sketches.compactKmvState(spark, stDir, 32) // and compacts once free
+    assert(Sketches.readKmvCompactK(spark, stDir).contains(32))
   }
 }

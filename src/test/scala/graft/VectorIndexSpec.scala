@@ -16,6 +16,26 @@ class VectorIndexSpec extends SparkSpec {
         round(col("cosine"), 9), col("rank"))
       .as[(Long, Long, Double, Int)].collect().sorted.toSeq
 
+  /** The postings' on-disk layout: each `cell_bucket=` dir with the
+    * centroid_id column of each of its data files, in file order. */
+  private def bucketFiles(idxDir: String): Map[String, Seq[Seq[Int]]] =
+    graft.sources.ParquetRead.dataFiles(spark, s"$idxDir/postings")
+      .groupBy(_.getPath.getParent.getName).map { case (bucket, files) =>
+        bucket -> files.map(f => spark.read.parquet(f.getPath.toString)
+          .select("centroid_id").as[Int].collect().toSeq)
+      }
+
+  /** The layout every postings write keeps: the same bucket dirs, one
+    * data file in each, centroid_id non-decreasing within it. */
+  private def assertBucketLayout(idxDir: String, buckets: Set[String]): Unit = {
+    val layout = bucketFiles(idxDir)
+    assert(layout.keySet == buckets, s"bucket dirs changed: $buckets -> ${layout.keySet}")
+    layout.foreach { case (bucket, files) =>
+      assert(files.size == 1, s"$bucket holds ${files.size} data files")
+      assert(files.head == files.head.sorted, s"$bucket: centroid_id out of order")
+    }
+  }
+
   test("queryTopK equals ivfCosineTopK with the same centroids; probes survive corpus deletion") {
     val base = Files.createTempDirectory("vecidx")
     val corpusDir = s"$base/corpus"; val idxDir = s"$base/idx"
@@ -88,10 +108,13 @@ class VectorIndexSpec extends SparkSpec {
     VectorIndex.append(h1, "vec_id", "embedding", inc, runId = 2L)
     assert(q(inc) == want, "re-ingested batch must be absorbed")
     // compaction folds the duplicates away and answers stay identical
+    val buckets = bucketFiles(inc)
+    assert(buckets.values.exists(_.size > 1), "appends leave several files per bucket")
     val (b, a) = VectorIndex.compact(spark, inc)
     assert(b > a, s"compaction must shrink: $b -> $a")
     assert(a == emb.count(), "folded postings = one row per corpus vector")
     assert(q(inc) == want, "compaction must be lossless")
+    assertBucketLayout(inc, buckets.keySet)
   }
 
   test("re-build replaces the postings with the new model's, never mixes them") {
@@ -639,7 +662,9 @@ class VectorIndexSpec extends SparkSpec {
     VectorIndex.delete(victims.toDF("vec_id"), "vec_id", idxDir)
     assert(q() == after, "re-issued delete must be absorbed")
     // compact drops the rows physically and retires the ledger
+    val buckets = bucketFiles(idxDir).keySet
     val (b, a) = VectorIndex.compact(spark, idxDir)
+    assertBucketLayout(idxDir, buckets)
     assert(b - a == victims.size.toLong,
       s"compaction must drop exactly the tombstoned rows: $b -> $a")
     assert(!new java.io.File(idxDir, "tombstones").exists(),
@@ -649,6 +674,30 @@ class VectorIndexSpec extends SparkSpec {
     val (b2, a2) = VectorIndex.compact(spark, idxDir)
     assert(b2 == a2, s"rerun compact must be a no-op: $b2 -> $a2")
     assert(q() == after)
+  }
+
+  test("a compact crashed mid-swap (postings parked under __compact_old) is restored, compacted and keeps the layout") {
+    import org.apache.hadoop.fs.Path
+    val idxDir = s"${Files.createTempDirectory("vecidx_crash")}/idx"
+    VectorIndex.build(emb, "vec_id", "embedding", idxDir, k = 8, maxIter = 5)
+    val queries = emb.filter(col("vec_id") < 20)
+      .select((col("vec_id") + 10000L).as("vec_id"), col("embedding"))
+      .localCheckpoint(true)
+    def q() = topk(VectorIndex.queryTopK(
+      spark, queries, "vec_id", "embedding", idxDir, k = 3, nprobe = 2))
+    val want = q()
+    VectorIndex.append(emb, "vec_id", "embedding", idxDir, runId = 1L) // a re-ingest to fold
+    val buckets = bucketFiles(idxDir).keySet
+    // a crash between rename(postings, old) and rename(tmp, postings)
+    val postings = new Path(s"$idxDir/postings")
+    val parked = new Path(s"$idxDir/postings__compact_old")
+    val fs = postings.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    require(fs.rename(postings, parked))
+    val (b, a) = VectorIndex.compact(spark, idxDir)
+    assert(b == 2 * emb.count() && a == emb.count(), s"$b -> $a")
+    assert(!fs.exists(parked), "the parked dir must be restored, then cleaned up")
+    assertBucketLayout(idxDir, buckets)
+    assert(q() == want && want.nonEmpty, "probes must answer as before the crash")
   }
 
   test("upsert = delete + re-append under a higher run: only the latest embedding answers, in every window") {
@@ -928,7 +977,9 @@ class VectorIndexSpec extends SparkSpec {
       VectorIndex.append(corpus.withColumn("src", lit("crawl2")),
         "vec_id", "embedding", idxDir, 1L, metaCols = Seq("lang", "src"))
     }
+    val buckets = bucketFiles(idxDir).keySet
     VectorIndex.evolveMetadata(spark, idxDir, Seq("src" -> "crawl1"))
+    assertBucketLayout(idxDir, buckets)
     intercept[IllegalArgumentException] {
       VectorIndex.evolveMetadata(spark, idxDir, Seq("centroid_id" -> 0))
     }
