@@ -2357,18 +2357,10 @@ object Queries {
         (7L, 8L, 2L), (3L, 9L, 7L), (9L, 10L, 1L), (10L, 8L, 3L),
         (1L, 11L, 0L), (11L, 12L, 6L), (12L, 8L, 0L))
         .toDF("src", "dst", "lag_days")
-      // the two iterative drivers are independent — run them on
-      // concurrent threads so their (tiny, driver-latency-bound) jobs
-      // interleave in the scheduler and the wall cost is max, not sum
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val relaxedF = Future(Relational.dagRelaxMax(
+      val relaxed = Relational.dagRelaxMax(
         edges.withColumn("__one", lit(1L)), "src", "dst",
-        Seq("__one" -> "depth", "lag_days" -> "max_lag"), maxIter = 16))
-      val reachF = Future(Relational.descendantCounts(edges, "src", "dst", maxIter = 16))
-      val relaxed = Await.result(relaxedF, Duration.Inf)
-      val reach = Await.result(reachF, Duration.Inf)
+        Seq("__one" -> "depth", "lag_days" -> "max_lag"), maxIter = 16)
+      val reach = Relational.descendantCounts(edges, "src", "dst", maxIter = 16)
       relaxed.join(reach, Seq("node"), "left")
         .select(col("node"), col("depth"), col("max_lag"),
           coalesce(col("n_desc"), lit(0L)).as("n_desc"))
@@ -2458,9 +2450,9 @@ object Queries {
       // distinct surviving texts (count-distinct over a gate-masked
       // text, null text's dedup group via a conditional max)
       val annotated = graft.pipeline.CorpusPipeline.annotate(docs, "doc_id", "text", cfg)
-      val gate = col("n_tokens").between(cfg.minTokens, cfg.maxTokens) &&
+      val gate = col("n_tokens").between(cfg.minTokens, graft.pipeline.CorpusPipeline.MaxTokens) &&
         col("ttr") >= cfg.minTypeTokenRatio &&
-        col("predicted_lang").isInCollection(cfg.keepLangs)
+        col("predicted_lang").isInCollection(graft.pipeline.CorpusPipeline.KeepLangs)
       val agg = annotated.agg(
         count(lit(1)).as("__n0"),
         sum(when(gate, 1L).otherwise(0L)).as("__n1"),
@@ -4767,7 +4759,7 @@ object Queries {
           "doc_id", "text", dir.toString, 1L, metaCols = Seq("lang", "src"))
       }
       graft.operators.TokenIndex.bm25IndexedFiltered(s, dir.toString,
-          Seq("dup", "join", "scan"), col("lang") === "en", 1.2, 0.75)
+          Seq("dup", "join", "scan"), col("lang") === "en")
         .select(col("corpus_id").as("doc_id"),
           round(col("bm25"), 4).as("bm25"), col("n_terms"))
         .orderBy(col("doc_id"))

@@ -22,21 +22,19 @@ object Views {
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings")
 
-  /** Register each fixture table under `<name><suffix>` as a temp view
+  /** Register each fixture table under its own name as a temp view
     * in `spark`'s session catalog; returns the registered view names.
     * `events` goes through the same nanos→µs normalization the
     * DataFrame loaders use ([[Tables.events]]), so SQL-text consumers
     * see identical timestamps.
     */
-  def registerFixture(spark: SparkSession, sfDir: String,
-      suffix: String = ""): Seq[String] =
+  def registerFixture(spark: SparkSession, sfDir: String): Seq[String] =
     TableNames.map { name =>
       val df = name match {
         case "events" => Tables.events(spark, sfDir)
         case n => Tables.table(spark, sfDir, n)
       }
-      val view = s"$name$suffix"
-      df.createOrReplaceTempView(view)
-      view
+      df.createOrReplaceTempView(name)
+      name
     }
 }

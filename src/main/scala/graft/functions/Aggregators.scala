@@ -206,14 +206,14 @@ object Aggregators {
     * the Datasketches heap implementation Spark already ships): the
     * mergeable FLOAT-quantile counterpart to the exact integer-bucket
     * histogram family — bounded ~O(k·log(n/k)) state per group at any
-    * stream length, normalized rank error ≈ 1.33% at the default
-    * k = 200 (99% confidence), quantile answers are actual retained
+    * stream length, normalized rank error ≈ 1.33% at
+    * k = 200 ([[graft.operators.Sketches.KllK]], 99% confidence), quantile answers are actual retained
     * stream values. Output is the sketch's portable byte image — the
     * state row [[graft.operators.Sketches]]' KLL family persists.
     * Null handling is the caller's (filter before aggregating, as
     * count-distinct-style semantics demand).
     */
-  final case class KllDoubles(k: Int = 200)
+  final case class KllDoubles(k: Int)
       extends Aggregator[Double, KllBuf, Array[Byte]] {
     require(k >= 8, "k must be at least 8")
     override def zero: KllBuf = new KllBuf(
@@ -231,7 +231,7 @@ object Aggregators {
     * Per-row cost is one heapify+merge of an already-small sketch;
     * state rows are sketch-sized, never data-sized.
     */
-  final case class KllMergeBytes(k: Int = 200)
+  final case class KllMergeBytes(k: Int)
       extends Aggregator[Array[Byte], KllBuf, Array[Byte]] {
     require(k >= 8, "k must be at least 8")
     override def zero: KllBuf = new KllBuf(

@@ -191,20 +191,23 @@ object AvOps {
     p
   }
 
+  /** Samples [[audioFeatures]] decodes and transforms per clip. */
+  val FeatureSamples: Int = 1 << 14
+
   /** REAL audio kernel: WAV PCM decode + feature extraction as a scalar
     * UDF over the binary column — rms, peak amplitude, zero-crossing
     * rate, and spectral energy summed into `nBands` equal-width bands of
-    * [0, nyquist) from an FFT of the first `maxSamples` samples (bounded
-    * work per row regardless of clip length). NULL or undecodable
+    * [0, nyquist) from an FFT of the first [[FeatureSamples]] samples
+    * (bounded work per row regardless of clip length). NULL or undecodable
     * payloads yield NULL — bad files become filterable rows, never task
     * failures. UDF (not codegen) is deliberate: the kernel is imperative
     * DSP, isolated in one projection exactly like the image ops.
     */
-  def audioFeatures(nBands: Int = 8, maxSamples: Int = 1 << 14)
+  def audioFeatures(nBands: Int = 8)
       : org.apache.spark.sql.expressions.UserDefinedFunction =
     udf((bytes: Array[Byte]) =>
       if (bytes == null) None
-      else decodeWav(bytes, maxSamples).map { case (sr, ch, n, head, sumSq, peak, zc) =>
+      else decodeWav(bytes, FeatureSamples).map { case (sr, ch, n, head, sumSq, peak, zc) =>
         val p = fftPower(head)
         val bands = new Array[Double](nBands)
         var k = 0
@@ -299,7 +302,7 @@ object AvOps {
     * rather than failing the task. `frame_idx` is the frame's position in
     * the stream (so skipped delta frames leave visible gaps).
     */
-  def videoKeyFrames(ds: Dataset[AvRecord], everyN: Int = 1)(
+  def videoKeyFrames(ds: Dataset[AvRecord], everyN: Int = graft.operators.Dedup.VideoEveryN)(
       implicit enc: org.apache.spark.sql.Encoder[FrameRow]): Dataset[FrameRow] =
     ds.mapPartitions { rows =>
       rows.flatMap { r =>
@@ -390,8 +393,9 @@ object AvOps {
     * robust to requantization noise (margins measured in
     * AudioDedupSpec). Streaming decode like [[decodeWav]]: the clip is
     * read in chunks, one window + one spectrum live at a time, and the
-    * read stops at `maxWindows` — bounded work and memory per row no
-    * matter the clip length. At the default `hop == window`
+    * read stops at `maxWindows` ([[graft.operators.Dedup.AudioMaxWindows]])
+    * — bounded work and memory per row no matter the clip length. At
+    * the default `hop == window`
     * (non-overlapping) the scheme is ALIGNMENT-sensitive: a time-
     * shifted copy lands on different window boundaries and won't match
     * (the dedup target is the re-encoded / regained copy, which
@@ -581,22 +585,23 @@ object AvOps {
     * aggregates. Undecodable payloads contribute nothing (row-level
     * tolerance; count them upstream via the quarantine patterns).
     */
-  def audioFingerprints(ds: Dataset[AvRecord], window: Int = 1024,
-      maxWindows: Int = 64, hop: Int = 0)(
+  def audioFingerprints(ds: Dataset[AvRecord],
+      window: Int = graft.operators.Dedup.AudioWindow,
+      hop: Int = graft.operators.Dedup.AudioHop)(
       implicit enc: org.apache.spark.sql.Encoder[AudioFpRow]): Dataset[AudioFpRow] = {
     // driver-side, loud: a config error must not masquerade as "every
     // clip undecodable". window/2 − window/32 bins must hold 65
     // strictly-increasing band edges: 15·window/32 ≥ 65 → window ≥ 256.
     require(window >= 256 && (window & (window - 1)) == 0,
       s"audioFingerprints: window must be a power of two >= 256 (got $window)")
-    require(maxWindows > 0, "audioFingerprints: maxWindows must be positive")
     val h = if (hop == 0) window else hop // 0 = the non-overlapping default
     require(h >= 1 && h <= window,
       s"audioFingerprints: hop must be in [1, window] (got $hop)")
     ds.mapPartitions { rows =>
       rows.flatMap { r =>
         if (r.content == null) Iterator.empty
-        else wavWindowFingerprints(r.content, window, maxWindows, h) match {
+        else wavWindowFingerprints(r.content, window,
+          graft.operators.Dedup.AudioMaxWindows, h) match {
           case None => Iterator.empty
           case Some(fps) =>
             fps.iterator.zipWithIndex.map { case (fp, i) =>

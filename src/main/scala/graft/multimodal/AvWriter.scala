@@ -111,20 +111,20 @@ object AvWriter {
     * fingerprint bit — band-energy difference SIGNS are
     * scale-invariant).
     *
-    * `variant 0` = the base clip; `variant 1` = the published disguise
+    * A clip is 17 windows of [[graft.operators.Dedup.AudioWindow]]
+    * samples at 8 kHz. `variant 0` = the base clip; `variant 1` = the published disguise
     * class: amplitude halved + requantized to 8-bit (the audio
     * "re-encode": quantization distortion, exactly what a lossy
     * round-trip inflicts, while timing — which the non-overlapping
     * windows are sensitive to — is preserved). Clips of different
     * seeds share no spectral structure.
     */
-  def fixtureWav(seed: Long, variant: Int, window: Int = 1024,
-      nWindows: Int = 17, sampleRate: Int = 8000): Array[Byte] = {
-    val samples = synthClip(seed, window, nWindows)
+  def fixtureWav(seed: Long, variant: Int): Array[Byte] = {
+    val samples = synthClip(seed, graft.operators.Dedup.AudioWindow, 17)
     val out =
       if (variant == 1) samples.map(v => math.round(v * 0.5 * 127) / 127.0)
       else samples
-    wavPcm16(out, sampleRate)
+    wavPcm16(out, 8000)
   }
 
   private def synthClip(seed: Long, window: Int, nWindows: Int): Array[Double] = {

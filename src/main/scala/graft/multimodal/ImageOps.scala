@@ -117,21 +117,11 @@ object ImageOps {
     bos.toByteArray
   }
 
-  /** Full compress step: decode → bounded resize → JPEG(quality); None on
-    * undecodable input.
-    */
-  def compress(bytes: Array[Byte], maxDim: Int, quality: Float): Option[Array[Byte]] =
-    decode(bytes).map(im => encodeJpeg(boundedResize(im, maxDim), quality))
-
   // ------------------------------------------------------------- column API
 
   /** struct(width int, height int) or NULL when undecodable. */
   val imageDims: org.apache.spark.sql.expressions.UserDefinedFunction =
     udf((bytes: Array[Byte]) => decodeDims(bytes))
-
-  def imageCompress(maxDim: Int = DefaultMaxDim, quality: Float = DefaultQuality)
-      : org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((bytes: Array[Byte]) => compress(bytes, maxDim, quality).orNull)
 
   /** size in KB rounded to 2 decimals — the reference's metadata metric
     * (`test.py:58-59`), pure built-ins.
@@ -631,24 +621,23 @@ object ImageOps {
   }
 
   /** dims + compressed payload from ONE decode: JPEG decode dominates
-    * this pipeline's per-row cost, and separate imageDims/imageCompress
+    * this pipeline's per-row cost, and separate dims and compress
     * projections each ran a full ImageIO.read — doubling the stage's CPU
-    * for no extra information.
+    * for no extra information. Compresses at [[DefaultMaxDim]] and
+    * [[DefaultQuality]].
     */
-  def imageMeta(maxDim: Int = DefaultMaxDim, quality: Float = DefaultQuality)
-      : org.apache.spark.sql.expressions.UserDefinedFunction =
+  val imageMeta: org.apache.spark.sql.expressions.UserDefinedFunction =
     udf((bytes: Array[Byte]) =>
-      decode(bytes).map(im =>
-        (im.getWidth, im.getHeight, encodeJpeg(boundedResize(im, maxDim), quality))).orNull)
+      decode(bytes).map(im => (im.getWidth, im.getHeight,
+        encodeJpeg(boundedResize(im, DefaultMaxDim), DefaultQuality))).orNull)
 
   /** Annotate a binary-column DataFrame with decoded metadata + compressed
     * payload. The single UDF projection ([[imageMeta]] — ONE decode per
     * row) is the only codegen break; all derived metrics are Catalyst
     * built-ins on top of it.
     */
-  def withImageColumns(df: DataFrame, contentCol: String,
-      maxDim: Int = DefaultMaxDim, quality: Float = DefaultQuality): DataFrame = {
-    df.withColumn("__im", imageMeta(maxDim, quality)(col(contentCol)))
+  def withImageColumns(df: DataFrame, contentCol: String): DataFrame = {
+    df.withColumn("__im", imageMeta(col(contentCol)))
       .withColumn("width", col("__im._1"))
       .withColumn("height", col("__im._2"))
       .withColumn("decode_error", col("__im").isNull)

@@ -97,8 +97,11 @@ object Bpe {
     * symbols, which character-level BPE vocabularies don't reach.
     */
   def initialPairCounts(docs: DataFrame, textCol: String,
-      minCount: Long = 1L, maxVocabTypes: Int = 5000000): DataFrame =
-    initialPairCountsFrom(vocabTable(docs, textCol, minCount, maxVocabTypes))
+      minCount: Long = 1L): DataFrame =
+    initialPairCountsFrom(vocabTable(docs, textCol, minCount, MaxVocabTypes))
+
+  /** The default vocab-type cap of training and [[initialPairCounts]]. */
+  val MaxVocabTypes = 5000000
 
   /** [[initialPairCounts]] over an already-built `(w, freq)` vocab
     * frame — the seam that lets a caller running BOTH training and the
@@ -116,7 +119,7 @@ object Bpe {
       .agg(sum(col("freq")).as("cnt"))
 
   def learnMerges(docs: DataFrame, textCol: String, numMerges: Int,
-      minCount: Long = 1L, maxVocabTypes: Int = 5000000): Seq[(String, String, Long)] =
+      minCount: Long = 1L, maxVocabTypes: Int = MaxVocabTypes): Seq[(String, String, Long)] =
     learnMergesFromVocab(vocabTable(docs, textCol, minCount, maxVocabTypes), numMerges)
 
   /** [[learnMerges]] from an already-built `(w, freq)` vocab frame

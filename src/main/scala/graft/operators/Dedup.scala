@@ -18,6 +18,29 @@ import graft.functions.{HashFunctions, TextFunctions, VectorFunctions}
   */
 object Dedup {
 
+  /** Signature geometry of the multimodal dedup family, shared by every
+    * writer of a signature state (here and in the streaming sinks of
+    * [[graft.streaming.StreamOps]]) and every probe of it, so a state and
+    * its reader cannot disagree. 64-bit signatures block on `SigChunks`
+    * slices; video fingerprints every keyframe (`VideoEveryN`); audio
+    * reads at most `AudioMaxWindows` non-overlapping (`AudioHop` 0)
+    * windows of `AudioWindow` samples; a clip pair matches on
+    * `*MinMatches` distinct frames/windows per side within `*MaxHamming`
+    * bits; oriented-verified images take candidates within
+    * `OrientedCandidateMaxHamming` bits (recall-loose, at the measured
+    * floor) and keep grids within `MaxGridDistance` gray levels. */
+  val SigChunks = 8
+  val VideoEveryN = 1
+  val VideoMaxHamming = 4
+  val VideoMinMatches = 2
+  val AudioWindow = 1024
+  val AudioMaxWindows = 64
+  val AudioHop = 0
+  val AudioMaxHamming = 4
+  val AudioMinMatches = 4
+  val OrientedCandidateMaxHamming = 3
+  val MaxGridDistance = 8.0
+
   /** Exact dedup: keep the first row (lowest `idCol`) per key. One shuffle
     * (the window partition); no join.
     */
@@ -293,20 +316,6 @@ object Dedup {
     intra.unionByName(cross)
   }
 
-  /** The pigeonhole-blocked candidate join of [[hammingNearDuplicates]],
-    * run on one representative (min id) per DISTINCT signature — the
-    * round-16 verdict's skew fix: a group of m rows with identical
-    * signatures (crawl placeholder images, boilerplate pages — the most
-    * common duplicate class) collides on every chunk slice, and blocking
-    * the raw rows would generate m² candidate pairs inside one skewed
-    * block before the popcount filter. Collapsing to representatives
-    * first makes the blocked join's input the DISTINCT-signature set, so
-    * candidate volume depends on signature diversity, never on duplicate
-    * multiplicity. Emits one (__sig_a, __sig_b, hamming) row per
-    * signature pair within `maxHamming` (0 < hamming by construction —
-    * equal signatures collapse to one representative and never pair).
-    * Package-visible so DedupSpec can pin the candidate bound directly.
-    */
   /** The pigeonhole blocking-key column: one exploded struct row per
     * slice key. With c chunks and threshold h, at most h chunks can
     * differ, so at least c−h agree. When c−h ≥ 2 some PAIR of chunks
@@ -334,6 +343,20 @@ object Dedup {
       (explode(array(slices: _*)), Seq("c1", "k1"))
     }
 
+  /** The pigeonhole-blocked candidate join of [[hammingNearDuplicates]],
+    * run on one representative (min id) per DISTINCT signature — the
+    * round-16 verdict's skew fix: a group of m rows with identical
+    * signatures (crawl placeholder images, boilerplate pages — the most
+    * common duplicate class) collides on every chunk slice, and blocking
+    * the raw rows would generate m² candidate pairs inside one skewed
+    * block before the popcount filter. Collapsing to representatives
+    * first makes the blocked join's input the DISTINCT-signature set, so
+    * candidate volume depends on signature diversity, never on duplicate
+    * multiplicity. Emits one (__sig_a, __sig_b, hamming) row per
+    * signature pair within `maxHamming` (0 < hamming by construction —
+    * equal signatures collapse to one representative and never pair).
+    * Package-visible so DedupSpec can pin the candidate bound directly.
+    */
   private[graft] def hammingRepPairs(
       members: DataFrame,
       bits: Int,
@@ -428,7 +451,7 @@ object Dedup {
       df: DataFrame,
       idCol: String,
       bytesCol: String,
-      chunks: Int = 8,
+      chunks: Int = SigChunks,
       maxHamming: Int = 2): DataFrame =
     hammingNearDuplicates(
       df.select(col(idCol).as("__id"),
@@ -451,7 +474,7 @@ object Dedup {
     * the composed-disguise class's ≤ 2), so any threshold loose enough
     * for full recall admits false pairs as the corpus grows. This
     * operator resolves that squeeze: candidates run RECALL-LOOSE
-    * (`candidateMaxHamming` default 3 — at or past the measured floor,
+    * ([[OrientedCandidateMaxHamming]] — at or past the measured floor,
     * deliberately), then each candidate pair (and ONLY candidates — the
     * corpus never pays a second decode) is verified on the full 9×8
     * mean-luminance grids via [[graft.multimodal.ImageOps
@@ -472,12 +495,9 @@ object Dedup {
   def imageNearDuplicatesOrientedVerified(
       df: DataFrame,
       idCol: String,
-      bytesCol: String,
-      chunks: Int = 8,
-      candidateMaxHamming: Int = 3,
-      maxGridDistance: Double = 8.0): DataFrame = {
+      bytesCol: String): DataFrame = {
     val cands = imageNearDuplicatesOrientedStrict(
-      df, idCol, bytesCol, chunks, candidateMaxHamming)
+      df, idCol, bytesCol, SigChunks, OrientedCandidateMaxHamming)
     val bytesA = df.select(col(idCol).as("id_a"), col(bytesCol).as("__ba"))
     val bytesB = df.select(col(idCol).as("id_b"), col(bytesCol).as("__bb"))
     cands
@@ -486,7 +506,7 @@ object Dedup {
       .withColumn("grid_distance",
         graft.multimodal.ImageOps.imageGridMinDistance(col("__ba"), col("__bb")))
       .filter(col("grid_distance").isNotNull &&
-        col("grid_distance") <= maxGridDistance)
+        col("grid_distance") <= MaxGridDistance)
       .select(col("id_a"), col("id_b"), col("hamming"), col("grid_distance"))
   }
 
@@ -514,7 +534,7 @@ object Dedup {
     * (re-encode + re-orient) disguise class for the "dedup the new
     * crawl against the archive" cadence: candidates generate
     * RECALL-LOOSE from the stored 8-signature sets (the strict
-    * matcher's min-over-64 rule at `candidateMaxHamming`, default AT
+    * matcher's min-over-64 rule at [[OrientedCandidateMaxHamming]], AT
     * the measured floor — deliberately unsound alone), then every
     * candidate verifies on grid distance computed from the STORED
     * [[graft.multimodal.ImageOps.gridBlob]]s — the archive's image
@@ -532,10 +552,8 @@ object Dedup {
       batch: DataFrame,
       idCol: String,
       bytesCol: String,
-      stateSigs: DataFrame, // (idCol, sigs, grids) from imageOrientedSignatures
-      chunks: Int = 8,
-      candidateMaxHamming: Int = 3,
-      maxGridDistance: Double = 8.0): DataFrame = {
+      // (idCol, sigs, grids) from imageOrientedSignatures
+      stateSigs: DataFrame): DataFrame = {
     // ONE decode per batch image: signatures AND grids come from the
     // same kernel pass, checkpointed so blocking, expansion and verify
     // all read it
@@ -551,7 +569,7 @@ object Dedup {
       .distinct()
     val sigPairs = crossSigCandidates(
       bMembers.select(col("__bsig")), sMembers.select(col("__ssig")),
-      chunks, candidateMaxHamming)
+      SigChunks, OrientedCandidateMaxHamming)
     val cands = sigPairs
       .join(bMembers, Seq("__bsig"))
       .join(sMembers, Seq("__ssig"))
@@ -565,7 +583,7 @@ object Dedup {
       .withColumn("grid_distance",
         graft.multimodal.ImageOps.imageGridBlobMinDistance(
           col("__bgrids"), col("__sgrids")))
-      .filter(col("grid_distance") <= maxGridDistance)
+      .filter(col("grid_distance") <= MaxGridDistance)
       .groupBy(col("__bid"))
       .agg(min(struct(col("grid_distance"), col("hamming"), col("__sid"))).as("m"))
       .select(col("__bid"), col("m.__sid").as("dup_of"),
@@ -576,13 +594,13 @@ object Dedup {
   /** VIDEO near-duplicates (VERDICT r18 item 4) — composed entirely
     * from existing kernels: [[graft.multimodal.AvOps.videoKeyFrames]]
     * demuxes each MJPEG-AVI payload into standalone JPEG keyframes
-    * (lazy per-partition fan-out, every `everyN`-th keyframe),
+    * (lazy per-partition fan-out, every keyframe),
     * [[graft.multimodal.ImageOps.dHashCanonical]] fingerprints each
     * frame (one decode; re-encodes drift a couple of bits, lossless
     * re-orientations are bit-exact), the frame signatures run through
     * the SAME distinct-signature pigeonhole hamming blocking as every
     * other 64-bit member of the family, and frame matches aggregate to
-    * the VIDEO pair: a pair reports when at least `minMatches` DISTINCT
+    * the VIDEO pair: a pair reports when at least [[VideoMinMatches]] DISTINCT
     * keyframes match on EACH side (the two-sided count stops a single
     * repeated frame — a static logo — from matching a whole slideshow).
     * Returns `(id_a, id_b, n_matched, min_hamming)`; compose with
@@ -598,19 +616,15 @@ object Dedup {
   def videoNearDuplicates(
       df: DataFrame,
       idCol: String,
-      bytesCol: String,
-      everyN: Int = 1,
-      chunks: Int = 8,
-      maxHamming: Int = 4,
-      minMatches: Int = 2): DataFrame = {
+      bytesCol: String): DataFrame = {
     // the frame's composite key rides the blocked join as ONE orderable
     // struct column (hammingNearDuplicates needs min/least/< over
     // __id, all struct-total in Spark) — no synthetic id whose
     // recompute could drift between the rep join and the expansion
-    val sigs = videoSignatures(df, idCol, bytesCol, everyN).select(
+    val sigs = videoSignatures(df, idCol, bytesCol).select(
       struct(col(idCol).as("vid"), col("frame_idx").as("fidx")).as("__id"),
       col("sig").as("__sig"))
-    hammingNearDuplicates(sigs, bits = 64, chunks = chunks, maxHamming = maxHamming)
+    hammingNearDuplicates(sigs, bits = 64, chunks = SigChunks, maxHamming = VideoMaxHamming)
       .select(col("id_a.vid").as("vid_a"), col("id_a.fidx").as("fidx_a"),
         col("id_b.vid").as("vid_b"), col("id_b.fidx").as("fidx_b"),
         col("hamming"))
@@ -622,7 +636,7 @@ object Dedup {
       .agg(least(count_distinct(col("fidx_a")),
           count_distinct(col("fidx_b"))).as("n_matched"),
         min(col("hamming")).as("min_hamming"))
-      .filter(col("n_matched") >= minMatches)
+      .filter(col("n_matched") >= VideoMinMatches)
   }
 
   /** AUDIO near-duplicates — the audio member of the multimodal dedup
@@ -635,14 +649,14 @@ object Dedup {
     * family's distinct-signature pigeonhole hamming blocking (composite
     * (clip, window) keys as ONE orderable struct column), and frame
     * matches aggregate to the CLIP pair: report when at least
-    * `minMatches` DISTINCT windows match on EACH side (the two-sided
+    * [[AudioMinMatches]] DISTINCT windows match on EACH side (the two-sided
     * count stops one recurring window — silence, a jingle — from
     * matching a whole archive). Returns `(id_a, id_b, n_matched,
     * min_hamming)`; compose with [[keepOnePerCluster]] /
     * [[keepBestPerCluster]] for dedup.
     *
     * Scale shape: audio BYTES are touched exactly once (decode + FFT in
-    * one mapPartitions pass, bounded per-row work via `maxWindows`);
+    * one mapPartitions pass, bounded per-row work via [[AudioMaxWindows]]);
     * everything downstream is (clip, window, long) rows. At the
     * default non-overlapping `hop` matching is ALIGNMENT-sensitive —
     * the covered disguise class is the re-encoded/requantized/regained
@@ -657,12 +671,8 @@ object Dedup {
       df: DataFrame,
       idCol: String,
       bytesCol: String,
-      window: Int = 1024,
-      maxWindows: Int = 64,
-      chunks: Int = 8,
-      maxHamming: Int = 4,
-      minMatches: Int = 4,
-      hop: Int = 0): DataFrame = {
+      window: Int = AudioWindow,
+      hop: Int = AudioHop): DataFrame = {
     // the all-zero fingerprint is the degenerate fixed point of every
     // STATIC spectrum (silence, a held test tone, dropouts): no band
     // difference ever grows, so unrelated static clips collide on it
@@ -670,10 +680,10 @@ object Dedup {
     // audioSignatures drops them from matching (the audio sibling of
     // exact-dedup's empty-document rule; AudioDedupSpec pins two
     // distinct held tones to NOT match)
-    val sigs = audioSignatures(df, idCol, bytesCol, window, maxWindows, hop).select(
+    val sigs = audioSignatures(df, idCol, bytesCol, window, hop).select(
       struct(col(idCol).as("aid"), col("window_idx").as("widx")).as("__id"),
       col("sig").as("__sig"))
-    hammingNearDuplicates(sigs, bits = 64, chunks = chunks, maxHamming = maxHamming)
+    hammingNearDuplicates(sigs, bits = 64, chunks = SigChunks, maxHamming = AudioMaxHamming)
       .select(col("id_a.aid").as("aid_a"), col("id_a.widx").as("widx_a"),
         col("id_b.aid").as("aid_b"), col("id_b.widx").as("widx_b"),
         col("hamming"))
@@ -685,7 +695,7 @@ object Dedup {
       .agg(least(count_distinct(col("widx_a")),
           count_distinct(col("widx_b"))).as("n_matched"),
         min(col("hamming")).as("min_hamming"))
-      .filter(col("n_matched") >= minMatches)
+      .filter(col("n_matched") >= AudioMinMatches)
   }
 
   /** The demuxer/fingerprint record type is long-keyed; a silent cast
@@ -719,8 +729,7 @@ object Dedup {
     * survivors with a version column and maintain with
     * [[compactSignatureState]] (composite key: idCol + frame_idx).
     */
-  def videoSignatures(df: DataFrame, idCol: String, bytesCol: String,
-      everyN: Int = 1): DataFrame = {
+  def videoSignatures(df: DataFrame, idCol: String, bytesCol: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     requireIntegralId(df, idCol, "videoSignatures")
@@ -728,7 +737,7 @@ object Dedup {
       df.select(col(idCol).cast("long").as("id"),
         lit("video").as("media_type"), col(bytesCol).as("content"))
         .as[graft.multimodal.AvOps.AvRecord],
-      everyN).toDF()
+      VideoEveryN).toDF()
     frames.select(col("id").as(idCol), col("frame_idx"),
         graft.multimodal.ImageOps.imageDHashCanonical(col("frame_bytes")).as("sig"))
       .filter(col("sig").isNotNull && col("sig") =!= 0L)
@@ -742,7 +751,7 @@ object Dedup {
     * trade). The audio sibling of [[videoSignatures]].
     */
   def audioSignatures(df: DataFrame, idCol: String, bytesCol: String,
-      window: Int = 1024, maxWindows: Int = 64, hop: Int = 0): DataFrame = {
+      window: Int = AudioWindow, hop: Int = AudioHop): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     requireIntegralId(df, idCol, "audioSignatures")
@@ -750,7 +759,7 @@ object Dedup {
       df.select(col(idCol).cast("long").as("id"),
         lit("audio").as("media_type"), col(bytesCol).as("content"))
         .as[graft.multimodal.AvOps.AvRecord],
-      window, maxWindows, hop).toDF()
+      window, hop).toDF()
     fps.select(col("id").as(idCol), col("window_idx"), col("fp").as("sig"))
       .filter(col("sig") =!= 0L)
   }
@@ -799,8 +808,8 @@ object Dedup {
 
   private def sequenceSigsVsState(
       batchSigs: DataFrame, stateSigs: DataFrame,
-      chunks: Int, maxHamming: Int, minMatches: Int): DataFrame = {
-    val sigPairs = crossSigCandidates(batchSigs, stateSigs, chunks, maxHamming)
+      maxHamming: Int, minMatches: Int): DataFrame = {
+    val sigPairs = crossSigCandidates(batchSigs, stateSigs, SigChunks, maxHamming)
     sigPairs
       .join(batchSigs, Seq("__bsig"))
       .join(stateSigs, Seq("__ssig"))
@@ -832,18 +841,15 @@ object Dedup {
       batch: DataFrame,
       idCol: String,
       bytesCol: String,
-      stateSigs: DataFrame, // (idCol, frame_idx, sig) from videoSignatures
-      everyN: Int = 1,
-      chunks: Int = 8,
-      maxHamming: Int = 4,
-      minMatches: Int = 2): DataFrame = {
-    val bs = videoSignatures(batch, idCol, bytesCol, everyN)
+      // (idCol, frame_idx, sig) from videoSignatures
+      stateSigs: DataFrame): DataFrame = {
+    val bs = videoSignatures(batch, idCol, bytesCol)
       .select(col(idCol).as("__bid"), col("frame_idx").as("__bidx"),
         col("sig").as("__bsig"))
       .localCheckpoint(true)
     val ss = stateSigs.select(col(idCol).cast("long").as("__sid"),
       col("frame_idx").as("__sidx"), col("sig").as("__ssig"))
-    val best = sequenceSigsVsState(bs, ss, chunks, maxHamming, minMatches)
+    val best = sequenceSigsVsState(bs, ss, VideoMaxHamming, VideoMinMatches)
     batch.join(best, batch(idCol) === best("__bid"), "left").drop("__bid")
   }
 
@@ -857,20 +863,15 @@ object Dedup {
       batch: DataFrame,
       idCol: String,
       bytesCol: String,
-      stateSigs: DataFrame, // (idCol, window_idx, sig) from audioSignatures
-      window: Int = 1024,
-      maxWindows: Int = 64,
-      chunks: Int = 8,
-      maxHamming: Int = 4,
-      minMatches: Int = 4,
-      hop: Int = 0): DataFrame = {
-    val bs = audioSignatures(batch, idCol, bytesCol, window, maxWindows, hop)
+      // (idCol, window_idx, sig) from audioSignatures
+      stateSigs: DataFrame): DataFrame = {
+    val bs = audioSignatures(batch, idCol, bytesCol)
       .select(col(idCol).as("__bid"), col("window_idx").as("__bidx"),
         col("sig").as("__bsig"))
       .localCheckpoint(true)
     val ss = stateSigs.select(col(idCol).cast("long").as("__sid"),
       col("window_idx").as("__sidx"), col("sig").as("__ssig"))
-    val best = sequenceSigsVsState(bs, ss, chunks, maxHamming, minMatches)
+    val best = sequenceSigsVsState(bs, ss, AudioMaxHamming, AudioMinMatches)
     batch.join(best, batch(idCol) === best("__bid"), "left").drop("__bid")
   }
 
@@ -920,7 +921,7 @@ object Dedup {
       idCol: String,
       bytesCol: String,
       stateSigs: DataFrame, // (idCol, sig) from imageSignatures
-      chunks: Int = 8,
+      chunks: Int = SigChunks,
       maxHamming: Int = 5,
       orientationRobust: Boolean = false): DataFrame = {
     require(maxHamming < chunks, "pigeonhole blocking needs maxHamming < chunks")
@@ -1011,7 +1012,7 @@ object Dedup {
     }
   }
 
-  /** Cluster near-duplicate PAIRS into transitive groups: every id that
+  /** Cluster near-duplicate `(id_a, id_b)` PAIRS into transitive groups: every id that
     * appears in `pairs` gets the minimum id of its connected component as
     * `cluster_id` ([[Relational.connectedComponents]]). The principled
     * canonical-selection semantics for corpus dedup — "keep one
@@ -1019,10 +1020,13 @@ object Dedup {
     * (remove every id_b) can remove documents whose only similarity link
     * was itself removed.
     */
-  def nearDupClusters(pairs: DataFrame, idACol: String = "id_a",
-      idBCol: String = "id_b", maxIter: Int = 25): DataFrame =
-    Relational.connectedComponents(pairs, idACol, idBCol, maxIter)
+  def nearDupClusters(pairs: DataFrame): DataFrame =
+    Relational.connectedComponents(pairs, "id_a", "id_b")
       .select(col("id"), col("cluster_id"))
+
+  /** Word n-gram length of benchmark decontamination, shared by
+    * [[flagContaminated]] and [[graft.streaming.StreamOps.decontaminateStream]]. */
+  val ContaminationGramN = 5
 
   /** Benchmark decontamination: for every corpus document, count its
     * word n-gram overlap with a benchmark/eval set (the GPT-3/Pile-style
@@ -1043,7 +1047,7 @@ object Dedup {
       textCol: String,
       benchmark: DataFrame,
       benchTextCol: String,
-      n: Int = 5): DataFrame = {
+      n: Int = ContaminationGramN): DataFrame = {
     // grams is parameterized by the text column name — renaming the
     // benchmark's column to `textCol` would collide (ambiguous reference)
     // whenever the benchmark already has a column by that name
@@ -1065,9 +1069,8 @@ object Dedup {
     * whose id IS its cluster_id or that have no cluster at all. One
     * broadcast-or-shuffle equi-join on the id.
     */
-  def keepOnePerCluster(df: DataFrame, idCol: String, pairs: DataFrame,
-      idACol: String = "id_a", idBCol: String = "id_b"): DataFrame = {
-    val clusters = nearDupClusters(pairs, idACol, idBCol)
+  def keepOnePerCluster(df: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
+    val clusters = nearDupClusters(pairs)
       .withColumnRenamed("id", "__cc_id")
     df.join(clusters, df(idCol) === col("__cc_id"), "left")
       .filter(col("cluster_id").isNull || col(idCol) === col("cluster_id"))
@@ -1089,8 +1092,8 @@ object Dedup {
     * the corpus is needed.
     */
   def keepBestPerCluster(df: DataFrame, idCol: String, scoreCol: String,
-      pairs: DataFrame, idACol: String = "id_a", idBCol: String = "id_b"): DataFrame = {
-    val clusters = nearDupClusters(pairs, idACol, idBCol)
+      pairs: DataFrame): DataFrame = {
+    val clusters = nearDupClusters(pairs)
       .withColumnRenamed("id", "__cc_id")
     val joined = df.join(clusters, df(idCol) === col("__cc_id"), "left")
     val unclustered = joined.filter(col("cluster_id").isNull)

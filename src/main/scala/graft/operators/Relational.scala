@@ -11,6 +11,18 @@ import org.apache.spark.sql.functions._
   */
 object Relational {
 
+  /** Round caps of [[transitiveClosure]] and [[connectedComponents]]. */
+  val ClosureMaxIter = 12
+  val ComponentsMaxIter = 25
+
+  /** An `eligible` edge table's rows if it holds at most `max`: ONE job
+    * decides a small-graph gate and fetches the graph. */
+  private def smallGraph(edges: DataFrame, max: Long,
+      eligible: Boolean): Option[Array[org.apache.spark.sql.Row]] =
+    if (!eligible) None
+    else Some(edges.limit(math.min(max, Int.MaxValue - 1L).toInt + 1).collect())
+      .filter(_.length <= max)
+
   /** Top-k rows per group, deterministic via explicit tie-break columns.
     * One shuffle (the window partition); with AQE this is the canonical
     * scalable "first-match" (reference `/root/reference/test.py:163-164`).
@@ -257,9 +269,9 @@ object Relational {
   /** Transitive closure of an edge table by iterated self-join doubling
     * (path-halving: frontier of length-≤2^i paths). Runs on the driver as
     * a loop of DataFrame jobs; each iteration is one shuffle join +
-    * distinct. `maxIter` bounds runaway graphs; persists intermediate
-    * frontiers and unpersists (including checkpoint-pinned blocks) as
-    * soon as superseded.
+    * distinct. [[ClosureMaxIter]] rounds bound runaway graphs; persists
+    * intermediate frontiers and unpersists (including checkpoint-pinned
+    * blocks) as soon as superseded.
     *
     * USE ONLY when the (src, dst) PAIR LIST itself is the deliverable:
     * the output is quadratic in component size — a single 10^6-node
@@ -275,7 +287,7 @@ object Relational {
     * skip the pre-count job entirely (no wasted job when the bound
     * cannot bind).
     */
-  def transitiveClosure(edges: DataFrame, srcCol: String, dstCol: String, maxIter: Int = 12,
+  def transitiveClosure(edges: DataFrame, srcCol: String, dstCol: String,
       maxNodes: Long = 100000L): DataFrame = {
     val sc = edges.sparkSession.sparkContext
     if (maxNodes != Long.MaxValue) {
@@ -293,7 +305,7 @@ object Relational {
     var n = closure.count()
     var iter = 0
     var converged = false
-    while (iter < maxIter && !converged) {
+    while (iter < ClosureMaxIter && !converged) {
       val grown = closure.as("a")
         .join(closure.as("b"), col("a.dst") === col("b.src"))
         .select(col("a.src").as("src"), col("b.dst").as("dst"))
@@ -342,12 +354,12 @@ object Relational {
     * release their checkpoint-pinned blocks via the tracked-release
     * helpers.
     *
-    * `maxIter` bounds ROUNDS; every round advances ≥2 hops and every
-    * third also pointer-jumps, so the reachable diameter for a given
+    * [[ComponentsMaxIter]] bounds ROUNDS; every round advances ≥2 hops and
+    * every third also pointer-jumps, so the reachable diameter for a given
     * budget is strictly larger than the previous one-hop-per-round form.
     */
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
-      maxIter: Int = 25, localMaxEdges: Long = 200000L): DataFrame = {
+      localMaxEdges: Long = 200000L): DataFrame = {
     val sc = edges.sparkSession.sparkContext
     // small-graph fast path (broadcast-threshold reasoning, same as
     // dagRelaxMax): min-label propagation pays ~O(log diameter) scheduled
@@ -370,10 +382,8 @@ object Relational {
       // silently NARROW the wider endpoint's ids (e.g. a long dst
       // wrapped into an int schema derived from src alone)
       val sameType = e0.schema.head.dataType == e0.schema(1).dataType
-      val small = integral && sameType && e0.count() <= localMaxEdges
-      if (small) {
-        val rows = e0.collect()
-        if (!rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) {
+      smallGraph(e0, localMaxEdges, integral && sameType) match {
+        case Some(rows) if !rows.exists(r => r.isNullAt(0) || r.isNullAt(1)) =>
           val out = connectedComponentsLocal(
             rows.map(r => (r.get(0).asInstanceOf[Number].longValue,
               r.get(1).asInstanceOf[Number].longValue)))
@@ -393,7 +403,7 @@ object Relational {
               out.map { case (id, cid) =>
                 org.apache.spark.sql.Row(narrow(id), narrow(cid))
               }.toSeq, 1), schema)
-        }
+        case _ =>
       }
       e0.unpersist()
     }
@@ -425,7 +435,7 @@ object Relational {
     var pinned = Set.empty[Int]
     var iter = 0
     var converged = false
-    while (iter < maxIter && !converged) {
+    while (iter < ComponentsMaxIter && !converged) {
       // Round kinds, every plan reading only cached labels or a
       // once-referenced fused intermediate:
       //   hop∘hop   — two neighbor-min hops, one job;
@@ -527,12 +537,13 @@ object Relational {
     * maximum over all paths of the sum of edge weights reaching it
     * (floored at 0 — every node starts at 0 and values are only max'd
     * upward). One shuffle join + one aggregation per iteration; each
-    * iteration extends paths by one edge, so `maxIter` must cover the
-    * DAG's depth. Lineage is truncated every 5 iterations.
+    * iteration extends paths by one edge, so [[dagRelaxMax]]'s default
+    * `maxIter` must cover the DAG's depth. Lineage is truncated every 5
+    * iterations.
     */
-  def dagLongestPath(edges: DataFrame, srcCol: String, dstCol: String, weightCol: String,
-      maxIter: Int = 50, localMaxEdges: Long = 10000L): DataFrame =
-    dagRelaxMax(edges, srcCol, dstCol, Seq(weightCol -> "dist"), maxIter, localMaxEdges)
+  def dagLongestPath(edges: DataFrame, srcCol: String, dstCol: String,
+      weightCol: String): DataFrame =
+    dagRelaxMax(edges, srcCol, dstCol, Seq(weightCol -> "dist"))
 
   /** Fused multi-weight longest-path relaxation: ONE iterative driver
     * relaxes every weight column simultaneously (same join, one extra
@@ -564,23 +575,22 @@ object Relational {
     // Collect once and relax round-SYNCHRONOUSLY (Jacobi, not
     // Gauss–Seidel) so a truncating maxIter sees bit-identical state to
     // the distributed loop. Spec-pinned equivalent on random DAGs.
-    val edgeCount = e.count()
-    // same-type guard as connectedComponents: with mixed src/dst types
+    // Same-type guard as connectedComponents: with mixed src/dst types
     // the local rows would carry node values that mismatch the declared
     // single-type schema (the distributed loop's union widens instead)
-    if (edgeCount <= localMaxEdges &&
-        e.schema.head.dataType == e.schema(1).dataType) {
-      val rows = e.collect()
-      val out = dagRelaxMaxLocal(rows, outCols.size, maxIter)
-      val spark = edges.sparkSession
-      val nodeType = e.schema.head.dataType
-      val schema = org.apache.spark.sql.types.StructType(
-        org.apache.spark.sql.types.StructField("node", nodeType) +:
-          outCols.map(o => org.apache.spark.sql.types.StructField(
-            o, org.apache.spark.sql.types.LongType, nullable = false)))
-      e.unpersist()
-      return spark.createDataFrame(
-        spark.sparkContext.parallelize(out.toSeq, 1), schema)
+    smallGraph(e, localMaxEdges, e.schema.head.dataType == e.schema(1).dataType) match {
+      case Some(rows) =>
+        val out = dagRelaxMaxLocal(rows, outCols.size, maxIter)
+        val spark = edges.sparkSession
+        val nodeType = e.schema.head.dataType
+        val schema = org.apache.spark.sql.types.StructType(
+          org.apache.spark.sql.types.StructField("node", nodeType) +:
+            outCols.map(o => org.apache.spark.sql.types.StructField(
+              o, org.apache.spark.sql.types.LongType, nullable = false)))
+        e.unpersist()
+        return spark.createDataFrame(
+          spark.sparkContext.parallelize(out.toSeq, 1), schema)
+      case None =>
     }
     var dist = e.select(col("src").as("node")).union(e.select(col("dst"))).distinct()
       .select(col("node") +: outCols.map(o => lit(0L).as(o)): _*).persist()
@@ -709,19 +719,20 @@ object Relational {
     // codegen fixed cost dwarfs a driver BitSet fixpoint on a tiny edge
     // list; only replaces the EXACT register path (the HLL path exists
     // precisely for graphs too big to collect)
-    if (v <= exactMaxNodes && e.count() <= localMaxEdges &&
-        e.schema.head.dataType == e.schema(1).dataType) {
-      val rows = e.collect()
-      val outRows = descendantCountsLocal(rows, maxIter)
-      val spark = edges.sparkSession
-      val nodeType = e.schema.head.dataType
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node", nodeType),
-        org.apache.spark.sql.types.StructField(
-          "n_desc", org.apache.spark.sql.types.LongType, nullable = false)))
-      e.unpersist(); nodes.unpersist()
-      return spark.createDataFrame(
-        spark.sparkContext.parallelize(outRows.toSeq, 1), schema)
+    val sameType = e.schema.head.dataType == e.schema(1).dataType
+    smallGraph(e, localMaxEdges, v <= exactMaxNodes && sameType) match {
+      case Some(rows) =>
+        val outRows = descendantCountsLocal(rows, maxIter)
+        val spark = edges.sparkSession
+        val nodeType = e.schema.head.dataType
+        val schema = org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("node", nodeType),
+          org.apache.spark.sql.types.StructField(
+            "n_desc", org.apache.spark.sql.types.LongType, nullable = false)))
+        e.unpersist(); nodes.unpersist()
+        return spark.createDataFrame(
+          spark.sparkContext.parallelize(outRows.toSeq, 1), schema)
+      case None =>
     }
     val out =
       if (v <= exactMaxNodes) descendantCountsExact(e, nodes, v.toInt, maxIter)
@@ -795,19 +806,20 @@ object Relational {
       val endpointType = e.schema.head.dataType
       val localSafe = endpointType == e.schema(1).dataType &&
         endpointType != org.apache.spark.sql.types.BinaryType
-      if (localMaxEdges > 0 && localSafe && e.count() <= localMaxEdges) {
-        val rows = e.collect()
-        val nodeType = e.schema.head.dataType
-        val (nodeIds, ranks) = pageRankLocal(rows, iterations, damping)
-        val spark = edges.sparkSession
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node", nodeType),
-          org.apache.spark.sql.types.StructField("rank",
-            org.apache.spark.sql.types.DoubleType, nullable = false)))
-        val out = spark.createDataFrame(
-          java.util.Arrays.asList(nodeIds.indices.map(i =>
-            org.apache.spark.sql.Row(nodeIds(i), ranks(i))): _*), schema)
-        return out
+      smallGraph(e, localMaxEdges, localMaxEdges > 0 && localSafe) match {
+        case Some(rows) =>
+          val nodeType = e.schema.head.dataType
+          val (nodeIds, ranks) = pageRankLocal(rows, iterations, damping)
+          val spark = edges.sparkSession
+          val schema = org.apache.spark.sql.types.StructType(Seq(
+            org.apache.spark.sql.types.StructField("node", nodeType),
+            org.apache.spark.sql.types.StructField("rank",
+              org.apache.spark.sql.types.DoubleType, nullable = false)))
+          val out = spark.createDataFrame(
+            java.util.Arrays.asList(nodeIds.indices.map(i =>
+              org.apache.spark.sql.Row(nodeIds(i), ranks(i))): _*), schema)
+          return out
+        case None =>
       }
       pageRankDistributed(e, iterations, damping)
     } finally e.unpersist()
@@ -1072,8 +1084,7 @@ object Relational {
   def cpmSchedule(
       stages: DataFrame, // (stage_id, duration_days, ...)
       deps: DataFrame, // (stage_id = child, depends_on_stage_id = parent, relation_type, lag_days)
-      projectStart: Option[java.sql.Date] = None,
-      maxIter: Int = 50): DataFrame = {
+      projectStart: Option[java.sql.Date] = None): DataFrame = {
     val dur = stages.select(col("stage_id"), col("duration_days").cast("long").as("__dur"))
     val rel = upper(trim(col("relation_type")))
     // LEFT joins + a raise_error guard: an inner join would silently DROP
@@ -1109,7 +1120,7 @@ object Relational {
             lit("cpmSchedule: unknown relation_type '"),
             coalesce(col("relation_type"), lit("NULL")), lit("' (expected FS/SS/FF/SF)")))))
           .as("w"))
-    val es = dagLongestPath(weighted, "src", "dst", "w", maxIter)
+    val es = dagLongestPath(weighted, "src", "dst", "w")
       .select(col("node").as("stage_id"), col("dist").as("early_start"))
     val base = stages.join(es, Seq("stage_id"), "left")
       .na.fill(0L, Seq("early_start")) // independent stages start at day 0

@@ -12,6 +12,12 @@ import graft.functions.{TextFunctions => TF}
   */
 object Retrieval {
 
+  /** BM25's term-frequency saturation `k1` and length normalization `b`
+    * (the Lucene defaults), shared by [[bm25]] and the indexed scorers in
+    * [[TokenIndex]], whose scores must equal the one-shot operator's. */
+  val Bm25K1 = 1.2
+  val Bm25B = 0.75
+
   /** Per-document BM25 (Robertson/Spärck Jones, the +1 idf smoothing of
     * Lucene) of a literal bag of query terms: for each doc containing at
     * least one term,
@@ -19,7 +25,8 @@ object Retrieval {
     *   score = Σ_t ln(1 + (N - df_t + ½)/(df_t + ½)) ·
     *           tf_td·(k1+1) / (tf_td + k1·(1 − b + b·dl_d/avgdl))
     *
-    * Returns (idCol, bm25, n_terms) — callers top-k or threshold it.
+    * with k1 = [[Bm25K1]] and b = [[Bm25B]]. Returns (idCol, bm25,
+    * n_terms) — callers top-k or threshold it.
     *
     * Shape at 100 TB: the corpus is scanned twice, both embarrassingly
     * parallel — once for the single-row (N, avgdl) aggregate (map-side
@@ -32,7 +39,7 @@ object Retrieval {
     * no join ever shuffles document text.
     */
   def bm25(docs: DataFrame, idCol: String, textCol: String,
-      terms: Seq[String], k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+      terms: Seq[String]): DataFrame = {
     require(terms.nonEmpty, "query terms must be non-empty")
     val toks = docs.select(col(idCol), TF.tokens(col(textCol)).as("toks"))
       .select(col(idCol), size(col("toks")).cast("long").as("dl"), col("toks"))
@@ -45,11 +52,14 @@ object Retrieval {
     val df = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     tf.join(broadcast(df), "tok")
       .crossJoin(broadcast(stats))
-      .withColumn("contrib",
-        log(lit(1.0) + (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5)) *
-          (col("tf") * (k1 + 1)) /
-          (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / col("avgdl"))))
+      .withColumn("contrib", contrib)
       .groupBy(col(idCol))
       .agg(sum(col("contrib")).as("bm25"), count(lit(1)).as("n_terms"))
   }
+
+  /** One term's BM25 contribution over (n_docs, df, tf, dl, avgdl) columns. */
+  private[operators] def contrib: org.apache.spark.sql.Column =
+    log(lit(1.0) + (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5)) *
+      (col("tf") * (Bm25K1 + 1)) /
+      (col("tf") + lit(Bm25K1) * (lit(1 - Bm25B) + lit(Bm25B) * col("dl") / col("avgdl")))
 }

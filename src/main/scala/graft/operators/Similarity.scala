@@ -15,6 +15,14 @@ import graft.functions.VectorFunctions
   */
 object Similarity {
 
+  /** Base seed of [[lshCosineTopK]]'s random hyperplanes. */
+  val LshSeed = 42L
+  /** [[kmeansCentroids]] stops early once no centroid moves more than this. */
+  val KmeansTol = 1e-6
+  /** [[pqCodebooks]]' Lloyd rounds per subspace and training-sample size. */
+  val PqMaxIter = 10
+  val PqTrainRows: Int = 1 << 14
+
   /** Rank a scored candidate set down to k per query: the custom TopK
     * operator bounds each input partition to k rows per query BEFORE the
     * exchange (TopKPartialExec), so the shuffle moves ≤ k·|queries| rows
@@ -66,7 +74,8 @@ object Similarity {
     * Candidates are exactly re-ranked by true cosine.
     *
     * Recall/cost dial: more tables → higher recall & more candidates;
-    * more bits → smaller buckets. The corpus-side signature computation is
+    * more bits → smaller buckets. Table t's hyperplanes are seeded with
+    * [[LshSeed]] + 1000·t. The corpus-side signature computation is
     * a codegen projection; the candidate join is an equi-join on
     * (table, signature) — the corpus never cross-joins the queries.
     */
@@ -80,14 +89,13 @@ object Similarity {
       k: Int,
       dim: Int,
       tables: Int = 8,
-      bitsPerTable: Int = 12,
-      seed: Long = 42L): DataFrame = {
+      bitsPerTable: Int = 12): DataFrame = {
     def withSigs(df: DataFrame, id: String, emb: String, idOut: String, embOut: String) =
       df.select(
         col(id).as(idOut), col(emb).as(embOut),
         explode(array((0 until tables).map(t =>
           struct(lit(t).as("table"),
-            VectorFunctions.hyperplaneSignature(col(emb), dim, bitsPerTable, seed + 1000L * t)
+            VectorFunctions.hyperplaneSignature(col(emb), dim, bitsPerTable, LshSeed + 1000L * t)
               .as("sig"))): _*)).as("ts"))
         .select(col(idOut), col(embOut), col("ts.table"), col("ts.sig"))
 
@@ -356,7 +364,6 @@ object Similarity {
       embCol: String,
       k: Int,
       maxIter: Int = 8,
-      tol: Double = 1e-6,
       maxTrainRows: Int = 1 << 21): Array[Array[Double]] = {
     require(k > 0, "k must be positive")
     require(maxTrainRows >= k, "maxTrainRows must be at least k")
@@ -404,7 +411,7 @@ object Similarity {
       var cents = chosen.toArray
       var iter = 0
       var shift = Double.MaxValue
-      while (iter < maxIter && shift > tol) {
+      while (iter < maxIter && shift > KmeansTol) {
         val stats = normed
           .select(assignCluster(Some(spark), col("__e"),
             cents.map(_.toSeq).toSeq).as("__c"), col("__e"))
@@ -454,18 +461,18 @@ object Similarity {
     * PQ table. Null → raw-vector training (standalone PQ compression).
     *
     * Training is DRIVER-side by design, like the xlsx writer and the
-    * BPE merge loop: the training set is bounded (`maxTrainRows`,
-    * default 16k — Faiss trains PQ on samples of this order at any
+    * BPE merge loop: the training set is bounded ([[PqTrainRows]],
+    * 16k — Faiss trains PQ on samples of this order at any
     * corpus size), each subspace's Lloyd loop is embarrassingly
     * independent (run on parallel Futures), and a distributed version
-    * would pay m·maxIter job overheads to move less work than one
+    * would pay m·[[PqMaxIter]] job overheads to move less work than one
     * shuffle. The model is m·ncodes·(dim/m) doubles = ncodes·dim —
     * identical to the IVF centroid table's footprint, broadcast-sized.
     *
     * Determinism: the sample is hash-cut and hash-ORDERED (same
     * contract as [[kmeansCentroids]]'s pool), seeds are greedy
     * farthest-point over a 4·ncodes pool, ties and empty clusters keep
-    * previous state — a (corpus, m, ncodes, maxIter) tuple always
+    * previous state — a (corpus, m, ncodes) tuple always
     * yields bit-identical codebooks, so re-building an index never
     * silently re-codes postings differently.
     */
@@ -475,14 +482,12 @@ object Similarity {
       embCol: String,
       m: Int,
       ncodes: Int = 256,
-      maxIter: Int = 10,
-      maxTrainRows: Int = 1 << 14,
       residualOf: Array[Array[Double]] = null): Array[Array[Array[Double]]] = {
     require(m > 0, "m must be positive")
     require(ncodes > 0 && ncodes <= Short.MaxValue, "ncodes must fit short codes")
     val spark = df.sparkSession
     import spark.implicits._
-    val normedSample = trainingSample(df, idCol, embCol, maxTrainRows)
+    val normedSample = trainingSample(df, idCol, embCol, PqTrainRows)
       .orderBy(col("__h")).select(col("__e")).as[Seq[Double]]
       .collect().map(_.toArray)
     require(normedSample.nonEmpty, "pqCodebooks: empty input")
@@ -554,7 +559,7 @@ object Similarity {
         val cents = chosen.toArray.map(_.clone())
         var iter = 0
         val assign = new Array[Int](pts.length)
-        while (iter < maxIter) {
+        while (iter < PqMaxIter) {
           var i = 0
           while (i < pts.length) {
             var best = 0; var bd = sq(pts(i), cents(0)); var c = 1

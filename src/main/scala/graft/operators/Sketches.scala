@@ -262,11 +262,11 @@ object Sketches {
       .agg(hll_union_agg(col("hll_state"), lit(false)).as("hll_state"))
   }
 
-  /** Read the estimate off a state table (adds `alias`; state column
-    * retained so the frame can keep accumulating).
+  /** Read the estimate off a state table (adds `distinct_est`; state
+    * column retained so the frame can keep accumulating).
     */
-  def hllEstimate(state: DataFrame, alias: String = "distinct_est"): DataFrame =
-    state.withColumn(alias, hll_sketch_estimate(col("hll_state")))
+  def hllEstimate(state: DataFrame): DataFrame =
+    state.withColumn("distinct_est", hll_sketch_estimate(col("hll_state")))
 
   /** Merge-read an APPEND-ONLY HLL state directory (the layout
     * [[graft.streaming.StreamOps.hllDistinctStream]] maintains: one
@@ -543,7 +543,7 @@ object Sketches {
   // (latencies, scores, losses) with no integer-bucket contract. Per
   // run, per key, one serialized KLL sketch row (~O(k·log(n/k)) bytes
   // at any stream length); merged reads answer any quantile with
-  // normalized rank error ≈ 1.33% at the default k = 200 — actual
+  // normalized rank error ≈ 1.33% at k = KllK = 200 — actual
   // retained stream values, not interpolations. Like the HLL member
   // (and unlike the exact histogram), reads are error-BOUNDED, not
   // bit-deterministic: KLL compaction is update/merge-order-sensitive,
@@ -557,11 +557,13 @@ object Sketches {
   // BOTH would double-count the batch. getN over the kept
   // representatives is exact and deterministic.
 
+  /** The KLL accuracy parameter every state writer sketches with. */
+  val KllK = 200
+
   /** Sketch one batch into per-key KLL state: (keys..., kll_state).
     * NULL/NaN values are excluded (a NaN poisons every quantile). */
-  def kllDeltaState(df: DataFrame, keyCols: Seq[String], valueCol: Column,
-      k: Int = 200): DataFrame = {
-    val agg = udaf(graft.functions.Aggregators.KllDoubles(k))
+  def kllDeltaState(df: DataFrame, keyCols: Seq[String], valueCol: Column): DataFrame = {
+    val agg = udaf(graft.functions.Aggregators.KllDoubles(KllK))
     df.where(valueCol.isNotNull && !isnan(valueCol))
       .groupBy(keyCols.map(col): _*)
       .agg(agg(valueCol.cast("double")).as("kll_state"))
@@ -589,7 +591,7 @@ object Sketches {
     * data-sized ones.
     */
   def kllStateQuantiles(states: DataFrame, keyCols: Seq[String],
-      qs: Seq[Double], k: Int = 200): DataFrame = {
+      qs: Seq[Double], k: Int = KllK): DataFrame = {
     require(qs.nonEmpty && qs.forall(q => q >= 0 && q <= 1),
       s"kllStateQuantiles: quantiles must be in [0, 1], got $qs")
     val q1 = udf((bytes: Array[Byte], q: Double) => {
@@ -623,7 +625,7 @@ object Sketches {
     * contract). Same quiesced single-writer rules.
     */
   def compactKllState(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String, keyCols: Seq[String], k: Int = 200): (Long, Long) =
+      stateDir: String, keyCols: Seq[String]): (Long, Long) =
     graft.sources.Compaction.rewriteParquetDir(spark, stateDir)(
-      df => kllStateMerged(df, keyCols, k).withColumn("run_id", lit(-1L)))
+      df => kllStateMerged(df, keyCols, KllK).withColumn("run_id", lit(-1L)))
 }

@@ -113,6 +113,9 @@ object TokenIndex {
     // ONE lease across both steps (withLease is reentrant), so no other
     // writer can interleave between the delete and the append
     graft.sources.Lease.withLease(batch.sparkSession, indexDir) {
+      // append's metadata check runs BEFORE the delete: a refused upsert
+      // must leave its ids live, not tombstoned with no new rows
+      IndexStore.requireMetaSet(batch, metaCols, postingsDir(indexDir), ReservedPostingCols)
       delete(batch.select(col(idCol)), idCol, indexDir, asofRun = runId - 1)
       append(batch, idCol, textCol, indexDir, runId, metaCols)
     }
@@ -341,9 +344,8 @@ object TokenIndex {
     * token-less docs the one-shot would count. Scores are otherwise
     * identical (parity spec-pinned).
     */
-  def bm25Indexed(spark: SparkSession, indexDir: String, terms: Seq[String],
-      k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    bm25Impl(spark, indexDir, terms, k1, b, allowed = None)
+  def bm25Indexed(spark: SparkSession, indexDir: String, terms: Seq[String]): DataFrame =
+    bm25Impl(spark, indexDir, terms, allowed = None)
 
   /** [[bm25Indexed]] under a metadata predicate — the token-retrieval
     * sibling of [[VectorIndex.queryTopKFiltered]]: only documents whose
@@ -358,9 +360,8 @@ object TokenIndex {
     * allowed matches — the same bug class the filtered ANN pin covers.
     */
   def bm25IndexedFiltered(spark: SparkSession, indexDir: String,
-      terms: Seq[String], allowed: DataFrame, allowedIdCol: String,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    bm25Impl(spark, indexDir, terms, k1, b,
+      terms: Seq[String], allowed: DataFrame, allowedIdCol: String): DataFrame =
+    bm25Impl(spark, indexDir, terms,
       allowed = Some(allowed.select(col(allowedIdCol).as("corpus_id"))))
 
   /** Column-predicate twin of [[bm25IndexedFiltered]] (round 18 — the
@@ -373,13 +374,12 @@ object TokenIndex {
     * a doc the filter excludes shapes neither the results nor the idf.
     */
   def bm25IndexedFiltered(spark: SparkSession, indexDir: String,
-      terms: Seq[String], predicate: org.apache.spark.sql.Column,
-      k1: Double, b: Double): DataFrame =
-    bm25Impl(spark, indexDir, terms, k1, b, allowed = None,
+      terms: Seq[String], predicate: org.apache.spark.sql.Column): DataFrame =
+    bm25Impl(spark, indexDir, terms, allowed = None,
       metaPredicate = Some(predicate))
 
   private def bm25Impl(spark: SparkSession, indexDir: String,
-      terms: Seq[String], k1: Double, b: Double,
+      terms: Seq[String],
       allowed: Option[DataFrame],
       metaPredicate: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     require(terms.nonEmpty, "query terms must be non-empty")
@@ -413,10 +413,7 @@ object TokenIndex {
     val df = p.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     p.join(broadcast(df), "tok")
       .crossJoin(broadcast(st))
-      .withColumn("contrib",
-        log(lit(1.0) + (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5)) *
-          (col("tf") * (k1 + 1)) /
-          (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / col("avgdl"))))
+      .withColumn("contrib", Retrieval.contrib)
       .groupBy(col("corpus_id"))
       .agg(sum(col("contrib")).as("bm25"), count(lit(1)).as("n_terms"))
   }

@@ -427,6 +427,9 @@ object VectorIndex {
     // ONE lease across both steps (withLease is reentrant), so no other
     // writer can interleave between the delete and the append
     graft.sources.Lease.withLease(batch.sparkSession, indexDir) {
+      // append's metadata check runs BEFORE the delete: a refused upsert
+      // must leave its ids live, not tombstoned with no new rows
+      IndexStore.requireMetaSet(batch, metaCols, postingsDir(indexDir), ReservedPostingCols)
       delete(batch.select(col(idCol)), idCol, indexDir, asofRun = runId - 1)
       append(batch, idCol, embCol, indexDir, runId, metaCols)
     }

@@ -23,23 +23,30 @@ import graft.sources.ParquetRead
   */
 object CorpusPipeline {
 
+  /** Upper bound of the quality gate's token count. */
+  val MaxTokens = 100000
+  /** Stopword profiles of the language annotation; the argmax breaks
+    * ties towards the earlier profile. */
+  val LangProfiles: Seq[(String, Seq[String])] = Seq(
+    "en" -> Seq("the", "a", "of"),
+    "fr" -> Seq("le", "la", "et"),
+    "de" -> Seq("der", "und", "das"),
+    "es" -> Seq("el", "los", "de"))
+  /** Predicted languages the quality gate keeps. */
+  val KeepLangs: Set[String] = LangProfiles.map(_._1).toSet
+  /** MinHash geometry of near-dup, within a batch and against the
+    * signature store: 3-word shingles, 32 hashes in 4 bands × 8 rows —
+    * a steep S-curve sized for the high threshold, so moderate-similarity
+    * pairs rarely collide and the candidate join stays small on
+    * near-dup-light corpora. */
+  val NearDupShingleSize = 3
+  val NearDupNumHashes = 32
+  val NearDupBands = 4
+
   final case class Config(
       minTokens: Int = 10,
-      maxTokens: Int = 100000,
       minTypeTokenRatio: Double = 0.1,
-      langProfiles: Seq[(String, Seq[String])] = Seq(
-        "en" -> Seq("the", "a", "of"),
-        "fr" -> Seq("le", "la", "et"),
-        "de" -> Seq("der", "und", "das"),
-        "es" -> Seq("el", "los", "de")),
-      keepLangs: Set[String] = Set("en", "fr", "de", "es"),
-      nearDupShingleSize: Int = 3,
       nearDupThreshold: Double = 0.9,
-      nearDupNumHashes: Int = 32,
-      nearDupBands: Int = 4, // 4 bands × 8 rows: steep S-curve sized for
-                             // the high threshold — moderate-similarity
-                             // pairs rarely collide, so the candidate
-                             // join stays small on near-dup-light corpora
       nearDupClusterCanonical: Boolean = false,
         // false: pair-local dropping (remove every id_b) — one anti-join,
         //        no iteration; the cheap default.
@@ -83,9 +90,9 @@ object CorpusPipeline {
     // ONE native multi-needle scan over each document for every profile
     // word (graft_count_all), materialized, then per-language sums — the
     // regex idiom this replaces ran one regex pass per word (12 scans/doc)
-    val allWords = cfg.langProfiles.flatMap(_._2)
-    val offsets = cfg.langProfiles.scanLeft(0)(_ + _._2.size)
-    val scored = cfg.langProfiles.zipWithIndex.foldLeft(
+    val allWords = LangProfiles.flatMap(_._2)
+    val offsets = LangProfiles.scanLeft(0)(_ + _._2.size)
+    val scored = LangProfiles.zipWithIndex.foldLeft(
       docs
         .withColumn("__toks", TF.tokens(col(textCol)))
         .withColumn("n_tokens", size(col("__toks")))
@@ -96,23 +103,23 @@ object CorpusPipeline {
           words.indices.map(j => element_at(col("__wc"), offsets(i) + j + 1)).reduce(_ + _))
     }
     // argmax over the materialized score columns, first-wins on ties
-    val predicted = cfg.langProfiles.zipWithIndex.foldRight(
-      lit(cfg.langProfiles.last._1)) { case (((lang, _), i), elseCol) =>
+    val predicted = LangProfiles.zipWithIndex.foldRight(
+      lit(LangProfiles.last._1)) { case (((lang, _), i), elseCol) =>
       val s = col(s"__score_$i")
-      val beatsAllLater = (i + 1 until cfg.langProfiles.size)
+      val beatsAllLater = (i + 1 until LangProfiles.size)
         .map(j => s >= col(s"__score_$j")).foldLeft(lit(true))(_ && _)
       when(beatsAllLater, lit(lang)).otherwise(elseCol)
     }
     scored.withColumn("predicted_lang", predicted)
-      .drop("__wc" +: cfg.langProfiles.indices.map(i => s"__score_$i"): _*)
+      .drop("__wc" +: LangProfiles.indices.map(i => s"__score_$i"): _*)
   }
 
   /** Quality + language gate. */
   def qualityFilter(annotated: DataFrame, cfg: Config): DataFrame =
     annotated.filter(
-      col("n_tokens").between(cfg.minTokens, cfg.maxTokens) &&
+      col("n_tokens").between(cfg.minTokens, MaxTokens) &&
         col("ttr") >= cfg.minTypeTokenRatio &&
-        col("predicted_lang").isInCollection(cfg.keepLangs))
+        col("predicted_lang").isInCollection(KeepLangs))
 
   /** Exact dedup (keep lowest id per content hash), then drop near-dups:
     * from every MinHash-LSH verified pair, the higher id is removed.
@@ -131,8 +138,8 @@ object CorpusPipeline {
     val exact = if (cfg.snapshotGate) exact0.localCheckpoint() else exact0
     val nearPairs = Dedup.minHashNearDuplicates(
       exact, idCol, textCol,
-      shingleSize = cfg.nearDupShingleSize, numHashes = cfg.nearDupNumHashes,
-      bands = cfg.nearDupBands, threshold = cfg.nearDupThreshold)
+      shingleSize = NearDupShingleSize, numHashes = NearDupNumHashes,
+      bands = NearDupBands, threshold = cfg.nearDupThreshold)
     if (cfg.nearDupClusterCanonical)
       Dedup.keepOnePerCluster(exact, idCol, nearPairs)
     else {
@@ -217,39 +224,21 @@ object CorpusPipeline {
 
   /** One incremental curation run — the production mode at corpus scale:
     * anti-join the ingest against the processed-id state
-    * ([[graft.operators.Incremental.newRows]]), curate ONLY the new documents,
-    * append their ids to state, and return the newly curated rows.
-    * Re-running on unchanged input is a no-op (the reference pipeline's
-    * core invariant, applied to the corpus pipeline).
+    * ([[graft.operators.Incremental.newRows]]) and curate ONLY the new
+    * documents. Re-running on unchanged input is a no-op once committed
+    * (the reference pipeline's core invariant, applied to the corpus
+    * pipeline).
     *
     * Note the dedup boundary: exact/near-dup runs WITHIN each delta
     * (cross-delta exact dedup is the caller's choice — e.g. make the
     * content fingerprint part of the state key to also skip re-ingested
     * bytes).
-    */
-  def curateIncremental(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      stateDir: String,
-      cfg: Config = Config()): DataFrame = {
-    val (curated, commit) =
-      curateIncrementalStaged(docs, idCol, textCol, stateDir, cfg)
-    commit()
-    curated
-  }
-
-  /** Two-phase form of [[curateIncremental]] — the EXACTLY-ONCE-capable
-    * contract: returns the curated delta plus a `commit` thunk that
-    * appends the seen-id state. The caller durably writes the curated
-    * rows FIRST, then calls `commit()`. A crash before commit re-curates
-    * the batch next run (at-LEAST-once — pair with this repo's
-    * idempotent sinks and the rerun is a no-op); the one-shot overload
-    * commits immediately on return, which is convenient for tests and
-    * fire-and-forget loops but is at-MOST-once with respect to the
-    * caller's durable write: a failure between the call and the write
-    * permanently skips those documents (state says seen, output was
-    * never written).
+    *
+    * Two-phase, EXACTLY-ONCE-capable contract: returns the curated delta
+    * plus a `commit` thunk that appends the seen-id state. The caller
+    * durably writes the curated rows FIRST, then calls `commit()`. A
+    * crash before commit re-curates the batch next run (at-LEAST-once —
+    * pair with this repo's idempotent sinks and the rerun is a no-op).
     *
     * The fresh delta (ingest scan + state anti-join) is snapshotted
     * eagerly ONCE; both the curated output and the state append derive
@@ -273,7 +262,7 @@ object CorpusPipeline {
     (curated, () => graft.operators.Incremental.appendState(fresh, Seq(idCol), stateDir))
   }
 
-  /** [[curateIncremental]] plus CROSS-DELTA near-dup — the full
+  /** [[curateIncrementalStaged]] plus CROSS-DELTA near-dup — the full
     * production loop: each delta is curated, then deduplicated against
     * the MinHash signature store of everything previously KEPT
     * ([[graft.operators.Dedup.minHashNearDuplicatesVsState]]), and the
@@ -287,25 +276,12 @@ object CorpusPipeline {
     * The near-dup decision uses the signature-agreement ESTIMATE at
     * `cfg.nearDupThreshold` (O(1/√k) error — the state-store trade;
     * within-delta dedup stays exact).
-    */
-  def curateIncrementalNearDup(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      stateDir: String,
-      sigStateDir: String,
-      cfg: Config = Config()): DataFrame = {
-    val (kept, commit) = curateIncrementalNearDupStaged(
-      docs, idCol, textCol, stateDir, sigStateDir, cfg)
-    commit()
-    kept
-  }
-
-  /** Two-phase form of [[curateIncrementalNearDup]] — same contract as
-    * [[curateIncrementalStaged]]: write the kept rows durably, THEN call
-    * `commit()`, which appends BOTH stores (seen-id state and the MinHash
-    * signature store) — a crash before commit re-processes the batch
-    * (at-least-once) instead of silently losing it.
+    *
+    * Same two-phase contract as [[curateIncrementalStaged]]: write the
+    * kept rows durably, THEN call `commit()`, which appends BOTH stores
+    * (seen-id state and the MinHash signature store) — a crash before
+    * commit re-processes the batch (at-least-once) instead of silently
+    * losing it.
     */
   def curateIncrementalNearDupStaged(
       docs: DataFrame,
@@ -339,7 +315,7 @@ object CorpusPipeline {
         val sigs = ParquetRead(spark, sigStateDir, sigFiles, merge = false)
         val (k, _) = snapshotTracked(
           Dedup.minHashNearDuplicatesVsState(curated, idCol, textCol, sigs,
-            cfg.nearDupShingleSize, cfg.nearDupNumHashes, cfg.nearDupBands,
+            NearDupShingleSize, NearDupNumHashes, NearDupBands,
             cfg.nearDupThreshold)
             .filter(col("dup_of").isNull)
             .drop("dup_of", "est_jaccard"))
@@ -356,7 +332,7 @@ object CorpusPipeline {
     val commit = () => {
       commitState()
       Dedup.minHashSignatures(kept, idCol, textCol,
-        cfg.nearDupShingleSize, cfg.nearDupNumHashes)
+        NearDupShingleSize, NearDupNumHashes)
         .write.mode("append").parquet(sigStateDir)
     }
     (kept, commit)
@@ -382,7 +358,7 @@ object CorpusPipeline {
     curated.write.mode("overwrite").partitionBy("predicted_lang").parquet(outDir)
 
   /** Deterministic stratified sampling: keep each row iff a uniform hash
-    * of (id, seed) falls under its stratum's fraction. Hash-based rather
+    * of (id, seed 42) falls under its stratum's fraction. Hash-based rather
     * than `sampleBy`'s RNG-per-partition so the SAME rows are selected
     * regardless of partitioning, cluster size, or re-runs — the property
     * that makes a 100 TB corpus sample reproducible and incrementally
@@ -390,11 +366,11 @@ object CorpusPipeline {
     * Strata absent from `fractions` default to 0.0 (dropped).
     */
   def stratifiedSample(df: DataFrame, idCol: String, stratumCol: String,
-      fractions: Map[String, Double], seed: Long = 42L): DataFrame = {
+      fractions: Map[String, Double]): DataFrame = {
     require(fractions.values.forall(f => f >= 0.0 && f <= 1.0), "fractions in [0,1]")
     // xxhash64 → [0,1): shift to 53-bit non-negative mantissa range so the
     // double division is exact and uniform
-    val u = (shiftrightunsigned(xxhash64(col(idCol), lit(seed)), 11).cast("double")
+    val u = (shiftrightunsigned(xxhash64(col(idCol), lit(42L)), 11).cast("double")
       / lit((1L << 53).toDouble))
     val frac = fractions.foldLeft(lit(0.0)) { case (acc, (k, f)) =>
       when(col(stratumCol) === k, lit(f)).otherwise(acc)
@@ -540,8 +516,8 @@ object CorpusPipeline {
   }
 
   /** Deterministic uniform sample of `k` rows per stratum (the "give me
-    * 500 random docs per language for eval" op): rank by a salted sha-256
-    * of the id — uniform AND reproducible (partition-count- and
+    * 500 random docs per language for eval" op): rank by the sha-256 of
+    * the id salted with "sample" — uniform AND reproducible (partition-count- and
     * rerun-invariant, the [[deterministicSplit]] property) — and keep the
     * k smallest per stratum through the native TopK operator
     * ([[graft.operators.Relational.topKPerGroupNative]]), whose
@@ -550,9 +526,9 @@ object CorpusPipeline {
     * the corpus, where a window row_number would shuffle everything.
     */
   def samplePerStratum(df: DataFrame, idCol: String, stratumCol: String,
-      k: Int, salt: String = "sample"): DataFrame =
+      k: Int): DataFrame =
     graft.operators.Relational.topKPerGroupNative(
-      df.withColumn("__h", sha2(concat(col(idCol).cast("string"), lit(salt)), 256)),
+      df.withColumn("__h", sha2(concat(col(idCol).cast("string"), lit("sample")), 256)),
       Seq(col(stratumCol)),
       Seq(col("__h").asc, col(idCol).asc), k)
       .drop("__h")
@@ -561,8 +537,8 @@ object CorpusPipeline {
     * `slot` such that ordering by it cycles round-robin across strata
     * (source, language, …) — the training-order shaping step that stops a
     * data loader from seeing an hour of one crawl followed by an hour of
-    * another. Within each stratum, rows are ranked by a salted sha-256 of
-    * the id (deterministic shuffle: partition-count- and rerun-invariant,
+    * another. Within each stratum, rows are ranked by the sha-256 of the
+    * id salted with "mix" (deterministic shuffle: partition-count- and rerun-invariant,
     * same property as [[deterministicSplit]]); the global slot is then
     * pure per-row arithmetic, `(rank-1) * n_strata + stratum_index` —
     * unique by construction, NO global sort or single-partition window
@@ -573,8 +549,7 @@ object CorpusPipeline {
     * gaps preserve the cycling property and order-by-slot is all a
     * writer needs.
     */
-  def roundRobinInterleave(df: DataFrame, idCol: String, stratumCol: String,
-      salt: String = "mix"): DataFrame = {
+  def roundRobinInterleave(df: DataFrame, idCol: String, stratumCol: String): DataFrame = {
     val strata = df.select(col(stratumCol)).distinct()
     // single-partition window over the DISTINCT strata only — a handful
     // of rows however large the corpus
@@ -585,7 +560,7 @@ object CorpusPipeline {
         Window.partitionBy(lit(1))).cast("long"))
     val rankW = Window.partitionBy(col(stratumCol))
       .orderBy(col("__h"), col(idCol))
-    df.withColumn("__h", sha2(concat(col(idCol).cast("string"), lit(salt)), 256))
+    df.withColumn("__h", sha2(concat(col(idCol).cast("string"), lit("mix")), 256))
       .withColumn("rank_in_stratum", row_number().over(rankW).cast("long"))
       .join(broadcast(idx), Seq(stratumCol))
       .withColumn("slot",
@@ -667,8 +642,8 @@ object CorpusPipeline {
     * (source, language, quality band, …) keep the hash-ordered prefix of
     * documents whose cumulative token count fits `budgetPerStratum` — the
     * deterministic form of "take N tokens per source". Selection order is
-    * sha-256 of (id, salt), so the sample is a pure function of the
-    * corpus snapshot + salt: any engine reproduces it row-for-row, and
+    * sha-256 of (id, "graft"), so the sample is a pure function of the
+    * corpus snapshot: any engine reproduces it row-for-row, and
     * re-partitioning or re-running cannot swap rows. Token accounting is
     * INTEGER end-to-end (cumulative sum of token counts), no float
     * fractions. A document whose tokens alone exceed the budget is never
@@ -679,8 +654,8 @@ object CorpusPipeline {
     * exchange any per-stratum quota needs; no joins, no second pass.
     */
   def sampleToTokenBudget(df: DataFrame, idCol: String, stratumCol: String,
-      tokensCol: String, budgetPerStratum: Long, salt: String = "graft"): DataFrame = {
-    val h = conv(substring(sha2(concat(col(idCol).cast("string"), lit(salt)), 256), 1, 8),
+      tokensCol: String, budgetPerStratum: Long): DataFrame = {
+    val h = conv(substring(sha2(concat(col(idCol).cast("string"), lit("graft")), 256), 1, 8),
       16, 10).cast("long")
     val w = Window.partitionBy(col(stratumCol)).orderBy(h.asc, col(idCol).asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -740,13 +715,14 @@ object CorpusPipeline {
     * document text never shuffles (the split is a projection over the
     * joined key).
     *
-    * Returns `df` + (`split_key`, `split`).
+    * `pairs` carries the family's `(id_a, id_b)` columns. Returns `df` +
+    * (`split_key`, `split`).
     */
   def leakageSafeSplit(df: DataFrame, idCol: String, pairs: DataFrame,
       salt: String,
-      splits: Seq[(String, Double)] = Seq("train" -> 0.98, "val" -> 0.01, "test" -> 0.01),
-      idACol: String = "id_a", idBCol: String = "id_b"): DataFrame = {
-    val clusters = graft.operators.Dedup.nearDupClusters(pairs, idACol, idBCol)
+      splits: Seq[(String, Double)] = Seq("train" -> 0.98, "val" -> 0.01, "test" -> 0.01)
+      ): DataFrame = {
+    val clusters = graft.operators.Dedup.nearDupClusters(pairs)
       .select(col("id").as("__lss_id"), col("cluster_id").as("__lss_rep"))
     val keyed = df.join(clusters, col(idCol) === col("__lss_id"), "left")
       .withColumn("split_key", coalesce(col("__lss_rep"), col(idCol)))

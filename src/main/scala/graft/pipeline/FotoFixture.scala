@@ -116,11 +116,12 @@ object FotoFixture {
 
   /** SURVEY §5.2 golden contract over a pipeline run's output: every
     * image re-decodes, its dims equal the reference's truncation
-    * arithmetic replayed from the id (scale = 1024/max(w,h) only when
-    * < 1; `int()` truncation), and the metadata size matches the
-    * stored payload. Returns the number of VIOLATING rows (0 = green)
+    * arithmetic replayed from the id (scale = maxDim/max(w,h) only when
+    * < 1, maxDim = [[ImageOps.DefaultMaxDim]]; `int()` truncation), and
+    * the metadata size matches the stored payload. Returns the number of VIOLATING rows (0 = green)
     * and the row count checked. */
-  def checkGolden(spark: SparkSession, outDir: String, maxDim: Int = 1024): (Long, Long) = {
+  def checkGolden(spark: SparkSession, outDir: String): (Long, Long) = {
+    val maxDim = ImageOps.DefaultMaxDim
     val outDims = udf((bytes: Array[Byte]) =>
       ImageOps.decodeDims(bytes).map { case (w, h) => Array(w, h) }.orNull)
     val imgs = ParquetRead(spark, s"$outDir/images")

@@ -65,11 +65,11 @@ object FotoPipeline {
   }
 
   /** Image stage + metadata projection: the reference's 6-column output
-    * record (`test.py:186-193`) with the compressed payload alongside.
+    * record (`test.py:186-193`) with the compressed payload alongside,
+    * compressed at [[ImageOps.DefaultMaxDim]] and [[ImageOps.DefaultQuality]].
     */
-  def processImages(work: DataFrame, contentCol: String,
-      maxDim: Int = ImageOps.DefaultMaxDim, quality: Float = ImageOps.DefaultQuality): DataFrame = {
-    val processed = ImageOps.withImageColumns(work, contentCol, maxDim, quality)
+  def processImages(work: DataFrame, contentCol: String): DataFrame = {
+    val processed = ImageOps.withImageColumns(work, contentCol)
     processed.withColumn("size_gambar_kb", ImageOps.sizeKb(col("compressed")))
       .withColumn("link_foto_out",
         concat_ws("/", col("kode_proyek"), col("minggu"), col("nama_file")))

@@ -11,15 +11,15 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   */
 object Bucketing {
 
-  /** Persist `df` as a bucketed (and optionally sorted) managed table. */
+  /** Persist `df` as a bucketed (and optionally sorted) managed table,
+    * replacing any table of that name. */
   def writeBucketed(
       df: DataFrame,
       table: String,
       bucketCols: Seq[String],
       numBuckets: Int,
-      sortCols: Seq[String] = Nil,
-      mode: SaveMode = SaveMode.Overwrite): Unit = {
-    val w = df.write.mode(mode).bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
+      sortCols: Seq[String] = Nil): Unit = {
+    val w = df.write.mode(SaveMode.Overwrite).bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
     val ws = if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w
     ws.saveAsTable(table)
   }

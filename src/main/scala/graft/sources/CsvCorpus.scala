@@ -22,18 +22,18 @@ import org.apache.spark.sql.types.StructType
   *     (`multiLine` stays off here: it forces whole-file parses and
   *     single-file parallelism; corpora with embedded newlines should
   *     re-export quoted-escaped or go through JSONL);
-  *   - header handling is the reader's, pinned by option — a header row
-  *     silently parsed as data is the classic one-off-per-file bug.
+  *   - every file has a header row, pinned by option on both sides — a
+  *     header row silently parsed as data is the classic
+  *     one-off-per-file bug.
   *
-  * TSV is the same reader with `delimiter = "\t"` — [[readTsv]] exists
-  * so call sites say what they read.
+  * TSV is the same reader with a tab delimiter — [[readTsv]] exists so
+  * call sites say what they read.
   */
 object CsvCorpus {
 
-  private def base(spark: SparkSession, schema: StructType, header: Boolean,
-      delimiter: String) =
+  private def base(spark: SparkSession, schema: StructType, delimiter: String) =
     spark.read.schema(schema)
-      .option("header", header.toString)
+      .option("header", "true")
       .option("delimiter", delimiter)
       // explicit, locale-proof parsing defaults: empty string is null
       // (CSV has no other null spelling), standard quote/escape
@@ -43,8 +43,8 @@ object CsvCorpus {
 
   /** Read dropping malformed rows (the "loss accepted" mode). */
   def read(spark: SparkSession, path: String, schema: StructType,
-      header: Boolean = true, delimiter: String = ","): DataFrame =
-    base(spark, schema, header, delimiter)
+      delimiter: String = ","): DataFrame =
+    base(spark, schema, delimiter)
       .option("mode", "DROPMALFORMED").csv(path)
 
   /** Read keeping malformed rows: well-formed rows parse into `schema`'s
@@ -52,29 +52,25 @@ object CsvCorpus {
     * — same quarantine shape (and the same persist-before-
     * corrupt-only-projection caveat) as [[JsonlCorpus.readWithCorrupt]].
     */
-  def readWithCorrupt(spark: SparkSession, path: String, schema: StructType,
-      header: Boolean = true, delimiter: String = ","): DataFrame =
-    base(spark, schema.add("_corrupt", org.apache.spark.sql.types.StringType),
-        header, delimiter)
+  def readWithCorrupt(spark: SparkSession, path: String, schema: StructType): DataFrame =
+    base(spark, schema.add("_corrupt", org.apache.spark.sql.types.StringType), ",")
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt")
       .csv(path)
 
   /** TSV dialect of [[read]]. */
-  def readTsv(spark: SparkSession, path: String, schema: StructType,
-      header: Boolean = true): DataFrame =
-    read(spark, path, schema, header, "\t")
+  def readTsv(spark: SparkSession, path: String, schema: StructType): DataFrame =
+    read(spark, path, schema, "\t")
 
   /** Write as CSV, one file per partition (same partition-count contract
     * as [[JsonlCorpus.write]]); always with a header so the files are
     * self-describing to the next reader.
     */
-  def write(df: DataFrame, path: String, partitions: Int = 0,
-      delimiter: String = ","): Unit = {
+  def write(df: DataFrame, path: String, partitions: Int = 0): Unit = {
     val out = if (partitions > 0) df.repartition(partitions) else df
     out.write.mode("overwrite")
       .option("header", "true")
-      .option("delimiter", delimiter)
+      .option("delimiter", ",")
       // SAME dialect as the readers — Spark's writer default escapes
       // quotes with backslash while the RFC-4180 style the readers pin
       // doubles them; splitting the dialect breaks the round-trip on

@@ -357,9 +357,10 @@ object Xlsx {
     * Numeric/boolean columns store as native cell types; everything else
     * (strings, dates, nulls) as inline strings — no sharedStrings part,
     * so output is one streamed pass, deterministic for a given row
-    * order. Pass a SORTED df for byte-stable output.
+    * order. Pass a SORTED df for byte-stable output. The one sheet is
+    * named `Sheet1`.
     */
-  def write(df: DataFrame, path: String, sheetName: String = "Sheet1"): Unit = {
+  def write(df: DataFrame, path: String): Unit = {
     val rows = df.limit(MaxDataRows + 1).collect()
     require(rows.length <= MaxDataRows,
       s"Xlsx.write: more than $MaxDataRows data rows — an xlsx is a report " +
@@ -389,7 +390,7 @@ object Xlsx {
       """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" +
         """<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" """ +
         """xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">""" +
-        s"""<sheets><sheet name="${escapeXml(sheetName)}" sheetId="1" r:id="rId1"/></sheets>""" +
+        s"""<sheets><sheet name="Sheet1" sheetId="1" r:id="rId1"/></sheets>""" +
         """</workbook>""")
     part("xl/_rels/workbook.xml.rels",
       """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" +

@@ -41,13 +41,14 @@ object StreamOps {
   /** Tumbling-window counts with a watermark: the streaming analog of
     * q19_hourly_events. Late rows beyond `watermark` are dropped and
     * window state is garbage-collected — bounded state at any scale.
+    * `sum_value` sums the events' `value` column.
     */
   def windowedCounts(events: DataFrame, tsCol: String, keyCol: String,
-      windowLen: String, watermark: String, valueCol: String = "value"): DataFrame =
+      windowLen: String, watermark: String): DataFrame =
     events
       .withWatermark(tsCol, watermark)
       .groupBy(window(col(tsCol), windowLen), col(keyCol))
-      .agg(count(lit(1)).as("n"), sum(col(valueCol)).as("sum_value"))
+      .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
       .select(col("window.start").as("wstart"), col(keyCol), col("n"), col("sum_value"))
 
   /** Incremental per-key DISTINCT accounting as an `AvailableNow`
@@ -201,11 +202,10 @@ object StreamOps {
       keyCols: Seq[String],
       valueExpr: String,
       stateDir: String,
-      checkpointDir: String,
-      k: Int = 200): StreamingQuery =
+      checkpointDir: String): StreamingQuery =
     appendStateStream(spark, inputDir, schema, stateDir, checkpointDir)(
       (batch, batchId) => graft.operators.Sketches
-        .kllDeltaState(batch, keyCols, expr(valueExpr), k)
+        .kllDeltaState(batch, keyCols, expr(valueExpr))
         .withColumn("run_id", lit(batchId)))
 
   /** Incremental KMV distinct accounting as an `AvailableNow` stream —
@@ -300,14 +300,12 @@ object StreamOps {
       idCol: String,
       bytesCol: String,
       stateDir: String,
-      checkpointDir: String,
-      orientationRobust: Boolean = false): StreamingQuery =
+      checkpointDir: String): StreamingQuery =
     appendStateStream(spark, inputDir, schema, stateDir, checkpointDir)(
-      // the signature dial must match the one every later probe of
-      // this state uses (Dedup.imageSignatures — dHash vs the
-      // dihedral-canonical form; the two never mix in one table)
+      // plain dHash rows: probe this state with the default
+      // (non-canonical) signature form, the two never mix in one table
       (batch, batchId) => graft.operators.Dedup
-        .imageSignatures(batch, idCol, bytesCol, orientationRobust)
+        .imageSignatures(batch, idCol, bytesCol)
         .withColumn("batch_id", lit(batchId + 1)))
 
   /** Incremental ORIENTED-VERIFIED image state ingest — the
@@ -353,18 +351,17 @@ object StreamOps {
       idCol: String,
       bytesCol: String,
       stateDir: String,
-      checkpointDir: String,
-      everyN: Int = 1): StreamingQuery =
+      checkpointDir: String): StreamingQuery =
     appendStateStream(spark, inputDir, schema, stateDir, checkpointDir)(
       (batch, batchId) => graft.operators.Dedup
-        .videoSignatures(batch, idCol, bytesCol, everyN)
+        .videoSignatures(batch, idCol, bytesCol)
         .withColumn("batch_id", lit(batchId + 1)))
 
   /** The audio sibling of [[videoSignatureStream]]: per-window
     * fingerprint rows (`Dedup.audioSignatures`, static-spectrum
-    * degenerates excluded) streamed into the vs-state table. The
-    * window/maxWindows dials must match the ones every later probe
-    * uses.
+    * degenerates excluded) streamed into the vs-state table, with the
+    * window geometry [[graft.operators.Dedup.audioNearDuplicatesVsState]]
+    * probes with (`Dedup.AudioWindow`, `AudioMaxWindows`, `AudioHop`).
     */
   def audioSignatureStream(
       spark: SparkSession,
@@ -373,13 +370,10 @@ object StreamOps {
       idCol: String,
       bytesCol: String,
       stateDir: String,
-      checkpointDir: String,
-      window: Int = 1024,
-      maxWindows: Int = 64,
-      hop: Int = 0): StreamingQuery =
+      checkpointDir: String): StreamingQuery =
     appendStateStream(spark, inputDir, schema, stateDir, checkpointDir)(
       (batch, batchId) => graft.operators.Dedup
-        .audioSignatures(batch, idCol, bytesCol, window, maxWindows, hop)
+        .audioSignatures(batch, idCol, bytesCol)
         .withColumn("batch_id", lit(batchId + 1)))
 
   /** Incremental VECTOR-INDEX ingest as an `AvailableNow` stream — the
@@ -497,6 +491,9 @@ object StreamOps {
         updates.withWatermark(upTs, watermark),
         expr(s"$evKey = $upKey AND $upTs >= $evTs - INTERVAL $lookback AND $upTs <= $evTs"))
 
+  /** False-positive rate of [[decontaminateStream]]'s Bloom filter. */
+  val BloomFpp = 1e-4
+
   /** Streaming benchmark-contamination guard: documents arrive as a
     * stream (the live crawl); the benchmark is STATIC, so its distinct
     * hashed n-grams are materialized ONCE at stream definition into a
@@ -505,15 +502,16 @@ object StreamOps {
     * state store, nothing watermark-dependent. Emits only the CLEAN
     * documents, so test-set leakage is dropped at ingest, before it ever
     * reaches the corpus store. Gram construction is bit-identical to the
-    * batch [[graft.operators.Dedup.flagContaminated]], so batch and
-    * streaming decide identically.
+    * batch [[graft.operators.Dedup.flagContaminated]] at its default
+    * n-gram length ([[graft.operators.Dedup.ContaminationGramN]]), so
+    * batch and streaming decide identically.
     *
     * The reference-set representation auto-selects on size: up to
     * `exactMaxGrams` distinct grams it is an exact SORTED PRIMITIVE
     * `long[]` probed by binary search (8 bytes per gram — a 2M-gram
     * eval suite is ~16 MB; a boxed `Set[Long]` would be ~48 B/entry —
     * and zero false positives); above that it switches to a Bloom
-    * filter (~2.4 bytes/gram at the default fpp), same shape, so a
+    * filter (~2.4 bytes/gram at [[BloomFpp]]), same shape, so a
     * corpus-sized reference set costs ~250 MB per executor instead of
     * ~16 GB. Bloom false positives only ever DROP a clean document
     * (never leak a contaminated one) — the safe direction for
@@ -524,9 +522,10 @@ object StreamOps {
     * fuses into whole-stage codegen exactly like the batch path.
     */
   def decontaminateStream(docs: DataFrame, idCol: String, textCol: String,
-      benchmark: DataFrame, benchTextCol: String, n: Int = 5,
-      exactMaxGrams: Long = 2000000L, bloomFpp: Double = 1e-4): DataFrame = {
+      benchmark: DataFrame, benchTextCol: String,
+      exactMaxGrams: Long = 2000000L): DataFrame = {
     import org.apache.spark.sql.GraftSqlBridge
+    val n = graft.operators.Dedup.ContaminationGramN
     val grams = benchmark
       .select(graft.functions.HashFunctions.hashedWordShingles(
         graft.functions.TextFunctions.tokens(col(benchTextCol)), n).as("__sh"))
@@ -543,7 +542,7 @@ object StreamOps {
           java.util.Arrays.sort(sorted)
           GraftSqlBridge.column(graft.plans.AnyHashInSortedSet(docGrams, sorted))
         } else {
-          val bloom = grams.stat.bloomFilter("__h", math.max(nGrams, 1L), bloomFpp)
+          val bloom = grams.stat.bloomFilter("__h", math.max(nGrams, 1L), BloomFpp)
           GraftSqlBridge.column(
             graft.plans.AnyHashInBloom(docGrams, graft.plans.BloomHolder(bloom)))
         }

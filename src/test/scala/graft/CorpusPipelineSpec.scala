@@ -187,18 +187,24 @@ class CorpusPipelineSpec extends SparkSpec {
     val stateDir = Files.createTempDirectory("curstate").toString + "/state"
     val base = (1 to 30).map(i => s"tok$i the a of").mkString(" ")
     val docs = Seq((1L, base), (2L, "too short")).toDF("doc_id", "text")
-    val first = CorpusPipeline.curateIncremental(docs, "doc_id", "text", stateDir, cfg)
-      .select("doc_id").as[Long].collect().toSet
+    val (curated1, commit1) =
+      CorpusPipeline.curateIncrementalStaged(docs, "doc_id", "text", stateDir, cfg)
+    commit1()
+    val first = curated1.select("doc_id").as[Long].collect().toSet
     assert(first == Set(1L))
     // rerun on identical input: nothing new — including the REJECTED doc,
     // which must be remembered as seen, not re-curated forever
-    val second = CorpusPipeline.curateIncremental(docs, "doc_id", "text", stateDir, cfg)
+    val (second, commit2) =
+      CorpusPipeline.curateIncrementalStaged(docs, "doc_id", "text", stateDir, cfg)
+    commit2()
     assert(second.count() == 0)
     // a genuinely new doc flows through on a later run
     val more = docs.union(Seq((3L, (50 to 90).map(i => s"yy$i the").mkString(" ")))
       .toDF("doc_id", "text"))
-    val third = CorpusPipeline.curateIncremental(more, "doc_id", "text", stateDir, cfg)
-      .select("doc_id").as[Long].collect().toSet
+    val (curated3, commit3) =
+      CorpusPipeline.curateIncrementalStaged(more, "doc_id", "text", stateDir, cfg)
+    commit3()
+    val third = curated3.select("doc_id").as[Long].collect().toSet
     assert(third == Set(3L))
   }
 
@@ -232,23 +238,26 @@ class CorpusPipelineSpec extends SparkSpec {
     val sigDir = Files.createTempDirectory("sigstate").toString + "/sigs"
     val base = (1 to 30).map(i => s"tok$i the a of").mkString(" ")
     val other = (50 to 90).map(i => s"yy$i the").mkString(" ")
-    val run1 = CorpusPipeline.curateIncrementalNearDup(
+    val (run1, commit1) = CorpusPipeline.curateIncrementalNearDupStaged(
       Seq((1L, base), (2L, other)).toDF("doc_id", "text"),
       "doc_id", "text", stateDir, sigDir, cfg)
+    commit1()
     assert(run1.select("doc_id").as[Long].collect().toSet == Set(1L, 2L))
     // run 2: a near-copy of doc 1 under a NEW id (id anti-join can't see
     // it; within-delta dedup can't either) plus a genuinely fresh doc
     val nearCopy = base + " extra"
     val freshDoc = (200 to 240).map(i => s"qq$i the").mkString(" ")
-    val run2 = CorpusPipeline.curateIncrementalNearDup(
+    val (run2, commit2) = CorpusPipeline.curateIncrementalNearDupStaged(
       Seq((10L, nearCopy), (11L, freshDoc)).toDF("doc_id", "text"),
       "doc_id", "text", stateDir, sigDir, cfg)
+    commit2()
     assert(run2.select("doc_id").as[Long].collect().toSet == Set(11L),
       "near-copy must be dropped by the signature store, fresh doc kept")
     // the fresh doc's signature joined the store: a re-crawl of IT now drops too
-    val run3 = CorpusPipeline.curateIncrementalNearDup(
+    val (run3, commit3) = CorpusPipeline.curateIncrementalNearDupStaged(
       Seq((20L, freshDoc + " tail")).toDF("doc_id", "text"),
       "doc_id", "text", stateDir, sigDir, cfg)
+    commit3()
     assert(run3.count() == 0)
   }
 

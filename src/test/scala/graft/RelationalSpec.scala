@@ -370,6 +370,14 @@ class RelationalSpec extends SparkSpec {
     }
   }
 
+  test("small-graph gates fetch the edge list once: no count job before the collect") {
+    val cc = Seq((1L, 2L), (2L, 3L), (4L, 5L)).toDF("src", "dst")
+    val ccJobs = jobsStartedBy(Relational.connectedComponents(cc, "src", "dst"))
+    val pr = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
+    val prJobs = jobsStartedBy(Relational.pageRank(pr, "src", "dst"))
+    assert((ccJobs, prJobs) == ((3, 2)), s"jobs: connectedComponents $ccJobs, pageRank $prJobs")
+  }
+
   test("keepOnePerCluster keeps exactly the min id per cluster and passes singletons") {
     import graft.operators.Dedup
     val docs = Seq((1L, "a"), (2L, "a2"), (3L, "a3"), (7L, "solo"), (9L, "b"), (10L, "b2"))

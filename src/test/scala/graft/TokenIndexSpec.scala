@@ -357,6 +357,28 @@ class TokenIndexSpec extends SparkSpec {
     assert(pairs().map(_._2) == Seq(1L))
   }
 
+  test("a refused upsert deletes nothing: metadata mismatches throw before the delete") {
+    val dir = Files.createTempDirectory("tokidx_refused").toString
+    val batch = Seq((1L, "alpha beta gamma", "en"), (2L, "beta gamma delta", "de"))
+      .toDF("doc_id", "text", "lang")
+    TokenIndex.append(batch, "doc_id", "text", dir, 0L, metaCols = Seq("lang"))
+    def probe() = TokenIndex.bm25Indexed(spark, dir, Seq("beta", "gamma"))
+      .select(col("corpus_id").cast("long"), round(col("bm25"), 9), col("n_terms"))
+      .as[(Long, Double, Long)].collect().sortBy(_._1).toSeq
+    val before = probe()
+    assert(before.map(_._1) == Seq(1L, 2L))
+    // the default metaCols (none) differ from the stored set {lang}
+    intercept[IllegalArgumentException] {
+      TokenIndex.upsert(batch.filter(col("doc_id") === 1L), "doc_id", "text", dir, 1L)
+    }
+    // the batch lacks the stored metadata column
+    intercept[IllegalArgumentException] {
+      TokenIndex.upsert(batch.filter(col("doc_id") === 2L).drop("lang"), "doc_id", "text",
+        dir, 1L, metaCols = Seq("lang"))
+    }
+    assert(probe() == before, "a refused upsert must leave its ids live")
+  }
+
   test("metadata-in-postings: predicate BM25 = allowed-DF BM25, term AND metadata filters PUSHED, survives compact") {
     // round 18 (the token sibling of VectorIndex's metaCols): metadata
     // stored per posting row, so the predicate lands in the parquet
@@ -370,7 +392,7 @@ class TokenIndexSpec extends SparkSpec {
       df.select(col("corpus_id").cast("long"), round(col("bm25"), 9),
         col("n_terms")).as[(Long, Double, Long)].collect().sortBy(_._1).toSeq
     val byPred = scores(TokenIndex.bm25IndexedFiltered(
-      spark, dir, terms, col("lang") === "en", 1.2, 0.75))
+      spark, dir, terms, col("lang") === "en"))
     val byAllowed = scores(TokenIndex.bm25IndexedFiltered(
       spark, dir, terms,
       docs.filter(pmod(col("doc_id"), lit(2)) === 0).select(col("doc_id")),
@@ -378,7 +400,7 @@ class TokenIndexSpec extends SparkSpec {
     assert(byPred.nonEmpty && byPred == byAllowed,
       s"predicate and allowed-DF filtering must agree (${byPred.take(3)} vs ${byAllowed.take(3)})")
     val plan = TokenIndex.bm25IndexedFiltered(
-        spark, dir, terms, col("lang") === "en", 1.2, 0.75)
+        spark, dir, terms, col("lang") === "en")
       .queryExecution.executedPlan.toString
     // pushed-filter syntax (EqualTo/In) appears ONLY inside a scan's
     // PushedFilters list — a Filter node would spell them `(lang#n = en)`
@@ -396,7 +418,7 @@ class TokenIndexSpec extends SparkSpec {
     assert(spark.read.parquet(s"$dir/postings").columns.contains("lang"),
       "compact must preserve metadata columns")
     val predAfter = scores(TokenIndex.bm25IndexedFiltered(
-      spark, dir, terms, col("lang") === "en", 1.2, 0.75))
+      spark, dir, terms, col("lang") === "en"))
     val allowedAfter = scores(TokenIndex.bm25IndexedFiltered(
       spark, dir, terms,
       docs.filter(pmod(col("doc_id"), lit(2)) === 0).select(col("doc_id")),
@@ -465,9 +487,9 @@ class TokenIndexSpec extends SparkSpec {
       df.select(col("corpus_id").cast("long"), round(col("bm25"), 9),
         col("n_terms")).as[(Long, Double, Long)].collect().sortBy(_._1).toSeq
     val oldSlice = scores(TokenIndex.bm25IndexedFiltered(
-      spark, dir, terms, col("src") === "crawl1", 1.2, 0.75))
+      spark, dir, terms, col("src") === "crawl1"))
     val newSlice = scores(TokenIndex.bm25IndexedFiltered(
-      spark, dir, terms, col("src") === "crawl2", 1.2, 0.75))
+      spark, dir, terms, col("src") === "crawl2"))
     assert(oldSlice.nonEmpty && oldSlice.forall(_._1 % 4 == 0),
       s"backfilled default must select exactly the pre-evolution docs: ${oldSlice.take(5)}")
     assert(newSlice.nonEmpty && newSlice.forall(_._1 % 4 == 2),
@@ -480,14 +502,13 @@ class TokenIndexSpec extends SparkSpec {
       "evolved-column predicate must score-match the allowed-DF form")
     // the evolved column's predicate still lands in the parquet scan
     val plan = TokenIndex.bm25IndexedFiltered(
-        spark, dir, terms, col("src") === "crawl1", 1.2, 0.75)
+        spark, dir, terms, col("src") === "crawl1")
       .queryExecution.executedPlan.toString
     assert(plan.contains("EqualTo(src,crawl1)"),
       s"evolved metadata predicate must reach the postings scan:\n${plan.take(3000)}")
     // composing old and evolved metadata columns works too
     val both = scores(TokenIndex.bm25IndexedFiltered(
-      spark, dir, terms, col("src") === "crawl1" && col("lang") === "en",
-      1.2, 0.75))
+      spark, dir, terms, col("src") === "crawl1" && col("lang") === "en"))
     assert(both == oldSlice.filter(_._1 % 2 == 0))
   }
 

@@ -36,6 +36,33 @@ class VectorIndexSpec extends SparkSpec {
     }
   }
 
+  test("a refused upsert deletes nothing: metadata mismatches throw before the delete") {
+    val idxDir = Files.createTempDirectory("vecidx_refused").toString
+    val corpus = Seq(
+      1L -> Seq(1f, 0f, 0f, 0f), 2L -> Seq(0.9f, 0.1f, 0f, 0f),
+      3L -> Seq(-1f, 0f, 0f, 0f), 4L -> Seq(-0.9f, 0f, 0.1f, 0f))
+      .toDF("vec_id", "embedding")
+      .withColumn("lang", when(pmod(col("vec_id"), lit(2)) === 0, "en").otherwise("de"))
+    VectorIndex.build(corpus, "vec_id", "embedding", idxDir, k = 2, maxIter = 8,
+      metaCols = Seq("lang"))
+    val queries = Seq((100L, Seq(1f, 0f, 0f, 0f)), (101L, Seq(-1f, 0f, 0f, 0f)))
+      .toDF("vec_id", "embedding")
+    def probe() = topk(VectorIndex.queryTopK(
+      spark, queries, "vec_id", "embedding", idxDir, k = 4, nprobe = 2))
+    val before = probe()
+    assert(before.map(_._2).toSet == Set(1L, 2L, 3L, 4L))
+    // the default metaCols (none) differ from the stored set {lang}
+    intercept[IllegalArgumentException] {
+      VectorIndex.upsert(corpus.filter(col("vec_id") === 1L), "vec_id", "embedding", idxDir, 1L)
+    }
+    // the batch lacks the stored metadata column
+    intercept[IllegalArgumentException] {
+      VectorIndex.upsert(corpus.filter(col("vec_id") === 3L).drop("lang"), "vec_id",
+        "embedding", idxDir, 1L, metaCols = Seq("lang"))
+    }
+    assert(probe() == before, "a refused upsert must leave its ids live")
+  }
+
   test("queryTopK equals ivfCosineTopK with the same centroids; probes survive corpus deletion") {
     val base = Files.createTempDirectory("vecidx")
     val corpusDir = s"$base/corpus"; val idxDir = s"$base/idx"

@@ -3,14 +3,28 @@
 in a `def` or `case class` parameter list under src/main (a defaulted
 `case class` field is a config field).
 
-    python3 tools/knob_census.py [ROOT]      # ROOT defaults to the repo root
+    python3 tools/knob_census.py [ROOT]           # ROOT defaults to the repo root
+    python3 tools/knob_census.py --sites [ROOT]
 
-Prints the total, then the count per file. Stdlib only.
+The first form prints the total, then the count per file. `--sites` prints
+every defaulted parameter (with its [parameter list:position]) and each site
+that overrides it, grouped into src/main, perfbench/src and src/test: a call
+that passes the parameter by name or by position, or a `.copy(field = ...)`
+of a case class that has it. A call is matched by the name it is made
+through (an `apply` by its object's name): a call qualified by a capitalized
+name (import renames and `val X = pkg.Object` aliases resolved) counts only
+for the object of that name, an unqualified call for its own file's
+definition when it has one, and a call on a value for every definition of
+that name, so the list may over-report but does not miss a direct call.
+Stdlib only.
 """
-import os, re, sys
+import bisect, os, re, sys
 
 HEAD = re.compile(r"\b(?:def\s+[\w$]+|case\s+class\s+\w+)\s*(?:\[[^\]]*\])?\s*\(")
+DEF = re.compile(r"\b(def|case\s+class)\s+([\w$]+)\s*(?:\[[^\]]*\])?\s*\(")
+OWNER = re.compile(r"\b(?:object|class|trait)\s+(\w+)")
 DEPTH = {"(": 1, "[": 1, "{": 1, ")": -1, "]": -1, "}": -1}
+GROUPS = ("src/main", "perfbench/src", "src/test")
 
 
 def param_lists(src, i):
@@ -28,7 +42,7 @@ def param_lists(src, i):
             i += 1
 
 
-def defaulted(plist):
+def split_top(plist):
     depth, params, cur = 0, [], ""
     for ch in plist + ",":
         depth += DEPTH.get(ch, 0)
@@ -37,7 +51,26 @@ def defaulted(plist):
             cur = ""
         else:
             cur += ch
-    return sum(1 for p in params if re.search(r"^[^=]*:[^=]*=(?!>)", p))
+    return params
+
+
+def is_defaulted(p):
+    return re.search(r"^[^=]*:[^=]*=(?!>)", p) is not None
+
+
+def defaulted(plist):
+    return sum(1 for p in split_top(plist) if is_defaulted(p))
+
+
+def strip(src):
+    """Comments blanked out and the brackets, commas and `=` of string
+    literals too (so neither parses as code); newlines and offsets kept."""
+    blank = lambda m: re.sub(r"[^\n]", " ", m.group(0))
+    inert = lambda m: re.sub(r"[()\[\]{},=]", " ", m.group(0))
+    src = re.sub(r"/\*.*?\*/", blank, src, flags=re.S)
+    src = re.sub(r'"""(?:.|\n)*?"""', inert, src)
+    src = re.sub(r'"(?:\\.|[^"\\\n])*"', inert, src)
+    return re.sub(r"//[^\n]*", blank, src)
 
 
 def count_file(path):
@@ -47,8 +80,135 @@ def count_file(path):
     return sum(defaulted(p) for m in HEAD.finditer(src) for p in param_lists(src, m.end() - 1))
 
 
+def scala_files(root, sub):
+    for d, _, files in os.walk(os.path.join(root, sub)):
+        for f in sorted(files):
+            if f.endswith(".scala"):
+                yield os.path.relpath(os.path.join(d, f), root)
+
+
+def owner_at(src, pos):
+    """The innermost object/class/trait whose body encloses `pos`."""
+    stack, depth, pending = [], 0, None
+    owners = {m.end(): m.group(1) for m in OWNER.finditer(src)}
+    for i in range(pos):
+        if i in owners:
+            pending = owners[i]
+        ch = src[i]
+        if ch == "{":
+            depth += 1
+            if pending:
+                stack.append((depth, pending))
+                pending = None
+        elif ch == "}":
+            if stack and stack[-1][0] == depth:
+                stack.pop()
+            depth -= 1
+    return stack[-1][1] if stack else None
+
+
+def definitions(root):
+    """(file, line, owner, name, call name, is case class, list idx, pos, param, text)."""
+    out = []
+    for rel in scala_files(root, "src/main"):
+        src = strip(open(os.path.join(root, rel), encoding="utf-8").read())
+        for m in DEF.finditer(src):
+            kind, name = m.group(1), m.group(2)
+            owner = owner_at(src, m.start())
+            call = owner if name == "apply" and owner else name
+            for li, plist in enumerate(param_lists(src, m.end() - 1)):
+                for pi, p in enumerate(split_top(plist)):
+                    if is_defaulted(p):
+                        pname = re.match(r"\s*(?:(?:implicit|val|var|private|override)\s+)*([\w$]+)", p).group(1)
+                        line = src.count("\n", 0, m.start()) + 1
+                        out.append((rel, line, owner, name, call, kind != "def", li, pi, pname,
+                                    " ".join(p.split())))
+    return out
+
+
+def arg_override(args, pi, pname):
+    """'named' or 'positional' if this argument list sets parameter `pi`/`pname`."""
+    parts = [a for a in split_top(args) if a]
+    positional = 0
+    for a in parts:
+        n = re.match(r"([\w$]+)\s*=(?![=>])", a)
+        if n:
+            if n.group(1) == pname:
+                return "named"
+        else:
+            positional += 1
+    return "positional" if positional > pi and not any(a.endswith("_*") for a in parts) else None
+
+
+def sites(root):
+    defs = definitions(root)
+    files = {}
+    for g in GROUPS:
+        for rel in scala_files(root, g):
+            files[rel] = (g, strip(open(os.path.join(root, rel), encoding="utf-8").read()))
+    found = {d: [] for d in defs}
+    by_call = {}
+    for d in defs:
+        by_call.setdefault(d[4], []).append(d)
+    fields = {}
+    for d in defs:
+        if d[5]:
+            fields.setdefault(d[8], []).append(d)
+    for rel, (g, src) in files.items():
+        aliases = {b: a for a, b in re.findall(r"\b(\w+)\s*=>\s*(\w+)\s*[,}]", src)}
+        aliases.update(re.findall(r"\bval\s+([A-Z]\w*)\s*=\s*[\w.]*?\b(\w+)\s*$", src, re.M))
+        starts = [0] + [i + 1 for i, ch in enumerate(src) if ch == "\n"]
+        line_of = lambda i: bisect.bisect_right(starts, i)
+        for call, ds in by_call.items():
+            local = [d for d in ds if d[0] == rel]
+            for m in re.finditer(r"(?<![\w$])((\w+)\s*\.\s*)?" + re.escape(call) + r"\s*(?:\[[^\]]*\])?\s*\(", src):
+                before = src[max(0, m.start() - 16):m.start()]
+                if re.search(r"\b(def|class)\s+$", before):
+                    continue
+                qual = aliases.get(m.group(2), m.group(2))
+                # an unqualified call binds to its own file's definition
+                # when there is one; a capitalized qualifier names an object
+                # (ours, or a foreign class that defines none of these)
+                cands = local if qual is None and local else ds
+                for li, args in enumerate(param_lists(src, m.end() - 1)):
+                    for d in cands:
+                        if d[6] != li or (qual and qual[0].isupper() and d[2] != qual and d[4] != qual):
+                            continue
+                        how = arg_override(args, d[7], d[8])
+                        if how:
+                            found[d].append((g, f"{rel}:{line_of(m.start())}", how))
+        for m in re.finditer(r"\.\s*copy\s*\(", src):
+            for args in param_lists(src, m.end() - 1):
+                for a in split_top(args):
+                    n = re.match(r"([\w$]+)\s*=(?![=>])", a)
+                    for d in fields.get(n.group(1), []) if n else []:
+                        found[d].append((g, f"{rel}:{line_of(m.start())}", "copy"))
+                break
+    return defs, found
+
+
+def print_sites(root):
+    defs, found = sites(root)
+    outside = sum(1 for d in defs if not any(g != "src/test" for g, _, _ in found[d]))
+    nowhere = sum(1 for d in defs if not found[d])
+    print(f"total {len(defs)}")
+    print(f"not set outside src/test {outside}")
+    print(f"not set anywhere {nowhere}")
+    for d in defs:
+        rel, line, owner, name, _, _, li, pi, pname, text = d
+        where = f"{owner}.{name}" if owner else name
+        print(f"\n{rel}:{line}  {where}  [{li}:{pi}] {text}")
+        for g in GROUPS:
+            hits = [f"{s} ({how})" for gg, s, how in found[d] if gg == g]
+            print(f"  {g}: " + (", ".join(hits) if hits else "-"))
+
+
 if __name__ == "__main__":
-    root = sys.argv[1] if len(sys.argv) > 1 else os.path.join(os.path.dirname(__file__), "..")
+    args = sys.argv[1:]
+    if args[:1] == ["--sites"]:
+        print_sites(args[1] if len(args) > 1 else os.path.join(os.path.dirname(__file__), ".."))
+        sys.exit(0)
+    root = args[0] if args else os.path.join(os.path.dirname(__file__), "..")
     counts = {}
     for d, _, files in os.walk(os.path.join(root, "src", "main")):
         for f in files:
