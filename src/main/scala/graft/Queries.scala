@@ -4088,7 +4088,8 @@ object Queries {
     "q128_filtered_ann",
     (s, d) => {
       // FILTERED ANN, driver-checked (VERDICT r16 item 4): the
-      // metadata predicate rides INSIDE the shortlist probe
+      // id-set predicate (`vec_id IN (planted ids)`, planned as a
+      // broadcast left-semi join) rides INSIDE the shortlist probe
       // (queryTopKRerankFiltered), composed over the quantized
       // production cadence — an SQ8 index probed with the q115
       // shortlist-soundness guard, exact rerank against the
@@ -4125,11 +4126,11 @@ object Queries {
       val queries = emb.filter(pmod(col("vec_id"), lit(5)) === 0)
         .select((col("vec_id") + lit(2 * off)).as("vec_id"),
           transform(col("embedding"), x => x * lit(4.0f)).as("embedding"))
-      val allowed = copies.select(col("vec_id"))
       val sl = cachedShortlistBound(s, dir, nprobe = 2)
       VI.queryTopKRerankFiltered(s, queries, "vec_id", "embedding",
           dir.toString, corpus, "vec_id", "embedding", k = 1,
-          allowed, "vec_id", shortlist = sl, nprobe = 2)
+          predicate = col("vec_id").isin(copies.select(col("vec_id"))),
+          shortlist = sl, nprobe = 2)
         .select(col("query_id"), col("neighbor_id"),
           round(col("cosine"), 6).as("sim"), col("rank").as("rnk"))
         .orderBy(col("query_id"))
@@ -4730,12 +4731,12 @@ object Queries {
       // the token sibling of q133): the corpus ingests with
       // metaCols = lang (doc parity), and the probe's predicate lands
       // in the postings scan as PushedFilters BESIDE the In(tok, …)
-      // term filter — no allowed-id set, no semi-join
-      // (TokenIndexSpec pins the plan and the parity with the
-      // allowed-DF form). Same terms/rounding as q109/q131; the
-      // oracle is q131's verbatim — effective df over the even slice,
-      // (N, avgdl) collection-global — because the predicate selects
-      // exactly the ids q131's allowed-DF did.
+      // term filter — no id set, no semi-join (TokenIndexSpec pins
+      // the plan and the parity with the id-set form). Same
+      // terms/rounding as q109/q131; the oracle is q131's verbatim —
+      // effective df over the even slice, (N, avgdl)
+      // collection-global — because the predicate selects exactly the
+      // ids q131's id set did.
       val dir = cachedFixtureDir("q135", d, "documents.parquet",
           "|tokenindex-v3|meta-lang|evolved-src") { dir =>
         // evolved-index life (round 19 — VERDICT r18 item 3 driver-
@@ -4788,7 +4789,7 @@ object Queries {
       // planted construction, but the predicate is a plain Column over
       // a metadata column the index carries IN its postings
       // (append/build metaCols), so it lands in the parquet scan as
-      // PushedFilters — no allowed-id set is ever materialized, no
+      // PushedFilters — no id set is ever materialized, no
       // semi-join runs (VectorIndexSpec pins the plan). Construction:
       // an f32 index holds the fixture embeddings (region = 'base')
       // plus a ×2 planted copy (+off) of every 5th vector
@@ -4873,8 +4874,9 @@ object Queries {
     "q131_bm25_filtered",
     (s, d) => {
       // FILTERED BM25 retrieval (the token sibling of q128's filtered
-      // ANN): the metadata predicate — doc_id parity here — restricts
-      // the term-bounded matched postings BEFORE scoring, so df
+      // ANN): the id-set predicate — doc_id parity here, as
+      // `corpus_id IN (even doc ids)` — restricts the term-bounded
+      // matched postings BEFORE scoring, so df
       // reflects the allowed slice (the effective-df rule the takedown
       // mask already applies) and every allowed match comes back.
       // Same cached index, terms, rounding as q109; the oracle mirrors
@@ -4883,9 +4885,8 @@ object Queries {
       val docs = Tables.documents(s, d)
       val dir = cachedTokenIndex(s, d)
       graft.operators.TokenIndex.bm25IndexedFiltered(s, dir,
-          Seq("dup", "join", "scan"),
-          docs.filter(pmod(col("doc_id"), lit(2)) === 0).select(col("doc_id")),
-          "doc_id")
+          Seq("dup", "join", "scan"), col("corpus_id").isin(
+            docs.filter(pmod(col("doc_id"), lit(2)) === 0).select(col("doc_id"))))
         .select(col("corpus_id").as("doc_id"),
           round(col("bm25"), 4).as("bm25"), col("n_terms"))
         .orderBy(col("doc_id"))

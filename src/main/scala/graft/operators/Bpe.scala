@@ -30,39 +30,6 @@ import graft.functions.{TextFunctions => TF}
   */
 object Bpe {
 
-  /** Learn `numMerges` ranked merges from the corpus. Returns the merge
-    * list in application order, each with the weighted pair frequency
-    * that won its round. Ties break lexicographically on the pair, so
-    * training is deterministic for a given corpus.
-    *
-    * `minCount` (standard practice in BPE trainers) drops word types
-    * rarer than the floor BEFORE the driver collect — the hapax long
-    * tail is the bulk of a web-scale vocab but nearly none of its
-    * mass. Semantics, stated honestly: the merges are DEFINED over the
-    * floored vocabulary, exactly as reference trainers define them
-    * under a vocabulary threshold. The floor is an approximation of
-    * unfloored training, not an invariance: each dropped type
-    * contributes < minCount to any single pair count, but a large
-    * dropped TAIL sharing a pair can move that pair's aggregate count
-    * arbitrarily, so a pathological corpus (say, 10⁶ hapax types all
-    * containing the same bigram) can learn a different merge list than
-    * minCount = 1 would. On natural text the tail's per-pair mass is
-    * negligible and the floored model is the standard one trainers
-    * ship. `maxVocabTypes` is the hard memory bound: keep only the
-    * top-N types by (freq desc, word asc — the tie order makes the cut
-    * deterministic). Driver memory is O(maxVocabTypes), independent of
-    * corpus size.
-    *
-    * DEFAULT is `minCount = 1` (no floor): flooring changes training
-    * SEMANTICS, not just cost, so it is opt-in at the call site —
-    * production corpus-scale callers pass `minCount = 2` (q86 does);
-    * the library default never silently drops hapax types on an
-    * existing caller's corpus. (Round 12 briefly shipped a floored
-    * default; reverted round 13 per ADVICE — version note: any caller
-    * that adopted the r12 default must now pass `minCount = 2`.)
-    * `maxVocabTypes` stays defaulted because it is a pure memory
-    * backstop orders of magnitude above any natural repeated vocab.
-    */
   /** The ONE distributed corpus pass training runs on: the
     * word-frequency table `(w, freq)`, floored and capped BEFORE it
     * reaches the driver. Shared verbatim by [[learnMerges]] (which
@@ -118,6 +85,39 @@ object Bpe {
       .groupBy(col("p.a").as("a"), col("p.b").as("b"))
       .agg(sum(col("freq")).as("cnt"))
 
+  /** Learn `numMerges` ranked merges from the corpus. Returns the merge
+    * list in application order, each with the weighted pair frequency
+    * that won its round. Ties break lexicographically on the pair, so
+    * training is deterministic for a given corpus.
+    *
+    * `minCount` (standard practice in BPE trainers) drops word types
+    * rarer than the floor BEFORE the driver collect — the hapax long
+    * tail is the bulk of a web-scale vocab but nearly none of its
+    * mass. Semantics, stated honestly: the merges are DEFINED over the
+    * floored vocabulary, exactly as reference trainers define them
+    * under a vocabulary threshold. The floor is an approximation of
+    * unfloored training, not an invariance: each dropped type
+    * contributes < minCount to any single pair count, but a large
+    * dropped TAIL sharing a pair can move that pair's aggregate count
+    * arbitrarily, so a pathological corpus (say, 10⁶ hapax types all
+    * containing the same bigram) can learn a different merge list than
+    * minCount = 1 would. On natural text the tail's per-pair mass is
+    * negligible and the floored model is the standard one trainers
+    * ship. `maxVocabTypes` is the hard memory bound: keep only the
+    * top-N types by (freq desc, word asc — the tie order makes the cut
+    * deterministic). Driver memory is O(maxVocabTypes), independent of
+    * corpus size.
+    *
+    * DEFAULT is `minCount = 1` (no floor): flooring changes training
+    * SEMANTICS, not just cost, so it is opt-in at the call site —
+    * production corpus-scale callers pass `minCount = 2` (q86 does);
+    * the library default never silently drops hapax types on an
+    * existing caller's corpus. (Round 12 briefly shipped a floored
+    * default; reverted round 13 per ADVICE — version note: any caller
+    * that adopted the r12 default must now pass `minCount = 2`.)
+    * `maxVocabTypes` stays defaulted because it is a pure memory
+    * backstop orders of magnitude above any natural repeated vocab.
+    */
   def learnMerges(docs: DataFrame, textCol: String, numMerges: Int,
       minCount: Long = 1L, maxVocabTypes: Int = MaxVocabTypes): Seq[(String, String, Long)] =
     learnMergesFromVocab(vocabTable(docs, textCol, minCount, maxVocabTypes), numMerges)

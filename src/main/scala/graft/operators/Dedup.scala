@@ -764,19 +764,6 @@ object Dedup {
       .filter(col("sig") =!= 0L)
   }
 
-  /** The shared vs-state core of [[videoNearDuplicatesVsState]] /
-    * [[audioNearDuplicatesVsState]]: batch sequence signatures (__bid,
-    * __bidx, __bsig) against state rows (__sid, __sidx, __ssig).
-    * Blocking runs on DISTINCT signatures on both sides (the family's
-    * identical-signature skew rule — a signature shared by a million
-    * frames costs the chunk join ONE row), the surviving signature
-    * pairs expand back through both member lists (output-sized, never
-    * corpus²), and frame matches aggregate two-sided per (batch clip,
-    * state clip): ≥ `minMatches` DISTINCT indexes on EACH side. The
-    * match is deterministic: most matched windows, ties to the
-    * smallest frame distance, ties to the smallest state id. Returns
-    * (__bid, dup_of, n_matched, min_hamming).
-    */
   /** Distinct-signature pigeonhole candidate generation ACROSS two
     * sides — the cross (batch vs state) form of
     * [[hammingNearDuplicates]]'s blocking, shared by every vs-state
@@ -806,6 +793,19 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
   }
 
+  /** The shared vs-state core of [[videoNearDuplicatesVsState]] /
+    * [[audioNearDuplicatesVsState]]: batch sequence signatures (__bid,
+    * __bidx, __bsig) against state rows (__sid, __sidx, __ssig).
+    * Blocking runs on DISTINCT signatures on both sides (the family's
+    * identical-signature skew rule — a signature shared by a million
+    * frames costs the chunk join ONE row), the surviving signature
+    * pairs expand back through both member lists (output-sized, never
+    * corpus²), and frame matches aggregate two-sided per (batch clip,
+    * state clip): ≥ `minMatches` DISTINCT indexes on EACH side. The
+    * match is deterministic: most matched windows, ties to the
+    * smallest frame distance, ties to the smallest state id. Returns
+    * (__bid, dup_of, n_matched, min_hamming).
+    */
   private def sequenceSigsVsState(
       batchSigs: DataFrame, stateSigs: DataFrame,
       maxHamming: Int, minMatches: Int): DataFrame = {

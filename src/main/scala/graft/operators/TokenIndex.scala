@@ -136,8 +136,8 @@ object TokenIndex {
     // parquet scan as PushedFilters. The denormalization here costs
     // more than the vector side's (one row per (doc, term), not per
     // doc) — that is the price of scan-level pushdown; callers with
-    // wide metadata or huge vocabularies keep using the allowed-DF
-    // overloads instead.
+    // wide metadata or huge vocabularies filter by an id set instead
+    // (`col("corpus_id").isin(ids)`).
     IndexStore.requireMetaSet(corpusBatch, metaCols, postingsDir(indexDir),
       ReservedPostingCols)
     // one snapshot feeds all four writes: arrays land first, postings /
@@ -345,43 +345,30 @@ object TokenIndex {
     * identical (parity spec-pinned).
     */
   def bm25Indexed(spark: SparkSession, indexDir: String, terms: Seq[String]): DataFrame =
-    bm25Impl(spark, indexDir, terms, allowed = None)
+    bm25Impl(spark, indexDir, terms, metaPredicate = None)
 
-  /** [[bm25Indexed]] under a metadata predicate — the token-retrieval
-    * sibling of [[VectorIndex.queryTopKFiltered]]: only documents whose
-    * id appears in `allowed` (pass `metadata.where(pred).select(id)`)
-    * can score, and the restriction applies to the matched postings
-    * BEFORE scoring, so `df` reflects the allowed slice — the same
-    * effective-df rule the takedown mask already applies (a doc that
-    * cannot be returned does not shape the idf either). Collection
-    * stats (N, avgdl) stay index-global, like the one-shot operator's.
-    * Post-filtering unfiltered results would instead keep disallowed
-    * docs' df contributions and silently return fewer rows than the
-    * allowed matches — the same bug class the filtered ANN pin covers.
-    */
-  def bm25IndexedFiltered(spark: SparkSession, indexDir: String,
-      terms: Seq[String], allowed: DataFrame, allowedIdCol: String): DataFrame =
-    bm25Impl(spark, indexDir, terms,
-      allowed = Some(allowed.select(col(allowedIdCol).as("corpus_id"))))
-
-  /** Column-predicate twin of [[bm25IndexedFiltered]] (round 18 — the
-    * token sibling of [[VectorIndex.queryTopKFiltered]]'s predicate
-    * form): the predicate runs over metadata columns STORED in the
-    * postings ([[append]]'s `metaCols`) and applies on the scan beside
-    * the term filter, so both land as `PushedFilters` — no id set is
-    * materialized, no semi-join runs. Same effective-df rule: `df`
-    * derives from the (term- and predicate-) filtered matched set, so
-    * a doc the filter excludes shapes neither the results nor the idf.
+  /** [[bm25Indexed]] under a predicate — the token-retrieval sibling of
+    * [[VectorIndex.queryTopKFiltered]]: only documents whose postings
+    * satisfy `predicate` can score. The predicate is a `Column` over the
+    * stored posting columns (`corpus_id` and [[append]]'s `metaCols`)
+    * and applies on the scan beside the term filter, so a plain
+    * comparison lands as `PushedFilters`; a join-shaped filter is
+    * `col("corpus_id").isin(ids)`, planned as a broadcast left-semi
+    * join. The restriction applies BEFORE scoring, so `df` reflects the
+    * allowed slice — the same effective-df rule the takedown mask
+    * already applies (a doc that cannot be returned does not shape the
+    * idf either). Collection stats (N, avgdl) stay index-global, like
+    * the one-shot operator's. Post-filtering unfiltered results would
+    * instead keep disallowed docs' df contributions and change every
+    * score — the same bug class the filtered ANN pin covers.
     */
   def bm25IndexedFiltered(spark: SparkSession, indexDir: String,
       terms: Seq[String], predicate: org.apache.spark.sql.Column): DataFrame =
-    bm25Impl(spark, indexDir, terms, allowed = None,
-      metaPredicate = Some(predicate))
+    bm25Impl(spark, indexDir, terms, metaPredicate = Some(predicate))
 
   private def bm25Impl(spark: SparkSession, indexDir: String,
       terms: Seq[String],
-      allowed: Option[DataFrame],
-      metaPredicate: Option[org.apache.spark.sql.Column] = None): DataFrame = {
+      metaPredicate: Option[org.apache.spark.sql.Column]): DataFrame = {
     require(terms.nonEmpty, "query terms must be non-empty")
     val st = ParquetRead(spark, statsDir(indexDir))
       .groupBy(col("run_id"))
@@ -394,12 +381,12 @@ object TokenIndex {
     // collection stats (N, avgdl) stay ledger-stale until compact
     // heals them — the same performance-not-recall staleness class as
     // the df note above
-    // the metadata predicate (predicate overload) applies ON the scan
-    // beside the term filter — before the projection drops the metadata
+    // the predicate (bm25IndexedFiltered) applies ON the scan beside
+    // the term filter — before the projection drops the metadata
     // columns — so both reach parquet as PushedFilters; None folds
-    // through and the allowed-DF/unfiltered plans are bit-unchanged
+    // through and the unfiltered plan is bit-unchanged
     val scan0 = ParquetRead(spark, postingsDir(indexDir))
-    val p0 = IndexStore.dropMasked(
+    val p = IndexStore.dropMasked(
         metaPredicate.fold(scan0)(mp => scan0.where(mp))
           .filter(col("tok").isin(terms: _*))
           .select(col("corpus_id"), col("tok"), col("tf"), col("dl"),
@@ -407,9 +394,6 @@ object TokenIndex {
         IndexStore.tombstones(spark, indexDir, "corpus_id"), "corpus_id")
       .select(col("corpus_id"), col("tok"), col("tf"), col("dl"))
       .distinct() // term-bounded; absorbs retried + re-ingested rows
-    // the metadata predicate restricts the term-bounded matched set —
-    // candidate-sized work, the postings scan is untouched
-    val p = allowed.fold(p0)(a => p0.join(a, Seq("corpus_id"), "left_semi"))
     val df = p.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     p.join(broadcast(df), "tok")
       .crossJoin(broadcast(st))

@@ -569,65 +569,45 @@ object VectorIndex {
     * curves: recall@10 ≥ 0.99 there) and can silently under-recall a
     * DIFFUSE one (same curves: nprobe 16+ needed). When a recall
     * target matters, measure instead of guessing — [[calibrateNprobe]]
-    * picks the dial from a query sample, and
-    * [[queryTopKCalibrated]] is that loop packaged as one call.
+    * picks the dial from a query sample.
     */
   def queryTopK(spark: SparkSession, queries: DataFrame, queryId: String,
       queryEmb: String, indexDir: String, k: Int, nprobe: Int = 2): DataFrame =
     queryTopKImpl(spark, queries, queryId, queryEmb, indexDir, k, nprobe,
-      allowed = None)
+      metaPredicate = None)
 
-  /** FILTERED ANN (VERDICT r16 item 4): [[queryTopK]] restricted to
-    * neighbors whose id appears in `allowed` — the metadata-predicate
-    * retrieval production actually runs (language, license, date
-    * window, …). Pass `metadata.where(predicate).select(idCol)`; the
-    * restriction applies to the CANDIDATE SET, before top-k selection,
-    * so k survivors come back whenever the probed cells hold k allowed
-    * vectors. Post-filtering an unfiltered top-k is NOT equivalent and
-    * is the bug users write themselves — a disallowed strong neighbor
-    * evicts allowed ones from the k list before the filter runs, and
-    * rows silently go missing (VectorIndexSpec pins the difference).
+  /** FILTERED ANN (VERDICT r16 item 4, r17 item 3): [[queryTopK]]
+    * restricted to postings that satisfy `predicate` — the
+    * metadata-predicate retrieval production actually runs (language,
+    * license, date window, …). The restriction applies to the CANDIDATE
+    * SET, before top-k selection, so k survivors come back whenever the
+    * probed cells hold k allowed vectors. Post-filtering an unfiltered
+    * top-k is NOT equivalent and is the bug users write themselves — a
+    * disallowed strong neighbor evicts allowed ones from the k list
+    * before the filter runs, and rows silently go missing
+    * (VectorIndexSpec pins the difference).
     *
-    * Scale shape: the allowed-id side joins the ALREADY cell-pruned
-    * postings (a left-semi equi-join — Catalyst broadcasts a selective
-    * predicate's id set, and a huge one shuffles only the probed-cell
-    * candidates, never the corpus). Recall contract is unchanged from
-    * queryTopK: exact over the probed cells — a highly selective
-    * predicate thins candidates, so raise `nprobe` (or calibrate)
-    * when the filter keeps ≪ 1/nprobe of the corpus.
-    */
-  def queryTopKFiltered(spark: SparkSession, queries: DataFrame,
-      queryId: String, queryEmb: String, indexDir: String, k: Int,
-      allowed: DataFrame, allowedIdCol: String,
-      nprobe: Int = 2): DataFrame =
-    queryTopKImpl(spark, queries, queryId, queryEmb, indexDir, k, nprobe,
-      allowed = Some(allowed.select(col(allowedIdCol).as("neighbor_id"))))
-
-  /** Filtered ANN over STORED metadata (VERDICT r17 item 3): same
-    * candidate-set-before-top-k semantics as the allowed-DF overload,
-    * but the predicate is a plain `Column` over metadata columns the
-    * index carries in its postings ([[append]]'s `metaCols`), so it
-    * lands in the parquet scan as `PushedFilters` — the `bm25Indexed`
+    * The predicate is a `Column` over the stored posting columns:
+    * `vec_id` and the metadata the index carries ([[append]]'s
+    * `metaCols`). It applies on the postings scan, so a plain
+    * comparison lands in parquet as `PushedFilters` — the `bm25Indexed`
     * `In(tok, …)` discipline — and disallowed postings never leave the
-    * scan. No id set is materialized, no semi-join runs: at a 100 TB
-    * corpus a "language = 'en' AND license = 'cc'" probe costs the
-    * same scan it would unfiltered, minus the rows the row-group stats
-    * and predicate drop. Keep the allowed-DF overload for JOIN-shaped
-    * predicates (the filter lives in another table keyed by id).
-    * Same recall note as the allowed-DF form: a highly selective
-    * predicate thins the probed cells — calibrate with
-    * [[calibrateNprobeFiltered]] when recall matters.
+    * scan. A join-shaped filter is `col("vec_id").isin(ids)`, which
+    * Catalyst plans as a broadcast left-semi join on the cell-pruned
+    * postings. Recall contract is unchanged from queryTopK: exact over
+    * the probed cells — a highly selective predicate thins them, so
+    * calibrate with [[calibrateNprobeFiltered]] when recall matters.
     */
   def queryTopKFiltered(spark: SparkSession, queries: DataFrame,
       queryId: String, queryEmb: String, indexDir: String, k: Int,
       predicate: org.apache.spark.sql.Column, nprobe: Int): DataFrame =
     queryTopKImpl(spark, queries, queryId, queryEmb, indexDir, k, nprobe,
-      allowed = None, metaPredicate = Some(predicate))
+      metaPredicate = Some(predicate))
 
   private def queryTopKImpl(spark: SparkSession, queries: DataFrame,
       queryId: String, queryEmb: String, indexDir: String, k: Int,
-      nprobe: Int, allowed: Option[DataFrame],
-      metaPredicate: Option[org.apache.spark.sql.Column] = None): DataFrame = {
+      nprobe: Int,
+      metaPredicate: Option[org.apache.spark.sql.Column]): DataFrame = {
     // refuse an index whose build never completed: a crash mid-build
     // (after the centroid overwrite, during the initial corpus append)
     // would otherwise answer from a silently partial index
@@ -677,11 +657,12 @@ object VectorIndex {
         (q, c) => VectorFunctions.pqResidualCosine(q, c, col("__cent"), cbs)
       case _ => (q, c) => VectorFunctions.cosineNative(q, c)
     }
-    // the metadata predicate (queryTopKFiltered's Column form) applies
-    // directly on the scan, BEFORE the projection drops the metadata
-    // columns, so simple comparisons reach parquet as PushedFilters and
-    // compound ones still run scan-side; the unfiltered plan is
-    // bit-unchanged (None folds through)
+    // the predicate (queryTopKFiltered) applies directly on the scan,
+    // BEFORE the projection drops the metadata columns, so simple
+    // comparisons reach parquet as PushedFilters, compound ones still
+    // run scan-side and an id-set IN subquery plans as a left-semi join
+    // under the cell filters; the unfiltered plan is bit-unchanged
+    // (None folds through)
     val scan = ParquetRead(spark, postingsDir(indexDir))
     val postingsLive = metaPredicate.fold(scan)(p => scan.where(p))
       .where(col("cell_bucket").isin(buckets: _*) &&
@@ -694,18 +675,12 @@ object VectorIndex {
     val postings0 = IndexStore.dropMasked(postingsLive,
         IndexStore.tombstones(spark, indexDir, "vec_id"), "neighbor_id", "__run")
       .drop("__run")
-    // the metadata predicate lands HERE — on the cell-pruned candidate
-    // postings, before scoring and before the top-k, so the k list is
-    // selected among allowed vectors only (queryTopKFiltered); the
-    // unfiltered path is bit-unchanged (None folds straight through)
-    val postingsAllowed = allowed.fold(postings0)(a =>
-      postings0.join(a, Seq("neighbor_id"), "left_semi"))
     val postings = fmt match {
-      case Pq => postingsAllowed.join(
+      case Pq => postings0.join(
         broadcast(centLocal // the same centroid read, no third scan
           .select(col("centroid_id"), col("centroid").as("__cent"))),
         "centroid_id")
-      case _ => postingsAllowed
+      case _ => postings0
     }
     // cosine FIRST (map-side, whole-stage codegen — both embedding
     // arrays die in this projection), THEN the retry-hygiene dedup on
@@ -792,32 +767,19 @@ object VectorIndex {
       corpusEmb: String, k: Int, shortlist: Int = 0, nprobe: Int = 8): DataFrame =
     rerankImpl(queries, queryId, queryEmb, corpus, corpusId, corpusEmb, k,
       shortlistOf(spark, queries, queryId, queryEmb, indexDir, k, shortlist,
-        nprobe, allowed = None))
+        nprobe, metaPredicate = None))
 
-  /** [[queryTopKRerank]] under a metadata predicate (the quantized-index
-    * sibling of [[queryTopKFiltered]]): the restriction applies INSIDE
-    * the shortlist probe, not after it — post-filtering a shortlist
+  /** [[queryTopKRerank]] under a predicate over the stored posting
+    * columns (the quantized-index sibling of [[queryTopKFiltered]],
+    * same predicate contract): the restriction applies INSIDE the
+    * shortlist probe, not after it — post-filtering a shortlist
     * forfeits the exhaustiveness guarantee ([[maxProbeCandidates]]
     * bounds the probed candidate set, and the FILTERED candidates are a
     * subset of it, so a `shortlist >= maxProbeCandidates(nprobe)` keeps
     * the filtered rerank provably exact over the probed cells). The
-    * exact re-rank then scores already-allowed candidates only.
-    */
-  def queryTopKRerankFiltered(spark: SparkSession, queries: DataFrame,
-      queryId: String, queryEmb: String, indexDir: String, corpus: DataFrame,
-      corpusId: String, corpusEmb: String, k: Int, allowed: DataFrame,
-      allowedIdCol: String, shortlist: Int = 0, nprobe: Int = 8): DataFrame =
-    rerankImpl(queries, queryId, queryEmb, corpus, corpusId, corpusEmb, k,
-      shortlistOf(spark, queries, queryId, queryEmb, indexDir, k, shortlist,
-        nprobe,
-        allowed = Some(allowed.select(col(allowedIdCol).as("neighbor_id")))))
-
-  /** Column-predicate twin of [[queryTopKRerankFiltered]]: the stored-
-    * metadata predicate ([[append]]'s `metaCols`) rides INSIDE the
-    * shortlist probe as a pushed scan filter — same exhaustiveness
-    * story (filtered candidates ⊆ probed postings, so a
-    * `shortlist >= maxProbeCandidates(nprobe)` keeps the filtered
-    * rerank exact over the probed cells), zero id-set materialization.
+    * exact re-rank then scores already-allowed candidates only. A
+    * join-shaped filter is `col("vec_id").isin(ids)`, planned as a
+    * broadcast left-semi join.
     */
   def queryTopKRerankFiltered(spark: SparkSession, queries: DataFrame,
       queryId: String, queryEmb: String, indexDir: String, corpus: DataFrame,
@@ -826,19 +788,19 @@ object VectorIndex {
       nprobe: Int): DataFrame =
     rerankImpl(queries, queryId, queryEmb, corpus, corpusId, corpusEmb, k,
       shortlistOf(spark, queries, queryId, queryEmb, indexDir, k, shortlist,
-        nprobe, allowed = None, metaPredicate = Some(predicate)))
+        nprobe, metaPredicate = Some(predicate)))
 
   private def shortlistOf(spark: SparkSession, queries: DataFrame,
       queryId: String, queryEmb: String, indexDir: String, k: Int,
-      shortlist: Int, nprobe: Int, allowed: Option[DataFrame],
-      metaPredicate: Option[org.apache.spark.sql.Column] = None): DataFrame = {
+      shortlist: Int, nprobe: Int,
+      metaPredicate: Option[org.apache.spark.sql.Column]): DataFrame = {
     val sl = if (shortlist > 0) shortlist else 5 * k
     require(sl >= k, s"shortlist $sl must be at least k $k")
     // the shortlist is consumed exactly once (the broadcast below), so
     // no checkpoint: the quantized probe plans straight into the
     // broadcast exchange
     queryTopKImpl(spark, queries, queryId, queryEmb, indexDir, sl, nprobe,
-        allowed, metaPredicate)
+        metaPredicate)
       .select(col("query_id"), col("neighbor_id"))
   }
 
@@ -918,21 +880,8 @@ object VectorIndex {
     * [[queryTopKFiltered]], now measured instead of advisory). Ground
     * truth is the FILTERED probe at nprobe = k-model (exhaustive ≡
     * brute force over the allowed vectors), so the recall contract is
-    * against exactly the answer set the runtime serves. Allowed-DF
-    * form; the Column-predicate twin below shares everything but the
-    * probe. */
-  def calibrateNprobeFiltered(spark: SparkSession, sampleQueries: DataFrame,
-      queryId: String, queryEmb: String, indexDir: String, k: Int,
-      allowed: DataFrame, allowedIdCol: String,
-      targetRecall: Double = 0.95,
-      candidates: Seq[Int] = Seq(1, 2, 4, 8, 16, 32, 64)): (Int, Map[Int, Double]) =
-    calibrateNprobeImpl(spark, indexDir, targetRecall, candidates,
-      (q, np) => queryTopKFiltered(spark, q, queryId, queryEmb, indexDir, k,
-        allowed, allowedIdCol, np),
-      sampleQueries)
-
-  /** Column-predicate twin of [[calibrateNprobeFiltered]] (postings
-    * must carry the metadata — [[append]]'s `metaCols`). */
+    * against exactly the answer set the runtime serves. Same predicate
+    * contract as [[queryTopKFiltered]]. */
   def calibrateNprobeFiltered(spark: SparkSession, sampleQueries: DataFrame,
       queryId: String, queryEmb: String, indexDir: String, k: Int,
       predicate: org.apache.spark.sql.Column, targetRecall: Double,
@@ -963,66 +912,6 @@ object VectorIndex {
     val chosen = candidates.find(np => recalls(np) >= targetRecall)
       .getOrElse(candidates.last)
     (chosen, recalls)
-  }
-
-  /** [[queryTopK]] with the nprobe dial MEASURED instead of guessed
-    * (r15 item 8): calibrate on a bounded sample of the batch itself
-    * against `targetRecall`, then probe the full batch at the chosen
-    * setting. This is the guard against the regime trap the recall
-    * curves document — nprobe 2 is recall ≥ 0.99 on a clustered corpus
-    * and can be well under target on a diffuse one, and nothing about
-    * a query batch announces which regime it is in.
-    *
-    * Cost: [[calibrateNprobe]] on `sampleRows` queries (exhaustive
-    * ground-truth probe + one probe per candidate) — amortize over a
-    * large batch or a repeated workload; for one-off small batches
-    * call [[queryTopK]] with an explicit nprobe instead. The sample is
-    * the batch HEAD (deterministic, no re-shuffle); callers whose
-    * batch is sorted by anything recall-correlated should pre-mix.
-    * When no candidate meets the target the largest is used (same
-    * fall-back contract as [[calibrateNprobe]] — treat a returned
-    * recall below target as "re-examine k or the clustering").
-    */
-  def queryTopKCalibrated(spark: SparkSession, queries: DataFrame,
-      queryId: String, queryEmb: String, indexDir: String, k: Int,
-      targetRecall: Double = 0.95, sampleRows: Int = 256,
-      candidates: Seq[Int] = Seq(1, 2, 4, 8, 16, 32, 64)): DataFrame = {
-    require(sampleRows >= 1, "sampleRows must be at least 1")
-    val sample = queries.limit(sampleRows).localCheckpoint(true)
-    val (np, _) = calibrateNprobe(spark, sample, queryId, queryEmb, indexDir,
-      k, targetRecall, candidates)
-    queryTopK(spark, queries, queryId, queryEmb, indexDir, k, np)
-  }
-
-  /** [[queryTopKFiltered]] with the nprobe dial calibrated against the
-    * SAME filter (VERDICT r17 item 5's packaged form): a selective
-    * predicate that would silently thin the default-nprobe candidate
-    * set instead raises the dial until the measured filtered recall
-    * meets `targetRecall`. Allowed-DF form. */
-  def queryTopKFilteredCalibrated(spark: SparkSession, queries: DataFrame,
-      queryId: String, queryEmb: String, indexDir: String, k: Int,
-      allowed: DataFrame, allowedIdCol: String,
-      targetRecall: Double = 0.95, sampleRows: Int = 256,
-      candidates: Seq[Int] = Seq(1, 2, 4, 8, 16, 32, 64)): DataFrame = {
-    require(sampleRows >= 1, "sampleRows must be at least 1")
-    val sample = queries.limit(sampleRows).localCheckpoint(true)
-    val (np, _) = calibrateNprobeFiltered(spark, sample, queryId, queryEmb,
-      indexDir, k, allowed, allowedIdCol, targetRecall, candidates)
-    queryTopKFiltered(spark, queries, queryId, queryEmb, indexDir, k,
-      allowed, allowedIdCol, np)
-  }
-
-  /** Column-predicate twin of [[queryTopKFilteredCalibrated]]. */
-  def queryTopKFilteredCalibrated(spark: SparkSession, queries: DataFrame,
-      queryId: String, queryEmb: String, indexDir: String, k: Int,
-      predicate: org.apache.spark.sql.Column, targetRecall: Double,
-      sampleRows: Int, candidates: Seq[Int]): DataFrame = {
-    require(sampleRows >= 1, "sampleRows must be at least 1")
-    val sample = queries.limit(sampleRows).localCheckpoint(true)
-    val (np, _) = calibrateNprobeFiltered(spark, sample, queryId, queryEmb,
-      indexDir, k, predicate, targetRecall, candidates)
-    queryTopKFiltered(spark, queries, queryId, queryEmb, indexDir, k,
-      predicate, np)
   }
 
   /** Fold the postings to the distinct vector set, in place,

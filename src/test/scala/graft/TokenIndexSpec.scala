@@ -302,7 +302,7 @@ class TokenIndexSpec extends SparkSpec {
       df.select(col("corpus_id").cast("long"), round(col("bm25"), 9))
         .as[(Long, Double)].collect().toMap
     val filtered = scores(TokenIndex.bm25IndexedFiltered(
-      spark, dir, Seq("koala"), allowed, "doc_id"))
+      spark, dir, Seq("koala"), col("corpus_id").isin(allowed)))
     assert(filtered.keySet == Set(2L, 4L),
       s"exactly the allowed matches must score: $filtered")
     // post-filtering keeps the DISALLOWED doc's df contribution: with
@@ -316,7 +316,7 @@ class TokenIndexSpec extends SparkSpec {
       s"allowed-slice df must change every score: $filtered vs $postFiltered")
     // an all-permissive filter degenerates to the unfiltered scores
     val all = scores(TokenIndex.bm25IndexedFiltered(
-      spark, dir, Seq("koala"), corpus.select(col("doc_id")), "doc_id"))
+      spark, dir, Seq("koala"), col("corpus_id").isin(corpus.select(col("doc_id")))))
     assert(all == scores(TokenIndex.bm25Indexed(spark, dir, Seq("koala"))))
   }
   test("legacy (pre-horizon) tombstone ledger: containment/bm25 keep masking, compact heals") {
@@ -394,11 +394,10 @@ class TokenIndexSpec extends SparkSpec {
     val byPred = scores(TokenIndex.bm25IndexedFiltered(
       spark, dir, terms, col("lang") === "en"))
     val byAllowed = scores(TokenIndex.bm25IndexedFiltered(
-      spark, dir, terms,
-      docs.filter(pmod(col("doc_id"), lit(2)) === 0).select(col("doc_id")),
-      "doc_id"))
+      spark, dir, terms, col("corpus_id").isin(
+        docs.filter(pmod(col("doc_id"), lit(2)) === 0).select(col("doc_id")))))
     assert(byPred.nonEmpty && byPred == byAllowed,
-      s"predicate and allowed-DF filtering must agree (${byPred.take(3)} vs ${byAllowed.take(3)})")
+      s"predicate and id-set filtering must agree (${byPred.take(3)} vs ${byAllowed.take(3)})")
     val plan = TokenIndex.bm25IndexedFiltered(
         spark, dir, terms, col("lang") === "en")
       .queryExecution.executedPlan.toString
@@ -420,9 +419,8 @@ class TokenIndexSpec extends SparkSpec {
     val predAfter = scores(TokenIndex.bm25IndexedFiltered(
       spark, dir, terms, col("lang") === "en"))
     val allowedAfter = scores(TokenIndex.bm25IndexedFiltered(
-      spark, dir, terms,
-      docs.filter(pmod(col("doc_id"), lit(2)) === 0).select(col("doc_id")),
-      "doc_id"))
+      spark, dir, terms, col("corpus_id").isin(
+        docs.filter(pmod(col("doc_id"), lit(2)) === 0).select(col("doc_id")))))
     assert(predAfter == allowedAfter && !predAfter.exists(_._1 == victim))
     // reserved / missing names refused loudly
     intercept[IllegalArgumentException] {
@@ -445,6 +443,38 @@ class TokenIndexSpec extends SparkSpec {
       TokenIndex.append(tagged.withColumn("src", lit("a")),
         "doc_id", "text", dir, 1L, metaCols = Seq("lang", "src"))
     }
+  }
+
+  test("composite filter: a stored-metadata comparison AND an id-set subquery in one predicate") {
+    // the token sibling of VectorIndexSpec's composite-filter case: the
+    // metadata comparison stays pushed beside the term filter, the id
+    // set plans as a broadcast left-semi join, and the scores equal the
+    // plain-column predicate's
+    val dir = Files.createTempDirectory("tokidx_composite").toString
+    val tagged = docs.withColumn("lang",
+      when(pmod(col("doc_id"), lit(2)) === 0, "en").otherwise("de"))
+    TokenIndex.append(tagged, "doc_id", "text", dir, 0L, metaCols = Seq("lang"))
+    val terms = Seq("dup", "join", "scan")
+    def scores(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double, Long)] =
+      df.select(col("corpus_id").cast("long"), round(col("bm25"), 9),
+        col("n_terms")).as[(Long, Double, Long)].collect().sortBy(_._1).toSeq
+    val ids = docs.filter(pmod(col("doc_id"), lit(3)) === 0).select(col("doc_id"))
+    val composite = col("lang") === "en" && col("corpus_id").isin(ids)
+    val got = scores(TokenIndex.bm25IndexedFiltered(spark, dir, terms, composite))
+    val plain = scores(TokenIndex.bm25IndexedFiltered(spark, dir, terms,
+      col("lang") === "en" && pmod(col("corpus_id"), lit(3)) === 0))
+    assert(got.nonEmpty && got == plain,
+      s"composite and plain-column filtering must agree (${got.take(3)} vs ${plain.take(3)})")
+    assert(got.forall(_._1 % 6 == 0), "only ids passing both filters may score")
+    val plan = TokenIndex.bm25IndexedFiltered(spark, dir, terms, composite)
+      .queryExecution.executedPlan.toString
+    val pushed = "PushedFilters: \\[([^\\]]*)\\]".r.findAllMatchIn(plan).map(_.group(1)).toSeq
+    assert(pushed.exists(_.contains("EqualTo(lang,en)")),
+      s"the metadata comparison must stay pushed to the postings scan:\n${plan.take(3000)}")
+    assert(plan.linesIterator.exists(l => l.contains("BroadcastHashJoin") && l.contains("LeftSemi")),
+      s"the id set must plan as a broadcast left-semi join:\n${plan.take(3000)}")
+    assert(!plan.contains("SortMergeJoin"),
+      s"the id-set join must stay a broadcast on this scale:\n${plan.take(3000)}")
   }
 
   test("evolveMetadata: one-time backfill widens the stored set; new-set appends accepted; probes read defaults") {
@@ -479,7 +509,7 @@ class TokenIndexSpec extends SparkSpec {
         .withColumn("src", lit("crawl2")),
       "doc_id", "text", dir, 1L, metaCols = Seq("lang", "src"))
     // a filtered probe ON THE EVOLVED COLUMN: backfilled rows answer
-    // under the default, and score-exact parity with the allowed-DF
+    // under the default, and score-exact parity with the id-set
     // form over the same slice proves the backfill is semantic, not
     // cosmetic
     val terms = Seq("dup", "join", "scan")
@@ -495,11 +525,10 @@ class TokenIndexSpec extends SparkSpec {
     assert(newSlice.nonEmpty && newSlice.forall(_._1 % 4 == 2),
       s"the appended value must select exactly the new docs: ${newSlice.take(5)}")
     val byAllowedOld = scores(TokenIndex.bm25IndexedFiltered(
-      spark, dir, terms,
-      docs.filter(pmod(col("doc_id"), lit(4)) === 0).select(col("doc_id")),
-      "doc_id"))
+      spark, dir, terms, col("corpus_id").isin(
+        docs.filter(pmod(col("doc_id"), lit(4)) === 0).select(col("doc_id")))))
     assert(oldSlice == byAllowedOld,
-      "evolved-column predicate must score-match the allowed-DF form")
+      "evolved-column predicate must score-match the id-set form")
     // the evolved column's predicate still lands in the parquet scan
     val plan = TokenIndex.bm25IndexedFiltered(
         spark, dir, terms, col("src") === "crawl1")

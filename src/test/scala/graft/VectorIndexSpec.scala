@@ -403,10 +403,10 @@ class VectorIndexSpec extends SparkSpec {
   }
 
   test("queryTopKCalibrated meets the recall target on a diffuse corpus where the default nprobe under-recalls") {
-    // the packaged calibrate-then-probe loop (r15 item 8): on the
-    // diffuse regime the queryTopK DEFAULT (nprobe 2) measurably
-    // under-recalls, and the calibrated entry point must close the gap
-    // to the target by measuring, not guessing
+    // the calibrate-then-probe loop (r15 item 8): on the diffuse
+    // regime the queryTopK DEFAULT (nprobe 2) measurably under-recalls,
+    // and calibrating on a batch-head sample then probing at the chosen
+    // nprobe must close the gap to the target by measuring, not guessing
     val idxDir = s"${Files.createTempDirectory("vecidx_calq")}/idx"
     val corpus = SynthEmbeddings.clustered(spark, 2000, dim = 64, clusters = 20,
       noise = 0.30, seed = 42L, pointSeed = 1042L).localCheckpoint(true)
@@ -425,10 +425,11 @@ class VectorIndexSpec extends SparkSpec {
         .count() / nTruth
     val rDefault = recallOf(VectorIndex.queryTopK(
       spark, queries, "vec_id", "embedding", idxDir, k = 10))
-    val rCal = recallOf(VectorIndex.queryTopKCalibrated(
-      spark, queries, "vec_id", "embedding", idxDir, k = 10,
-      targetRecall = 0.95, sampleRows = 100,
-      candidates = Seq(1, 2, 4, 8, 16, 32)))
+    val (npCal, _) = VectorIndex.calibrateNprobe(spark,
+      queries.limit(100).localCheckpoint(true), "vec_id", "embedding", idxDir,
+      k = 10, targetRecall = 0.95, candidates = Seq(1, 2, 4, 8, 16, 32))
+    val rCal = recallOf(VectorIndex.queryTopK(
+      spark, queries, "vec_id", "embedding", idxDir, k = 10, nprobe = npCal))
     assert(rDefault < 0.95,
       s"fixture must exhibit the regime trap (default recall $rDefault)")
     assert(rCal >= 0.93, // sample-vs-batch slack under the 0.95 target
@@ -810,7 +811,7 @@ class VectorIndexSpec extends SparkSpec {
       .select(col("vec_id"))
     val filtered = topk(VectorIndex.queryTopKFiltered(
       spark, queries, "vec_id", "embedding", idxDir, k = 2,
-      allowed, "vec_id", nprobe = 2))
+      col("vec_id").isin(allowed), nprobe = 2))
     assert(filtered.map(r => (r._2, r._4)) == Seq((2L, 1), (4L, 2)),
       s"filtered top-2 must be the two best ALLOWED vectors: $filtered")
     // the naive post-filter: unfiltered top-2 is {1 (disallowed), 2} —
@@ -824,7 +825,7 @@ class VectorIndexSpec extends SparkSpec {
     // an all-permissive filter degenerates to the unfiltered answer
     val all = topk(VectorIndex.queryTopKFiltered(
       spark, queries, "vec_id", "embedding", idxDir, k = 2,
-      corpus.select(col("vec_id")), "vec_id", nprobe = 2))
+      col("vec_id").isin(corpus.select(col("vec_id"))), nprobe = 2))
     assert(all == topk(VectorIndex.queryTopK(
       spark, queries, "vec_id", "embedding", idxDir, k = 2, nprobe = 2)))
     // the rerank sibling: filter inside the shortlist probe, exact
@@ -833,14 +834,14 @@ class VectorIndexSpec extends SparkSpec {
     val rerank = topk(VectorIndex.queryTopKRerankFiltered(
       spark, queries, "vec_id", "embedding", idxDir,
       corpus, "vec_id", "embedding", k = 2,
-      allowed, "vec_id", shortlist = 8, nprobe = 2))
+      col("vec_id").isin(allowed), shortlist = 8, nprobe = 2))
     assert(rerank == filtered, s"filtered rerank must agree: $rerank vs $filtered")
-    // the allowed-id semi-join must not cost the probe its two-tier
-    // scan pruning: the probed-bucket filter stays in PartitionFilters
-    // and the probed-cell filter stays pushed into the postings scan
+    // the id-set semi-join must not cost the probe its two-tier scan
+    // pruning: the probed-bucket filter stays in PartitionFilters and
+    // the probed-cell filter stays pushed into the postings scan
     val plan = VectorIndex.queryTopKFiltered(
       spark, queries, "vec_id", "embedding", idxDir, k = 2,
-      allowed, "vec_id", nprobe = 2)
+      col("vec_id").isin(allowed), nprobe = 2)
       .queryExecution.executedPlan.toString
     assert(plan.replaceAll("(?s).*PartitionFilters: \\[([^\\]]*)\\].*", "$1")
         .contains("cell_bucket"),
@@ -923,10 +924,10 @@ class VectorIndexSpec extends SparkSpec {
       predicate = col("lang") === "en", nprobe = 2))
     val byAllowed = topk(VectorIndex.queryTopKFiltered(
       spark, queries, "vec_id", "embedding", idxDir, k = 2,
-      corpus.filter(col("lang") === "en").select(col("vec_id")), "vec_id",
+      col("vec_id").isin(corpus.filter(col("lang") === "en").select(col("vec_id"))),
       nprobe = 2))
     assert(byPred() == byAllowed && byPred().map(_._2) == Seq(2L, 4L),
-      s"predicate and allowed-DF filtering must agree: ${byPred()} vs $byAllowed")
+      s"predicate and id-set filtering must agree: ${byPred()} vs $byAllowed")
     // plan: the metadata predicate reaches the scan as a pushed filter,
     // the two-tier cell/bucket pruning is intact, and NO join was added
     val plan = VectorIndex.queryTopKFiltered(
@@ -978,6 +979,37 @@ class VectorIndexSpec extends SparkSpec {
       VectorIndex.append(corpus.withColumn("src", lit("a")),
         "vec_id", "embedding", idxDir, 2L, metaCols = Seq("lang", "src"))
     }
+  }
+
+  test("composite filter: a stored-metadata comparison AND an id-set subquery in one predicate") {
+    // one Column carries both filter shapes: the metadata comparison
+    // stays a pushed scan filter, the id set plans as a broadcast
+    // left-semi join, and the rows equal the plain-column predicate's
+    val idxDir = s"${Files.createTempDirectory("vecidx_composite")}/idx"
+    val tagged = emb.withColumn("lang",
+      when(pmod(col("vec_id"), lit(2)) === 0, "en").otherwise("de"))
+    VectorIndex.build(tagged, "vec_id", "embedding", idxDir, k = 8,
+      maxIter = 5, metaCols = Seq("lang"))
+    val queries = emb.filter(col("vec_id") < 16)
+      .select((col("vec_id") + 10000L).as("vec_id"), col("embedding"))
+      .localCheckpoint(true)
+    val ids = emb.filter(pmod(col("vec_id"), lit(3)) === 0).select(col("vec_id"))
+    val composite = col("lang") === "en" && col("vec_id").isin(ids)
+    def probe(p: org.apache.spark.sql.Column) = VectorIndex.queryTopKFiltered(
+      spark, queries, "vec_id", "embedding", idxDir, k = 3, p, nprobe = 2)
+    val got = topk(probe(composite))
+    val plain = topk(probe(col("lang") === "en" && pmod(col("vec_id"), lit(3)) === 0))
+    assert(got.nonEmpty && got == plain,
+      s"composite and plain-column filtering must agree: ${got.take(4)} vs ${plain.take(4)}")
+    assert(got.forall(_._2 % 6 == 0), "only ids passing both filters may answer")
+    val plan = probe(composite).queryExecution.executedPlan.toString
+    val pushed = "PushedFilters: \\[([^\\]]*)\\]".r.findAllMatchIn(plan).map(_.group(1)).toSeq
+    assert(pushed.exists(_.contains("EqualTo(lang,en)")),
+      s"the metadata comparison must stay pushed to the postings scan:\n${plan.take(3000)}")
+    assert(plan.linesIterator.exists(l => l.contains("BroadcastHashJoin") && l.contains("LeftSemi")),
+      s"the id set must plan as a broadcast left-semi join:\n${plan.take(3000)}")
+    assert(!plan.contains("SortMergeJoin"),
+      s"the id-set join must stay a broadcast on this scale:\n${plan.take(3000)}")
   }
 
   test("evolveMetadata: backfill rewrite widens the set, keeps the bucket layout, new-set appends accepted") {
@@ -1093,16 +1125,18 @@ class VectorIndexSpec extends SparkSpec {
       targetRecall = 0.95, candidates = Seq(1, 2, 4, 8))
     assert(np == 8 && recalls(2) == 0.0,
       s"calibration must measure the miss and raise the dial: $np $recalls")
-    val got = topk(VectorIndex.queryTopKFilteredCalibrated(
-      spark, queries, "vec_id", "embedding", idxDir, k = 3, en,
-      targetRecall = 0.95, sampleRows = 4, candidates = Seq(1, 2, 4, 8)))
+    val (npCal, _) = VectorIndex.calibrateNprobeFiltered(
+      spark, queries.limit(4).localCheckpoint(true), "vec_id", "embedding",
+      idxDir, k = 3, en, targetRecall = 0.95, candidates = Seq(1, 2, 4, 8))
+    val got = topk(VectorIndex.queryTopKFiltered(
+      spark, queries, "vec_id", "embedding", idxDir, k = 3, en, nprobe = npCal))
     assert(got.map(r => (r._2, r._4)).take(1) == Seq((9000L, 1)),
       s"the calibrated call must recover the planted neighbor at rank 1: $got")
     assert(got.map(_._2) == Seq(9000L, 9001L, 9002L))
-    // the allowed-DF twin calibrates identically
+    // the id-set form of the same filter calibrates identically
     val (np2, _) = VectorIndex.calibrateNprobeFiltered(
       spark, queries, "vec_id", "embedding", idxDir, k = 3,
-      corpus.filter(en).select(col("vec_id")), "vec_id",
+      col("vec_id").isin(corpus.filter(en).select(col("vec_id"))),
       targetRecall = 0.95, candidates = Seq(1, 2, 4, 8))
     assert(np2 == 8)
   }
@@ -1123,10 +1157,11 @@ class VectorIndexSpec extends SparkSpec {
       k = 3, predicate = col("lang") === "en", shortlist = sl, nprobe = 2))
     val byAllowed = topk(VectorIndex.queryTopKRerankFiltered(
       spark, queries, "vec_id", "embedding", idxDir, emb, "vec_id", "embedding",
-      k = 3, emb.filter(pmod(col("vec_id"), lit(2)) === 0).select(col("vec_id")),
-      "vec_id", shortlist = sl, nprobe = 2))
+      k = 3, col("vec_id").isin(
+        emb.filter(pmod(col("vec_id"), lit(2)) === 0).select(col("vec_id"))),
+      shortlist = sl, nprobe = 2))
     assert(byPred.nonEmpty && byPred == byAllowed,
-      s"rerank predicate and allowed-DF forms must agree: ${byPred.take(4)} vs ${byAllowed.take(4)}")
+      s"rerank metadata and id-set predicates must agree: ${byPred.take(4)} vs ${byAllowed.take(4)}")
     assert(byPred.forall(_._2 % 2 == 0), "only allowed neighbors may answer")
   }
 }

@@ -11,18 +11,22 @@ every defaulted parameter (with its [parameter list:position]) and each site
 that overrides it, grouped into src/main, perfbench/src and src/test: a call
 that passes the parameter by name or by position, or a `.copy(field = ...)`
 of a case class that has it. A call is matched by the name it is made
-through (an `apply` by its object's name): a call qualified by a capitalized
-name (import renames and `val X = pkg.Object` aliases resolved) counts only
-for the object of that name, an unqualified call for its own file's
-definition when it has one, and a call on a value for every definition of
-that name, so the list may over-report but does not miss a direct call.
-Stdlib only.
+through (an `apply` by its object's name) and counts only where it resolves
+to the defining object: a call qualified by a capitalized name (import
+renames and `val X = pkg.Object` aliases resolved) counts for the object of
+that name, an unqualified call for its own file's definition when it has
+one, else for the objects the file imports the name from. Any other
+matching call (one made on a value or an expression, or an unqualified one
+whose name the file neither defines nor imports) is listed on an
+`unresolved:` line under the parameter and enters none of the totals, so no
+site is dropped silently. Stdlib only.
 """
 import bisect, os, re, sys
 
 HEAD = re.compile(r"\b(?:def\s+[\w$]+|case\s+class\s+\w+)\s*(?:\[[^\]]*\])?\s*\(")
 DEF = re.compile(r"\b(def|case\s+class)\s+([\w$]+)\s*(?:\[[^\]]*\])?\s*\(")
 OWNER = re.compile(r"\b(?:object|class|trait)\s+(\w+)")
+IMPORT = re.compile(r"\bimport\s+[\w.]*?\b([A-Z]\w*)\s*\.\s*(?:\{([^}]*)\}|([\w$*]+))")
 DEPTH = {"(": 1, "[": 1, "{": 1, ")": -1, "]": -1, "}": -1}
 GROUPS = ("src/main", "perfbench/src", "src/test")
 
@@ -140,6 +144,18 @@ def arg_override(args, pi, pname):
     return "positional" if positional > pi and not any(a.endswith("_*") for a in parts) else None
 
 
+def imported_names(src):
+    """{name: {object}} for every `import ...Object.name` (braces and
+    renames included, a wildcard maps to the key "_")."""
+    out = {}
+    for m in IMPORT.finditer(src):
+        for sel in (m.group(2) or m.group(3)).split(","):
+            name = re.split(r"\s*=>\s*", sel.strip())[-1]
+            if name:
+                out.setdefault("_" if name == "*" else name, set()).add(m.group(1))
+    return out
+
+
 def sites(root):
     defs = definitions(root)
     files = {}
@@ -147,6 +163,7 @@ def sites(root):
         for rel in scala_files(root, g):
             files[rel] = (g, strip(open(os.path.join(root, rel), encoding="utf-8").read()))
     found = {d: [] for d in defs}
+    unresolved = {d: [] for d in defs}
     by_call = {}
     for d in defs:
         by_call.setdefault(d[4], []).append(d)
@@ -157,6 +174,7 @@ def sites(root):
     for rel, (g, src) in files.items():
         aliases = {b: a for a, b in re.findall(r"\b(\w+)\s*=>\s*(\w+)\s*[,}]", src)}
         aliases.update(re.findall(r"\bval\s+([A-Z]\w*)\s*=\s*[\w.]*?\b(\w+)\s*$", src, re.M))
+        imports = imported_names(src)
         starts = [0] + [i + 1 for i, ch in enumerate(src) if ch == "\n"]
         line_of = lambda i: bisect.bisect_right(starts, i)
         for call, ds in by_call.items():
@@ -166,17 +184,29 @@ def sites(root):
                 if re.search(r"\b(def|class)\s+$", before):
                     continue
                 qual = aliases.get(m.group(2), m.group(2))
-                # an unqualified call binds to its own file's definition
-                # when there is one; a capitalized qualifier names an object
-                # (ours, or a foreign class that defines none of these)
-                cands = local if qual is None and local else ds
+                if qual is None and re.search(r"\.\s*$", src[max(0, m.start() - 80):m.start()]):
+                    qual = "."  # a call on an expression: `f(x).g(`, a chained `.g(`
+                if qual == "this":
+                    qual = None
+                # a capitalized qualifier names an object (ours, or a foreign
+                # class that defines none of these); an unqualified call binds
+                # to its own file's definition, else to an imported one
+                if qual and qual[0].isupper():
+                    cands = [d for d in ds if qual in (d[2], d[4])]
+                elif qual is None and local:
+                    cands = local
+                elif qual is None:
+                    cands = [d for d in ds if d[2] in imports.get(call, set()) | imports.get("_", set())]
+                else:
+                    cands = []
+                resolved = bool(cands) or (qual and qual[0].isupper())
                 for li, args in enumerate(param_lists(src, m.end() - 1)):
-                    for d in cands:
-                        if d[6] != li or (qual and qual[0].isupper() and d[2] != qual and d[4] != qual):
-                            continue
-                        how = arg_override(args, d[7], d[8])
-                        if how:
+                    for d in cands if resolved else ds:
+                        how = d[6] == li and arg_override(args, d[7], d[8])
+                        if how and resolved:
                             found[d].append((g, f"{rel}:{line_of(m.start())}", how))
+                        elif how:
+                            unresolved[d].append(f"{rel}:{line_of(m.start())} ({how})")
         for m in re.finditer(r"\.\s*copy\s*\(", src):
             for args in param_lists(src, m.end() - 1):
                 for a in split_top(args):
@@ -184,11 +214,11 @@ def sites(root):
                     for d in fields.get(n.group(1), []) if n else []:
                         found[d].append((g, f"{rel}:{line_of(m.start())}", "copy"))
                 break
-    return defs, found
+    return defs, found, unresolved
 
 
 def print_sites(root):
-    defs, found = sites(root)
+    defs, found, unresolved = sites(root)
     outside = sum(1 for d in defs if not any(g != "src/test" for g, _, _ in found[d]))
     nowhere = sum(1 for d in defs if not found[d])
     print(f"total {len(defs)}")
@@ -201,6 +231,8 @@ def print_sites(root):
         for g in GROUPS:
             hits = [f"{s} ({how})" for gg, s, how in found[d] if gg == g]
             print(f"  {g}: " + (", ".join(hits) if hits else "-"))
+        if unresolved[d]:
+            print("  unresolved: " + ", ".join(unresolved[d]))
 
 
 if __name__ == "__main__":
