@@ -4921,7 +4921,7 @@ object Queries {
     else {
       val sl = math.max(50L, graft.operators.VectorIndex
         .maxProbeCandidates(s, dir.toString, nprobe)).toInt
-      java.nio.file.Files.write(f.toPath, (sl + "\n").getBytes("UTF-8"))
+      java.nio.file.Files.write(f.toPath, s"$sl\n".getBytes("UTF-8"))
       sl
     }
   }

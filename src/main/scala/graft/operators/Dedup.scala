@@ -262,8 +262,8 @@ object Dedup {
           // max_by keeps whole rows; ties on the version break by the
           // full row struct (total because rows compare field-wise)
           df.groupBy(idCols.map(col): _*)
-            .agg(max_by(struct(df.columns.map(df(_)): _*),
-              struct(col(v), struct(df.columns.map(df(_)): _*))).as("__r"))
+            .agg(max_by(struct(df.columns.toSeq.map(df(_)): _*),
+              struct(col(v), struct(df.columns.toSeq.map(df(_)): _*))).as("__r"))
             .select(col("__r.*"))
         case None => df.distinct()
       }
@@ -1100,7 +1100,7 @@ object Dedup {
       .drop("__cc_id", "cluster_id")
     val winners = joined.filter(col("cluster_id").isNotNull)
       .groupBy(col("cluster_id"))
-      .agg(max_by(struct(df.columns.map(df(_)): _*),
+      .agg(max_by(struct(df.columns.toSeq.map(df(_)): _*),
         struct(col(scoreCol), col(idCol))).as("__w"))
       .select(col("__w.*"))
     unclustered.unionByName(winners)

@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   *
   * The state table holds the natural keys of everything processed so far;
   * new work = `input ANTI JOIN state` on the key columns — one exact
-  * anti-join that shuffles both sides on the key.
+  * anti-join with no aggregation: a broadcast when the state side is
+  * small, a sort-merge join otherwise.
   */
 object Incremental {
 
@@ -19,9 +20,13 @@ object Incremental {
     * EVERY run and re-appended forever — breaking the module's
     * zero-new-rows-on-unchanged-input invariant and growing state
     * unboundedly.
+    *
+    * The state side is NOT de-duplicated: an anti-join's result does not
+    * depend on how many right-side rows match, and a `distinct()` would
+    * cost a shuffle stage (and a job) on every run that has state.
     */
   def newRows(input: DataFrame, state: DataFrame, keys: Seq[String]): DataFrame = {
-    val st = state.select(keys.map(col): _*).distinct()
+    val st = state.select(keys.map(col): _*)
     val cond = keys.map(k => input(k) <=> st(k)).reduce(_ && _)
     input.join(st, cond, "left_anti")
   }

@@ -407,7 +407,7 @@ object CorpusPipeline {
       .groupBy(col(partCol))
       .agg(count(lit(1)).as("n_docs"),
         sum(TF.tokenCount(col(textCol)).cast("long")).as("n_tokens"),
-        bit_xor(xxhash64(back.columns.map(col): _*)).as("content_sig"))
+        bit_xor(xxhash64(back.columns.toSeq.map(col): _*)).as("content_sig"))
       .localCheckpoint(true)
     graft.sources.JsonlCorpus.write(manifest, s"$dir/_manifest", partitions = 1)
     manifest

@@ -94,8 +94,9 @@ object FotoFixture {
     * (fresh state → everything is new work): unpivot → normalize →
     * anti-join empty state → broadcast dim → blob join →
     * decode/resize/encode → partitioned sink + metadata append.
-    * Returns the metadata row count (one action drives the image
-    * write too, via writeOutputs). */
+    * Returns the metadata row count, read back from the written
+    * output ([[FotoPipeline.writeOutputs]] evaluates the pipeline once
+    * and writes both sinks from that one snapshot). */
   def runPipeline(spark: SparkSession, corpusDir: String, outDir: String): Long = {
     val wide = ParquetRead(spark, s"$corpusDir/wide")
     val blobs = ParquetRead(spark, s"$corpusDir/blobs")

@@ -39,9 +39,13 @@ object Xlsx {
 
   // ---------------------------------------------------------------- read
 
+  /** The sheet every read takes (1-based workbook order): the first, as
+    * the reference's `pd.read_excel` reads by default. */
+  val Sheet = 1
+
   /** Distributed read of one file or a glob of files: first row of each
     * workbook is the header; every data cell is a string, missing/blank
-    * cells are null. `sheet` is 1-based workbook order.
+    * cells are null. The sheet read is [[Sheet]], the workbook's first.
     *
     * Header policy: by default headers must agree EXACTLY across files
     * (the safe mode — a silent column drift in a Forms export corrupts
@@ -60,7 +64,7 @@ object Xlsx {
     * than once re-parses every workbook per action (zip + StAX, CPU-
     * bound) and should `.cache()` it like any other expensive source.
     */
-  def read(spark: SparkSession, path: String, sheet: Int = 1,
+  def read(spark: SparkSession, path: String,
       allowMissingColumns: Boolean = false): DataFrame = {
     // Header validation is its own HEADER-ONLY job: each workbook's XML
     // parse stops after row 0 (maxRowsPerFile = 1), so the driver
@@ -68,7 +72,7 @@ object Xlsx {
     // earlier design cached the full raw parse plus a materialized
     // projection, i.e. two in-memory string copies of the corpus, just
     // to check headers.
-    val headers = readRaw(spark, path, sheet, maxRowsPerFile = 1)
+    val headers = readRaw(spark, path, maxRowsPerFile = 1)
       .filter(col("row_idx") === 0)
       .select(col("path"), col("cells")).collect()
     require(headers.nonEmpty, s"Xlsx.read: no rows in any workbook under $path")
@@ -106,7 +110,7 @@ object Xlsx {
     // it never agreed to. (Files REWRITTEN in place are out of scope —
     // the same single-writer window every sink in this engine assumes.)
     val validated = byPath.map(_._1).toSet
-    val body = readRaw(spark, path, sheet)
+    val body = readRaw(spark, path)
       .filter(col("row_idx") > 0 && col("path").isInCollection(validated))
     if (allowMissingColumns) {
       // per-file by-name projection: a tiny broadcast mapping frame
@@ -134,13 +138,14 @@ object Xlsx {
     }
   }
 
-  /** Raw per-row read: (path, row_idx, cells array<string>) — row 0 is
-    * the sheet's first row, cells padded/ragged exactly as stored.
+  /** Raw per-row read of [[Sheet]]: (path, row_idx, cells
+    * array<string>) — row 0 is the sheet's first row, cells
+    * padded/ragged exactly as stored.
     * `maxRowsPerFile` truncates each workbook's PARSE (not just the
     * output) after that many rows — the header-validation path reads
     * row 0 without materializing any sheet body.
     */
-  def readRaw(spark: SparkSession, path: String, sheet: Int = 1,
+  def readRaw(spark: SparkSession, path: String,
       maxRowsPerFile: Int = Int.MaxValue): DataFrame = {
     val bin = spark.read.format("binaryFile")
       .option("pathGlobFilter", "*.xlsx")
@@ -153,7 +158,7 @@ object Xlsx {
     val rdd = bin.rdd.flatMap { r =>
       val p = r.getString(0)
       val rows =
-        try parseWorkbook(r.getAs[Array[Byte]](1), sheet, maxRowsPerFile)
+        try parseWorkbook(r.getAs[Array[Byte]](1), Sheet, maxRowsPerFile)
         catch { case e: Exception =>
           throw new IllegalArgumentException(s"Xlsx: failed to parse $p: ${e.getMessage}", e)
         }

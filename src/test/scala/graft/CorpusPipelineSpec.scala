@@ -320,8 +320,8 @@ class CorpusPipelineSpec extends SparkSpec {
     val on = CorpusPipeline.curate(docs, "doc_id", "text",
       CorpusPipeline.Config(minTokens = 5, normalizeUnicode = true))
     assert(on.count() == 1, "normalized variants collapse")
-    assert(on.select(max(length(col("text")))).as[Int].head ==
-      on.select(min(length(col("text")))).as[Int].head)
+    assert(on.select(max(length(col("text")))).as[Int].head() ==
+      on.select(min(length(col("text")))).as[Int].head())
   }
 
   test("unigram surprisal: closed-form on a known distribution, rare > common") {

@@ -267,6 +267,27 @@ class DedupSpec extends SparkSpec {
       "null-keyed rows must match null state keys (invariant: rerun => zero new)")
   }
 
+  test("newRows: duplicate state keys (a null key too) give the rows a de-duplicated state does") {
+    val input = Seq(
+      (Option("k1"), "a"), (Option("k2"), "b"), (Option("k2"), "b2"), (Option("k3"), "c"),
+      (Option.empty[String], "n"), (Option("k4"), "d")).toDF("key", "v")
+    val dupState = Seq(Option("k1"), Option("k1"), Option("k3"), Option("k3"), Option("k3"),
+      Option.empty[String], Option.empty[String]).toDF("key")
+    def fresh(state: org.apache.spark.sql.DataFrame) =
+      Incremental.newRows(input, state, Seq("key")).as[(Option[String], String)].collect().sorted.toSeq
+    val expected = Seq((Option("k2"), "b"), (Option("k2"), "b2"), (Option("k4"), "d"))
+    // both physical strategies: a broadcast of the small state, and a
+    // sort-merge join once broadcasting is off
+    Seq("10485760", "-1").foreach { threshold =>
+      val prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+      try {
+        assert(fresh(dupState.distinct()) == expected, s"threshold $threshold")
+        assert(fresh(dupState) == expected, s"threshold $threshold")
+      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
+    }
+  }
+
   test("flagContaminated tolerates a benchmark that already has the corpus text column name") {
     val corpus = Seq((1L, "alpha beta gamma delta epsilon zeta")).toDF("doc_id", "text")
     val bench = Seq(("alpha beta gamma delta epsilon zeta", "unrelated"))

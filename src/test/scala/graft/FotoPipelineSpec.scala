@@ -6,7 +6,7 @@ import java.nio.file.Files
 import javax.imageio.ImageIO
 
 import org.apache.spark.sql.functions._
-import graft.pipeline.FotoPipeline
+import graft.pipeline.{FotoFixture, FotoPipeline}
 import graft.sources.IdempotentBlobSink
 
 class FotoPipelineSpec extends SparkSpec {
@@ -100,6 +100,48 @@ class FotoPipelineSpec extends SparkSpec {
     // rerun with updated state → zero new work (reference invariant test.py:203-204)
     val state2 = state.unionByName(meta.select("kode_proyek", "minggu", "nama_file"))
     assert(FotoPipeline.newWork(long, state2, dim).count() == 0)
+  }
+
+  test("writeOutputs evaluates the image stage once for both sinks") {
+    val tmp = Files.createTempDirectory("foto_once").toString
+    val wide = Seq(
+      ("P1", "minggu 7", "http://x/a.jpg", "pondasi", "http://x/b.jpg", "atap"),
+      ("P2", "minggu 8", "http://x/c.jpg", "dinding", null: String, null: String))
+      .toDF("kode_proyek", "minggu", "foto_1", "deskripsi_1", "foto_2", "deskripsi_2")
+    val long = FotoPipeline.unpivotSlots(wide, Seq("kode_proyek", "minggu"), FotoPipeline.slotPairs(2))
+    val state = Seq.empty[(String, String, String)].toDF("kode_proyek", "minggu", "nama_file")
+    val dim = Seq((1, "Foto Pertama"), (2, "Foto Kedua")).toDF("slot", "folder")
+    // an identity UDF upstream of the image stage counts how many times
+    // each row is pulled through it; nondeterministic so the optimizer
+    // neither duplicates nor drops it
+    val evaluated = spark.sparkContext.longAccumulator("foto_content_evaluations")
+    val counted = udf { (b: Array[Byte]) => evaluated.add(1); b }.asNondeterministic()
+    val work = FotoPipeline.newWork(long, state, dim)
+      .withColumn("content", counted(lit(jpegBytes(64, 48))))
+    FotoPipeline.writeOutputs(FotoPipeline.processImages(work, "content"),
+      s"$tmp/images", s"$tmp/meta")
+
+    val meta = spark.read.parquet(s"$tmp/meta")
+    assert(meta.columns.sorted.toSeq ==
+      Seq("deskripsi_foto", "kode_proyek", "link_foto", "minggu", "nama_file", "size_gambar_kb"))
+    val written = meta.count()
+    assert(written == 3)
+    assert(spark.read.parquet(s"$tmp/images").count() == written)
+    assert(evaluated.value == written,
+      s"the image stage ran ${evaluated.value} times for $written rows written")
+    val imgDirs = new java.io.File(s"$tmp/images").listFiles().filter(_.isDirectory).map(_.getName)
+    assert(imgDirs.toSet == Set("kode_proyek=P1", "kode_proyek=P2"))
+  }
+
+  test("fixture corpus: runPipeline output passes the golden contract") {
+    val tmp = Files.createTempDirectory("foto_golden").toString
+    FotoFixture.generate(spark, s"$tmp/corpus", 8)
+    // 8 image ids over 4 submissions; row 0's slot 2 (image 1) is absent
+    val rows = FotoFixture.runPipeline(spark, s"$tmp/corpus", s"$tmp/out")
+    assert(rows == 7)
+    val (violations, checked) = FotoFixture.checkGolden(spark, s"$tmp/out")
+    assert(checked == rows)
+    assert(violations == 0, s"$violations of $checked images break the golden contract")
   }
 
   test("raw binary tree sink writes the reference layout and overwrites idempotently") {

@@ -335,7 +335,7 @@ class RelationalSpec extends SparkSpec {
     // the iteration leaves behind at most its own (caller-unpersistable)
     // cached result — no checkpoint-pinned intermediates
     result.unpersist(blocking = true)
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- cachedBefore
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet.toSet -- cachedBefore
     assert(leaked.isEmpty, s"pinned blocks leaked: $leaked")
   }
 
