@@ -324,34 +324,9 @@ object Bench {
     val sf1Enabled = only.isEmpty && sys.env.getOrElse("SPARK_GRAFT_SF1", "1") != "0"
     if (sf1Enabled && elapsed + 120 < maxTotalSec) {
       try {
-        val marker = java.nio.file.Paths.get(sf1Dir, "_SCALE_SRC")
-        // fingerprint carries the SOURCE CONTENT identity (file count +
-        // per-file name, size, mtime), not just the path: fixtures
-        // rebuilt in place at the same path must invalidate the
-        // synthetic replication, or the sf1 column quietly stops being
-        // comparable to the sf0.1 sweep. SHA-256 over the identity
-        // lines — a 32-bit String.hashCode leaves a real collision
-        // window, and a collision here has NO failure signal (stale
-        // synthetic data silently benched as fresh)
-        val srcFp = {
-          val dir = new java.io.File(sfDir)
-          val files = Option(dir.listFiles()).getOrElse(Array.empty)
-            .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-          val lines = s"n=${files.length}" +:
-            files.map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-          val md = java.security.MessageDigest.getInstance("SHA-256")
-          md.digest(lines.mkString("\n").getBytes("UTF-8"))
-            .map("%02x".format(_)).mkString
-        }
-        val want = s"$sfDir|$sf1Factor|$srcFp"
-        val have =
-          if (java.nio.file.Files.exists(marker))
-            java.nio.file.Files.readString(marker).trim
-          else ""
-        if (have != want) {
+        if (!ScaleUp.isFresh(sfDir, sf1Dir, sf1Factor)) {
           System.err.println(s"[bench] sf1: generating $sf1Dir = $sfDir x$sf1Factor")
           ScaleUp.generate(spark, sfDir, sf1Dir, sf1Factor)
-          java.nio.file.Files.writeString(marker, want + "\n")
         }
         val subset = sorted.filter { case (n, _) => sf1QueryNames.contains(n) }
         val sf1Reps = sys.env.getOrElse("SPARK_GRAFT_SF1_REPS", "3").toInt.max(1)

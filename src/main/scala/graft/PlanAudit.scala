@@ -92,24 +92,12 @@ object PlanAudit {
       case "scale" =>
         // regenerate the sf1 synthetic replication outside a full Bench
         // sweep (dev loops at SPARK_GRAFT_SF_DIR=target/scale/sf1 need
-        // it): same generator, same fingerprint marker as Bench's sf1
-        // stage, so a subsequent full sweep sees it fresh and skips.
+        // it): the generator writes the fingerprint marker Bench's sf1
+        // stage checks, so a subsequent full sweep sees it fresh and skips.
         val dst = if (args.length > 2) args(2) else "target/scale/sf1"
         val factor = if (args.length > 3) args(3).toInt else 10
         val t0 = System.nanoTime()
         ScaleUp.generate(spark, sfDir, dst, factor)
-        val srcFp = {
-          val dir = new java.io.File(sfDir)
-          val files = Option(dir.listFiles()).getOrElse(Array.empty)
-            .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-          val lines = s"n=${files.length}" +:
-            files.map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-          val md = java.security.MessageDigest.getInstance("SHA-256")
-          md.digest(lines.mkString("\n").getBytes("UTF-8"))
-            .map("%02x".format(_)).mkString
-        }
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(dst, "_SCALE_SRC"), s"$sfDir|$factor|$srcFp\n")
         System.err.println(f"[audit] scale: $dst = $sfDir x$factor in ${(System.nanoTime() - t0) / 1e9}%.1f s")
       case other =>
         System.err.println(s"unknown mode '$other' (plans | explain | time | scale)")

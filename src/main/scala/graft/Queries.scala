@@ -3031,7 +3031,7 @@ object Queries {
       // localCheckpoint lifetime follows the jaccard-join precedent:
       // blocks reclaimed by the ContextCleaner with the result plan)
       val vocab = graft.operators.Bpe
-        .vocabTable(docs, "text", minCount = 2L, maxVocabTypes = 5000000)
+        .vocabTable(docs, "text", minCount = 2L, maxVocabTypes = graft.operators.Bpe.MaxVocabTypes)
         .localCheckpoint(true)
       val first = graft.operators.Bpe.learnMergesFromVocab(vocab, 1).head
       graft.operators.Bpe.initialPairCountsFrom(vocab)
@@ -4928,7 +4928,8 @@ object Queries {
 
   /** A derived directory cached across invocations:
     * `java.io.tmpdir/graft_<tag>_<hex(d.hashCode)>`, valid while its
-    * marker file holds `fixtureFingerprint(d, table) + suffix`.
+    * marker file holds the fixture table's
+    * [[ScaleUp.listingFingerprint]] + `suffix`.
     * The suffix is a format/sizing-rule version, so changing it
     * invalidates the cache just like a rebuilt fixture does. On a
     * missing or different marker the dir is deleted, `build(dir)`
@@ -4939,7 +4940,9 @@ object Queries {
     val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
       s"graft_${tag}_${Integer.toHexString(d.hashCode)}")
     val marker = new java.io.File(dir, "_SRC_FP")
-    val srcFp = fixtureFingerprint(d, table) + suffix
+    val src = new java.io.File(d, table)
+    val srcFp = ScaleUp.listingFingerprint(Option(
+      if (src.isDirectory) src.listFiles() else Array(src)).getOrElse(Array.empty).toSeq) + suffix
     val fresh = !marker.exists() ||
       new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8")
         .trim != srcFp
@@ -4949,22 +4952,6 @@ object Queries {
       java.nio.file.Files.write(marker.toPath, (srcFp + "\n").getBytes("UTF-8"))
     }
     dir
-  }
-
-  /** Content fingerprint of one fixture table (names+sizes+mtimes
-    * sha-256 — Bench's `_SCALE_SRC` idiom), for queries that persist a
-    * derived index across invocations: a rebuilt fixture at the same
-    * path must invalidate the index, silently stale state has no
-    * failure signal. */
-  private[graft] def fixtureFingerprint(sfDir: String, table: String): String = {
-    val src = new java.io.File(sfDir, table)
-    val files = Option(if (src.isDirectory) src.listFiles() else Array(src))
-      .getOrElse(Array.empty).sortBy(_.getName)
-    val lines = s"n=${files.length}" +:
-      files.toSeq.map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    md.digest(lines.mkString("\n").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
   }
 
   // ---------------------------------------------------------------------------

@@ -39,7 +39,7 @@ import graft.sources.ParquetRead
   * Both perturbations are bijective per replica and seed-free
   * (deterministic in (column value, __r)), so reruns are reproducible.
   *
-  *   sbt "runMain graft.ScaleUp /root/testdata/sf0.1 target/scale/sf1 10"
+  *   sbt "runMain graft.PlanAudit scale /root/testdata/sf0.1 target/scale/sf1 10"
   */
 object ScaleUp {
 
@@ -145,24 +145,48 @@ object ScaleUp {
     })
   }
 
-  def main(args: Array[String]): Unit = {
-    val Array(srcDir, outDir, factorStr) = args
-    val spark = Sessions.local()
-    generate(spark, srcDir, outDir, factorStr.toInt)
-    spark.stop()
+  /** SHA-256 over a listing's identity (the count, then `name:size:mtime`
+    * per name-sorted file): fixtures rebuilt in place at the same path
+    * invalidate what was derived from them, with no 32-bit collision
+    * window (a collision would read stale data as fresh, silently). */
+  private[graft] def listingFingerprint(files: Seq[java.io.File]): String = {
+    val sorted = files.sortBy(_.getName)
+    val lines = s"n=${sorted.length}" +:
+      sorted.map(f => s"${f.getName}:${f.length}:${f.lastModified}")
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(lines.mkString("\n").getBytes("UTF-8")).map("%02x".format(_)).mkString
+  }
+
+  /** `outDir`'s `_SCALE_SRC` marker, and its content once `outDir` holds
+    * the current `srcDir` ×`factor`. */
+  private def marker(srcDir: String, outDir: String, factor: Int) = {
+    val parquet = Option(new java.io.File(srcDir).listFiles()).getOrElse(Array.empty)
+      .filter(_.getName.endsWith(".parquet"))
+    (java.nio.file.Paths.get(outDir, "_SCALE_SRC"),
+      s"$srcDir|$factor|${listingFingerprint(parquet.toSeq)}")
+  }
+
+  /** True when `outDir` holds [[generate]]'s output for the current `srcDir` at `factor`. */
+  def isFresh(srcDir: String, outDir: String, factor: Int): Boolean = {
+    val (path, want) = marker(srcDir, outDir, factor)
+    java.nio.file.Files.exists(path) && java.nio.file.Files.readString(path).trim == want
   }
 
   /** Replicate the fixture tables at `srcDir` `factor`× into `outDir`
     * (FK-consistent key shifts; per-replica text rotation and embedding
     * isometry — see the column helpers above). Deterministic: same
-    * inputs → byte-identical synthetic tables, so callers (Bench's sf1
-    * stage) can fingerprint (srcDir, factor) and reuse the output.
+    * inputs → byte-identical synthetic tables, so the run ends by writing
+    * the `_SCALE_SRC` marker that [[isFresh]] checks and callers (Bench's
+    * sf1 stage) reuse the output while it holds.
     */
   def generate(spark: org.apache.spark.sql.SparkSession, srcDir: String,
       outDir: String, factor: Int): Unit = {
     require(factor >= 1 && factor <= 100,
       "factor must be in [1, 100]: ScaleUpSpec pins alphabet-mapping " +
         "distinctness (hence cross-replica text distinctness) only to 100")
+    // a run that dies midway must not leave an earlier run's marker behind
+    val (markerFile, markerText) = marker(srcDir, outDir, factor)
+    java.nio.file.Files.deleteIfExists(markerFile)
     // factor ≤ 10 keeps the ORIGINAL rotation bijection so sf1 output
     // stays byte-identical across rounds (Bench's fingerprinted cache,
     // BASELINE.md comparability); larger factors switch to the
@@ -219,5 +243,6 @@ object ScaleUp {
         .withColumn("embedding", perturbEmbedding(col("embedding"), col("__r")))
         .withColumn("label", col("label") + col("__r") * lit(1000000)),
       "embeddings")
+    java.nio.file.Files.writeString(markerFile, markerText + "\n")
   }
 }

@@ -20,12 +20,15 @@ object Sessions {
   def localCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
     Runtime.getRuntime.availableProcessors.toString)
 
+  def local(cores: String = localCpus, shufflePartitions: String = localCpus): SparkSession =
+    local(cores, shufflePartitions, maxTaskFailures = 1)
+
   /** `maxTaskFailures` > 1 enables task RETRY in local mode
     * (`local[N, F]`) — the default local master fails the job on first
     * task death, hiding the retry-idempotency semantics every sink must
-    * honor on a real cluster. Production mains keep the default. */
-  def local(cores: String = localCpus, shufflePartitions: String = localCpus,
-      maxTaskFailures: Int = 1): SparkSession = {
+    * honor on a real cluster. */
+  private[graft] def local(cores: String, shufflePartitions: String,
+      maxTaskFailures: Int): SparkSession = {
     val master =
       if (maxTaskFailures > 1) s"local[$cores, $maxTaskFailures]" else s"local[$cores]"
     val spark = SparkSession

@@ -40,8 +40,13 @@ object SynthEmbeddings {
     * otherwise plan downstream per-row work single-partition).
     */
   def clustered(spark: SparkSession, n: Int, dim: Int, clusters: Int,
+      noise: Double, seed: Long, pointSeed: Long): DataFrame =
+    clustered(spark, n, dim, clusters, noise, seed, pointSeed, idOffset = 0L, shift = 0.0)
+
+  /** [[clustered]] with ids from `idOffset` and the centers drifted by `shift`. */
+  private[graft] def clustered(spark: SparkSession, n: Int, dim: Int, clusters: Int,
       noise: Double, seed: Long, pointSeed: Long,
-      idOffset: Long = 0L, shift: Double = 0.0): DataFrame = {
+      idOffset: Long, shift: Double): DataFrame = {
     require(n > 0 && dim > 0 && clusters > 0 && noise >= 0 && shift >= 0)
     val centerRng = new scala.util.Random(seed)
     def unitGaussian(rng: scala.util.Random): Array[Double] = {

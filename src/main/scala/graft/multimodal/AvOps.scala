@@ -21,7 +21,7 @@ object AvOps {
   final case class AvRecord(id: Long, media_type: String, content: Array[Byte])
   final case class FrameRow(id: Long, frame_idx: Int, frame_bytes: Array[Byte])
 
-  /** Decoded-audio summary: time-domain stats plus an `nBands`-bin
+  /** Decoded-audio summary: time-domain stats plus an [[AvOps.AudioBands]]-bin
     * spectral energy profile over [0, nyquist).
     */
   final case class AudioFeatures(
@@ -193,26 +193,27 @@ object AvOps {
 
   /** Samples [[audioFeatures]] decodes and transforms per clip. */
   val FeatureSamples: Int = 1 << 14
+  /** Equal-width spectral bands of [[audioFeatures]]. */
+  val AudioBands = 8
 
   /** REAL audio kernel: WAV PCM decode + feature extraction as a scalar
     * UDF over the binary column — rms, peak amplitude, zero-crossing
-    * rate, and spectral energy summed into `nBands` equal-width bands of
+    * rate, and spectral energy summed into [[AudioBands]] equal-width bands of
     * [0, nyquist) from an FFT of the first [[FeatureSamples]] samples
     * (bounded work per row regardless of clip length). NULL or undecodable
     * payloads yield NULL — bad files become filterable rows, never task
     * failures. UDF (not codegen) is deliberate: the kernel is imperative
     * DSP, isolated in one projection exactly like the image ops.
     */
-  def audioFeatures(nBands: Int = 8)
-      : org.apache.spark.sql.expressions.UserDefinedFunction =
+  def audioFeatures: org.apache.spark.sql.expressions.UserDefinedFunction =
     udf((bytes: Array[Byte]) =>
       if (bytes == null) None
       else decodeWav(bytes, FeatureSamples).map { case (sr, ch, n, head, sumSq, peak, zc) =>
         val p = fftPower(head)
-        val bands = new Array[Double](nBands)
+        val bands = new Array[Double](AudioBands)
         var k = 0
         while (k < p.length) {
-          bands(math.min(k * nBands / p.length, nBands - 1)) += p(k)
+          bands(math.min(k * AudioBands / p.length, AudioBands - 1)) += p(k)
           k += 1
         }
         AudioFeatures(
@@ -321,25 +322,28 @@ object AvOps {
       }
     }
 
-  /** Frame sampling plumbing: emit every `everyN`-th fixed-size window of
+  /** Bytes per window of [[sampleFrames]]. */
+  val FrameBytes = 4096
+
+  /** Frame sampling plumbing: emit every `everyN`-th [[FrameBytes]] window of
     * the payload as a "frame" — the codec-agnostic fallback for payloads
     * no demuxer claims ([[videoKeyFrames]] is the real AVI path). The
     * per-partition iterator shape — one input row fanning out to many
     * frame rows without materializing all frames in memory — is the part
     * that matters at scale.
     */
-  def sampleFrames(ds: Dataset[AvRecord], everyN: Int, frameBytes: Int = 4096)(
+  def sampleFrames(ds: Dataset[AvRecord], everyN: Int)(
       implicit enc: org.apache.spark.sql.Encoder[FrameRow]): Dataset[FrameRow] =
     ds.mapPartitions { rows =>
       rows.flatMap { r =>
         if (r.content == null) Iterator.empty
         else {
-          val nFrames = math.max(r.content.length / frameBytes, 1)
+          val nFrames = math.max(r.content.length / FrameBytes, 1)
           // clamp like videoKeyFrames: everyN = 0 throws ('step cannot be
           // 0') inside the task and a negative step silently emits nothing
           (0 until nFrames by math.max(everyN, 1)).iterator.map { i =>
-            val from = math.min(i * frameBytes, r.content.length)
-            val until = math.min(from + frameBytes, r.content.length)
+            val from = math.min(i * FrameBytes, r.content.length)
+            val until = math.min(from + FrameBytes, r.content.length)
             FrameRow(r.id, i, java.util.Arrays.copyOfRange(r.content, from, until))
           }
         }

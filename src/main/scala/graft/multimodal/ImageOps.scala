@@ -119,10 +119,6 @@ object ImageOps {
 
   // ------------------------------------------------------------- column API
 
-  /** struct(width int, height int) or NULL when undecodable. */
-  val imageDims: org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((bytes: Array[Byte]) => decodeDims(bytes))
-
   /** size in KB rounded to 2 decimals — the reference's metadata metric
     * (`test.py:58-59`), pure built-ins.
     */
@@ -563,10 +559,6 @@ object ImageOps {
     * decode, no image bytes touched. */
   def gridBlobMinDistance(a: Array[Byte], b: Array[Byte]): Double =
     gridMinDistanceOf(blobToGrids(a), blobToGrids(b))
-
-  /** [[gridBlob]] UDF (binary or null on undecodable bytes). */
-  val imageGridBlob: org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((bytes: Array[Byte]) => gridBlob(bytes).orNull)
 
   /** [[gridBlobMinDistance]] UDF. */
   val imageGridBlobMinDistance: org.apache.spark.sql.expressions.UserDefinedFunction =

@@ -21,12 +21,12 @@ import graft.functions.{TextFunctions => TF}
   * costs one Spark job per merge (30k jobs for a production vocab) —
   * merge rounds launch ZERO Spark jobs. Driver memory is bounded by the
   * word-frequency table — and that table is itself BOUNDED before the
-  * collect (see [[learnMerges]]'s `minCount` / `maxVocabTypes`): a
+  * collect (see [[learnMerges]]'s `minCount` / [[Bpe.MaxVocabTypes]]): a
   * noisy 100 TB web corpus has 10⁸–10⁹ distinct token types (URLs,
   * hex hashes, typos), so an unbounded collect would be a multi-GB
   * driver OOM. With the opt-in `minCount = 2` floor the driver holds
   * only the repeated-type vocab (~5M types ≈ 100 MB on real web text,
-  * hard cap `maxVocabTypes` regardless of corpus).
+  * hard cap [[Bpe.MaxVocabTypes]] regardless of corpus).
   */
 object Bpe {
 
@@ -45,8 +45,7 @@ object Bpe {
       .filter(col("freq") >= minCount)
     // The cap's sort is over the already-floored vocab table (not the
     // corpus) — vocab-sized, one-time, trivial next to the corpus pass.
-    if (maxVocabTypes == Int.MaxValue) vocab
-    else vocab.orderBy(col("freq").desc, col("w").asc).limit(maxVocabTypes)
+    vocab.orderBy(col("freq").desc, col("w").asc).limit(maxVocabTypes)
   }
 
   /** Distributed first-iteration pair statistics: every adjacent
@@ -63,8 +62,7 @@ object Bpe {
     * driver and code points here — identical except for astral-plane
     * symbols, which character-level BPE vocabularies don't reach.
     */
-  def initialPairCounts(docs: DataFrame, textCol: String,
-      minCount: Long = 1L): DataFrame =
+  def initialPairCounts(docs: DataFrame, textCol: String, minCount: Long): DataFrame =
     initialPairCountsFrom(vocabTable(docs, textCol, minCount, MaxVocabTypes))
 
   /** The default vocab-type cap of training and [[initialPairCounts]]. */
@@ -103,9 +101,10 @@ object Bpe {
     * containing the same bigram) can learn a different merge list than
     * minCount = 1 would. On natural text the tail's per-pair mass is
     * negligible and the floored model is the standard one trainers
-    * ship. `maxVocabTypes` is the hard memory bound: keep only the
-    * top-N types by (freq desc, word asc — the tie order makes the cut
-    * deterministic). Driver memory is O(maxVocabTypes), independent of
+    * ship. [[MaxVocabTypes]] is the hard memory bound, a backstop orders
+    * of magnitude above any natural repeated vocab: keep only the top-N
+    * types by (freq desc, word asc — the tie order makes the cut
+    * deterministic). Driver memory is O(MaxVocabTypes), independent of
     * corpus size.
     *
     * DEFAULT is `minCount = 1` (no floor): flooring changes training
@@ -115,12 +114,10 @@ object Bpe {
     * existing caller's corpus. (Round 12 briefly shipped a floored
     * default; reverted round 13 per ADVICE — version note: any caller
     * that adopted the r12 default must now pass `minCount = 2`.)
-    * `maxVocabTypes` stays defaulted because it is a pure memory
-    * backstop orders of magnitude above any natural repeated vocab.
     */
   def learnMerges(docs: DataFrame, textCol: String, numMerges: Int,
-      minCount: Long = 1L, maxVocabTypes: Int = MaxVocabTypes): Seq[(String, String, Long)] =
-    learnMergesFromVocab(vocabTable(docs, textCol, minCount, maxVocabTypes), numMerges)
+      minCount: Long = 1L): Seq[(String, String, Long)] =
+    learnMergesFromVocab(vocabTable(docs, textCol, minCount, MaxVocabTypes), numMerges)
 
   /** [[learnMerges]] from an already-built `(w, freq)` vocab frame
     * (see [[initialPairCountsFrom]]).

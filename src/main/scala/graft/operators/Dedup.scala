@@ -28,7 +28,9 @@ object Dedup {
     * `*MinMatches` distinct frames/windows per side within `*MaxHamming`
     * bits; oriented-verified images take candidates within
     * `OrientedCandidateMaxHamming` bits (recall-loose, at the measured
-    * floor) and keep grids within `MaxGridDistance` gray levels. */
+    * floor) and keep grids within `MaxGridDistance` gray levels; a new
+    * image matches the kept-image state within `ImageVsStateMaxHamming`
+    * bits. */
   val SigChunks = 8
   val VideoEveryN = 1
   val VideoMaxHamming = 4
@@ -40,6 +42,11 @@ object Dedup {
   val AudioMinMatches = 4
   val OrientedCandidateMaxHamming = 3
   val MaxGridDistance = 8.0
+  val ImageVsStateMaxHamming = 5
+  /** SimHash geometry of [[simHashNearDuplicates]]. */
+  val SimHashBits = 48
+  val SimHashChunks = 4
+  val SimHashMaxHamming = 3
 
   /** Exact dedup: keep the first row (lowest `idCol`) per key. One shuffle
     * (the window partition); no join.
@@ -221,10 +228,10 @@ object Dedup {
     *     are collapsed — keep-latest is undefined when nothing orders
     *     the duplicates, and guessing would drop live signatures
     *     nondeterministically.
-    *   - only rows passing `retain` (optional retention predicate —
-    *     e.g. `col("seen_at") > cutoff` for a sliding-window dedup
-    *     policy), applied AFTER keep-latest so the latest row decides
-    *     retention.
+    *   - with [[compactSignatureStateKeys]], only rows passing `retain`
+    *     (optional retention predicate — e.g. `col("seen_at") > cutoff`
+    *     for a sliding-window dedup policy), applied AFTER keep-latest
+    *     so the latest row decides retention.
     *
     * Returns (rowsBefore, rowsAfter). Detection parity: compacting a
     * state whose duplicates are redundant (identical signatures, or
@@ -238,9 +245,8 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession,
       stateDir: String,
       idCol: String,
-      versionCol: Option[String] = None,
-      retain: Option[Column] = None): (Long, Long) =
-    compactSignatureStateKeys(spark, stateDir, Seq(idCol), versionCol, retain)
+      versionCol: Option[String]): (Long, Long) =
+    compactSignatureStateKeys(spark, stateDir, Seq(idCol), versionCol, None)
 
   /** Composite-key form of [[compactSignatureState]] for SEQUENCE
     * signature states, where one state row is one (clip, frame/window)
@@ -379,23 +385,17 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
   }
 
-  /** SimHash near-duplicates: pairs within `maxHamming` bits. Blocking by
-    * signature chunk (pigeonhole: distance < chunks ⇒ some chunk equal)
-    * keeps this an equi-join too.
+  /** SimHash near-duplicates: pairs within [[SimHashMaxHamming]] bits.
+    * Blocking by signature chunk (pigeonhole: distance < chunks ⇒ some
+    * chunk equal) keeps this an equi-join too.
     */
-  def simHashNearDuplicates(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      bits: Int = 48,
-      chunks: Int = 4,
-      maxHamming: Int = 3): DataFrame =
+  def simHashNearDuplicates(df: DataFrame, idCol: String, textCol: String): DataFrame =
     hammingNearDuplicates(
       df.select(col(idCol).as("__id"),
           HashFunctions.hashedTokens(TextFunctions.tokens(col(textCol))).as("__th"))
         .select(col("__id"),
-          HashFunctions.simHashFromHashes(col("__th"), bits).as("__sig")),
-      bits, chunks, maxHamming)
+          HashFunctions.simHashFromHashes(col("__th"), SimHashBits).as("__sig")),
+      SimHashBits, SimHashChunks, SimHashMaxHamming)
 
   /** Perceptual IMAGE near-duplicates: pairs of binary image columns
     * whose 64-bit dHash ([[graft.multimodal.ImageOps.dHash]]) is within
@@ -667,12 +667,12 @@ object Dedup {
     * half-window shift, `hop = window/2` recovers it). Undecodable
     * payloads contribute nothing (quarantine upstream).
     */
-  def audioNearDuplicates(
-      df: DataFrame,
-      idCol: String,
-      bytesCol: String,
-      window: Int = AudioWindow,
-      hop: Int = AudioHop): DataFrame = {
+  def audioNearDuplicates(df: DataFrame, idCol: String, bytesCol: String): DataFrame =
+    audioNearDuplicates(df, idCol, bytesCol, AudioWindow, AudioHop)
+
+  /** [[audioNearDuplicates]] with the window geometry explicit. */
+  private[graft] def audioNearDuplicates(df: DataFrame, idCol: String, bytesCol: String,
+      window: Int, hop: Int): DataFrame = {
     // the all-zero fingerprint is the degenerate fixed point of every
     // STATIC spectrum (silence, a held test tone, dropouts): no band
     // difference ever grows, so unrelated static clips collide on it
@@ -904,9 +904,9 @@ object Dedup {
       .filter(col("sig").isNotNull)
 
   /** Incremental image near-dup: flag each image of a NEW batch whose
-    * dHash sits within `maxHamming` bits of any previously-KEPT image's
-    * stored signature — the production shape where "dedup the new
-    * crawl" must never re-decode the corpus. Blocking is the pigeonhole
+    * dHash sits within [[ImageVsStateMaxHamming]] bits of any
+    * previously-KEPT image's stored signature — the production shape
+    * where "dedup the new crawl" must never re-decode the corpus. Blocking is the pigeonhole
     * chunk join run on DISTINCT signatures on BOTH sides (the r16/r17
     * identical-signature skew rule: a crawl's placeholder-image batch
     * collapses to one blocked row, and so does the state's), expanded
@@ -914,18 +914,16 @@ object Dedup {
     * annotated with (dup_of, hamming) — `dup_of` NULL for survivors
     * (and for undecodable rows); the match is deterministic: smallest
     * hamming, ties to the smallest state id. Append the survivors'
-    * [[imageSignatures]] to state after each run.
+    * [[imageSignatures]] to state after each run; `stateSigs` is that
+    * state, (idCol, sig).
     */
-  def imageNearDuplicatesVsState(
-      batch: DataFrame,
-      idCol: String,
-      bytesCol: String,
-      stateSigs: DataFrame, // (idCol, sig) from imageSignatures
-      chunks: Int = SigChunks,
-      maxHamming: Int = 5,
-      orientationRobust: Boolean = false): DataFrame = {
-    require(maxHamming < chunks, "pigeonhole blocking needs maxHamming < chunks")
-    require(64 % chunks == 0, "chunks must divide 64")
+  def imageNearDuplicatesVsState(batch: DataFrame, idCol: String, bytesCol: String,
+      stateSigs: DataFrame): DataFrame =
+    imageNearDuplicatesVsState(batch, idCol, bytesCol, stateSigs, orientationRobust = false)
+
+  /** [[imageNearDuplicatesVsState]] over orientation-robust signatures when set. */
+  private[graft] def imageNearDuplicatesVsState(batch: DataFrame, idCol: String,
+      bytesCol: String, stateSigs: DataFrame, orientationRobust: Boolean): DataFrame = {
     // ONE decode per batch image: the signature frame feeds both the
     // distinct-sig blocking and the final member expansion. The flag
     // must match the one the STATE was built with (dHash and canonical
@@ -937,7 +935,7 @@ object Dedup {
       .select(col(idCol).as("__sid"), col("sig").as("__ssig"))
       .groupBy(col("__ssig")).agg(min(col("__sid")).as("__sid"))
     val best = crossSigCandidates(bs.select(col("__bsig")),
-        sReps.select(col("__ssig")), chunks, maxHamming)
+        sReps.select(col("__ssig")), SigChunks, ImageVsStateMaxHamming)
       .join(sReps, Seq("__ssig")) // one row per __ssig: re-attach its rep id
       .groupBy(col("__bsig"))
       .agg(min(struct(col("hamming"), col("__sid"))).as("m"))
@@ -971,7 +969,7 @@ object Dedup {
     * from the data itself — for corpora with NO natural blocking column —
     * then near-dup pairs are found by exact cosine WITHIN each learned
     * cluster and one representative per connected near-dup group
-    * survives (`scoreCol` = keep the best copy; None = keep min-id).
+    * survives (the min id).
     *
     * Scale shape: training is O(iterations) map-only passes + one
     * k-buffer aggregation each ([[Similarity.kmeansCentroids]]); final
@@ -990,8 +988,12 @@ object Dedup {
       embCol: String,
       k: Int,
       threshold: Double,
-      maxIter: Int = 8,
-      scoreCol: Option[String] = None): DataFrame = {
+      maxIter: Int = 8): DataFrame =
+    semanticDeduplicate(df, idCol, embCol, k, threshold, maxIter, scoreCol = None)
+
+  /** [[semanticDeduplicate]] keeping the highest-`scoreCol` copy per group when set. */
+  private[graft] def semanticDeduplicate(df: DataFrame, idCol: String, embCol: String,
+      k: Int, threshold: Double, maxIter: Int, scoreCol: Option[String]): DataFrame = {
     // degenerate corpora (empty, or no usable embeddings) have nothing to
     // dedup — pass through rather than failing k-means' empty-input guard
     val usable = col(embCol).isNotNull && size(col(embCol)) > 0

@@ -14,6 +14,16 @@ object Relational {
   /** Round caps of [[transitiveClosure]] and [[connectedComponents]]. */
   val ClosureMaxIter = 12
   val ComponentsMaxIter = 25
+  /** Node cap above which [[transitiveClosure]] refuses the quadratic output. */
+  val ClosureMaxNodes = 100000L
+  /** Edge counts up to which [[connectedComponents]], [[pageRank]] and the
+    * DAG relaxations run as a driver loop over the collected edges. */
+  val ComponentsLocalMaxEdges = 200000L
+  val PageRankLocalMaxEdges = 100000L
+  val DagLocalMaxEdges = 10000L
+  /** Rounds of [[dagDepth]]; nodes up to which [[descendantCounts]] keeps exact bitsets. */
+  val DagDepthMaxIter = 12
+  val DescendantsExactMaxNodes = 1 << 12
 
   /** An `eligible` edge table's rows if it holds at most `max`: ONE job
     * decides a small-graph gate and fetches the graph. */
@@ -184,17 +194,11 @@ object Relational {
   private def releasePinned(sc: org.apache.spark.SparkContext, ids: Set[Int]): Unit =
     ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
 
-  /** Re-home a (possibly checkpoint-backed) result onto the CacheManager
-    * so the CALLER's plain `unpersist()` works, then drop the checkpoint
-    * blocks it was built from. Materializes the cache first — the
-    * truncated-lineage snapshot cannot be recomputed once released
-    * (MEMORY_AND_DISK then spills rather than drops under pressure).
-    */
   /** Backward as-of join: every left row picks the LATEST right row of
-    * the same key whose timestamp is <= the left timestamp (< when
-    * `strict`), left-outer — unmatched left rows carry nulls. Output =
-    * all left columns, then all non-key right columns (caller renames
-    * right columns beforehand if they collide with the left's).
+    * the same key whose timestamp is <= the left timestamp, left-outer —
+    * unmatched left rows carry nulls. Output = all left columns, then all
+    * non-key right columns (caller renames right columns beforehand if
+    * they collide with the left's).
     *
     * Scale shape — this is NOT a join at all: both sides are union'd,
     * hash-partitioned by key, sorted by (ts, side), and each left row
@@ -215,8 +219,14 @@ object Relational {
     * later, at first downstream column resolution).
     */
   def asofJoin(left: DataFrame, right: DataFrame, keyCols: Seq[String],
-      leftTsCol: String, rightTsCol: String, strict: Boolean = false,
-      rightTieBreak: Option[Column] = None): DataFrame = {
+      leftTsCol: String, rightTsCol: String,
+      rightTieBreak: Option[Column] = None): DataFrame =
+    asofJoin(left, right, keyCols, leftTsCol, rightTsCol, strict = false, rightTieBreak)
+
+  /** [[asofJoin]]; `strict` matches only right rows before the left timestamp. */
+  private[graft] def asofJoin(left: DataFrame, right: DataFrame, keyCols: Seq[String],
+      leftTsCol: String, rightTsCol: String, strict: Boolean,
+      rightTieBreak: Option[Column]): DataFrame = {
     val lCols = left.columns.toSeq
     val rPayloadCols = right.columns.toSeq.diff(keyCols)
     val collisions = lCols.intersect(rPayloadCols)
@@ -257,6 +267,12 @@ object Relational {
       .select(lCols.map(n => col(s"__l.$n")) ++ rPayloadCols.map(n => col(s"__m.$n")): _*)
   }
 
+  /** Re-home a (possibly checkpoint-backed) result onto the CacheManager
+    * so the CALLER's plain `unpersist()` works, then drop the checkpoint
+    * blocks it was built from. Materializes the cache first — the
+    * truncated-lineage snapshot cannot be recomputed once released
+    * (MEMORY_AND_DISK then spills rather than drops under pressure).
+    */
   private def rehomed(df: DataFrame, pinned: Set[Int]): DataFrame = {
     if (pinned.nonEmpty) {
       df.persist()
@@ -279,27 +295,25 @@ object Relational {
     * reachability has a linear-state form instead: per-node descendant
     * counts → [[descendantCounts]] (backward bitset/HLL registers),
     * longest/critical path and reachable-set maxima → [[dagRelaxMax]],
-    * clustering → [[connectedComponents]]. The `maxNodes` guard makes
-    * the quadratic path an explicit opt-in (raise it consciously), not
-    * something a caller wanders into: node count is checked with ONE
-    * narrow job before any closure work starts. Callers that have
-    * ALREADY sized their graph can pass `maxNodes = Long.MaxValue` to
-    * skip the pre-count job entirely (no wasted job when the bound
-    * cannot bind).
+    * clustering → [[connectedComponents]]. The [[ClosureMaxNodes]] guard
+    * keeps the quadratic path from being something a caller wanders into:
+    * node count is checked with ONE narrow job before any closure work
+    * starts.
     */
-  def transitiveClosure(edges: DataFrame, srcCol: String, dstCol: String,
-      maxNodes: Long = 100000L): DataFrame = {
+  def transitiveClosure(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    transitiveClosure(edges, srcCol, dstCol, ClosureMaxNodes)
+
+  /** [[transitiveClosure]] with the node cap explicit. */
+  private[graft] def transitiveClosure(edges: DataFrame, srcCol: String, dstCol: String,
+      maxNodes: Long): DataFrame = {
     val sc = edges.sparkSession.sparkContext
-    if (maxNodes != Long.MaxValue) {
-      val nNodes = edges.select(col(srcCol).as("n"))
-        .union(edges.select(col(dstCol).as("n"))).distinct().count()
-      require(nNodes <= maxNodes,
-        s"transitiveClosure: $nNodes nodes exceeds maxNodes=$maxNodes. The closure is " +
-          "QUADRATIC in component size; for descendant counts use descendantCounts, for " +
-          "path/reachability aggregates use dagRelaxMax, for clustering use " +
-          "connectedComponents. Raise maxNodes only if the full pair list is truly needed " +
-          "(maxNodes = Long.MaxValue also skips this pre-count job).")
-    }
+    val nNodes = edges.select(col(srcCol).as("n"))
+      .union(edges.select(col(dstCol).as("n"))).distinct().count()
+    require(nNodes <= maxNodes,
+      s"transitiveClosure: $nNodes nodes exceeds maxNodes=$maxNodes. The closure is " +
+        "QUADRATIC in component size; for descendant counts use descendantCounts, for " +
+        "path/reachability aggregates use dagRelaxMax, for clustering use " +
+        "connectedComponents.")
     var closure = edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct().persist()
     var closurePinned = Set.empty[Int]
     var n = closure.count()
@@ -358,8 +372,12 @@ object Relational {
     * every third also pointer-jumps, so the reachable diameter for a given
     * budget is strictly larger than the previous one-hop-per-round form.
     */
-  def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
-      localMaxEdges: Long = 200000L): DataFrame = {
+  def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    connectedComponents(edges, srcCol, dstCol, ComponentsLocalMaxEdges)
+
+  /** [[connectedComponents]]; `localMaxEdges = 0` forces the distributed loop. */
+  private[graft] def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
+      localMaxEdges: Long): DataFrame = {
     val sc = edges.sparkSession.sparkContext
     // small-graph fast path (broadcast-threshold reasoning, same as
     // dagRelaxMax): min-label propagation pays ~O(log diameter) scheduled
@@ -527,11 +545,10 @@ object Relational {
   /** Longest path (in hops) to each node of a DAG from any root —
     * iterative relaxation; useful for stage-dependency scheduling depth.
     */
-  def dagDepth(edges: DataFrame, srcCol: String, dstCol: String, maxIter: Int = 12,
-      localMaxEdges: Long = 10000L): DataFrame =
+  def dagDepth(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
     dagRelaxMax(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst"), lit(1L).as("__w")),
-      "src", "dst", Seq("__w" -> "depth"), maxIter, localMaxEdges)
+      "src", "dst", Seq("__w" -> "depth"), DagDepthMaxIter, DagLocalMaxEdges)
 
   /** Weighted longest-path relaxation over a DAG: for every node, the
     * maximum over all paths of the sum of edge weights reaching it
@@ -558,7 +575,7 @@ object Relational {
     */
   def dagRelaxMax(edges: DataFrame, srcCol: String, dstCol: String,
       weights: Seq[(String, String)], maxIter: Int = 50,
-      localMaxEdges: Long = 10000L): DataFrame = {
+      localMaxEdges: Long = DagLocalMaxEdges): DataFrame = {
     require(weights.nonEmpty, "dagRelaxMax: need at least one weight column")
     val sc = edges.sparkSession.sparkContext
     val outCols = weights.map(_._2)
@@ -691,7 +708,7 @@ object Relational {
     * O(V·register) state, O(longest-path) rounds, one equi-join + one
     * aggregation per round. Two register representations, picked by
     * graph size:
-    *   - `|V| ≤ exactMaxNodes`: a dense BITSET (`array<long>` of
+    *   - `|V| ≤` [[DescendantsExactMaxNodes]]: a dense BITSET (`array<long>` of
     *     ⌈V/64⌉ words; nodes ranked once). The per-word OR-merge is a
     *     plain `bit_or` aggregate per word — native, codegen'd, no UDAF
     *     — and counts are EXACT (`bit_count` popcounts).
@@ -705,8 +722,12 @@ object Relational {
     * changes no register.
     */
   def descendantCounts(edges: DataFrame, srcCol: String, dstCol: String,
-      maxIter: Int = 50, exactMaxNodes: Int = 1 << 12,
-      localMaxEdges: Long = 10000L): DataFrame = {
+      maxIter: Int = 50): DataFrame =
+    descendantCounts(edges, srcCol, dstCol, maxIter, DescendantsExactMaxNodes, DagLocalMaxEdges)
+
+  /** [[descendantCounts]] with its exact/sketch and driver-loop size forks explicit. */
+  private[graft] def descendantCounts(edges: DataFrame, srcCol: String, dstCol: String,
+      maxIter: Int, exactMaxNodes: Int, localMaxEdges: Long): DataFrame = {
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct().persist()
     val nodes = e.select(col("src").as("node")).union(e.select(col("dst"))).distinct().persist()
     val v = nodes.count()
@@ -774,14 +795,20 @@ object Relational {
     * out-weight normalization NaN). A node ONLY touched by dropped
     * edges leaves the graph entirely. `weightCol = None` ranks the
     * unweighted graph.
-    * Edge tables at or under `localMaxEdges` run the identical
+    * Edge tables at or under [[PageRankLocalMaxEdges]] run the identical
     * recurrence as a driver loop (threshold-guarded fast path with
     * distributed fallback, the same split as [[descendantCounts]] /
-    * [[dagRelaxMax]]); `localMaxEdges = 0` forces the distributed path.
+    * [[dagRelaxMax]]).
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
       weightCol: Option[String] = None, iterations: Int = 10,
-      damping: Double = 0.85, localMaxEdges: Long = 100000L): DataFrame = {
+      damping: Double = 0.85): DataFrame =
+    pageRank(edges, srcCol, dstCol, weightCol, iterations, damping, PageRankLocalMaxEdges)
+
+  /** [[pageRank]]; `localMaxEdges = 0` forces the distributed path. */
+  private[graft] def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
+      weightCol: Option[String], iterations: Int, damping: Double,
+      localMaxEdges: Long): DataFrame = {
     require(iterations >= 1, s"pageRank: iterations must be >= 1, got $iterations")
     val e = edges
       .filter(col(srcCol).isNotNull && col(dstCol).isNotNull)
@@ -1078,13 +1105,16 @@ object Relational {
     *
     * Returns (stage_id, duration_days, early_start, early_finish) in day
     * offsets from project start (earliest start floored at 0, the
-    * project-start constraint), plus start/finish dates when
-    * `projectStart` is given.
+    * project-start constraint). `stages` holds (stage_id, duration_days,
+    * ...); `deps` holds (stage_id = child, depends_on_stage_id = parent,
+    * relation_type, lag_days).
     */
-  def cpmSchedule(
-      stages: DataFrame, // (stage_id, duration_days, ...)
-      deps: DataFrame, // (stage_id = child, depends_on_stage_id = parent, relation_type, lag_days)
-      projectStart: Option[java.sql.Date] = None): DataFrame = {
+  def cpmSchedule(stages: DataFrame, deps: DataFrame): DataFrame =
+    cpmSchedule(stages, deps, None)
+
+  /** [[cpmSchedule]] plus start/finish dates when `projectStart` is given. */
+  private[graft] def cpmSchedule(stages: DataFrame, deps: DataFrame,
+      projectStart: Option[java.sql.Date]): DataFrame = {
     val dur = stages.select(col("stage_id"), col("duration_days").cast("long").as("__dur"))
     val rel = upper(trim(col("relation_type")))
     // LEFT joins + a raise_error guard: an inner join would silently DROP

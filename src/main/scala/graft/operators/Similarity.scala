@@ -22,6 +22,11 @@ object Similarity {
   /** [[pqCodebooks]]' Lloyd rounds per subspace and training-sample size. */
   val PqMaxIter = 10
   val PqTrainRows: Int = 1 << 14
+  /** Codes per [[pqCodebooks]] subspace. */
+  val PqCodes = 256
+  /** Training-sample cap of [[kmeansCentroids]]: larger corpora train on a
+    * hash-cut sample of about this many rows. */
+  val KmeansMaxTrainRows: Int = 1 << 21
 
   /** Rank a scored candidate set down to k per query: the custom TopK
     * operator bounds each input partition to k rows per query BEFORE the
@@ -125,7 +130,7 @@ object Similarity {
       queryEmb: String,
       centroids: DataFrame, // (centroid_id, centroid: array<double>)
       k: Int,
-      nprobe: Int = 2): DataFrame = {
+      nprobe: Int): DataFrame = {
     // All centroids as ONE broadcast array row. Assignment is then a pure
     // per-row projection (argmax over the array) — the previous
     // crossJoin+window formulation shuffled |corpus|·|centroids| rows just
@@ -292,7 +297,7 @@ object Similarity {
     * centroid maintenance is O(k·dim) driver state, never corpus-sized.
     *
     * Training is BOUNDED: Lloyd iterates over a deterministic uniform
-    * hash sample of ~`maxTrainRows` vectors ([[trainingSample]] — a
+    * hash sample of ~[[KmeansMaxTrainRows]] vectors ([[trainingSample]] — a
     * MAP-ONLY `xxhash64(id) < cutoff` filter, never a sort of the
     * embedding stream; a corpus at or under the bound trains on
     * everything). This is what makes the operator honest at 100 TB —
@@ -363,8 +368,12 @@ object Similarity {
       idCol: String,
       embCol: String,
       k: Int,
-      maxIter: Int = 8,
-      maxTrainRows: Int = 1 << 21): Array[Array[Double]] = {
+      maxIter: Int = 8): Array[Array[Double]] =
+    kmeansCentroids(df, idCol, embCol, k, maxIter, KmeansMaxTrainRows)
+
+  /** [[kmeansCentroids]] with the full-corpus/sample fork explicit. */
+  private[graft] def kmeansCentroids(df: DataFrame, idCol: String, embCol: String, k: Int,
+      maxIter: Int, maxTrainRows: Int): Array[Array[Double]] = {
     require(k > 0, "k must be positive")
     require(maxTrainRows >= k, "maxTrainRows must be at least k")
     val spark = df.sparkSession
@@ -481,8 +490,12 @@ object Similarity {
       idCol: String,
       embCol: String,
       m: Int,
-      ncodes: Int = 256,
-      residualOf: Array[Array[Double]] = null): Array[Array[Array[Double]]] = {
+      residualOf: Array[Array[Double]] = null): Array[Array[Array[Double]]] =
+    pqCodebooks(df, idCol, embCol, m, PqCodes, residualOf)
+
+  /** [[pqCodebooks]] with the codes per subspace explicit. */
+  private[graft] def pqCodebooks(df: DataFrame, idCol: String, embCol: String, m: Int,
+      ncodes: Int, residualOf: Array[Array[Double]]): Array[Array[Array[Double]]] = {
     require(m > 0, "m must be positive")
     require(ncodes > 0 && ncodes <= Short.MaxValue, "ncodes must fit short codes")
     val spark = df.sparkSession

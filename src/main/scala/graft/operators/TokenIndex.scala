@@ -469,9 +469,10 @@ object TokenIndex {
     * column a full corpus re-ingest. A compact-shaped ONE-TIME
     * postings rewrite: every existing posting row gains each new
     * column as its literal default (the semantics the caller asserts
-    * for pre-evolution documents), swapped into place under
-    * [[graft.sources.Compaction.rewriteParquetDir]]'s marker-protected
-    * two-rename protocol and the index dir's writer lease. After it,
+    * for pre-evolution documents), swapped into place by
+    * [[graft.sources.Compaction.rewriteParquetDir]]'s two-rename swap
+    * under the postings dir's own [[graft.sources.Lease]] and the index
+    * dir's writer lease. After it,
     * appends must carry the WIDENED set (the invariant keeps
     * enforcing uniformity — now at the new set), and filtered probes
     * read the backfilled defaults for pre-evolution rows with the

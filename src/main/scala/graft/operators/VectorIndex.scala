@@ -700,10 +700,14 @@ object VectorIndex {
       k)
   }
 
+  /** Drift trigger of [[rebuildIfDrifted]] (the BASELINE r15 decay
+    * curve's documented trigger: sustained ≳ 0.1, not one noisy run). */
+  val DriftThreshold = 0.1
+  val DriftSustain = 2
+
   /** Close the drift loop: re-[[build]] when the decay signal is
-    * SUSTAINED — the last `sustain` ingest runs ALL read
-    * `rel_drop >= threshold` (the BASELINE r15 decay curve's documented
-    * trigger: sustained ≳ 0.1, not one noisy run). Returns true when a
+    * SUSTAINED — the last [[DriftSustain]] ingest runs ALL read
+    * `rel_drop >=` [[DriftThreshold]]. Returns true when a
     * re-build ran. The caller supplies the full CURRENT corpus — the
     * index's folded postings are the old model's assignments, not a
     * substitute for the raw vectors — and the re-build preserves the
@@ -718,17 +722,15 @@ object VectorIndex {
     * pay the full train+index cost only at the measured decay point.
     */
   def rebuildIfDrifted(corpus: DataFrame, idCol: String, embCol: String,
-      indexDir: String, k: Int, maxIter: Int = 8,
-      threshold: Double = 0.1, sustain: Int = 2): Boolean = {
-    require(sustain >= 1, "sustain must be at least 1")
+      indexDir: String, k: Int, maxIter: Int): Boolean = {
     val spark = corpus.sparkSession
     import spark.implicits._
     val last = assignmentDrift(spark, indexDir)
-      .orderBy(col("run_id").desc).limit(sustain)
+      .orderBy(col("run_id").desc).limit(DriftSustain)
       .select(col("rel_drop")).as[Double].collect()
-    // fewer post-baseline runs than `sustain` cannot satisfy the
+    // fewer post-baseline runs than DriftSustain cannot satisfy the
     // sustained condition (the baseline row itself reads 0.0)
-    val fire = last.length >= sustain && last.forall(_ >= threshold)
+    val fire = last.length >= DriftSustain && last.forall(_ >= DriftThreshold)
     if (fire) {
       val fmt = format(spark, indexDir)
       fmt match {
@@ -844,7 +846,10 @@ object VectorIndex {
     if (top.isNullAt(0)) 0L else top.getLong(0)
   }
 
-  /** Pick the smallest `nprobe` meeting `targetRecall` on a SAMPLE of
+  /** Recall@k target of [[calibrateNprobe]] and [[calibrateNprobeFiltered]]. */
+  val TargetRecall = 0.95
+
+  /** Pick the smallest `nprobe` meeting [[TargetRecall]] on a SAMPLE of
     * the real query workload — the operational answer to "what nprobe
     * do I run?", which the r15 recall curves show is REGIME-dependent
     * (clustered corpora saturate at nprobe 2; diffuse ones need 16+).
@@ -866,9 +871,8 @@ object VectorIndex {
     */
   def calibrateNprobe(spark: SparkSession, sampleQueries: DataFrame,
       queryId: String, queryEmb: String, indexDir: String, k: Int,
-      targetRecall: Double = 0.95,
-      candidates: Seq[Int] = Seq(1, 2, 4, 8, 16, 32, 64)): (Int, Map[Int, Double]) =
-    calibrateNprobeImpl(spark, indexDir, targetRecall, candidates,
+      candidates: Seq[Int]): (Int, Map[Int, Double]) =
+    calibrateNprobeImpl(spark, indexDir, candidates,
       (q, np) => queryTopK(spark, q, queryId, queryEmb, indexDir, k, np),
       sampleQueries)
 
@@ -884,15 +888,13 @@ object VectorIndex {
     * contract as [[queryTopKFiltered]]. */
   def calibrateNprobeFiltered(spark: SparkSession, sampleQueries: DataFrame,
       queryId: String, queryEmb: String, indexDir: String, k: Int,
-      predicate: org.apache.spark.sql.Column, targetRecall: Double,
-      candidates: Seq[Int]): (Int, Map[Int, Double]) =
-    calibrateNprobeImpl(spark, indexDir, targetRecall, candidates,
+      predicate: org.apache.spark.sql.Column, candidates: Seq[Int]): (Int, Map[Int, Double]) =
+    calibrateNprobeImpl(spark, indexDir, candidates,
       (q, np) => queryTopKFiltered(spark, q, queryId, queryEmb, indexDir, k,
         predicate, np),
       sampleQueries)
 
-  private def calibrateNprobeImpl(spark: SparkSession, indexDir: String,
-      targetRecall: Double, candidates: Seq[Int],
+  private def calibrateNprobeImpl(spark: SparkSession, indexDir: String, candidates: Seq[Int],
       probe: (DataFrame, Int) => DataFrame,
       sampleQueries: DataFrame): (Int, Map[Int, Double]) = {
     require(candidates.nonEmpty && candidates == candidates.sorted,
@@ -909,7 +911,7 @@ object VectorIndex {
         .join(truth, Seq("query_id", "neighbor_id"), "left_semi").count()
       np -> hits / nTruth
     }.toMap
-    val chosen = candidates.find(np => recalls(np) >= targetRecall)
+    val chosen = candidates.find(np => recalls(np) >= TargetRecall)
       .getOrElse(candidates.last)
     (chosen, recalls)
   }

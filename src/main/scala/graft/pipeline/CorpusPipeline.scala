@@ -47,27 +47,6 @@ object CorpusPipeline {
       minTokens: Int = 10,
       minTypeTokenRatio: Double = 0.1,
       nearDupThreshold: Double = 0.9,
-      nearDupClusterCanonical: Boolean = false,
-        // false: pair-local dropping (remove every id_b) — one anti-join,
-        //        no iteration; the cheap default.
-        // true:  connected-components clustering + keep the min id per
-        //        near-dup CLUSTER (Dedup.keepOnePerCluster) — transitive
-        //        semantics, a few extra label-propagation rounds.
-      // ---- opt-in release stages (None/off = q44-compatible pipeline) ----
-      normalizeUnicode: Boolean = false,
-        // stage 0: NFC + control/zero-width strip + whitespace fold
-        // (TextFunctions.cleanText) BEFORE any hashing — composed vs
-        // decomposed renderings of the same text otherwise carry
-        // different fingerprints and sail through exact dedup
-      classifierBuckets: Option[Int] = None,
-        // model-based quality gate: drop docs whose hashed-linear score
-        // (TextFunctions.linearScoreMilli) is negative
-      spanDedupN: Option[Int] = None,
-        // cross-document duplicate-span removal at this gram length;
-        // kept text replaces the original text column
-      tokenBudgetPerLang: Option[Long] = None,
-        // token-budget mixture sampling per predicted language
-        // (deterministic hash-prefix selection)
       snapshotGate: Boolean = false)
         // true = eager localCheckpoint of the EXACT-DEDUP survivors
         // (minus __toks) inside dedup(). The near-dup pair DAG has ~5
@@ -122,7 +101,10 @@ object CorpusPipeline {
         col("predicted_lang").isInCollection(KeepLangs))
 
   /** Exact dedup (keep lowest id per content hash), then drop near-dups:
-    * from every MinHash-LSH verified pair, the higher id is removed.
+    * from every MinHash-LSH verified pair, the higher id is removed
+    * (pair-local — one anti-join, no iteration; compose
+    * [[graft.operators.Dedup.keepOnePerCluster]] over the pairs for
+    * transitive per-cluster semantics).
     */
   def dedup(df: DataFrame, idCol: String, textCol: String, cfg: Config): DataFrame = {
     val exact0 = Dedup.exactContentGroups(df, idCol, textCol)
@@ -136,65 +118,29 @@ object CorpusPipeline {
     // (smaller) exact survivors makes all of that a single pass; blocks
     // release via ContextCleaner when the result is GC'd.
     val exact = if (cfg.snapshotGate) exact0.localCheckpoint() else exact0
-    val nearPairs = Dedup.minHashNearDuplicates(
+    val toDrop = Dedup.minHashNearDuplicates(
       exact, idCol, textCol,
       shingleSize = NearDupShingleSize, numHashes = NearDupNumHashes,
       bands = NearDupBands, threshold = cfg.nearDupThreshold)
-    if (cfg.nearDupClusterCanonical)
-      Dedup.keepOnePerCluster(exact, idCol, nearPairs)
-    else {
-      val toDrop = nearPairs.select(col("id_b").as(idCol)).distinct()
-      exact.join(toDrop, Seq(idCol), "left_anti")
-    }
+      .select(col("id_b").as(idCol)).distinct()
+    exact.join(toDrop, Seq(idCol), "left_anti")
   }
 
-  /** Full pipeline; returns the curated corpus with accounting columns.
-    * Stage order is deliberate: cheap projection gates (quality,
-    * classifier) run before the shuffling stages (dedup, span removal)
-    * so the expensive passes see only surviving rows; the token-budget
-    * mixture cut runs LAST so the mix is computed over what actually
-    * ships.
+  /** Full pipeline: annotate → quality gate → dedup; returns the curated
+    * corpus with accounting columns. The cheap projection gate runs
+    * before the shuffling dedup so the expensive passes see only
+    * surviving rows. Release stages compose around it from their own
+    * operators: [[graft.functions.TextFunctions.cleanText]] on the input,
+    * a [[graft.functions.TextFunctions.linearScoreMilli]] filter,
+    * [[removeDuplicateSpans]] and [[sampleToTokenBudget]] on the output.
     */
   def curate(docs: DataFrame, idCol: String, textCol: String, cfg: Config = Config()): DataFrame = {
-    // stage 0 (opt-in): byte-level canonicalization feeds every later
-    // fingerprint/shingle — a pure projection folded into the first scan
-    val input =
-      if (cfg.normalizeUnicode)
-        docs.withColumn(textCol, TF.cleanText(col(textCol)))
-      else docs
-    val gated0 = qualityFilter(annotate(input, idCol, textCol, cfg), cfg)
-    val gated1 = cfg.classifierBuckets match {
-      case Some(k) => gated0.filter(TF.linearScoreMilli(col("__toks"), k) >= 0L)
-      case None => gated0
-    }
-    // snapshotGate: the pin itself lives in dedup() AFTER the exact
-    // stage (so the sha2 + full-text exchange + keep-min window also
-    // compute once — pinning here left that subtree re-running per
-    // near-dup consumer, ~5× in q44's plan). __toks is dropped on this
-    // branch so the snapshot doesn't carry the token arrays (only the
-    // gates above read it); the final drop("__toks") below is then a
-    // no-op.
-    val gated =
-      if (cfg.snapshotGate) gated1.drop("__toks")
-      else gated1
-    val deduped = dedup(gated, idCol, textCol, cfg)
-    val spanned = cfg.spanDedupN match {
-      case Some(n) =>
-        // re-home the doc on its span-cleaned text; token accounting
-        // follows the text it describes
-        deduped.drop(textCol, "n_tokens")
-          .join(removeDuplicateSpans(deduped, idCol, textCol, n)
-            .select(col(idCol), array_join(col("kept_units"), " ").as(textCol),
-              col("n_kept").as("n_tokens")), Seq(idCol))
-      case None => deduped
-    }
-    val mixed = cfg.tokenBudgetPerLang match {
-      case Some(budget) =>
-        sampleToTokenBudget(spanned, idCol, "predicted_lang", "n_tokens", budget)
-          .drop("cum_tokens")
-      case None => spanned
-    }
-    mixed.drop("__toks")
+    val gated = qualityFilter(annotate(docs, idCol, textCol, cfg), cfg)
+    // snapshotGate pins inside dedup(), after the exact stage; __toks is
+    // dropped first so the snapshot doesn't carry the token arrays (only
+    // the gate reads them)
+    dedup(if (cfg.snapshotGate) gated.drop("__toks") else gated, idCol, textCol, cfg)
+      .drop("__toks")
   }
 
   /** [[curate]] with free funnel accounting: `Observation` metrics are
@@ -289,7 +235,7 @@ object CorpusPipeline {
       textCol: String,
       stateDir: String,
       sigStateDir: String,
-      cfg: Config = Config()): (DataFrame, () => Unit) = {
+      cfg: Config): (DataFrame, () => Unit) = {
     val spark = docs.sparkSession
     // Snapshot eagerly at each state boundary — with localCheckpoint, NOT
     // persist. commit() APPENDS to stateDir and sigStateDir, and an
@@ -473,8 +419,15 @@ object CorpusPipeline {
     * corpus. Non-positive weights are excluded (they'd divide by zero or
     * invert the race).
     */
-  def weightedSample(df: DataFrame, idCol: String, weightCol: String,
-      k: Int, salt: String = "wsample"): DataFrame = {
+  def weightedSample(df: DataFrame, idCol: String, weightCol: String, k: Int): DataFrame =
+    weightedSample(df, idCol, weightCol, k, WeightedSampleSalt)
+
+  /** Salt of [[weightedSample]]'s draw. */
+  val WeightedSampleSalt = "wsample"
+
+  /** [[weightedSample]] drawn under `salt`: another salt, another draw. */
+  private[graft] def weightedSample(df: DataFrame, idCol: String, weightCol: String,
+      k: Int, salt: String): DataFrame = {
     val u = (graft.operators.Sketches.sha60(
       concat(col(idCol).cast("string"), lit(salt))).cast("double") + 1.0) /
       graft.operators.Sketches.M
@@ -669,6 +622,9 @@ object CorpusPipeline {
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("n_tokens"))
       .orderBy(col("predicted_lang"))
 
+  /** The train/val/test weights of [[deterministicSplit]] and [[leakageSafeSplit]]. */
+  val DefaultSplits: Seq[(String, Double)] = Seq("train" -> 0.98, "val" -> 0.01, "test" -> 0.01)
+
   /** Deterministic train/val/test assignment: each row's split is a pure
     * function of (id, salt) — stable across partitioning, cluster size,
     * and re-runs, so a 100 TB corpus can be re-split identically by any
@@ -681,8 +637,7 @@ object CorpusPipeline {
     * hashing past the last cumulative bound get the final label.
     */
   def deterministicSplit(df: DataFrame, idCol: String, salt: String,
-      splits: Seq[(String, Double)] = Seq("train" -> 0.98, "val" -> 0.01, "test" -> 0.01))
-      : DataFrame = {
+      splits: Seq[(String, Double)] = DefaultSplits): DataFrame = {
     require(splits.nonEmpty && splits.map(_._2).sum <= 1.0 + 1e-9, "weights sum to <= 1")
     // first 8 hex chars of sha-256 → uniform int in [0, 2^32) → [0, 10000)
     val bucket = conv(substring(sha2(concat(col(idCol).cast("string"), lit(salt)), 256), 1, 8),
@@ -716,12 +671,15 @@ object CorpusPipeline {
     * joined key).
     *
     * `pairs` carries the family's `(id_a, id_b)` columns. Returns `df` +
-    * (`split_key`, `split`).
+    * (`split_key`, `split`) over [[DefaultSplits]].
     */
   def leakageSafeSplit(df: DataFrame, idCol: String, pairs: DataFrame,
-      salt: String,
-      splits: Seq[(String, Double)] = Seq("train" -> 0.98, "val" -> 0.01, "test" -> 0.01)
-      ): DataFrame = {
+      salt: String): DataFrame =
+    leakageSafeSplit(df, idCol, pairs, salt, DefaultSplits)
+
+  /** [[leakageSafeSplit]] over other (label, weight) `splits`. */
+  private[graft] def leakageSafeSplit(df: DataFrame, idCol: String, pairs: DataFrame,
+      salt: String, splits: Seq[(String, Double)]): DataFrame = {
     val clusters = graft.operators.Dedup.nearDupClusters(pairs)
       .select(col("id").as("__lss_id"), col("cluster_id").as("__lss_rep"))
     val keyed = df.join(clusters, col(idCol) === col("__lss_id"), "left")

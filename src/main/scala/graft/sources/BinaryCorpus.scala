@@ -38,14 +38,6 @@ object BinaryCorpus {
       .withColumn("kode_proyek", element_at(parts, -3))
   }
 
-  /** Filename-side normalization used by the v1 flow
-    * (`trial-img-processor.py:61,64-65`): lowercase extension filter +
-    * space→underscore composite name.
-    */
-  def normalizedName(df: DataFrame): DataFrame =
-    df.withColumn("clean_name",
-      regexp_replace(concat_ws("_", col("kode_proyek"), col("minggu"), col("nama_file")), " ", "_"))
-
   /** Raw-bytes partitioned tree sink: writes each row's binary payload to
     * `baseDir/{p1}/{p2}/{name}` — the reference's on-disk layout
     * (`test.py:55-56,172-173`) as a distributed writer. Partition-local

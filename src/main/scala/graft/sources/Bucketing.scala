@@ -11,14 +11,14 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   */
 object Bucketing {
 
-  /** Persist `df` as a bucketed (and optionally sorted) managed table,
-    * replacing any table of that name. */
+  /** Persist `df` as a bucketed managed table, sorted within each bucket
+    * by `sortCols` (none when empty), replacing any table of that name. */
   def writeBucketed(
       df: DataFrame,
       table: String,
       bucketCols: Seq[String],
       numBuckets: Int,
-      sortCols: Seq[String] = Nil): Unit = {
+      sortCols: Seq[String]): Unit = {
     val w = df.write.mode(SaveMode.Overwrite).bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
     val ws = if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w
     ws.saveAsTable(table)

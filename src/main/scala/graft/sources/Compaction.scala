@@ -130,8 +130,9 @@ object Compaction {
     *
     * Single-writer contract ENFORCED via [[Lease]] (fail-fast on a
     * concurrent writer, stale-takeover on a crashed one); reentrant, so
-    * an index compact already holding its state dir's lease pays only
-    * this dir's own marker.
+    * a caller already holding this dir's lease (a sketch compaction)
+    * acquires nothing more, and an index compact pays only this dir's
+    * own lease.
     */
   def rewriteParquetDir(spark: SparkSession, dir: String)(
       transform: org.apache.spark.sql.DataFrame

@@ -66,7 +66,7 @@ object CsvCorpus {
     * as [[JsonlCorpus.write]]); always with a header so the files are
     * self-describing to the next reader.
     */
-  def write(df: DataFrame, path: String, partitions: Int = 0): Unit = {
+  def write(df: DataFrame, path: String, partitions: Int): Unit = {
     val out = if (partitions > 0) df.repartition(partitions) else df
     out.write.mode("overwrite")
       .option("header", "true")

@@ -47,9 +47,18 @@ object Xlsx {
     * workbook is the header; every data cell is a string, missing/blank
     * cells are null. The sheet read is [[Sheet]], the workbook's first.
     *
-    * Header policy: by default headers must agree EXACTLY across files
-    * (the safe mode — a silent column drift in a Forms export corrupts
-    * every downstream positional read). `allowMissingColumns = true` is
+    * Header policy: headers must agree EXACTLY across files (the safe
+    * mode — a silent column drift in a Forms export corrupts every
+    * downstream positional read).
+    *
+    * The returned frame is a LAZY plan; a consumer that acts on it more
+    * than once re-parses every workbook per action (zip + StAX, CPU-
+    * bound) and should `.cache()` it like any other expensive source.
+    */
+  def read(spark: SparkSession, path: String): DataFrame =
+    read(spark, path, allowMissingColumns = false)
+
+  /** [[read]] with the header policy explicit: `allowMissingColumns` is
     * the `unionByName(allowMissingColumns)`-style mode for real-world
     * multi-week exports whose template gained or lost columns between
     * weeks (the reference's v1→v2 drift hazard,
@@ -59,13 +68,9 @@ object Xlsx {
     * each file's cells are matched to it BY NAME via that file's own
     * header, and columns a file lacks read as null for its rows —
     * reordered columns are therefore also handled.
-    *
-    * The returned frame is a LAZY plan; a consumer that acts on it more
-    * than once re-parses every workbook per action (zip + StAX, CPU-
-    * bound) and should `.cache()` it like any other expensive source.
     */
-  def read(spark: SparkSession, path: String,
-      allowMissingColumns: Boolean = false): DataFrame = {
+  private[graft] def read(spark: SparkSession, path: String,
+      allowMissingColumns: Boolean): DataFrame = {
     // Header validation is its own HEADER-ONLY job: each workbook's XML
     // parse stops after row 0 (maxRowsPerFile = 1), so the driver
     // collects one slim row per workbook and NOTHING is cached — the
@@ -98,8 +103,7 @@ object Xlsx {
         val h = byPath.head._2
         byPath.foreach { case (p, hh) =>
           require(hh == h,
-            s"Xlsx.read: header mismatch across workbooks: $p has $hh vs $h " +
-              "(pass allowMissingColumns = true to union drifting headers by name)")
+            s"Xlsx.read: header mismatch across workbooks: $p has $hh vs $h")
         }
         h
       }

@@ -51,6 +51,10 @@ object StreamOps {
       .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
       .select(col("window.start").as("wstart"), col(keyCol), col("n"), col("sum_value"))
 
+  /** HLL register exponent of [[hllDistinctStream]]'s state sketches
+    * (~1.6% error, 2^12 bytes per key per run). */
+  val HllLgK = 12
+
   /** Incremental per-key DISTINCT accounting as an `AvailableNow`
     * stream — the reference's incremental-by-rerun contract
     * (`test.py:99-111`: keep state, process only the delta) applied to
@@ -59,7 +63,7 @@ object StreamOps {
     * ([[graft.operators.Sketches.hllDistinctState]]), and APPENDS them
     * to `stateDir`; "distinct all-time" is a register-max merge over
     * the state ([[graft.operators.Sketches.hllStateEstimates]]) —
-    * history is never rescanned, state is ~2^lgK bytes per key per run
+    * history is never rescanned, state is ~2^[[HllLgK]] bytes per key per run
     * until [[graft.operators.Sketches.compactHllState]] folds it to one
     * row per key.
     *
@@ -77,11 +81,10 @@ object StreamOps {
       keyCols: Seq[String],
       valueCol: String,
       stateDir: String,
-      checkpointDir: String,
-      lgK: Int = 12): StreamingQuery =
+      checkpointDir: String): StreamingQuery =
     appendStateStream(spark, inputDir, schema, stateDir, checkpointDir)(
       (batch, _) => graft.operators.Sketches
-        .hllDistinctState(batch, keyCols, col(valueCol), lgK))
+        .hllDistinctState(batch, keyCols, col(valueCol), HllLgK))
 
   /** Shared scaffold of the incremental-state family
     * ([[hllDistinctStream]] / [[frequentItemsStream]] /
@@ -493,6 +496,8 @@ object StreamOps {
 
   /** False-positive rate of [[decontaminateStream]]'s Bloom filter. */
   val BloomFpp = 1e-4
+  /** Reference grams up to which [[decontaminateStream]] probes an exact set. */
+  val ExactMaxGrams = 2000000L
 
   /** Streaming benchmark-contamination guard: documents arrive as a
     * stream (the live crawl); the benchmark is STATIC, so its distinct
@@ -507,7 +512,7 @@ object StreamOps {
     * batch and streaming decide identically.
     *
     * The reference-set representation auto-selects on size: up to
-    * `exactMaxGrams` distinct grams it is an exact SORTED PRIMITIVE
+    * [[ExactMaxGrams]] distinct grams it is an exact SORTED PRIMITIVE
     * `long[]` probed by binary search (8 bytes per gram — a 2M-gram
     * eval suite is ~16 MB; a boxed `Set[Long]` would be ~48 B/entry —
     * and zero false positives); above that it switches to a Bloom
@@ -515,15 +520,18 @@ object StreamOps {
     * corpus-sized reference set costs ~250 MB per executor instead of
     * ~16 GB. Bloom false positives only ever DROP a clean document
     * (never leak a contaminated one) — the safe direction for
-    * decontamination; pin `exactMaxGrams = Long.MaxValue` to force the
-    * exact set. Both probes are native codegen expressions
+    * decontamination. Both probes are native codegen expressions
     * ([[graft.plans.AnyHashInSortedSet]] / [[graft.plans.AnyHashInBloom]])
     * — no Scala closure in the per-batch filter, so the stream filter
     * fuses into whole-stage codegen exactly like the batch path.
     */
   def decontaminateStream(docs: DataFrame, idCol: String, textCol: String,
-      benchmark: DataFrame, benchTextCol: String,
-      exactMaxGrams: Long = 2000000L): DataFrame = {
+      benchmark: DataFrame, benchTextCol: String): DataFrame =
+    decontaminateStream(docs, idCol, textCol, benchmark, benchTextCol, ExactMaxGrams)
+
+  /** [[decontaminateStream]] with the exact/Bloom size fork explicit. */
+  private[graft] def decontaminateStream(docs: DataFrame, idCol: String, textCol: String,
+      benchmark: DataFrame, benchTextCol: String, exactMaxGrams: Long): DataFrame = {
     import org.apache.spark.sql.GraftSqlBridge
     val n = graft.operators.Dedup.ContaminationGramN
     val grams = benchmark
@@ -614,6 +622,9 @@ object StreamOps {
   final case class SessionState(sessionStartUs: Long, lastUs: Long, n: Long)
   final case class SessionsState(open: List[SessionState])
   final case class SessionOut(user_id: Long, session_start_us: Long, session_end_us: Long, n: Long)
+  /** Watermark delay of [[sessionizeStream]]: rows later than the newest
+    * event seen are dropped. */
+  val SessionLateness = "0 seconds"
 
   /** Custom stateful sessionization via flatMapGroupsWithState with an
     * EVENT-time timeout. A session is emitted only once the WATERMARK
@@ -640,12 +651,16 @@ object StreamOps {
     * fire only when the watermark advances, i.e. driven by data, so a
     * test's `processAllAvailable` terminates, results are reproducible
     * regardless of wall-clock scheduling, and rows later than
-    * `lateness` are dropped by the watermark instead of double-emitting
+    * [[SessionLateness]] are dropped by the watermark instead of double-emitting
     * a sealed session. The batch analog is Relational.sessionize; this
     * is the always-on form with per-key state.
     */
-  def sessionizeStream(events: Dataset[SessionInput], gapUs: Long,
-      lateness: String = "0 seconds"): Dataset[SessionOut] = {
+  def sessionizeStream(events: Dataset[SessionInput], gapUs: Long): Dataset[SessionOut] =
+    sessionizeStream(events, gapUs, SessionLateness)
+
+  /** [[sessionizeStream]] with the watermark's lateness explicit. */
+  private[graft] def sessionizeStream(events: Dataset[SessionInput], gapUs: Long,
+      lateness: String): Dataset[SessionOut] = {
     import events.sparkSession.implicits._
     val gapMs = math.max(gapUs / 1000L, 1L)
     events

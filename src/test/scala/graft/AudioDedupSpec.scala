@@ -131,7 +131,8 @@ class AudioDedupSpec extends SparkSpec {
     // hop = window/2: the shifted copy's windows re-align with the
     // base's (the shift is a hop multiple — identical sample windows,
     // identical fingerprints), at 2x FFT cost
-    val got = Dedup.audioNearDuplicates(corpus, "clip_id", "content", hop = 512)
+    val got = Dedup.audioNearDuplicates(corpus, "clip_id", "content",
+        window = Dedup.AudioWindow, hop = 512)
       .select(col("id_a"), col("id_b"), col("n_matched"))
       .as[(Long, Long, Long)].collect().toSeq
     assert(got.map(t => (t._1, t._2)) == Seq((1L, 2L)),
@@ -216,7 +217,8 @@ class AudioDedupSpec extends SparkSpec {
     assert(Dedup.audioNearDuplicates(corpus, "clip_id", "content").isEmpty)
     // config errors fail on the DRIVER, loudly — never as empty results
     intercept[IllegalArgumentException] {
-      Dedup.audioNearDuplicates(corpus, "clip_id", "content", window = 1000)
+      Dedup.audioNearDuplicates(corpus, "clip_id", "content",
+        window = 1000, hop = Dedup.AudioHop)
     }
     intercept[IllegalArgumentException] {
       Dedup.audioNearDuplicates(
@@ -225,7 +227,7 @@ class AudioDedupSpec extends SparkSpec {
     }
     // the WAV writer round-trips through the REAL decoder
     val f = corpus.filter(col("clip_id") === 1L)
-      .select(AvOps.audioFeatures(nBands = 8)(col("content")).as("f"))
+      .select(AvOps.audioFeatures(col("content")).as("f"))
       .head().getStruct(0)
     assert(f.getDouble(f.fieldIndex("sample_rate")) == 8000.0)
     assert(f.getLong(f.fieldIndex("n_samples")) == 1024L * 17)

@@ -40,7 +40,8 @@ class BpeSpec extends SparkSpec {
     // dominant types (deterministic cut: freq desc, word asc).
     val tail = (1 to 30).flatMap(i => Seq.fill(2)(f"rare$i%02d"))
     val corpus = (Seq.fill(40)("share") ++ Seq.fill(25)("shore") ++ tail).mkString(" ")
-    val capped = Bpe.learnMerges(Seq(corpus).toDF("text"), "text", 6, maxVocabTypes = 2)
+    val capped = Bpe.learnMergesFromVocab(
+      Bpe.vocabTable(Seq(corpus).toDF("text"), "text", minCount = 1L, maxVocabTypes = 2), 6)
     val truncated = Bpe.learnMerges(
       Seq((Seq.fill(40)("share") ++ Seq.fill(25)("shore")).mkString(" ")).toDF("text"),
       "text", 6)

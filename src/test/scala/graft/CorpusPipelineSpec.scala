@@ -3,6 +3,8 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
+import graft.functions.{TextFunctions => TF}
+import graft.operators.Dedup
 import graft.pipeline.CorpusPipeline
 
 class CorpusPipelineSpec extends SparkSpec {
@@ -80,8 +82,16 @@ class CorpusPipelineSpec extends SparkSpec {
       (8L, base + " x1 x2 x3 x4"),
       (9L, (200 to 240).map(i => s"qq$i the").mkString(" "))) // unrelated keeper
       .toDF("doc_id", "text")
-    val clustered = CorpusPipeline.curate(docs, "doc_id", "text",
-      cfg.copy(nearDupClusterCanonical = true))
+    // curate's gate and exact dedup, then keep one per near-dup cluster
+    val gated = CorpusPipeline.qualityFilter(
+      CorpusPipeline.annotate(docs, "doc_id", "text", cfg), cfg).drop("__toks")
+    val exact = Dedup.exactContentGroups(gated, "doc_id", "text")
+      .filter(col("doc_id") === col("canonical_id")).drop("canonical_id", "dup_count")
+    val pairs = Dedup.minHashNearDuplicates(exact, "doc_id", "text",
+      shingleSize = CorpusPipeline.NearDupShingleSize,
+      numHashes = CorpusPipeline.NearDupNumHashes, bands = CorpusPipeline.NearDupBands,
+      threshold = cfg.nearDupThreshold)
+    val clustered = Dedup.keepOnePerCluster(exact, "doc_id", pairs)
     assert(clustered.select("doc_id").as[Long].collect().toSet == Set(6L, 9L))
   }
 
@@ -128,15 +138,28 @@ class CorpusPipelineSpec extends SparkSpec {
   }
 
   test("curate opt-in release stages: classifier gate, span removal, token budget compose") {
-    import graft.functions.{TextFunctions => TF}
     // every doc ends with the same sentence, so whichever subset survives
     // the classifier gate still shares the span; prefixes are distinct so
     // near-dup never fires
     val docs = (1L to 8L).map(i =>
       (i, s"alpha$i beta$i gamma$i delta$i eps$i zeta$i the a of unique$i words$i " +
         "shared span goes right here")).toDF("id", "text")
-    val cfg0 = cfg.copy(classifierBuckets = Some(64), spanDedupN = Some(4))
-    val out = CorpusPipeline.curate(docs, "id", "text", cfg0)
+    // curate's stages with a classifier gate after the quality gate, then
+    // span removal re-homing each doc on its cleaned text and tokens, then
+    // an optional per-language token budget
+    def release(budget: Option[Long]) = {
+      val gated = CorpusPipeline.qualityFilter(
+        CorpusPipeline.annotate(docs, "id", "text", cfg), cfg)
+        .filter(TF.linearScoreMilli(col("__toks"), 64) >= 0L)
+      val deduped = CorpusPipeline.dedup(gated, "id", "text", cfg).drop("__toks")
+      val spanned = deduped.drop("text", "n_tokens")
+        .join(CorpusPipeline.removeDuplicateSpans(deduped, "id", "text", 4)
+          .select(col("id"), array_join(col("kept_units"), " ").as("text"),
+            col("n_kept").as("n_tokens")), Seq("id"))
+      budget.fold(spanned)(b =>
+        CorpusPipeline.sampleToTokenBudget(spanned, "id", "predicted_lang", "n_tokens", b))
+    }
+    val out = release(None)
       .select(col("id"), col("text"), col("n_tokens"))
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
     // classifier wiring: survivors are exactly the docs scoring >= 0
@@ -153,8 +176,7 @@ class CorpusPipelineSpec extends SparkSpec {
       assert(n == t.trim.split("\\s+").length)
     }
     // budget wiring: a binding per-language budget caps the shipped tokens
-    val capped = CorpusPipeline.curate(docs, "id", "text",
-      cfg0.copy(tokenBudgetPerLang = Some(20L)))
+    val capped = release(Some(20L))
       .groupBy(col("predicted_lang")).agg(sum(col("n_tokens")).as("s"))
       .select(col("s")).as[Long].collect()
     assert(capped.forall(_ <= 20L))
@@ -316,9 +338,9 @@ class CorpusPipelineSpec extends SparkSpec {
     val off = CorpusPipeline.curate(docs, "doc_id", "text",
       CorpusPipeline.Config(minTokens = 5))
     assert(off.count() == 2, "NFC variants defeat exact dedup when normalization is off")
-    // with stage 0 on, they fingerprint identically and dedup keeps one
-    val on = CorpusPipeline.curate(docs, "doc_id", "text",
-      CorpusPipeline.Config(minTokens = 5, normalizeUnicode = true))
+    // normalized before curation, they fingerprint identically and dedup keeps one
+    val on = CorpusPipeline.curate(docs.withColumn("text", TF.cleanText(col("text"))),
+      "doc_id", "text", CorpusPipeline.Config(minTokens = 5))
     assert(on.count() == 1, "normalized variants collapse")
     assert(on.select(max(length(col("text")))).as[Int].head() ==
       on.select(min(length(col("text")))).as[Int].head())

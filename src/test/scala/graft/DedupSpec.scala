@@ -130,7 +130,7 @@ class DedupSpec extends SparkSpec {
     assert(b2 == 2 && a2 == 2)
 
     // retention predicate drops doc 2's signature; doc 1 still detected
-    val (_, a3) = Dedup.compactSignatureState(spark, dir, "doc_id",
+    val (_, a3) = Dedup.compactSignatureStateKeys(spark, dir, Seq("doc_id"),
       versionCol = Some("batch_id"), retain = Some(col("doc_id") =!= 2L))
     assert(a3 == 1)
     assert(verdicts(spark.read.parquet(dir)).map(v => v._1 -> v._2) ==
@@ -147,7 +147,7 @@ class DedupSpec extends SparkSpec {
     // column orders the two, so BOTH must survive (nothing guessed)
     Dedup.minHashSignatures(Seq((1L, "a b c d e CHANGED")).toDF("doc_id", "text"),
       "doc_id", "text", 2, 16).write.mode("append").parquet(dir)
-    val (before, after) = Dedup.compactSignatureState(spark, dir, "doc_id")
+    val (before, after) = Dedup.compactSignatureState(spark, dir, "doc_id", versionCol = None)
     assert(before == 5 && after == 3, s"exact dups only: $before -> $after")
   }
 
@@ -197,7 +197,7 @@ class DedupSpec extends SparkSpec {
   test("simhash near-dup: identical docs distance 0; different docs filtered") {
     val a = (1 to 30).map(i => s"w$i").mkString(" ")
     val df = Seq((1L, a), (2L, a), (3L, "completely different words entirely")).toDF("doc_id", "text")
-    val pairs = Dedup.simHashNearDuplicates(df, "doc_id", "text", bits = 48, chunks = 4, maxHamming = 3)
+    val pairs = Dedup.simHashNearDuplicates(df, "doc_id", "text")
       .select("id_a", "id_b", "hamming").as[(Long, Long, Int)].collect()
     assert(pairs.map(p => (p._1, p._2)).toSet == Set((1L, 2L)))
     assert(pairs.head._3 == 0)

@@ -169,7 +169,7 @@ class ImageDedupSpec extends SparkSpec {
       versionCol = Some("batch_id"))
     assert(b2 == 5 && a2 == 5, s"rerun must keep every row: $b2 -> $a2")
     // retention: dropping the old batch un-flags its copies
-    val (_, a3) = Dedup.compactSignatureState(spark, dir, "img_id",
+    val (_, a3) = Dedup.compactSignatureStateKeys(spark, dir, Seq("img_id"),
       versionCol = Some("batch_id"), retain = Some(col("batch_id") >= 2L))
     assert(a3 == 2, s"retention must keep only run 2: $a3")
     val retained = verdicts(spark.read.parquet(dir))
@@ -249,7 +249,7 @@ class ImageDedupSpec extends SparkSpec {
       orientationRobust = true)
     val flagged = Dedup.imageNearDuplicatesVsState(
         rows.filter(col("img_id") === 2L), "img_id", "content", state,
-        chunks = 8, maxHamming = 5, orientationRobust = true)
+        orientationRobust = true)
       .select(col("img_id"), col("dup_of")).as[(Long, Long)].collect().toSeq
     assert(flagged == Seq((2L, 1L)), s"incremental oriented dedup: $flagged")
   }

@@ -73,7 +73,7 @@ class MultimodalIntegrationSpec extends SparkSpec {
       (0 until 4).map(i => (4L + i, sineWav(2710.0 + 3 * i, 0.3 + 0.1 * i)))
     val df = rows.toDF("id", "content")
       .select(col("id"),
-        AvOps.audioFeatures(nBands = 8)(col("content")).getField("band_energy")
+        AvOps.audioFeatures(col("content")).getField("band_energy")
           .cast("array<float>").as("feat"))
       .withColumn("blk", lit(0)) // one block: let cosine do the separating
     val pairs = Dedup.embeddingNearDuplicates(df, "id", "feat", "blk", threshold = 0.99)

@@ -82,7 +82,7 @@ class PlansAndSkewSpec extends SparkSpec {
     val large = (1 to 2000).map(i => (if (i % 10 == 0) "hot" else s"k$i", i.toLong)).toDF("k", "id")
     val small = Seq(("hot", "H"), ("k5", "A"), ("k17", "B")).toDF("k", "v")
     val plain = large.join(small, "k").select("id", "v").as[(Long, String)].collect().toSet
-    val salted = Skew.saltedEquiJoin(large, small, Seq("k"), "id", saltBuckets = 8)
+    val salted = Skew.saltedEquiJoin(large, small, Seq("k"), "id")
       .select("id", "v").as[(Long, String)].collect().toSet
     assert(salted == plain && plain.size == 202)
   }
@@ -114,7 +114,7 @@ class PlansAndSkewSpec extends SparkSpec {
 
   test("skew profile surfaces hottest key") {
     val df = (1 to 100).map(i => (if (i <= 60) "hot" else s"k$i", i)).toDF("k", "v")
-    val top = Skew.keySkewProfile(df, Seq("k"), 1).as[(String, Long)].head()
+    val top = Skew.keySkewProfile(df, Seq("k")).as[(String, Long)].head()
     assert(top == (("hot", 60L)))
   }
 
@@ -140,7 +140,7 @@ class PlansAndSkewSpec extends SparkSpec {
       (1L, sineWav(440.0, 0.5)),
       (2L, Array[Byte](1, 2, 3)), // not a WAV → null, not a task failure
       (3L, null)).toDF("id", "content")
-    val rows = df.select(col("id"), AvOps.audioFeatures(nBands = 8)(col("content")).as("f"))
+    val rows = df.select(col("id"), AvOps.audioFeatures(col("content")).as("f"))
       .orderBy("id").collect()
     val f = rows(0).getStruct(1)
     assert(f.getDouble(f.fieldIndex("sample_rate")) == 8000.0)
@@ -175,7 +175,7 @@ class PlansAndSkewSpec extends SparkSpec {
     val out = new java.io.ByteArrayOutputStream()
     javax.sound.sampled.AudioSystem.write(ais, javax.sound.sampled.AudioFileFormat.Type.WAVE, out)
     val row = Seq((1L, out.toByteArray)).toDF("id", "content")
-      .select(AvOps.audioFeatures()(col("content")).as("f")).head().getStruct(0)
+      .select(AvOps.audioFeatures(col("content")).as("f")).head().getStruct(0)
     assert(row.getInt(row.fieldIndex("channels")) == 2)
     assert(row.getLong(row.fieldIndex("n_samples")) == n.toLong)
     assert(math.abs(row.getDouble(row.fieldIndex("rms")) - 0.25 / math.sqrt(2)) < 0.01)
@@ -218,14 +218,14 @@ class PlansAndSkewSpec extends SparkSpec {
   test("frame sampling fans one row into frame rows without collecting") {
     val payload = Array.tabulate[Byte](4096 * 6)(i => (i % 127).toByte)
     val ds = Seq(AvOps.AvRecord(7L, "video", payload)).toDS()
-    val frames = AvOps.sampleFrames(ds, everyN = 2, frameBytes = 4096).collect()
+    val frames = AvOps.sampleFrames(ds, everyN = 2).collect()
     assert(frames.map(_.frame_idx).toSeq == Seq(0, 2, 4))
     assert(frames.forall(_.frame_bytes.length == 4096))
     assert(frames.forall(_.id == 7L))
     // everyN <= 0 clamps to 1 (matching videoKeyFrames) rather than
     // throwing 'step cannot be 0' inside the task or emitting nothing
-    assert(AvOps.sampleFrames(ds, everyN = 0, frameBytes = 4096).count() == 6)
-    assert(AvOps.sampleFrames(ds, everyN = -3, frameBytes = 4096).count() == 6)
+    assert(AvOps.sampleFrames(ds, everyN = 0).count() == 6)
+    assert(AvOps.sampleFrames(ds, everyN = -3).count() == 6)
   }
 
   test("malformed AVI payloads degrade to rows, never task failures") {

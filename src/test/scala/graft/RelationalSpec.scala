@@ -67,7 +67,8 @@ class RelationalSpec extends SparkSpec {
   test("asofJoin strict excludes the equal-ts right row") {
     val l = Seq((1L, 10L, "a")).toDF("key", "ts", "tag")
     val r = Seq((1L, 10L, 7.0), (1L, 4L, 3.0)).toDF("key", "q_ts", "px")
-    val strict = Relational.asofJoin(l, r, Seq("key"), "ts", "q_ts", strict = true)
+    val strict = Relational.asofJoin(l, r, Seq("key"), "ts", "q_ts", strict = true,
+      rightTieBreak = None)
       .select("tag", "px").as[(String, Option[Double])].collect().toSet
     assert(strict == Set(("a", Some(3.0))), "equal-ts quote skipped under strict <")
   }
@@ -84,7 +85,8 @@ class RelationalSpec extends SparkSpec {
       val l = left.toDF("key", "ts", "tag")
       val r = right.toDF("key", "q_ts", "px")
       for (strict <- Seq(false, true)) {
-        val got = Relational.asofJoin(l, r, Seq("key"), "ts", "q_ts", strict = strict)
+        val got = Relational.asofJoin(l, r, Seq("key"), "ts", "q_ts", strict = strict,
+          rightTieBreak = None)
           .select("key", "ts", "tag", "q_ts", "px")
           .as[(Long, Long, Long, Option[Long], Option[Double])].collect().toSeq.sorted
         val byKey = right.groupBy(_._1)
@@ -143,9 +145,10 @@ class RelationalSpec extends SparkSpec {
     // doubling closure: chain of 54 edges → all (i, j) i<j pairs
     val tc = Relational.transitiveClosure(edges, "src", "dst")
     assert(tc.count() == n * (n - 1) / 2)
-    // one-hop relaxation: needs 54 iterations — the lineage-growth case
-    // (localMaxEdges = 0 forces the distributed loop on this tiny fixture)
-    val d = Relational.dagDepth(edges, "src", "dst", maxIter = 60, localMaxEdges = 0L)
+    // dagDepth's one-hop relaxation: needs 54 iterations — the lineage-growth
+    // case (localMaxEdges = 0 forces the distributed loop on this tiny fixture)
+    val d = Relational.dagRelaxMax(edges.withColumn("__w", lit(1L)), "src", "dst",
+      Seq("__w" -> "depth"), maxIter = 60, localMaxEdges = 0L)
       .as[(Long, Long)].collect().toMap
     assert(d(n) == n - 1)
     assert(d(1L) == 0L)
@@ -159,7 +162,8 @@ class RelationalSpec extends SparkSpec {
     val edges = (1L until n).map(i => (i, i + 1)).toDF("src", "dst")
     val tc = Relational.transitiveClosure(edges, "src", "dst") // >5 iters → checkpoints happen
     assert(tc.count() == n * (n - 1) / 2)
-    val d = Relational.dagDepth(edges, "src", "dst", maxIter = 60, localMaxEdges = 0L)
+    val d = Relational.dagRelaxMax(edges.withColumn("__w", lit(1L)), "src", "dst",
+      Seq("__w" -> "depth"), maxIter = 60, localMaxEdges = 0L)
     assert(d.count() == n)
     // results are still cached (callable), but through the CacheManager —
     // so the caller's plain unpersist() actually releases them
@@ -226,7 +230,8 @@ class RelationalSpec extends SparkSpec {
     // chain of 70 nodes: node i reaches 70 - i descendants; register needs 2 words
     val n = 70L
     val edges = (1L until n).map(i => (i, i + 1)).toDF("src", "dst")
-    val got = Relational.descendantCounts(edges, "src", "dst", maxIter = 80, localMaxEdges = 0L)
+    val got = Relational.descendantCounts(edges, "src", "dst", maxIter = 80,
+        exactMaxNodes = Relational.DescendantsExactMaxNodes, localMaxEdges = 0L)
       .as[(Long, Long)].collect().toMap
     (1L to n).foreach(i => assert(got(i) == n - i, s"node $i"))
   }
@@ -250,7 +255,8 @@ class RelationalSpec extends SparkSpec {
         assert(local == dist, s"trial $trial relax: local $local vs distributed $dist")
         val localD = Relational.descendantCounts(edges, "src", "dst")
           .as[(Long, Long)].collect().toSet
-        val distD = Relational.descendantCounts(edges, "src", "dst", localMaxEdges = 0L)
+        val distD = Relational.descendantCounts(edges, "src", "dst", maxIter = 50,
+            exactMaxNodes = Relational.DescendantsExactMaxNodes, localMaxEdges = 0L)
           .as[(Long, Long)].collect().toSet
         assert(localD == distD, s"trial $trial desc: local $localD vs distributed $distD")
       }
@@ -262,7 +268,8 @@ class RelationalSpec extends SparkSpec {
     // at tiny cardinalities (error ~1.6% at default lgK, 0 here)
     val edges = Seq((1L, 2L), (1L, 3L), (2L, 4L), (3L, 4L), (4L, 5L), (2L, 6L))
       .toDF("src", "dst")
-    val got = Relational.descendantCounts(edges, "src", "dst", exactMaxNodes = 1)
+    val got = Relational.descendantCounts(edges, "src", "dst", maxIter = 50,
+        exactMaxNodes = 1, localMaxEdges = Relational.DagLocalMaxEdges)
       .as[(Long, Long)].collect().toMap
     assert(got(1L) == 5L && got(4L) == 1L && got(5L) == 0L && got(6L) == 0L,
       s"sketch-path counts off: $got")
@@ -273,7 +280,8 @@ class RelationalSpec extends SparkSpec {
     val preexisting = sc.getPersistentRDDs.keySet.toSet
     val n = 30L
     val edges = (1L until n).map(i => (i, i + 1)).toDF("src", "dst")
-    val d = Relational.descendantCounts(edges, "src", "dst", maxIter = 40, localMaxEdges = 0L)
+    val d = Relational.descendantCounts(edges, "src", "dst", maxIter = 40,
+      exactMaxNodes = Relational.DescendantsExactMaxNodes, localMaxEdges = 0L)
     assert(d.count() == n)
     d.unpersist(blocking = true)
     val leaked = sc.getPersistentRDDs.keySet.toSet -- preexisting
@@ -434,7 +442,8 @@ class RelationalSpec extends SparkSpec {
       (1L, Option.empty[Long], "phantom"),
       (1L, Some(200L), "late")).toDF("k", "q_ts", "payload")
     for (strict <- Seq(false, true)) {
-      val r = Relational.asofJoin(left, right, Seq("k"), "ts", "q_ts", strict = strict)
+      val r = Relational.asofJoin(left, right, Seq("k"), "ts", "q_ts", strict = strict,
+          rightTieBreak = None)
         .select("lv", "payload").as[(String, Option[String])].collect()
       assert(r.toSeq == Seq(("L", None)),
         s"strict=$strict: a null-ts right row must not win when no real match exists")
@@ -500,7 +509,7 @@ class RelationalSpec extends SparkSpec {
       .toDF("s", "t", "w")
     val fast = Relational.pageRank(mixed, "s", "t", Some("w"), iterations = 10)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val dist = Relational.pageRank(mixed, "s", "t", Some("w"), iterations = 10,
+    val dist = Relational.pageRank(mixed, "s", "t", Some("w"), iterations = 10, damping = 0.85,
         localMaxEdges = 0L)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(fast.keySet == dist.keySet)
@@ -517,7 +526,7 @@ class RelationalSpec extends SparkSpec {
     val dirtyDf = dirty.toDF("s", "t", "w")
       .unionByName(Seq((4L, 1L)).toDF("s", "t").withColumn("w", lit(null).cast("double")))
     for (lme <- Seq(100000L, 0L)) {
-      val r = Relational.pageRank(dirtyDf, "s", "t", Some("w"), iterations = 10,
+      val r = Relational.pageRank(dirtyDf, "s", "t", Some("w"), iterations = 10, damping = 0.85,
           localMaxEdges = lme)
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
       assert(!r.contains(9L), s"node on only-dropped edges must vanish (lme=$lme): $r")
@@ -540,7 +549,7 @@ class RelationalSpec extends SparkSpec {
       val df = edges.toDF("s", "t", "w")
       val fast = Relational.pageRank(df, "s", "t", Some("w"), iterations = 5)
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      val dist = Relational.pageRank(df, "s", "t", Some("w"), iterations = 5,
+      val dist = Relational.pageRank(df, "s", "t", Some("w"), iterations = 5, damping = 0.85,
           localMaxEdges = 0L)
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
       assert(fast.keySet == dist.keySet, s"trial $trial node sets differ")

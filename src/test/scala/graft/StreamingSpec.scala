@@ -390,7 +390,7 @@ class StreamingSpec extends SparkSpec {
       org.apache.spark.sql.types.StructField("v", org.apache.spark.sql.types.LongType)))
     val Sk = graft.operators.Sketches
     def run(): Unit = StreamOps.hllDistinctStream(
-      spark, inDir, schema, Seq("k"), "v", stDir, ckDir, lgK = 12).awaitTermination()
+      spark, inDir, schema, Seq("k"), "v", stDir, ckDir).awaitTermination()
     def estimates(): Map[String, Double] =
       Sk.hllStateEstimates(spark, stDir, Seq("k"))
         .select("k", "distinct_est").as[(String, Double)].collect().toMap
@@ -863,9 +863,9 @@ class StreamingSpec extends SparkSpec {
       noise = 0.1, seed = 5L, pointSeed = 15L)
     VectorIndex.build(boot, "vec_id", "embedding", idxDir, k = 16, maxIter = 5)
     val b1 = SynthEmbeddings.clustered(spark, 200, dim = 16, clusters = 8,
-      noise = 0.1, seed = 5L, pointSeed = 25L, idOffset = 10000L)
+      noise = 0.1, seed = 5L, pointSeed = 25L, idOffset = 10000L, shift = 0.0)
     val b2 = SynthEmbeddings.clustered(spark, 200, dim = 16, clusters = 8,
-      noise = 0.1, seed = 5L, pointSeed = 35L, idOffset = 20000L)
+      noise = 0.1, seed = 5L, pointSeed = 35L, idOffset = 20000L, shift = 0.0)
     b1.select("vec_id", "embedding").write.mode("append").parquet(inDir)
     run()
     val afterRun1 = spark.read.parquet(s"$idxDir/postings").count()
@@ -878,7 +878,7 @@ class StreamingSpec extends SparkSpec {
     // probes answer over bootstrap + both streamed batches, exactly as
     // a batch-appended index would (same frozen centroids, same rule)
     val queries = SynthEmbeddings.clustered(spark, 50, dim = 16, clusters = 8,
-      noise = 0.1, seed = 5L, pointSeed = 45L, idOffset = 90000L).localCheckpoint(true)
+      noise = 0.1, seed = 5L, pointSeed = 45L, idOffset = 90000L, shift = 0.0).localCheckpoint(true)
     def topk(dir: String): Seq[(Long, Long, Double, Int)] =
       VectorIndex.queryTopK(spark, queries, "vec_id", "embedding", dir, k = 3, nprobe = 2)
         .select(col("query_id").cast("long"), col("neighbor_id").cast("long"),
@@ -913,13 +913,13 @@ class StreamingSpec extends SparkSpec {
     val corpusAtB3 = boot.unionByName(b1).unionByName(b2).unionByName(b3)
       .select("vec_id", "embedding")
     assert(!VectorIndex.rebuildIfDrifted(corpusAtB3, "vec_id", "embedding",
-      idxDir, k = 16, maxIter = 5, threshold = 0.1, sustain = 2))
+      idxDir, k = 16, maxIter = 5))
     b4.select("vec_id", "embedding").write.mode("append").parquet(inDir)
     run() // run 4: sustained
     val corpusAtB4 = corpusAtB3.unionByName(b4.select("vec_id", "embedding"))
       .localCheckpoint(true)
     assert(VectorIndex.rebuildIfDrifted(corpusAtB4, "vec_id", "embedding",
-      idxDir, k = 16, maxIter = 5, threshold = 0.1, sustain = 2),
+      idxDir, k = 16, maxIter = 5),
       "two drifted streamed runs must trigger the re-build")
     // stream continues after the re-build: only the NEW file appends
     val b5 = SynthEmbeddings.clustered(spark, 200, dim = 16, clusters = 8,

@@ -258,7 +258,7 @@ class VectorIndexSpec extends SparkSpec {
     val corpus = SynthEmbeddings.clustered(spark, n, dim = 64, clusters = 20,
       noise = 0.10, seed = 42L, pointSeed = 1042L).localCheckpoint(true)
     val queries = SynthEmbeddings.clustered(spark, 200, dim = 64, clusters = 20,
-      noise = 0.10, seed = 42L, pointSeed = 7042L, idOffset = 1000000L)
+      noise = 0.10, seed = 42L, pointSeed = 7042L, idOffset = 1000000L, shift = 0.0)
       .localCheckpoint(true)
     val truth = Similarity.bruteForceCosineTopK(corpus, "vec_id", "embedding",
       queries, "vec_id", "embedding", k = 10)
@@ -337,14 +337,14 @@ class VectorIndexSpec extends SparkSpec {
     VectorIndex.append(b1, "vec_id", "embedding", idxDir, 1L)
     val corpus1 = base.unionByName(b1)
     assert(!VectorIndex.rebuildIfDrifted(corpus1, "vec_id", "embedding",
-      idxDir, k = 38, maxIter = 5, threshold = 0.1, sustain = 2),
+      idxDir, k = 38, maxIter = 5),
       "one flagged run must not trigger at sustain = 2")
     // a second drifted run sustains the signal → re-build fires
     val b2 = mk(4042L, 300000L, 1.6).localCheckpoint(true)
     VectorIndex.append(b2, "vec_id", "embedding", idxDir, 2L)
     val corpus2 = corpus1.unionByName(b2)
     assert(VectorIndex.rebuildIfDrifted(corpus2, "vec_id", "embedding",
-      idxDir, k = 38, maxIter = 5, threshold = 0.1, sustain = 2),
+      idxDir, k = 38, maxIter = 5),
       "two consecutive flagged runs must trigger")
     // format preserved: the re-built postings still store pq codes
     val embType = spark.read.parquet(s"$idxDir/postings").schema("emb").dataType
@@ -370,7 +370,7 @@ class VectorIndexSpec extends SparkSpec {
       s"post-rebuild, the drifted distribution is the new normal: $d3")
     // and the signal stays quiet → no further re-build
     assert(!VectorIndex.rebuildIfDrifted(corpus2.unionByName(b3), "vec_id",
-      "embedding", idxDir, k = 38, maxIter = 5, threshold = 0.1, sustain = 2))
+      "embedding", idxDir, k = 38, maxIter = 5))
   }
 
   test("calibrateNprobe picks the regime-appropriate dial: small on tight clusters, larger on diffuse") {
@@ -383,9 +383,9 @@ class VectorIndexSpec extends SparkSpec {
         noise = noise, seed = 42L, pointSeed = 1042L).localCheckpoint(true)
       VectorIndex.build(corpus, "vec_id", "embedding", idxDir, k = 45, maxIter = 5)
       val sample = SynthEmbeddings.clustered(spark, 100, dim = 64, clusters = 20,
-        noise = noise, seed = 42L, pointSeed = 7042L, idOffset = 1000000L)
+        noise = noise, seed = 42L, pointSeed = 7042L, idOffset = 1000000L, shift = 0.0)
       VectorIndex.calibrateNprobe(spark, sample, "vec_id", "embedding", idxDir,
-        k = 10, targetRecall = 0.95, candidates = Seq(1, 2, 4, 8, 16, 32))
+        k = 10, candidates = Seq(1, 2, 4, 8, 16, 32))
     }
     val (npTight, recTight) = chosenFor(0.05)
     val (npDiffuse, recDiffuse) = chosenFor(0.30)
@@ -412,7 +412,7 @@ class VectorIndexSpec extends SparkSpec {
       noise = 0.30, seed = 42L, pointSeed = 1042L).localCheckpoint(true)
     VectorIndex.build(corpus, "vec_id", "embedding", idxDir, k = 45, maxIter = 5)
     val queries = SynthEmbeddings.clustered(spark, 200, dim = 64, clusters = 20,
-      noise = 0.30, seed = 42L, pointSeed = 7042L, idOffset = 1000000L)
+      noise = 0.30, seed = 42L, pointSeed = 7042L, idOffset = 1000000L, shift = 0.0)
       .localCheckpoint(true)
     // ground truth = probing every cell (spec-pinned exact)
     val truth = VectorIndex.queryTopK(spark, queries, "vec_id", "embedding",
@@ -427,7 +427,7 @@ class VectorIndexSpec extends SparkSpec {
       spark, queries, "vec_id", "embedding", idxDir, k = 10))
     val (npCal, _) = VectorIndex.calibrateNprobe(spark,
       queries.limit(100).localCheckpoint(true), "vec_id", "embedding", idxDir,
-      k = 10, targetRecall = 0.95, candidates = Seq(1, 2, 4, 8, 16, 32))
+      k = 10, candidates = Seq(1, 2, 4, 8, 16, 32))
     val rCal = recallOf(VectorIndex.queryTopK(
       spark, queries, "vec_id", "embedding", idxDir, k = 10, nprobe = npCal))
     assert(rDefault < 0.95,
@@ -465,7 +465,7 @@ class VectorIndexSpec extends SparkSpec {
     // within a whisker of the f32 index's recall (int8 at dim 64 loses
     // almost nothing); floors are loose for fixture-size variance
     val queries = SynthEmbeddings.clustered(spark, 200, dim = 64, clusters = 20,
-      noise = 0.10, seed = 42L, pointSeed = 7042L, idOffset = 1000000L)
+      noise = 0.10, seed = 42L, pointSeed = 7042L, idOffset = 1000000L, shift = 0.0)
       .localCheckpoint(true)
     val truth = Similarity.bruteForceCosineTopK(corpus, "vec_id", "embedding",
       queries, "vec_id", "embedding", k = 10)
@@ -483,7 +483,7 @@ class VectorIndexSpec extends SparkSpec {
     // incremental appends auto-match the format via the marker — the
     // streamed-ingest path needs no format parameter
     val more = SynthEmbeddings.clustered(spark, 500, dim = 64, clusters = 20,
-      noise = 0.10, seed = 42L, pointSeed = 2042L, idOffset = 500000L)
+      noise = 0.10, seed = 42L, pointSeed = 2042L, idOffset = 500000L, shift = 0.0)
     VectorIndex.append(more, "vec_id", "embedding", sq8, runId = 1L)
     val embType = spark.read.parquet(s"$sq8/postings").schema("emb").dataType
     assert(embType.isInstanceOf[org.apache.spark.sql.types.StructType],
@@ -525,7 +525,7 @@ class VectorIndexSpec extends SparkSpec {
     val (b32, bpq) = (bytesOf(f32), bytesOf(pq))
     assert(bpq < 0.35 * b32, s"pq postings must shed the float bytes: $bpq vs $b32")
     val queries = SynthEmbeddings.clustered(spark, 200, dim = 64, clusters = 20,
-      noise = 0.10, seed = 42L, pointSeed = 7042L, idOffset = 1000000L)
+      noise = 0.10, seed = 42L, pointSeed = 7042L, idOffset = 1000000L, shift = 0.0)
       .localCheckpoint(true)
     val truth = Similarity.bruteForceCosineTopK(corpus, "vec_id", "embedding",
       queries, "vec_id", "embedding", k = 10)
@@ -564,7 +564,7 @@ class VectorIndexSpec extends SparkSpec {
       s"rerank joins must be broadcast hash joins:\n${rrPlan.take(3000)}")
     // appends auto-match the format via the marker; codebooks reload
     val more = SynthEmbeddings.clustered(spark, 500, dim = 64, clusters = 20,
-      noise = 0.10, seed = 42L, pointSeed = 2042L, idOffset = 500000L)
+      noise = 0.10, seed = 42L, pointSeed = 2042L, idOffset = 500000L, shift = 0.0)
     VectorIndex.append(more, "vec_id", "embedding", pq, runId = 1L)
     val embType = spark.read.parquet(s"$pq/postings").schema("emb").dataType
     assert(embType.isInstanceOf[org.apache.spark.sql.types.ArrayType] &&
@@ -611,7 +611,7 @@ class VectorIndexSpec extends SparkSpec {
     assert(flat(a) == flat(b), "same inputs must yield bit-identical codebooks")
     // residual training is a genuinely different model than raw
     val raw = Similarity.pqCodebooks(corpus, "vec_id", "embedding", m = 4,
-      ncodes = 16)
+      ncodes = 16, residualOf = null)
     assert(flat(raw) != flat(a), "residual codebooks must differ from raw")
     // dim guards are loud
     intercept[IllegalArgumentException] {
@@ -1122,12 +1122,12 @@ class VectorIndexSpec extends SparkSpec {
     // the calibrated call measures filtered recall and raises nprobe
     val (np, recalls) = VectorIndex.calibrateNprobeFiltered(
       spark, queries, "vec_id", "embedding", idxDir, k = 3, en,
-      targetRecall = 0.95, candidates = Seq(1, 2, 4, 8))
+      candidates = Seq(1, 2, 4, 8))
     assert(np == 8 && recalls(2) == 0.0,
       s"calibration must measure the miss and raise the dial: $np $recalls")
     val (npCal, _) = VectorIndex.calibrateNprobeFiltered(
       spark, queries.limit(4).localCheckpoint(true), "vec_id", "embedding",
-      idxDir, k = 3, en, targetRecall = 0.95, candidates = Seq(1, 2, 4, 8))
+      idxDir, k = 3, en, candidates = Seq(1, 2, 4, 8))
     val got = topk(VectorIndex.queryTopKFiltered(
       spark, queries, "vec_id", "embedding", idxDir, k = 3, en, nprobe = npCal))
     assert(got.map(r => (r._2, r._4)).take(1) == Seq((9000L, 1)),
@@ -1137,7 +1137,7 @@ class VectorIndexSpec extends SparkSpec {
     val (np2, _) = VectorIndex.calibrateNprobeFiltered(
       spark, queries, "vec_id", "embedding", idxDir, k = 3,
       col("vec_id").isin(corpus.filter(en).select(col("vec_id"))),
-      targetRecall = 0.95, candidates = Seq(1, 2, 4, 8))
+      candidates = Seq(1, 2, 4, 8))
     assert(np2 == 8)
   }
 
