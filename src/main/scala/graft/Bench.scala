@@ -78,6 +78,13 @@ object Bench {
     // have to reconcile four wall numbers by hand.
     val runId = java.lang.Long.toHexString(System.currentTimeMillis()) + "-" +
       java.lang.Integer.toHexString(scala.util.Random.nextInt())
+    // the host fingerprint (perfbench's fields): a CPU ratio against an
+    // artifact from another host measures the hosts, not the tree, so
+    // the ratio below is printed only against an equal fingerprint
+    val host = s"""{"nproc":${Runtime.getRuntime.availableProcessors},""" +
+      s""""max_heap_mb":${Runtime.getRuntime.maxMemory >> 20},""" +
+      s""""jvm":"${System.getProperty("java.vm.version")}",""" +
+      s""""spark":"${org.apache.spark.SPARK_VERSION}"}"""
     val (prevCpu, prevRunId): (Map[String, Double], String) =
       try {
         val p = java.nio.file.Paths.get("BENCH_PREV.json")
@@ -100,13 +107,25 @@ object Bench {
           val sfM = java.util.regex.Pattern
             .compile("\"sf\":\"([^\"]*)\"").matcher(txt)
           val sameSf = sfM.find() && sfM.group(1) == sfDir
-          (if (sameSf) cpuMap else Map.empty,
+          val hostM = java.util.regex.Pattern.compile("\"host\":(\\{[^}]*\\})").matcher(txt)
+          val prevHost = if (hostM.find()) Some(hostM.group(1)) else None
+          if (!prevHost.contains(host)) System.err.println(
+            "[bench] no common_subset_cpu_ratio: BENCH_PREV.json " + prevHost.fold(
+              "carries no host fingerprint")(h => s"was recorded on host $h, this is $host"))
+          (if (sameSf && prevHost.contains(host)) cpuMap else Map.empty,
             if (rid.find()) rid.group(1) else "")
         }
       } catch { case e: Throwable =>
         System.err.println(s"[bench] BENCH_PREV.json unreadable: $e")
         (Map.empty, "")
       }
+    // Janino compiles (Spark's codegen cache misses) of the warm-up and
+    // of each completed timed pass: the warm-up fills the cache, and a
+    // timed pass that still compiles pays for it in its CPU
+    def compiles: Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    var warmupCompiles = 0L
+    val passCompiles = scala.collection.mutable.ArrayBuffer[Long]()
     def artifactJson(finalLine: Boolean): String = {
       // ms precision everywhere: sub-ms digits are noise and the driver's
       // stdout capture keeps only a bounded TAIL of the line — shorter
@@ -166,6 +185,8 @@ object Bench {
         // defaultParallelism — artifacts from hosts of different core
         // counts visibly differ in the recorded fields
         s""""cpus":${spark.sparkContext.defaultParallelism},"cpus_env":"$cpus",""" +
+        s""""host":$host,"codegen_compiles":{"warmup":$warmupCompiles,""" +
+        s""""passes":${passCompiles.mkString("[", ",", "]")}},""" +
         s""""note":"cpu_sec is whole-process CPU of the best wall rep; full artifact in BENCH_FULL.json","sf":"$sfDir"}"""
     }
     def persist(): Unit =
@@ -178,10 +199,12 @@ object Bench {
     // of the remaining warmups past 35% of it; pass 1 still covers every query.
     if (sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") != "0") {
       val w0 = System.nanoTime()
+      val k0 = compiles
       var warmed = 0
       sorted.foreach { case (n, f) =>
         if (elapsed < 0.35 * maxTotalSec) { runOnce(n, f); warmed += 1 }
       }
+      warmupCompiles = compiles - k0
       if (warmed < sorted.size)
         System.err.println(s"[bench] warmup bailed at $warmed/${sorted.size} queries (budget)")
       System.err.println(
@@ -205,6 +228,7 @@ object Bench {
     while (r <= reps && !budgetHit &&
         (r == 1 || elapsed + 0.5 * lastPassSec < maxTotalSec)) {
       val r0 = System.nanoTime()
+      val k0 = compiles
       var bailed = false
       sorted.foreach { case (name, fn) =>
         if (r > 1 && elapsed >= maxTotalSec) {
@@ -231,6 +255,7 @@ object Bench {
       }
       if (!bailed) {
         passesCompleted = r
+        passCompiles += compiles - k0
         lastPassSec = (System.nanoTime() - r0) / 1e9
         System.err.println(f"[bench] timed pass $r/$reps: $lastPassSec%.1f s (elapsed $elapsed%.1f s)")
         persist()

@@ -39,8 +39,8 @@ private[graft] object IndexStore {
   }
 
   /** Append `ids` to the ledger under horizon `asofRun`. [[DeriveAsof]]
-    * records the max `run_id` of `postingsDir` (one column-pruned
-    * aggregate — deletes are rare, probes pay nothing new), so a delete
+    * records the max `run_id` of `postingsDir` (from its footers, no
+    * job — [[ParquetRead.columnMax]]), so a delete
     * covers exactly the ingests that preceded it; an index with no
     * postings records -1 (nothing to cover). Callers that own run
     * bookkeeping pass `asofRun` explicitly: a REDELIVERED
@@ -54,15 +54,11 @@ private[graft] object IndexStore {
     val spark = ids.sparkSession
     // "postings exist" means data files: a crashed first append leaves
     // a dir holding only `_temporary/`, which is no postings
-    lazy val files = ParquetRead.dataFiles(spark, postingsDir)
     val asof =
       if (asofRun != DeriveAsof) asofRun
-      else if (files.isEmpty) -1L
-      else {
-        val h = ParquetRead(spark, postingsDir, files, merge = false)
-          .agg(max(col("run_id"))).collect().head
-        if (h.isNullAt(0)) -1L else h.getLong(0)
-      }
+      else ParquetRead.columnMax(spark,
+        ParquetRead.dataFiles(spark, postingsDir).map(_.getPath.toString), "run_id")
+        .getOrElse(-1L)
     ids.select(col(idCol).as(key)).distinct()
       .withColumn("asof_run", lit(asof))
       .coalesce(1).write.mode("append").parquet(tombstonesDir(indexDir))

@@ -211,8 +211,8 @@ object Sketches {
       // no bound
       writeKmvCompactK(spark, stateDir,
         readKmvCompactK(spark, stateDir).fold(k)(math.min(_, k)))
-      val horizon = df.agg(max(col("run_id"))).collect().head
-      val h = if (horizon.isNullAt(0)) 0L else horizon.getLong(0)
+      val h = graft.sources.ParquetRead.columnMax(spark, df.inputFiles.toSeq, "run_id")
+        .getOrElse(0L)
       df.select(col("h")).distinct().orderBy(col("h")).limit(k)
         .withColumn("run_id", lit(h))
     }

@@ -412,10 +412,9 @@ object TokenIndex {
   def compact(spark: SparkSession,
       indexDir: String): ((Long, Long), (Long, Long), (Long, Long)) =
       graft.sources.Lease.withLease(spark, indexDir) {
-    def horizon(df: DataFrame): Long = {
-      val h = df.agg(max(col("run_id"))).collect().head
-      if (h.isNullAt(0)) 0L else h.getLong(0)
-    }
+    // the largest run folded, from the rewrite input's footers: no job
+    def horizon(df: DataFrame): Long =
+      graft.sources.ParquetRead.columnMax(spark, df.inputFiles.toSeq, "run_id").getOrElse(0L)
     // tombstoned docs drop physically in both folds (probes only mask
     // them between delete and compact); the drop is horizon-aware and
     // runs BEFORE the distinct (which erases run provenance), so an

@@ -931,8 +931,8 @@ object VectorIndex {
     val tomb = IndexStore.tombstones(spark, indexDir, "vec_id")
     val result = graft.sources.Compaction.rewriteParquetDir(spark,
         postingsDir(indexDir)) { input =>
-      val h = input.agg(max(col("run_id"))).collect().head
-      val horizon = if (h.isNullAt(0)) 0L else h.getLong(0)
+      val horizon = graft.sources.ParquetRead.columnMax(spark,
+        input.inputFiles.toSeq, "run_id").getOrElse(0L)
       // tombstoned rows drop PHYSICALLY here (probes only mask them);
       // the ledger itself retires after the swap lands. The drop runs
       // BEFORE the distinct (which erases run provenance), so an

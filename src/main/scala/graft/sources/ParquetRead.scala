@@ -3,8 +3,10 @@ package graft.sources
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{INT32, INT64}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
+import org.apache.spark.sql.functions.{col, max}
 
 /** The one reader of every parquet directory graft owns: fixtures,
   * index tables, incremental and sketch state, pipeline outputs.
@@ -14,7 +16,8 @@ import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
   * a single footer. Here the schema comes from the footers on the
   * driver and the read is `spark.read.schema(s).parquet(dir)`: no job
   * before the caller's own actions. A table's row count comes from its
-  * footers the same way ([[rowCount]]). The footer conversion and merge
+  * footers the same way ([[rowCount]]), and so does an integral
+  * column's maximum ([[columnMax]]). The footer conversion and merge
   * rules stay Spark's ([[GraftParquetBridge]]), and the file choice is
   * schema inference's: the first data file by path, or every data file
   * when `merge`. Partition columns are still discovered from the
@@ -26,6 +29,7 @@ import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
   * not the listing's.
   */
 object ParquetRead {
+  import scala.jdk.CollectionConverters._
 
   /** Spark's hidden-path rule (`HadoopFSUtils.shouldFilterOutPathName`
     * plus the file index's data-path check): `_`- and `.`-prefixed
@@ -77,5 +81,41 @@ object ParquetRead {
       val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
       try reader.getRecordCount finally reader.close()
     }.sum
+  }
+
+  /** The largest value of the integral (INT32 or INT64) top-level
+    * `column` in the parquet files at `paths`, or None when every value
+    * is null. It is read from the row-group statistics on the driver: no
+    * job. A file without the column, or without row groups, counts as
+    * all-null; a partition column is in no footer, so it is not for
+    * those. When any row group of the column has no statistics (a
+    * writer that disabled them), the answer is one aggregate over
+    * `paths` instead, reading the column as `long`. Pass a rewrite's
+    * input as `df.inputFiles`, so the read follows its crash recovery. */
+  def columnMax(spark: SparkSession, paths: Seq[String], column: String): Option[Long] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    // per row group holding the column: Some(Some(max)), Some(None)
+    // when its values are all null, None when it has no statistics
+    val groups: Seq[Option[Option[Long]]] = paths.flatMap { p =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(p), conf))
+      try reader.getFooter.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala
+        .find(_.getPath.toDotString == column).map { chunk =>
+          val t = chunk.getPrimitiveType.getPrimitiveTypeName
+          require(t == INT32 || t == INT64, s"columnMax: $column is $t, not integral")
+          val st: org.apache.parquet.column.statistics.Statistics[_] = chunk.getStatistics
+          if (st.isEmpty) None
+          else if (st.hasNonNullValue)
+            Some(Some(st.genericGetMax.asInstanceOf[Number].longValue))
+          else if (st.getNumNulls == chunk.getValueCount) Some(None)
+          else None
+        })
+      finally reader.close()
+    }
+    if (groups.forall(_.isDefined)) groups.flatten.flatten.maxOption
+    else {
+      val row = spark.read.schema(s"`$column` long").parquet(paths: _*)
+        .agg(max(col(column))).collect().head
+      if (row.isNullAt(0)) None else Some(row.getLong(0))
+    }
   }
 }

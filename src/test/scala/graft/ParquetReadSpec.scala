@@ -109,6 +109,52 @@ class ParquetReadSpec extends SparkSpec {
       .select(col("asof_run")).as[Long].collect().toSeq == Seq(-1L))
   }
 
+  test("columnMax: the footers' max equals the aggregate, with no job while every footer has statistics") {
+    // Spark's own answer; no file with the column means no value
+    def aggregate(dir: String): Option[Long] =
+      if (!merged(dir).columns.contains("run_id")) None
+      else {
+        val r = merged(dir).agg(max(col("run_id"))).head()
+        if (r.isNullAt(0)) None else Some(r.getLong(0))
+      }
+    def footers(dir: String): Option[Long] = ParquetRead.columnMax(spark,
+      ParquetRead.dataFiles(spark, dir).map(_.getPath.toString), "run_id")
+    // several files, several row groups: three appends of four files each
+    val multi = tmpDir("pqmaxmulti")
+    Seq(3L, 11L, 7L).foreach { run =>
+      (0 until 40).map(i => (i.toLong, run - i % 3)).toDF("id", "run_id")
+        .repartition(4).write.mode("append").parquet(multi)
+    }
+    assert(ParquetRead.dataFiles(spark, multi).size == 12)
+    assert(footers(multi) == Some(11L) && footers(multi) == aggregate(multi))
+    assert(jobsStartedBy(footers(multi)) == 0)
+    // null run ids: one all-null file beside a mixed one, then all-null only
+    val nulls = tmpDir("pqmaxnull")
+    Seq[(Long, Option[Long])]((1L, None), (2L, None)).toDF("id", "run_id")
+      .coalesce(1).write.parquet(nulls)
+    assert(footers(nulls).isEmpty && footers(nulls) == aggregate(nulls))
+    Seq[(Long, Option[Long])]((3L, Some(5L)), (4L, None)).toDF("id", "run_id")
+      .coalesce(1).write.mode("append").parquet(nulls)
+    assert(footers(nulls) == Some(5L) && footers(nulls) == aggregate(nulls))
+    assert(jobsStartedBy(footers(nulls)) == 0)
+    // a file that lacks the column counts as all-null
+    val lacking = tmpDir("pqmaxlack")
+    Seq((1L, "a")).toDF("id", "v").write.parquet(lacking)
+    assert(footers(lacking).isEmpty && footers(lacking) == aggregate(lacking))
+    Seq((2L, 9L)).toDF("id", "run_id").write.mode("append").parquet(lacking)
+    assert(footers(lacking) == Some(9L) && footers(lacking) == aggregate(lacking))
+    assert(jobsStartedBy(footers(lacking)) == 0)
+    // a file written without statistics: one aggregate instead
+    val nostats = tmpDir("pqmaxnostats")
+    Seq((1L, 4L), (2L, 6L)).toDF("id", "run_id").coalesce(1)
+      .write.option("parquet.column.statistics.enabled", "false").parquet(nostats)
+    Seq((3L, 2L)).toDF("id", "run_id").write.mode("append").parquet(nostats)
+    assert(footers(nostats) == Some(6L) && footers(nostats) == aggregate(nostats))
+    assert(jobsStartedBy(footers(nostats)) > 0)
+    // no files at all: nothing to read
+    assert(footers(tmpDir("pqmaxnone")).isEmpty)
+  }
+
   test("fixture-only builds start no job: registerFixture, q01, q21, q113, q122") {
     val d = s"$fixtures/sf0.001"
     assert(jobsStartedBy(Views.registerFixture(spark, d)) == 0)
