@@ -19,13 +19,14 @@ import graft.functions.{HashFunctions, TextFunctions, VectorFunctions}
 object Dedup {
 
   /** Signature geometry of the multimodal dedup family, shared by every
-    * writer of a signature state (here and in the streaming sinks of
-    * [[graft.streaming.StreamOps]]) and every probe of it, so a state and
+    * writer of a signature state (each `…Signatures` writer here, however
+    * its runs are driven) and every probe of it, so a state and
     * its reader cannot disagree. 64-bit signatures block on `SigChunks`
     * slices; video fingerprints every keyframe (`VideoEveryN`); audio
     * reads at most `AudioMaxWindows` non-overlapping (`AudioHop` 0)
     * windows of `AudioWindow` samples; a clip pair matches on
     * `*MinMatches` distinct frames/windows per side within `*MaxHamming`
+    * bits; strict oriented pairs match within `OrientedStrictMaxHamming`
     * bits; oriented-verified images take candidates within
     * `OrientedCandidateMaxHamming` bits (recall-loose, at the measured
     * floor) and keep grids within `MaxGridDistance` gray levels; a new
@@ -41,6 +42,7 @@ object Dedup {
   val AudioMaxHamming = 4
   val AudioMinMatches = 4
   val OrientedCandidateMaxHamming = 3
+  val OrientedStrictMaxHamming = 2
   val MaxGridDistance = 8.0
   val ImageVsStateMaxHamming = 5
   /** SimHash geometry of [[simHashNearDuplicates]]. */
@@ -424,9 +426,9 @@ object Dedup {
 
   /** STRICT orientation-robust image near-dup: matches when ANY of the
     * two images' 8 per-transform dHash signatures sit within
-    * `maxHamming` bits — min cross-orientation distance, so a COMPOSED
-    * disguise (re-encode AND re-orient) matches even when re-encode
-    * noise flips which transform wins [[graft.multimodal.ImageOps
+    * [[OrientedStrictMaxHamming]] bits — min cross-orientation distance,
+    * so a COMPOSED disguise (re-encode AND re-orient) matches even when
+    * re-encode noise flips which transform wins [[graft.multimodal.ImageOps
     * .dHashCanonical]]'s unsigned-min (the canonical form's documented
     * min-switch caveat; on lossless re-orientations both forms agree).
     * Price vs the canonical flag: 8 signature rows per image through
@@ -438,8 +440,8 @@ object Dedup {
     * signature pairs per image pair, so the cross-image distance floor
     * erodes 64× faster with corpus size than the single-signature
     * operators' (measured: the fixture population's floor is 12 for
-    * plain dHash, 3 for this min — ImageDedupSpec pins both). Default
-    * `maxHamming = 2` covers the composed-disguise class (≤ 2 bits,
+    * plain dHash, 3 for this min — ImageDedupSpec pins both). The
+    * threshold of 2 covers the composed-disguise class (≤ 2 bits,
     * pinned) while clearing that floor; at web scale treat this as a
     * high-recall CANDIDATE GENERATOR feeding a verification stage, not
     * a standalone pair oracle —
@@ -450,9 +452,17 @@ object Dedup {
   def imageNearDuplicatesOrientedStrict(
       df: DataFrame,
       idCol: String,
+      bytesCol: String): DataFrame =
+    imageNearDuplicatesOrientedStrict(df, idCol, bytesCol, SigChunks, OrientedStrictMaxHamming)
+
+  /** [[imageNearDuplicatesOrientedStrict]] with the blocking chunk count
+    * and the threshold explicit. */
+  private[graft] def imageNearDuplicatesOrientedStrict(
+      df: DataFrame,
+      idCol: String,
       bytesCol: String,
-      chunks: Int = SigChunks,
-      maxHamming: Int = 2): DataFrame =
+      chunks: Int,
+      maxHamming: Int): DataFrame =
     hammingNearDuplicates(
       df.select(col(idCol).as("__id"),
           explode(graft.multimodal.ImageOps.imageDHashOrientations(
@@ -520,7 +530,9 @@ object Dedup {
     * disguise class needs the verify, see
     * [[imageNearDuplicatesOrientedVerified]]). Undecodable rows
     * dropped. Append survivors with a version column; maintain with
-    * [[compactSignatureState]].
+    * [[compactSignatureState]]. Redelivery-idempotent like
+    * [[imageSignatures]]: a replayed run appends bit-identical rows and
+    * the vs-state verdict is multiplicity-blind.
     */
   def imageOrientedSignatures(df: DataFrame, idCol: String,
       bytesCol: String): DataFrame =
@@ -728,6 +740,11 @@ object Dedup {
     * only thing incremental video dedup ever reads back. Append each run's
     * survivors with a version column and maintain with
     * [[compactSignatureState]] (composite key: idCol + frame_idx).
+    * Redelivery: a replayed run appends bit-identical (id, frame_idx,
+    * sig, version) rows; [[videoNearDuplicatesVsState]]'s verdicts are
+    * multiplicity-blind, and `compactSignatureStateKeys(Seq(idCol,
+    * "frame_idx"), versionCol)` folds the duplicates at maintenance
+    * time.
     */
   def videoSignatures(df: DataFrame, idCol: String, bytesCol: String): DataFrame = {
     val spark = df.sparkSession
@@ -748,7 +765,11 @@ object Dedup {
     * (see [[audioNearDuplicates]] — the class is every window whose
     * band-difference profile never GREW: static spectra, but also
     * monotone decays like a single fading chord; the [[videoSignatures]]
-    * trade). The audio sibling of [[videoSignatures]].
+    * trade). The audio sibling of [[videoSignatures]], redelivery
+    * included (key: idCol + window_idx). A state probed by
+    * [[audioNearDuplicatesVsState]] must be written at the window
+    * geometry it probes with (`AudioWindow`, `AudioMaxWindows`,
+    * `AudioHop`).
     */
   def audioSignatures(df: DataFrame, idCol: String, bytesCol: String,
       window: Int = AudioWindow, hop: Int = AudioHop): DataFrame = {
@@ -896,6 +917,10 @@ object Dedup {
     * state table is GB-scale. Append each run's survivors with a
     * version column and maintain with [[compactSignatureState]]
     * (keep-latest + retention work unchanged on a long signature).
+    * Redelivery: a replayed run appends bit-identical rows; the
+    * vs-state verdict is multiplicity-blind (distinct-signature collapse
+    * + min-id argmin) and versioned compaction folds the duplicates.
+    * Plain and orientation-robust rows never mix in one table.
     */
   def imageSignatures(df: DataFrame, idCol: String, bytesCol: String,
       orientationRobust: Boolean = false): DataFrame =

@@ -39,6 +39,8 @@ object Sketches {
     * would survive distinct(), sort FIRST ascending, and occupy the
     * sketch's smallest slot, crashing typed `.as[Long]` consumers and
     * biasing the estimator upward.
+    * As incremental state, each run appends its sketch tagged `run_id`;
+    * [[kmvStateSketch]] says why a redelivered run is a no-op.
     */
   def kmvSketch(df: DataFrame, c: Column, k: Int): DataFrame =
     df.where(c.isNotNull).select(sha60(c).as("h")).distinct()
@@ -72,8 +74,8 @@ object Sketches {
   // ---------------------------------------------- incremental KMV state
 
   /** Read the merged KMV sketch off an append-only state table (rows
-    * `(h, run_id)`, the layout
-    * [[graft.streaming.StreamOps.kmvDistinctStream]] maintains): the k
+    * `(h, run_id)`, one [[kmvSketch]] per run, e.g. appended per batch
+    * by [[graft.streaming.StreamOps.availableNow]]): the k
     * smallest DISTINCT hashes across runs. KMV merging is pure set
     * semantics, so this is the state family's only member whose
     * redelivery story needs no run tag at all — duplicated rows are
@@ -227,22 +229,25 @@ object Sketches {
   // engine's incremental-by-rerun contract (reference `test.py:99-111`:
   // keep state, process only the delta) applied to distinct counting,
   // where the raw keyset state would be unbounded but the sketch is
-  // ~2^lgK bytes per key forever. Built on Spark's Datasketches
+  // ~2^HllLgK bytes per key forever. Built on Spark's Datasketches
   // builtins (`hll_sketch_agg`/`hll_union_agg`), the same registers
   // `Relational.descendantCounts` propagates. Re-accumulating an
   // already-seen batch is a NO-OP on the estimate (max of maxes), so
   // at-least-once delivery upstream cannot inflate counts.
 
+  /** HLL register exponent of every state sketch: 2^12 bytes per key
+    * per run, error ~1.04/√2^12 ≈ 1.6%. */
+  val HllLgK = 12
+
   /** Sketch one batch into per-key HLL state: (keys..., hll_state).
-    * NULL values are excluded (count-distinct semantics). `lgK` trades
-    * state size (2^lgK bytes/key) for error (~1.04/√2^lgK ≈ 1.6% at
-    * the default 12).
+    * NULL values are excluded (count-distinct semantics). As state, a
+    * run that dies after its append re-runs and appends its delta AGAIN;
+    * the read's register max makes that a no-op (the q96 property).
     */
-  def hllDistinctState(df: DataFrame, keyCols: Seq[String], valueCol: Column,
-      lgK: Int = 12): DataFrame =
+  def hllDistinctState(df: DataFrame, keyCols: Seq[String], valueCol: Column): DataFrame =
     df.where(valueCol.isNotNull)
       .groupBy(keyCols.map(col): _*)
-      .agg(hll_sketch_agg(valueCol, lit(lgK)).as("hll_state"))
+      .agg(hll_sketch_agg(valueCol, lit(HllLgK)).as("hll_state"))
 
   /** Merge state tables (state ∪ delta, or any number unioned before
     * one call): per-key register max. Keys present in only one side
@@ -269,8 +274,8 @@ object Sketches {
     state.withColumn("distinct_est", hll_sketch_estimate(col("hll_state")))
 
   /** Merge-read an APPEND-ONLY HLL state directory (the layout
-    * [[graft.streaming.StreamOps.hllDistinctStream]] maintains: one
-    * delta sketch row per key per micro-batch) down to one estimate per
+    * [[hllDistinctState]] appends: one delta sketch row per key per
+    * run) down to one estimate per
     * key. Duplicate delta rows — at-least-once redelivery upstream —
     * cannot inflate the estimate: the union is a per-key register max.
     */
@@ -311,6 +316,9 @@ object Sketches {
     * carrying the delta; a truly empty input yields that row with
     * delta 0. Filter `item IS NOT NULL` for the tabular view;
     * [[topKExact]] consumes the struct directly.
+    * As state, each run appends its rows tagged `run_id`
+    * ([[mgStateSummary]] argues the retry); a run written by two
+    * differing attempts holds up to 2(m+1) rows until compaction.
     */
   def frequentItems(df: DataFrame, c: Column, m: Int): DataFrame = {
     val mg = udaf(graft.functions.Aggregators.MisraGries(m))
@@ -387,8 +395,8 @@ object Sketches {
   // ------------------------------------------- streaming MG state
 
   /** Merge an append-only Misra–Gries state table (the layout
-    * [[graft.streaming.StreamOps.frequentItemsStream]] maintains: one
-    * [[frequentItems]] row set per micro-batch, tagged `run_id`) down
+    * [[frequentItems]] appends as state: one row set per run, tagged
+    * `run_id`) down
     * to one summary — the MG contract over ALL runs: for every output
     * row, true(item) ∈ [weight, weight + delta]; any item absent from
     * the summary has true count ≤ delta (delta = Σ per-run Δ, since
@@ -410,8 +418,7 @@ object Sketches {
     * bit-equal: each attempt independently satisfies
     * wᵢ(item) ≤ true ≤ wᵢ(item) + Δᵢ, so max wᵢ ≤ true ≤
     * max wᵢ + max Δᵢ, and an item absent from every attempt has
-    * true ≤ min Δᵢ ≤ the run's max-Δ contribution
-    * (see [[graft.streaming.StreamOps.frequentItemsStream]]).
+    * true ≤ min Δᵢ ≤ the run's max-Δ contribution.
     *
     * State stays plain data rows (item, weight, delta, run_id), ≤ m+1
     * rows per run, readable by any engine. The summary keeps
@@ -465,7 +472,9 @@ object Sketches {
     * (a bounded metric domain ⇒ bounded state forever; for unbounded
     * or fractional metrics the CALLER quantizes, same contract as
     * q59/q80's integer scores). Null buckets are excluded (a row with
-    * no metric contributes to no quantile).
+    * no metric contributes to no quantile). As incremental state, each
+    * run appends its rows tagged `run_id`; [[histStateQuantiles]] argues
+    * why a redelivered run is a no-op.
     */
   def histDeltaState(df: DataFrame, keyCols: Seq[String], bucket: Column): DataFrame =
     df.select((keyCols.map(col) :+ bucket.cast("long").as("bucket")): _*)
@@ -474,8 +483,7 @@ object Sketches {
       .agg(count(lit(1)).as("cnt"))
 
   /** Merge an append-only histogram state (rows from [[histDeltaState]]
-    * tagged `run_id`, the layout
-    * [[graft.streaming.StreamOps.histQuantileStream]] maintains) and
+    * tagged `run_id`, one row set per run) and
     * read nearest-rank quantiles per key: value(q) = min bucket whose
     * cumulative count reaches `max(1, ceil(q·N))`. Counts, like MG
     * weights, would inflate under at-least-once redelivery — the same
@@ -561,7 +569,9 @@ object Sketches {
   val KllK = 200
 
   /** Sketch one batch into per-key KLL state: (keys..., kll_state).
-    * NULL/NaN values are excluded (a NaN poisons every quantile). */
+    * NULL/NaN values are excluded (a NaN poisons every quantile). As
+    * state, each run appends its rows tagged `run_id` (redelivery: the
+    * note above; reads are error-bounded, unlike [[histDeltaState]]). */
   def kllDeltaState(df: DataFrame, keyCols: Seq[String], valueCol: Column): DataFrame = {
     val agg = udaf(graft.functions.Aggregators.KllDoubles(KllK))
     df.where(valueCol.isNotNull && !isnan(valueCol))

@@ -85,6 +85,16 @@ object TokenIndex {
     * BM25's collection stats — (N, sum_dl) count both ingests of an
     * upserted doc until [[compact]] re-derives them (the same
     * documented class as a verbatim re-ingest under a new run id).
+    *
+    * Redelivery is free: each call appends distinct-id rows and every
+    * ledger consumer is multiplicity-blind, so a re-run takedown batch
+    * is a no-op by construction, with no run-id bookkeeping. One
+    * caveat, since the ledger is horizon-aware: a DERIVED `asofRun` is
+    * exact for a pure takedown feed, but if the same corpus also takes
+    * upsert appends, a crash-replayed delete could re-derive a horizon
+    * above an interleaved re-append. Sequence upserts through one
+    * pipeline (delete with an explicit `asofRun`, then append) instead
+    * of racing a takedown stream against them.
     */
   def delete(ids: DataFrame, idCol: String, indexDir: String,
       asofRun: Long = DeriveAsof): Unit =
@@ -126,6 +136,15 @@ object TokenIndex {
     * see the redelivery note above). Null-text documents contribute no
     * postings (they have no token set, matching
     * [[Similarity.containmentJoin]]'s tokenizer on the corpus side).
+    *
+    * A retried run re-tokenizes the SAME batch and appends
+    * bit-identical rows under the same run id, which every read path
+    * absorbs (per-(run, tok) max df, distinct-intersect verify) and
+    * [[compact]] later folds away. A crash BETWEEN this call's four
+    * table writes is healed the same way: the re-run gives the partial
+    * tables their missing rows and the duplicated ones collapse on
+    * read. `metaCols` must match the index's: a filtered probe reads
+    * the columns every append stored.
     */
   def append(corpusBatch: DataFrame, idCol: String, textCol: String,
       indexDir: String, runId: Long, metaCols: Seq[String] = Nil): Unit =

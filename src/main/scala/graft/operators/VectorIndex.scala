@@ -290,6 +290,15 @@ object VectorIndex {
     * co-assignment guarantee exact at ANY k. Add-time pays
     * Θ(n·k·log k) once per batch — the Faiss flat-coarse-quantizer
     * contract.
+    *
+    * Requires a BUILT index: [[build]] once on a representative sample
+    * (run 0, the drift baseline), then append later runs under ids ≥ 1;
+    * re-build when [[assignmentDrift]] sustains past the trigger.
+    * Redelivery: assignment is a deterministic pure projection, so a
+    * retried run appends bit-identical postings and an identical stats
+    * row; the probe-side (query, neighbor) dedup and the drift read's
+    * per-run max absorb both. `metaCols` must match the index's: a
+    * filtered probe reads the columns every append stored.
     */
   def append(batch: DataFrame, idCol: String, embCol: String,
       indexDir: String, runId: Long, metaCols: Seq[String] = Nil): Unit =
@@ -401,6 +410,8 @@ object VectorIndex {
     * stale posting is masked from the very next probe while the
     * re-embedded one is live. A takedown of most of the corpus should
     * be a re-[[build]] of the survivors instead.
+    * Redelivery and its one caveat: see [[TokenIndex.delete]], the
+    * same ledger.
     */
   def delete(ids: DataFrame, idCol: String, indexDir: String,
       asofRun: Long = DeriveAsof): Unit =

@@ -41,7 +41,16 @@ object IdempotentBlobSink {
   /** Upload every row's `contentCol` to `pathCol`, one store per
     * partition, returning (path, url, error) per row. All rows are
     * attempted; failures surface as `error` values (reference
-    * `test.py:89-91`).
+    * `test.py:89-91`). The result frame is lazy: materialize it (a
+    * `noop` write will do) when the upload itself is the effect.
+    *
+    * Driven per micro-batch of a checkpointed file stream, this is the
+    * reference's rerun contract end to end: the checkpoint gives
+    * at-least-once batch delivery of only the files it has not seen,
+    * and the path-keyed upsert makes a redelivered batch idempotent,
+    * so together they are effectively exactly-once to the remote store
+    * (the reference gets the same from its processed-keyset skip plus
+    * sha-conditioned overwrite, `test.py:99-111,70-81`).
     */
   def upload(df: DataFrame, pathCol: String, contentCol: String,
       storeFactory: () => BlobStore): DataFrame = {

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 import java.sql.Timestamp
 
 /** Structured Streaming re-expression of the engine's incremental
@@ -11,488 +12,54 @@ import java.sql.Timestamp
   * The reference pipeline is "incremental by re-run": each run reads
   * everything, anti-joins against state, processes the delta
   * (`/root/reference/test.py:99-111,142-146`). Structured Streaming's
-  * checkpointed file source + `Trigger.AvailableNow` is the idiomatic
+  * checkpointed file source + the `AvailableNow` trigger is the idiomatic
   * Spark form of exactly that contract: each invocation processes only
-  * files not yet recorded in the checkpoint, then terminates.
+  * files not yet recorded in the checkpoint, then terminates. One
+  * driver, [[availableNow]], owns that wiring; what a run does with its
+  * delta is the batch writer it is handed. The other two operators are
+  * the streaming bodies with no batch twin to hand over.
   */
 object StreamOps {
 
-  /** Incremental parquet-directory pipeline: process only new files per
-    * run, exactly the reference's skip-already-processed behavior with the
-    * keyset replaced by the checkpoint log.
-    */
-  def availableNowPipeline(
-      spark: SparkSession,
-      inputDir: String,
-      schema: org.apache.spark.sql.types.StructType,
-      transform: DataFrame => DataFrame,
-      outputDir: String,
-      checkpointDir: String): StreamingQuery = {
-    val in = spark.readStream.schema(schema).parquet(inputDir)
-    transform(in).writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .format("parquet")
-      .option("path", outputDir)
-      .start()
-  }
-
-  /** Tumbling-window counts with a watermark: the streaming analog of
-    * q19_hourly_events. Late rows beyond `watermark` are dropped and
-    * window state is garbage-collected — bounded state at any scale.
-    * `sum_value` sums the events' `value` column.
-    */
-  def windowedCounts(events: DataFrame, tsCol: String, keyCol: String,
-      windowLen: String, watermark: String): DataFrame =
-    events
-      .withWatermark(tsCol, watermark)
-      .groupBy(window(col(tsCol), windowLen), col(keyCol))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
-      .select(col("window.start").as("wstart"), col(keyCol), col("n"), col("sum_value"))
-
-  /** HLL register exponent of [[hllDistinctStream]]'s state sketches
-    * (~1.6% error, 2^12 bytes per key per run). */
-  val HllLgK = 12
-
-  /** Incremental per-key DISTINCT accounting as an `AvailableNow`
-    * stream — the reference's incremental-by-rerun contract
-    * (`test.py:99-111`: keep state, process only the delta) applied to
-    * distinct counting. Each invocation reads only files the checkpoint
-    * has not seen, sketches JUST that delta into per-key HLL rows
-    * ([[graft.operators.Sketches.hllDistinctState]]), and APPENDS them
-    * to `stateDir`; "distinct all-time" is a register-max merge over
-    * the state ([[graft.operators.Sketches.hllStateEstimates]]) —
-    * history is never rescanned, state is ~2^[[HllLgK]] bytes per key per run
-    * until [[graft.operators.Sketches.compactHllState]] folds it to one
-    * row per key.
+  /** Run `onBatch` over each micro-batch of the parquet files under
+    * `inputDir` that the checkpoint at `checkpointDir` has not seen yet,
+    * then terminate: one `AvailableNow` run of a checkpointed
+    * file source. The caller awaits the returned query.
     *
-    * Failure semantics: `foreachBatch` is at-least-once — a batch that
-    * dies after its append re-runs and appends its delta sketch AGAIN.
-    * That is SAFE here by construction: the read path's union is a
-    * per-key register max, so a duplicated delta is a no-op on the
-    * estimate (the q96 redelivery property; StreamingSpec proves the
-    * differential vs batch under exactly this double-append).
+    * `onBatch` receives the batch and its RUN ID, `batchId + 1`. Stream
+    * run ids start at 1 for two reasons. Run 0 belongs to the
+    * pre-stream ingest (a bootstrap append, or `VectorIndex.build`'s
+    * training corpus), and per-run dedup on the read paths assumes one
+    * run id = one batch content, so a stream's batch 0 must not collide
+    * with it. Run 0 is also `VectorIndex.assignmentDrift`'s baseline
+    * row: a stream batch merged into it under the read's per-run max
+    * would corrupt the baseline itself. The stream owns ids ≥ 1 within
+    * its checkpoint lineage; callers that interleave MANUAL appends
+    * with a live stream keep their ids out of that range (0 or
+    * negatives).
+    *
+    * Failure semantics: `foreachBatch` is at-least-once. A batch whose
+    * `onBatch` fails re-runs on the next invocation with the SAME file
+    * set and the same run id (the checkpoint pins a batch's files in its
+    * offset log before the batch executes), so a writer is safe here
+    * when a redelivered run is a no-op on its reads. Each state writer's
+    * scaladoc argues that for its own state. A pipeline whose output is
+    * a plain parquet directory wants Spark's own file sink
+    * (`writeStream.format("parquet")` under the same trigger), which
+    * keeps the sink's exactly-once commit log.
     */
-  def hllDistinctStream(
+  def availableNow(
       spark: SparkSession,
       inputDir: String,
-      schema: org.apache.spark.sql.types.StructType,
-      keyCols: Seq[String],
-      valueCol: String,
-      stateDir: String,
-      checkpointDir: String): StreamingQuery =
-    appendStateStream(spark, inputDir, schema, stateDir, checkpointDir)(
-      (batch, _) => graft.operators.Sketches
-        .hllDistinctState(batch, keyCols, col(valueCol), HllLgK))
-
-  /** Shared scaffold of the incremental-state family
-    * ([[hllDistinctStream]] / [[frequentItemsStream]] /
-    * [[histQuantileStream]]): an `AvailableNow` checkpointed read of
-    * the input directory whose every micro-batch is reduced by
-    * `delta(batch, batchId)` and APPENDED to the state directory. One
-    * place owns the trigger/checkpoint/append wiring, so a fix to it
-    * cannot fork across the family.
-    */
-  private def appendStateStream(
-      spark: SparkSession,
-      inputDir: String,
-      schema: org.apache.spark.sql.types.StructType,
-      stateDir: String,
+      schema: StructType,
       checkpointDir: String)(
-      delta: (DataFrame, Long) => DataFrame): StreamingQuery = {
-    val in = spark.readStream.schema(schema).parquet(inputDir)
-    in.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        delta(batch, batchId).write.mode("append").parquet(stateDir)
-        ()
-      }
-      .start()
-  }
-
-  /** Incremental heavy-hitters accounting as an `AvailableNow` stream —
-    * the MG companion to [[hllDistinctStream]]: each invocation reads
-    * only files the checkpoint has not seen, sketches JUST that delta
-    * with a Misra–Gries pass
-    * ([[graft.operators.Sketches.frequentItems]]: ≤ m+1 plain data
-    * rows per run, no full-vocabulary shuffle), tags it with the
-    * micro-batch id, and APPENDS to `stateDir`. "Heavy items all-time"
-    * reads off [[graft.operators.Sketches.mgStateSummary]] — history
-    * is never rescanned; [[graft.operators.Sketches.compactMgState]]
-    * folds the append-only runs to one.
-    *
-    * Failure semantics: `foreachBatch` is at-least-once, and MG
-    * counters — unlike HLL registers — would inflate if a duplicated
-    * delta were summed twice. The `run_id` tag makes the retry safe:
-    * a re-run batch has the SAME id (its file set is WAL-pinned
-    * before execution) and the read path dedupes per (run_id, item)
-    * by max before summing. Two regimes, stated honestly: when the
-    * retry emits IDENTICAL rows (single-partition merge, or any
-    * deterministic re-run — the common case StreamingSpec pins), the
-    * read is bit-identical. In general the MG merge is
-    * order-SENSITIVE (truncation at the (m+1)-th weight depends on
-    * the shuffle-fetch interleaving), so two attempts of the same
-    * batch may legally emit different valid summaries; the
-    * max-dedupe then keeps the read WITHIN THE MG CONTRACT rather
-    * than bit-equal — for each item, max(w₁, w₂) ≤ true ≤
-    * max(w₁, w₂) + max(Δ₁, Δ₂) because every attempt's summary
-    * bounds the same batch (true ≤ wᵢ + Δᵢ ∀i), and an item absent
-    * from both attempts has true ≤ min Δᵢ. A mixed-attempt run can
-    * hold up to 2(m+1) rows until compaction folds it.
-    */
-  def frequentItemsStream(
-      spark: SparkSession,
-      inputDir: String,
-      schema: org.apache.spark.sql.types.StructType,
-      valueCol: String,
-      stateDir: String,
-      checkpointDir: String,
-      m: Int): StreamingQuery =
-    appendStateStream(spark, inputDir, schema, stateDir, checkpointDir)(
-      (batch, batchId) => graft.operators.Sketches
-        .frequentItems(batch, col(valueCol), m)
-        .withColumn("run_id", lit(batchId)))
-
-  /** Incremental per-key QUANTILE accounting as an `AvailableNow`
-    * stream — the exact third member of the incremental-state family
-    * ([[hllDistinctStream]] = distinct, [[frequentItemsStream]] =
-    * heavy hitters): each run histograms ONLY its file delta over an
-    * integer bucket expression
-    * ([[graft.operators.Sketches.histDeltaState]]; callers quantize
-    * fractional metrics to milli-units, the house integer-score
-    * contract) and appends `(key…, bucket, cnt, run_id)`; reads merge
-    * via [[graft.operators.Sketches.histStateQuantiles]] — over an
-    * integer metric the histogram is lossless, so incremental
-    * quantiles equal a full rescan bit-for-bit. Redelivery safety is
-    * the MG design: counts would inflate if a retried batch re-summed,
-    * so rows tag the WAL-pinned batch id and the read dedupes per
-    * (run, key, bucket) before summing.
-    */
-  def histQuantileStream(
-      spark: SparkSession,
-      inputDir: String,
-      schema: org.apache.spark.sql.types.StructType,
-      keyCols: Seq[String],
-      bucketExpr: String,
-      stateDir: String,
-      checkpointDir: String): StreamingQuery =
-    appendStateStream(spark, inputDir, schema, stateDir, checkpointDir)(
-      (batch, batchId) => graft.operators.Sketches
-        .histDeltaState(batch, keyCols, expr(bucketExpr))
-        .withColumn("run_id", lit(batchId)))
-
-  /** Incremental FLOAT-quantile accounting as an `AvailableNow` stream
-    * — the KLL member of the state family, for metrics with no
-    * integer-bucket contract (latencies, scores, losses): each
-    * invocation sketches ONLY its file delta into one serialized KLL
-    * row per key ([[graft.operators.Sketches.kllDeltaState]]), tagged
-    * with the WAL-pinned batch id; "p95 all-time" reads off
-    * [[graft.operators.Sketches.kllStateQuantiles]] with history never
-    * rescanned, and [[graft.operators.Sketches.compactKllState]] folds
-    * the runs. Redelivery is the MG design: retried sketch bytes can
-    * differ (KLL is order-sensitive), so the read keeps one
-    * deterministic representative per (run, keys) — any attempt
-    * summarizes the same batch, so the rank-error bound survives;
-    * reads are error-bounded, never bit-deterministic (the honest
-    * contrast with [[histQuantileStream]]'s exact-integer fold).
-    */
-  def kllQuantileStream(
-      spark: SparkSession,
-      inputDir: String,
-      schema: org.apache.spark.sql.types.StructType,
-      keyCols: Seq[String],
-      valueExpr: String,
-      stateDir: String,
-      checkpointDir: String): StreamingQuery =
-    appendStateStream(spark, inputDir, schema, stateDir, checkpointDir)(
-      (batch, batchId) => graft.operators.Sketches
-        .kllDeltaState(batch, keyCols, expr(valueExpr))
-        .withColumn("run_id", lit(batchId)))
-
-  /** Incremental KMV distinct accounting as an `AvailableNow` stream —
-    * the fourth member of the incremental-state family, and the one
-    * that answers what HLL state cannot: run-over-run NEWNESS ("how
-    * many distinct tokens did this crawl add") via union AND
-    * intersection estimates over plain-data sketches. Each run appends
-    * its delta's k smallest sha-60 hashes tagged with the batch id;
-    * reads merge by set union ([[graft.operators.Sketches
-    * .kmvStateSketch]] — `maxRunId` reconstructs any historical
-    * sketch), so redelivery is absorbed by `distinct()` with no run
-    * bookkeeping needed, and every read is bit-deterministic
-    * unconditionally (the sketch is sorted plain data).
-    */
-  def kmvDistinctStream(
-      spark: SparkSession,
-      inputDir: String,
-      schema: org.apache.spark.sql.types.StructType,
-      valueCol: String,
-      stateDir: String,
-      checkpointDir: String,
-      k: Int): StreamingQuery =
-    appendStateStream(spark, inputDir, schema, stateDir, checkpointDir)(
-      (batch, batchId) => graft.operators.Sketches
-        .kmvSketch(batch, col(valueCol), k)
-        .withColumn("run_id", lit(batchId)))
-
-  /** Incremental TOKEN-INDEX ingest as an `AvailableNow` stream
-    * (VERDICT r14 item 5 — the persisted indexes join the state family
-    * the four sketch states already live in): each invocation reads
-    * only corpus files the checkpoint has not seen and appends that
-    * delta into the [[graft.operators.TokenIndex]] at `indexDir`,
-    * filing it under the WAL-pinned micro-batch id as the run id.
-    *
-    * Failure semantics: `foreachBatch` is at-least-once — a batch that
-    * dies after (some of) its index writes re-runs, re-tokenizes the
-    * SAME file set (batch ids are WAL-pinned) and appends bit-identical
-    * rows under the same run id, which is precisely the redelivery
-    * case every TokenIndex read path already absorbs (per-(run, tok)
-    * max df, distinct-intersect verify) and `compact` later folds
-    * away. A crash BETWEEN the index's four table writes is likewise
-    * healed by the re-run: the partial tables gain their missing rows
-    * and the duplicated ones collapse on read.
-    */
-  def tokenIndexAppendStream(
-      spark: SparkSession,
-      inputDir: String,
-      schema: org.apache.spark.sql.types.StructType,
-      idCol: String,
-      textCol: String,
-      indexDir: String,
-      checkpointDir: String,
-      metaCols: Seq[String] = Nil): StreamingQuery =
+      onBatch: (DataFrame, Long) => Unit): StreamingQuery =
     spark.readStream.schema(schema).parquet(inputDir)
       .writeStream
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // batchId + 1: run id 0 belongs to the pre-stream ingest (a
-        // build/bootstrap append), and per-run dedup on the read paths
-        // assumes one run id = one batch CONTENT — a stream's batch 0
-        // colliding with a bootstrap run 0 would break that. The
-        // stream owns ids ≥ 1 within its checkpoint lineage; callers
-        // interleaving MANUAL appends with a live stream must keep
-        // their ids out of the stream's range (use 0 or negatives).
-        // metaCols must match the index's (filtered probes read the
-        // columns every append stored).
-        graft.operators.TokenIndex.append(batch, idCol, textCol, indexDir,
-          batchId + 1, metaCols)
-      }
+      .foreachBatch((batch: DataFrame, batchId: Long) => onBatch(batch, batchId + 1))
       .start()
-
-  /** Incremental IMAGE-SIGNATURE state ingest as an `AvailableNow`
-    * stream — the [[tokenIndexAppendStream]] cadence for the
-    * perceptual-dedup state (round 17): each invocation decodes ONLY
-    * the new image files, appends their 8-byte dHash rows
-    * (`Dedup.imageSignatures`) under the WAL-pinned batch id, and
-    * terminates; probes run [[graft.operators.Dedup.imageNearDuplicatesVsState]]
-    * against the accumulated state and never re-decode the corpus.
-    *
-    * Redelivery: a replayed batch appends bit-identical (id, sig,
-    * batch_id) rows — the vs-state verdict is multiplicity-blind
-    * (distinct-signature collapse + min-id argmin), and
-    * `compactSignatureState(versionCol = "batch_id")` folds the
-    * duplicates at maintenance time. `batchId + 1` for the same
-    * bootstrap-run-0 reason as [[tokenIndexAppendStream]].
-    */
-  def imageSignatureStream(
-      spark: SparkSession,
-      inputDir: String,
-      schema: org.apache.spark.sql.types.StructType,
-      idCol: String,
-      bytesCol: String,
-      stateDir: String,
-      checkpointDir: String): StreamingQuery =
-    appendStateStream(spark, inputDir, schema, stateDir, checkpointDir)(
-      // plain dHash rows: probe this state with the default
-      // (non-canonical) signature form, the two never mix in one table
-      (batch, batchId) => graft.operators.Dedup
-        .imageSignatures(batch, idCol, bytesCol)
-        .withColumn("batch_id", lit(batchId + 1)))
-
-  /** Incremental ORIENTED-VERIFIED image state ingest — the
-    * [[imageSignatureStream]] cadence for the stored-evidence state
-    * (round 19): each invocation decodes ONLY the new images and
-    * appends their `Dedup.imageOrientedSignatures` rows (8 sigs + the
-    * 2304-byte grid blob, one decode each) under the WAL-pinned batch
-    * id; probes run
-    * [[graft.operators.Dedup.imageNearDuplicatesOrientedVerifiedVsState]]
-    * and verify candidates from the STORED blobs without re-decoding
-    * the archive. Redelivery-idempotent like every sibling.
-    */
-  def imageOrientedSignatureStream(
-      spark: SparkSession,
-      inputDir: String,
-      schema: org.apache.spark.sql.types.StructType,
-      idCol: String,
-      bytesCol: String,
-      stateDir: String,
-      checkpointDir: String): StreamingQuery =
-    appendStateStream(spark, inputDir, schema, stateDir, checkpointDir)(
-      (batch, batchId) => graft.operators.Dedup
-        .imageOrientedSignatures(batch, idCol, bytesCol)
-        .withColumn("batch_id", lit(batchId + 1)))
-
-  /** Incremental VIDEO-SIGNATURE state ingest — the
-    * [[imageSignatureStream]] cadence for the sequence-signature
-    * family (round 19): each invocation demuxes ONLY the new clips,
-    * appends their per-keyframe canonical rows
-    * (`Dedup.videoSignatures` — degenerate flat-frame signatures
-    * excluded) under the WAL-pinned batch id, and terminates; probes
-    * run [[graft.operators.Dedup.videoNearDuplicatesVsState]] and
-    * never re-demux the archive. Redelivery: replayed batches append
-    * bit-identical (id, frame_idx, sig, batch_id) rows — verdicts are
-    * multiplicity-blind and `compactSignatureStateKeys(Seq(id,
-    * "frame_idx"), versionCol = "batch_id")` folds duplicates at
-    * maintenance time.
-    */
-  def videoSignatureStream(
-      spark: SparkSession,
-      inputDir: String,
-      schema: org.apache.spark.sql.types.StructType,
-      idCol: String,
-      bytesCol: String,
-      stateDir: String,
-      checkpointDir: String): StreamingQuery =
-    appendStateStream(spark, inputDir, schema, stateDir, checkpointDir)(
-      (batch, batchId) => graft.operators.Dedup
-        .videoSignatures(batch, idCol, bytesCol)
-        .withColumn("batch_id", lit(batchId + 1)))
-
-  /** The audio sibling of [[videoSignatureStream]]: per-window
-    * fingerprint rows (`Dedup.audioSignatures`, static-spectrum
-    * degenerates excluded) streamed into the vs-state table, with the
-    * window geometry [[graft.operators.Dedup.audioNearDuplicatesVsState]]
-    * probes with (`Dedup.AudioWindow`, `AudioMaxWindows`, `AudioHop`).
-    */
-  def audioSignatureStream(
-      spark: SparkSession,
-      inputDir: String,
-      schema: org.apache.spark.sql.types.StructType,
-      idCol: String,
-      bytesCol: String,
-      stateDir: String,
-      checkpointDir: String): StreamingQuery =
-    appendStateStream(spark, inputDir, schema, stateDir, checkpointDir)(
-      (batch, batchId) => graft.operators.Dedup
-        .audioSignatures(batch, idCol, bytesCol)
-        .withColumn("batch_id", lit(batchId + 1)))
-
-  /** Incremental VECTOR-INDEX ingest as an `AvailableNow` stream — the
-    * [[tokenIndexAppendStream]] contract for the IVF index: each
-    * invocation assigns only the new corpus files against the FROZEN
-    * centroids and appends their postings (plus the per-run drift
-    * stats row) under the WAL-pinned batch id.
-    *
-    * Requires a BUILT index: `VectorIndex.build` once on a
-    * representative sample, then stream appends forever — re-build
-    * when [[graft.operators.VectorIndex.assignmentDrift]] sustains
-    * past the trigger. Redelivery: assignment is a deterministic pure
-    * projection, so a re-run batch appends bit-identical postings and
-    * an identical stats row; the probe-side (query, neighbor) dedup
-    * and the drift read's per-run max absorb both.
-    */
-  def vectorIndexAppendStream(
-      spark: SparkSession,
-      inputDir: String,
-      schema: org.apache.spark.sql.types.StructType,
-      idCol: String,
-      embCol: String,
-      indexDir: String,
-      checkpointDir: String,
-      metaCols: Seq[String] = Nil): StreamingQuery =
-    spark.readStream.schema(schema).parquet(inputDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // batchId + 1 for the same reason as tokenIndexAppendStream —
-        // and doubly load-bearing here: run 0 is build's training
-        // corpus AND assignmentDrift's baseline row; a stream batch 0
-        // merging into it under the read's per-run max would corrupt
-        // the drift baseline itself. metaCols must match the index's
-        // (a filtered probe reads the columns every append stored).
-        graft.operators.VectorIndex.append(batch, idCol, embCol, indexDir,
-          batchId + 1, metaCols)
-      }
-      .start()
-
-  /** Streamed TAKEDOWNS for the persisted indexes — the ingest side of
-    * the r16 tombstone contract: takedown feeds (DMCA queues, abuse
-    * reports, dataset-fix lists) arrive continuously, so the delete
-    * ledger accepts the same `AvailableNow` checkpointed cadence the
-    * corpus does. Each micro-batch of ids appends to the ledger of
-    * EVERY index in `indexDirs` (one feed usually serves both the
-    * token and vector index over the same corpus); probes exclude the
-    * ids from the moment the batch commits, and the next compact makes
-    * them physical. Redelivery is free: delete() appends distinct-id
-    * rows and every ledger consumer is multiplicity-blind, so a
-    * re-run batch is a no-op by construction — no run-id bookkeeping
-    * needed (the contrast with the counting state families). One
-    * caveat since the vector ledger became horizon-aware (r17): this
-    * stream lets delete() DERIVE each batch's asof_run from the index,
-    * which is exact for pure takedown feeds; if the same corpus also
-    * takes UPSERT appends, a crash-replayed delete batch could
-    * re-derive a horizon above an interleaved re-append — sequence
-    * upserts through one pipeline (delete with an explicit `asofRun`,
-    * then append) instead of racing the two streams.
-    *
-    * `forToken`/`forVector` pick which delete each dir gets; pass the
-    * same dir list and both flags for co-indexed corpora.
-    */
-  def indexDeleteStream(
-      spark: SparkSession,
-      inputDir: String,
-      schema: org.apache.spark.sql.types.StructType,
-      idCol: String,
-      tokenIndexDirs: Seq[String],
-      vectorIndexDirs: Seq[String],
-      checkpointDir: String): StreamingQuery = {
-    require(tokenIndexDirs.nonEmpty || vectorIndexDirs.nonEmpty,
-      "indexDeleteStream: at least one index dir")
-    spark.readStream.schema(schema).parquet(inputDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        tokenIndexDirs.foreach(d =>
-          graft.operators.TokenIndex.delete(batch, idCol, d))
-        vectorIndexDirs.foreach(d =>
-          graft.operators.VectorIndex.delete(batch, idCol, d))
-      }
-      .start()
-  }
-
-  /** Streaming dedup on a natural key with bounded state — the streaming
-    * form of the reference's `(kode, minggu, file)` keyset dedup.
-    */
-  def dedupStream(events: DataFrame, tsCol: String, keyCols: Seq[String], watermark: String): DataFrame =
-    events.withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark(keyCols.head, keyCols.tail: _*)
-
-  /** Stream-stream INNER equi-join with an event-time interval predicate:
-    * each left row matches right rows of the same key whose timestamp
-    * falls in `[leftTs - lookback, leftTs]` — the canonical streaming
-    * enrichment (events joined to the dimension updates that preceded
-    * them). Both sides carry watermarks and the join condition bounds
-    * event time on BOTH inputs, which is exactly what lets Spark
-    * garbage-collect join state: a right row is dropped from state once
-    * the left watermark passes `rightTs + lookback`, so state is bounded
-    * at any scale. Inner-join matches emit as soon as both rows arrive
-    * (no watermark wait); only state cleanup is watermark-driven.
-    *
-    * Key/timestamp column names must differ between the two inputs
-    * (rename before calling) — the condition is built by name.
-    */
-  def enrichByIntervalJoin(
-      events: DataFrame, evTs: String, evKey: String,
-      updates: DataFrame, upTs: String, upKey: String,
-      lookback: String, watermark: String): DataFrame =
-    events.withWatermark(evTs, watermark)
-      .join(
-        updates.withWatermark(upTs, watermark),
-        expr(s"$evKey = $upKey AND $upTs >= $evTs - INTERVAL $lookback AND $upTs <= $evTs"))
 
   /** False-positive rate of [[decontaminateStream]]'s Bloom filter. */
   val BloomFpp = 1e-4
@@ -560,64 +127,6 @@ object StreamOps {
     docs.filter(coalesce(!hit, lit(true)))
   }
 
-  /** Gap-based session aggregation via the BUILT-IN `session_window` —
-    * the idiomatic form when the per-session output is an aggregate:
-    * Spark owns session merge, state, and watermark eviction; zero custom
-    * state code; identical API in batch and streaming. Use
-    * [[sessionizeStream]] only when per-event logic inside the session is
-    * genuinely required — this form keeps the whole plan inside the
-    * built-in stateful operator (preferred at scale: state store format
-    * is upgrade-stable and AQE/metrics aware).
-    *
-    * Session bounds follow Spark semantics: start = first event ts,
-    * end = last event ts + gap.
-    */
-  def sessionWindowCounts(events: DataFrame, tsCol: String, keyCol: String,
-      gap: String, watermark: String): DataFrame =
-    events.withWatermark(tsCol, watermark)
-      .groupBy(session_window(col(tsCol), gap), col(keyCol))
-      .agg(count(lit(1)).as("n"))
-      .select(col(keyCol),
-        unix_micros(col("session_window.start")).as("session_start_us"),
-        unix_micros(col("session_window.end")).as("session_end_us"),
-        col("n"))
-
-  /** Checkpointed incremental upload: the streaming front half of the
-    * reference's rerun contract wired to its upload back half. Each
-    * `AvailableNow` run discovers only files the checkpoint has not seen,
-    * and every microbatch flows through
-    * [[graft.sources.IdempotentBlobSink.upload]] via `foreachBatch`. The
-    * checkpoint gives at-least-once batch delivery; the sink's path-keyed
-    * upsert makes redelivery idempotent — together, effective
-    * exactly-once to the remote store (the reference achieves the same
-    * with its processed-keyset skip + sha-conditioned overwrite,
-    * `/root/reference/test.py:99-111,70-81`).
-    *
-    * `transform` must produce the (path, content) columns; `handleResults`
-    * receives the per-row (path, url, error) outcome frame of each batch
-    * (default: materialize-and-discard — the upload IS the effect).
-    */
-  def incrementalUpload(
-      spark: SparkSession,
-      inputDir: String,
-      schema: org.apache.spark.sql.types.StructType,
-      transform: DataFrame => DataFrame,
-      pathCol: String, contentCol: String,
-      storeFactory: () => graft.sources.IdempotentBlobSink.BlobStore,
-      checkpointDir: String,
-      handleResults: DataFrame => Unit =
-        _.write.mode("overwrite").format("noop").save()): StreamingQuery = {
-    val in = spark.readStream.schema(schema).parquet(inputDir)
-    transform(in).writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        handleResults(
-          graft.sources.IdempotentBlobSink.upload(batch, pathCol, contentCol, storeFactory))
-      }
-      .start()
-  }
-
   final case class SessionInput(user_id: Long, ts: Timestamp, event_id: Long)
   final case class SessionState(sessionStartUs: Long, lastUs: Long, n: Long)
   final case class SessionsState(open: List[SessionState])
@@ -653,7 +162,12 @@ object StreamOps {
     * regardless of wall-clock scheduling, and rows later than
     * [[SessionLateness]] are dropped by the watermark instead of double-emitting
     * a sealed session. The batch analog is Relational.sessionize; this
-    * is the always-on form with per-key state.
+    * is the always-on form with per-key state. When the per-session
+    * output is only an aggregate, the built-in
+    * `groupBy(session_window(ts, gap), key)` is the better form: Spark
+    * owns session merge, state and eviction, and its state store format
+    * is upgrade-stable. Use this one when per-event logic inside the
+    * session is genuinely required.
     */
   def sessionizeStream(events: Dataset[SessionInput], gapUs: Long): Dataset[SessionOut] =
     sessionizeStream(events, gapUs, SessionLateness)

@@ -32,7 +32,12 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Timestamp, String, Double)]
     val df = input.toDF().toDF("ts", "event_type", "value")
-    val agg = StreamOps.windowedCounts(df, "ts", "event_type", "10 minutes", "30 minutes")
+    // late rows beyond the watermark are dropped and window state is
+    // garbage-collected: bounded state at any scale
+    val agg = df.withWatermark("ts", "30 minutes")
+      .groupBy(window(col("ts"), "10 minutes"), col("event_type"))
+      .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
+      .select(col("window.start").as("wstart"), col("event_type"), col("n"), col("sum_value"))
     val q = agg.writeStream.format("memory").queryName("wc").outputMode(OutputMode.Append()).start()
     try {
       input.addData((ts(0), "a", 1.0), (ts(5), "a", 2.0), (ts(12), "b", 3.0))
@@ -50,7 +55,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Timestamp, String)]
     val df = input.toDF().toDF("ts", "k")
-    val q = StreamOps.dedupStream(df, "ts", Seq("k"), "1 hour")
+    val q = df.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark("k")
       .writeStream.format("memory").queryName("dd").outputMode(OutputMode.Append()).start()
     try {
       input.addData((ts(0), "x"), (ts(1), "x"), (ts(2), "y"))
@@ -120,10 +125,12 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val events = MemoryStream[(Long, Timestamp, Double)]
     val updates = MemoryStream[(Long, Timestamp, String)]
-    val joined = StreamOps.enrichByIntervalJoin(
-      events.toDF().toDF("user_id", "ev_ts", "value"), "ev_ts", "user_id",
-      updates.toDF().toDF("up_user", "up_ts", "tag"), "up_ts", "up_user",
-      lookback = "10 minutes", watermark = "1 hour")
+    // both sides carry watermarks and the condition bounds event time on
+    // both inputs, which is what lets Spark garbage-collect join state
+    val joined = events.toDF().toDF("user_id", "ev_ts", "value")
+      .withWatermark("ev_ts", "1 hour")
+      .join(updates.toDF().toDF("up_user", "up_ts", "tag").withWatermark("up_ts", "1 hour"),
+        expr("user_id = up_user AND up_ts >= ev_ts - INTERVAL 10 minutes AND up_ts <= ev_ts"))
     val q = joined.select("user_id", "value", "tag")
       .writeStream.format("memory").queryName("enr").outputMode(OutputMode.Append()).start()
     try {
@@ -339,7 +346,13 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Timestamp, Long)]
     val df = input.toDF().toDF("ts", "user_id")
-    val q = StreamOps.sessionWindowCounts(df, "ts", "user_id", "30 minutes", "0 seconds")
+    val q = df.withWatermark("ts", "0 seconds")
+      .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
+      .agg(count(lit(1)).as("n"))
+      .select(col("user_id"),
+        unix_micros(col("session_window.start")).as("session_start_us"),
+        unix_micros(col("session_window.end")).as("session_end_us"),
+        col("n"))
       .writeStream.format("memory").queryName("sw").outputMode(OutputMode.Append()).start()
     try {
       // user 1: two events 5min apart (one session), then one 95min later
@@ -366,16 +379,24 @@ class StreamingSpec extends SparkSpec {
       org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("v", org.apache.spark.sql.types.StringType)))
 
+    // Spark's own checkpointed parquet sink: its commit log makes the
+    // output exactly-once, no foreachBatch needed
+    def start() = spark.readStream.schema(schema).parquet(inDir)
+      .withColumn("u", upper(col("v")))
+      .writeStream
+      .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", ckDir)
+      .format("parquet")
+      .option("path", outDir)
+      .start()
     Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.mode("append").parquet(inDir)
-    val q1 = StreamOps.availableNowPipeline(spark, inDir, schema,
-      df => df.withColumn("u", upper(col("v"))), outDir, ckDir)
+    val q1 = start()
     q1.awaitTermination()
     assert(spark.read.parquet(outDir).count() == 2)
 
     // second run with one new file → only the delta is appended
     Seq((3L, "c")).toDF("id", "v").write.mode("append").parquet(inDir)
-    val q2 = StreamOps.availableNowPipeline(spark, inDir, schema,
-      df => df.withColumn("u", upper(col("v"))), outDir, ckDir)
+    val q2 = start()
     q2.awaitTermination()
     val out = spark.read.parquet(outDir).select("id", "u").as[(Long, String)].collect().toSet
     assert(out == Set((1L, "A"), (2L, "B"), (3L, "C")))
@@ -389,8 +410,9 @@ class StreamingSpec extends SparkSpec {
       org.apache.spark.sql.types.StructField("k", org.apache.spark.sql.types.StringType),
       org.apache.spark.sql.types.StructField("v", org.apache.spark.sql.types.LongType)))
     val Sk = graft.operators.Sketches
-    def run(): Unit = StreamOps.hllDistinctStream(
-      spark, inDir, schema, Seq("k"), "v", stDir, ckDir).awaitTermination()
+    def run(): Unit = StreamOps.availableNow(spark, inDir, schema, ckDir) { (b, _) =>
+      Sk.hllDistinctState(b, Seq("k"), col("v")).write.mode("append").parquet(stDir)
+    }.awaitTermination()
     def estimates(): Map[String, Double] =
       Sk.hllStateEstimates(spark, stDir, Seq("k"))
         .select("k", "distinct_est").as[(String, Double)].collect().toMap
@@ -424,7 +446,7 @@ class StreamingSpec extends SparkSpec {
     // relative gap of it (register-level agreement, modulo the
     // documented HIP jitter)
     val batchEst = Sk.hllEstimate(Sk.hllDistinctState(
-        (batch1 ++ batch2).toDF("k", "v"), Seq("k"), col("v"), 12))
+        (batch1 ++ batch2).toDF("k", "v"), Seq("k"), col("v")))
       .select("k", "distinct_est").as[(String, Double)].collect().toMap
     for (k <- Seq("a", "b"))
       assert(math.abs(est(k) - batchEst(k)) / batchEst(k) < 0.02,
@@ -455,8 +477,10 @@ class StreamingSpec extends SparkSpec {
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("v", org.apache.spark.sql.types.StringType)))
     val Sk = graft.operators.Sketches
-    def run(): Unit = StreamOps.frequentItemsStream(
-      spark, inDir, schema, "v", stDir, ckDir, m = 8).awaitTermination()
+    def run(): Unit = StreamOps.availableNow(spark, inDir, schema, ckDir) { (b, runId) =>
+      Sk.frequentItems(b, col("v"), 8).withColumn("run_id", lit(runId))
+        .write.mode("append").parquet(stDir)
+    }.awaitTermination()
     def summary(): (Map[String, Long], Long) = {
       val rows = Sk.mgStateSummary(spark, stDir).collect()
       val delta = rows.head.getLong(2)
@@ -513,6 +537,65 @@ class StreamingSpec extends SparkSpec {
     assert(summary() == snapshot, "compaction must preserve the summary exactly")
   }
 
+  test("crash and retry through availableNow: the uncommitted batch re-runs under its run id, MG state reads like a clean run") {
+    import scala.jdk.CollectionConverters._
+    val base = Files.createTempDirectory("crashstream").toString
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("v", org.apache.spark.sql.types.StringType)))
+    val Sk = graft.operators.Sketches
+    val crash = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    // MG state writer that appends its delta and THEN dies once: the
+    // at-least-once window a real crash between write and commit opens.
+    // foreachBatch bodies run on the driver, so the flag and the log
+    // are plain driver-side objects
+    def run(inDir: String, ckDir: String, stDir: String): Unit =
+      StreamOps.availableNow(spark, inDir, schema, ckDir) { (b, runId) =>
+        seen.add(runId)
+        Sk.frequentItems(b, col("v"), 8).withColumn("run_id", lit(runId))
+          .write.mode("append").parquet(stDir)
+        if (crash.compareAndSet(true, false))
+          throw new IllegalStateException("injected crash after the state append")
+      }.awaitTermination()
+    def summary(stDir: String): Set[(String, Long, Long)] =
+      Sk.mgStateSummary(spark, stDir).as[(String, Long, Long)].collect().toSet
+    // fewer distinct items than counters: every run's MG sketch is exact
+    // and order-insensitive, so only redelivery could move the read
+    val batch1 = Seq.fill(40)("hot") ++ Seq.fill(25)("warm") ++ Seq("rare1", "rare2")
+    val batch2 = Seq.fill(30)("hot") ++ Seq.fill(20)("cold")
+    val (inDir, ckDir, stDir) = (s"$base/in", s"$base/ck", s"$base/state")
+    val (cleanIn, cleanCk, cleanSt) = (s"$base/clean_in", s"$base/clean_ck", s"$base/clean_state")
+
+    batch1.toDF("v").write.mode("append").parquet(inDir)
+    crash.set(true)
+    val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      run(inDir, ckDir, stDir)
+    }
+    assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("injected crash")),
+      s"the first run must fail with the injected crash: $ex")
+    val afterCrash = spark.read.parquet(stDir).count()
+    assert(afterCrash > 0, "the crashed attempt appended its delta before dying")
+    // the rerun re-executes the uncommitted batch under the SAME run id
+    run(inDir, ckDir, stDir)
+    assert(seen.asScala.toList == List(1L, 1L), s"run ids seen: $seen")
+    assert(spark.read.parquet(stDir).count() == 2 * afterCrash,
+      "the retry re-appended the whole delta: the state holds it twice")
+    batch2.toDF("v").write.mode("append").parquet(inDir)
+    run(inDir, ckDir, stDir)
+    assert(seen.asScala.toList == List(1L, 1L, 2L), s"run ids seen: $seen")
+
+    // a clean run of the same two batches into a second dir
+    batch1.toDF("v").write.mode("append").parquet(cleanIn)
+    run(cleanIn, cleanCk, cleanSt)
+    batch2.toDF("v").write.mode("append").parquet(cleanIn)
+    run(cleanIn, cleanCk, cleanSt)
+    val clean = summary(cleanSt)
+    assert(clean.map(r => (r._1, r._2)) == Set(("hot", 70L), ("warm", 25L), ("cold", 20L),
+      ("rare1", 1L), ("rare2", 1L)), s"clean run: $clean")
+    assert(summary(stDir) == clean, "crash + retry must read exactly like the clean run")
+  }
+
   test("streaming histogram state: incremental quantiles equal a full rescan exactly") {
     val base = Files.createTempDirectory("histstream").toString
     val inDir = s"$base/in"; val ckDir = s"$base/ck"; val stDir = s"$base/state"
@@ -522,8 +605,10 @@ class StreamingSpec extends SparkSpec {
       org.apache.spark.sql.types.StructField("v", org.apache.spark.sql.types.LongType)))
     val Sk = graft.operators.Sketches
     val qs = Seq(0.5, 0.9, 0.99)
-    def run(): Unit = StreamOps.histQuantileStream(
-      spark, inDir, schema, Seq("k"), "v", stDir, ckDir).awaitTermination()
+    def run(): Unit = StreamOps.availableNow(spark, inDir, schema, ckDir) { (b, runId) =>
+      Sk.histDeltaState(b, Seq("k"), col("v")).withColumn("run_id", lit(runId))
+        .write.mode("append").parquet(stDir)
+    }.awaitTermination()
     def read(): Map[(String, Double), Long] =
       Sk.histStateQuantiles(spark, stDir, Seq("k"), qs)
         .select("k", "q", "value").as[(String, Double, Long)].collect()
@@ -572,8 +657,10 @@ class StreamingSpec extends SparkSpec {
       org.apache.spark.sql.types.StructField("v", org.apache.spark.sql.types.DoubleType)))
     val Sk = graft.operators.Sketches
     val qs = Seq(0.5, 0.95)
-    def run(): Unit = StreamOps.kllQuantileStream(
-      spark, inDir, schema, Seq("k"), "v", stDir, ckDir).awaitTermination()
+    def run(): Unit = StreamOps.availableNow(spark, inDir, schema, ckDir) { (b, runId) =>
+      Sk.kllDeltaState(b, Seq("k"), col("v")).withColumn("run_id", lit(runId))
+        .write.mode("append").parquet(stDir)
+    }.awaitTermination()
     def read(): Map[(String, Double), (Double, Long)] =
       Sk.kllStateQuantiles(spark, stDir, Seq("k"), qs, 200)
         .select("k", "q", "value", "n").as[(String, Double, Double, Long)]
@@ -644,8 +731,10 @@ class StreamingSpec extends SparkSpec {
       org.apache.spark.sql.types.StructField("v", org.apache.spark.sql.types.StringType)))
     val Sk = graft.operators.Sketches
     val k = 64
-    def run(): Unit = StreamOps.kmvDistinctStream(
-      spark, inDir, schema, "v", stDir, ckDir, k).awaitTermination()
+    def run(): Unit = StreamOps.availableNow(spark, inDir, schema, ckDir) { (b, runId) =>
+      Sk.kmvSketch(b, col("v"), k).withColumn("run_id", lit(runId))
+        .write.mode("append").parquet(stDir)
+    }.awaitTermination()
     // run 1: 200 distinct tokens; run 2: 100 overlapping + 150 fresh
     val batch1 = (1 to 200).map(i => s"tok$i")
     batch1.toDF("v").write.mode("append").parquet(inDir)
@@ -661,9 +750,9 @@ class StreamingSpec extends SparkSpec {
       .collect().map(_.getLong(0))
     assert(merged.toSeq == oneShot.toSeq, "merged state must equal the one-shot sketch")
 
-    // provenance: maxRunId = 0 reconstructs run 1's sketch exactly,
+    // provenance: maxRunId = 1 reconstructs run 1's sketch exactly,
     // and the before/after estimates answer the newness question
-    val before = Sk.kmvStateSketch(spark.read.parquet(stDir), k, maxRunId = 0L)
+    val before = Sk.kmvStateSketch(spark.read.parquet(stDir), k, maxRunId = 1L)
     val run1Only = Sk.kmvSketch(batch1.toDF("v"), col("v"), k)
       .collect().map(_.getLong(0))
     assert(before.toSeq == run1Only.toSeq, "maxRunId must reconstruct the historical sketch")
@@ -682,13 +771,13 @@ class StreamingSpec extends SparkSpec {
       "compaction must be lossless for the union sketch")
     // folds carry the HORIZON run id, so provenance reads AT or after
     // it stay exact after compaction...
-    val atHorizon = Sk.kmvStateSketch(spark.read.parquet(stDir), k, maxRunId = 1L)
+    val atHorizon = Sk.kmvStateSketch(spark.read.parquet(stDir), k, maxRunId = 2L)
     assert(atHorizon.toSeq == merged.toSeq,
       "post-compaction read at the horizon must stay exact")
     // ...while reads reaching BEHIND the horizon refuse loudly instead
     // of silently answering every newness question with a partial set
     val ex = intercept[IllegalArgumentException] {
-      Sk.kmvStateSketch(spark.read.parquet(stDir), k, maxRunId = 0L)
+      Sk.kmvStateSketch(spark.read.parquet(stDir), k, maxRunId = 1L)
     }
     assert(ex.getMessage.contains("behind the"), s"wrong refusal: ${ex.getMessage}")
 
@@ -721,10 +810,15 @@ class StreamingSpec extends SparkSpec {
       org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("v", org.apache.spark.sql.types.StringType)))
     UploadRegistry.reset()
-    def run(): Unit = StreamOps.incrementalUpload(
-      spark, inDir, schema,
-      df => df.select(concat(lit("docs/"), col("id")).as("path"), col("v").cast("binary").as("content")),
-      "path", "content", () => new UploadRegistry.Store, ckDir).awaitTermination()
+    // the checkpoint delivers each new file at least once, the sink's
+    // path-keyed upsert makes redelivery idempotent; the noop write
+    // materializes the per-row outcome frame (the upload IS the effect)
+    def run(): Unit = StreamOps.availableNow(spark, inDir, schema, ckDir) { (b, _) =>
+      graft.sources.IdempotentBlobSink.upload(
+          b.select(concat(lit("docs/"), col("id")).as("path"), col("v").cast("binary").as("content")),
+          "path", "content", () => new UploadRegistry.Store)
+        .write.mode("overwrite").format("noop").save()
+    }.awaitTermination()
 
     Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.mode("append").parquet(inDir)
     run()
@@ -750,8 +844,9 @@ class StreamingSpec extends SparkSpec {
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("text", org.apache.spark.sql.types.StringType)))
-    def run(): Unit = StreamOps.tokenIndexAppendStream(
-      spark, inDir, schema, "doc_id", "text", idxDir, ckDir).awaitTermination()
+    def run(): Unit = StreamOps.availableNow(spark, inDir, schema, ckDir) { (b, runId) =>
+      TokenIndex.append(b, "doc_id", "text", idxDir, runId)
+    }.awaitTermination()
     val b1 = Seq((1L, "quick brown fox jumps high"), (2L, "lazy dog sleeps all day"),
       (3L, "quick dog runs far")).toDF("doc_id", "text")
     val b2 = Seq((4L, "brown dog barks loud"), (5L, "fox and dog play quick games"))
@@ -807,9 +902,11 @@ class StreamingSpec extends SparkSpec {
     VectorIndex.build(corpus, "id", "emb", vecDir, k = 2, maxIter = 3)
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType)))
-    def run(): Unit = StreamOps.indexDeleteStream(
-      spark, inDir, schema, "id", Seq(tokDir), Seq(vecDir), ckDir)
-      .awaitTermination()
+    // one takedown feed serves both indexes over the same corpus
+    def run(): Unit = StreamOps.availableNow(spark, inDir, schema, ckDir) { (b, _) =>
+      TokenIndex.delete(b, "id", tokDir)
+      VectorIndex.delete(b, "id", vecDir)
+    }.awaitTermination()
     val probes = Seq((10L, "beta gamma")).toDF("pid", "ptext")
     def tokHits(): Seq[Long] =
       TokenIndex.containmentJoinIndexed(spark, probes, "pid", "ptext", tokDir, 1.0)
@@ -855,8 +952,9 @@ class StreamingSpec extends SparkSpec {
       org.apache.spark.sql.types.StructField("vec_id", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("embedding",
         org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType))))
-    def run(): Unit = StreamOps.vectorIndexAppendStream(
-      spark, inDir, schema, "vec_id", "embedding", idxDir, ckDir).awaitTermination()
+    def run(): Unit = StreamOps.availableNow(spark, inDir, schema, ckDir) { (b, runId) =>
+      VectorIndex.append(b, "vec_id", "embedding", idxDir, runId)
+    }.awaitTermination()
     // build once on a bootstrap sample (run 0 = the drift baseline),
     // then stream the growing corpus
     val boot = SynthEmbeddings.clustered(spark, 600, dim = 16, clusters = 8,
@@ -957,9 +1055,10 @@ class StreamingSpec extends SparkSpec {
     def imgs(seeds: Seq[Long], variant: Int, idOff: Long = 0L) =
       seeds.map(s => (s + idOff, ImageFixtures.fixtureBytes(s, variant)))
         .toDF("img_id", "content")
-    def run(): Unit = StreamOps.imageSignatureStream(
-      spark, inDir, schema, "img_id", "content", stDir, ckDir)
-      .awaitTermination()
+    def run(): Unit = StreamOps.availableNow(spark, inDir, schema, ckDir) { (b, runId) =>
+      Dedup.imageSignatures(b, "img_id", "content").withColumn("batch_id", lit(runId))
+        .write.mode("append").parquet(stDir)
+    }.awaitTermination()
     imgs(Seq(0L, 10L, 20L), 0).write.mode("append").parquet(inDir)
     run()
     val after1 = spark.read.parquet(stDir).count()
@@ -998,8 +1097,10 @@ class StreamingSpec extends SparkSpec {
     // AUDIO lifecycle
     val aIn = s"$base/a_in"; val aCk = s"$base/a_ck"; val aSt = s"$base/a_state"
     Files.createDirectories(java.nio.file.Paths.get(aIn))
-    def runA(): Unit = StreamOps.audioSignatureStream(
-      spark, aIn, schema, "clip_id", "content", aSt, aCk).awaitTermination()
+    def runA(): Unit = StreamOps.availableNow(spark, aIn, schema, aCk) { (b, runId) =>
+      Dedup.audioSignatures(b, "clip_id", "content").withColumn("batch_id", lit(runId))
+        .write.mode("append").parquet(aSt)
+    }.awaitTermination()
     Seq(10L -> AvWriter.fixtureWav(10L, 0), 20L -> AvWriter.fixtureWav(20L, 0))
       .toDF("clip_id", "content").write.mode("append").parquet(aIn)
     runA()
@@ -1037,8 +1138,10 @@ class StreamingSpec extends SparkSpec {
         org.apache.spark.sql.types.BinaryType)))
     Seq(1L -> graft.multimodal.ImageFixtures.fixtureBytes(11L, 0))
       .toDF("img_id", "content").write.mode("append").parquet(oIn)
-    StreamOps.imageOrientedSignatureStream(
-      spark, oIn, oSchema, "img_id", "content", oSt, oCk).awaitTermination()
+    StreamOps.availableNow(spark, oIn, oSchema, oCk) { (b, runId) =>
+      Dedup.imageOrientedSignatures(b, "img_id", "content").withColumn("batch_id", lit(runId))
+        .write.mode("append").parquet(oSt)
+    }.awaitTermination()
     val oState = spark.read.parquet(oSt)
     assert(oState.count() == 1 &&
       oState.head().getAs[Array[Byte]]("grids").length == 2304)
@@ -1054,8 +1157,10 @@ class StreamingSpec extends SparkSpec {
     Files.createDirectories(java.nio.file.Paths.get(vIn))
     Seq(1L -> AvWriter.fixtureClip(11L, 0.9f))
       .toDF("clip_id", "content").write.mode("append").parquet(vIn)
-    StreamOps.videoSignatureStream(
-      spark, vIn, schema, "clip_id", "content", vSt, vCk).awaitTermination()
+    StreamOps.availableNow(spark, vIn, schema, vCk) { (b, runId) =>
+      Dedup.videoSignatures(b, "clip_id", "content").withColumn("batch_id", lit(runId))
+        .write.mode("append").parquet(vSt)
+    }.awaitTermination()
     assert(spark.read.parquet(vSt).count() == 4, "4 keyframes")
     val vGot = Dedup.videoNearDuplicatesVsState(
         Seq(10L -> AvWriter.fixtureClip(11L, 0.45f)).toDF("clip_id", "content"),

@@ -5,12 +5,14 @@ in a `def` or `case class` parameter list under src/main (a defaulted
 
     python3 tools/knob_census.py [ROOT]           # ROOT defaults to the repo root
     python3 tools/knob_census.py --sites [ROOT]
+    python3 tools/knob_census.py --operators [ROOT]
 
 The first form prints the total, then the count per file. `--sites` prints
 every defaulted parameter (with its [parameter list:position]) and each site
 that overrides it, grouped into src/main, perfbench/src and src/test: a call
 that passes the parameter by name or by position, or a `.copy(field = ...)`
-of a case class that has it. A call is matched by the name it is made
+of a case class that has it. An argument whose text is the default's own
+text sets nothing and is no override site. A call is matched by the name it is made
 through (an `apply` by its object's name) and counts only where it resolves
 to the defining object: a call qualified by a capitalized name (import
 renames and `val X = pkg.Object` aliases resolved) counts for the object of
@@ -19,7 +21,15 @@ one, else for the objects the file imports the name from. Any other
 matching call (one made on a value or an expression, or an unqualified one
 whose name the file neither defines nor imports) is listed on an
 `unresolved:` line under the parameter and enters none of the totals, so no
-site is dropped silently. Stdlib only.
+site is dropped silently.
+
+`--operators` prints the public defs of src/main (not private, protected or
+override, declared in a public object, class or trait body) whose name no
+src/main or perfbench/src code uses outside a declaration, then each with
+the spec files that name it. It is a name scan: comments and string text
+are blanked, so scaladoc is no reference, but an overload that calls its
+sibling reads as referenced. The streaming entry points in
+`OPERATOR_EXEMPT` are left out of the total. Stdlib only.
 """
 import bisect, os, re, sys
 
@@ -130,18 +140,25 @@ def definitions(root):
     return out
 
 
-def arg_override(args, pi, pname):
-    """'named' or 'positional' if this argument list sets parameter `pi`/`pname`."""
+def default_text(p):
+    """The default expression of a defaulted parameter, whitespace-normalized."""
+    return " ".join(re.match(r"^[^=]*:[^=]*=(?!>)(.*)$", p, re.S).group(1).split())
+
+
+def arg_override(args, pi, pname, default=None):
+    """'named' or 'positional' if this argument list sets parameter `pi`/`pname`
+    to anything but its own `default` text (passing the default is no override)."""
     parts = [a for a in split_top(args) if a]
-    positional = 0
+    positional = []
     for a in parts:
-        n = re.match(r"([\w$]+)\s*=(?![=>])", a)
-        if n:
-            if n.group(1) == pname:
-                return "named"
-        else:
-            positional += 1
-    return "positional" if positional > pi and not any(a.endswith("_*") for a in parts) else None
+        n = re.match(r"([\w$]+)\s*=(?![=>])(.*)$", a, re.S)
+        if not n:
+            positional.append(a)
+        elif n.group(1) == pname:
+            return None if " ".join(n.group(2).split()) == default else "named"
+    if len(positional) > pi and not any(a.endswith("_*") for a in parts):
+        return None if " ".join(positional[pi].split()) == default else "positional"
+    return None
 
 
 def imported_names(src):
@@ -202,7 +219,7 @@ def sites(root):
                 resolved = bool(cands) or (qual and qual[0].isupper())
                 for li, args in enumerate(param_lists(src, m.end() - 1)):
                     for d in cands if resolved else ds:
-                        how = d[6] == li and arg_override(args, d[7], d[8])
+                        how = d[6] == li and arg_override(args, d[7], d[8], default_text(d[9]))
                         if how and resolved:
                             found[d].append((g, f"{rel}:{line_of(m.start())}", how))
                         elif how:
@@ -235,10 +252,117 @@ def print_sites(root):
             print("  unresolved: " + ", ".join(unresolved[d]))
 
 
+# Public streaming entry points whose callers are deployments, not graft's
+# own mains: no batch twin exists for them to be called through.
+OPERATOR_EXEMPT = ("StreamOps.availableNow", "StreamOps.decontaminateStream",
+                   "StreamOps.sessionizeStream")
+# Entry points named by the JVM, not by code.
+ENTRY_POINTS = ("main",)
+
+
+def code_text(src):
+    """Comments and the text of string literals blanked, except what an
+    interpolation splices in (`${...}`, `$name`); newlines and offsets kept."""
+    blank = lambda t: re.sub(r"[^\n]", " ", t)
+
+    def literal(m):
+        t, out, last = m.group(0), "", 0
+        for k in re.finditer(r"\$\{[^}\n]*\}|\$[A-Za-z_]\w*", t):
+            out += blank(t[last:k.start()]) + t[k.start():k.end()]
+            last = k.end()
+        return out + blank(t[last:])
+    src = re.sub(r"/\*.*?\*/", lambda m: blank(m.group(0)), src, flags=re.S)
+    src = re.sub(r'"""(?:.|\n)*?"""|"(?:\\.|[^"\\\n])*"', literal, src)
+    return re.sub(r"//[^\n]*", lambda m: blank(m.group(0)), src)
+
+
+def template_bodies(src):
+    """{offset of each `{` that opens an object, class or trait body: True if
+    that declaration is private or protected}. A `{` opens one when the text
+    back to the start of its statement declares a type and is no `new`."""
+    out = {}
+    for i, ch in enumerate(src):
+        if ch != "{":
+            continue
+        depth, j = 0, i - 1
+        while j >= 0:
+            c = src[j]
+            if c in ")]":
+                depth += 1
+            elif c in "([":
+                if depth == 0:
+                    break
+                depth -= 1
+            elif depth == 0 and (c in "{};" or (c == "=" and src[j + 1] not in "=>" and src[j - 1] not in "=!<>")):
+                break
+            j -= 1
+        head = src[j + 1:i]
+        if re.search(r"\b(?:object|class|trait)\s+\w+", head) and not re.search(r"\bnew\b", head):
+            out[i] = bool(re.search(r"\b(?:private|protected)\b", head))
+    return out
+
+
+def public_members(rel, src):
+    """(line, owner, name) of each public, non-override `def` declared directly
+    in an object, class or trait body that is itself public, not in a method."""
+    bodies = template_bodies(src)
+    defs = [(m.start(), m.group(1)) for m in re.finditer(r"\bdef\s+([\w$]+)", src)]
+    out, stack, k = [], [], 0
+    for i, ch in enumerate(src):
+        while k < len(defs) and defs[k][0] == i:
+            pos, name = defs[k]
+            k += 1
+            mods = src[max(src.rfind("\n", 0, pos), src.rfind("{", 0, pos), src.rfind(";", 0, pos)) + 1:pos]
+            if not stack or not all(b in bodies and not bodies[b] for b in stack):
+                continue
+            if re.search(r"\b(?:private|protected|override)\b", mods) or name in ENTRY_POINTS:
+                continue
+            out.append((src.count("\n", 0, pos) + 1, owner_at(src, pos), name))
+        if ch == "{":
+            stack.append(i)
+        elif ch == "}" and stack:
+            stack.pop()
+    return out
+
+
+def operators(root):
+    """[(file, line, Owner.name, spec files naming it)] for each public def in
+    src/main whose name no src/main or perfbench/src code uses outside a
+    declaration (an `apply` counts as used where its object's name is), and
+    the same rows for the exempt ones; scaladoc, comments and string text are
+    no uses."""
+    texts, used = {}, {}
+    for g in GROUPS:
+        for rel in scala_files(root, g):
+            t = code_text(open(os.path.join(root, rel), encoding="utf-8").read())
+            texts[rel] = t
+            for m in re.finditer(r"(?<![\w$])([\w$]+)", t):
+                if not re.search(r"\b(?:def|object|class|trait)\s+$", t[max(0, m.start() - 16):m.start()]):
+                    used.setdefault(m.group(1), set()).add((g, rel))
+    found, exempt = [], []
+    for rel in scala_files(root, "src/main"):
+        for line, owner, name in public_members(rel, texts[rel]):
+            uses = used.get(owner if name == "apply" and owner else name, set())
+            if any(g != "src/test" for g, _ in uses):
+                continue
+            where = f"{owner}.{name}" if owner else name
+            row = (rel, line, where, sorted(r for _, r in uses))
+            (exempt if where in OPERATOR_EXEMPT else found).append(row)
+    return found, exempt
+
+
+def print_operators(root):
+    found, exempt = operators(root)
+    print(f"public defs not referenced outside src/test {len(found)}")
+    for rel, line, where, tests in found:
+        print(f"{rel}:{line}  {where}  src/test: " + (", ".join(os.path.basename(t) for t in tests) or "-"))
+    print("exempt: " + ", ".join(OPERATOR_EXEMPT))
+
 if __name__ == "__main__":
     args = sys.argv[1:]
-    if args[:1] == ["--sites"]:
-        print_sites(args[1] if len(args) > 1 else os.path.join(os.path.dirname(__file__), ".."))
+    if args[:1] in (["--sites"], ["--operators"]):
+        report = print_sites if args[0] == "--sites" else print_operators
+        report(args[1] if len(args) > 1 else os.path.join(os.path.dirname(__file__), ".."))
         sys.exit(0)
     root = args[0] if args else os.path.join(os.path.dirname(__file__), "..")
     counts = {}
