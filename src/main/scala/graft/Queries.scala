@@ -1831,7 +1831,7 @@ object Queries {
     (s, d) => {
       // Z-order (Morton) clustering key over (user bucket, day bucket) —
       // the ingest-side primitive under data-skipping layout
-      // (sources/Layout.writeZOrdered). Pure shift/and/or bit arithmetic,
+      // (sources/Layout.mortonZ). Pure shift/and/or bit arithmetic,
       // integer-exact on any engine: the oracle replays the full
       // parallel-prefix spread, pinning cluster assignment bit-for-bit.
       val ev = Tables.events(s, d).select(
@@ -3093,8 +3093,7 @@ object Queries {
         .join(supp, li("l_suppkey") === supp("s_suppkey"))
         .groupBy(cust("c_nationkey").as("src"), supp("s_nationkey").as("dst"))
         .agg(count(lit(1)).cast("double").as("w"))
-      val pr = Relational.pageRank(edges, "src", "dst", Some("w"),
-        iterations = 10, damping = 0.85)
+      val pr = Relational.pageRank(edges, "src", "dst", Some("w"))
       pr.join(Tables.nation(s, d), pr("node") === col("n_nationkey"))
         .select(col("node"), col("n_name"), round(col("rank"), 6).as("rank"))
         .orderBy(col("node"))

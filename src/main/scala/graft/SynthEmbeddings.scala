@@ -39,7 +39,7 @@ object SynthEmbeddings {
     * repartitioned to the session's parallelism (a LocalRelation would
     * otherwise plan downstream per-row work single-partition).
     */
-  def clustered(spark: SparkSession, n: Int, dim: Int, clusters: Int,
+  private[graft] def clustered(spark: SparkSession, n: Int, dim: Int, clusters: Int,
       noise: Double, seed: Long, pointSeed: Long): DataFrame =
     clustered(spark, n, dim, clusters, noise, seed, pointSeed, idOffset = 0L, shift = 0.0)
 

@@ -16,7 +16,7 @@ object HashFunctions {
     * `minHashFromHashes`, so the string hashing appears once in the plan
     * rather than k times.
     */
-  def hashShingles(shingles: Column): Column =
+  private[graft] def hashShingles(shingles: Column): Column =
     transform(array_distinct(shingles), s => xxhash64(s))
 
   /** Distinct hashed word n-gram shingles computed WITHOUT materializing
@@ -51,7 +51,7 @@ object HashFunctions {
     * lambda invocation, so an inline tokenizer here turns shingling
     * O(tokens) → O(tokens²) per document.
     */
-  def hashedWordShinglesHof(toks: Column, n: Int): Column = {
+  private[graft] def hashedWordShinglesHof(toks: Column, n: Int): Column = {
     val starts = sequence(lit(0), size(toks) - n)
     val hashes = transform(starts, i => xxhash64((0 until n).map(j => element_at(toks, i + j + 1)): _*))
     when(size(toks) >= n, array_distinct(hashes)).otherwise(array().cast("array<bigint>"))
@@ -70,7 +70,7 @@ object HashFunctions {
   /** The original HOF formulation, kept as the independent reference the
     * equivalence spec checks the native expression against.
     */
-  def minHashFromHashesHof(hashes: Column, k: Int): Column =
+  private[graft] def minHashFromHashesHof(hashes: Column, k: Int): Column =
     minHashGeneric(hashes, k, (i, h) => xxhash64(lit(i), h))
 
   /** The MinHash PLUMBING — min over each of k permutations of the
@@ -162,7 +162,7 @@ object HashFunctions {
   /** The HOF formulation — O(tokens·dim) interpreted lambda steps, the
     * independent bit-identical reference the equivalence spec checks
     * the native kernel against (and what the oracle SQL replays). */
-  def hashEmbedHof(hashes: Column, dim: Int): Column = {
+  private[graft] def hashEmbedHof(hashes: Column, dim: Int): Column = {
     require(dim >= 1, "dim must be positive")
     val acc = aggregate(hashes, array_repeat(lit(0.0), dim),
       (v, h) => {

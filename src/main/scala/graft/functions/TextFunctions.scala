@@ -96,7 +96,7 @@ object TextFunctions {
   }
 
   /** Character n-grams of the raw string (sliding, overlapping). */
-  def charNGrams(text: Column, n: Int): Column = {
+  private[graft] def charNGrams(text: Column, n: Int): Column = {
     val starts = sequence(lit(1), length(text) - (n - 1)) // 1-based substring
     when(length(text) >= n, transform(starts, i => substring(text, i, lit(n)).cast("string")))
       .otherwise(array().cast("array<string>"))
@@ -105,7 +105,7 @@ object TextFunctions {
   /** Jaccard similarity of the *distinct* word n-gram shingle sets of two
     * text columns. 0.0 when either side has no shingles.
     */
-  def shingleJaccard(a: Column, b: Column, n: Int): Column = {
+  private[graft] def shingleJaccard(a: Column, b: Column, n: Int): Column = {
     val sa = array_distinct(wordShingles(a, n))
     val sb = array_distinct(wordShingles(b, n))
     val inter = size(array_intersect(sa, sb)).cast("double")
@@ -126,7 +126,7 @@ object TextFunctions {
     * languages whose markers repeat adjacently (rare in prose) and the
     * ARGMAX comparison is what consumers use, not the absolute count.
     */
-  def occurrences(text: Column, needle: String): Column =
+  private[graft] def occurrences(text: Column, needle: String): Column =
     ((length(text) - length(regexp_replace(text, java.util.regex.Pattern.quote(needle), "")))
       / needle.length).cast("int")
 

@@ -98,14 +98,14 @@ object VectorFunctions {
     * touches full vectors — the 100 TB embedding-budget lever alongside
     * int8 quantization below.
     */
-  def randomProjection(vec: Column, dim: Int, k: Int, seed: Long): Column =
+  private[graft] def randomProjection(vec: Column, dim: Int, k: Int, seed: Long): Column =
     call_function("graft_project", vec, lit(dim), lit(k), lit(seed))
 
   /** The original HOF formulation (planes inlined as literals, one
     * interpreted aggregate pass per bit), kept as the independent
     * reference the equivalence spec checks the native expression against.
     */
-  def hyperplaneSignatureHof(vec: Column, planes: Seq[Array[Double]]): Column = {
+  private[graft] def hyperplaneSignatureHof(vec: Column, planes: Seq[Array[Double]]): Column = {
     require(planes.nonEmpty && planes.size <= 63, "1..63 planes per signature word")
     planes.zipWithIndex.map { case (p, i) =>
       val plane = typedLit(p.toSeq)
@@ -116,7 +116,7 @@ object VectorFunctions {
   /** Deterministic unit-ish hyperplanes from a seed (Gaussian via
     * java.util.Random, which is seed-stable across JVMs).
     */
-  def randomPlanes(dim: Int, count: Int, seed: Long): Seq[Array[Double]] = {
+  private[graft] def randomPlanes(dim: Int, count: Int, seed: Long): Seq[Array[Double]] = {
     val rnd = new java.util.Random(seed)
     Seq.fill(count)(Array.fill(dim)(rnd.nextGaussian()))
   }
@@ -149,7 +149,7 @@ object VectorFunctions {
   }
 
   /** Inverse of [[quantizeInt8]]: `array<double>` reconstruction. */
-  def dequantizeInt8(qs: Column): Column =
+  private[graft] def dequantizeInt8(qs: Column): Column =
     transform(qs.getField("q"), b => b.cast("double") * qs.getField("scale"))
 
   /** Product-quantization encode: `array<float|double>` of length
@@ -168,7 +168,7 @@ object VectorFunctions {
   /** cosine(query, reconstruct(codes)) in one fused pass
     * ([[graft.plans.PqCosine]]) — scores a full-precision query column
     * against PQ codes without materializing the reconstruction. */
-  def pqCosine(q: Column, codes: Column, cbs: Array[Array[Array[Double]]]): Column =
+  private[graft] def pqCosine(q: Column, codes: Column, cbs: Array[Array[Array[Double]]]): Column =
     org.apache.spark.sql.GraftSqlBridge.column(graft.plans.PqCosine(
       org.apache.spark.sql.GraftSqlBridge.expression(q),
       org.apache.spark.sql.GraftSqlBridge.expression(codes), cbs))

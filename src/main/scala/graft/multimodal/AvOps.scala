@@ -205,7 +205,7 @@ object AvOps {
     * failures. UDF (not codegen) is deliberate: the kernel is imperative
     * DSP, isolated in one projection exactly like the image ops.
     */
-  def audioFeatures: org.apache.spark.sql.expressions.UserDefinedFunction =
+  private[graft] def audioFeatures: org.apache.spark.sql.expressions.UserDefinedFunction =
     udf((bytes: Array[Byte]) =>
       if (bytes == null) None
       else decodeWav(bytes, FeatureSamples).map { case (sr, ch, n, head, sumSq, peak, zc) =>
@@ -332,7 +332,7 @@ object AvOps {
     * frame rows without materializing all frames in memory — is the part
     * that matters at scale.
     */
-  def sampleFrames(ds: Dataset[AvRecord], everyN: Int)(
+  private[graft] def sampleFrames(ds: Dataset[AvRecord], everyN: Int)(
       implicit enc: org.apache.spark.sql.Encoder[FrameRow]): Dataset[FrameRow] =
     ds.mapPartitions { rows =>
       rows.flatMap { r =>
@@ -351,7 +351,7 @@ object AvOps {
     }
 
   /** Typed metadata columns over any binary payload — pure built-ins. */
-  def withBinaryMeta(df: DataFrame, contentCol: String): DataFrame =
+  private[graft] def withBinaryMeta(df: DataFrame, contentCol: String): DataFrame =
     df.withColumn("n_bytes", length(col(contentCol)).cast("bigint"))
       .withColumn("content_sha", sha2(col(contentCol), 256))
       .withColumn("is_empty", coalesce(length(col(contentCol)) === 0, lit(true)))

@@ -513,7 +513,7 @@ object ImageOps {
     * re-decoding candidates' archive sides would re-read the corpus.
     * None on undecodable bytes.
     */
-  def gridBlob(bytes: Array[Byte]): Option[Array[Byte]] =
+  private[graft] def gridBlob(bytes: Array[Byte]): Option[Array[Byte]] =
     decode(bytes).map(im => gridsToBlob(transformGrids(im)))
 
   private def gridsToBlob(grids: Array[Array[Double]]): Array[Byte] = {

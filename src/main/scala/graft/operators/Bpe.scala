@@ -62,7 +62,7 @@ object Bpe {
     * driver and code points here — identical except for astral-plane
     * symbols, which character-level BPE vocabularies don't reach.
     */
-  def initialPairCounts(docs: DataFrame, textCol: String, minCount: Long): DataFrame =
+  private[graft] def initialPairCounts(docs: DataFrame, textCol: String, minCount: Long): DataFrame =
     initialPairCountsFrom(vocabTable(docs, textCol, minCount, MaxVocabTypes))
 
   /** The default vocab-type cap of training and [[initialPairCounts]]. */
@@ -304,7 +304,7 @@ object Bpe {
     * with `textCol`): one projection, no shuffle; the merge list rides
     * the closure (it is vocab-sized, i.e. small).
     */
-  def tokenCount(textCol: String,
+  private[graft] def tokenCount(textCol: String,
       merges: Seq[(String, String)]): org.apache.spark.sql.Column =
     size(encodeUdf(merges)(col(textCol)))
 }

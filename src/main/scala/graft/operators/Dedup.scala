@@ -26,7 +26,6 @@ object Dedup {
     * reads at most `AudioMaxWindows` non-overlapping (`AudioHop` 0)
     * windows of `AudioWindow` samples; a clip pair matches on
     * `*MinMatches` distinct frames/windows per side within `*MaxHamming`
-    * bits; strict oriented pairs match within `OrientedStrictMaxHamming`
     * bits; oriented-verified images take candidates within
     * `OrientedCandidateMaxHamming` bits (recall-loose, at the measured
     * floor) and keep grids within `MaxGridDistance` gray levels; a new
@@ -42,21 +41,12 @@ object Dedup {
   val AudioMaxHamming = 4
   val AudioMinMatches = 4
   val OrientedCandidateMaxHamming = 3
-  val OrientedStrictMaxHamming = 2
   val MaxGridDistance = 8.0
   val ImageVsStateMaxHamming = 5
   /** SimHash geometry of [[simHashNearDuplicates]]. */
   val SimHashBits = 48
   val SimHashChunks = 4
   val SimHashMaxHamming = 3
-
-  /** Exact dedup: keep the first row (lowest `idCol`) per key. One shuffle
-    * (the window partition); no join.
-    */
-  def keepFirstByKey(df: DataFrame, keyCols: Seq[Column], idCol: Column): DataFrame = {
-    val w = Window.partitionBy(keyCols: _*).orderBy(idCol.asc)
-    df.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
-  }
 
   /** Exact content dedup over a text column via sha-256 content hash:
     * annotates every row with its canonical (minimum) id and the size of
@@ -214,15 +204,19 @@ object Dedup {
   }
 
   /** Compaction for the accumulated signature STATE of
-    * [[minHashNearDuplicatesVsState]] — without it the state table
-    * grows monotonically forever (every run appends the survivors'
-    * signatures), which is unbounded at a years-long 100 TB crawl
-    * cadence even though each row is only k×8 bytes. Rewrites
+    * [[minHashNearDuplicatesVsState]] and of the SEQUENCE signature
+    * states, where one state row is one (clip, frame/window) —
+    * [[videoSignatures]] / [[audioSignatures]] key on
+    * `Seq(idCol, "frame_idx"/"window_idx")`; a single-key state passes
+    * `Seq(idCol)`. Without it the state table grows monotonically
+    * forever (every run appends the survivors' signatures), which is
+    * unbounded at a years-long 100 TB crawl cadence even though each
+    * row is only k×8 bytes. Rewrites
     * `stateDir` in place (checked two-rename swap + crash recovery via
     * [[graft.sources.Compaction.rewriteParquetDir]], sized to
     * [[graft.sources.Compaction.TargetFileBytes]] files) keeping:
     *
-    *   - ONE row per `idCol`: the max-`versionCol` row when a version
+    *   - ONE row per `idCols` key: the max-`versionCol` row when a version
     *     column is present (keep-latest — a re-signed document's stale
     *     signature stops matching, which is the intended semantics:
     *     state describes the CURRENT kept corpus). Without a version
@@ -230,10 +224,10 @@ object Dedup {
     *     are collapsed — keep-latest is undefined when nothing orders
     *     the duplicates, and guessing would drop live signatures
     *     nondeterministically.
-    *   - with [[compactSignatureStateKeys]], only rows passing `retain`
-    *     (optional retention predicate — e.g. `col("seen_at") > cutoff`
-    *     for a sliding-window dedup policy), applied AFTER keep-latest
-    *     so the latest row decides retention.
+    *   - only rows passing `retain` (optional retention predicate —
+    *     e.g. `col("seen_at") > cutoff` for a sliding-window dedup
+    *     policy), applied AFTER keep-latest so the latest row decides
+    *     retention.
     *
     * Returns (rowsBefore, rowsAfter). Detection parity: compacting a
     * state whose duplicates are redundant (identical signatures, or
@@ -243,26 +237,12 @@ object Dedup {
     * keeps every row). Same single-writer contract as all state
     * maintenance here.
     */
-  def compactSignatureState(
-      spark: org.apache.spark.sql.SparkSession,
-      stateDir: String,
-      idCol: String,
-      versionCol: Option[String]): (Long, Long) =
-    compactSignatureStateKeys(spark, stateDir, Seq(idCol), versionCol, None)
-
-  /** Composite-key form of [[compactSignatureState]] for SEQUENCE
-    * signature states, where one state row is one (clip, frame/window)
-    * — [[videoSignatures]] / [[audioSignatures]] key on
-    * `Seq(idCol, "frame_idx"/"window_idx")`. Semantics identical:
-    * keep-latest per key when versioned, exact-row dedup otherwise,
-    * retention after keep-latest.
-    */
-  def compactSignatureStateKeys(
+  private[graft] def compactSignatureStateKeys(
       spark: org.apache.spark.sql.SparkSession,
       stateDir: String,
       idCols: Seq[String],
-      versionCol: Option[String] = None,
-      retain: Option[Column] = None): (Long, Long) = {
+      versionCol: Option[String],
+      retain: Option[Column]): (Long, Long) = {
     require(idCols.nonEmpty, "compactSignatureStateKeys: need at least one key column")
     graft.sources.Compaction.rewriteParquetDir(spark, stateDir) { df =>
       val latest = versionCol match {
@@ -391,7 +371,7 @@ object Dedup {
     * Blocking by signature chunk (pigeonhole: distance < chunks ⇒ some
     * chunk equal) keeps this an equi-join too.
     */
-  def simHashNearDuplicates(df: DataFrame, idCol: String, textCol: String): DataFrame =
+  private[graft] def simHashNearDuplicates(df: DataFrame, idCol: String, textCol: String): DataFrame =
     hammingNearDuplicates(
       df.select(col(idCol).as("__id"),
           HashFunctions.hashedTokens(TextFunctions.tokens(col(textCol))).as("__th"))
@@ -426,9 +406,10 @@ object Dedup {
 
   /** STRICT orientation-robust image near-dup: matches when ANY of the
     * two images' 8 per-transform dHash signatures sit within
-    * [[OrientedStrictMaxHamming]] bits — min cross-orientation distance,
-    * so a COMPOSED disguise (re-encode AND re-orient) matches even when
-    * re-encode noise flips which transform wins [[graft.multimodal.ImageOps
+    * `maxHamming` bits (blocked on `chunks` slices) — min
+    * cross-orientation distance, so a COMPOSED disguise (re-encode AND
+    * re-orient) matches even when re-encode noise flips which
+    * transform wins [[graft.multimodal.ImageOps
     * .dHashCanonical]]'s unsigned-min (the canonical form's documented
     * min-switch caveat; on lossless re-orientations both forms agree).
     * Price vs the canonical flag: 8 signature rows per image through
@@ -440,7 +421,7 @@ object Dedup {
     * signature pairs per image pair, so the cross-image distance floor
     * erodes 64× faster with corpus size than the single-signature
     * operators' (measured: the fixture population's floor is 12 for
-    * plain dHash, 3 for this min — ImageDedupSpec pins both). The
+    * plain dHash, 3 for this min — ImageDedupSpec pins both). A
     * threshold of 2 covers the composed-disguise class (≤ 2 bits,
     * pinned) while clearing that floor; at web scale treat this as a
     * high-recall CANDIDATE GENERATOR feeding a verification stage, not
@@ -449,14 +430,6 @@ object Dedup {
     * (candidates at a loose threshold, then a full-grid exact verify
     * per candidate pair).
     */
-  def imageNearDuplicatesOrientedStrict(
-      df: DataFrame,
-      idCol: String,
-      bytesCol: String): DataFrame =
-    imageNearDuplicatesOrientedStrict(df, idCol, bytesCol, SigChunks, OrientedStrictMaxHamming)
-
-  /** [[imageNearDuplicatesOrientedStrict]] with the blocking chunk count
-    * and the threshold explicit. */
   private[graft] def imageNearDuplicatesOrientedStrict(
       df: DataFrame,
       idCol: String,
@@ -530,7 +503,7 @@ object Dedup {
     * disguise class needs the verify, see
     * [[imageNearDuplicatesOrientedVerified]]). Undecodable rows
     * dropped. Append survivors with a version column; maintain with
-    * [[compactSignatureState]]. Redelivery-idempotent like
+    * [[compactSignatureStateKeys]]. Redelivery-idempotent like
     * [[imageSignatures]]: a replayed run appends bit-identical rows and
     * the vs-state verdict is multiplicity-blind.
     */
@@ -739,7 +712,7 @@ object Dedup {
     * frames are fades is missed. ~12 bytes per kept keyframe is the
     * only thing incremental video dedup ever reads back. Append each run's
     * survivors with a version column and maintain with
-    * [[compactSignatureState]] (composite key: idCol + frame_idx).
+    * [[compactSignatureStateKeys]] (composite key: idCol + frame_idx).
     * Redelivery: a replayed run appends bit-identical (id, frame_idx,
     * sig, version) rows; [[videoNearDuplicatesVsState]]'s verdicts are
     * multiplicity-blind, and `compactSignatureStateKeys(Seq(idCol,
@@ -855,7 +828,7 @@ object Dedup {
     * against each state clip; the batch is returned annotated with
     * (dup_of, n_matched, min_hamming), NULL for survivors and for
     * undecodable payloads. Append the survivors' [[videoSignatures]]
-    * to state after each run; maintain with [[compactSignatureState]]
+    * to state after each run; maintain with [[compactSignatureStateKeys]]
     * on the composite (id, frame_idx) key.
     */
   def videoNearDuplicatesVsState(
@@ -915,7 +888,7 @@ object Dedup {
     * quarantine patterns). 8 bytes per kept image is the ONLY thing
     * incremental image dedup ever reads back — at a 100 TB crawl the
     * state table is GB-scale. Append each run's survivors with a
-    * version column and maintain with [[compactSignatureState]]
+    * version column and maintain with [[compactSignatureStateKeys]]
     * (keep-latest + retention work unchanged on a long signature).
     * Redelivery: a replayed run appends bit-identical rows; the
     * vs-state verdict is multiplicity-blind (distinct-signature collapse

@@ -20,9 +20,11 @@ object Relational {
     * DAG relaxations run as a driver loop over the collected edges. */
   val ComponentsLocalMaxEdges = 200000L
   val PageRankLocalMaxEdges = 100000L
+  /** Rounds and damping factor of [[pageRank]]. */
+  val PageRankIterations = 10
+  val PageRankDamping = 0.85
   val DagLocalMaxEdges = 10000L
-  /** Rounds of [[dagDepth]]; nodes up to which [[descendantCounts]] keeps exact bitsets. */
-  val DagDepthMaxIter = 12
+  /** Nodes up to which [[descendantCounts]] keeps exact bitsets. */
   val DescendantsExactMaxNodes = 1 << 12
 
   /** An `eligible` edge table's rows if it holds at most `max`: ONE job
@@ -300,7 +302,7 @@ object Relational {
     * node count is checked with ONE narrow job before any closure work
     * starts.
     */
-  def transitiveClosure(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+  private[graft] def transitiveClosure(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
     transitiveClosure(edges, srcCol, dstCol, ClosureMaxNodes)
 
   /** [[transitiveClosure]] with the node cap explicit. */
@@ -541,14 +543,6 @@ object Relational {
     }
     Array.tabulate(n)(i => (values(i), minOfRoot(find(i))))
   }
-
-  /** Longest path (in hops) to each node of a DAG from any root —
-    * iterative relaxation; useful for stage-dependency scheduling depth.
-    */
-  def dagDepth(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
-    dagRelaxMax(
-      edges.select(col(srcCol).as("src"), col(dstCol).as("dst"), lit(1L).as("__w")),
-      "src", "dst", Seq("__w" -> "depth"), DagDepthMaxIter, DagLocalMaxEdges)
 
   /** Weighted longest-path relaxation over a DAG: for every node, the
     * maximum over all paths of the sum of edge weights reaching it
@@ -801,11 +795,12 @@ object Relational {
     * [[dagRelaxMax]]).
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
-      weightCol: Option[String] = None, iterations: Int = 10,
-      damping: Double = 0.85): DataFrame =
-    pageRank(edges, srcCol, dstCol, weightCol, iterations, damping, PageRankLocalMaxEdges)
+      weightCol: Option[String] = None): DataFrame =
+    pageRank(edges, srcCol, dstCol, weightCol, PageRankIterations, PageRankDamping,
+      PageRankLocalMaxEdges)
 
-  /** [[pageRank]]; `localMaxEdges = 0` forces the distributed path. */
+  /** [[pageRank]] with the rounds and damping explicit; `localMaxEdges = 0`
+    * forces the distributed path. */
   private[graft] def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
       weightCol: Option[String], iterations: Int, damping: Double,
       localMaxEdges: Long): DataFrame = {
@@ -1109,7 +1104,7 @@ object Relational {
     * ...); `deps` holds (stage_id = child, depends_on_stage_id = parent,
     * relation_type, lag_days).
     */
-  def cpmSchedule(stages: DataFrame, deps: DataFrame): DataFrame =
+  private[graft] def cpmSchedule(stages: DataFrame, deps: DataFrame): DataFrame =
     cpmSchedule(stages, deps, None)
 
   /** [[cpmSchedule]] plus start/finish dates when `projectStart` is given. */

@@ -121,7 +121,7 @@ object Similarity {
     * closest to each query. Centroids come from `trainCentroids` (or any
     * external clustering). Returns exact cosine over the probed subset.
     */
-  def ivfCosineTopK(
+  private[graft] def ivfCosineTopK(
       corpus: DataFrame,
       corpusId: String,
       corpusEmb: String,
@@ -232,7 +232,7 @@ object Similarity {
     * posexplode → per-dimension avg → re-assemble ordered by position.
     * Two shuffles regardless of dimension; no vectors on the driver.
     */
-  def trainCentroids(df: DataFrame, embCol: String, groupCol: String): DataFrame =
+  private[graft] def trainCentroids(df: DataFrame, embCol: String, groupCol: String): DataFrame =
     df.select(col(groupCol).as("centroid_id"), posexplode(col(embCol)).as(Seq("pos", "v")))
       .groupBy(col("centroid_id"), col("pos"))
       .agg(avg(col("v")).as("m"))

@@ -124,7 +124,7 @@ object Sketches {
     * themselves: never read with a k larger than any k a prior
     * compaction used.
     */
-  def kmvStateSketch(spark: org.apache.spark.sql.SparkSession,
+  private[graft] def kmvStateSketch(spark: org.apache.spark.sql.SparkSession,
       stateDir: String, k: Int, maxRunId: Long): Array[Long] = {
     readKmvCompactK(spark, stateDir).foreach { ck =>
       require(k <= ck,
@@ -192,7 +192,7 @@ object Sketches {
     * horizon. Same quiesced single-writer contract as the other
     * state compactions.
     */
-  def compactKmvState(spark: org.apache.spark.sql.SparkSession,
+  private[graft] def compactKmvState(spark: org.apache.spark.sql.SparkSession,
       stateDir: String, k: Int): (Long, Long) =
       graft.sources.Lease.withLease(spark, stateDir) {
     // the bound decision runs inside the rewrite: after its crash
@@ -273,16 +273,6 @@ object Sketches {
   def hllEstimate(state: DataFrame): DataFrame =
     state.withColumn("distinct_est", hll_sketch_estimate(col("hll_state")))
 
-  /** Merge-read an APPEND-ONLY HLL state directory (the layout
-    * [[hllDistinctState]] appends: one delta sketch row per key per
-    * run) down to one estimate per
-    * key. Duplicate delta rows — at-least-once redelivery upstream —
-    * cannot inflate the estimate: the union is a per-key register max.
-    */
-  def hllStateEstimates(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String, keyCols: Seq[String]): DataFrame =
-    hllEstimate(hllMergeStates(keyCols, ParquetRead(spark, stateDir)))
-
   /** Compact an append-only HLL state directory to ONE merged sketch
     * row per key, in place (checked two-rename swap + crash recovery,
     * [[graft.sources.Compaction.rewriteParquetDir]]). Append-only state
@@ -293,7 +283,7 @@ object Sketches {
     * (rowsBefore, rowsAfter). Single-writer contract: do not run while
     * a stream is mid-append.
     */
-  def compactHllState(spark: org.apache.spark.sql.SparkSession,
+  private[graft] def compactHllState(spark: org.apache.spark.sql.SparkSession,
       stateDir: String, keyCols: Seq[String]): (Long, Long) =
     graft.sources.Compaction.rewriteParquetDir(spark, stateDir)(
       df => hllMergeStates(keyCols, df))
@@ -320,7 +310,7 @@ object Sketches {
     * ([[mgStateSummary]] argues the retry); a run written by two
     * differing attempts holds up to 2(m+1) rows until compaction.
     */
-  def frequentItems(df: DataFrame, c: Column, m: Int): DataFrame = {
+  private[graft] def frequentItems(df: DataFrame, c: Column, m: Int): DataFrame = {
     val mg = udaf(graft.functions.Aggregators.MisraGries(m))
     df.select(c.cast("string").as("__it")).where(col("__it").isNotNull)
       .agg(mg(col("__it")).as("s"))
@@ -440,11 +430,6 @@ object Sketches {
       .select(col("it.item").as("item"), col("it.weight").as("weight"), col("delta"))
   }
 
-  /** [[mgStateSummary]] over a state directory. */
-  def mgStateSummary(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String): DataFrame =
-    mgStateSummary(ParquetRead(spark, stateDir))
-
   /** Compact an append-only MG state directory to ONE merged summary
     * run (`run_id = -1`), in place — same two-rename swap and crash
     * recovery as [[compactHllState]]. The fold is [[mgStateSummary]]
@@ -454,7 +439,7 @@ object Sketches {
     * a batch retried AFTER its rows were folded into `-1` would no
     * longer dedupe by `run_id` and would double-count.
     */
-  def compactMgState(spark: org.apache.spark.sql.SparkSession,
+  private[graft] def compactMgState(spark: org.apache.spark.sql.SparkSession,
       stateDir: String): (Long, Long) =
     graft.sources.Compaction.rewriteParquetDir(spark, stateDir)(
       df => mgStateSummary(df).withColumn("run_id", lit(-1L)))
@@ -529,17 +514,12 @@ object Sketches {
       .groupBy((keyCols.map(col) :+ col("bucket")): _*)
       .agg(sum(col("cnt")).as("cnt"))
 
-  /** [[histStateQuantiles]] over a state directory. */
-  def histStateQuantiles(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String, keyCols: Seq[String], qs: Seq[Double]): DataFrame =
-    histStateQuantiles(ParquetRead(spark, stateDir), keyCols, qs)
-
   /** Compact an append-only histogram state directory to one summed
     * run (`run_id = -1`), in place. The fold IS the read path's merge,
     * so quantiles are bit-identical before and after. Same quiesced +
     * durable single-writer contract as [[compactMgState]].
     */
-  def compactHistState(spark: org.apache.spark.sql.SparkSession,
+  private[graft] def compactHistState(spark: org.apache.spark.sql.SparkSession,
       stateDir: String, keyCols: Seq[String]): (Long, Long) =
     graft.sources.Compaction.rewriteParquetDir(spark, stateDir)(
       df => histStateMerged(df, keyCols).withColumn("run_id", lit(-1L)))
@@ -582,9 +562,8 @@ object Sketches {
   /** The read/compaction merge, shared BY CONSTRUCTION (the hist
     * family's discipline): dedupe redelivered rows per (run, keys) by
     * byte-lexicographic max, then merge sketches across runs. */
-  private def kllStateMerged(states: DataFrame, keyCols: Seq[String],
-      k: Int): DataFrame = {
-    val mergeAgg = udaf(graft.functions.Aggregators.KllMergeBytes(k))
+  private def kllStateMerged(states: DataFrame, keyCols: Seq[String]): DataFrame = {
+    val mergeAgg = udaf(graft.functions.Aggregators.KllMergeBytes(KllK))
     states
       .groupBy((col("run_id") +: keyCols.map(col)): _*)
       .agg(max(col("kll_state")).as("kll_state"))
@@ -601,7 +580,7 @@ object Sketches {
     * data-sized ones.
     */
   def kllStateQuantiles(states: DataFrame, keyCols: Seq[String],
-      qs: Seq[Double], k: Int = KllK): DataFrame = {
+      qs: Seq[Double]): DataFrame = {
     require(qs.nonEmpty && qs.forall(q => q >= 0 && q <= 1),
       s"kllStateQuantiles: quantiles must be in [0, 1], got $qs")
     val q1 = udf((bytes: Array[Byte], q: Double) => {
@@ -614,19 +593,12 @@ object Sketches {
     val nOf = udf((bytes: Array[Byte]) =>
       org.apache.datasketches.kll.KllDoublesSketch.heapify(
         org.apache.datasketches.memory.Memory.wrap(bytes)).getN)
-    kllStateMerged(states, keyCols, k)
+    kllStateMerged(states, keyCols)
       .withColumn("q", explode(array(qs.map(lit): _*)))
       .select((keyCols.map(col) :+ col("q") :+
         q1(col("kll_state"), col("q")).as("value") :+
         nOf(col("kll_state")).as("n")): _*)
   }
-
-  /** [[kllStateQuantiles]] over a state directory. (No default k here
-    * — overloads cannot both carry defaults.) */
-  def kllStateQuantiles(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String, keyCols: Seq[String], qs: Seq[Double],
-      k: Int): DataFrame =
-    kllStateQuantiles(ParquetRead(spark, stateDir), keyCols, qs, k)
 
   /** Compact an append-only KLL state directory to one merged sketch
     * row per key (`run_id = -1`), in place. The fold IS the read
@@ -634,8 +606,8 @@ object Sketches {
     * error bound (read via bounds, never equality — the HLL family's
     * contract). Same quiesced single-writer rules.
     */
-  def compactKllState(spark: org.apache.spark.sql.SparkSession,
+  private[graft] def compactKllState(spark: org.apache.spark.sql.SparkSession,
       stateDir: String, keyCols: Seq[String]): (Long, Long) =
     graft.sources.Compaction.rewriteParquetDir(spark, stateDir)(
-      df => kllStateMerged(df, keyCols, KllK).withColumn("run_id", lit(-1L)))
+      df => kllStateMerged(df, keyCols).withColumn("run_id", lit(-1L)))
 }

@@ -30,7 +30,7 @@ object Skew {
     * replication — a silent no-op at 16× the cost. Pass a high-cardinality
     * per-row column (an event/row id).
     */
-  def saltedEquiJoin(
+  private[graft] def saltedEquiJoin(
       large: DataFrame,
       other: DataFrame,
       keys: Seq[String],
@@ -49,7 +49,7 @@ object Skew {
     * (e.g. maxShare > 0.2 on a 200-partition shuffle). One pass, top-k
     * only on the driver.
     */
-  def keySkewProfile(df: DataFrame, keys: Seq[String]): DataFrame =
+  private[graft] def keySkewProfile(df: DataFrame, keys: Seq[String]): DataFrame =
     df.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc)

@@ -17,7 +17,7 @@ import graft.sources.ParquetRead
   * probe sets arrive repeatedly, and re-paying the full corpus scan per
   * probe batch is the dominant cost (the r13 sf10 probe put it at
   * ~64 ms/probe of corpus-side work). This is the signature-state
-  * pattern ([[Dedup.incrementalNearDuplicates]] + `compactSignatureState`)
+  * pattern ([[Dedup.incrementalNearDuplicates]] + `compactSignatureStateKeys`)
   * applied to the token index: write per-ingest deltas once, probe
   * incrementally forever, compact at the retention horizon.
   *
@@ -75,7 +75,7 @@ object TokenIndex {
   /** Takedown contract: mark corpus ids deleted in the tombstone ledger
     * [[IndexStore]] keeps for both indexes (horizon `asofRun`, derived
     * from the current postings by default). Probes
-    * ([[containmentJoinIndexed]], [[flaggedCorpusIds]], [[bm25Indexed]])
+    * ([[containmentJoinIndexed]], [[bm25Indexed]])
     * mask the ledger immediately — a taken-down document can never
     * again be a containment hit or a retrieval result — and the next
     * [[compact]] physically drops its postings/arrays rows, RE-DERIVES
@@ -118,8 +118,8 @@ object TokenIndex {
     * interleaved appends, and a crash between the steps leaves only
     * the benign delete-applied/append-missing state a rerun completes.
     */
-  def upsert(batch: DataFrame, idCol: String, textCol: String,
-      indexDir: String, runId: Long, metaCols: Seq[String] = Nil): Unit =
+  private[graft] def upsert(batch: DataFrame, idCol: String, textCol: String,
+      indexDir: String, runId: Long, metaCols: Seq[String]): Unit =
     // ONE lease across both steps (withLease is reentrant), so no other
     // writer can interleave between the delete and the append
     graft.sources.Lease.withLease(batch.sparkSession, indexDir) {
@@ -211,7 +211,9 @@ object TokenIndex {
   /** [[Similarity.containmentJoin]] against the PERSISTED index:
     * identical output — every (probe, corpus) pair with
     * `|T(probe) ∩ T(corpus)| / |T(probe)| >= threshold` — with zero
-    * corpus-side work beyond streaming the postings.
+    * corpus-side work beyond streaming the postings. Decontamination
+    * drops the pair set's distinct `corpus_id`s from the training mix,
+    * so a nightly benchmark sweep re-pays only the postings scan.
     *
     * Plan shape: probe prefixes (rarest tokens under the merged-df
     * order, df-0 for tokens the corpus has never seen — unsatisfiable
@@ -251,7 +253,7 @@ object TokenIndex {
     * shapes efficiency), spec-pinned against the post-filtered
     * one-shot operator.
     */
-  def containmentJoinIndexedFiltered(spark: SparkSession, probes: DataFrame,
+  private[graft] def containmentJoinIndexedFiltered(spark: SparkSession, probes: DataFrame,
       probeIdCol: String, probeTextCol: String, indexDir: String,
       threshold: Double,
       predicate: org.apache.spark.sql.Column): DataFrame =
@@ -326,20 +328,6 @@ object TokenIndex {
       .filter(col("containment") >= threshold)
       .select(col("probe_id"), col("corpus_id"), col("containment"))
   }
-
-  /** Incremental decontamination front door: the corpus documents that
-    * CONTAIN any probe (benchmark item, canary, quote) at `threshold`
-    * — drop these ids from the training mix. Exactly
-    * [[containmentJoinIndexed]]'s pair set projected to distinct
-    * corpus ids, so a nightly benchmark sweep re-pays only the
-    * postings scan, never the corpus.
-    */
-  def flaggedCorpusIds(spark: SparkSession, probes: DataFrame,
-      probeIdCol: String, probeTextCol: String, indexDir: String,
-      threshold: Double): DataFrame =
-    containmentJoinIndexed(spark, probes, probeIdCol, probeTextCol,
-      indexDir, threshold)
-      .select(col("corpus_id")).distinct()
 
   /** BM25 retrieval FROM the index — [[Retrieval.bm25]]'s exact scoring
     * (Robertson/Spärck Jones, Lucene's +1 idf smoothing) with ZERO

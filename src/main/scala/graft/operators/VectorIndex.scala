@@ -433,8 +433,8 @@ object VectorIndex {
     * delete-applied/append-missing state a rerun completes. Callers
     * own run monotonicity, same as [[append]].
     */
-  def upsert(batch: DataFrame, idCol: String, embCol: String,
-      indexDir: String, runId: Long, metaCols: Seq[String] = Nil): Unit =
+  private[graft] def upsert(batch: DataFrame, idCol: String, embCol: String,
+      indexDir: String, runId: Long, metaCols: Seq[String]): Unit =
     // ONE lease across both steps (withLease is reentrant), so no other
     // writer can interleave between the delete and the append
     graft.sources.Lease.withLease(batch.sparkSession, indexDir) {
@@ -732,7 +732,7 @@ object VectorIndex {
     * table. Callers on a schedule (e.g. after each streamed ingest)
     * pay the full train+index cost only at the measured decay point.
     */
-  def rebuildIfDrifted(corpus: DataFrame, idCol: String, embCol: String,
+  private[graft] def rebuildIfDrifted(corpus: DataFrame, idCol: String, embCol: String,
       indexDir: String, k: Int, maxIter: Int): Boolean = {
     val spark = corpus.sparkSession
     import spark.implicits._
@@ -880,7 +880,7 @@ object VectorIndex {
     * treat that as "re-examine k or the clustering", not silently
     * accept it).
     */
-  def calibrateNprobe(spark: SparkSession, sampleQueries: DataFrame,
+  private[graft] def calibrateNprobe(spark: SparkSession, sampleQueries: DataFrame,
       queryId: String, queryEmb: String, indexDir: String, k: Int,
       candidates: Seq[Int]): (Int, Map[Int, Double]) =
     calibrateNprobeImpl(spark, indexDir, candidates,
@@ -897,7 +897,7 @@ object VectorIndex {
     * brute force over the allowed vectors), so the recall contract is
     * against exactly the answer set the runtime serves. Same predicate
     * contract as [[queryTopKFiltered]]. */
-  def calibrateNprobeFiltered(spark: SparkSession, sampleQueries: DataFrame,
+  private[graft] def calibrateNprobeFiltered(spark: SparkSession, sampleQueries: DataFrame,
       queryId: String, queryEmb: String, indexDir: String, k: Int,
       predicate: org.apache.spark.sql.Column, candidates: Seq[Int]): (Int, Map[Int, Double]) =
     calibrateNprobeImpl(spark, indexDir, candidates,

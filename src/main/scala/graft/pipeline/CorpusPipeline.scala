@@ -229,7 +229,7 @@ object CorpusPipeline {
     * commit re-processes the batch (at-least-once) instead of silently
     * losing it.
     */
-  def curateIncrementalNearDupStaged(
+  private[graft] def curateIncrementalNearDupStaged(
       docs: DataFrame,
       idCol: String,
       textCol: String,
@@ -311,7 +311,7 @@ object CorpusPipeline {
     * extendable (raising a fraction only ADDS rows, never swaps them).
     * Strata absent from `fractions` default to 0.0 (dropped).
     */
-  def stratifiedSample(df: DataFrame, idCol: String, stratumCol: String,
+  private[graft] def stratifiedSample(df: DataFrame, idCol: String, stratumCol: String,
       fractions: Map[String, Double]): DataFrame = {
     require(fractions.values.forall(f => f >= 0.0 && f <= 1.0), "fractions in [0,1]")
     // xxhash64 → [0,1): shift to 53-bit non-negative mantissa range so the
@@ -345,7 +345,7 @@ object CorpusPipeline {
     * certifies THIS write, and later actions on it can never silently
     * re-read a directory that has since been overwritten.
     */
-  def writeRelease(df: DataFrame, dir: String, partCol: String,
+  private[graft] def writeRelease(df: DataFrame, dir: String, partCol: String,
       textCol: String): DataFrame = {
     df.write.mode("overwrite").partitionBy(partCol).parquet(dir)
     val back = ParquetRead(df.sparkSession, dir)
@@ -718,16 +718,6 @@ object CorpusPipeline {
         count(when(col("__freq").isNull && col("__unit").isNotNull, 1)).as("n_kept"),
         count(col("__freq")).as("n_removed"))
   }
-
-  /** Line-level boilerplate removal over a text column: units are
-    * newline-separated lines; returns the cleaned text with per-doc
-    * removal accounting.
-    */
-  def removeBoilerplateLines(docs: DataFrame, idCol: String, textCol: String,
-      minDocs: Long): DataFrame =
-    removeFrequentUnits(docs, idCol, split(col(textCol), "\n"), minDocs)
-      .withColumn("kept_text", array_join(col("kept_units"), "\n"))
-      .drop("kept_units")
 
   /** Overlapping fixed-window token chunking — the document→chunk
     * fan-out under RAG indexing and long-document training prep: each

@@ -31,7 +31,7 @@ object BinaryCorpus {
   /** Derive `{kode_proyek}/{minggu}/{file}` partition columns from the
     * path tail (reference layout, `test.py:172-173`).
     */
-  def withPathKeys(df: DataFrame): DataFrame = {
+  private[graft] def withPathKeys(df: DataFrame): DataFrame = {
     val parts = split(col("path"), "/")
     df.withColumn("nama_file", element_at(parts, -1))
       .withColumn("minggu", element_at(parts, -2))
@@ -46,7 +46,7 @@ object BinaryCorpus {
     * sha-overwrite upsert). Hadoop FileSystem API, so the same code
     * targets local disk, HDFS, or object stores.
     */
-  def writeBinaryTree(df: DataFrame, baseDir: String,
+  private[graft] def writeBinaryTree(df: DataFrame, baseDir: String,
       partitionCols: Seq[String], nameCol: String, contentCol: String): Unit = {
     val cols = (partitionCols :+ nameCol).map(c => col(c).cast("string")) :+ col(contentCol)
     val hadoopConf = new org.apache.hadoop.conf.Configuration(

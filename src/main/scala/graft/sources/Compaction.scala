@@ -104,7 +104,7 @@ object Compaction {
     * ([[recoverCrashedSwap]] first, [[swapTmpIntoPlace]]'s
     * `__compact_old` rollback window). An identity `transform` merely
     * re-buckets fragmented files; state-table compaction
-    * ([[graft.operators.Dedup.compactSignatureState]], the sketch and
+    * ([[graft.operators.Dedup.compactSignatureStateKeys]], the sketch and
     * index folds) drops rows (keep-latest, retention).
     *
     * `transform` sees the directory read under the union of every

@@ -26,8 +26,7 @@ import org.apache.spark.sql.types.StructType
   *     header row silently parsed as data is the classic
   *     one-off-per-file bug.
   *
-  * TSV is the same reader with a tab delimiter — [[readTsv]] exists so
-  * call sites say what they read.
+  * TSV is the same reader with a tab delimiter.
   */
 object CsvCorpus {
 
@@ -42,8 +41,12 @@ object CsvCorpus {
       .option("escape", "\"")
 
   /** Read dropping malformed rows (the "loss accepted" mode). */
-  def read(spark: SparkSession, path: String, schema: StructType,
-      delimiter: String = ","): DataFrame =
+  def read(spark: SparkSession, path: String, schema: StructType): DataFrame =
+    read(spark, path, schema, ",")
+
+  /** [[read]] with the delimiter explicit (`"\t"` reads TSV). */
+  private[graft] def read(spark: SparkSession, path: String, schema: StructType,
+      delimiter: String): DataFrame =
     base(spark, schema, delimiter)
       .option("mode", "DROPMALFORMED").csv(path)
 
@@ -52,15 +55,11 @@ object CsvCorpus {
     * — same quarantine shape (and the same persist-before-
     * corrupt-only-projection caveat) as [[JsonlCorpus.readWithCorrupt]].
     */
-  def readWithCorrupt(spark: SparkSession, path: String, schema: StructType): DataFrame =
+  private[graft] def readWithCorrupt(spark: SparkSession, path: String, schema: StructType): DataFrame =
     base(spark, schema.add("_corrupt", org.apache.spark.sql.types.StringType), ",")
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt")
       .csv(path)
-
-  /** TSV dialect of [[read]]. */
-  def readTsv(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    read(spark, path, schema, "\t")
 
   /** Write as CSV, one file per partition (same partition-count contract
     * as [[JsonlCorpus.write]]); always with a header so the files are

@@ -52,7 +52,7 @@ object IdempotentBlobSink {
     * (the reference gets the same from its processed-keyset skip plus
     * sha-conditioned overwrite, `test.py:99-111,70-81`).
     */
-  def upload(df: DataFrame, pathCol: String, contentCol: String,
+  private[graft] def upload(df: DataFrame, pathCol: String, contentCol: String,
       storeFactory: () => BlobStore): DataFrame = {
     val spark = df.sparkSession
     val slim = df.select(col(pathCol).cast("string").as("p"), col(contentCol).as("c"))

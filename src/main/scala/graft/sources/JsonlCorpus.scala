@@ -37,7 +37,7 @@ object JsonlCorpus {
     * columns); persist/localCheckpoint the frame before a
     * corrupt-only projection, as the spec does.
     */
-  def readWithCorrupt(spark: SparkSession, path: String,
+  private[graft] def readWithCorrupt(spark: SparkSession, path: String,
       schema: StructType): DataFrame =
     spark.read
       .schema(schema.add("_corrupt", org.apache.spark.sql.types.StringType))

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Multi-dimensional data-CLUSTERING layout for data-skipping scans —
@@ -42,22 +42,12 @@ object Layout {
     * `x` occupies even bit positions, `y` odd. Monotone in the locality
     * sense: points close in (x, y) space are close in z, which is what
     * keeps row-group min/max ranges tight on both columns after a range
-    * sort by z.
+    * sort by z. A clustered write range-partitions by z
+    * (`repartitionByRange`), sorts each partition by it
+    * (`sortWithinPartitions`) and drops it before writing parquet: one
+    * range shuffle — the same cost as any global sort — paid once at
+    * ingest; every later box query on (x, y) skips row groups for free.
     */
   def mortonZ(x: Column, y: Column): Column =
     spreadBits(x).bitwiseOR(shiftleft(spreadBits(y), 1))
-
-  /** Write `df` clustered by the z-order of (xCol, yCol):
-    * range-partition into `numFiles` z-ranges, sort each partition by z,
-    * drop the helper column, write parquet. One range shuffle — the same
-    * cost as any global sort — paid once at ingest; every subsequent box
-    * query on (xCol, yCol) skips row groups for free.
-    */
-  def writeZOrdered(df: DataFrame, xCol: String, yCol: String,
-      outDir: String, numFiles: Int): Unit =
-    df.withColumn("__z", mortonZ(col(xCol), col(yCol)))
-      .repartitionByRange(numFiles, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
-      .write.mode("overwrite").parquet(outDir)
 }

@@ -134,19 +134,6 @@ object Warc {
       .select(col("url"), col("warc_date"), col("http_status"),
         col("body").cast("string").as("html"))
 
-  /** [[responses]] over the QUARANTINING read: good response records
-    * project as usual, each damaged file surfaces as one row with a
-    * null html and the error in `_corrupt` — so a curation pipeline
-    * can both keep flowing past a truncated archive and count/report
-    * exactly what it skipped (filter `_corrupt.isNull` for the clean
-    * stream, `.isNotNull` for the incident report). */
-  def responsesWithCorrupt(spark: SparkSession, path: String): DataFrame =
-    readWithCorrupt(spark, path)
-      .where(col("_corrupt").isNotNull ||
-        (col("warc_type") === "response" && col("body").isNotNull))
-      .select(col("url"), col("warc_date"), col("http_status"),
-        col("body").cast("string").as("html"), col("_corrupt"))
-
   // ---------------------------------------------------------------- parse
 
   private def isGzip(bytes: Array[Byte]): Boolean =

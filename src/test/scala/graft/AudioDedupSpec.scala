@@ -172,7 +172,7 @@ class AudioDedupSpec extends SparkSpec {
       .collect().toSeq
     val before = verdict()
     val (nb, na) = Dedup.compactSignatureStateKeys(spark, dir,
-      Seq("clip_id", "window_idx"), versionCol = Some("v"))
+      Seq("clip_id", "window_idx"), versionCol = Some("v"), retain = None)
     assert(nb == 32 && na == 16, s"one row per (clip, window): $nb -> $na")
     val vs = spark.read.parquet(dir).select(col("v")).distinct()
       .as[Long].collect().toSeq

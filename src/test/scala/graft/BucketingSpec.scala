@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
-import graft.sources.Bucketing
 
 class BucketingSpec extends SparkSpec {
 
@@ -11,14 +10,17 @@ class BucketingSpec extends SparkSpec {
     // disable auto-broadcast so the join would otherwise shuffle
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      Bucketing.writeBucketed(Tables.orders(spark, d), "b_orders",
-        Seq("o_orderkey"), 8, Seq("o_orderkey"))
-      Bucketing.writeBucketed(
+      // both sides bucketed (and sorted) by the join key into 8 buckets
+      def writeBucketed(df: org.apache.spark.sql.DataFrame, table: String): Unit =
+        df.write.mode("overwrite").bucketBy(8, "o_orderkey").sortBy("o_orderkey")
+          .saveAsTable(table)
+      writeBucketed(Tables.orders(spark, d), "b_orders")
+      writeBucketed(
         Tables.lineitem(spark, d).select("l_orderkey", "l_quantity")
           .withColumnRenamed("l_orderkey", "o_orderkey"),
-        "b_lineitem", Seq("o_orderkey"), 8, Seq("o_orderkey"))
+        "b_lineitem")
 
-      val joined = Bucketing.bucketedJoin(spark, "b_orders", "b_lineitem", Seq("o_orderkey"))
+      val joined = spark.table("b_orders").join(spark.table("b_lineitem"), Seq("o_orderkey"))
       val executed = joined.groupBy("o_orderstatus").agg(sum("l_quantity"))
       executed.collect()
       val plan = executed.queryExecution.executedPlan
@@ -126,7 +128,11 @@ class BucketingSpec extends SparkSpec {
       (col("id") % 256).cast("long").as("y"),
       col("id").as("payload"))
     val base = java.nio.file.Files.createTempDirectory("zorder").toString
-    Layout.writeZOrdered(grid, "x", "y", s"$base/z", numFiles = 32)
+    grid.withColumn("__z", Layout.mortonZ(col("x"), col("y")))
+      .repartitionByRange(32, col("__z"))
+      .sortWithinPartitions(col("__z"))
+      .drop("__z")
+      .write.mode("overwrite").parquet(s"$base/z")
     grid.repartition(32, col("payload")).write.parquet(s"$base/rand") // locality destroyed
     def rowsScanned(dir: String): Long = {
       val q = spark.read.parquet(dir)

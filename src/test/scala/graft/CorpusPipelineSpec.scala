@@ -507,8 +507,10 @@ class CorpusPipelineSpec extends SparkSpec {
       (4L, "standalone doc with no boilerplate at all"),
       (5L, "")) // empty doc must survive (split("") = [""]: one empty unit)
       .toDF("doc_id", "text")
-    val out = CorpusPipeline.removeBoilerplateLines(docs, "doc_id", "text", minDocs = 3)
-      .select("doc_id", "kept_text", "n_kept", "n_removed")
+    val out = CorpusPipeline.removeFrequentUnits(docs, "doc_id", split(col("text"), "\n"),
+        minDocs = 3)
+      .select(col("doc_id"), array_join(col("kept_units"), "\n").as("kept_text"),
+        col("n_kept"), col("n_removed"))
       .as[(Long, String, Long, Long)].collect().map(r => r._1 -> r).toMap
     assert(out(1L) == ((1L, "unique prose one", 1L, 2L)))
     assert(out(2L) == ((2L, "another unique paragraph\nmore text here", 2L, 2L)))

@@ -53,7 +53,7 @@ class CsvCorpusSpec extends SparkSpec {
     val dir = Files.createTempDirectory("tsv").toString
     Files.writeString(java.nio.file.Paths.get(dir, "data.tsv"),
       "doc_id\ttext\tscore\n1\tcommas, stay, literal\t0.5\n2\tsecond\t0.25\n")
-    val got = CsvCorpus.readTsv(spark, dir, schema)
+    val got = CsvCorpus.read(spark, dir, schema, "\t")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet
     assert(got == Set(
       (1L, "commas, stay, literal", 0.5), (2L, "second", 0.25)))

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, Incremental}
+import graft.operators.{Dedup, Incremental, Relational}
 
 class DedupSpec extends SparkSpec {
   import spark.implicits._
@@ -29,9 +29,10 @@ class DedupSpec extends SparkSpec {
       (5L, 1L, 2L)))
   }
 
-  test("keepFirstByKey keeps lowest id per key") {
+  test("exact dedup by key (topKPerGroup, k = 1) keeps lowest id per key") {
     val df = Seq((3L, "k1"), (1L, "k1"), (2L, "k2")).toDF("id", "k")
-    val kept = Dedup.keepFirstByKey(df, Seq(col("k")), col("id")).as[(Long, String)].collect().toSet
+    val kept = Relational.topKPerGroup(df, Seq(col("k")), Seq(col("id").asc), 1).drop("rank")
+      .as[(Long, String)].collect().toSet
     assert(kept == Set((1L, "k1"), (2L, "k2")))
   }
 
@@ -89,7 +90,7 @@ class DedupSpec extends SparkSpec {
       s"short docs must not match the state's short doc: $got")
   }
 
-  test("compactSignatureState: detect-parity, keep-latest, retention, rerun no-op") {
+  test("signature-state compaction: detect-parity, keep-latest, retention, rerun no-op") {
     val dir = java.nio.file.Files.createTempDirectory("sigstate").toString + "/state"
     val base = (1 to 40).map(i => s"tok$i").mkString(" ")
     val other = (50 to 90).map(i => s"yy$i").mkString(" ")
@@ -115,8 +116,8 @@ class DedupSpec extends SparkSpec {
           if (r.isNullAt(2)) -1.0 else r.getDouble(2))).sortBy(_._1).toSeq
 
     val before = verdicts(spark.read.parquet(dir))
-    val (b1, a1) = Dedup.compactSignatureState(spark, dir, "doc_id",
-      versionCol = Some("batch_id"))
+    val (b1, a1) = Dedup.compactSignatureStateKeys(spark, dir, Seq("doc_id"),
+      versionCol = Some("batch_id"), retain = None)
     assert(b1 == 5 && a1 == 2, s"keep-latest must leave one row per doc: $b1 -> $a1")
     val compacted = spark.read.parquet(dir)
     // latest version won
@@ -125,8 +126,8 @@ class DedupSpec extends SparkSpec {
     assert(verdicts(compacted) == before)
 
     // rerun no-op: compacting a compacted state keeps every row
-    val (b2, a2) = Dedup.compactSignatureState(spark, dir, "doc_id",
-      versionCol = Some("batch_id"))
+    val (b2, a2) = Dedup.compactSignatureStateKeys(spark, dir, Seq("doc_id"),
+      versionCol = Some("batch_id"), retain = None)
     assert(b2 == 2 && a2 == 2)
 
     // retention predicate drops doc 2's signature; doc 1 still detected
@@ -137,7 +138,7 @@ class DedupSpec extends SparkSpec {
       Seq(10L -> 1L, 11L -> -1L))
   }
 
-  test("compactSignatureState without a version column collapses exact re-appends only") {
+  test("compactSignatureStateKeys without a version column collapses exact re-appends only") {
     val dir = java.nio.file.Files.createTempDirectory("sigstate2").toString + "/state"
     val docs = Seq((1L, "a b c d e f"), (2L, "g h i j k l")).toDF("doc_id", "text")
     val s = Dedup.minHashSignatures(docs, "doc_id", "text", 2, 16)
@@ -147,7 +148,8 @@ class DedupSpec extends SparkSpec {
     // column orders the two, so BOTH must survive (nothing guessed)
     Dedup.minHashSignatures(Seq((1L, "a b c d e CHANGED")).toDF("doc_id", "text"),
       "doc_id", "text", 2, 16).write.mode("append").parquet(dir)
-    val (before, after) = Dedup.compactSignatureState(spark, dir, "doc_id", versionCol = None)
+    val (before, after) = Dedup.compactSignatureStateKeys(spark, dir, Seq("doc_id"),
+      versionCol = None, retain = None)
     assert(before == 5 && after == 3, s"exact dups only: $before -> $after")
   }
 

@@ -160,13 +160,13 @@ class ImageDedupSpec extends SparkSpec {
       imgs(Seq(0L, 10L, 20L, 30L, 40L), 0), "img_id", "content"))
     assert(oneShot == persisted, "incremental state must equal one-shot")
     // compaction: keep-latest collapses the redelivered rows, verdicts hold
-    val (b1, a1) = Dedup.compactSignatureState(spark, dir, "img_id",
-      versionCol = Some("batch_id"))
+    val (b1, a1) = Dedup.compactSignatureStateKeys(spark, dir, Seq("img_id"),
+      versionCol = Some("batch_id"), retain = None)
     assert(b1 == 8 && a1 == 5, s"keep-latest must leave one row per image: $b1 -> $a1")
     assert(verdicts(spark.read.parquet(dir)) == persisted)
     // rerun no-op
-    val (b2, a2) = Dedup.compactSignatureState(spark, dir, "img_id",
-      versionCol = Some("batch_id"))
+    val (b2, a2) = Dedup.compactSignatureStateKeys(spark, dir, Seq("img_id"),
+      versionCol = Some("batch_id"), retain = None)
     assert(b2 == 5 && a2 == 5, s"rerun must keep every row: $b2 -> $a2")
     // retention: dropping the old batch un-flags its copies
     val (_, a3) = Dedup.compactSignatureStateKeys(spark, dir, Seq("img_id"),
@@ -401,8 +401,8 @@ class ImageDedupSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("ovstate_").toString
     state.withColumn("v", lit(1L)).write.mode("append").parquet(dir)
     state.withColumn("v", lit(2L)).write.mode("append").parquet(dir)
-    val (nb, na) = Dedup.compactSignatureState(spark, dir, "img_id",
-      versionCol = Some("v"))
+    val (nb, na) = Dedup.compactSignatureStateKeys(spark, dir, Seq("img_id"),
+      versionCol = Some("v"), retain = None)
     assert(nb == 4 && na == 2, s"keep-latest per image: $nb -> $na")
     val res2 = Dedup.imageNearDuplicatesOrientedVerifiedVsState(
         batch, "img_id", "content", spark.read.parquet(dir).drop("v"))

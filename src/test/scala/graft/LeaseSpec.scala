@@ -84,7 +84,7 @@ class LeaseSpec extends SparkSpec {
     assert(leaseFile(idxDir).delete())
     // upsert = delete + append under ONE lease (reentrant), and the
     // vector mutators share the same guard
-    TokenIndex.upsert(corpus, "id", "text", idxDir, 2L)
+    TokenIndex.upsert(corpus, "id", "text", idxDir, 2L, Nil)
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val vecDir = s"$base/vec"
     VectorIndex.build(emb, "vec_id", "embedding", vecDir, k = 4, maxIter = 3)

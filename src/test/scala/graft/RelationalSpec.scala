@@ -134,8 +134,8 @@ class RelationalSpec extends SparkSpec {
 
   test("dag depth = longest path in hops") {
     val edges = Seq((1L, 2L), (2L, 3L), (1L, 3L)).toDF("src", "dst")
-    val d = Relational.dagDepth(edges, "src", "dst")
-      .as[(Long, Long)].collect().toMap
+    val d = Relational.dagRelaxMax(edges.withColumn("__w", lit(1L)), "src", "dst",
+      Seq("__w" -> "depth")).as[(Long, Long)].collect().toMap
     assert(d == Map(1L -> 0L, 2L -> 1L, 3L -> 2L))
   }
 
@@ -145,7 +145,7 @@ class RelationalSpec extends SparkSpec {
     // doubling closure: chain of 54 edges → all (i, j) i<j pairs
     val tc = Relational.transitiveClosure(edges, "src", "dst")
     assert(tc.count() == n * (n - 1) / 2)
-    // dagDepth's one-hop relaxation: needs 54 iterations — the lineage-growth
+    // hop-depth relaxation (unit weights): needs 54 iterations — the lineage-growth
     // case (localMaxEdges = 0 forces the distributed loop on this tiny fixture)
     val d = Relational.dagRelaxMax(edges.withColumn("__w", lit(1L)), "src", "dst",
       Seq("__w" -> "depth"), maxIter = 60, localMaxEdges = 0L)
@@ -200,8 +200,8 @@ class RelationalSpec extends SparkSpec {
       edges.withColumn("__one", lit(1L)), "src", "dst",
       Seq("__one" -> "depth", "lag" -> "max_lag"))
       .as[(Long, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
-    val depth = Relational.dagDepth(edges, "src", "dst")
-      .as[(Long, Long)].collect().toMap
+    val depth = Relational.dagRelaxMax(edges.withColumn("__w", lit(1L)), "src", "dst",
+      Seq("__w" -> "depth")).as[(Long, Long)].collect().toMap
     val lag = Relational.dagLongestPath(edges, "src", "dst", "lag")
       .as[(Long, Long)].collect().toMap
     assert(fused.keySet == depth.keySet)
@@ -466,7 +466,7 @@ class RelationalSpec extends SparkSpec {
     // two-node cycle: perfectly symmetric, so every iteration keeps the
     // uniform distribution exactly (closed form, no tolerance games)
     val cyc = Seq((1L, 2L), (2L, 1L)).toDF("s", "t")
-    val rc = Relational.pageRank(cyc, "s", "t", iterations = 10)
+    val rc = Relational.pageRank(cyc, "s", "t")
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(math.abs(rc(1L) - 0.5) < 1e-12 && math.abs(rc(2L) - 0.5) < 1e-12, s"$rc")
 
@@ -474,7 +474,8 @@ class RelationalSpec extends SparkSpec {
     // outrank c, and ranks must sum to 1
     val fan = Seq((1L, 2L, 3.0), (1L, 3L, 1.0), (2L, 1L, 1.0), (3L, 1L, 1.0))
       .toDF("s", "t", "w")
-    val rf = Relational.pageRank(fan, "s", "t", Some("w"), iterations = 20)
+    val rf = Relational.pageRank(fan, "s", "t", Some("w"), iterations = 20,
+      damping = Relational.PageRankDamping, localMaxEdges = Relational.PageRankLocalMaxEdges)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(rf(2L) > rf(3L), s"weighted edge must steer mass: $rf")
     assert(math.abs(rf.values.sum - 1.0) < 1e-9, s"ranks must sum to 1: $rf")
@@ -484,7 +485,7 @@ class RelationalSpec extends SparkSpec {
     // a -> b, b dangling. Reference: the same fixed-iteration recurrence
     // computed with plain doubles.
     val edges = Seq((10L, 20L)).toDF("s", "t")
-    val got = Relational.pageRank(edges, "s", "t", iterations = 10)
+    val got = Relational.pageRank(edges, "s", "t")
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     var ra = 0.5; var rb = 0.5
     for (_ <- 1 to 10) {
@@ -498,7 +499,7 @@ class RelationalSpec extends SparkSpec {
     assert(math.abs(got.values.sum - 1.0) < 1e-12, "dangling mass must be conserved")
 
     // partitioning must not change the result beyond double round-off
-    val rep = Relational.pageRank(edges.repartition(7), "s", "t", iterations = 10)
+    val rep = Relational.pageRank(edges.repartition(7), "s", "t")
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     for ((k, v) <- got) assert(math.abs(rep(k) - v) < 1e-12, s"partition-variant at $k")
 
@@ -507,7 +508,7 @@ class RelationalSpec extends SparkSpec {
     // AND a dangling node
     val mixed = Seq((1L, 2L, 3.0), (1L, 3L, 1.0), (2L, 1L, 1.0), (3L, 4L, 2.0))
       .toDF("s", "t", "w")
-    val fast = Relational.pageRank(mixed, "s", "t", Some("w"), iterations = 10)
+    val fast = Relational.pageRank(mixed, "s", "t", Some("w"))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val dist = Relational.pageRank(mixed, "s", "t", Some("w"), iterations = 10, damping = 0.85,
         localMaxEdges = 0L)
@@ -547,7 +548,8 @@ class RelationalSpec extends SparkSpec {
         (rnd.nextInt(12).toLong, rnd.nextInt(12).toLong, (rnd.nextInt(5) + 1).toDouble)) :+
         ((rnd.nextInt(12).toLong, 99L, 2.0))
       val df = edges.toDF("s", "t", "w")
-      val fast = Relational.pageRank(df, "s", "t", Some("w"), iterations = 5)
+      val fast = Relational.pageRank(df, "s", "t", Some("w"), iterations = 5,
+        damping = Relational.PageRankDamping, localMaxEdges = Relational.PageRankLocalMaxEdges)
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
       val dist = Relational.pageRank(df, "s", "t", Some("w"), iterations = 5, damping = 0.85,
           localMaxEdges = 0L)
@@ -566,7 +568,7 @@ class RelationalSpec extends SparkSpec {
     // to the distributed path, where ids compare by value
     def b(x: Byte) = Array(x)
     val edges = Seq((b(1), b(2)), (b(2), b(3)), (b(3), b(1))).toDF("s", "t")
-    val r = Relational.pageRank(edges, "s", "t", iterations = 10)
+    val r = Relational.pageRank(edges, "s", "t")
       .collect().map(row => (row.getAs[Array[Byte]](0).toSeq, row.getDouble(1)))
     assert(r.length == 3, s"3-cycle must stay 3 nodes, got ${r.length}: $r")
     r.foreach { case (id, rank) =>

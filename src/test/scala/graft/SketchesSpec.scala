@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.Sketches
-import graft.sources.Lease
+import graft.sources.{Lease, ParquetRead}
 
 class SketchesSpec extends SparkSpec {
   import spark.implicits._
@@ -292,8 +292,8 @@ class SketchesSpec extends SparkSpec {
     states.write.mode("overwrite").parquet(dir)
     val (before, after) = Sketches.compactKllState(spark, dir, Seq("k"))
     assert(before == 6L && after == 2L, s"fold: $before -> $after")
-    val compacted = Sketches.kllStateQuantiles(spark, dir, Seq("k"),
-        Seq(0.5, 0.95), 200)
+    val compacted = Sketches.kllStateQuantiles(ParquetRead(spark, dir), Seq("k"),
+        Seq(0.5, 0.95))
       .select(col("k"), col("q"), col("value"), col("n"))
       .as[(String, Double, Double, Long)].collect()
       .map { case (k, q, v, n) => (k, q) -> (v, n) }.toMap

@@ -6,6 +6,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import graft.sources.ParquetRead
 import graft.streaming.StreamOps
 
 class StreamingSpec extends SparkSpec {
@@ -414,7 +415,7 @@ class StreamingSpec extends SparkSpec {
       Sk.hllDistinctState(b, Seq("k"), col("v")).write.mode("append").parquet(stDir)
     }.awaitTermination()
     def estimates(): Map[String, Double] =
-      Sk.hllStateEstimates(spark, stDir, Seq("k"))
+      Sk.hllEstimate(Sk.hllMergeStates(Seq("k"), ParquetRead(spark, stDir)))
         .select("k", "distinct_est").as[(String, Double)].collect().toMap
     // run 1: two keys, values 0..499 (a) and 0..99 (b, overlapping ids on
     // purpose — distinct is per key)
@@ -482,7 +483,7 @@ class StreamingSpec extends SparkSpec {
         .write.mode("append").parquet(stDir)
     }.awaitTermination()
     def summary(): (Map[String, Long], Long) = {
-      val rows = Sk.mgStateSummary(spark, stDir).collect()
+      val rows = Sk.mgStateSummary(ParquetRead(spark, stDir)).collect()
       val delta = rows.head.getLong(2)
       (rows.filter(!_.isNullAt(0)).map(r => r.getString(0) -> r.getLong(1)).toMap, delta)
     }
@@ -558,7 +559,7 @@ class StreamingSpec extends SparkSpec {
           throw new IllegalStateException("injected crash after the state append")
       }.awaitTermination()
     def summary(stDir: String): Set[(String, Long, Long)] =
-      Sk.mgStateSummary(spark, stDir).as[(String, Long, Long)].collect().toSet
+      Sk.mgStateSummary(ParquetRead(spark, stDir)).as[(String, Long, Long)].collect().toSet
     // fewer distinct items than counters: every run's MG sketch is exact
     // and order-insensitive, so only redelivery could move the read
     val batch1 = Seq.fill(40)("hot") ++ Seq.fill(25)("warm") ++ Seq("rare1", "rare2")
@@ -610,7 +611,7 @@ class StreamingSpec extends SparkSpec {
         .write.mode("append").parquet(stDir)
     }.awaitTermination()
     def read(): Map[(String, Double), Long] =
-      Sk.histStateQuantiles(spark, stDir, Seq("k"), qs)
+      Sk.histStateQuantiles(ParquetRead(spark, stDir), Seq("k"), qs)
         .select("k", "q", "value").as[(String, Double, Long)].collect()
         .map { case (k, q, v) => (k, q) -> v }.toMap
     // run 1: a = 1..100 (+ skew: 100 extra copies of 7), b = 1..10
@@ -662,7 +663,7 @@ class StreamingSpec extends SparkSpec {
         .write.mode("append").parquet(stDir)
     }.awaitTermination()
     def read(): Map[(String, Double), (Double, Long)] =
-      Sk.kllStateQuantiles(spark, stDir, Seq("k"), qs, 200)
+      Sk.kllStateQuantiles(ParquetRead(spark, stDir), Seq("k"), qs)
         .select("k", "q", "value", "n").as[(String, Double, Double, Long)]
         .collect().map { case (k, q, v, n) => (k, q) -> (v, n) }.toMap
     // two delta runs of non-integer values (the metric class the exact
@@ -1079,8 +1080,8 @@ class StreamingSpec extends SparkSpec {
     // batch ids are WAL-pinned (+1 for the bootstrap-run-0 rule) and
     // the state compacts with the generic maintenance
     assert(spark.read.parquet(stDir).select(min(col("batch_id"))).head().getLong(0) == 1L)
-    val (b, a) = Dedup.compactSignatureState(spark, stDir, "img_id",
-      versionCol = Some("batch_id"))
+    val (b, a) = Dedup.compactSignatureStateKeys(spark, stDir, Seq("img_id"),
+      versionCol = Some("batch_id"), retain = None)
     assert(b == 5 && a == 5, s"nothing redundant to fold yet: $b -> $a")
     assert(verdicts() == streamed, "compaction must not change verdicts")
   }
@@ -1123,7 +1124,7 @@ class StreamingSpec extends SparkSpec {
     // batch ids WAL-pinned; composite-key maintenance keeps verdicts
     assert(spark.read.parquet(aSt).select(min(col("batch_id"))).head().getLong(0) == 1L)
     val (ab, aa) = Dedup.compactSignatureStateKeys(spark, aSt,
-      Seq("clip_id", "window_idx"), versionCol = Some("batch_id"))
+      Seq("clip_id", "window_idx"), versionCol = Some("batch_id"), retain = None)
     assert(ab == 48 && aa == 48, s"nothing redundant to fold yet: $ab -> $aa")
     assert(aVerdicts() == aGot, "compaction must not change verdicts")
     // ORIENTED-VERIFIED image state: same machinery, one cycle — the

@@ -64,9 +64,9 @@ class TokenIndexSpec extends SparkSpec {
     assert(got == Seq((10L, 1L, 1.0), (10L, 2L, 1.0)))
     // decontamination front door: the same probe flags docs 1 and 2 for
     // removal from the training mix — again with the corpus gone
-    val flagged = TokenIndex.flaggedCorpusIds(spark,
+    val flagged = TokenIndex.containmentJoinIndexed(spark,
       Seq((10L, "beta gamma")).toDF("pid", "ptext"), "pid", "ptext", idxDir, 1.0)
-      .as[Long].collect().sorted.toSeq
+      .select("corpus_id").distinct().as[Long].collect().sorted.toSeq
     assert(flagged == Seq(1L, 2L))
   }
 
@@ -209,8 +209,8 @@ class TokenIndexSpec extends SparkSpec {
     TokenIndex.delete(Seq(2L).toDF("id"), "id", idxDir)
     assert(pairs().map(_._2) == Seq(1L, 3L),
       "a taken-down doc must never again be a containment hit")
-    val flagged = TokenIndex.flaggedCorpusIds(spark, probes, "pid", "ptext",
-      idxDir, 1.0).as[Long].collect().sorted.toSeq
+    val flagged = TokenIndex.containmentJoinIndexed(spark, probes, "pid", "ptext",
+      idxDir, 1.0).select("corpus_id").distinct().as[Long].collect().sorted.toSeq
     assert(flagged == Seq(1L, 3L), "flagging inherits the exclusion")
     val scored = TokenIndex.bm25Indexed(spark, idxDir, Seq("beta", "zeta"))
       .select(col("corpus_id").cast("long")).as[Long].collect().sorted.toSeq
@@ -280,10 +280,10 @@ class TokenIndexSpec extends SparkSpec {
     assert(n == 3, s"collection stats must heal to one row per live doc: $n")
     // the one-call helper: same contract, idempotent under redelivery
     TokenIndex.upsert(Seq((1L, "nu xi omicron pi")).toDF("doc_id", "text"),
-      "doc_id", "text", dir, runId = 2L)
+      "doc_id", "text", dir, runId = 2L, metaCols = Nil)
     check()
     TokenIndex.upsert(Seq((1L, "nu xi omicron pi")).toDF("doc_id", "text"),
-      "doc_id", "text", dir, runId = 2L)
+      "doc_id", "text", dir, runId = 2L, metaCols = Nil)
     check()
   }
 
@@ -367,9 +367,9 @@ class TokenIndexSpec extends SparkSpec {
       .as[(Long, Double, Long)].collect().sortBy(_._1).toSeq
     val before = probe()
     assert(before.map(_._1) == Seq(1L, 2L))
-    // the default metaCols (none) differ from the stored set {lang}
+    // an empty metaCols differs from the stored set {lang}
     intercept[IllegalArgumentException] {
-      TokenIndex.upsert(batch.filter(col("doc_id") === 1L), "doc_id", "text", dir, 1L)
+      TokenIndex.upsert(batch.filter(col("doc_id") === 1L), "doc_id", "text", dir, 1L, Nil)
     }
     // the batch lacks the stored metadata column
     intercept[IllegalArgumentException] {

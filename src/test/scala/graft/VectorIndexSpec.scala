@@ -51,9 +51,10 @@ class VectorIndexSpec extends SparkSpec {
       spark, queries, "vec_id", "embedding", idxDir, k = 4, nprobe = 2))
     val before = probe()
     assert(before.map(_._2).toSet == Set(1L, 2L, 3L, 4L))
-    // the default metaCols (none) differ from the stored set {lang}
+    // an empty metaCols differs from the stored set {lang}
     intercept[IllegalArgumentException] {
-      VectorIndex.upsert(corpus.filter(col("vec_id") === 1L), "vec_id", "embedding", idxDir, 1L)
+      VectorIndex.upsert(corpus.filter(col("vec_id") === 1L), "vec_id", "embedding", idxDir, 1L,
+        Nil)
     }
     // the batch lacks the stored metadata column
     intercept[IllegalArgumentException] {
@@ -777,9 +778,9 @@ class VectorIndexSpec extends SparkSpec {
     // the one-call helper: same contract, idempotent under redelivery
     // (horizon = runId - 1 is explicit, so a replay can never swallow
     // its own append)
-    VectorIndex.upsert(reEmbedded, "vec_id", "embedding", idxDir, runId = 2L)
+    VectorIndex.upsert(reEmbedded, "vec_id", "embedding", idxDir, runId = 2L, metaCols = Nil)
     checkBoth()
-    VectorIndex.upsert(reEmbedded, "vec_id", "embedding", idxDir, runId = 2L)
+    VectorIndex.upsert(reEmbedded, "vec_id", "embedding", idxDir, runId = 2L, metaCols = Nil)
     checkBoth()
   }
 

@@ -148,7 +148,11 @@ class WarcSpec extends SparkSpec {
     assert(quar(0).getString(1).nonEmpty)
     // the curation projection over the same read: 3 clean html rows +
     // exactly the one incident row (null html, error carried)
-    val resp = Warc.responsesWithCorrupt(spark, dir).localCheckpoint(true)
+    val resp = Warc.readWithCorrupt(spark, dir)
+      .where(col("_corrupt").isNotNull ||
+        (col("warc_type") === "response" && col("body").isNotNull))
+      .select(col("body").cast("string").as("html"), col("_corrupt"))
+      .localCheckpoint(true)
     assert(resp.filter(col("_corrupt").isNull).count() == 3)
     val bad = resp.filter(col("_corrupt").isNotNull)
       .select(col("html").isNull, col("_corrupt")).collect()

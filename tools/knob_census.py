@@ -12,23 +12,29 @@ every defaulted parameter (with its [parameter list:position]) and each site
 that overrides it, grouped into src/main, perfbench/src and src/test: a call
 that passes the parameter by name or by position, or a `.copy(field = ...)`
 of a case class that has it. An argument whose text is the default's own
-text sets nothing and is no override site. A call is matched by the name it is made
-through (an `apply` by its object's name) and counts only where it resolves
-to the defining object: a call qualified by a capitalized name (import
-renames and `val X = pkg.Object` aliases resolved) counts for the object of
-that name, an unqualified call for its own file's definition when it has
-one, else for the objects the file imports the name from. Any other
-matching call (one made on a value or an expression, or an unqualified one
-whose name the file neither defines nor imports) is listed on an
-`unresolved:` line under the parameter and enters none of the totals, so no
-site is dropped silently.
+text sets nothing and is no override site.
+
+Both reports resolve a use of a name to the defs it can call. A use is
+resolved by its owner: a use qualified by a capitalized name (import renames
+and `val X = pkg.Object` aliases resolved) reaches the defs of the object of
+that name, an unqualified one the defs of its own file when one of the file's
+defs of that name admits the call, else the defs of the objects the file
+imports the name from. A resolved call then
+reaches only the overloads whose parameter-count range (required parameters
+to all parameters of the first list; no upper end for varargs or for a def
+without a parameter list) admits its argument count; a method value (no
+argument list) or a `_*` splat reaches every overload. A use the tool cannot
+resolve (one made on a value or an expression, or an unqualified one whose
+name the file neither defines nor imports) reaches every def of that name:
+`--sites` lists it on an `unresolved:` line under the parameter and counts
+it in neither total, so no site is dropped silently; `--operators` counts it
+as a reference, so a used def is never reported.
 
 `--operators` prints the public defs of src/main (not private, protected or
-override, declared in a public object, class or trait body) whose name no
-src/main or perfbench/src code uses outside a declaration, then each with
-the spec files that name it. It is a name scan: comments and string text
-are blanked, so scaladoc is no reference, but an overload that calls its
-sibling reads as referenced. The streaming entry points in
+override, declared in a public object, class or trait body) that no use in
+src/main or perfbench/src code reaches, then each with the spec files that
+reach it. Comments and string text are blanked, so scaladoc is no reference,
+and neither is an import line or a named argument. The entry points in
 `OPERATOR_EXEMPT` are left out of the total. Stdlib only.
 """
 import bisect, os, re, sys
@@ -39,6 +45,7 @@ OWNER = re.compile(r"\b(?:object|class|trait)\s+(\w+)")
 IMPORT = re.compile(r"\bimport\s+[\w.]*?\b([A-Z]\w*)\s*\.\s*(?:\{([^}]*)\}|([\w$*]+))")
 DEPTH = {"(": 1, "[": 1, "{": 1, ")": -1, "]": -1, "}": -1}
 GROUPS = ("src/main", "perfbench/src", "src/test")
+ANY = float("inf")
 
 
 def param_lists(src, i):
@@ -101,14 +108,15 @@ def scala_files(root, sub):
                 yield os.path.relpath(os.path.join(d, f), root)
 
 
-def owner_at(src, pos):
-    """The innermost object/class/trait whose body encloses `pos`."""
-    stack, depth, pending = [], 0, None
+def owner_index(src):
+    """A function from an offset to the innermost object/class/trait whose
+    body encloses it (one pass over `src`)."""
     owners = {m.end(): m.group(1) for m in OWNER.finditer(src)}
-    for i in range(pos):
+    stack, depth, pending = [], 0, None
+    marks, names = [0], [None]
+    for i, ch in enumerate(src):
         if i in owners:
             pending = owners[i]
-        ch = src[i]
         if ch == "{":
             depth += 1
             if pending:
@@ -118,25 +126,155 @@ def owner_at(src, pos):
             if stack and stack[-1][0] == depth:
                 stack.pop()
             depth -= 1
-    return stack[-1][1] if stack else None
+        else:
+            continue
+        marks.append(i + 1)
+        names.append(stack[-1][1] if stack else None)
+    return lambda pos: names[bisect.bisect_right(marks, pos) - 1]
+
+
+def skip_ws(src, i):
+    while i < len(src) and src[i] in " \t\n":
+        i += 1
+    return i
+
+
+def skip_type_args(src, i):
+    """The offset after the `[...]` at `i` (and the blanks after it), or `i`."""
+    i = skip_ws(src, i)
+    if src[i:i + 1] != "[":
+        return i
+    depth = 0
+    for j in range(i, len(src)):
+        depth += {"[": 1, "]": -1}.get(src[j], 0)
+        if depth == 0:
+            return skip_ws(src, j + 1)
+    return i
+
+
+def def_arity(src, i):
+    """(required, total) parameter counts of the first parameter list of the
+    def whose name ends at `i`; (0, ANY) for a def without one, and no upper
+    end for varargs."""
+    j = skip_type_args(src, i)
+    if src[j:j + 1] != "(":
+        return 0, ANY
+    params = [p for p in split_top(next(param_lists(src, j))) if p]
+    if params and re.match(r"\s*implicit\b", params[0]):
+        return 0, ANY
+    plain = [re.split(r"=(?!>)", p, maxsplit=1)[0] for p in params]
+    top = ANY if any(re.search(r"\*\s*$", p) for p in plain) else len(params)
+    return sum(1 for p in params if not is_defaulted(p)), top
+
+
+def call_arity(src, i):
+    """The argument count of the use whose name ends at `i`: its first `(...)`
+    list after optional type arguments, 1 for a `{...}` block argument, None
+    for a method value (no argument list) or a `_*` splat."""
+    j = skip_type_args(src, i)
+    if src[j:j + 1] == "{":
+        return 1
+    if src[j:j + 1] != "(":
+        return None
+    args = [a for a in split_top(next(param_lists(src, j))) if a]
+    return None if any(a.endswith("_*") for a in args) else len(args)
+
+
+def admits(lo, hi, n):
+    return n is None or lo <= n <= hi
+
+
+def imported_names(src):
+    """{name: {object}} for every `import ...Object.name` (braces and
+    renames included, a wildcard maps to the key "_")."""
+    out = {}
+    for m in IMPORT.finditer(src):
+        for sel in (m.group(2) or m.group(3)).split(","):
+            name = re.split(r"\s*=>\s*", sel.strip())[-1]
+            if name:
+                out.setdefault("_" if name == "*" else name, set()).add(m.group(1))
+    return out
+
+
+def local_arities(src):
+    """{call name: [(required, total)]} for every def and case class that
+    `src` declares (an `apply` under its object's name)."""
+    owner_at = owner_index(src)
+    out = {}
+    for m in re.finditer(r"\b(?:def|case\s+class)\s+([\w$]+)", src):
+        name = m.group(1)
+        if name == "apply":
+            name = owner_at(m.start()) or name
+        out.setdefault(name, []).append(def_arity(src, m.end()))
+    return out
+
+
+class Scope:
+    """What a file's names resolve through: its import renames and object
+    aliases, its imported names, and the defs it declares."""
+
+    def __init__(self, rel, src):
+        self.rel, self.local = rel, local_arities(src)
+        self.aliases = {b: a for a, b in re.findall(r"\b(\w+)\s*=>\s*(\w+)\s*[,}]", src)}
+        self.aliases.update(re.findall(r"\bval\s+([A-Z]\w*)\s*=\s*[\w.]*?\b(\w+)\s*$", src, re.M))
+        self.imports = imported_names(src)
+
+    def qualifier(self, src, start):
+        """The owner name a use at `start` is qualified by: a name, "." for
+        an expression (`f(x).g`, a chained `.g`), None if unqualified."""
+        before = src[max(0, start - 80):start]
+        m = re.search(r"(?<![\w$])(\w+)\s*\.\s*$", before)
+        if m:
+            q = self.aliases.get(m.group(1), m.group(1))
+            return None if q == "this" else q
+        return "." if re.search(r"\.\s*$", before) else None
+
+    def resolve(self, ds, name, qual, n):
+        """The defs of `ds` (each with .rel, .owner, .lo, .hi) that a use of
+        `name` qualified by `qual` with `n` arguments reaches, and whether
+        the use resolved (an unresolved one reaches every def of `ds`)."""
+        fit = lambda cands: [d for d in cands if admits(d.lo, d.hi, n)]
+        if qual and qual[0].isupper():
+            # a capitalized qualifier names an object (ours, or a foreign
+            # one that declares none of these)
+            return fit([d for d in ds if qual in (d.owner, d.call)]), True
+        if qual is None:
+            # an unqualified use binds to its own file's definition, else
+            # to an imported one
+            if any(admits(lo, hi, n) for lo, hi in self.local.get(name, ())):
+                return fit([d for d in ds if d.rel == self.rel]), True
+            owners = self.imports.get(name, set()) | self.imports.get("_", set())
+            cands = [d for d in ds if d.owner in owners]
+            if cands:
+                return fit(cands), True
+        return ds, False
+
+
+class Decl:
+    def __init__(self, rel, pos, line, owner, name, lo, hi, public=True, extra=None):
+        self.rel, self.pos, self.line, self.owner, self.name = rel, pos, line, owner, name
+        self.call = owner if name == "apply" and owner else name
+        self.lo, self.hi, self.public, self.extra = lo, hi, public, extra
 
 
 def definitions(root):
-    """(file, line, owner, name, call name, is case class, list idx, pos, param, text)."""
+    """One Decl per defaulted parameter of src/main, with `extra` =
+    (is case class, list idx, param idx, param name, param text)."""
     out = []
     for rel in scala_files(root, "src/main"):
         src = strip(open(os.path.join(root, rel), encoding="utf-8").read())
+        owner_at = owner_index(src)
         for m in DEF.finditer(src):
             kind, name = m.group(1), m.group(2)
-            owner = owner_at(src, m.start())
-            call = owner if name == "apply" and owner else name
+            owner = owner_at(m.start())
+            lo, hi = def_arity(src, m.start(2) + len(name))
             for li, plist in enumerate(param_lists(src, m.end() - 1)):
                 for pi, p in enumerate(split_top(plist)):
                     if is_defaulted(p):
                         pname = re.match(r"\s*(?:(?:implicit|val|var|private|override)\s+)*([\w$]+)", p).group(1)
                         line = src.count("\n", 0, m.start()) + 1
-                        out.append((rel, line, owner, name, call, kind != "def", li, pi, pname,
-                                    " ".join(p.split())))
+                        out.append(Decl(rel, m.start(), line, owner, name, lo, hi,
+                                        extra=(kind != "def", li, pi, pname, " ".join(p.split()))))
     return out
 
 
@@ -161,18 +299,6 @@ def arg_override(args, pi, pname, default=None):
     return None
 
 
-def imported_names(src):
-    """{name: {object}} for every `import ...Object.name` (braces and
-    renames included, a wildcard maps to the key "_")."""
-    out = {}
-    for m in IMPORT.finditer(src):
-        for sel in (m.group(2) or m.group(3)).split(","):
-            name = re.split(r"\s*=>\s*", sel.strip())[-1]
-            if name:
-                out.setdefault("_" if name == "*" else name, set()).add(m.group(1))
-    return out
-
-
 def sites(root):
     defs = definitions(root)
     files = {}
@@ -183,43 +309,26 @@ def sites(root):
     unresolved = {d: [] for d in defs}
     by_call = {}
     for d in defs:
-        by_call.setdefault(d[4], []).append(d)
+        by_call.setdefault(d.call, []).append(d)
     fields = {}
     for d in defs:
-        if d[5]:
-            fields.setdefault(d[8], []).append(d)
+        if d.extra[0]:
+            fields.setdefault(d.extra[3], []).append(d)
     for rel, (g, src) in files.items():
-        aliases = {b: a for a, b in re.findall(r"\b(\w+)\s*=>\s*(\w+)\s*[,}]", src)}
-        aliases.update(re.findall(r"\bval\s+([A-Z]\w*)\s*=\s*[\w.]*?\b(\w+)\s*$", src, re.M))
-        imports = imported_names(src)
+        scope = Scope(rel, src)
         starts = [0] + [i + 1 for i, ch in enumerate(src) if ch == "\n"]
         line_of = lambda i: bisect.bisect_right(starts, i)
         for call, ds in by_call.items():
-            local = [d for d in ds if d[0] == rel]
-            for m in re.finditer(r"(?<![\w$])((\w+)\s*\.\s*)?" + re.escape(call) + r"\s*(?:\[[^\]]*\])?\s*\(", src):
+            for m in re.finditer(r"(?<![\w$])" + re.escape(call) + r"\s*(?:\[[^\]]*\])?\s*\(", src):
                 before = src[max(0, m.start() - 16):m.start()]
                 if re.search(r"\b(def|class)\s+$", before):
                     continue
-                qual = aliases.get(m.group(2), m.group(2))
-                if qual is None and re.search(r"\.\s*$", src[max(0, m.start() - 80):m.start()]):
-                    qual = "."  # a call on an expression: `f(x).g(`, a chained `.g(`
-                if qual == "this":
-                    qual = None
-                # a capitalized qualifier names an object (ours, or a foreign
-                # class that defines none of these); an unqualified call binds
-                # to its own file's definition, else to an imported one
-                if qual and qual[0].isupper():
-                    cands = [d for d in ds if qual in (d[2], d[4])]
-                elif qual is None and local:
-                    cands = local
-                elif qual is None:
-                    cands = [d for d in ds if d[2] in imports.get(call, set()) | imports.get("_", set())]
-                else:
-                    cands = []
-                resolved = bool(cands) or (qual and qual[0].isupper())
+                qual = scope.qualifier(src, m.start())
+                cands, resolved = scope.resolve(ds, call, qual, call_arity(src, m.start() + len(call)))
                 for li, args in enumerate(param_lists(src, m.end() - 1)):
-                    for d in cands if resolved else ds:
-                        how = d[6] == li and arg_override(args, d[7], d[8], default_text(d[9]))
+                    for d in cands:
+                        _, dli, pi, pname, text = d.extra
+                        how = dli == li and arg_override(args, pi, pname, default_text(text))
                         if how and resolved:
                             found[d].append((g, f"{rel}:{line_of(m.start())}", how))
                         elif how:
@@ -242,9 +351,9 @@ def print_sites(root):
     print(f"not set outside src/test {outside}")
     print(f"not set anywhere {nowhere}")
     for d in defs:
-        rel, line, owner, name, _, _, li, pi, pname, text = d
-        where = f"{owner}.{name}" if owner else name
-        print(f"\n{rel}:{line}  {where}  [{li}:{pi}] {text}")
+        _, li, pi, _, text = d.extra
+        where = f"{d.owner}.{d.name}" if d.owner else d.name
+        print(f"\n{d.rel}:{d.line}  {where}  [{li}:{pi}] {text}")
         for g in GROUPS:
             hits = [f"{s} ({how})" for gg, s, how in found[d] if gg == g]
             print(f"  {g}: " + (", ".join(hits) if hits else "-"))
@@ -252,25 +361,28 @@ def print_sites(root):
             print("  unresolved: " + ", ".join(unresolved[d]))
 
 
-# Public streaming entry points whose callers are deployments, not graft's
-# own mains: no batch twin exists for them to be called through.
+# Public entry points whose callers are not graft's own code: the streaming
+# ones are called by deployments (no batch twin exists for them to be called
+# through), and `SparkEntry.entry` by the driver that loads the jar.
 OPERATOR_EXEMPT = ("StreamOps.availableNow", "StreamOps.decontaminateStream",
-                   "StreamOps.sessionizeStream")
+                   "StreamOps.sessionizeStream", "SparkEntry.entry")
 # Entry points named by the JVM, not by code.
 ENTRY_POINTS = ("main",)
 
 
 def code_text(src):
-    """Comments and the text of string literals blanked, except what an
-    interpolation splices in (`${...}`, `$name`); newlines and offsets kept."""
+    """Comments and the text of string literals blanked, except their quotes
+    (so a literal still reads as an argument) and what an interpolation
+    splices in (`${...}`, `$name`); newlines and offsets kept."""
     blank = lambda t: re.sub(r"[^\n]", " ", t)
+    inert = lambda t: re.sub(r'[^\n"]', " ", t)
 
     def literal(m):
         t, out, last = m.group(0), "", 0
         for k in re.finditer(r"\$\{[^}\n]*\}|\$[A-Za-z_]\w*", t):
-            out += blank(t[last:k.start()]) + t[k.start():k.end()]
+            out += inert(t[last:k.start()]) + t[k.start():k.end()]
             last = k.end()
-        return out + blank(t[last:])
+        return out + inert(t[last:])
     src = re.sub(r"/\*.*?\*/", lambda m: blank(m.group(0)), src, flags=re.S)
     src = re.sub(r'"""(?:.|\n)*?"""|"(?:\\.|[^"\\\n])*"', literal, src)
     return re.sub(r"//[^\n]*", lambda m: blank(m.group(0)), src)
@@ -302,10 +414,12 @@ def template_bodies(src):
     return out
 
 
-def public_members(rel, src):
-    """(line, owner, name) of each public, non-override `def` declared directly
-    in an object, class or trait body that is itself public, not in a method."""
+def declarations(rel, src):
+    """A Decl for every `def` of `src`; `public` when it is not private,
+    protected or override and sits directly in an object, class or trait
+    body that is itself public (not in a method)."""
     bodies = template_bodies(src)
+    owner_at = owner_index(src)
     defs = [(m.start(), m.group(1)) for m in re.finditer(r"\bdef\s+([\w$]+)", src)]
     out, stack, k = [], [], 0
     for i, ch in enumerate(src):
@@ -313,11 +427,11 @@ def public_members(rel, src):
             pos, name = defs[k]
             k += 1
             mods = src[max(src.rfind("\n", 0, pos), src.rfind("{", 0, pos), src.rfind(";", 0, pos)) + 1:pos]
-            if not stack or not all(b in bodies and not bodies[b] for b in stack):
-                continue
-            if re.search(r"\b(?:private|protected|override)\b", mods) or name in ENTRY_POINTS:
-                continue
-            out.append((src.count("\n", 0, pos) + 1, owner_at(src, pos), name))
+            public = (bool(stack) and all(b in bodies and not bodies[b] for b in stack)
+                      and not re.search(r"\b(?:private|protected|override)\b", mods)
+                      and name not in ENTRY_POINTS)
+            lo, hi = def_arity(src, src.index(name, pos + 3) + len(name))
+            out.append(Decl(rel, pos, src.count("\n", 0, pos) + 1, owner_at(pos), name, lo, hi, public))
         if ch == "{":
             stack.append(i)
         elif ch == "}" and stack:
@@ -326,37 +440,52 @@ def public_members(rel, src):
 
 
 def operators(root):
-    """[(file, line, Owner.name, spec files naming it)] for each public def in
-    src/main whose name no src/main or perfbench/src code uses outside a
-    declaration (an `apply` counts as used where its object's name is), and
-    the same rows for the exempt ones; scaladoc, comments and string text are
-    no uses."""
-    texts, used = {}, {}
+    """[(file, line, Owner.name, spec files reaching it)] for each public def
+    in src/main that no src/main or perfbench/src use reaches, and the same
+    rows for the exempt ones."""
+    texts = {}
     for g in GROUPS:
         for rel in scala_files(root, g):
-            t = code_text(open(os.path.join(root, rel), encoding="utf-8").read())
-            texts[rel] = t
-            for m in re.finditer(r"(?<![\w$])([\w$]+)", t):
-                if not re.search(r"\b(?:def|object|class|trait)\s+$", t[max(0, m.start() - 16):m.start()]):
-                    used.setdefault(m.group(1), set()).add((g, rel))
-    found, exempt = [], []
+            texts[rel] = (g, code_text(open(os.path.join(root, rel), encoding="utf-8").read()))
+    by_name = {}
     for rel in scala_files(root, "src/main"):
-        for line, owner, name in public_members(rel, texts[rel]):
-            uses = used.get(owner if name == "apply" and owner else name, set())
-            if any(g != "src/test" for g, _ in uses):
+        for d in declarations(rel, texts[rel][1]):
+            by_name.setdefault(d.call, []).append(d)
+    uses = {}
+    for rel, (g, t) in texts.items():
+        scope = Scope(rel, t)
+        line_start = [0] + [i + 1 for i, ch in enumerate(t) if ch == "\n"]
+        for m in re.finditer(r"(?<![\w$])([\w$]+)", t):
+            ds = by_name.get(m.group(1))
+            if not ds:
                 continue
-            where = f"{owner}.{name}" if owner else name
-            row = (rel, line, where, sorted(r for _, r in uses))
+            start = line_start[bisect.bisect_right(line_start, m.start()) - 1]
+            if (re.search(r"\b(?:def|object|class|trait|val|var)\s+$", t[max(0, m.start() - 16):m.start()])
+                    or re.match(r"\s*import\b", t[start:m.start()])
+                    or re.match(r"\s*=(?![=>])", t[m.end():m.end() + 3])):
+                continue
+            qual = scope.qualifier(t, m.start())
+            reached, _ = scope.resolve(ds, m.group(1), qual, call_arity(t, m.end()))
+            for d in reached:
+                uses.setdefault(id(d), set()).add((g, rel))
+    found, exempt = [], []
+    for ds in by_name.values():
+        for d in ds:
+            hits = uses.get(id(d), set())
+            if not d.public or any(g != "src/test" for g, _ in hits):
+                continue
+            where = f"{d.owner}.{d.name}" if d.owner else d.name
+            row = (d.rel, d.line, where, sorted(r for _, r in hits))
             (exempt if where in OPERATOR_EXEMPT else found).append(row)
-    return found, exempt
+    return sorted(found), sorted(exempt)
 
 
 def print_operators(root):
     found, exempt = operators(root)
     print(f"public defs not referenced outside src/test {len(found)}")
     for rel, line, where, tests in found:
-        print(f"{rel}:{line}  {where}  src/test: " + (", ".join(os.path.basename(t) for t in tests) or "-"))
-    print("exempt: " + ", ".join(OPERATOR_EXEMPT))
+        print(f"{rel}:{line}  {where}  src/test: " + (", ".join(sorted({os.path.basename(t) for t in tests})) or "-"))
+    print("exempt: " + ", ".join(where for _, _, where, _ in exempt))
 
 if __name__ == "__main__":
     args = sys.argv[1:]
