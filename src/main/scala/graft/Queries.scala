@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
-import graft.functions.{TextFunctions => TF, VectorFunctions => VF, HashFunctions => HF}
+import graft.functions.{TextFunctions => TF, HashFunctions => HF}
 import graft.operators.{Dedup, Relational, Similarity}
 import graft.sources.ParquetRead
 

@@ -598,31 +598,9 @@ object Dedup {
     * signature diversity, never corpus size × frame count. Undecodable
     * payloads and frames contribute nothing (quarantine upstream).
     */
-  def videoNearDuplicates(
-      df: DataFrame,
-      idCol: String,
-      bytesCol: String): DataFrame = {
-    // the frame's composite key rides the blocked join as ONE orderable
-    // struct column (hammingNearDuplicates needs min/least/< over
-    // __id, all struct-total in Spark) — no synthetic id whose
-    // recompute could drift between the rep join and the expansion
-    val sigs = videoSignatures(df, idCol, bytesCol).select(
-      struct(col(idCol).as("vid"), col("frame_idx").as("fidx")).as("__id"),
-      col("sig").as("__sig"))
-    hammingNearDuplicates(sigs, bits = 64, chunks = SigChunks, maxHamming = VideoMaxHamming)
-      .select(col("id_a.vid").as("vid_a"), col("id_a.fidx").as("fidx_a"),
-        col("id_b.vid").as("vid_b"), col("id_b.fidx").as("fidx_b"),
-        col("hamming"))
-      .filter(col("vid_a") =!= col("vid_b"))
-      // cross-video frame pairs always order vid_a < vid_b (struct
-      // comparison is field-lexicographic), so the video-pair key needs
-      // no least/greatest re-normalization
-      .groupBy(col("vid_a").as("id_a"), col("vid_b").as("id_b"))
-      .agg(least(count_distinct(col("fidx_a")),
-          count_distinct(col("fidx_b"))).as("n_matched"),
-        min(col("hamming")).as("min_hamming"))
-      .filter(col("n_matched") >= VideoMinMatches)
-  }
+  def videoNearDuplicates(df: DataFrame, idCol: String, bytesCol: String): DataFrame =
+    sequenceNearDuplicates(videoSignatures(df, idCol, bytesCol), idCol, "frame_idx",
+      VideoMaxHamming, VideoMinMatches)
 
   /** AUDIO near-duplicates — the audio member of the multimodal dedup
     * family, composed exactly like [[videoNearDuplicates]]:
@@ -665,22 +643,36 @@ object Dedup {
     // audioSignatures drops them from matching (the audio sibling of
     // exact-dedup's empty-document rule; AudioDedupSpec pins two
     // distinct held tones to NOT match)
-    val sigs = audioSignatures(df, idCol, bytesCol, window, hop).select(
-      struct(col(idCol).as("aid"), col("window_idx").as("widx")).as("__id"),
-      col("sig").as("__sig"))
-    hammingNearDuplicates(sigs, bits = 64, chunks = SigChunks, maxHamming = AudioMaxHamming)
-      .select(col("id_a.aid").as("aid_a"), col("id_a.widx").as("widx_a"),
-        col("id_b.aid").as("aid_b"), col("id_b.widx").as("widx_b"),
+    sequenceNearDuplicates(audioSignatures(df, idCol, bytesCol, window, hop), idCol,
+      "window_idx", AudioMaxHamming, AudioMinMatches)
+  }
+
+  /** The one-shot core of [[videoNearDuplicates]] / [[audioNearDuplicates]]:
+    * sequence signatures `(idCol, idxCol, sig)` through the family's
+    * hamming blocking, element matches aggregated two-sided per sequence
+    * pair (≥ `minMatches` DISTINCT indexes on EACH side).
+    */
+  private def sequenceNearDuplicates(sigs: DataFrame, idCol: String, idxCol: String,
+      maxHamming: Int, minMatches: Int): DataFrame = {
+    // the element's composite key rides the blocked join as ONE orderable
+    // struct column (hammingNearDuplicates needs min/least/< over
+    // __id, all struct-total in Spark) — no synthetic id whose
+    // recompute could drift between the rep join and the expansion
+    val keyed = sigs.select(
+      struct(col(idCol).as("seq"), col(idxCol).as("idx")).as("__id"), col("sig").as("__sig"))
+    hammingNearDuplicates(keyed, bits = 64, chunks = SigChunks, maxHamming = maxHamming)
+      .select(col("id_a.seq").as("seq_a"), col("id_a.idx").as("idx_a"),
+        col("id_b.seq").as("seq_b"), col("id_b.idx").as("idx_b"),
         col("hamming"))
-      .filter(col("aid_a") =!= col("aid_b"))
-      // cross-clip window pairs always order aid_a < aid_b (struct
-      // comparison is field-lexicographic), so the clip-pair key needs
-      // no least/greatest re-normalization
-      .groupBy(col("aid_a").as("id_a"), col("aid_b").as("id_b"))
-      .agg(least(count_distinct(col("widx_a")),
-          count_distinct(col("widx_b"))).as("n_matched"),
+      .filter(col("seq_a") =!= col("seq_b"))
+      // cross-sequence element pairs always order seq_a < seq_b (struct
+      // comparison is field-lexicographic), so the pair key needs no
+      // least/greatest re-normalization
+      .groupBy(col("seq_a").as("id_a"), col("seq_b").as("id_b"))
+      .agg(least(count_distinct(col("idx_a")),
+          count_distinct(col("idx_b"))).as("n_matched"),
         min(col("hamming")).as("min_hamming"))
-      .filter(col("n_matched") >= AudioMinMatches)
+      .filter(col("n_matched") >= minMatches)
   }
 
   /** The demuxer/fingerprint record type is long-keyed; a silent cast
@@ -788,8 +780,8 @@ object Dedup {
   }
 
   /** The shared vs-state core of [[videoNearDuplicatesVsState]] /
-    * [[audioNearDuplicatesVsState]]: batch sequence signatures (__bid,
-    * __bidx, __bsig) against state rows (__sid, __sidx, __ssig).
+    * [[audioNearDuplicatesVsState]]: the batch's sequence signatures
+    * `(idCol, idxCol, sig)` against state rows of the same shape.
     * Blocking runs on DISTINCT signatures on both sides (the family's
     * identical-signature skew rule — a signature shared by a million
     * frames costs the chunk join ONE row), the surviving signature
@@ -797,16 +789,19 @@ object Dedup {
     * corpus²), and frame matches aggregate two-sided per (batch clip,
     * state clip): ≥ `minMatches` DISTINCT indexes on EACH side. The
     * match is deterministic: most matched windows, ties to the
-    * smallest frame distance, ties to the smallest state id. Returns
-    * (__bid, dup_of, n_matched, min_hamming).
+    * smallest frame distance, ties to the smallest state id. Returns the
+    * batch annotated with (dup_of, n_matched, min_hamming).
     */
-  private def sequenceSigsVsState(
-      batchSigs: DataFrame, stateSigs: DataFrame,
-      maxHamming: Int, minMatches: Int): DataFrame = {
-    val sigPairs = crossSigCandidates(batchSigs, stateSigs, SigChunks, maxHamming)
-    sigPairs
-      .join(batchSigs, Seq("__bsig"))
-      .join(stateSigs, Seq("__ssig"))
+  private def sequenceSigsVsState(batch: DataFrame, idCol: String, batchSigs: DataFrame,
+      stateSigs: DataFrame, idxCol: String, maxHamming: Int, minMatches: Int): DataFrame = {
+    val bs = batchSigs.select(col(idCol).as("__bid"), col(idxCol).as("__bidx"),
+        col("sig").as("__bsig"))
+      .localCheckpoint(true)
+    val ss = stateSigs.select(col(idCol).cast("long").as("__sid"),
+      col(idxCol).as("__sidx"), col("sig").as("__ssig"))
+    val best = crossSigCandidates(bs, ss, SigChunks, maxHamming)
+      .join(bs, Seq("__bsig"))
+      .join(ss, Seq("__ssig"))
       .groupBy(col("__bid"), col("__sid"))
       .agg(least(count_distinct(col("__bidx")),
           count_distinct(col("__sidx"))).as("n_matched"),
@@ -817,6 +812,7 @@ object Dedup {
         col("__sid"))).as("m"))
       .select(col("__bid"), col("m.__sid").as("dup_of"),
         (-col("m.neg_n")).as("n_matched"), col("m.min_hamming").as("min_hamming"))
+    batch.join(best, batch(idCol) === best("__bid"), "left").drop("__bid")
   }
 
   /** Incremental video near-dup: flag each clip of a NEW batch whose
@@ -836,16 +832,9 @@ object Dedup {
       idCol: String,
       bytesCol: String,
       // (idCol, frame_idx, sig) from videoSignatures
-      stateSigs: DataFrame): DataFrame = {
-    val bs = videoSignatures(batch, idCol, bytesCol)
-      .select(col(idCol).as("__bid"), col("frame_idx").as("__bidx"),
-        col("sig").as("__bsig"))
-      .localCheckpoint(true)
-    val ss = stateSigs.select(col(idCol).cast("long").as("__sid"),
-      col("frame_idx").as("__sidx"), col("sig").as("__ssig"))
-    val best = sequenceSigsVsState(bs, ss, VideoMaxHamming, VideoMinMatches)
-    batch.join(best, batch(idCol) === best("__bid"), "left").drop("__bid")
-  }
+      stateSigs: DataFrame): DataFrame =
+    sequenceSigsVsState(batch, idCol, videoSignatures(batch, idCol, bytesCol), stateSigs,
+      "frame_idx", VideoMaxHamming, VideoMinMatches)
 
   /** Incremental audio near-dup — the audio sibling of
     * [[videoNearDuplicatesVsState]]: batch clips against stored
@@ -858,16 +847,9 @@ object Dedup {
       idCol: String,
       bytesCol: String,
       // (idCol, window_idx, sig) from audioSignatures
-      stateSigs: DataFrame): DataFrame = {
-    val bs = audioSignatures(batch, idCol, bytesCol)
-      .select(col(idCol).as("__bid"), col("window_idx").as("__bidx"),
-        col("sig").as("__bsig"))
-      .localCheckpoint(true)
-    val ss = stateSigs.select(col(idCol).cast("long").as("__sid"),
-      col("window_idx").as("__sidx"), col("sig").as("__ssig"))
-    val best = sequenceSigsVsState(bs, ss, AudioMaxHamming, AudioMinMatches)
-    batch.join(best, batch(idCol) === best("__bid"), "left").drop("__bid")
-  }
+      stateSigs: DataFrame): DataFrame =
+    sequenceSigsVsState(batch, idCol, audioSignatures(batch, idCol, bytesCol), stateSigs,
+      "window_idx", AudioMaxHamming, AudioMinMatches)
 
   /** The image-signature dial shared by the whole family:
     * [[graft.multimodal.ImageOps.dHash]] by default;

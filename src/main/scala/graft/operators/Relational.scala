@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.SparkContext
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Relational operator helpers that recur across the engine's query
   * surface: per-group top-k, wide→long reshape, sessionization, and
@@ -28,12 +30,23 @@ object Relational {
   val DescendantsExactMaxNodes = 1 << 12
 
   /** An `eligible` edge table's rows if it holds at most `max`: ONE job
-    * decides a small-graph gate and fetches the graph. */
+    * decides a small-graph gate and fetches the graph. Mixed src/dst
+    * endpoint types are never eligible — the distributed loop's union
+    * widens them, while a fast path's single node type would silently
+    * NARROW the wider endpoint's ids (a long dst wrapped into an int
+    * schema derived from src alone) and an Any-keyed index would split
+    * 1 ≠ 1L into two nodes. */
   private def smallGraph(edges: DataFrame, max: Long,
-      eligible: Boolean): Option[Array[org.apache.spark.sql.Row]] =
-    if (!eligible) None
+      eligible: Boolean): Option[Array[Row]] =
+    if (!eligible || edges.schema(0).dataType != edges.schema(1).dataType) None
     else Some(edges.limit(math.min(max, Int.MaxValue - 1L).toInt + 1).collect())
       .filter(_.length <= max)
+
+  /** A small-graph fast path's driver-computed rows as a one-partition frame. */
+  private def driverFrame(like: DataFrame, rows: Seq[Row], fields: StructField*): DataFrame = {
+    val spark = like.sparkSession
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), StructType(fields))
+  }
 
   /** Top-k rows per group, deterministic via explicit tie-break columns.
     * One shuffle (the window partition); with AQE this is the canonical
@@ -156,8 +169,7 @@ object Relational {
     require(!points.columns.contains("__b") && !ranges.columns.contains("__b"),
       "__b is reserved by rangeJoin")
     def integral(df: DataFrame, c: String): Boolean = df.schema(c).dataType match {
-      case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType => true
+      case ByteType | ShortType | IntegerType | LongType => true
       case _ => false
     }
     require(integral(ranges, loCol) && integral(ranges, hiCol),
@@ -185,7 +197,7 @@ object Relational {
     * graph drivers running in parallel — and release blocks that are
     * still live).
     */
-  private def localCheckpointTracked(df: DataFrame): (DataFrame, Set[Int]) = {
+  private[graft] def localCheckpointTracked(df: DataFrame): (DataFrame, Set[Int]) = {
     val cp = df.localCheckpoint() // eager: materialized before we return
     val ids = cp.queryExecution.analyzed.collect {
       case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
@@ -193,8 +205,78 @@ object Relational {
     (cp, ids)
   }
 
-  private def releasePinned(sc: org.apache.spark.SparkContext, ids: Set[Int]): Unit =
+  private[graft] def releasePinned(sc: SparkContext, ids: Set[Int]): Unit =
     ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
+
+  /** Re-home a (possibly checkpoint-backed) result onto the CacheManager
+    * so the CALLER's plain `unpersist()` works, then drop the checkpoint
+    * blocks it was built from. Materializes the cache first — the
+    * truncated-lineage snapshot cannot be recomputed once released
+    * (MEMORY_AND_DISK then spills rather than drops under pressure).
+    */
+  private def rehomed(df: DataFrame, pinned: Set[Int]): DataFrame = {
+    if (pinned.nonEmpty) {
+      df.persist()
+      df.count()
+      releasePinned(df.sparkSession.sparkContext, pinned)
+    }
+    df
+  }
+
+  /** A [[fixpoint]] state: its frame, the checkpoint-pinned RDDs behind
+    * it, and whether `release` may unpersist the frame. */
+  private final case class Snapshot(df: DataFrame, pinned: Set[Int], owned: Boolean) {
+    def release(): Unit = {
+      if (owned) df.unpersist()
+      releasePinned(df.sparkSession.sparkContext, pinned)
+    }
+
+    /** `f(df)` as the caller's result, freed by the caller's plain
+      * `unpersist()`: the snapshot itself is [[rehomed]]; any other frame
+      * is cached and materialized BEFORE the snapshot it reads is released. */
+    def handBack(f: DataFrame => DataFrame): DataFrame = {
+      val out = f(df)
+      if (out eq df) rehomed(df, pinned)
+      else { out.persist(); out.count(); release(); out }
+    }
+  }
+
+  /** The snapshot lifecycle of a converging graph loop, kept here once for
+    * the iterative operators below. From the persisted `seed`, round `i`
+    * (at most `maxRounds` of them) snapshots `step(state, i)`:
+    *   - persisted, or local-checkpointed when `cut(i)`: the checkpoint
+    *     truncates the logical plan, which otherwise grows every round
+    *     (doubles, for a self-join) until analysis and serialization
+    *     dominate on deep graphs;
+    *   - `converged(previous, next)` is the round's ONE probe job (beside
+    *     a cut's checkpoint). A full (no limit) scan of `next`, it caches
+    *     the snapshot completely BEFORE the previous one is dropped — a
+    *     partial cache could not be recomputed once its parent is released;
+    *   - the superseded snapshot is released, checkpoint-pinned blocks too.
+    * The first converged round's snapshot (the same rows as the one before
+    * it), else the last round's, comes back for [[Snapshot.handBack]].
+    * `keepSeed` leaves the seed, which the steps keep reading, to the caller.
+    */
+  private def fixpoint(seed: DataFrame, maxRounds: Int, keepSeed: Boolean,
+      cut: Int => Boolean)(step: (DataFrame, Int) => DataFrame)(
+      converged: (DataFrame, DataFrame) => Boolean): Snapshot = {
+    var cur = Snapshot(seed, Set.empty, owned = !keepSeed)
+    var round = 0
+    var done = false
+    while (round < maxRounds && !done) {
+      val stepped = step(cur.df, round)
+      val next =
+        if (cut(round)) {
+          val (cp, pinned) = localCheckpointTracked(stepped)
+          Snapshot(cp, pinned, owned = true)
+        } else Snapshot(stepped.persist(), Set.empty, owned = true)
+      done = converged(cur.df, next.df)
+      cur.release()
+      cur = next
+      round += 1
+    }
+    cur
+  }
 
   /** Backward as-of join: every left row picks the LATEST right row of
     * the same key whose timestamp is <= the left timestamp, left-outer —
@@ -269,27 +351,11 @@ object Relational {
       .select(lCols.map(n => col(s"__l.$n")) ++ rPayloadCols.map(n => col(s"__m.$n")): _*)
   }
 
-  /** Re-home a (possibly checkpoint-backed) result onto the CacheManager
-    * so the CALLER's plain `unpersist()` works, then drop the checkpoint
-    * blocks it was built from. Materializes the cache first — the
-    * truncated-lineage snapshot cannot be recomputed once released
-    * (MEMORY_AND_DISK then spills rather than drops under pressure).
-    */
-  private def rehomed(df: DataFrame, pinned: Set[Int]): DataFrame = {
-    if (pinned.nonEmpty) {
-      df.persist()
-      df.count()
-      releasePinned(df.sparkSession.sparkContext, pinned)
-    }
-    df
-  }
-
   /** Transitive closure of an edge table by iterated self-join doubling
     * (path-halving: frontier of length-≤2^i paths). Runs on the driver as
     * a loop of DataFrame jobs; each iteration is one shuffle join +
-    * distinct. [[ClosureMaxIter]] rounds bound runaway graphs; persists
-    * intermediate frontiers and unpersists (including checkpoint-pinned
-    * blocks) as soon as superseded.
+    * distinct. [[ClosureMaxIter]] rounds bound runaway graphs; the rounds
+    * run through [[fixpoint]], which converges when a round adds no pair.
     *
     * USE ONLY when the (src, dst) PAIR LIST itself is the deliverable:
     * the output is quadratic in component size — a single 10^6-node
@@ -308,7 +374,6 @@ object Relational {
   /** [[transitiveClosure]] with the node cap explicit. */
   private[graft] def transitiveClosure(edges: DataFrame, srcCol: String, dstCol: String,
       maxNodes: Long): DataFrame = {
-    val sc = edges.sparkSession.sparkContext
     val nNodes = edges.select(col(srcCol).as("n"))
       .union(edges.select(col(dstCol).as("n"))).distinct().count()
     require(nNodes <= maxNodes,
@@ -316,33 +381,19 @@ object Relational {
         "QUADRATIC in component size; for descendant counts use descendantCounts, for " +
         "path/reachability aggregates use dagRelaxMax, for clustering use " +
         "connectedComponents.")
-    var closure = edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct().persist()
-    var closurePinned = Set.empty[Int]
-    var n = closure.count()
-    var iter = 0
-    var converged = false
-    while (iter < ClosureMaxIter && !converged) {
-      val grown = closure.as("a")
+    val seed = edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct().persist()
+    var n = seed.count()
+    fixpoint(seed, ClosureMaxIter, keepSeed = false, _ % 5 == 4) { (closure, _) =>
+      closure.as("a")
         .join(closure.as("b"), col("a.dst") === col("b.src"))
         .select(col("a.src").as("src"), col("b.dst").as("dst"))
         .union(closure)
         .distinct()
-      // every 5th iteration cut the logical lineage (localCheckpoint
-      // materializes AND truncates the plan) — otherwise the plan tree
-      // doubles per iteration and analysis/serialization cost grows
-      // without bound on deep graphs
-      val (next, nextPinned) =
-        if (iter % 5 == 4) localCheckpointTracked(grown)
-        else (grown.persist(), Set.empty[Int])
-      val m = next.count()
-      if (m == n) { converged = true; next.unpersist(); releasePinned(sc, nextPinned) }
-      else {
-        closure.unpersist(); releasePinned(sc, closurePinned)
-        closure = next; closurePinned = nextPinned; n = m
-      }
-      iter += 1
-    }
-    rehomed(closure, closurePinned)
+    } { (_, next) =>
+      val before = n
+      n = next.count()
+      n == before
+    }.handBack(identity)
   }
 
   /** Connected components of an undirected graph: every node that appears
@@ -365,10 +416,8 @@ object Relational {
     * [[transitiveClosure]], whose output is quadratic in component size —
     * never use TC for clustering).
     *
-    * Lineage is truncated (localCheckpoint) on jump rounds — the plan
-    * would otherwise compound across rounds — and superseded snapshots
-    * release their checkpoint-pinned blocks via the tracked-release
-    * helpers.
+    * The rounds run through [[fixpoint]], which cuts lineage on the jump
+    * rounds.
     *
     * [[ComponentsMaxIter]] bounds ROUNDS; every round advances ≥2 hops and
     * every third also pointer-jumps, so the reachable diameter for a given
@@ -380,7 +429,6 @@ object Relational {
   /** [[connectedComponents]]; `localMaxEdges = 0` forces the distributed loop. */
   private[graft] def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
       localMaxEdges: Long): DataFrame = {
-    val sc = edges.sparkSession.sparkContext
     // small-graph fast path (broadcast-threshold reasoning, same as
     // dagRelaxMax): min-label propagation pays ~O(log diameter) scheduled
     // rounds of fixed driver cost; below the collect threshold a driver
@@ -389,44 +437,30 @@ object Relational {
     // callers' shape) — anything else, or null endpoints, falls through
     // to the distributed loop. ~200k edges ≈ 3 MB collected, the same
     // order as a default broadcast-join build side.
-    locally {
-      val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-        .distinct().persist()
+    val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct().persist()
+    try {
       val integral = e0.schema.forall(_.dataType match {
-        case org.apache.spark.sql.types.LongType | org.apache.spark.sql.types.IntegerType |
-          org.apache.spark.sql.types.ShortType => true
+        case LongType | IntegerType | ShortType => true
         case _ => false
       })
-      // mixed src/dst types fall through to the distributed loop (whose
-      // union widens them): the local path's single node type would
-      // silently NARROW the wider endpoint's ids (e.g. a long dst
-      // wrapped into an int schema derived from src alone)
-      val sameType = e0.schema.head.dataType == e0.schema(1).dataType
-      smallGraph(e0, localMaxEdges, integral && sameType) match {
+      smallGraph(e0, localMaxEdges, integral) match {
         case Some(rows) if !rows.exists(r => r.isNullAt(0) || r.isNullAt(1)) =>
           val out = connectedComponentsLocal(
             rows.map(r => (r.get(0).asInstanceOf[Number].longValue,
               r.get(1).asInstanceOf[Number].longValue)))
-          val spark = edges.sparkSession
           val nodeType = e0.schema.head.dataType
-          val schema = org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("id", nodeType, nullable = false),
-            org.apache.spark.sql.types.StructField("cluster_id", nodeType, nullable = false)))
           val narrow: Long => Any = nodeType match {
-            case org.apache.spark.sql.types.IntegerType => l => l.toInt
-            case org.apache.spark.sql.types.ShortType => l => l.toShort
+            case IntegerType => l => l.toInt
+            case ShortType => l => l.toShort
             case _ => l => l
           }
-          e0.unpersist()
-          return spark.createDataFrame(
-            spark.sparkContext.parallelize(
-              out.map { case (id, cid) =>
-                org.apache.spark.sql.Row(narrow(id), narrow(cid))
-              }.toSeq, 1), schema)
+          return driverFrame(edges,
+            out.map { case (id, cid) => Row(narrow(id), narrow(cid)) }.toSeq,
+            StructField("id", nodeType, nullable = false),
+            StructField("cluster_id", nodeType, nullable = false))
         case _ =>
       }
-      e0.unpersist()
-    }
+    } finally e0.unpersist()
     val sym = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .union(edges.select(col(dstCol).as("src"), col(srcCol).as("dst")))
       .distinct()
@@ -445,71 +479,42 @@ object Relational {
     // seed = the first hop folded into one aggregation (label_0 =
     // min(id, min neighbor)): diameter-2 components (the bulk of any
     // near-dup graph) then need a single confirming round
-    var labels = symSelf.groupBy(col("src")).agg(min(col("dst")).as("cid"))
-      .withColumnRenamed("src", "id")
-    // handle to the EXACT Dataset that holds each round's persisted
-    // snapshot — `labels` is a projection of it, and Dataset.unpersist is
-    // plan-identity-based, so unpersisting the projection would be a no-op
-    var snapshot: DataFrame = labels
-    snapshot.persist()
-    var pinned = Set.empty[Int]
-    var iter = 0
-    var converged = false
-    while (iter < ComponentsMaxIter && !converged) {
-      // Round kinds, every plan reading only cached labels or a
-      // once-referenced fused intermediate:
-      //   hop∘hop   — two neighbor-min hops, one job;
-      //   jump∘hop  — label := min(label, label(label)) (pointer jumping:
-      //               halves label-chain depth, so long chains converge in
-      //               O(log diameter) rounds) with a neighbor hop fused on
-      //               top. The jump reads `labels` twice, but labels is
-      //               always the cached snapshot, so nothing recomputes.
-      // cadence: two fused-hop rounds, then a jump round, repeating.
-      val isJump = iter % 3 == 2
-      val stepped =
-        if (isJump) {
-          val jumped = labels.as("a")
-            .join(labels.as("b"), col("a.cid") === col("b.id"), "left")
-            .select(col("a.id").as("id"),
-              least(col("a.cid"), coalesce(col("b.cid"), col("a.cid"))).as("cid"))
-          hop(jumped)
-        } else hop(hop(labels))
-      // one materializing action per round; lineage is cut on the jump
-      // rounds so plans cannot compound across rounds
-      val (next, nextPinned) =
-        if (isJump) localCheckpointTracked(stepped)
-        else (stepped.persist(), Set.empty[Int])
+    val seed = symSelf.groupBy(col("src")).agg(min(col("dst")).as("cid"))
+      .withColumnRenamed("src", "id").persist()
+    // Round kinds, every plan reading only cached labels or a
+    // once-referenced fused intermediate:
+    //   hop∘hop   — two neighbor-min hops, one job;
+    //   jump∘hop  — label := min(label, label(label)) (pointer jumping:
+    //               halves label-chain depth, so long chains converge in
+    //               O(log diameter) rounds) with a neighbor hop fused on
+    //               top. The jump reads `labels` twice, but labels is
+    //               always the cached snapshot, so nothing recomputes.
+    // cadence: two fused-hop rounds, then a jump round, repeating.
+    def isJump(round: Int) = round % 3 == 2
+    val last = fixpoint(seed, ComponentsMaxIter, keepSeed = false, isJump) { (labels, round) =>
+      if (isJump(round)) {
+        val jumped = labels.as("a")
+          .join(labels.as("b"), col("a.cid") === col("b.id"), "left")
+          .select(col("a.id").as("id"),
+            least(col("a.cid"), coalesce(col("b.cid"), col("a.cid"))).as("cid"))
+        hop(jumped)
+      } else hop(hop(labels))
+    } { (labels, next) =>
       // Labels only ever decrease (hop includes self, jump takes least),
       // so a no-change round pins the whole sandwich L ≥ hop(L) ≥ L_new
       // to equality — hop(L) = L means both endpoints of every edge
       // already agree, i.e. the global fixpoint. Valid after jump rounds
       // too, for the same monotonicity reason.
-      val changed = next.as("n")
+      next.as("n")
         .join(labels.as("p"), col("n.id") === col("p.id"))
-        .filter(col("n.cid") < col("p.cid")).count()
-      snapshot.unpersist()
-      releasePinned(sc, pinned)
-      snapshot = next
-      labels = next.select(col("id"), col("cid"))
-      pinned = nextPinned
-      if (changed == 0L) converged = true
-      iter += 1
+        .filter(col("n.cid") < col("p.cid")).count() == 0L
     }
     symSelf.unpersist()
-    // re-home onto the output plan so the CALLER's plain unpersist
-    // releases everything this iteration created. `out` is a pure rename
-    // of the final snapshot, so for persist-backed snapshots CacheManager
-    // dedupes both onto ONE entry (sameResult match) — do NOT unpersist
-    // the snapshot here: that would drop out's cache with it and leave a
-    // lineage pointing at released checkpoint blocks. The caller's
-    // out.unpersist() releases the shared entry; for checkpoint-backed
-    // snapshots (jump-round exit) out.persist() is a fresh entry and the
-    // pinned blocks are safe to release once out has materialized.
-    val out = labels.withColumnRenamed("cid", "cluster_id")
-    out.persist()
-    out.count()
-    releasePinned(sc, pinned)
-    out
+    // the result is a pure rename of the last snapshot, so the CacheManager
+    // dedupes a persist-backed snapshot and the result onto ONE entry:
+    // unpersisting the snapshot would drop the result's cache, so its entry
+    // passes to the caller (`owned = false`; pinned blocks still released)
+    last.copy(owned = false).handBack(_.withColumnRenamed("cid", "cluster_id"))
   }
 
   /** Driver kernel of [[connectedComponents]]'s small-graph path:
@@ -549,8 +554,7 @@ object Relational {
     * (floored at 0 — every node starts at 0 and values are only max'd
     * upward). One shuffle join + one aggregation per iteration; each
     * iteration extends paths by one edge, so [[dagRelaxMax]]'s default
-    * `maxIter` must cover the DAG's depth. Lineage is truncated every 5
-    * iterations.
+    * `maxIter` must cover the DAG's depth.
     */
   def dagLongestPath(edges: DataFrame, srcCol: String, dstCol: String,
       weightCol: String): DataFrame =
@@ -564,14 +568,13 @@ object Relational {
     * metric. `weights` maps an input edge-weight column to its output
     * distance column; each output is the max over all paths into the
     * node of the sum of that weight (floored at 0). Iterations stop when
-    * EVERY metric is stable; lineage is truncated every 5 rounds and
-    * superseded checkpoint blocks are released.
+    * EVERY metric is stable; the rounds run through [[fixpoint]], which
+    * cuts lineage every 5th round.
     */
   def dagRelaxMax(edges: DataFrame, srcCol: String, dstCol: String,
       weights: Seq[(String, String)], maxIter: Int = 50,
       localMaxEdges: Long = DagLocalMaxEdges): DataFrame = {
     require(weights.nonEmpty, "dagRelaxMax: need at least one weight column")
-    val sc = edges.sparkSession.sparkContext
     val outCols = weights.map(_._2)
     // parallel edges collapse per-weight to their max — the binding constraint
     val e = edges.select(col(srcCol).as("src") +: col(dstCol).as("dst") +:
@@ -586,55 +589,31 @@ object Relational {
     // Collect once and relax round-SYNCHRONOUSLY (Jacobi, not
     // Gauss–Seidel) so a truncating maxIter sees bit-identical state to
     // the distributed loop. Spec-pinned equivalent on random DAGs.
-    // Same-type guard as connectedComponents: with mixed src/dst types
-    // the local rows would carry node values that mismatch the declared
-    // single-type schema (the distributed loop's union widens instead)
-    smallGraph(e, localMaxEdges, e.schema.head.dataType == e.schema(1).dataType) match {
+    smallGraph(e, localMaxEdges, eligible = true) match {
       case Some(rows) =>
         val out = dagRelaxMaxLocal(rows, outCols.size, maxIter)
-        val spark = edges.sparkSession
-        val nodeType = e.schema.head.dataType
-        val schema = org.apache.spark.sql.types.StructType(
-          org.apache.spark.sql.types.StructField("node", nodeType) +:
-            outCols.map(o => org.apache.spark.sql.types.StructField(
-              o, org.apache.spark.sql.types.LongType, nullable = false)))
         e.unpersist()
-        return spark.createDataFrame(
-          spark.sparkContext.parallelize(out.toSeq, 1), schema)
+        return driverFrame(edges, out.toSeq, StructField("node", e.schema.head.dataType) +:
+          outCols.map(o => StructField(o, LongType, nullable = false)): _*)
       case None =>
     }
-    var dist = e.select(col("src").as("node")).union(e.select(col("dst"))).distinct()
+    val seed = e.select(col("src").as("node")).union(e.select(col("dst"))).distinct()
       .select(col("node") +: outCols.map(o => lit(0L).as(o)): _*).persist()
-    var distPinned = Set.empty[Int]
-    var iter = 0
-    var changed = true
-    while (iter < maxIter && changed) {
-      val step = dist.as("d").join(e, col("d.node") === col("src"))
+    val last = fixpoint(seed, maxIter, keepSeed = false, _ % 5 == 4) { (dist, _) =>
+      dist.as("d").join(e, col("d.node") === col("src"))
         .select(col("dst").as("node") +:
           outCols.map(o => (col(o) + col(s"__w_$o")).as(o)): _*)
         .union(dist)
         .groupBy("node")
         .agg(max(outCols.head).as(outCols.head),
           outCols.tail.map(o => max(o).as(o)): _*)
-      // relaxation adds ONE edge per iteration, so deep DAGs take many
-      // iterations: periodically truncate lineage or the plan grows
-      // linearly and per-iteration planning time dominates
-      val (relaxed, relaxedPinned) =
-        if (iter % 5 == 4) localCheckpointTracked(step)
-        else (step.persist(), Set.empty[Int])
-      // ONE job per round: the convergence probe is a full (no limit)
-      // aggregation, so its scan of `relaxed` fully materializes the
-      // cache BEFORE dist is dropped — a partially-populated snapshot
-      // could not back recomputation once its parent is released
-      changed = relaxed.as("l").join(dist.as("r"), Seq("node"))
+    } { (dist, relaxed) =>
+      relaxed.as("l").join(dist.as("r"), Seq("node"))
         .filter(outCols.map(o => col(s"l.$o") =!= col(s"r.$o")).reduce(_ || _))
-        .count() > 0
-      dist.unpersist(); releasePinned(sc, distPinned)
-      dist = relaxed; distPinned = relaxedPinned
-      iter += 1
+        .count() == 0
     }
     e.unpersist()
-    rehomed(dist, distPinned)
+    last.handBack(identity)
   }
 
   /** Driver kernel of [[dagRelaxMax]]'s small-graph path. Round-
@@ -643,8 +622,8 @@ object Relational {
     * null endpoints and null weights behave like the equi-join/max
     * semantics they mirror (edge inert; metric skipped).
     */
-  private def dagRelaxMaxLocal(edgeRows: Array[org.apache.spark.sql.Row],
-      nMetrics: Int, maxIter: Int): Array[org.apache.spark.sql.Row] = {
+  private def dagRelaxMaxLocal(edgeRows: Array[Row], nMetrics: Int,
+      maxIter: Int): Array[Row] = {
     val idx = scala.collection.mutable.LinkedHashMap.empty[Any, Int]
     def id(v: Any): Int = idx.getOrElseUpdate(v, idx.size)
     val edges = edgeRows.map { r =>
@@ -686,7 +665,7 @@ object Relational {
       iter += 1
     }
     idx.iterator.map { case (v, i) =>
-      org.apache.spark.sql.Row.fromSeq(v +: cur(i).toIndexedSeq)
+      Row.fromSeq(v +: cur(i).toIndexedSeq)
     }.toArray
   }
 
@@ -724,38 +703,27 @@ object Relational {
       maxIter: Int, exactMaxNodes: Int, localMaxEdges: Long): DataFrame = {
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct().persist()
     val nodes = e.select(col("src").as("node")).union(e.select(col("dst"))).distinct().persist()
-    val v = nodes.count()
-    if (v == 0) {
-      val empty = nodes.select(col("node"), lit(0L).as("n_desc"))
-      e.unpersist(); nodes.unpersist()
-      return empty
-    }
-    // small-graph fast path — see dagRelaxMax: the per-round job +
-    // codegen fixed cost dwarfs a driver BitSet fixpoint on a tiny edge
-    // list; only replaces the EXACT register path (the HLL path exists
-    // precisely for graphs too big to collect)
-    val sameType = e.schema.head.dataType == e.schema(1).dataType
-    smallGraph(e, localMaxEdges, v <= exactMaxNodes && sameType) match {
-      case Some(rows) =>
-        val outRows = descendantCountsLocal(rows, maxIter)
-        val spark = edges.sparkSession
-        val nodeType = e.schema.head.dataType
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node", nodeType),
-          org.apache.spark.sql.types.StructField(
-            "n_desc", org.apache.spark.sql.types.LongType, nullable = false)))
-        e.unpersist(); nodes.unpersist()
-        return spark.createDataFrame(
-          spark.sparkContext.parallelize(outRows.toSeq, 1), schema)
-      case None =>
-    }
-    val out =
-      if (v <= exactMaxNodes) descendantCountsExact(e, nodes, v.toInt, maxIter)
-      else descendantCountsSketch(e, nodes, maxIter)
-    out.persist()
-    out.count()
-    e.unpersist(); nodes.unpersist()
-    out
+    try {
+      val v = nodes.count()
+      if (v == 0) return nodes.select(col("node"), lit(0L).as("n_desc"))
+      // small-graph fast path — see dagRelaxMax: the per-round job +
+      // codegen fixed cost dwarfs a driver BitSet fixpoint on a tiny edge
+      // list; only replaces the EXACT register path (the HLL path exists
+      // precisely for graphs too big to collect)
+      smallGraph(e, localMaxEdges, v <= exactMaxNodes) match {
+        case Some(rows) =>
+          return driverFrame(edges, descendantCountsLocal(rows, maxIter).toSeq,
+            StructField("node", e.schema.head.dataType),
+            StructField("n_desc", LongType, nullable = false))
+        case None =>
+      }
+      val out =
+        if (v <= exactMaxNodes) descendantCountsExact(e, nodes, v.toInt, maxIter)
+        else descendantCountsSketch(e, nodes, maxIter)
+      out.persist()
+      out.count()
+      out
+    } finally { e.unpersist(); nodes.unpersist() }
   }
 
   /** Weighted PageRank with a FIXED iteration count — the
@@ -819,28 +787,19 @@ object Relational {
       // codegen fixed costs. Below the threshold, collect the edge list
       // and run the same recurrence as a driver loop (deterministic
       // accumulation order — edges sorted — so the result is
-      // partition-invariant). Mixed src/dst endpoint types skip the
-      // fast path (an Any-keyed index would split 1 ≠ 1L into two
-      // nodes) — and so does BinaryType: collected Array[Byte] ids
-      // compare by REFERENCE, which would shatter every hash-digest
-      // node into per-edge singletons, silently and differently per
-      // run. The distributed path compares binary ids by value.
+      // partition-invariant). BinaryType skips the fast path: collected
+      // Array[Byte] ids compare by REFERENCE, which would shatter every
+      // hash-digest node into per-edge singletons, silently and
+      // differently per run. The distributed path compares them by value.
       val endpointType = e.schema.head.dataType
-      val localSafe = endpointType == e.schema(1).dataType &&
-        endpointType != org.apache.spark.sql.types.BinaryType
-      smallGraph(e, localMaxEdges, localMaxEdges > 0 && localSafe) match {
+      smallGraph(e, localMaxEdges, localMaxEdges > 0 && endpointType != BinaryType) match {
         case Some(rows) =>
-          val nodeType = e.schema.head.dataType
           val (nodeIds, ranks) = pageRankLocal(rows, iterations, damping)
-          val spark = edges.sparkSession
-          val schema = org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("node", nodeType),
-            org.apache.spark.sql.types.StructField("rank",
-              org.apache.spark.sql.types.DoubleType, nullable = false)))
-          val out = spark.createDataFrame(
-            java.util.Arrays.asList(nodeIds.indices.map(i =>
-              org.apache.spark.sql.Row(nodeIds(i), ranks(i))): _*), schema)
-          return out
+          // a local relation, unlike the other fast paths' one-partition RDD
+          return edges.sparkSession.createDataFrame(
+            java.util.Arrays.asList(nodeIds.indices.map(i => Row(nodeIds(i), ranks(i))): _*),
+            StructType(Seq(StructField("node", endpointType),
+              StructField("rank", DoubleType, nullable = false))))
         case None =>
       }
       pageRankDistributed(e, iterations, damping)
@@ -852,7 +811,7 @@ object Relational {
     * accumulation order, so the result does not depend on how the
     * collected rows were partitioned).
     */
-  private def pageRankLocal(edgeRows: Array[org.apache.spark.sql.Row],
+  private def pageRankLocal(edgeRows: Array[Row],
       iterations: Int, damping: Double): (Array[Any], Array[Double]) = {
     val sorted = edgeRows.sortBy(r => (String.valueOf(r.get(0)), String.valueOf(r.get(1))))
     val idx = scala.collection.mutable.LinkedHashMap.empty[Any, Int]
@@ -926,8 +885,7 @@ object Relational {
     * state. Null endpoints: the node exists with count 0, the edge is
     * inert — equi-join parity.
     */
-  private def descendantCountsLocal(edgeRows: Array[org.apache.spark.sql.Row],
-      maxIter: Int): Array[org.apache.spark.sql.Row] = {
+  private def descendantCountsLocal(edgeRows: Array[Row], maxIter: Int): Array[Row] = {
     val idx = scala.collection.mutable.LinkedHashMap.empty[Any, Int]
     def id(v: Any): Int = idx.getOrElseUpdate(v, idx.size)
     val edges = edgeRows.map(r =>
@@ -953,7 +911,7 @@ object Relational {
       iter += 1
     }
     idx.iterator.map { case (v, i) =>
-      org.apache.spark.sql.Row(v, if (v == null) 0L else cur(i).cardinality().toLong)
+      Row(v, if (v == null) 0L else cur(i).cardinality().toLong)
     }.toArray
   }
 
@@ -965,7 +923,6 @@ object Relational {
     */
   private def descendantCountsExact(
       e: DataFrame, nodes: DataFrame, v: Int, maxIter: Int): DataFrame = {
-    val sc = e.sparkSession.sparkContext
     val words = (v + 63) / 64
     val wordCols = (0 until words).map(i => s"__b$i")
     // dense 0-based rank per node; single-partition window is fine on the
@@ -985,51 +942,41 @@ object Relational {
       g.agg(exprs.head.as(wordCols.head),
         exprs.tail.zip(wordCols.tail).map { case (c, n) => c.as(n) }: _*)
     // seed: reg_0(v) = OR of bit(u) over direct children u
-    var labels = orAgg(
+    val seed = orAgg(
       eIdx.groupBy(col("src").as("id")),
       (0 until words).map(i =>
         bit_or(when(col("__wi") === i, col("__bit")).otherwise(0L))))
       .persist()
-    var labelsPinned = Set.empty[Int]
     var total = -1L
-    var iter = 0
-    var converged = false
-    def popcount(df: DataFrame): Long =
-      df.select(wordCols.map(c => sum(bit_count(col(c)).cast("long")).as(c)): _*)
-        .na.fill(0L)
-        .select(wordCols.map(col).reduce(_ + _).as("t")).first().getLong(0)
-    while (iter < maxIter && !converged) {
+    val last = fixpoint(seed, maxIter, keepSeed = false, _ % 5 == 4) { (labels, _) =>
       // next(v) = OR over v→u of (bit(u) | reg(u)); sinks contribute
       // bit-only rows via the left join's null registers
       val j = eIdx.join(labels.withColumnRenamed("id", "dst"), Seq("dst"), "left")
-      val step = orAgg(
+      orAgg(
         j.groupBy(col("src").as("id")),
         (0 until words).map(i =>
           bit_or(coalesce(col(wordCols(i)), lit(0L))
             .bitwiseOR(when(col("__wi") === i, col("__bit")).otherwise(0L)))))
-      val (next, nextPinned) =
-        if (iter % 5 == 4) localCheckpointTracked(step)
-        else (step.persist(), Set.empty[Int])
-      // ONE job per round: the popcount is a full aggregation, so it
-      // both materializes the snapshot and answers convergence —
+    } { (_, next) =>
       // registers only grow → total popcount is monotone; a flat round
       // is the global fixpoint
-      val t = popcount(next)
-      labels.unpersist(); releasePinned(sc, labelsPinned)
-      labels = next; labelsPinned = nextPinned
-      if (t == total) converged = true
-      total = t
-      iter += 1
+      val before = total
+      total = next.select(wordCols.map(c => sum(bit_count(col(c)).cast("long")).as(c)): _*)
+        .na.fill(0L)
+        .select(wordCols.map(col).reduce(_ + _).as("t")).first().getLong(0)
+      total == before
     }
-    val counts = labels.select(col("id").as("node"),
-      wordCols.map(c => bit_count(col(c)).cast("long")).reduce(_ + _).as("n_desc"))
-    val out = nodes.join(counts, Seq("node"), "left")
-      .select(col("node"), coalesce(col("n_desc"), lit(0L)).as("n_desc"))
-    val homed = rehomed(out, labelsPinned)
-    if (labelsPinned.isEmpty) { homed.persist(); homed.count(); labels.unpersist() }
+    val homed = last.handBack(descendantTotals(nodes, _,
+      wordCols.map(c => bit_count(col(c)).cast("long")).reduce(_ + _)))
     idx.unpersist(); eIdx.unpersist()
     homed
   }
+
+  /** `(node, n_desc)` for every node: `nDesc` over its register in
+    * `labels`, 0 for a node without one (a sink). */
+  private def descendantTotals(nodes: DataFrame, labels: DataFrame, nDesc: Column): DataFrame =
+    nodes.join(labels.select(col("id").as("node"), nDesc.as("n_desc")), Seq("node"), "left")
+      .select(col("node"), coalesce(col("n_desc"), lit(0L)).as("n_desc"))
 
   /** Sketch path of [[descendantCounts]]: per-node HLL registers
     * (Datasketches, fixed bytes) unioned backward along edges — the
@@ -1040,46 +987,26 @@ object Relational {
     */
   private def descendantCountsSketch(
       e: DataFrame, nodes: DataFrame, maxIter: Int): DataFrame = {
-    val sc = e.sparkSession.sparkContext
     // base(v) = sketch of v's direct children — the fixed one-hop layer
     // every round re-unions (registers are max-merge, so re-adding is free)
     val base = e.groupBy(col("src").as("id"))
       .agg(hll_sketch_agg(col("dst")).as("sk")).persist()
     base.count()
-    var labels = base
-    var labelsPinned = Set.empty[Int]
-    var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
+    // `base` seeds the loop AND is re-read by every step: it stays the caller's
+    val last = fixpoint(base, maxIter, keepSeed = true, _ % 5 == 4) { (labels, _) =>
       val gathered = e.join(labels.withColumnRenamed("id", "dst"), Seq("dst"))
         .groupBy(col("src").as("id")).agg(hll_union_agg(col("sk")).as("ck"))
-      val step = base.join(gathered, Seq("id"), "left")
+      base.join(gathered, Seq("id"), "left")
         .select(col("id"),
           when(col("ck").isNull, col("sk"))
             .otherwise(hll_union(col("sk"), col("ck"))).as("sk"))
-      val (next, nextPinned) =
-        if (iter % 5 == 4) localCheckpointTracked(step)
-        else (step.persist(), Set.empty[Int])
-      // ONE job per round: the full (no limit) probe scan materializes
-      // the snapshot; union with a subset leaves every register — hence
-      // the serialized bytes — unchanged, so byte equality is the
-      // fixpoint test
-      val changed = next.as("n").join(labels.as("p"), Seq("id"))
-        .filter(col("n.sk") =!= col("p.sk")).count() > 0
-      if (labels ne base) { labels.unpersist(); releasePinned(sc, labelsPinned) }
-      labels = next; labelsPinned = nextPinned
-      if (!changed) converged = true
-      iter += 1
+    } { (labels, next) =>
+      // union with a subset leaves every register — hence the serialized
+      // bytes — unchanged, so byte equality is the fixpoint test
+      next.as("n").join(labels.as("p"), Seq("id"))
+        .filter(col("n.sk") =!= col("p.sk")).count() == 0
     }
-    val counts = labels.select(col("id").as("node"),
-      hll_sketch_estimate(col("sk")).as("n_desc"))
-    val out = nodes.join(counts, Seq("node"), "left")
-      .select(col("node"), coalesce(col("n_desc"), lit(0L)).as("n_desc"))
-    val homed = rehomed(out, labelsPinned)
-    if (labelsPinned.isEmpty) {
-      homed.persist(); homed.count()
-      if (labels ne base) labels.unpersist()
-    }
+    val homed = last.handBack(descendantTotals(nodes, _, hll_sketch_estimate(col("sk"))))
     base.unpersist()
     homed
   }

@@ -390,34 +390,10 @@ object Similarity {
       require(pool.nonEmpty, "kmeansCentroids: empty input")
       val dim = pool.head.length
       val sumAgg = udaf(graft.functions.Aggregators.VectorSum(dim))
-      // greedy farthest-point over the pool: start from the smallest-hash
-      // vector, repeatedly add the candidate maximizing its minimum
-      // (1 - cosine) to the chosen set
-      val chosen = scala.collection.mutable.ArrayBuffer(pool.head)
-      val minDist = Array.tabulate(pool.length) { i =>
-        1.0 - pool(i).zip(pool.head).map { case (a, b) => a * b }.sum
-      }
-      while (chosen.size < math.min(k, pool.length)) {
-        var best = 0
-        var i = 1
-        while (i < pool.length) {
-          if (minDist(i) > minDist(best)) best = i
-          i += 1
-        }
-        val next = pool(best)
-        chosen += next
-        i = 0
-        while (i < pool.length) {
-          val d = 1.0 - pool(i).zip(next).map { case (a, b) => a * b }.sum
-          if (d < minDist(i)) minDist(i) = d
-          i += 1
-        }
-      }
-      // corpus smaller than k: pad by cycling the chosen seeds (the
-      // duplicate centroids' clusters simply stay empty)
-      val nDistinct = chosen.size
-      while (chosen.size < k) chosen += chosen(chosen.size % nDistinct)
-      var cents = chosen.toArray
+      // seeds from the smallest-hash vector by (1 - cosine); a corpus
+      // smaller than k pads with duplicate centroids whose clusters stay empty
+      var cents = farthestPointSeeds(pool, k,
+        (a, b) => 1.0 - a.zip(b).map { case (x, y) => x * y }.sum)
       var iter = 0
       var shift = Double.MaxValue
       while (iter < maxIter && shift > KmeansTol) {
@@ -549,27 +525,11 @@ object Similarity {
     val futures = (0 until m).map { sIdx =>
       Future {
         val pts = sample.map(_.slice(sIdx * subdim, (sIdx + 1) * subdim))
-        // greedy farthest-point seeds over a bounded hash-ordered pool
+        // seeds over a bounded hash-ordered pool; tiny corpora pad with
+        // duplicate codewords, which never win a strict-< argmin over
+        // their lower twin — encode stays stable
         val pool = pts.take(math.min(pts.length, ncodes * 4))
-        val chosen = scala.collection.mutable.ArrayBuffer(pool.head)
-        val minD = pool.map(sq(_, pool.head))
-        while (chosen.size < math.min(ncodes, pool.length)) {
-          var best = 0; var i = 1
-          while (i < pool.length) { if (minD(i) > minD(best)) best = i; i += 1 }
-          val next = pool(best)
-          chosen += next
-          i = 0
-          while (i < pool.length) {
-            val d = sq(pool(i), next)
-            if (d < minD(i)) minD(i) = d
-            i += 1
-          }
-        }
-        // tiny corpora: pad by cycling (duplicate codewords never win a
-        // strict-< argmin over their lower twin — encode stays stable)
-        val nDistinct = chosen.size
-        while (chosen.size < ncodes) chosen += chosen(chosen.size % nDistinct)
-        val cents = chosen.toArray.map(_.clone())
+        val cents = farthestPointSeeds(pool, ncodes, sq).map(_.clone())
         var iter = 0
         val assign = new Array[Int](pts.length)
         while (iter < PqMaxIter) {
@@ -607,28 +567,32 @@ object Similarity {
     futures.map(Await.result(_, Duration.Inf)).toArray
   }
 
-  /** EXACT set-similarity self-join (prefix filtering — the AllPairs /
-    * PPJoin family): all pairs of documents whose token-SET Jaccard is
-    * ≥ `threshold`, with no probabilistic misses — the exact counterpart
-    * of the MinHash-LSH path ([[Dedup.minHashNearDuplicates]]), for when
-    * recall must be 1.0 (legal/contractual dedup, eval-set policing).
-    *
-    * The algorithm's exactness argument: order every doc's tokens by
-    * ascending global document frequency (rarest first; ties
-    * lexicographic) and keep only the first `n − ceil(t·n) + 1` as its
-    * PREFIX. Two sets with Jaccard ≥ t must share ≥ ceil(t·n) tokens,
-    * so by pigeonhole they share at least one PREFIX token — the prefix
-    * equi-join therefore misses nothing, and the exact
-    * `array_intersect / array_union` verify on candidates removes all
-    * false positives.
-    *
-    * Scale shape: the candidate join is an equi-join on single (rare!)
-    * prefix tokens — frequency-ascending ordering is what keeps 'the'
-    * out of every prefix, so candidate fan-out tracks rare-token df², not
-    * corpus df². Rank assignment is one exchange on tok; the verify joins
-    * full token arrays back by id (two hash joins). No all-pairs stage
-    * exists anywhere.
+  /** Greedy farthest-point seeding, shared by [[kmeansCentroids]] and
+    * [[pqCodebooks]]: start from `pool.head`, repeatedly add the candidate
+    * maximizing its minimum `dist` to the chosen set; a pool smaller than
+    * `k` is padded by cycling the chosen seeds.
     */
+  private def farthestPointSeeds(pool: Array[Array[Double]], k: Int,
+      dist: (Array[Double], Array[Double]) => Double): Array[Array[Double]] = {
+    val chosen = scala.collection.mutable.ArrayBuffer(pool.head)
+    val minDist = pool.map(dist(_, pool.head))
+    while (chosen.size < math.min(k, pool.length)) {
+      var best = 0; var i = 1
+      while (i < pool.length) { if (minDist(i) > minDist(best)) best = i; i += 1 }
+      val next = pool(best)
+      chosen += next
+      i = 0
+      while (i < pool.length) {
+        val d = dist(pool(i), next)
+        if (d < minDist(i)) minDist(i) = d
+        i += 1
+      }
+    }
+    val nDistinct = chosen.size
+    while (chosen.size < k) chosen += chosen(chosen.size % nDistinct)
+    chosen.toArray
+  }
+
   /** Exact set-CONTAINMENT join: every (probe, corpus) pair with
     * `|T(probe) ∩ T(corpus)| / |T(probe)| >= threshold` — the
     * asymmetric companion to [[jaccardSimilarityJoin]], for the cases
@@ -729,6 +693,28 @@ object Similarity {
       .select(col("probe_id"), col("corpus_id"), col("containment"))
   }
 
+  /** EXACT set-similarity self-join (prefix filtering — the AllPairs /
+    * PPJoin family): all pairs of documents whose token-SET Jaccard is
+    * ≥ `threshold`, with no probabilistic misses — the exact counterpart
+    * of the MinHash-LSH path ([[Dedup.minHashNearDuplicates]]), for when
+    * recall must be 1.0 (legal/contractual dedup, eval-set policing).
+    *
+    * The algorithm's exactness argument: order every doc's tokens by
+    * ascending global document frequency (rarest first; ties
+    * lexicographic) and keep only the first `n − ceil(t·n) + 1` as its
+    * PREFIX. Two sets with Jaccard ≥ t must share ≥ ceil(t·n) tokens,
+    * so by pigeonhole they share at least one PREFIX token — the prefix
+    * equi-join therefore misses nothing, and the exact
+    * `array_intersect / array_union` verify on candidates removes all
+    * false positives.
+    *
+    * Scale shape: the candidate join is an equi-join on single (rare!)
+    * prefix tokens — frequency-ascending ordering is what keeps 'the'
+    * out of every prefix, so candidate fan-out tracks rare-token df², not
+    * corpus df². Rank assignment is one exchange on tok; the verify joins
+    * full token arrays back by id (two hash joins). No all-pairs stage
+    * exists anywhere.
+    */
   def jaccardSimilarityJoin(docs: DataFrame, idCol: String, textCol: String,
       threshold: Double): DataFrame = {
     require(threshold > 0 && threshold <= 1, "threshold must be in (0,1]")

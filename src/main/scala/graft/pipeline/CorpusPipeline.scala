@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{TextFunctions => TF}
-import graft.operators.Dedup
+import graft.operators.{Dedup, Relational}
 import graft.sources.ParquetRead
 
 /** End-to-end training-data curation pipeline over a document corpus —
@@ -200,8 +200,8 @@ object CorpusPipeline {
       cfg: Config = Config()): (DataFrame, () => Unit) = {
     val spark = docs.sparkSession
     val state = graft.operators.Incremental.readState(spark, stateDir, Seq(idCol))
-    val (fresh, _) = snapshotTracked(
-      graft.operators.Incremental.newRows(docs, state, Seq(idCol)))
+    val fresh = graft.operators.Incremental.newRows(docs, state, Seq(idCol))
+      .localCheckpoint(true)
     val curated = curate(fresh, idCol, textCol, cfg)
     // state must record every SEEN id (curated or filtered out) or
     // rejected docs would be re-curated forever
@@ -252,23 +252,21 @@ object CorpusPipeline {
     // terminal action).
     val (curated0, commitState) =
       curateIncrementalStaged(docs, idCol, textCol, stateDir, cfg)
-    val (curated, curatedPinned) = snapshotTracked(curated0)
+    val (curated, curatedPinned) = Relational.localCheckpointTracked(curated0)
     // a store holding no data files (never committed, or only a crashed
     // first append's `_temporary/`) has no signatures to match against
     val sigFiles = ParquetRead.dataFiles(spark, sigStateDir)
     val kept =
       if (sigFiles.nonEmpty) {
         val sigs = ParquetRead(spark, sigStateDir, sigFiles, merge = false)
-        val (k, _) = snapshotTracked(
-          Dedup.minHashNearDuplicatesVsState(curated, idCol, textCol, sigs,
-            NearDupShingleSize, NearDupNumHashes, NearDupBands,
-            cfg.nearDupThreshold)
-            .filter(col("dup_of").isNull)
-            .drop("dup_of", "est_jaccard"))
+        val k = Dedup.minHashNearDuplicatesVsState(curated, idCol, textCol, sigs,
+            NearDupShingleSize, NearDupNumHashes, NearDupBands, cfg.nearDupThreshold)
+          .filter(col("dup_of").isNull)
+          .drop("dup_of", "est_jaccard")
+          .localCheckpoint(true)
         // curated's snapshot is superseded by k's — release its blocks now
         // rather than waiting for driver GC
-        curatedPinned.foreach(id => spark.sparkContext.getPersistentRDDs
-          .get(id).foreach(_.unpersist(blocking = false)))
+        Relational.releasePinned(spark.sparkContext, curatedPinned)
         k
       } else curated
     // the returned rows are a materialized snapshot: the caller's actions
@@ -282,19 +280,6 @@ object CorpusPipeline {
         .write.mode("append").parquet(sigStateDir)
     }
     (kept, commit)
-  }
-
-  /** Eager localCheckpoint with the checkpoint-pinned RDD ids tracked, so
-    * a superseded snapshot's blocks can be released explicitly instead of
-    * waiting for driver GC (same pattern as the iterative operators in
-    * [[graft.operators.Relational]]). Single-threaded callers only: the
-    * id diff window assumes no concurrent persist.
-    */
-  private def snapshotTracked(df: DataFrame): (DataFrame, Set[Int]) = {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    val cp = df.localCheckpoint(eager = true)
-    (cp, sc.getPersistentRDDs.keySet.toSet -- before)
   }
 
   /** Write partitioned by predicted language — downstream training jobs
@@ -431,7 +416,7 @@ object CorpusPipeline {
     val u = (graft.operators.Sketches.sha60(
       concat(col(idCol).cast("string"), lit(salt))).cast("double") + 1.0) /
       graft.operators.Sketches.M
-    graft.operators.Relational.topKPerGroupNative(
+    Relational.topKPerGroupNative(
       df.filter(col(weightCol) > 0)
         .withColumn("__key", -log(u) / col(weightCol)),
       Seq(lit(1)), Seq(col("__key").asc, col(idCol).asc), k)
@@ -480,7 +465,7 @@ object CorpusPipeline {
     */
   def samplePerStratum(df: DataFrame, idCol: String, stratumCol: String,
       k: Int): DataFrame =
-    graft.operators.Relational.topKPerGroupNative(
+    Relational.topKPerGroupNative(
       df.withColumn("__h", sha2(concat(col(idCol).cast("string"), lit("sample")), 256)),
       Seq(col(stratumCol)),
       Seq(col("__h").asc, col(idCol).asc), k)

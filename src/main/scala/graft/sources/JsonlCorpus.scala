@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 /** Line-delimited JSON corpus source/sink — the wire format crawl-derived

@@ -288,6 +288,38 @@ class RelationalSpec extends SparkSpec {
     assert(leaked.isEmpty, s"pinned RDDs leaked by descendantCounts: $leaked")
   }
 
+  test("distributed graph loops: pinned job counts, nothing left persisted after unpersist") {
+    val sc = spark.sparkContext
+    val n = 55L
+    val chain = (1L until n).map(i => (i, i + 1)).toDF("src", "dst")
+    // every loop forced onto its distributed path, deep enough to reach
+    // its cut rounds; the counts are the loops' traffic, pinned exactly
+    val loops = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "transitiveClosure" -> (() => Relational.transitiveClosure(chain, "src", "dst")),
+      "connectedComponents" -> (() =>
+        Relational.connectedComponents(chain, "src", "dst", localMaxEdges = 0L)),
+      "dagRelaxMax" -> (() => Relational.dagRelaxMax(chain.withColumn("__w", lit(1L)),
+        "src", "dst", Seq("__w" -> "depth"), maxIter = 60, localMaxEdges = 0L)),
+      "descendantCounts exact" -> (() => Relational.descendantCounts(chain, "src", "dst",
+        maxIter = 60, exactMaxNodes = Relational.DescendantsExactMaxNodes, localMaxEdges = 0L)),
+      "descendantCounts sketch" -> (() => Relational.descendantCounts(chain, "src", "dst",
+        maxIter = 60, exactMaxNodes = 0, localMaxEdges = 0L)),
+      "pageRank" -> (() => Relational.pageRank(chain, "src", "dst", None,
+        Relational.PageRankIterations, Relational.PageRankDamping, localMaxEdges = 0L)))
+    val measured = loops.map { case (name, run) =>
+      val preexisting = sc.getPersistentRDDs.keySet.toSet
+      var out: org.apache.spark.sql.DataFrame = null
+      val jobs = jobsStartedBy { out = run() }
+      out.unpersist(blocking = true)
+      val leaked = sc.getPersistentRDDs.keySet.toSet -- preexisting
+      assert(leaked.isEmpty, s"$name left persisted RDDs behind: $leaked")
+      name -> jobs
+    }
+    assert(measured == Seq("transitiveClosure" -> 65, "connectedComponents" -> 92,
+      "dagRelaxMax" -> 339, "descendantCounts exact" -> 292, "descendantCounts sketch" -> 395,
+      "pageRank" -> 62), s"jobs: $measured")
+  }
+
   test("asofJoin rejects right payload columns that collide with left columns") {
     val l = Seq((1L, 10L, "a")).toDF("key", "ts", "tag")
     val r = Seq((1L, 4L, "b")).toDF("key", "q_ts", "tag") // tag collides
@@ -322,7 +354,6 @@ class RelationalSpec extends SparkSpec {
   }
 
   test("connected components: chains, triangles, separate components, min label") {
-    import graft.operators.Dedup
     // component A: long chain 1-2-3-4-5-6-7 (exercises >1 propagation round)
     // component B: triangle 10-11-12 plus pendant 13
     // component C: single edge 20-21; node 30 is isolated (absent from edges)
