@@ -233,11 +233,18 @@ object Relational {
 
     /** `f(df)` as the caller's result, freed by the caller's plain
       * `unpersist()`: the snapshot itself is [[rehomed]]; any other frame
-      * is cached and materialized BEFORE the snapshot it reads is released. */
+      * is cached, and materialized BEFORE the snapshot it reads is
+      * released. With nothing to release (not owned, nothing pinned) the
+      * snapshot stays live, so the result is not counted. */
     def handBack(f: DataFrame => DataFrame): DataFrame = {
       val out = f(df)
       if (out eq df) rehomed(df, pinned)
-      else { out.persist(); out.count(); release(); out }
+      else {
+        out.persist()
+        if (owned || pinned.nonEmpty) out.count()
+        release()
+        out
+      }
     }
   }
 
@@ -513,7 +520,8 @@ object Relational {
     // the result is a pure rename of the last snapshot, so the CacheManager
     // dedupes a persist-backed snapshot and the result onto ONE entry:
     // unpersisting the snapshot would drop the result's cache, so its entry
-    // passes to the caller (`owned = false`; pinned blocks still released)
+    // passes to the caller (`owned = false`; pinned blocks still released),
+    // already materialized by the last round's probe
     last.copy(owned = false).handBack(_.withColumnRenamed("cid", "cluster_id"))
   }
 
@@ -717,12 +725,9 @@ object Relational {
             StructField("n_desc", LongType, nullable = false))
         case None =>
       }
-      val out =
-        if (v <= exactMaxNodes) descendantCountsExact(e, nodes, v.toInt, maxIter)
-        else descendantCountsSketch(e, nodes, maxIter)
-      out.persist()
-      out.count()
-      out
+      // both paths hand back a persisted, materialized frame
+      if (v <= exactMaxNodes) descendantCountsExact(e, nodes, v.toInt, maxIter)
+      else descendantCountsSketch(e, nodes, maxIter)
     } finally { e.unpersist(); nodes.unpersist() }
   }
 

@@ -59,38 +59,43 @@ object CorpusPipeline {
         // metrics-less run — curateObserved forces it off) and for
         // corpora too large to pin as executor RDD blocks.
 
-  /** Annotate with language + quality signals (two stacked projections,
-    * no shuffle). Per-language scores are MATERIALIZED columns before the
-    * argmax: inlining them would re-evaluate each occurrence-count
-    * expression once per comparison in the when-chain.
+  /** Annotate with language + quality signals (stacked projections, no
+    * shuffle). `predicted_lang` reads the document's needle counts
+    * through ONE reference: predicate pushdown substitutes projection
+    * aliases into a filter it moves below them ([[qualityFilter]]'s),
+    * whatever their cost, so score columns referenced once per
+    * comparison of the argmax would each become a `graft_count_all`
+    * scan. The counts are bound once, as the argument of a one-element
+    * `transform`, and the per-language sums and the argmax read that
+    * binding, so the gate's plan scans each document once in the filter
+    * and once in the projection above it.
     */
   def annotate(docs: DataFrame, idCol: String, textCol: String, cfg: Config): DataFrame = {
     val padded = concat(lit(" "), col(textCol), lit(" "))
     // ONE native multi-needle scan over each document for every profile
-    // word (graft_count_all), materialized, then per-language sums — the
-    // regex idiom this replaces ran one regex pass per word (12 scans/doc)
+    // word (graft_count_all), then per-language sums — the regex idiom
+    // this replaces ran one regex pass per word (12 scans/doc)
     val allWords = LangProfiles.flatMap(_._2)
     val offsets = LangProfiles.scanLeft(0)(_ + _._2.size)
-    val scored = LangProfiles.zipWithIndex.foldLeft(
-      docs
-        .withColumn("__toks", TF.tokens(col(textCol)))
-        .withColumn("n_tokens", size(col("__toks")))
-        .withColumn("ttr", TF.typeTokenRatio(col(textCol)))
-        .withColumn("__wc", TF.occurrencesAll(padded, allWords.map(w => s" $w ")))) {
-      case (df, ((_, words), i)) =>
-        df.withColumn(s"__score_$i",
-          words.indices.map(j => element_at(col("__wc"), offsets(i) + j + 1)).reduce(_ + _))
+    // argmax over the per-language sums of `wc`, first-wins on ties; a
+    // null `wc` (null text) falls through to the last language
+    def predicted(wc: Column): Column = {
+      val scores = LangProfiles.zipWithIndex.map { case ((_, words), i) =>
+        words.indices.map(j => element_at(wc, offsets(i) + j + 1)).reduce(_ + _)
+      }
+      LangProfiles.zipWithIndex.foldRight(lit(LangProfiles.last._1)) {
+        case (((lang, _), i), elseCol) =>
+          val beatsAllLater = scores.drop(i + 1)
+            .map(scores(i) >= _).foldLeft(lit(true))(_ && _)
+          when(beatsAllLater, lit(lang)).otherwise(elseCol)
+      }
     }
-    // argmax over the materialized score columns, first-wins on ties
-    val predicted = LangProfiles.zipWithIndex.foldRight(
-      lit(LangProfiles.last._1)) { case (((lang, _), i), elseCol) =>
-      val s = col(s"__score_$i")
-      val beatsAllLater = (i + 1 until LangProfiles.size)
-        .map(j => s >= col(s"__score_$j")).foldLeft(lit(true))(_ && _)
-      when(beatsAllLater, lit(lang)).otherwise(elseCol)
-    }
-    scored.withColumn("predicted_lang", predicted)
-      .drop("__wc" +: LangProfiles.indices.map(i => s"__score_$i"): _*)
+    docs
+      .withColumn("__toks", TF.tokens(col(textCol)))
+      .withColumn("n_tokens", size(col("__toks")))
+      .withColumn("ttr", TF.typeTokenRatio(col(textCol)))
+      .withColumn("predicted_lang", element_at(transform(
+        array(TF.occurrencesAll(padded, allWords.map(w => s" $w "))), predicted(_)), 1))
   }
 
   /** Quality + language gate. */

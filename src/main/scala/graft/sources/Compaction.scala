@@ -15,13 +15,17 @@ import org.apache.spark.sql.SparkSession
   * it. It reads the directory under the union of its footers' schemas,
   * runs the caller's row transform (identity, keep-latest, retention, a
   * sketch fold, a backfill), writes the result to `__compact_tmp` and
-  * swaps it into place under the directory's [[Lease]]. The input row
-  * count comes from the footers; only the output is counted, because it
-  * sizes a flat directory's files — ceil(bytes / [[Compaction.TargetFileBytes]])
-  * with the bytes scaled by the row survival ratio, written via one
-  * round-robin `repartition` (the only way to get even output sizes
-  * from skewed inputs). A directory partitioned on disk is written with
-  * the same partition columns, in the transform's own row layout.
+  * swaps it into place under the directory's [[Lease]]. Both row
+  * counts come from footers: the input's before the write, the
+  * output's after it, so the transformed rows are computed once, by the
+  * write. A flat directory whose data files total at most
+  * [[Compaction.TargetFileBytes]] is written as one file, coalesced
+  * without a shuffle; a larger one is sized to
+  * ceil(bytes / [[Compaction.TargetFileBytes]]) files, with the bytes
+  * scaled by the row survival ratio, through one round-robin
+  * `repartition` (the only way to get even output sizes from skewed
+  * inputs). A directory partitioned on disk is written with the same
+  * partition columns, in the transform's own row layout.
   *
   * The swap is write-temp → rename-old-aside → rename-temp — NOT atomic.
   * That is a deliberate scope line: atomic replace is a table-format
@@ -115,17 +119,24 @@ object Compaction {
     * directory holds data files ([[ParquetRead.dataFiles]], listed
     * once), so a caller's checks and sidecar writes belong inside it.
     *
-    * A flat directory's output file count is sized from the input bytes
-    * scaled by the row survival ratio, so a 90%-dropped state lands in
-    * proportionally fewer [[TargetFileBytes]] files. A directory
-    * partitioned on disk (`col=value` segments in its listing) is
-    * written with the same partition columns and NOT repartitioned: the
-    * transform lays out its rows (repartition by the partition columns
-    * for one file each, a sort prefixed by them to keep row-group
-    * order) and the writer keeps that order.
+    * A flat directory whose data files total at most
+    * [[TargetFileBytes]] is written as ONE file: the transform is
+    * coalesced to one partition, so no shuffle is added, and its rows
+    * are computed once, by the write. No caller's transform adds rows,
+    * so this is the file count the size rule below gives such a
+    * directory. A larger flat directory's output file count is sized
+    * from the input bytes scaled by the row survival ratio, so a
+    * 90%-dropped state lands in proportionally fewer [[TargetFileBytes]]
+    * files; that rule counts the transformed rows before the write, so
+    * they are persisted for the count and the write to share. A
+    * directory partitioned on disk (`col=value` segments in its
+    * listing) is written with the same partition columns and NOT
+    * repartitioned: the transform lays out its rows (repartition by the
+    * partition columns for one file each, a sort prefixed by them to
+    * keep row-group order) and the writer keeps that order.
     *
-    * Returns (rowsBefore, rowsAfter): the input footers' row count and
-    * a count of the transformed rows; `(0, 0)` without a write when the
+    * Returns (rowsBefore, rowsAfter): the row counts of the input's and
+    * the written output's footers; `(0, 0)` without a write when the
     * directory holds no data files.
     *
     * Single-writer contract ENFORCED via [[Lease]] (fail-fast on a
@@ -150,24 +161,25 @@ object Compaction {
       .makeQualified(root).depth
     val partitionCols = Iterator.iterate(files.head.getPath.getParent)(_.getParent)
       .takeWhile(_.depth > depth).map(_.getName.takeWhile(_ != '=')).toSeq.reverse
-    // persist: the count and the write both read the transformed rows;
-    // the cache is released before the swap so no live plan holds the
-    // OLD directory's file listing
-    val out = transform(input).persist()
-    val rowsAfter =
+    val tmp = dir + "__compact_tmp"
+    val inBytes = files.map(_.getLen).sum
+    if (partitionCols.nonEmpty)
+      transform(input).write.partitionBy(partitionCols: _*).mode("overwrite").parquet(tmp)
+    else if (inBytes <= TargetFileBytes)
+      transform(input).coalesce(1).write.mode("overwrite").parquet(tmp)
+    else {
+      // persist: the sizing count and the write both read the
+      // transformed rows; the cache is released before the swap so no
+      // live plan holds the OLD directory's file listing
+      val out = transform(input).persist()
       try {
-        val n = out.count()
-        val tmp = dir + "__compact_tmp"
-        if (partitionCols.nonEmpty)
-          out.write.partitionBy(partitionCols: _*).mode("overwrite").parquet(tmp)
-        else {
-          val keepRatio = if (rowsBefore == 0) 1.0 else n.toDouble / rowsBefore
-          val outBytes = (files.map(_.getLen).sum * keepRatio).toLong
-          val wantFiles = math.max(1, math.ceil(outBytes.toDouble / TargetFileBytes).toInt)
-          out.repartition(wantFiles).write.mode("overwrite").parquet(tmp)
-        }
-        n
+        val keepRatio = if (rowsBefore == 0) 1.0 else out.count().toDouble / rowsBefore
+        val outBytes = (inBytes * keepRatio).toLong
+        val wantFiles = math.max(1, math.ceil(outBytes.toDouble / TargetFileBytes).toInt)
+        out.repartition(wantFiles).write.mode("overwrite").parquet(tmp)
       } finally out.unpersist(blocking = false)
+    }
+    val rowsAfter = ParquetRead.rowCount(spark, ParquetRead.dataFiles(spark, tmp))
     swapTmpIntoPlace(spark, dir)
     (rowsBefore, rowsAfter)
   }

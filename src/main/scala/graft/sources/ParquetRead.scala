@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{INT32, INT64}
@@ -23,10 +24,11 @@ import org.apache.spark.sql.functions.{col, max}
   * when `merge`. Partition columns are still discovered from the
   * directory names and appended last.
   *
-  * No schema is cached: a footer read is cheap, and a cache would need
-  * invalidation on every index append. Not for a streaming file sink's
-  * output (`_spark_metadata/`), whose committed files are its log's,
-  * not the listing's.
+  * No schema is cached: a footer read is cheap (~1 ms for a local
+  * file, opened through the session's Hadoop conf), and a cache would
+  * need invalidation on every index append. Not for a streaming file
+  * sink's output (`_spark_metadata/`), whose committed files are its
+  * log's, not the listing's.
   */
 object ParquetRead {
   import scala.jdk.CollectionConverters._
@@ -73,14 +75,23 @@ object ParquetRead {
       case None => spark.read.parquet(dir)
     }
 
+  /** `read` applied to the footer of `file`, opened with read options
+    * built from the conf `file` was made with (the session's Hadoop
+    * conf): its parquet settings (a `parquet.crypto.factory.class`,
+    * say) apply, and no fresh `Configuration` re-parses Hadoop's default
+    * resources per file, as `ParquetFileReader.open(file)`'s default
+    * options do. */
+  private def footer[T](file: HadoopInputFile)(read: ParquetFileReader => T): T = {
+    val options = HadoopReadOptions.builder(file.getConfiguration, file.getPath).build()
+    val reader = ParquetFileReader.open(file, options)
+    try read(reader) finally reader.close()
+  }
+
   /** The rows `files` hold (a [[dataFiles]] listing), summed from
     * their footers on the driver: no job. */
   def rowCount(spark: SparkSession, files: Seq[FileStatus]): Long = {
     val conf = spark.sparkContext.hadoopConfiguration
-    files.map { f =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
-      try reader.getRecordCount finally reader.close()
-    }.sum
+    files.map(f => footer(HadoopInputFile.fromStatus(f, conf))(_.getRecordCount)).sum
   }
 
   /** The largest value of the integral (INT32 or INT64) top-level
@@ -97,19 +108,18 @@ object ParquetRead {
     // per row group holding the column: Some(Some(max)), Some(None)
     // when its values are all null, None when it has no statistics
     val groups: Seq[Option[Option[Long]]] = paths.flatMap { p =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(p), conf))
-      try reader.getFooter.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala
-        .find(_.getPath.toDotString == column).map { chunk =>
-          val t = chunk.getPrimitiveType.getPrimitiveTypeName
-          require(t == INT32 || t == INT64, s"columnMax: $column is $t, not integral")
-          val st: org.apache.parquet.column.statistics.Statistics[_] = chunk.getStatistics
-          if (st.isEmpty) None
-          else if (st.hasNonNullValue)
-            Some(Some(st.genericGetMax.asInstanceOf[Number].longValue))
-          else if (st.getNumNulls == chunk.getValueCount) Some(None)
-          else None
-        })
-      finally reader.close()
+      footer(HadoopInputFile.fromPath(new Path(p), conf))(
+        _.getFooter.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala
+          .find(_.getPath.toDotString == column).map { chunk =>
+            val t = chunk.getPrimitiveType.getPrimitiveTypeName
+            require(t == INT32 || t == INT64, s"columnMax: $column is $t, not integral")
+            val st: org.apache.parquet.column.statistics.Statistics[_] = chunk.getStatistics
+            if (st.isEmpty) None
+            else if (st.hasNonNullValue)
+              Some(Some(st.genericGetMax.asInstanceOf[Number].longValue))
+            else if (st.getNumNulls == chunk.getValueCount) Some(None)
+            else None
+          }))
     }
     if (groups.forall(_.isDefined)) groups.flatten.flatten.maxOption
     else {

@@ -72,6 +72,45 @@ class CorpusPipelineSpec extends SparkSpec {
       s"expected a checkpoint-backed subtree:\n$plan")
   }
 
+  test("quality gate scans each document's needles at most twice; ties resolve as the when-chain") {
+    val docs0 = Seq(
+      (1L, "the le of la"),          // en 2 = fr 2: en, the earlier profile
+      (2L, "le der et und"),         // fr 2 = de 2: fr
+      (3L, "der el und los"),        // de 2 = es 2: de
+      (4L, "no stopwords here"),     // all 0: en
+      (5L, "el los de la"),          // es 3 > fr 1: es
+      (6L, "the a of der und das"),  // en 3 = de 3: en
+      (7L, null))                    // no counts: the last profile
+      .toDF("doc_id", "text")
+    // read back from parquet: over a local relation the optimizer would
+    // evaluate the whole gate itself and leave no expression to count
+    val dir = Files.createTempDirectory("gate").toString + "/docs"
+    docs0.write.parquet(dir)
+    val docs = spark.read.parquet(dir)
+    val annotated = CorpusPipeline.annotate(docs, "doc_id", "text", cfg)
+    val gate = CorpusPipeline.qualityFilter(annotated, cfg)
+    val scans = gate.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(
+      _.collect { case n: graft.plans.NeedleCounts => n })).size
+    assert(scans >= 1 && scans <= 2, s"$scans needle scans in the gate:\n" +
+      gate.queryExecution.optimizedPlan)
+    // the argmax over materialized per-language score columns, first-wins
+    val langs = CorpusPipeline.LangProfiles.map(_._1)
+    val scored = TF.stopwordLanguageScores(col("text"), CorpusPipeline.LangProfiles)
+      .zipWithIndex.foldLeft(docs) { case (df, ((_, s), i)) => df.withColumn(s"s$i", s) }
+    val chain = langs.indices.foldRight(lit(langs.last)) { (i, elseCol) =>
+      val beatsAllLater = (i + 1 until langs.size)
+        .map(j => col(s"s$i") >= col(s"s$j")).foldLeft(lit(true))(_ && _)
+      when(beatsAllLater, lit(langs(i))).otherwise(elseCol)
+    }
+    val want = scored.select(col("doc_id"), chain).as[(Long, String)].collect().toMap
+    val got = annotated.select(col("doc_id"), col("predicted_lang"))
+      .as[(Long, String)].collect().toMap
+    assert(got == want && want == Map(1L -> "en", 2L -> "fr", 3L -> "de", 4L -> "en",
+      5L -> "es", 6L -> "en", 7L -> "es"), s"$got vs $want")
+    assert(annotated.columns.toSeq ==
+      Seq("doc_id", "text", "__toks", "n_tokens", "ttr", "predicted_lang"))
+  }
+
   test("cluster-canonical mode keeps the min id per transitive near-dup chain") {
     val base = (1 to 40).map(i => s"tok$i the a of").mkString(" ")
     // 6~7~8 form a chain: 6~7 and 7~8 are near-dups, 6~8 less so; the

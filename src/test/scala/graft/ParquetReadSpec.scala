@@ -155,6 +155,24 @@ class ParquetReadSpec extends SparkSpec {
     assert(footers(tmpDir("pqmaxnone")).isEmpty)
   }
 
+  test("footer reads honour the session's Hadoop conf: a missing crypto factory fails them") {
+    val dir = tmpDir("pqcrypto")
+    (0 until 10).map(i => (i.toLong, i.toLong % 3)).toDF("id", "run_id").coalesce(1)
+      .write.parquet(dir)
+    val files = ParquetRead.dataFiles(spark, dir)
+    assert(ParquetRead.rowCount(spark, files) == 10L)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val key = "parquet.crypto.factory.class"
+    conf.set(key, "graft.NoSuchCryptoFactory")
+    try {
+      intercept[org.apache.parquet.hadoop.BadConfigurationException](
+        ParquetRead.rowCount(spark, files))
+      intercept[org.apache.parquet.hadoop.BadConfigurationException](
+        ParquetRead.columnMax(spark, files.map(_.getPath.toString), "run_id"))
+    } finally conf.unset(key)
+    assert(ParquetRead.columnMax(spark, files.map(_.getPath.toString), "run_id") == Some(2L))
+  }
+
   test("fixture-only builds start no job: registerFixture, q01, q21, q113, q122") {
     val d = s"$fixtures/sf0.001"
     assert(jobsStartedBy(Views.registerFixture(spark, d)) == 0)

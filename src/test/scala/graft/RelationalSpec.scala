@@ -315,8 +315,8 @@ class RelationalSpec extends SparkSpec {
       assert(leaked.isEmpty, s"$name left persisted RDDs behind: $leaked")
       name -> jobs
     }
-    assert(measured == Seq("transitiveClosure" -> 65, "connectedComponents" -> 92,
-      "dagRelaxMax" -> 339, "descendantCounts exact" -> 292, "descendantCounts sketch" -> 395,
+    assert(measured == Seq("transitiveClosure" -> 65, "connectedComponents" -> 90,
+      "dagRelaxMax" -> 339, "descendantCounts exact" -> 290, "descendantCounts sketch" -> 393,
       "pageRank" -> 62), s"jobs: $measured")
   }
 
