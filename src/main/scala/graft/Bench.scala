@@ -56,7 +56,7 @@ object Bench {
     var passesCompleted = 0
     // sf1 scale stage state (stage runs after the canonical sweep; see
     // below) — declared here so the artifact can carry its results
-    val sf1Dir = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "target/scale/sf1")
+    val sf1Dir = "target/scale/sf1"
     val sf1Factor = 10
     val sf1Wall = scala.collection.mutable.LinkedHashMap[String, Double]()
     val sf1Cpu = scala.collection.mutable.LinkedHashMap[String, Double]()
@@ -194,23 +194,21 @@ object Bench {
         java.nio.file.Paths.get("BENCH_LOCAL.json"), artifactJson(finalLine = false) + "\n")
       catch { case e: Throwable => System.err.println(s"[bench] file write failed: $e") }
     // untimed warmup pass: JIT + codegen + parquet footer caches, so the
-    // timed pass measures steady-state compute (disable: SPARK_GRAFT_WARMUP=0).
-    // Under heavy steal the warmup itself can eat the round budget — bail out
-    // of the remaining warmups past 35% of it; pass 1 still covers every query.
-    if (sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") != "0") {
-      val w0 = System.nanoTime()
-      val k0 = compiles
-      var warmed = 0
-      sorted.foreach { case (n, f) =>
-        if (elapsed < 0.35 * maxTotalSec) { runOnce(n, f); warmed += 1 }
-      }
-      warmupCompiles = compiles - k0
-      if (warmed < sorted.size)
-        System.err.println(s"[bench] warmup bailed at $warmed/${sorted.size} queries (budget)")
-      System.err.println(
-        f"[bench] warmup pass: $warmed queries in ${(System.nanoTime() - w0) / 1e9}%.1f s" +
-          s" (heap max ${Runtime.getRuntime.maxMemory() >> 20} MiB)")
-    } else System.err.println("[bench] WARMUP DISABLED — timed pass includes JIT/codegen noise")
+    // timed pass measures steady-state compute. Under heavy steal the
+    // warmup itself can eat the round budget — bail out of the remaining
+    // warmups past 35% of it; pass 1 still covers every query.
+    val w0 = System.nanoTime()
+    val k0 = compiles
+    var warmed = 0
+    sorted.foreach { case (n, f) =>
+      if (elapsed < 0.35 * maxTotalSec) { runOnce(n, f); warmed += 1 }
+    }
+    warmupCompiles = compiles - k0
+    if (warmed < sorted.size)
+      System.err.println(s"[bench] warmup bailed at $warmed/${sorted.size} queries (budget)")
+    System.err.println(
+      f"[bench] warmup pass: $warmed queries in ${(System.nanoTime() - w0) / 1e9}%.1f s" +
+        s" (heap max ${Runtime.getRuntime.maxMemory() >> 20} MiB)")
     // The VM this runs in sees transient host-level CPU steal: identical
     // passes of the same suite have measured 68 s and 491 s back-to-back
     // with zero JVM/GC/code-cache warnings. One timed pass therefore
@@ -354,7 +352,7 @@ object Bench {
           ScaleUp.generate(spark, sfDir, sf1Dir, sf1Factor)
         }
         val subset = sorted.filter { case (n, _) => sf1QueryNames.contains(n) }
-        val sf1Reps = sys.env.getOrElse("SPARK_GRAFT_SF1_REPS", "3").toInt.max(1)
+        val sf1Reps = 3
         var p = 1
         var bail = false
         while (p <= sf1Reps && !bail) {
@@ -406,8 +404,7 @@ object Bench {
     // corpus (FotoFixture), min-of-3 walls, plus the SURVEY §5.2 golden
     // contract on the final rep's output (expected dims replayed from
     // the id with the reference's truncation arithmetic). Runs after
-    // the sweeps; skipped in dev loops unless SPARK_GRAFT_FOTO is set
-    // (decade runs set it with SPARK_GRAFT_FOTO_N=50000).
+    // the sweeps; skipped in dev loops unless SPARK_GRAFT_FOTO is set.
     val fotoEnabled = sys.env.get("SPARK_GRAFT_FOTO") match {
       case Some("0") => false
       case Some(_) => true // explicit opt-in runs even with SPARK_GRAFT_ONLY
@@ -415,7 +412,7 @@ object Bench {
     }
     if (fotoEnabled && elapsed + 90 < maxTotalSec) {
       try {
-        fotoN = sys.env.getOrElse("SPARK_GRAFT_FOTO_N", "5000").toInt
+        fotoN = 5000
         val corpusDir = "target/scale/foto"
         val marker = java.nio.file.Paths.get(corpusDir, "_FOTO_SRC")
         val want = s"${graft.pipeline.FotoFixture.Version}|n=$fotoN"
@@ -431,7 +428,7 @@ object Bench {
           System.err.println(
             f"[bench] foto: generated in ${(System.nanoTime() - g0) / 1e9}%.1f s")
         }
-        val fotoReps = sys.env.getOrElse("SPARK_GRAFT_FOTO_REPS", "3").toInt.max(1)
+        val fotoReps = 3
         for (i <- 1 to fotoReps if elapsed < maxTotalSec || i == 1) {
           val out = java.nio.file.Files.createTempDirectory("fotobench").toString
           val c0 = osBean.getProcessCpuTime

@@ -52,25 +52,6 @@ object PlanAudit {
         }
       case "time" =>
         val reps = if (args.length > 3) args(3).toInt else 3
-        // -Dgraft.audit.jobs=true: per-job timeline (start gap = driver-
-        // side work between jobs — the lifecycle queries' latency sink)
-        if ("true".equalsIgnoreCase(System.getProperty("graft.audit.jobs", "false"))) {
-          spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-            private val t0 = System.nanoTime()
-            private val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Double, String)]()
-            override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-              starts.put(js.jobId, (
-                (System.nanoTime() - t0) / 1e9,
-                Option(js.properties.getProperty("spark.job.description"))
-                  .orElse(Option(js.properties.getProperty("callSite.short"))).getOrElse("?")))
-            override def onJobEnd(je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-              val end = (System.nanoTime() - t0) / 1e9
-              Option(starts.get(je.jobId)).foreach { case (st, desc) =>
-                System.err.println(f"[job] ${je.jobId}%4d $st%8.2f -> $end%8.2f (${end - st}%6.2f s) $desc")
-              }
-            }
-          })
-        }
         // fetch the bean ONCE and pattern-match: on JVMs whose platform
         // bean lacks the com.sun interface the audit degrades to
         // wall-only instead of dying in a ClassCastException

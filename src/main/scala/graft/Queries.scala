@@ -512,12 +512,6 @@ object Queries {
         round(CAST(len(list_filter(toks, x -> x IN ('the','a','of','and','to'))) AS DOUBLE)/len(toks),4) AS stop_ratio
       FROM t ORDER BY doc_id"""))
 
-  private val langProfiles: Seq[(String, Seq[String])] = Seq(
-    "en" -> Seq("the", "a", "of"),
-    "fr" -> Seq("le", "la", "et"),
-    "de" -> Seq("der", "und", "das"),
-    "es" -> Seq("el", "los", "de"))
-
   private val q26 = Q(
     "q26_lang_stopword_score",
     (s, d) => {
@@ -526,14 +520,15 @@ object Queries {
       // multi-needle scan, value-identical to the per-needle replace()
       // idiom the oracle replays; duplicated padding/offset logic here
       // is how a marker-word edit would silently desync the two
-      val scores = TF.stopwordLanguageScores(col("text"), langProfiles).toMap
+      val profiles = graft.pipeline.CorpusPipeline.LangProfiles
+      val scores = TF.stopwordLanguageScores(col("text"), profiles).toMap
       Tables.documents(s, d).select(
         col("doc_id"), col("lang"),
         scores("en").cast("int").as("en_hits"),
         scores("fr").cast("int").as("fr_hits"),
         scores("de").cast("int").as("de_hits"),
         scores("es").cast("int").as("es_hits"),
-        TF.stopwordLanguageScore(col("text"), langProfiles).as("predicted"))
+        TF.stopwordLanguageScore(col("text"), profiles).as("predicted"))
         .orderBy(col("doc_id"))
     },
     Some("""WITH p AS (SELECT doc_id, lang, ' '||text||' ' AS pt FROM documents),
@@ -1879,7 +1874,8 @@ object Queries {
         concat(col("text"), lit(" extra")).as("text"))
       val batch = docs.filter(col("doc_id") >= 250)
         .select(col("doc_id"), col("text")).unionByName(planted)
-      Dedup.minHashNearDuplicatesVsState(batch, "doc_id", "text", state)
+      Dedup.minHashNearDuplicatesVsState(batch, "doc_id", "text", state,
+        shingleSize = 3, numHashes = 32, bands = 8)
         .select(col("doc_id"), col("dup_of"), round(col("est_jaccard"), 4).as("est_jaccard"))
         .orderBy(col("doc_id"))
     },
@@ -3019,7 +3015,7 @@ object Queries {
       // pattern): training round 1 IS an argmax over the adjacent-pair
       // counts of the word-frequency table, and that one round is
       // SQL-expressible even though the full iteration is not.
-      // Bpe.initialPairCounts keeps the SAME vocab pass training
+      // Bpe.initialPairCountsFrom keeps the SAME vocab pass training
       // collects (shared vocabTable, same minCount = 2 floor as q86)
       // distributed, and the is_first_merge column pins the driver-side
       // heap argmax — tie-break included — to the SQL row_number() = 1

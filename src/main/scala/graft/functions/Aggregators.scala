@@ -51,7 +51,7 @@ object Aggregators {
     * is one dim-length Array[Double] regardless of group size, and
     * Spark's partial aggregation merges it map-side — so each k-means
     * iteration shuffles k buffers per partition, not |corpus| vectors
-    * (contrast [[graft.operators.Similarity.trainCentroids]]'s posexplode
+    * (contrast the spec fixture `IvfReference.trainCentroids`'s posexplode
     * form, which moves |corpus|·dim rows per pass). Null or wrong-length
     * inputs are skipped rather than corrupting the buffer.
     */

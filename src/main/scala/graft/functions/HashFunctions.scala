@@ -11,14 +11,6 @@ import org.apache.spark.sql.functions._
   */
 object HashFunctions {
 
-  /** Hash every distinct shingle string to a long — materialize THIS in
-    * its own projection (`.withColumn`) before calling
-    * `minHashFromHashes`, so the string hashing appears once in the plan
-    * rather than k times.
-    */
-  private[graft] def hashShingles(shingles: Column): Column =
-    transform(array_distinct(shingles), s => xxhash64(s))
-
   /** Distinct hashed word n-gram shingles computed WITHOUT materializing
     * shingle strings: xxhash64 chains the n token strings directly
     * (`xxhash64(tok_i, …, tok_{i+n-1})`), skipping the concat_ws
@@ -41,22 +33,6 @@ object HashFunctions {
   def hashedTokens(toks: Column): Column =
     call_function("graft_shingles", toks, lit(1), lit(false))
 
-  /** The original HOF shingle formulation, kept as the independent
-    * reference the equivalence spec checks the native expression against.
-    *
-    * PERFORMANCE CONTRACT (why the HOF form demanded care): `toks` MUST
-    * be a materialized column (a plain attribute from a prior
-    * projection), not an inline `split(...)` expression. Free outer
-    * expressions inside a Catalyst lambda are re-evaluated on every
-    * lambda invocation, so an inline tokenizer here turns shingling
-    * O(tokens) → O(tokens²) per document.
-    */
-  private[graft] def hashedWordShinglesHof(toks: Column, n: Int): Column = {
-    val starts = sequence(lit(0), size(toks) - n)
-    val hashes = transform(starts, i => xxhash64((0 until n).map(j => element_at(toks, i + j + 1)): _*))
-    when(size(toks) >= n, array_distinct(hashes)).otherwise(array().cast("array<bigint>"))
-  }
-
   /** MinHash over pre-hashed shingles (array<bigint>): the native fused
     * expression ([[graft.plans.MinHashSig]]) — one codegen loop instead of
     * k interpreted `transform` passes, bit-identical values. (Difference
@@ -67,17 +43,12 @@ object HashFunctions {
   def minHashFromHashes(hashes: Column, k: Int): Column =
     call_function("graft_minhash", hashes, lit(k))
 
-  /** The original HOF formulation, kept as the independent reference the
-    * equivalence spec checks the native expression against.
-    */
-  private[graft] def minHashFromHashesHof(hashes: Column, k: Int): Column =
-    minHashGeneric(hashes, k, (i, h) => xxhash64(lit(i), h))
-
   /** The MinHash PLUMBING — min over each of k permutations of the
     * hashed item set, empty set → the all-MaxValue sentinel — with the
     * permutation function pluggable. Production permutes with xxhash64
-    * ([[minHashFromHashesHof]], and the fused native [[graft.plans
-    * .MinHashSig]] pinned bit-identical to it by spec); the
+    * (the spec reference `HofReference.minHashFromHashesHof`, and the
+    * fused native [[graft.plans.MinHashSig]] pinned bit-identical to it
+    * by spec); the
     * DuckDB-replayable oracle twin (q98) permutes with a sha-256-prefix
     * hash so this exact structure gets a full SQL hash oracle —
     * xxhash64 itself is the one piece DuckDB cannot replay.
@@ -153,25 +124,9 @@ object HashFunctions {
     * bridge from the `documents` table to everything the embedding
     * family consumes (VectorIndex, LSH, brute top-k, SemDeDup). The
     * caller picks the token hasher: `xxhash64` in production
-    * ([[hashShingles]]-style), [[graft.operators.Sketches.sha60]] in
+    * (per distinct shingle), [[graft.operators.Sketches.sha60]] in
     * the DuckDB-replayable oracle twin (q118).
     */
   def hashEmbed(hashes: Column, dim: Int): Column =
     call_function("graft_hash_embed", hashes, lit(dim))
-
-  /** The HOF formulation — O(tokens·dim) interpreted lambda steps, the
-    * independent bit-identical reference the equivalence spec checks
-    * the native kernel against (and what the oracle SQL replays). */
-  private[graft] def hashEmbedHof(hashes: Column, dim: Int): Column = {
-    require(dim >= 1, "dim must be positive")
-    val acc = aggregate(hashes, array_repeat(lit(0.0), dim),
-      (v, h) => {
-        val b = pmod(shiftrightunsigned(h, 1), lit(dim.toLong)).cast("int")
-        val sgn = when(h.bitwiseAND(lit(1L)) === 0L, lit(1.0)).otherwise(lit(-1.0))
-        // null tokens carry no vote (the SimHash convention)
-        when(h.isNull, v)
-          .otherwise(transform(v, (x, i) => x + when(i === b, sgn).otherwise(lit(0.0))))
-      })
-    graft.functions.VectorFunctions.l2NormalizeHof(acc)
-  }
 }

@@ -77,63 +77,11 @@ object TextFunctions {
       "[\\x{0000}-\\x{0008}\\x{000E}-\\x{001F}\\x{007F}-\\x{009F}\\x{200B}-\\x{200D}\\x{FEFF}]", "")),
       "[ \\t\\n\\r\\f\\x{000B}]+", " "))
 
-  /** Word n-gram shingles ("a b c" with n=2 → ["a b", "b c"]).
-    * Empty array when there are fewer than n tokens.
-    */
-  def wordShingles(text: Column, n: Int): Column = shinglesFromTokens(tokens(text), n)
-
-  /** Same over an already-tokenized array column. ALWAYS prefer this with
-    * a materialized token column on large data: `element_at(toks, …)`
-    * inside the lambda re-evaluates free outer expressions per
-    * invocation, so an inline `split` makes shingling O(tokens²)/doc,
-    * while a materialized attribute is O(1) to re-read.
-    */
-  def shinglesFromTokens(toks: Column, n: Int): Column = {
-    val starts = sequence(lit(0), size(toks) - n) // inclusive 0-based starts
-    when(size(toks) >= n,
-      transform(starts, i => concat_ws(" ", (0 until n).map(j => element_at(toks, i + j + 1)): _*)))
-      .otherwise(array().cast("array<string>"))
-  }
-
-  /** Character n-grams of the raw string (sliding, overlapping). */
-  private[graft] def charNGrams(text: Column, n: Int): Column = {
-    val starts = sequence(lit(1), length(text) - (n - 1)) // 1-based substring
-    when(length(text) >= n, transform(starts, i => substring(text, i, lit(n)).cast("string")))
-      .otherwise(array().cast("array<string>"))
-  }
-
-  /** Jaccard similarity of the *distinct* word n-gram shingle sets of two
-    * text columns. 0.0 when either side has no shingles.
-    */
-  private[graft] def shingleJaccard(a: Column, b: Column, n: Int): Column = {
-    val sa = array_distinct(wordShingles(a, n))
-    val sb = array_distinct(wordShingles(b, n))
-    val inter = size(array_intersect(sa, sb)).cast("double")
-    val union = size(array_union(sa, sb)).cast("double")
-    when(union > 0, inter / union).otherwise(lit(0.0))
-  }
-
-  /** Number of non-overlapping occurrences of `needle` in `col`,
-    * computed by length difference — identical left-to-right
-    * non-overlapping semantics in Spark and ANSI SQL `replace`.
-    *
-    * PINNED consequence of non-overlapping matching with space-padded
-    * needles (the stopword idiom `" the "`): ADJACENT repeats undercount,
-    * because each match consumes the shared separator space — " the the "
-    * counts ONE `" the "`, not two. This is the exact semantics of the
-    * DuckDB `replace`-length oracle idiom every language-scoring query
-    * replays, so both sides agree; it deflates scores uniformly across
-    * languages whose markers repeat adjacently (rare in prose) and the
-    * ARGMAX comparison is what consumers use, not the absolute count.
-    */
-  private[graft] def occurrences(text: Column, needle: String): Column =
-    ((length(text) - length(regexp_replace(text, java.util.regex.Pattern.quote(needle), "")))
-      / needle.length).cast("int")
-
   /** Non-overlapping occurrence counts of EVERY needle in one native pass
     * ([[graft.plans.NeedleCounts]]) — `array<int>` aligned with `needles`.
-    * Value-identical to stacking [[occurrences]] per needle (the regex
-    * idiom), minus the per-needle regex-engine scans; use this whenever a
+    * Value-identical to stacking the spec reference
+    * `HofReference.occurrences` per needle (the regex idiom), minus the
+    * per-needle regex-engine scans; use this whenever a
     * scoring expression needs more than one needle over the same text.
     */
   def occurrencesAll(text: Column, needles: Seq[String]): Column =
@@ -285,11 +233,6 @@ object TextFunctions {
       lit(0L),
       (acc, x) => acc + x)
 
-  /** Stopword-list language scoring: per-language occurrence counts of
-    * marker words (padded-space matching so only whole tokens count).
-    * Returns the language whose marker count is highest; ties resolve in
-    * the declaration order of `profiles` (deterministic).
-    */
   /** Per-language marker-word occurrence scores — the shared internals of
     * [[stopwordLanguageScore]], exposed so queries that surface the raw
     * hit counts (q26) build them from the SAME needle layout instead of
@@ -299,27 +242,43 @@ object TextFunctions {
     * subtrees collapse under codegen subexpression elimination.
     */
   def stopwordLanguageScores(text: Column,
+      profiles: Seq[(String, Seq[String])]): Seq[(String, Column)] =
+    profileScores(stopwordCounts(text, profiles), profiles)
+
+  /** The marker-word counts of `text`, padded-space matched so only whole
+    * tokens count: one native scan, `array<int>` aligned with the words
+    * of `profiles` in order. */
+  def stopwordCounts(text: Column, profiles: Seq[(String, Seq[String])]): Column =
+    occurrencesAll(concat(lit(" "), text, lit(" ")), profiles.flatMap(_._2).map(w => s" $w "))
+
+  private def profileScores(counts: Column,
       profiles: Seq[(String, Seq[String])]): Seq[(String, Column)] = {
-    val padded = concat(lit(" "), text, lit(" "))
-    val allWords = profiles.flatMap(_._2)
-    val counts = occurrencesAll(padded, allWords.map(w => s" $w "))
     val offsets = profiles.scanLeft(0)(_ + _._2.size)
     profiles.zipWithIndex.map { case ((lang, words), p) =>
       lang -> words.indices.map(j => element_at(counts, offsets(p) + j + 1)).reduce(_ + _)
     }
   }
 
-  def stopwordLanguageScore(text: Column, profiles: Seq[(String, Seq[String])]): Column = {
-    val scores = stopwordLanguageScores(text, profiles)
-    // argmax with first-wins tie-break: lang_i wins if score_i >= all later and > all earlier
-    val label = scores.zipWithIndex.foldRight(lit(scores.last._1)) { case (((lang, _), i), elseCol) =>
-      val s = scores(i)._2
+  /** The language whose per-profile sum of the already-bound [[stopwordCounts]]
+    * `counts` is highest, ties resolving in the declaration order of
+    * `profiles`: lang_i wins if its score is >= every later one and
+    * > every earlier one. A null `counts` makes every comparison null,
+    * so it falls through to the LAST profile's label. */
+  def stopwordArgmax(counts: Column, profiles: Seq[(String, Seq[String])]): Column = {
+    val scores = profileScores(counts, profiles)
+    scores.zipWithIndex.foldRight(lit(scores.last._1)) { case (((lang, s), i), elseCol) =>
       val beatsAllLater = scores.drop(i + 1).map(_._2).foldLeft(lit(true))((c, o) => c && s >= o)
       when(beatsAllLater, lit(lang)).otherwise(elseCol)
     }
-    // NULL text must classify as NULL: with null scores every beatsAllLater
-    // condition is NULL, so the fold would fall through to the LAST
-    // profile's label — silently assigning null documents a language
-    when(text.isNotNull, label)
   }
+
+  /** Stopword-list language scoring: the [[stopwordArgmax]] of the
+    * document's marker counts. Returns the language whose marker count
+    * is highest; ties resolve in the declaration order of `profiles`
+    * (deterministic). NULL text classifies as NULL: without the guard
+    * the argmax would fall through to the LAST profile's label —
+    * silently assigning null documents a language.
+    */
+  def stopwordLanguageScore(text: Column, profiles: Seq[(String, Seq[String])]): Column =
+    when(text.isNotNull, stopwordArgmax(stopwordCounts(text, profiles), profiles))
 }

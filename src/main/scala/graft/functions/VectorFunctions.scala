@@ -65,20 +65,6 @@ object VectorFunctions {
     org.apache.spark.sql.GraftSqlBridge.column(
       graft.plans.L2Normalize(org.apache.spark.sql.GraftSqlBridge.expression(a)))
 
-  /** Reference HOF formulation of [[l2Normalize]] (kept for the
-    * bit-parity spec; do not use on hot paths — see the native form's
-    * scaladoc for why). The explicit `isnan` guard matches the native
-    * form's Java `nrm > 0` (false for NaN): without it Spark's
-    * NaN-largest ordering makes `NaN > 0` TRUE and a NaN-norm vector
-    * would normalize to all-NaN instead of passing through — the same
-    * guard [[cosine]] carries.
-    */
-  def l2NormalizeHof(a: Column): Column = {
-    val n = l2Norm(a)
-    when(n > 0 && !isnan(n), transform(a, x => x.cast("double") / n))
-      .otherwise(transform(a, x => x.cast("double")))
-  }
-
   /** Signed random-hyperplane (SimHash-for-vectors) signature: one bit per
     * plane, packed into a Long (plane 0 = LSB). Native fused expression
     * ([[graft.plans.HyperplaneSig]]): planes are regenerated on each
@@ -90,36 +76,6 @@ object VectorFunctions {
     */
   def hyperplaneSignature(vec: Column, dim: Int, bits: Int, seed: Long): Column =
     call_function("graft_hyperplanes", vec, lit(dim), lit(bits), lit(seed))
-
-  /** Johnson-Lindenstrauss random projection to `k` dims
-    * ([[graft.plans.RandomProjection]], native one-pass codegen):
-    * pairwise angles survive within O(√(log n / k)), so ANN candidate
-    * stages run on k ≪ dim doubles per row and only the exact verify
-    * touches full vectors — the 100 TB embedding-budget lever alongside
-    * int8 quantization below.
-    */
-  private[graft] def randomProjection(vec: Column, dim: Int, k: Int, seed: Long): Column =
-    call_function("graft_project", vec, lit(dim), lit(k), lit(seed))
-
-  /** The original HOF formulation (planes inlined as literals, one
-    * interpreted aggregate pass per bit), kept as the independent
-    * reference the equivalence spec checks the native expression against.
-    */
-  private[graft] def hyperplaneSignatureHof(vec: Column, planes: Seq[Array[Double]]): Column = {
-    require(planes.nonEmpty && planes.size <= 63, "1..63 planes per signature word")
-    planes.zipWithIndex.map { case (p, i) =>
-      val plane = typedLit(p.toSeq)
-      when(dot(vec, plane) >= 0, lit(1L << i)).otherwise(lit(0L))
-    }.reduce(_ + _)
-  }
-
-  /** Deterministic unit-ish hyperplanes from a seed (Gaussian via
-    * java.util.Random, which is seed-stable across JVMs).
-    */
-  private[graft] def randomPlanes(dim: Int, count: Int, seed: Long): Seq[Array[Double]] = {
-    val rnd = new java.util.Random(seed)
-    Seq.fill(count)(Array.fill(dim)(rnd.nextGaussian()))
-  }
 
   /** Hamming distance between two packed signature Longs. */
   def hammingDistance(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
@@ -148,10 +104,6 @@ object VectorFunctions {
           .otherwise(round(x.cast("double") / scale).cast("byte"))).as("q"))
   }
 
-  /** Inverse of [[quantizeInt8]]: `array<double>` reconstruction. */
-  private[graft] def dequantizeInt8(qs: Column): Column =
-    transform(qs.getField("q"), b => b.cast("double") * qs.getField("scale"))
-
   /** Product-quantization encode: `array<float|double>` of length
     * m·subdim → `array<short>` of length m via the per-subspace
     * L2-nearest codeword ([[graft.plans.PqEncode]] — native, codegen).
@@ -164,14 +116,6 @@ object VectorFunctions {
   def pqEncode(v: Column, cbs: Array[Array[Array[Double]]]): Column =
     org.apache.spark.sql.GraftSqlBridge.column(graft.plans.PqEncode(
       org.apache.spark.sql.GraftSqlBridge.expression(v), cbs))
-
-  /** cosine(query, reconstruct(codes)) in one fused pass
-    * ([[graft.plans.PqCosine]]) — scores a full-precision query column
-    * against PQ codes without materializing the reconstruction. */
-  private[graft] def pqCosine(q: Column, codes: Column, cbs: Array[Array[Array[Double]]]): Column =
-    org.apache.spark.sql.GraftSqlBridge.column(graft.plans.PqCosine(
-      org.apache.spark.sql.GraftSqlBridge.expression(q),
-      org.apache.spark.sql.GraftSqlBridge.expression(codes), cbs))
 
   /** cosine(query, centroid + reconstruct(codes)) — residual-PQ scoring
     * ([[graft.plans.PqResidualCosine]], the Faiss IVFPQ contract):

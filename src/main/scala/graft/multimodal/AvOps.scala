@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 
 /** Audio/video column plumbing: opaque `binary` payloads + typed
@@ -349,12 +349,6 @@ object AvOps {
         }
       }
     }
-
-  /** Typed metadata columns over any binary payload — pure built-ins. */
-  private[graft] def withBinaryMeta(df: DataFrame, contentCol: String): DataFrame =
-    df.withColumn("n_bytes", length(col(contentCol)).cast("bigint"))
-      .withColumn("content_sha", sha2(col(contentCol), 256))
-      .withColumn("is_empty", coalesce(length(col(contentCol)) === 0, lit(true)))
 
   /** One per-window 64-bit audio sub-fingerprint: the audio sibling of
     * [[FrameRow]] — `window_idx` starts at 1 (the fingerprint of window

@@ -33,7 +33,7 @@ object Bpe {
   /** The ONE distributed corpus pass training runs on: the
     * word-frequency table `(w, freq)`, floored and capped BEFORE it
     * reaches the driver. Shared verbatim by [[learnMerges]] (which
-    * collects it) and [[initialPairCounts]] (which keeps it
+    * collects it) and [[initialPairCountsFrom]] (which keeps it
     * distributed), so the oracle twin q103 exercises exactly the frame
     * training consumes.
     */
@@ -48,31 +48,23 @@ object Bpe {
     vocab.orderBy(col("freq").desc, col("w").asc).limit(maxVocabTypes)
   }
 
-  /** Distributed first-iteration pair statistics: every adjacent
-    * symbol pair's corpus-weighted count over [[vocabTable]]'s
-    * word-frequency frame — BPE training round 1 computes exactly this
-    * (driver-side, incrementally thereafter); here it stays a
-    * DataFrame, which makes it (a) a scale diagnostic — "what would
-    * training merge first" with no driver collect at all — and (b) the
-    * SQL-replayable oracle surface for the otherwise iterative,
-    * rows-only training path (q103 hash-checks it against DuckDB,
-    * including the (count desc, pair asc) argmax tie-break that picks
-    * merge #1). Overlap semantics match training's sliding window:
-    * "aaa" contributes (a,a) twice. Pairs are over UTF-16 units on the
-    * driver and code points here — identical except for astral-plane
-    * symbols, which character-level BPE vocabularies don't reach.
-    */
-  private[graft] def initialPairCounts(docs: DataFrame, textCol: String, minCount: Long): DataFrame =
-    initialPairCountsFrom(vocabTable(docs, textCol, minCount, MaxVocabTypes))
-
-  /** The default vocab-type cap of training and [[initialPairCounts]]. */
+  /** The default vocab-type cap of training and of q103's vocab pass. */
   val MaxVocabTypes = 5000000
 
-  /** [[initialPairCounts]] over an already-built `(w, freq)` vocab
-    * frame — the seam that lets a caller running BOTH training and the
-    * pair diagnostics (q103) pay the corpus pass once: snapshot
-    * [[vocabTable]]'s output and feed it here and to
-    * [[learnMergesFromVocab]].
+  /** Distributed first-iteration pair statistics: every adjacent
+    * symbol pair's corpus-weighted count over an already-built
+    * `(w, freq)` vocab frame — BPE training round 1 computes exactly
+    * this (driver-side, incrementally thereafter); here it stays a
+    * DataFrame, the SQL-replayable oracle surface for the otherwise
+    * iterative, rows-only training path (q103 hash-checks it against
+    * DuckDB, including the (count desc, pair asc) argmax tie-break that
+    * picks merge #1). A caller running BOTH training and the pair
+    * diagnostics pays the corpus pass once: snapshot [[vocabTable]]'s
+    * output and feed it here and to [[learnMergesFromVocab]]. Overlap
+    * semantics match training's sliding window: "aaa" contributes
+    * (a,a) twice. Pairs are over UTF-16 units on the driver and code
+    * points here — identical except for astral-plane symbols, which
+    * character-level BPE vocabularies don't reach.
     */
   private[graft] def initialPairCountsFrom(vocab: DataFrame): DataFrame =
     vocab
@@ -299,12 +291,4 @@ object Bpe {
       else text.trim.split("\\s+").toSeq.filter(_.nonEmpty).flatMap(w => encodeWord(w, rank)))
   }
 
-  /** Exact BPE token count — the budget-enforcement number q38's regex
-    * pre-tokenizer approximates. A pure Column (apply it to any frame
-    * with `textCol`): one projection, no shuffle; the merge list rides
-    * the closure (it is vocab-sized, i.e. small).
-    */
-  private[graft] def tokenCount(textCol: String,
-      merges: Seq[(String, String)]): org.apache.spark.sql.Column =
-    size(encodeUdf(merges)(col(textCol)))
 }

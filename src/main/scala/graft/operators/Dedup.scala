@@ -43,10 +43,6 @@ object Dedup {
   val OrientedCandidateMaxHamming = 3
   val MaxGridDistance = 8.0
   val ImageVsStateMaxHamming = 5
-  /** SimHash geometry of [[simHashNearDuplicates]]. */
-  val SimHashBits = 48
-  val SimHashChunks = 4
-  val SimHashMaxHamming = 3
 
   /** Exact content dedup over a text column via sha-256 content hash:
     * annotates every row with its canonical (minimum) id and the size of
@@ -165,9 +161,9 @@ object Dedup {
       idCol: String,
       textCol: String,
       stateSigs: DataFrame, // (idCol, sig) from minHashSignatures
-      shingleSize: Int = 3,
-      numHashes: Int = 32,
-      bands: Int = 8,
+      shingleSize: Int,
+      numHashes: Int,
+      bands: Int,
       threshold: Double = 0.7): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val rowsPerBand = numHashes / bands
@@ -261,7 +257,7 @@ object Dedup {
 
   /** Small-hamming self-join over 64-bit-or-narrower signatures —
     * the blocking core SHARED (by construction, not copy-paste) by
-    * [[simHashNearDuplicates]] and [[imageNearDuplicates]]: signatures
+    * SimHash text near-dup and [[imageNearDuplicates]]: signatures
     * split into `chunks` bit slices, pairs equal on SOME slice are
     * candidates (pigeonhole: hamming < chunks ⇒ some chunk equal, so
     * recall is exact for `maxHamming < chunks`), exact popcount
@@ -367,23 +363,11 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
   }
 
-  /** SimHash near-duplicates: pairs within [[SimHashMaxHamming]] bits.
-    * Blocking by signature chunk (pigeonhole: distance < chunks ⇒ some
-    * chunk equal) keeps this an equi-join too.
-    */
-  private[graft] def simHashNearDuplicates(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    hammingNearDuplicates(
-      df.select(col(idCol).as("__id"),
-          HashFunctions.hashedTokens(TextFunctions.tokens(col(textCol))).as("__th"))
-        .select(col("__id"),
-          HashFunctions.simHashFromHashes(col("__th"), SimHashBits).as("__sig")),
-      SimHashBits, SimHashChunks, SimHashMaxHamming)
-
   /** Perceptual IMAGE near-duplicates: pairs of binary image columns
     * whose 64-bit dHash ([[graft.multimodal.ImageOps.dHash]]) is within
     * `maxHamming` bits — re-encoded / resized / format-shifted copies of
-    * the same picture, the multimodal counterpart of
-    * [[simHashNearDuplicates]] and the standard first-pass image dedup
+    * the same picture, the multimodal counterpart of SimHash text
+    * near-dup and the standard first-pass image dedup
     * for crawl corpora. The expensive step is the per-row decode (one
     * pass, executor-local); after it the corpus is (id, long) rows and
     * the SAME pigeonhole chunk blocking applies — candidates are

@@ -31,12 +31,6 @@ object Incremental {
     input.join(st, cond, "left_anti")
   }
 
-  /** Append-merge state update (reference `test.py:197-201`): write the
-    * newly processed keys into the state location.
-    */
-  def appendState(newlyProcessed: DataFrame, keys: Seq[String], stateDir: String): Unit =
-    newlyProcessed.select(keys.map(col): _*).write.mode("append").parquet(stateDir)
-
   /** Snapshot reconciliation — classify every key across two corpus
     * snapshots as `added` / `removed` / `changed` / `unchanged`, the
     * audit primitive between crawl or curation runs ("what did this
@@ -65,7 +59,7 @@ object Incremental {
 
   /** Read state, tolerating a first run with no state yet
     * (reference `test.py:109-111`). "State exists" means the dir holds
-    * data files: a first [[appendState]] that died mid-write leaves only
+    * data files: a first state append that died mid-write leaves only
     * `_temporary/`, which reads as empty state instead of failing every
     * later run on schema inference.
     */

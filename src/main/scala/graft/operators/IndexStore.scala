@@ -38,6 +38,28 @@ private[graft] object IndexStore {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
+  /** The changed-document upsert of either index as ONE call:
+    * re-ingest `batch` under `runId` through `append`, masking every row
+    * its ids had in runs BELOW it. The horizon is `runId - 1` —
+    * explicit, not derived — so the call is idempotent under redelivery
+    * even when other appends interleave, and a crash between the two
+    * steps leaves only the benign delete-applied/append-missing state a
+    * rerun completes. `key` and `reserved` are the index's key column
+    * and its reserved posting columns; callers own run monotonicity.
+    */
+  def upsert(batch: DataFrame, idCol: String, key: String, reserved: Set[String],
+      indexDir: String, runId: Long, metaCols: Seq[String])(append: => Unit): Unit =
+    // ONE lease across both steps (withLease is reentrant), so no other
+    // writer can interleave between the delete and the append
+    graft.sources.Lease.withLease(batch.sparkSession, indexDir) {
+      // append's metadata check runs BEFORE the delete: a refused upsert
+      // must leave its ids live, not tombstoned with no new rows
+      requireMetaSet(batch, metaCols, s"$indexDir/postings", reserved)
+      appendTombstones(batch.select(col(idCol)), idCol, key, indexDir,
+        s"$indexDir/postings", runId - 1)
+      append
+    }
+
   /** Append `ids` to the ledger under horizon `asofRun`. [[DeriveAsof]]
     * records the max `run_id` of `postingsDir` (from its footers, no
     * job — [[ParquetRead.columnMax]]), so a delete

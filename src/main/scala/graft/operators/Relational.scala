@@ -370,15 +370,11 @@ object Relational {
     * reachability has a linear-state form instead: per-node descendant
     * counts → [[descendantCounts]] (backward bitset/HLL registers),
     * longest/critical path and reachable-set maxima → [[dagRelaxMax]],
-    * clustering → [[connectedComponents]]. The [[ClosureMaxNodes]] guard
-    * keeps the quadratic path from being something a caller wanders into:
-    * node count is checked with ONE narrow job before any closure work
-    * starts.
+    * clustering → [[connectedComponents]]. The `maxNodes` guard
+    * ([[ClosureMaxNodes]] by convention) keeps the quadratic path from
+    * being something a caller wanders into: node count is checked with
+    * ONE narrow job before any closure work starts.
     */
-  private[graft] def transitiveClosure(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
-    transitiveClosure(edges, srcCol, dstCol, ClosureMaxNodes)
-
-  /** [[transitiveClosure]] with the node cap explicit. */
   private[graft] def transitiveClosure(edges: DataFrame, srcCol: String, dstCol: String,
       maxNodes: Long): DataFrame = {
     val nNodes = edges.select(col(srcCol).as("n"))
@@ -1032,14 +1028,11 @@ object Relational {
     *
     * Returns (stage_id, duration_days, early_start, early_finish) in day
     * offsets from project start (earliest start floored at 0, the
-    * project-start constraint). `stages` holds (stage_id, duration_days,
+    * project-start constraint), plus start/finish dates when
+    * `projectStart` is given. `stages` holds (stage_id, duration_days,
     * ...); `deps` holds (stage_id = child, depends_on_stage_id = parent,
     * relation_type, lag_days).
     */
-  private[graft] def cpmSchedule(stages: DataFrame, deps: DataFrame): DataFrame =
-    cpmSchedule(stages, deps, None)
-
-  /** [[cpmSchedule]] plus start/finish dates when `projectStart` is given. */
   private[graft] def cpmSchedule(stages: DataFrame, deps: DataFrame,
       projectStart: Option[java.sql.Date]): DataFrame = {
     val dur = stages.select(col("stage_id"), col("duration_days").cast("long").as("__dur"))

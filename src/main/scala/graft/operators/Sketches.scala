@@ -290,34 +290,6 @@ object Sketches {
 
   // --------------------------------------------------- heavy hitters
 
-  /** Misra–Gries frequent-items sketch of a column: one aggregation
-    * pass with an m-counter buffer per partition (map-side merged), so
-    * the shuffle moves ≤ m counters per partition however large the
-    * column's vocabulary. Returns (item, weight, delta) rows —
-    * true(item) ∈ [weight, weight + delta], and every item with
-    * frequency > delta is guaranteed present
-    * ([[graft.functions.Aggregators.MisraGries]]).
-    *
-    * The delta column ALWAYS survives: a flat-vocabulary merge cascade
-    * can evict every counter (kept = ∅, delta > 0 — "every item's true
-    * count is ≤ delta"), and a plain explode would drop that row
-    * entirely, making 'sketch gave up' indistinguishable from 'empty
-    * input'. That case surfaces as ONE row with null item/weight
-    * carrying the delta; a truly empty input yields that row with
-    * delta 0. Filter `item IS NOT NULL` for the tabular view;
-    * [[topKExact]] consumes the struct directly.
-    * As state, each run appends its rows tagged `run_id`
-    * ([[mgStateSummary]] argues the retry); a run written by two
-    * differing attempts holds up to 2(m+1) rows until compaction.
-    */
-  private[graft] def frequentItems(df: DataFrame, c: Column, m: Int): DataFrame = {
-    val mg = udaf(graft.functions.Aggregators.MisraGries(m))
-    df.select(c.cast("string").as("__it")).where(col("__it").isNotNull)
-      .agg(mg(col("__it")).as("s"))
-      .select(explode_outer(col("s.items")).as("it"), col("s.delta").as("delta"))
-      .select(col("it.item").as("item"), col("it.weight").as("weight"), col("delta"))
-  }
-
   /** EXACT top-k most frequent items in two passes — the 100 TB shape
     * for "top tokens/domains/users" over a heavy-tailed vocabulary:
     * pass 1 sketches candidates in bounded memory (no full-vocab
@@ -384,12 +356,12 @@ object Sketches {
 
   // ------------------------------------------- streaming MG state
 
-  /** Merge an append-only Misra–Gries state table (the layout
-    * [[frequentItems]] appends as state: one row set per run, tagged
-    * `run_id`) down
-    * to one summary — the MG contract over ALL runs: for every output
-    * row, true(item) ∈ [weight, weight + delta]; any item absent from
-    * the summary has true count ≤ delta (delta = Σ per-run Δ, since
+  /** Merge an append-only Misra–Gries state table (the layout the
+    * spec fixture `MisraGriesSketch.frequentItems` appends as state: one
+    * row set per run, tagged `run_id`) down to one summary — the MG
+    * contract over ALL runs: for every output row, true(item) ∈
+    * [weight, weight + delta]; any item absent from the summary has
+    * true count ≤ delta (delta = Σ per-run Δ, since
     * each run's summary bounds its own batch exactly).
     *
     * Unlike the HLL register max, raw MG counters are NOT
@@ -411,8 +383,8 @@ object Sketches {
     * true ≤ min Δᵢ ≤ the run's max-Δ contribution.
     *
     * State stays plain data rows (item, weight, delta, run_id), ≤ m+1
-    * rows per run, readable by any engine. The summary keeps
-    * [[frequentItems]]' shape: `item IS NULL` carries delta when no
+    * rows per run, readable by any engine. The summary keeps the
+    * per-run rows' shape: `item IS NULL` carries delta when no
     * counter survived; delta repeats on every row. The item collect is
     * bounded by m × runs ([[compactMgState]] folds runs to one).
     */

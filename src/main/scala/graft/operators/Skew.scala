@@ -14,8 +14,6 @@ import org.apache.spark.sql.functions._
 object Skew {
   /** Salt buckets of [[saltedEquiJoin]]: reducers one hot key spreads over. */
   val SaltBuckets = 16
-  /** Keys [[keySkewProfile]] returns. */
-  val ProfileTopK = 10
 
   /** Inner equi-join with the large (skewed) side salted and the other
     * side replicated into every salt bucket.
@@ -45,13 +43,4 @@ object Skew {
     salted.join(replicated, keys :+ "__salt").drop("__salt")
   }
 
-  /** Per-key frequency profile — use to decide whether salting is needed
-    * (e.g. maxShare > 0.2 on a 200-partition shuffle). One pass, top-k
-    * only on the driver.
-    */
-  private[graft] def keySkewProfile(df: DataFrame, keys: Seq[String]): DataFrame =
-    df.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc)
-      .limit(ProfileTopK)
 }

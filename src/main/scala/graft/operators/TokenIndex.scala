@@ -73,8 +73,8 @@ object TokenIndex {
   private def statsDir(indexDir: String) = s"$indexDir/stats"
 
   /** Takedown contract: mark corpus ids deleted in the tombstone ledger
-    * [[IndexStore]] keeps for both indexes (horizon `asofRun`, derived
-    * from the current postings by default). Probes
+    * [[IndexStore]] keeps for both indexes (horizon: the max run id of
+    * the current postings). Probes
     * ([[containmentJoinIndexed]], [[bm25Indexed]])
     * mask the ledger immediately — a taken-down document can never
     * again be a containment hit or a retrieval result — and the next
@@ -89,46 +89,22 @@ object TokenIndex {
     * Redelivery is free: each call appends distinct-id rows and every
     * ledger consumer is multiplicity-blind, so a re-run takedown batch
     * is a no-op by construction, with no run-id bookkeeping. One
-    * caveat, since the ledger is horizon-aware: a DERIVED `asofRun` is
+    * caveat, since the ledger is horizon-aware: a DERIVED horizon is
     * exact for a pure takedown feed, but if the same corpus also takes
     * upsert appends, a crash-replayed delete could re-derive a horizon
-    * above an interleaved re-append. Sequence upserts through one
-    * pipeline (delete with an explicit `asofRun`, then append) instead
-    * of racing a takedown stream against them.
+    * above an interleaved re-append. Sequence upserts through
+    * [[IndexStore.upsert]] (explicit horizon `runId - 1`, then append)
+    * instead of racing a takedown stream against them.
     */
-  def delete(ids: DataFrame, idCol: String, indexDir: String,
-      asofRun: Long = DeriveAsof): Unit =
+  def delete(ids: DataFrame, idCol: String, indexDir: String): Unit =
     graft.sources.Lease.withLease(ids.sparkSession, indexDir) {
       IndexStore.appendTombstones(ids, idCol, "corpus_id", indexDir,
-        postingsDir(indexDir), asofRun)
+        postingsDir(indexDir), IndexStore.DeriveAsof)
     }
-
-  /** Sentinel for [[delete]]'s `asofRun`: derive the horizon from the
-    * index's current postings ([[IndexStore.DeriveAsof]]). */
-  val DeriveAsof: Long = IndexStore.DeriveAsof
 
   /** Internal posting columns [[append]]'s `metaCols` may not shadow. */
   private[graft] val ReservedPostingCols: Set[String] =
     Set("tok", "corpus_id", "tf", "dl", "run_id")
-
-  /** The changed-document upsert as ONE call (mirrors
-    * [[VectorIndex.upsert]]): re-ingest `batch` under `runId`, masking
-    * every posting/array row its ids had in runs BELOW it — horizon
-    * `runId - 1`, explicit, so redelivery is idempotent even across
-    * interleaved appends, and a crash between the steps leaves only
-    * the benign delete-applied/append-missing state a rerun completes.
-    */
-  private[graft] def upsert(batch: DataFrame, idCol: String, textCol: String,
-      indexDir: String, runId: Long, metaCols: Seq[String]): Unit =
-    // ONE lease across both steps (withLease is reentrant), so no other
-    // writer can interleave between the delete and the append
-    graft.sources.Lease.withLease(batch.sparkSession, indexDir) {
-      // append's metadata check runs BEFORE the delete: a refused upsert
-      // must leave its ids live, not tombstoned with no new rows
-      IndexStore.requireMetaSet(batch, metaCols, postingsDir(indexDir), ReservedPostingCols)
-      delete(batch.select(col(idCol)), idCol, indexDir, asofRun = runId - 1)
-      append(batch, idCol, textCol, indexDir, runId, metaCols)
-    }
 
   /** Index one corpus ingest batch: append its postings and df delta
     * under `runId`. Contract: append-only corpus, one batch per run id

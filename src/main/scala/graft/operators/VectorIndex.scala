@@ -7,11 +7,12 @@ import graft.functions.VectorFunctions
 import graft.sources.ParquetRead
 
 /** Persisted IVF ANN index — [[TokenIndex]]'s pattern applied to the
-  * embedding column: [[Similarity.ivfCosineTopK]] re-trains k-means and
-  * re-assigns the whole corpus on EVERY call, which is the right shape
-  * for one ad-hoc search and exactly the wrong one for the production
-  * cadence (a slowly-growing corpus probed by query batch after query
-  * batch — retrieval, near-dup lookups, embedding decontamination).
+  * embedding column: a one-shot IVF search (the spec reference
+  * `IvfReference.ivfCosineTopK`) re-trains k-means and re-assigns the
+  * whole corpus on EVERY call, which is the right shape for one ad-hoc
+  * search and exactly the wrong one for the production cadence (a
+  * slowly-growing corpus probed by query batch after query batch —
+  * retrieval, near-dup lookups, embedding decontamination).
   * Here the expensive parts are paid once: k-means trains at [[build]],
   * every corpus vector's cell assignment is PERSISTED as a posting, and
   * a probe batch touches only the centroid table (k rows, broadcast)
@@ -259,7 +260,8 @@ object VectorIndex {
 
   /** The centroid model as a DataFrame — shared by [[build]] and any
     * caller that wants to hand the same model to
-    * [[Similarity.ivfCosineTopK]]. */
+    * the one-shot IVF search (the spec reference
+    * `IvfReference.ivfCosineTopK`). */
   private[graft] def centroidsDf(spark: SparkSession,
       cents: Array[Array[Double]]): DataFrame = {
     import scala.jdk.CollectionConverters._
@@ -403,8 +405,8 @@ object VectorIndex {
 
   /** Takedown contract: mark `idCol` values deleted in the tombstone
     * ledger [[IndexStore]] keeps for both indexes. Every probe masks
-    * postings AT OR BELOW the recorded horizon (`asofRun`, by default
-    * the index's current max run id) immediately, and the next
+    * postings AT OR BELOW the recorded horizon (the index's current max
+    * run id) immediately, and the next
     * [[compact]] physically drops those rows and retires the ledger.
     * Delete-then-[[append]]-under-a-higher-run is the UPSERT path: the
     * stale posting is masked from the very next probe while the
@@ -413,36 +415,10 @@ object VectorIndex {
     * Redelivery and its one caveat: see [[TokenIndex.delete]], the
     * same ledger.
     */
-  def delete(ids: DataFrame, idCol: String, indexDir: String,
-      asofRun: Long = DeriveAsof): Unit =
+  def delete(ids: DataFrame, idCol: String, indexDir: String): Unit =
     graft.sources.Lease.withLease(ids.sparkSession, indexDir) {
       IndexStore.appendTombstones(ids, idCol, "vec_id", indexDir,
-        postingsDir(indexDir), asofRun)
-    }
-
-  /** Sentinel for [[delete]]'s `asofRun`: derive the horizon from the
-    * index's current postings ([[IndexStore.DeriveAsof]]). */
-  val DeriveAsof: Long = IndexStore.DeriveAsof
-
-  /** The upsert contract as ONE call: re-embed `batch`'s ids under
-    * `runId`, masking every posting they had in runs BELOW it. The
-    * horizon is `runId - 1` — explicit, not derived — so the call is
-    * idempotent under redelivery even when other appends interleave
-    * (the race [[delete]]'s `asofRun` parameter exists for), and a
-    * crash between the two steps leaves only the benign
-    * delete-applied/append-missing state a rerun completes. Callers
-    * own run monotonicity, same as [[append]].
-    */
-  private[graft] def upsert(batch: DataFrame, idCol: String, embCol: String,
-      indexDir: String, runId: Long, metaCols: Seq[String]): Unit =
-    // ONE lease across both steps (withLease is reentrant), so no other
-    // writer can interleave between the delete and the append
-    graft.sources.Lease.withLease(batch.sparkSession, indexDir) {
-      // append's metadata check runs BEFORE the delete: a refused upsert
-      // must leave its ids live, not tombstoned with no new rows
-      IndexStore.requireMetaSet(batch, metaCols, postingsDir(indexDir), ReservedPostingCols)
-      delete(batch.select(col(idCol)), idCol, indexDir, asofRun = runId - 1)
-      append(batch, idCol, embCol, indexDir, runId, metaCols)
+        postingsDir(indexDir), IndexStore.DeriveAsof)
     }
 
   /** The frozen-centroid drift signal (VERDICT r14 item 3): per run,
@@ -607,7 +583,7 @@ object VectorIndex {
     * Catalyst plans as a broadcast left-semi join on the cell-pruned
     * postings. Recall contract is unchanged from queryTopK: exact over
     * the probed cells — a highly selective predicate thins them, so
-    * calibrate with [[calibrateNprobeFiltered]] when recall matters.
+    * calibrate with [[calibrateNprobe]] over this probe when recall matters.
     */
   def queryTopKFiltered(spark: SparkSession, queries: DataFrame,
       queryId: String, queryEmb: String, indexDir: String, k: Int,
@@ -857,7 +833,7 @@ object VectorIndex {
     if (top.isNullAt(0)) 0L else top.getLong(0)
   }
 
-  /** Recall@k target of [[calibrateNprobe]] and [[calibrateNprobeFiltered]]. */
+  /** Recall@k target of [[calibrateNprobe]]. */
   val TargetRecall = 0.95
 
   /** Pick the smallest `nprobe` meeting [[TargetRecall]] on a SAMPLE of
@@ -879,35 +855,26 @@ object VectorIndex {
     * the largest candidate when none meets the target (callers should
     * treat that as "re-examine k or the clustering", not silently
     * accept it).
+    *
+    * The probe is the one the runtime serves: [[queryTopK]], or, given
+    * a `predicate`, [[queryTopKFiltered]] with the workload's predicate
+    * (VERDICT r17 item 5, same predicate contract). The unfiltered
+    * calibration is
+    * structurally wrong for a filtered workload — a selective predicate
+    * thins every probed cell, so the nprobe that hits the recall target
+    * unfiltered can silently under-recall filtered (the documented
+    * caveat on [[queryTopKFiltered]], measured instead of advisory).
+    * Ground truth is then the FILTERED probe at nprobe = k-model
+    * (exhaustive ≡ brute force over the allowed vectors), so the recall
+    * contract is against exactly the answer set the runtime serves.
     */
   private[graft] def calibrateNprobe(spark: SparkSession, sampleQueries: DataFrame,
       queryId: String, queryEmb: String, indexDir: String, k: Int,
-      candidates: Seq[Int]): (Int, Map[Int, Double]) =
-    calibrateNprobeImpl(spark, indexDir, candidates,
-      (q, np) => queryTopK(spark, q, queryId, queryEmb, indexDir, k, np),
-      sampleQueries)
-
-  /** [[calibrateNprobe]] for FILTERED probes (VERDICT r17 item 5): the
-    * unfiltered calibration is structurally wrong for a filtered
-    * workload — a selective predicate thins every probed cell, so the
-    * nprobe that hits the recall target unfiltered can silently
-    * under-recall filtered (the documented caveat on
-    * [[queryTopKFiltered]], now measured instead of advisory). Ground
-    * truth is the FILTERED probe at nprobe = k-model (exhaustive ≡
-    * brute force over the allowed vectors), so the recall contract is
-    * against exactly the answer set the runtime serves. Same predicate
-    * contract as [[queryTopKFiltered]]. */
-  private[graft] def calibrateNprobeFiltered(spark: SparkSession, sampleQueries: DataFrame,
-      queryId: String, queryEmb: String, indexDir: String, k: Int,
-      predicate: org.apache.spark.sql.Column, candidates: Seq[Int]): (Int, Map[Int, Double]) =
-    calibrateNprobeImpl(spark, indexDir, candidates,
-      (q, np) => queryTopKFiltered(spark, q, queryId, queryEmb, indexDir, k,
-        predicate, np),
-      sampleQueries)
-
-  private def calibrateNprobeImpl(spark: SparkSession, indexDir: String, candidates: Seq[Int],
-      probe: (DataFrame, Int) => DataFrame,
-      sampleQueries: DataFrame): (Int, Map[Int, Double]) = {
+      predicate: Option[org.apache.spark.sql.Column],
+      candidates: Seq[Int]): (Int, Map[Int, Double]) = {
+    def probe(q: DataFrame, np: Int) = predicate.fold(
+      queryTopK(spark, q, queryId, queryEmb, indexDir, k, np))(
+      queryTopKFiltered(spark, q, queryId, queryEmb, indexDir, k, _, np))
     require(candidates.nonEmpty && candidates == candidates.sorted,
       "candidates must be ascending")
     val kModel = modelK(spark, indexDir)

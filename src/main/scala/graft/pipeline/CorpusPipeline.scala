@@ -70,33 +70,17 @@ object CorpusPipeline {
     * binding, so the gate's plan scans each document once in the filter
     * and once in the projection above it.
     */
-  def annotate(docs: DataFrame, idCol: String, textCol: String, cfg: Config): DataFrame = {
-    val padded = concat(lit(" "), col(textCol), lit(" "))
-    // ONE native multi-needle scan over each document for every profile
-    // word (graft_count_all), then per-language sums — the regex idiom
-    // this replaces ran one regex pass per word (12 scans/doc)
-    val allWords = LangProfiles.flatMap(_._2)
-    val offsets = LangProfiles.scanLeft(0)(_ + _._2.size)
-    // argmax over the per-language sums of `wc`, first-wins on ties; a
-    // null `wc` (null text) falls through to the last language
-    def predicted(wc: Column): Column = {
-      val scores = LangProfiles.zipWithIndex.map { case ((_, words), i) =>
-        words.indices.map(j => element_at(wc, offsets(i) + j + 1)).reduce(_ + _)
-      }
-      LangProfiles.zipWithIndex.foldRight(lit(LangProfiles.last._1)) {
-        case (((lang, _), i), elseCol) =>
-          val beatsAllLater = scores.drop(i + 1)
-            .map(scores(i) >= _).foldLeft(lit(true))(_ && _)
-          when(beatsAllLater, lit(lang)).otherwise(elseCol)
-      }
-    }
+  def annotate(docs: DataFrame, idCol: String, textCol: String, cfg: Config): DataFrame =
     docs
       .withColumn("__toks", TF.tokens(col(textCol)))
       .withColumn("n_tokens", size(col("__toks")))
       .withColumn("ttr", TF.typeTokenRatio(col(textCol)))
+      // ONE native multi-needle scan over each document for every
+      // profile word (graft_count_all); null text falls through the
+      // argmax to the last language
       .withColumn("predicted_lang", element_at(transform(
-        array(TF.occurrencesAll(padded, allWords.map(w => s" $w "))), predicted(_)), 1))
-  }
+        array(TF.stopwordCounts(col(textCol), LangProfiles)),
+        TF.stopwordArgmax(_, LangProfiles)), 1))
 
   /** Quality + language gate. */
   def qualityFilter(annotated: DataFrame, cfg: Config): DataFrame =
@@ -171,147 +155,6 @@ object CorpusPipeline {
     val observedOut = curated.observe(ship,
       count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("n_tokens"))
     (observedOut, ingest, ship)
-  }
-
-  /** One incremental curation run — the production mode at corpus scale:
-    * anti-join the ingest against the processed-id state
-    * ([[graft.operators.Incremental.newRows]]) and curate ONLY the new
-    * documents. Re-running on unchanged input is a no-op once committed
-    * (the reference pipeline's core invariant, applied to the corpus
-    * pipeline).
-    *
-    * Note the dedup boundary: exact/near-dup runs WITHIN each delta
-    * (cross-delta exact dedup is the caller's choice — e.g. make the
-    * content fingerprint part of the state key to also skip re-ingested
-    * bytes).
-    *
-    * Two-phase, EXACTLY-ONCE-capable contract: returns the curated delta
-    * plus a `commit` thunk that appends the seen-id state. The caller
-    * durably writes the curated rows FIRST, then calls `commit()`. A
-    * crash before commit re-curates the batch next run (at-LEAST-once —
-    * pair with this repo's idempotent sinks and the rerun is a no-op).
-    *
-    * The fresh delta (ingest scan + state anti-join) is snapshotted
-    * eagerly ONCE; both the curated output and the state append derive
-    * from that snapshot, so the ingest is never re-scanned and the
-    * curated plan holds no parquet reference to stateDir for the
-    * append's recache to invalidate.
-    */
-  def curateIncrementalStaged(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      stateDir: String,
-      cfg: Config = Config()): (DataFrame, () => Unit) = {
-    val spark = docs.sparkSession
-    val state = graft.operators.Incremental.readState(spark, stateDir, Seq(idCol))
-    val fresh = graft.operators.Incremental.newRows(docs, state, Seq(idCol))
-      .localCheckpoint(true)
-    val curated = curate(fresh, idCol, textCol, cfg)
-    // state must record every SEEN id (curated or filtered out) or
-    // rejected docs would be re-curated forever
-    (curated, () => graft.operators.Incremental.appendState(fresh, Seq(idCol), stateDir))
-  }
-
-  /** [[curateIncrementalStaged]] plus CROSS-DELTA near-dup — the full
-    * production loop: each delta is curated, then deduplicated against
-    * the MinHash signature store of everything previously KEPT
-    * ([[graft.operators.Dedup.minHashNearDuplicatesVsState]]), and the
-    * survivors' signatures append to that store. A re-crawled page that
-    * arrives under a new id in a later batch is dropped here — the
-    * within-delta dedup of [[curate]] cannot see it, and re-reading the
-    * corpus to find it would defeat incrementality. Corpus text is never
-    * re-read: the cross-delta check costs one band equi-join against a
-    * k×8-byte-per-doc store.
-    *
-    * The near-dup decision uses the signature-agreement ESTIMATE at
-    * `cfg.nearDupThreshold` (O(1/√k) error — the state-store trade;
-    * within-delta dedup stays exact).
-    *
-    * Same two-phase contract as [[curateIncrementalStaged]]: write the
-    * kept rows durably, THEN call `commit()`, which appends BOTH stores
-    * (seen-id state and the MinHash signature store) — a crash before
-    * commit re-processes the batch (at-least-once) instead of silently
-    * losing it.
-    */
-  private[graft] def curateIncrementalNearDupStaged(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      stateDir: String,
-      sigStateDir: String,
-      cfg: Config): (DataFrame, () => Unit) = {
-    val spark = docs.sparkSession
-    // Snapshot eagerly at each state boundary — with localCheckpoint, NOT
-    // persist. commit() APPENDS to stateDir and sigStateDir, and an
-    // un-snapshotted lineage would read both. A cache()d plan is WORSE
-    // than the bare lineage here: the sig append's parquet commit fires
-    // recacheByPath on every cached plan that scans sigStateDir, lazily
-    // rebuilding it with a REFRESHED file listing — so the caller's first
-    // action would recompute `kept` against a store that now holds the
-    // batch's own signatures, and every survivor would self-match as a
-    // duplicate. An eager localCheckpoint truncates the plan to a
-    // LogicalRDD (no parquet path for recache to match) and also stops
-    // the curate/anti-join lineage re-running once per downstream
-    // reference (banded side, final left join, signature write, caller's
-    // terminal action).
-    val (curated0, commitState) =
-      curateIncrementalStaged(docs, idCol, textCol, stateDir, cfg)
-    val (curated, curatedPinned) = Relational.localCheckpointTracked(curated0)
-    // a store holding no data files (never committed, or only a crashed
-    // first append's `_temporary/`) has no signatures to match against
-    val sigFiles = ParquetRead.dataFiles(spark, sigStateDir)
-    val kept =
-      if (sigFiles.nonEmpty) {
-        val sigs = ParquetRead(spark, sigStateDir, sigFiles, merge = false)
-        val k = Dedup.minHashNearDuplicatesVsState(curated, idCol, textCol, sigs,
-            NearDupShingleSize, NearDupNumHashes, NearDupBands, cfg.nearDupThreshold)
-          .filter(col("dup_of").isNull)
-          .drop("dup_of", "est_jaccard")
-          .localCheckpoint(true)
-        // curated's snapshot is superseded by k's — release its blocks now
-        // rather than waiting for driver GC
-        Relational.releasePinned(spark.sparkContext, curatedPinned)
-        k
-      } else curated
-    // the returned rows are a materialized snapshot: the caller's actions
-    // can never re-list the appended dirs. Its blocks release when the
-    // Dataset is garbage-collected (ContextCleaner) — localCheckpoint
-    // results have no CacheManager entry for unpersist() to act on.
-    val commit = () => {
-      commitState()
-      Dedup.minHashSignatures(kept, idCol, textCol,
-        NearDupShingleSize, NearDupNumHashes)
-        .write.mode("append").parquet(sigStateDir)
-    }
-    (kept, commit)
-  }
-
-  /** Write partitioned by predicted language — downstream training jobs
-    * prune to the languages they train on.
-    */
-  def write(curated: DataFrame, outDir: String): Unit =
-    curated.write.mode("overwrite").partitionBy("predicted_lang").parquet(outDir)
-
-  /** Deterministic stratified sampling: keep each row iff a uniform hash
-    * of (id, seed 42) falls under its stratum's fraction. Hash-based rather
-    * than `sampleBy`'s RNG-per-partition so the SAME rows are selected
-    * regardless of partitioning, cluster size, or re-runs — the property
-    * that makes a 100 TB corpus sample reproducible and incrementally
-    * extendable (raising a fraction only ADDS rows, never swaps them).
-    * Strata absent from `fractions` default to 0.0 (dropped).
-    */
-  private[graft] def stratifiedSample(df: DataFrame, idCol: String, stratumCol: String,
-      fractions: Map[String, Double]): DataFrame = {
-    require(fractions.values.forall(f => f >= 0.0 && f <= 1.0), "fractions in [0,1]")
-    // xxhash64 → [0,1): shift to 53-bit non-negative mantissa range so the
-    // double division is exact and uniform
-    val u = (shiftrightunsigned(xxhash64(col(idCol), lit(42L)), 11).cast("double")
-      / lit((1L << 53).toDouble))
-    val frac = fractions.foldLeft(lit(0.0)) { case (acc, (k, f)) =>
-      when(col(stratumCol) === k, lit(f)).otherwise(acc)
-    }
-    df.filter(u < frac)
   }
 
   /** Partitioned corpus release with a certifying manifest: write the

@@ -119,8 +119,11 @@ object FotoFixture {
     * image re-decodes, its dims equal the reference's truncation
     * arithmetic replayed from the id (scale = maxDim/max(w,h) only when
     * < 1, maxDim = [[ImageOps.DefaultMaxDim]]; `int()` truncation), and
-    * the metadata size matches the stored payload. Returns the number of VIOLATING rows (0 = green)
-    * and the row count checked. */
+    * each image key `(kode_proyek, minggu, nama_file)` is stored once —
+    * the reference overwrites by path, so every extra copy of a key is a
+    * violation (a key violates with its failing copies or its extra
+    * copies, whichever are more). Returns the number of VIOLATING rows
+    * (0 = green) and the row count checked, from one job. */
   def checkGolden(spark: SparkSession, outDir: String): (Long, Long) = {
     val maxDim = ImageOps.DefaultMaxDim
     val outDims = udf((bytes: Array[Byte]) =>
@@ -142,10 +145,14 @@ object FotoFixture {
         .otherwise(greatest(floor(col("in_w") * col("__scale")), lit(1)).cast("int")))
       .withColumn("exp_h", when(col("mx") <= maxDim, col("in_h"))
         .otherwise(greatest(floor(col("in_h") * col("__scale")), lit(1)).cast("int")))
-    val bad = checked.filter(
-      col("od").isNull || col("img_id").isNull ||
-        col("od")(0) =!= col("exp_w") || col("od")(1) =!= col("exp_h") ||
-        col("od")(0) > maxDim || col("od")(1) > maxDim).count()
-    (bad, checked.count())
+    val bad = col("od").isNull || col("img_id").isNull ||
+      col("od")(0) =!= col("exp_w") || col("od")(1) =!= col("exp_h") ||
+      col("od")(0) > maxDim || col("od")(1) > maxDim
+    val r = checked.groupBy(col("kode_proyek"), col("minggu"), col("nama_file"))
+      .agg(count(lit(1)).as("n"), count(when(bad, 1)).as("bad"))
+      .agg(coalesce(sum(greatest(col("bad"), col("n") - 1)), lit(0L)),
+        coalesce(sum(col("n")), lit(0L)))
+      .head()
+    (r.getLong(0), r.getLong(1))
   }
 }

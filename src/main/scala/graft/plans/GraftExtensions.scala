@@ -112,17 +112,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       }))
 
     ext.injectFunction((
-      FunctionIdentifier("graft_project"),
-      new ExpressionInfo(classOf[RandomProjection].getName, "graft_project"),
-      (children: Seq[Expression]) => children match {
-        case Seq(c, Literal(d: Int, IntegerType), Literal(kk: Int, IntegerType),
-            Literal(s: Long, LongType)) =>
-          RandomProjection(c, d, kk, s)
-        case _ => throw new IllegalArgumentException(
-          "graft_project(vec, dim, k, seed) takes array<float|double> and literal dim/k/seed")
-      }))
-
-    ext.injectFunction((
       FunctionIdentifier("graft_argmax_cos"),
       new ExpressionInfo(classOf[ArgmaxCosine].getName, "graft_argmax_cos"),
       (children: Seq[Expression]) => children match {

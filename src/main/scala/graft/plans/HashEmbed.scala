@@ -21,7 +21,7 @@ import org.apache.spark.sql.types._
   * colliding tokens cancel half the time instead of always adding).
   *
   * One fused pass, zero allocation beyond the output array, full
-  * codegen ([[graft.functions.HashFunctions.hashEmbedHof]] is the
+  * codegen (the spec reference `HofReference.hashEmbedHof` is the
   * bit-identical HOF reference the spec pins — O(tokens·dim) lambda
   * evaluations there vs O(tokens + dim) here).
   *

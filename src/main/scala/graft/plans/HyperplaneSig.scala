@@ -11,7 +11,7 @@ import org.apache.spark.sql.types._
   * `vec · plane_i` over `bits` seeded Gaussian hyperplanes (plane 0 =
   * LSB). Planes are regenerated deterministically from (dim, bits, seed)
   * via `java.util.Random.nextGaussian` — identical draw order to
-  * [[graft.functions.VectorFunctions.randomPlanes]], so signatures are
+  * the spec reference `HofReference.randomPlanes`, so signatures are
   * stable across executors, runs, and cluster sizes with no plane
   * broadcast at all.
   *
@@ -51,7 +51,7 @@ case class HyperplaneSig(child: Expression, dim: Int, bits: Int, seed: Long)
   }
 
   // bits × dim Gaussian matrix, row-major; same draw order as
-  // VectorFunctions.randomPlanes(dim, bits, seed)
+  // HofReference.randomPlanes(dim, bits, seed), the spec reference
   private lazy val planes: Array[Double] = {
     val rnd = new java.util.Random(seed)
     Array.fill(bits * dim)(rnd.nextGaussian())

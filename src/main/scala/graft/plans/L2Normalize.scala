@@ -19,7 +19,7 @@ import org.apache.spark.sql.types._
   * machinery, one output allocation.
   *
   * Semantics, bit-for-bit with the HOF form
-  * ([[graft.functions.VectorFunctions.l2NormalizeHof]], parity-pinned in
+  * (the spec reference `HofReference.l2NormalizeHof`, parity-pinned in
   * VectorExpressionsSpec):
   *   - NULL input array → NULL (null-in null-out);
   *   - any null ELEMENT → the HOF norm is null, its `when` condition is

@@ -56,7 +56,7 @@ class BpeSpec extends SparkSpec {
     // 'low'×3, 'lower'×2, hapax 'lowest', plus 'aaa'×2 to pin overlap
     // semantics: the sliding window counts (a,a) TWICE per 'aaa'
     val docs = Seq("low low low lower lower lowest aaa aaa").toDF("text")
-    val pc = Bpe.initialPairCounts(docs, "text", minCount = 2L)
+    val pc = Bpe.initialPairCountsFrom(Bpe.vocabTable(docs, "text", 2L, Bpe.MaxVocabTypes))
       .collect().map(r => ((r.getString(0), r.getString(1)), r.getLong(2))).toMap
     // floored vocab: low(3), lower(2), aaa(2) — lowest dropped
     assert(pc(("l", "o")) == 5L)
@@ -86,9 +86,9 @@ class BpeSpec extends SparkSpec {
     // every learned merge is a substring of some word; tokens reassemble the text
     assert(encoded.mkString == "lowlowernewestlowest")
     // token budget: more merges → fewer (or equal) tokens, floor = word count
-    val n0 = docs.select(Bpe.tokenCount("text", Seq.empty)).as[Int].head()
-    val n3 = docs.select(Bpe.tokenCount("text", merges.take(3))).as[Int].head()
-    val n6 = docs.select(Bpe.tokenCount("text", merges)).as[Int].head()
+    val n0 = docs.select(size(Bpe.encodeUdf(Seq.empty)(col("text")))).as[Int].head()
+    val n3 = docs.select(size(Bpe.encodeUdf(merges.take(3))(col("text")))).as[Int].head()
+    val n6 = docs.select(size(Bpe.encodeUdf(merges)(col("text")))).as[Int].head()
     assert(n0 == "lowlowernewestlowest".length, "zero merges = character count")
     assert(n3 >= n6, "counts monotone in merges")
     assert(n6 >= 4, "never fewer tokens than words")

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.functions.{HashFunctions, TextFunctions}
 import graft.operators.{Dedup, Incremental, Relational}
 
 class DedupSpec extends SparkSpec {
@@ -177,8 +178,8 @@ class DedupSpec extends SparkSpec {
       }
       val agreements = rows.toDF("seed", "ta", "tb")
         .select(
-          HF.minHashFromHashes(HF.hashShingles(col("ta")), 32).as("sa"),
-          HF.minHashFromHashes(HF.hashShingles(col("tb")), 32).as("sb"))
+          HF.minHashFromHashes(transform(array_distinct(col("ta")), s => xxhash64(s)), 32).as("sa"),
+          HF.minHashFromHashes(transform(array_distinct(col("tb")), s => xxhash64(s)), 32).as("sb"))
         .select((aggregate(
           zip_with(col("sa"), col("sb"), (p, q) => when(p === q, 1L).otherwise(0L)),
           lit(0L), _ + _).cast("double") / 32.0).as("agree"))
@@ -199,7 +200,14 @@ class DedupSpec extends SparkSpec {
   test("simhash near-dup: identical docs distance 0; different docs filtered") {
     val a = (1 to 30).map(i => s"w$i").mkString(" ")
     val df = Seq((1L, a), (2L, a), (3L, "completely different words entirely")).toDF("doc_id", "text")
-    val pairs = Dedup.simHashNearDuplicates(df, "doc_id", "text")
+    // 48-bit simhash over hashed tokens, blocked by 4 signature chunks,
+    // pairs within 3 bits
+    val bits = 48
+    val pairs = Dedup.hammingNearDuplicates(
+      df.select(col("doc_id").as("__id"),
+        HashFunctions.simHashFromHashes(HashFunctions.hashedTokens(TextFunctions.tokens(col("text"))),
+          bits).as("__sig")),
+      bits, 4, 3)
       .select("id_a", "id_b", "hamming").as[(Long, Long, Int)].collect()
     assert(pairs.map(p => (p._1, p._2)).toSet == Set((1L, 2L)))
     assert(pairs.head._3 == 0)

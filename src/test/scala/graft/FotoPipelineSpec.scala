@@ -7,7 +7,7 @@ import javax.imageio.ImageIO
 
 import org.apache.spark.sql.functions._
 import graft.pipeline.{FotoFixture, FotoPipeline}
-import graft.sources.IdempotentBlobSink
+import graft.sources.{IdempotentBlobSink, ParquetRead}
 
 class FotoPipelineSpec extends SparkSpec {
   import spark.implicits._
@@ -144,6 +144,20 @@ class FotoPipelineSpec extends SparkSpec {
     assert(violations == 0, s"$violations of $checked images break the golden contract")
   }
 
+  test("golden contract: a duplicated image key is a violation") {
+    val tmp = Files.createTempDirectory("foto_dup").toString
+    FotoFixture.generate(spark, s"$tmp/corpus", 8)
+    FotoFixture.runPipeline(spark, s"$tmp/corpus", s"$tmp/out")
+    // a retried sink that lands one image row twice
+    val images = ParquetRead(spark, s"$tmp/out/images")
+    spark.createDataFrame(spark.sparkContext.parallelize(images.limit(1).collect().toSeq),
+        images.schema)
+      .write.mode("append").partitionBy("kode_proyek", "minggu").parquet(s"$tmp/out/images")
+    val (violations, checked) = FotoFixture.checkGolden(spark, s"$tmp/out")
+    assert(checked == 8)
+    assert(violations == 1, s"one extra copy of a key must be one violation, got $violations")
+  }
+
   test("raw binary tree sink writes the reference layout and overwrites idempotently") {
     val tmp = Files.createTempDirectory("btree").toString
     val df = Seq(
@@ -151,11 +165,11 @@ class FotoPipelineSpec extends SparkSpec {
       ("P1", "9", "b.jpg", Array[Byte](3)),
       ("P2", "7", "c.jpg", Array[Byte](4)))
       .toDF("kode_proyek", "minggu", "nama_file", "content")
-    graft.sources.BinaryCorpus.writeBinaryTree(df, tmp, Seq("kode_proyek", "minggu"), "nama_file", "content")
+    graft.sources.BinaryTree.writeBinaryTree(df, tmp, Seq("kode_proyek", "minggu"), "nama_file", "content")
     assert(Files.readAllBytes(java.nio.file.Paths.get(s"$tmp/P1/7/a.jpg")).toSeq == Seq[Byte](1, 2))
     assert(Files.exists(java.nio.file.Paths.get(s"$tmp/P2/7/c.jpg")))
     // rerun = overwrite, not failure (reference v2 upsert semantics)
-    graft.sources.BinaryCorpus.writeBinaryTree(df, tmp, Seq("kode_proyek", "minggu"), "nama_file", "content")
+    graft.sources.BinaryTree.writeBinaryTree(df, tmp, Seq("kode_proyek", "minggu"), "nama_file", "content")
     assert(Files.readAllBytes(java.nio.file.Paths.get(s"$tmp/P1/9/b.jpg")).toSeq == Seq[Byte](3))
   }
 
@@ -166,7 +180,7 @@ class FotoPipelineSpec extends SparkSpec {
       ("KDJMI", "7", "skip.txt", Array[Byte](2)),
       ("P2", "9", "y.PNG", Array[Byte](3)))
       .toDF("kode_proyek", "minggu", "nama_file", "content")
-    graft.sources.BinaryCorpus.writeBinaryTree(df, tmp, Seq("kode_proyek", "minggu"), "nama_file", "content")
+    graft.sources.BinaryTree.writeBinaryTree(df, tmp, Seq("kode_proyek", "minggu"), "nama_file", "content")
     val scanned = graft.sources.BinaryCorpus.withPathKeys(
       graft.sources.BinaryCorpus.scan(spark, tmp, Seq("jpg", "jpeg", "png", "PNG")))
     val rows = scanned.select("kode_proyek", "minggu", "nama_file", "length")
@@ -193,7 +207,7 @@ class FotoPipelineSpec extends SparkSpec {
   test("writeBinaryTree rejects null and path-escaping segments loudly") {
     val tmp = java.nio.file.Files.createTempDirectory("bintree").toString
     def attempt(kode: String, name: String) = intercept[org.apache.spark.SparkException] {
-      graft.sources.BinaryCorpus.writeBinaryTree(
+      graft.sources.BinaryTree.writeBinaryTree(
         Seq((kode, "w1", name, Array[Byte](1))).toDF("kode_proyek", "minggu", "nama_file", "content"),
         tmp, Seq("kode_proyek", "minggu"), "nama_file", "content")
     }

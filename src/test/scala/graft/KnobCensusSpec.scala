@@ -9,11 +9,14 @@ import org.scalatest.funsuite.AnyFunSuite
 /** A ratchet on the main tree's surface. `tools/knob_census.py --sites`
   * counts every defaulted parameter under src/main, those that no caller
   * outside src/test sets, and those that no caller sets at all (passing
-  * a default's own text is no override); `--operators` counts the public
-  * defs that no use outside src/test reaches. Both resolve a call by the
-  * object it names and by the overloads its argument count admits. A new
-  * option, one only specs set, or a public operator only specs call fails
-  * here instead of waiting for the next census. The options only specs
+  * a default's own text is no override); its default output also counts
+  * the environment and system-property reads that choose behaviour;
+  * `--operators` counts the public and `private[graft]` defs and the
+  * registered SQL functions that no use outside src/test reaches. Both
+  * resolve a call by the object it names and by the overloads its
+  * argument count admits. A new option, one only specs set, or an
+  * operator only specs call fails here instead of waiting for the next
+  * census. The options only specs
   * set are `Lease.withLease`'s `staleMs` and `Relational.dagRelaxMax`'s
   * `localMaxEdges`. The first two tests keep the names they had when
   * their bounds were 70/5 and 52; the asserts below are the tighter
@@ -23,8 +26,27 @@ class KnobCensusSpec extends AnyFunSuite {
   private def census(flag: String, root: Option[Path] = None): String = {
     val tool = new java.io.File("tools/knob_census.py")
     assert(tool.isFile, s"run from the repo root: ${tool.getAbsolutePath}")
-    (Seq("python3", tool.getPath, flag) ++ root.map(_.toString)).!!
+    (Seq("python3", tool.getPath) ++ Seq(flag).filter(_.nonEmpty) ++ root.map(_.toString)).!!
   }
+
+  private val specOnlyLabel = "defs not referenced outside src/test"
+
+  /** A scratch tree with src/main and src/test files, for the tool's ROOT. */
+  private def tree(files: (String, String)*): Path = {
+    val root = Files.createTempDirectory("census_tree")
+    files.foreach { case (rel, text) =>
+      val p = root.resolve(rel)
+      Files.createDirectories(p.getParent)
+      Files.writeString(p, text.stripMargin)
+    }
+    root
+  }
+
+  /** The `file:line  Owner.name` rows of an `--operators` report. */
+  private def rows(out: String): Seq[(String, String)] =
+    out.linesIterator.filter(_.startsWith("src/main/")).map { l =>
+      val f = l.split("\\s+"); (f(0), f(1))
+    }.toSeq
 
   private def figure(out: String, label: String): Int =
     s"(?m)^$label (\\d+)$$".r.findFirstMatchIn(out).map(_.group(1).toInt)
@@ -42,8 +64,9 @@ class KnobCensusSpec extends AnyFunSuite {
 
   test("operator census: at most 52 public defs that only specs reference") {
     val out = census("--operators")
-    val specOnly = figure(out, "public defs not referenced outside src/test")
-    assert(specOnly == 0, s"public defs only specs reference: $specOnly > 0\n$out")
+    val specOnly = figure(out, specOnlyLabel)
+    assert(specOnly == 0, s"defs only specs reference, outside OPERATOR_EXEMPT: $specOnly > 0\n$out")
+    assert(figure(out, "stale exemptions") == 0, s"OPERATOR_EXEMPT names a def that is gone or called:\n$out")
   }
 
   test("operator census resolves calls by owner and arity (synthetic tree)") {
@@ -85,8 +108,69 @@ class KnobCensusSpec extends AnyFunSuite {
     assert(reported.contains("A.f"), s"a public overload reached only through its private sibling's name:\n$out")
     assert(reported.contains("A.g"), s"B.g's caller must not count for A.g:\n$out")
     assert(!reported.contains("B.g"), s"B.g has a qualified caller:\n$out")
-    assert(!reported.contains("C.h") && !reported.contains("Helper.h"),
-      s"a call on a value cannot be resolved, so it counts for every h:\n$out")
-    assert(figure(out, "public defs not referenced outside src/test") == 2, out)
+    assert(reported.contains("C.h") && !reported.contains("Helper.h"),
+      s"a call on a value reaches the class's h, never an object's:\n$out")
+    assert(figure(out, specOnlyLabel) == 3, out)
+  }
+
+  test("operator census: private[graft] defs, value calls and registered functions (synthetic tree)") {
+    val root = tree(
+      "src/main/scala/p/Ops.scala" ->
+        """package p
+          |object Src {
+          |  private[graft] def hidden(x: Int): Int = x
+          |  def read(x: Int): Int = x
+          |  def write(df: Int, dir: String): Int = df
+          |  def sink(x: Int): Int = x
+          |}
+          |class Holder { def hit(a: Int): Int = a }
+          |object Holder {
+          |  def hit(a: Int, b: Int): Int = a + b
+          |}
+          |class Ext {
+          |  reg(FunctionIdentifier("graft_spec_only"))
+          |  reg(FunctionIdentifier("graft_used"))
+          |}
+          |""",
+      "src/main/scala/p/Main.scala" ->
+        """package p
+          |object Main {
+          |  def main(args: Array[String]): Unit = {
+          |    val reader = new Reader
+          |    val sink = 3
+          |    val h = new Holder
+          |    println(reader.read(1) + sink + h.hit(1))
+          |    frame(1).write.mode("overwrite")
+          |    sql("SELECT graft_used(x) FROM t")
+          |  }
+          |}
+          |""",
+      "src/test/scala/p/OpsSpec.scala" ->
+        """package p
+          |object OpsSpec {
+          |  val all = Src.hidden(1) + Src.read(2) + Src.write(3, "d") + Src.sink(4) +
+          |    Holder.hit(1, 2)
+          |  sql("SELECT graft_spec_only(x) FROM t")
+          |}
+          |""")
+    val out = census("--operators", Some(root))
+    val reported = rows(out).map(_._2).toSet
+    assert(reported.contains("Src.hidden"), s"a private[graft] def only a spec calls:\n$out")
+    assert(reported.contains("Src.read"), s"`reader.read(1)` is a call on a value:\n$out")
+    assert(reported.contains("Src.sink"), s"`sink` is the file's own val:\n$out")
+    assert(reported.contains("Src.write"),
+      s"`frame(1).write` has no argument list, so it reaches no def that needs one:\n$out")
+    assert(rows(out).contains(("src/main/scala/p/Ops.scala:10", "Holder.hit")) &&
+      !rows(out).contains(("src/main/scala/p/Ops.scala:8", "Holder.hit")),
+      s"`h.hit(1)` reaches the class's hit, not its companion object's:\n$out")
+    assert(reported.contains("graft_spec_only") && !reported.contains("graft_used"),
+      s"a registered function only spec SQL calls:\n$out")
+    assert(figure(out, specOnlyLabel) == 6, out)
+  }
+
+  test("option census: environment and system-property reads that choose behaviour") {
+    val out = census("")
+    val reads = figure(out, "option reads")
+    assert(reads <= 8, s"option reads in src/main: $reads > 8\n$out")
   }
 }

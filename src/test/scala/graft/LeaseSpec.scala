@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.sources.Lease
-import graft.operators.{TokenIndex, VectorIndex}
+import graft.operators.{IndexStore, TokenIndex, VectorIndex}
 
 /** Concurrent-writer lease (round 18, VERDICT r17 item 4): the
   * single-writer contract on persisted state dirs is enforced, not just
@@ -84,7 +84,8 @@ class LeaseSpec extends SparkSpec {
     assert(leaseFile(idxDir).delete())
     // upsert = delete + append under ONE lease (reentrant), and the
     // vector mutators share the same guard
-    TokenIndex.upsert(corpus, "id", "text", idxDir, 2L, Nil)
+    IndexStore.upsert(corpus, "id", "corpus_id", TokenIndex.ReservedPostingCols, idxDir, 2L, Nil)(
+      TokenIndex.append(corpus, "id", "text", idxDir, 2L, Nil))
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val vecDir = s"$base/vec"
     VectorIndex.build(emb, "vec_id", "embedding", vecDir, k = 4, maxIter = 3)

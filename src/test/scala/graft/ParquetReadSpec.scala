@@ -94,7 +94,7 @@ class ParquetReadSpec extends SparkSpec {
     Files.createDirectories(Paths.get(stateDir, "_temporary", "0"))
     val empty = Incremental.readState(spark, stateDir, Seq("id"))
     assert(empty.count() == 0 && empty.columns.toSeq == Seq("id"))
-    Incremental.appendState(Seq("a", "b").toDF("id"), Seq("id"), stateDir)
+    Seq("a", "b").toDF("id").write.mode("append").parquet(stateDir)
     assert(Incremental.readState(spark, stateDir, Seq("id")).as[String].collect().toSet ==
       Set("a", "b"))
     // the index store's "postings exist" checks share the rule

@@ -113,7 +113,7 @@ class RelationalSpec extends SparkSpec {
   test("transitive closure of a chain + diamond") {
     // 1→2→3→4 and 1→5→4
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 5L), (5L, 4L)).toDF("src", "dst")
-    val tc = Relational.transitiveClosure(edges, "src", "dst")
+    val tc = Relational.transitiveClosure(edges, "src", "dst", Relational.ClosureMaxNodes)
       .as[(Long, Long)].collect().toSet
     assert(tc == Set((1L, 2L), (1L, 3L), (1L, 4L), (1L, 5L), (2L, 3L), (2L, 4L), (3L, 4L), (5L, 4L)))
   }
@@ -143,7 +143,7 @@ class RelationalSpec extends SparkSpec {
     val n = 55L
     val edges = (1L until n).map(i => (i, i + 1)).toDF("src", "dst")
     // doubling closure: chain of 54 edges → all (i, j) i<j pairs
-    val tc = Relational.transitiveClosure(edges, "src", "dst")
+    val tc = Relational.transitiveClosure(edges, "src", "dst", Relational.ClosureMaxNodes)
     assert(tc.count() == n * (n - 1) / 2)
     // hop-depth relaxation (unit weights): needs 54 iterations — the lineage-growth
     // case (localMaxEdges = 0 forces the distributed loop on this tiny fixture)
@@ -160,7 +160,7 @@ class RelationalSpec extends SparkSpec {
     val preexisting = sc.getPersistentRDDs.keySet.toSet
     val n = 55L
     val edges = (1L until n).map(i => (i, i + 1)).toDF("src", "dst")
-    val tc = Relational.transitiveClosure(edges, "src", "dst") // >5 iters → checkpoints happen
+    val tc = Relational.transitiveClosure(edges, "src", "dst", Relational.ClosureMaxNodes) // >5 iters → checkpoints happen
     assert(tc.count() == n * (n - 1) / 2)
     val d = Relational.dagRelaxMax(edges.withColumn("__w", lit(1L)), "src", "dst",
       Seq("__w" -> "depth"), maxIter = 60, localMaxEdges = 0L)
@@ -178,7 +178,7 @@ class RelationalSpec extends SparkSpec {
     val deps = Seq((2L, 1L, "XX", 0))
       .toDF("stage_id", "depends_on_stage_id", "relation_type", "lag_days")
     val ex = intercept[Exception] {
-      Relational.cpmSchedule(stages, deps).collect()
+      Relational.cpmSchedule(stages, deps, None).collect()
     }
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(e => Option(e.getMessage).toSeq ++ messages(e.getCause))
@@ -217,7 +217,7 @@ class RelationalSpec extends SparkSpec {
     val got = Relational.descendantCounts(edges, "src", "dst")
       .as[(Long, Long)].collect().toMap
     val want = {
-      val tc = Relational.transitiveClosure(edges, "src", "dst")
+      val tc = Relational.transitiveClosure(edges, "src", "dst", Relational.ClosureMaxNodes)
         .as[(Long, Long)].collect().groupBy(_._1).view.mapValues(_.map(_._2).distinct.length.toLong)
       (1L to 6L).map(n => n -> tc.getOrElse(n, 0L)).toMap
     }
@@ -295,7 +295,7 @@ class RelationalSpec extends SparkSpec {
     // every loop forced onto its distributed path, deep enough to reach
     // its cut rounds; the counts are the loops' traffic, pinned exactly
     val loops = Seq[(String, () => org.apache.spark.sql.DataFrame)](
-      "transitiveClosure" -> (() => Relational.transitiveClosure(chain, "src", "dst")),
+      "transitiveClosure" -> (() => Relational.transitiveClosure(chain, "src", "dst", Relational.ClosureMaxNodes)),
       "connectedComponents" -> (() =>
         Relational.connectedComponents(chain, "src", "dst", localMaxEdges = 0L)),
       "dagRelaxMax" -> (() => Relational.dagRelaxMax(chain.withColumn("__w", lit(1L)),
@@ -612,7 +612,7 @@ class RelationalSpec extends SparkSpec {
     val deps = Seq((2L, 9L, "FS", 0L))
       .toDF("stage_id", "depends_on_stage_id", "relation_type", "lag_days")
     val ex = intercept[Exception] {
-      Relational.cpmSchedule(stages, deps).collect()
+      Relational.cpmSchedule(stages, deps, None).collect()
     }
     assert(ex.getMessage != null && ex.getMessage.contains("has no stages row"),
       s"expected a missing-stage error, got: ${ex.getMessage}")
@@ -620,7 +620,7 @@ class RelationalSpec extends SparkSpec {
     val depsSs = Seq((2L, 9L, "SS", 0L))
       .toDF("stage_id", "depends_on_stage_id", "relation_type", "lag_days")
     val ex2 = intercept[Exception] {
-      Relational.cpmSchedule(stages, depsSs).collect()
+      Relational.cpmSchedule(stages, depsSs, None).collect()
     }
     assert(ex2.getMessage != null && ex2.getMessage.contains("has no stages row"))
   }

@@ -1,10 +1,14 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{Dedup, IvfReference, Similarity}
 
 class SimilaritySpec extends SparkSpec {
   import spark.implicits._
+
+  /** The inverse of `quantizeInt8`: each code times its vector's scale. */
+  private def dequantize(qs: org.apache.spark.sql.Column) =
+    transform(qs.getField("q"), b => b.cast("double") * qs.getField("scale"))
 
   private lazy val sfDir = "/root/testdata/sf0.001"
   private lazy val emb = Tables.embeddings(spark, sfDir)
@@ -73,7 +77,7 @@ class SimilaritySpec extends SparkSpec {
     // int8 reconstructions, exact re-rank keeps full precision — top-k
     // overlap against the all-float32 run must stay high
     val qemb = emb.withColumn("embedding",
-      transform(VF.dequantizeInt8(VF.quantizeInt8(col("embedding"))), _.cast("float")))
+      transform(dequantize(VF.quantizeInt8(col("embedding"))), _.cast("float")))
     val queries = emb.filter(col("vec_id") < 10)
     def topSets(corpus: org.apache.spark.sql.DataFrame) =
       Similarity.bruteForceCosineTopK(corpus, "vec_id", "embedding",
@@ -88,9 +92,9 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("IVF centroids + probe search returns ranked neighbors") {
-    val cents = Similarity.trainCentroids(emb, "embedding", "label")
+    val cents = IvfReference.trainCentroids(emb, "embedding", "label")
     assert(cents.count() == emb.select("label").distinct().count())
-    val r = Similarity.ivfCosineTopK(emb, "vec_id", "embedding",
+    val r = IvfReference.ivfCosineTopK(emb, "vec_id", "embedding",
       emb.filter(col("vec_id") < 3), "vec_id", "embedding", cents, k = 3, nprobe = 3)
     val rows = r.collect()
     assert(rows.nonEmpty)
@@ -383,8 +387,8 @@ class SimilaritySpec extends SparkSpec {
       (2L, Seq(0.9f, 0.1f), "east"),
       (3L, Seq(0.0f, 1.0f), "west"),
       (4L, Seq(0.1f, 0.9f), "west")).toDF("vec_id", "embedding", "region")
-    val cents = Similarity.trainCentroids(df, "embedding", "region")
-    val r = Similarity.ivfCosineTopK(df, "vec_id", "embedding",
+    val cents = IvfReference.trainCentroids(df, "embedding", "region")
+    val r = IvfReference.ivfCosineTopK(df, "vec_id", "embedding",
       df.filter(col("vec_id") === 1L), "vec_id", "embedding", cents, k = 1, nprobe = 1)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect()
     assert(r.toSeq == Seq((1L, 2L)), s"same-cluster nearest neighbor: ${r.toSeq}")

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Sketches
+import graft.operators.{MisraGriesSketch, Sketches}
 import graft.sources.{Lease, ParquetRead}
 
 class SketchesSpec extends SparkSpec {
@@ -123,7 +123,7 @@ class SketchesSpec extends SparkSpec {
     val df = rnd.shuffle(rows).toDF("t").repartition(5)
     val n = rows.size.toLong
     val exact = rows.groupBy(identity).map { case (k, v) => k -> v.size.toLong }
-    val sk = Sketches.frequentItems(df, col("t"), m = 16)
+    val sk = MisraGriesSketch.frequentItems(df, col("t"), m = 16)
       .as[(String, Long, Long)].collect()
     assert(sk.nonEmpty && sk.length <= 16)
     val delta = sk.head._3
@@ -163,7 +163,7 @@ class SketchesSpec extends SparkSpec {
     // the delta error bound must SURVIVE a total counter wipe-out:
     // 'sketch gave up' (null item row, delta > 0) is distinguishable
     // from 'empty input' (delta 0)
-    val wiped = Sketches.frequentItems(flatDf, col("t"), m = 8)
+    val wiped = MisraGriesSketch.frequentItems(flatDf, col("t"), m = 8)
       .select(col("item"), col("delta")).collect()
     if (wiped.forall(_.isNullAt(0))) {
       assert(wiped.length == 1 && wiped.head.getLong(1) > 0L,
@@ -171,7 +171,7 @@ class SketchesSpec extends SparkSpec {
     } else {
       assert(wiped.forall(r => !r.isNullAt(0)) && wiped.head.getLong(1) > 0L)
     }
-    val emptyIn = Sketches.frequentItems(
+    val emptyIn = MisraGriesSketch.frequentItems(
       Seq.empty[String].toDF("t"), col("t"), m = 8)
       .select(col("item"), col("delta")).collect()
     assert(emptyIn.length == 1 && emptyIn.head.isNullAt(0)

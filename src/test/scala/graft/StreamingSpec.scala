@@ -6,6 +6,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import graft.operators.MisraGriesSketch
 import graft.sources.ParquetRead
 import graft.streaming.StreamOps
 
@@ -479,7 +480,7 @@ class StreamingSpec extends SparkSpec {
       org.apache.spark.sql.types.StructField("v", org.apache.spark.sql.types.StringType)))
     val Sk = graft.operators.Sketches
     def run(): Unit = StreamOps.availableNow(spark, inDir, schema, ckDir) { (b, runId) =>
-      Sk.frequentItems(b, col("v"), 8).withColumn("run_id", lit(runId))
+      MisraGriesSketch.frequentItems(b, col("v"), 8).withColumn("run_id", lit(runId))
         .write.mode("append").parquet(stDir)
     }.awaitTermination()
     def summary(): (Map[String, Long], Long) = {
@@ -518,7 +519,7 @@ class StreamingSpec extends SparkSpec {
         s"$it: weight ${items(it)} must bound true $t within +$delta")
     }
     // differential vs one-shot batch sketch: same contract on all data
-    val oneShot = Sk.frequentItems((batch1 ++ batch2).toDF("v"), col("v"), 8)
+    val oneShot = MisraGriesSketch.frequentItems((batch1 ++ batch2).toDF("v"), col("v"), 8)
       .collect().filter(!_.isNullAt(0)).map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
     for ((it, (w, d)) <- oneShot if truth.contains(it))
       assert(w <= truth(it) && truth(it) <= w + d, s"one-shot $it out of bound")
@@ -553,7 +554,7 @@ class StreamingSpec extends SparkSpec {
     def run(inDir: String, ckDir: String, stDir: String): Unit =
       StreamOps.availableNow(spark, inDir, schema, ckDir) { (b, runId) =>
         seen.add(runId)
-        Sk.frequentItems(b, col("v"), 8).withColumn("run_id", lit(runId))
+        MisraGriesSketch.frequentItems(b, col("v"), 8).withColumn("run_id", lit(runId))
           .write.mode("append").parquet(stDir)
         if (crash.compareAndSet(true, false))
           throw new IllegalStateException("injected crash after the state append")

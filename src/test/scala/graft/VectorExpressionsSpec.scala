@@ -1,11 +1,19 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.{HashFunctions => HF, VectorFunctions => VF}
+import graft.functions.{HashFunctions => HF, HofReference, VectorFunctions => VF}
 import graft.operators.Similarity
 
 class VectorExpressionsSpec extends SparkSpec {
   import spark.implicits._
+
+  /** cosine(query, reconstruct(codes)) through the fused [[graft.plans.PqCosine]]
+    * kernel, built through the bridge like `VectorFunctions.pqEncode`. */
+  private def pqCosine(q: org.apache.spark.sql.Column, codes: org.apache.spark.sql.Column,
+      cbs: Array[Array[Array[Double]]]) = {
+    import org.apache.spark.sql.GraftSqlBridge.{column, expression}
+    column(graft.plans.PqCosine(expression(q), expression(codes), cbs))
+  }
 
   test("native cosine is bit-identical to the HOF formulation on fixture embeddings") {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
@@ -60,7 +68,7 @@ class VectorExpressionsSpec extends SparkSpec {
       .select(col("doc_id"), split(lower(col("text")), "\\s+").as("toks"))
       .select(col("doc_id"), HF.hashedWordShingles(col("toks"), 3).as("hs"))
     val diffs = docs.select(
-      HF.minHashFromHashesHof(col("hs"), 32).as("hof"),
+      HofReference.minHashFromHashesHof(col("hs"), 32).as("hof"),
       HF.minHashFromHashes(col("hs"), 32).as("native"))
       .filter(not(col("hof") === col("native")))
       .count()
@@ -76,7 +84,7 @@ class VectorExpressionsSpec extends SparkSpec {
       .select(col("doc_id"), split(lower(col("text")), "\\s+").as("toks"))
     // distinct 3-gram shingles (the MinHash feed)
     val shingleDiffs = toks.select(
-      HF.hashedWordShinglesHof(col("toks"), 3).as("hof"),
+      HofReference.hashedWordShinglesHof(col("toks"), 3).as("hof"),
       HF.hashedWordShingles(col("toks"), 3).as("native"))
       .filter(not(col("hof") === col("native")))
       .count()
@@ -100,7 +108,7 @@ class VectorExpressionsSpec extends SparkSpec {
     assert(rawNull(0).isNullAt(0))
     // duplicate shingles collapse in first-occurrence order, like array_distinct
     val dup = Seq(Seq("a", "b", "a", "b", "a")).toDF("toks")
-    val hofDup = dup.select(HF.hashedWordShinglesHof(col("toks"), 2).as("s")).as[Seq[Long]].head()
+    val hofDup = dup.select(HofReference.hashedWordShinglesHof(col("toks"), 2).as("s")).as[Seq[Long]].head()
     val natDup = dup.select(HF.hashedWordShingles(col("toks"), 2).as("s")).as[Seq[Long]].head()
     assert(natDup == hofDup && natDup.length == 2)
   }
@@ -126,7 +134,7 @@ class VectorExpressionsSpec extends SparkSpec {
     val needles = Seq(" the ", " a ", " of ", " le ", " und ")
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
       .select(concat(lit(" "), col("text"), lit(" ")).as("pt"))
-    val regexCounts = array(needles.map(n => TF.occurrences(col("pt"), n)): _*)
+    val regexCounts = array(needles.map(n => HofReference.occurrences(col("pt"), n)): _*)
     val diffs = docs.select(
       regexCounts.as("hof"),
       TF.occurrencesAll(col("pt"), needles).as("native"))
@@ -138,7 +146,7 @@ class VectorExpressionsSpec extends SparkSpec {
     val tricky = Seq(" a a a ").toDF("pt")
     val got = tricky.select(TF.occurrencesAll(col("pt"), Seq(" a ")).as("c"))
       .as[Seq[Int]].head()
-    val viaRegex = tricky.select(TF.occurrences(col("pt"), " a ").as("c")).as[Int].head()
+    val viaRegex = tricky.select(HofReference.occurrences(col("pt"), " a ").as("c")).as[Int].head()
     assert(got == Seq(viaRegex) && got == Seq(2))
     // NULL text → NULL counts array (null-in null-out, like the regex form)
     val nullRow = Seq(Option.empty[String]).toDF("pt")
@@ -152,40 +160,6 @@ class VectorExpressionsSpec extends SparkSpec {
     val n = emb.select(VF.cosineNative(col("embedding"), col("embedding")).as("c"))
       .filter(col("c") > 0.999999).count()
     assert(n == 500)
-  }
-
-  test("random projection: JL cosine preservation on fixture embeddings, deterministic") {
-    val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val dim = emb.select(size(col("embedding"))).as[Int].head()
-    val k = 64
-    // project, then compare pairwise cosines before/after on a sample
-    val proj = emb.select(col("vec_id"),
-      col("embedding").cast("array<double>").as("full"),
-      VF.randomProjection(col("embedding"), dim, k, 42L).as("small"))
-      .filter(col("vec_id") < 40).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getSeq[Double](2).toArray))
-    def cos(a: Array[Double], b: Array[Double]): Double = {
-      val d = a.zip(b).map { case (x, y) => x * y }.sum
-      d / math.sqrt(a.map(x => x * x).sum * b.map(x => x * x).sum)
-    }
-    assert(proj.forall(_._3.length == k))
-    val errs = for {
-      (ia, fa, sa) <- proj; (ib, fb, sb) <- proj if ia < ib
-    } yield math.abs(cos(fa, fb) - cos(sa, sb))
-    // JL at k=64: typical distortion √(1/k) ≈ 0.125; the max over ~800
-    // pairs sits a few σ out (measured 0.398 on this fixture/seed)
-    assert(errs.nonEmpty && errs.max < 0.45, s"worst distortion ${errs.max}")
-    assert(errs.sum / errs.size < 0.12, s"mean distortion ${errs.sum / errs.size}")
-    // deterministic across partitionings and sessions (seeded regeneration)
-    val again = emb.repartition(7).select(col("vec_id"),
-      VF.randomProjection(col("embedding"), dim, k, 42L).as("s"))
-      .filter(col("vec_id") < 40).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
-    proj.foreach { case (id, _, s) => assert(again(id) == s.toSeq) }
-    // NULL in → NULL out; SQL registration
-    val nul = Seq((1L, null.asInstanceOf[Array[Float]])).toDF("id", "e")
-      .select(VF.randomProjection(col("e"), 8, 4, 1L)).collect()
-    assert(nul.head.isNullAt(0))
   }
 
   test("null array elements: native hash consumers skip them; winnow nulls out") {
@@ -288,7 +262,7 @@ class VectorExpressionsSpec extends SparkSpec {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val rows = emb.select(
       VF.l2Normalize(col("embedding")).as("nat"),
-      VF.l2NormalizeHof(col("embedding")).as("hof")).collect()
+      HofReference.l2NormalizeHof(col("embedding")).as("hof")).collect()
     assert(rows.nonEmpty)
     rows.zipWithIndex.foreach { case (r, i) =>
       assert(r.getSeq[Any](0) == r.getSeq[Any](1), s"row $i differs")
@@ -313,7 +287,7 @@ class VectorExpressionsSpec extends SparkSpec {
     val df = rows.toDF("a")
     val got = df.select(
       VF.l2Normalize(col("a")).as("nat"),
-      VF.l2NormalizeHof(col("a")).as("hof")).collect()
+      HofReference.l2NormalizeHof(col("a")).as("hof")).collect()
     got.zipWithIndex.foreach { case (r, i) =>
       assert(r.isNullAt(0) == r.isNullAt(1), s"row $i nullness")
       if (!r.isNullAt(0)) {
@@ -344,7 +318,7 @@ class VectorExpressionsSpec extends SparkSpec {
       .as[Seq[Short]].head()
     assert(codes == Seq(1.toShort, 2.toShort),
       s"expected tie to break to the lower duplicate code: $codes")
-    val cos = df.select(VF.pqCosine(col("v"),
+    val cos = df.select(pqCosine(col("v"),
       VF.pqEncode(col("v"), cbs), cbs)).as[Double].head()
     assert(math.abs(cos - 1.0) < 1e-12, s"self-cosine via exact codes: $cos")
     // a vector NEAR a codeword scores against its reconstruction the
@@ -359,7 +333,7 @@ class VectorExpressionsSpec extends SparkSpec {
       dot / (math.sqrt(w.map(x => x * x).sum) * math.sqrt(recon.map(x => x * x).sum))
     }
     val got = Seq((w, 0)).toDF("v", "i")
-      .select(VF.pqCosine(col("v"), VF.pqEncode(col("v"), cbs), cbs))
+      .select(pqCosine(col("v"), VF.pqEncode(col("v"), cbs), cbs))
       .as[Double].head()
     assert(math.abs(got - expected) < 1e-12, s"got $got expected $expected")
   }
@@ -390,7 +364,7 @@ class VectorExpressionsSpec extends SparkSpec {
       (Some(Seq(Some(0.0), Some(0.0), Some(0.0), Some(0.0))), Some(Seq(0.toShort, 1.toShort)), 5),
       (Some(q.map(Option(_))), Some(Seq(0.toShort, 1.toShort)), 6))
     val cos = cosRows.toDF("v", "c", "i").orderBy("i")
-      .select(VF.pqCosine(col("v"), col("c"), cbs)).collect()
+      .select(pqCosine(col("v"), col("c"), cbs)).collect()
     for (i <- Seq(0, 1, 2, 3)) assert(cos(i).isNullAt(0), s"row $i must be NULL")
     assert(cos(4).getDouble(0) == 0.0 && cos(5).getDouble(0) == 0.0)
     assert(!cos(6).isNullAt(0) && math.abs(cos(6).getDouble(0)) <= 1.0)
@@ -407,7 +381,7 @@ class VectorExpressionsSpec extends SparkSpec {
     val viaResidual = df.select(
       VF.pqResidualCosine(col("q"), col("c"), col("cent"), cbs)).as[Double].head()
     val viaPlain = df.select(
-      VF.pqCosine(col("q"), col("c"), cbs)).as[Double].head()
+      pqCosine(col("q"), col("c"), cbs)).as[Double].head()
     assert(math.abs(viaResidual - viaPlain) < 1e-12,
       s"zero centroid must reduce to plain pq cosine: $viaResidual vs $viaPlain")
     // nonzero centroid: reconstruction = centroid + codeword, by hand
@@ -450,7 +424,7 @@ class VectorExpressionsSpec extends SparkSpec {
       }.toDF("v", "cent", "i")
       val out = df
         .withColumn("codes", VF.pqEncode(col("v"), cbs))
-        .withColumn("c1", VF.pqCosine(col("v"), col("codes"), cbs))
+        .withColumn("c1", pqCosine(col("v"), col("codes"), cbs))
         .withColumn("c2", VF.pqResidualCosine(col("v"), col("codes"), col("cent"), cbs))
         .agg(count(when(col("c1").between(-1.0001, 1.0001) &&
           col("c2").between(-1.0001, 1.0001), 1)))
@@ -493,7 +467,6 @@ class VectorExpressionsSpec extends SparkSpec {
             graft_shingles(toks, 3, true) sg,
             graft_count_all(text, array('kata', 'dua')) ca,
             graft_hyperplanes(vec, 4, 8, 42L) hp,
-            graft_project(vec, 4, 2, 42L) pj,
             graft_argmax_cos(vec, array(array(1.0d, 0d, 0d, 0d), array(0d, 1.0d, 0d, 0d))) am,
             graft_span_mask(toks, starts, 2) sm,
             graft_hash_embed(hashes, 8) he,
@@ -501,7 +474,7 @@ class VectorExpressionsSpec extends SparkSpec {
           FROM codegen_all
         ) WHERE c IS NOT NULL AND rh IS NOT NULL AND mh IS NOT NULL
           AND wn IS NOT NULL AND sh IS NOT NULL AND sg IS NOT NULL
-          AND ca IS NOT NULL AND hp IS NOT NULL AND pj IS NOT NULL
+          AND ca IS NOT NULL AND hp IS NOT NULL
           AND am IS NOT NULL AND sm IS NOT NULL AND nf IS NOT NULL AND he IS NOT NULL
       """).as[Long].head()
       assert(n == 1000)
@@ -532,7 +505,7 @@ class VectorExpressionsSpec extends SparkSpec {
         transform(split(trim(col("text")), "\\s+"), t => xxhash64(t)).as("hs"))
     val diffs = docs.select(
         HF.hashEmbed(col("hs"), 16).as("nat"),
-        HF.hashEmbedHof(col("hs"), 16).as("hof"))
+        HofReference.hashEmbedHof(col("hs"), 16).as("hof"))
       .filter(col("nat") =!= col("hof")).count()
     assert(diffs == 0)
     // degenerates: null array -> NULL; empty -> zero vector; null
@@ -545,7 +518,7 @@ class VectorExpressionsSpec extends SparkSpec {
       (Some(Seq(Some(2L), Some(3L))), 3))
     val got = rows.toDF("hs", "i").orderBy("i")
       .select(HF.hashEmbed(col("hs"), 4).as("nat"),
-        HF.hashEmbedHof(col("hs"), 4).as("hof")).collect()
+        HofReference.hashEmbedHof(col("hs"), 4).as("hof")).collect()
     assert(got(0).isNullAt(0) && got(0).isNullAt(1))
     assert(got(1).getSeq[Double](0) == Seq(0.0, 0.0, 0.0, 0.0))
     assert(got(2).getSeq[Double](0) == Seq(0.0, 1.0, 0.0, 0.0),

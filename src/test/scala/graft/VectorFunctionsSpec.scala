@@ -1,10 +1,14 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.{VectorFunctions => VF}
+import graft.functions.{HofReference, VectorFunctions => VF}
 
 class VectorFunctionsSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The inverse of `quantizeInt8`: each code times its vector's scale. */
+  private def dequantize(qs: org.apache.spark.sql.Column) =
+    transform(qs.getField("q"), b => b.cast("double") * qs.getField("scale"))
 
   private val df = Seq(
     (Seq(1.0f, 0.0f), Seq(1.0f, 0.0f)),
@@ -30,8 +34,8 @@ class VectorFunctionsSpec extends SparkSpec {
   }
 
   test("hyperplane signature: same vector → same bits; deterministic planes") {
-    val planes = VF.randomPlanes(2, 8, seed = 7)
-    val planes2 = VF.randomPlanes(2, 8, seed = 7)
+    val planes = HofReference.randomPlanes(2, 8, seed = 7)
+    val planes2 = HofReference.randomPlanes(2, 8, seed = 7)
     assert(planes.map(_.toSeq) == planes2.map(_.toSeq))
     val sig = df.select(VF.hyperplaneSignature(col("a"), 2, 8, seed = 7)).as[Long].collect()
     val sigB = df.select(VF.hyperplaneSignature(col("b"), 2, 8, seed = 7)).as[Long].collect()
@@ -40,9 +44,9 @@ class VectorFunctionsSpec extends SparkSpec {
   }
 
   test("native hyperplane signature matches the HOF formulation") {
-    val planes = VF.randomPlanes(2, 8, seed = 7)
+    val planes = HofReference.randomPlanes(2, 8, seed = 7)
     val rows = df.select(
-      VF.hyperplaneSignatureHof(col("a"), planes).as("hof"),
+      HofReference.hyperplaneSignatureHof(col("a"), planes).as("hof"),
       VF.hyperplaneSignature(col("a"), 2, 8, seed = 7).as("native")).collect()
     rows.foreach(r => assert(r.get(0) == r.get(1), s"hof=${r.get(0)} native=${r.get(1)}"))
   }
@@ -56,8 +60,8 @@ class VectorFunctionsSpec extends SparkSpec {
     val rnd = new scala.util.Random(11)
     val vecs = Seq.fill(50)(Seq.fill(64)(rnd.nextGaussian().toFloat * 10f))
     val q = vecs.toDF("v")
-      .select(VF.cosine(VF.dequantizeInt8(VF.quantizeInt8(col("v"))), col("v")).as("c"),
-        VF.l2Norm(VF.dequantizeInt8(VF.quantizeInt8(col("v")))).as("qn"),
+      .select(VF.cosine(dequantize(VF.quantizeInt8(col("v"))), col("v")).as("c"),
+        VF.l2Norm(dequantize(VF.quantizeInt8(col("v")))).as("qn"),
         VF.l2Norm(col("v")).as("n"))
       .as[(Double, Double, Double)].collect()
     q.foreach { case (c, qn, n) =>
@@ -66,7 +70,7 @@ class VectorFunctionsSpec extends SparkSpec {
     }
     // degenerate: the zero vector reconstructs exactly
     val z = Seq(Seq(0.0f, 0.0f, 0.0f)).toDF("v")
-      .select(VF.dequantizeInt8(VF.quantizeInt8(col("v")))).as[Seq[Double]].head()
+      .select(dequantize(VF.quantizeInt8(col("v")))).as[Seq[Double]].head()
     assert(z == Seq(0.0, 0.0, 0.0))
     // codes are genuinely int8: max |code| is 127 on the absmax coordinate
     val codes = vecs.toDF("v").select(VF.quantizeInt8(col("v")).getField("q"))

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{IndexStore, Similarity, VectorIndex}
+import graft.operators.{IndexStore, IvfReference, Similarity, VectorIndex}
 
 class VectorIndexSpec extends SparkSpec {
   import spark.implicits._
@@ -52,14 +52,15 @@ class VectorIndexSpec extends SparkSpec {
     val before = probe()
     assert(before.map(_._2).toSet == Set(1L, 2L, 3L, 4L))
     // an empty metaCols differs from the stored set {lang}
+    def upsert(b: org.apache.spark.sql.DataFrame, metaCols: Seq[String]) =
+      IndexStore.upsert(b, "vec_id", "vec_id", VectorIndex.ReservedPostingCols, idxDir, 1L,
+        metaCols)(VectorIndex.append(b, "vec_id", "embedding", idxDir, 1L, metaCols))
     intercept[IllegalArgumentException] {
-      VectorIndex.upsert(corpus.filter(col("vec_id") === 1L), "vec_id", "embedding", idxDir, 1L,
-        Nil)
+      upsert(corpus.filter(col("vec_id") === 1L), Nil)
     }
     // the batch lacks the stored metadata column
     intercept[IllegalArgumentException] {
-      VectorIndex.upsert(corpus.filter(col("vec_id") === 3L).drop("lang"), "vec_id",
-        "embedding", idxDir, 1L, metaCols = Seq("lang"))
+      upsert(corpus.filter(col("vec_id") === 3L).drop("lang"), Seq("lang"))
     }
     assert(probe() == before, "a refused upsert must leave its ids live")
   }
@@ -74,7 +75,7 @@ class VectorIndexSpec extends SparkSpec {
       .select((col("vec_id") + 10000L).as("vec_id"), col("embedding"))
       .localCheckpoint(true)
     val cents = spark.read.parquet(s"$idxDir/centroids")
-    val oneShot = topk(Similarity.ivfCosineTopK(
+    val oneShot = topk(IvfReference.ivfCosineTopK(
       emb, "vec_id", "embedding", queries, "vec_id", "embedding",
       cents, k = 3, nprobe = 2))
     val indexed = topk(VectorIndex.queryTopK(
@@ -184,7 +185,7 @@ class VectorIndexSpec extends SparkSpec {
     assert(got.map(r => (r._1, r._2)).toSet == Set((10L, 1L), (10L, 3L)),
       s"nprobe=1 must find the tied-cell members: $got")
     // and exact parity with the one-shot on the SAME duplicated model
-    val oneShot = topk(Similarity.ivfCosineTopK(
+    val oneShot = topk(IvfReference.ivfCosineTopK(
       corpus, "vec_id", "embedding", queries, "vec_id", "embedding",
       spark.read.parquet(s"$idxDir/centroids"), k = 2, nprobe = 1))
     assert(got == oneShot, s"indexed $got != one-shot $oneShot")
@@ -240,7 +241,7 @@ class VectorIndexSpec extends SparkSpec {
     // would have padded the one-shot result before the fix
     val indexed = topk(VectorIndex.queryTopK(
       spark, queries, "vec_id", "embedding", idxDir, k = 5, nprobe = 1))
-    val oneShot = topk(Similarity.ivfCosineTopK(
+    val oneShot = topk(IvfReference.ivfCosineTopK(
       corpus, "vec_id", "embedding", queries, "vec_id", "embedding",
       spark.read.parquet(s"$idxDir/centroids"), k = 5, nprobe = 1))
     assert(indexed == oneShot && indexed.nonEmpty, s"$indexed != $oneShot")
@@ -386,7 +387,7 @@ class VectorIndexSpec extends SparkSpec {
       val sample = SynthEmbeddings.clustered(spark, 100, dim = 64, clusters = 20,
         noise = noise, seed = 42L, pointSeed = 7042L, idOffset = 1000000L, shift = 0.0)
       VectorIndex.calibrateNprobe(spark, sample, "vec_id", "embedding", idxDir,
-        k = 10, candidates = Seq(1, 2, 4, 8, 16, 32))
+        k = 10, None, candidates = Seq(1, 2, 4, 8, 16, 32))
     }
     val (npTight, recTight) = chosenFor(0.05)
     val (npDiffuse, recDiffuse) = chosenFor(0.30)
@@ -428,7 +429,7 @@ class VectorIndexSpec extends SparkSpec {
       spark, queries, "vec_id", "embedding", idxDir, k = 10))
     val (npCal, _) = VectorIndex.calibrateNprobe(spark,
       queries.limit(100).localCheckpoint(true), "vec_id", "embedding", idxDir,
-      k = 10, candidates = Seq(1, 2, 4, 8, 16, 32))
+      k = 10, None, candidates = Seq(1, 2, 4, 8, 16, 32))
     val rCal = recallOf(VectorIndex.queryTopK(
       spark, queries, "vec_id", "embedding", idxDir, k = 10, nprobe = npCal))
     assert(rDefault < 0.95,
@@ -770,17 +771,23 @@ class VectorIndexSpec extends SparkSpec {
       .filter(col("vec_id") === x).select(col("emb")).collect()
     assert(kept.length == 1 &&
       kept.head.getSeq[Float](0) == vOld.map(v => -v).toSeq)
-    // an explicit-horizon delete redelivered AFTER the upsert must not
-    // swallow the new posting (the stream-redelivery race delete()'s
-    // asofRun parameter exists for)
-    VectorIndex.delete(Seq(x).toDF("vec_id"), "vec_id", idxDir, asofRun = 0L)
+    // an explicit-horizon tombstone redelivered AFTER the upsert must
+    // not swallow the new posting (the stream-redelivery race the
+    // ledger's explicit horizon exists for)
+    graft.sources.Lease.withLease(spark, idxDir) {
+      IndexStore.appendTombstones(Seq(x).toDF("vec_id"), "vec_id", "vec_id", idxDir,
+        s"$idxDir/postings", 0L)
+    }
     checkBoth()
     // the one-call helper: same contract, idempotent under redelivery
     // (horizon = runId - 1 is explicit, so a replay can never swallow
     // its own append)
-    VectorIndex.upsert(reEmbedded, "vec_id", "embedding", idxDir, runId = 2L, metaCols = Nil)
+    def upsert() = IndexStore.upsert(reEmbedded, "vec_id", "vec_id",
+        VectorIndex.ReservedPostingCols, idxDir, runId = 2L, metaCols = Nil)(
+      VectorIndex.append(reEmbedded, "vec_id", "embedding", idxDir, 2L, Nil))
+    upsert()
     checkBoth()
-    VectorIndex.upsert(reEmbedded, "vec_id", "embedding", idxDir, runId = 2L, metaCols = Nil)
+    upsert()
     checkBoth()
   }
 
@@ -1121,23 +1128,23 @@ class VectorIndexSpec extends SparkSpec {
     assert(naive.isEmpty,
       s"fixture must reproduce the under-recall (got $naive)")
     // the calibrated call measures filtered recall and raises nprobe
-    val (np, recalls) = VectorIndex.calibrateNprobeFiltered(
-      spark, queries, "vec_id", "embedding", idxDir, k = 3, en,
+    val (np, recalls) = VectorIndex.calibrateNprobe(
+      spark, queries, "vec_id", "embedding", idxDir, k = 3, Some(en),
       candidates = Seq(1, 2, 4, 8))
     assert(np == 8 && recalls(2) == 0.0,
       s"calibration must measure the miss and raise the dial: $np $recalls")
-    val (npCal, _) = VectorIndex.calibrateNprobeFiltered(
+    val (npCal, _) = VectorIndex.calibrateNprobe(
       spark, queries.limit(4).localCheckpoint(true), "vec_id", "embedding",
-      idxDir, k = 3, en, candidates = Seq(1, 2, 4, 8))
+      idxDir, k = 3, Some(en), candidates = Seq(1, 2, 4, 8))
     val got = topk(VectorIndex.queryTopKFiltered(
       spark, queries, "vec_id", "embedding", idxDir, k = 3, en, nprobe = npCal))
     assert(got.map(r => (r._2, r._4)).take(1) == Seq((9000L, 1)),
       s"the calibrated call must recover the planted neighbor at rank 1: $got")
     assert(got.map(_._2) == Seq(9000L, 9001L, 9002L))
     // the id-set form of the same filter calibrates identically
-    val (np2, _) = VectorIndex.calibrateNprobeFiltered(
+    val (np2, _) = VectorIndex.calibrateNprobe(
       spark, queries, "vec_id", "embedding", idxDir, k = 3,
-      col("vec_id").isin(corpus.filter(en).select(col("vec_id"))),
+      Some(col("vec_id").isin(corpus.filter(en).select(col("vec_id")))),
       candidates = Seq(1, 2, 4, 8))
     assert(np2 == 8)
   }

@@ -7,7 +7,10 @@ in a `def` or `case class` parameter list under src/main (a defaulted
     python3 tools/knob_census.py --sites [ROOT]
     python3 tools/knob_census.py --operators [ROOT]
 
-The first form prints the total, then the count per file. `--sites` prints
+The first form prints the total, then the count per file, then the
+`option reads`: each environment or system-property read under src/main
+(`sys.env`, `sys.props`, `System.getenv`, `System.getProperty`) except the
+platform facts in `PLATFORM_FACTS`. `--sites` prints
 every defaulted parameter (with its [parameter list:position]) and each site
 that overrides it, grouped into src/main, perfbench/src and src/test: a call
 that passes the parameter by name or by position, or a `.copy(field = ...)`
@@ -18,30 +21,41 @@ Both reports resolve a use of a name to the defs it can call. A use is
 resolved by its owner: a use qualified by a capitalized name (import renames
 and `val X = pkg.Object` aliases resolved) reaches the defs of the object of
 that name, an unqualified one the defs of its own file when one of the file's
-defs of that name admits the call, else the defs of the objects the file
-imports the name from. A resolved call then
+defs of that name admits the call, else, when the file binds the name as a
+`val`, `var` or parameter, no other object's def, else the defs of the
+objects the file imports the name from. A resolved call then
 reaches only the overloads whose parameter-count range (required parameters
 to all parameters of the first list; no upper end for varargs or for a def
 without a parameter list) admits its argument count; a method value (no
-argument list) or a `_*` splat reaches every overload. A use the tool cannot
-resolve (one made on a value or an expression, or an unqualified one whose
-name the file neither defines nor imports) reaches every def of that name:
-`--sites` lists it on an `unresolved:` line under the parameter and counts
-it in neither total, so no site is dropped silently; `--operators` counts it
-as a reference, so a used def is never reported.
+argument list) or a `_*` splat reaches every overload. A use on a value
+(a lowercase receiver: `spark.read`) reaches no object's def, and a use on
+an expression without an argument list (`f(x).write.mode(...)`) only the
+defs callable without arguments; each def records whether the body it sits
+in is an object's, so a class and its companion object can share a name.
+Any other use the tool cannot resolve (an unqualified one whose name the
+file neither defines, binds nor imports) reaches every def of that name:
+`--sites` lists unresolved uses on an `unresolved:` line under the parameter
+and counts them in neither total, so no site is dropped silently;
+`--operators` counts them as references, so a used def is never reported.
 
-`--operators` prints the public defs of src/main (not private, protected or
-override, declared in a public object, class or trait body) that no use in
-src/main or perfbench/src code reaches, then each with the spec files that
-reach it. Comments and string text are blanked, so scaladoc is no reference,
-and neither is an import line or a named argument. The entry points in
-`OPERATOR_EXEMPT` are left out of the total. Stdlib only.
+`--operators` prints the defs of src/main that no use in src/main or
+perfbench/src code reaches, then each with the spec files that reach it:
+the public and `private[graft]` ones (not private, protected or override,
+declared in an object, class or trait body that is itself public or
+`private[graft]`), and the SQL functions registered by name
+(`FunctionIdentifier("...")`) that no `call_function("name", ...)` or
+`name(` in src/main or perfbench/src string text calls outside a def of
+the first kind. Comments and string text are blanked for the defs, so
+scaladoc is no reference, and neither is an import line or a named
+argument. The defs in `OPERATOR_EXEMPT` are left out of the total, each
+with its reason; `stale exemptions` counts the entries that no longer
+name a spec-only def. Stdlib only.
 """
 import bisect, os, re, sys
 
 HEAD = re.compile(r"\b(?:def\s+[\w$]+|case\s+class\s+\w+)\s*(?:\[[^\]]*\])?\s*\(")
 DEF = re.compile(r"\b(def|case\s+class)\s+([\w$]+)\s*(?:\[[^\]]*\])?\s*\(")
-OWNER = re.compile(r"\b(?:object|class|trait)\s+(\w+)")
+OWNER = re.compile(r"\b(object|class|trait)\s+(\w+)")
 IMPORT = re.compile(r"\bimport\s+[\w.]*?\b([A-Z]\w*)\s*\.\s*(?:\{([^}]*)\}|([\w$*]+))")
 DEPTH = {"(": 1, "[": 1, "{": 1, ")": -1, "]": -1, "}": -1}
 GROUPS = ("src/main", "perfbench/src", "src/test")
@@ -108,12 +122,13 @@ def scala_files(root, sub):
                 yield os.path.relpath(os.path.join(d, f), root)
 
 
-def owner_index(src):
-    """A function from an offset to the innermost object/class/trait whose
-    body encloses it (one pass over `src`)."""
-    owners = {m.end(): m.group(1) for m in OWNER.finditer(src)}
+def owner_index(src, kind=False):
+    """A function from an offset to the name of the innermost object, class
+    or trait whose body encloses it (one pass over `src`); with `kind`, to
+    (name, whether that body is an object's)."""
+    owners = {m.end(): (m.group(2), m.group(1) == "object") for m in OWNER.finditer(src)}
     stack, depth, pending = [], 0, None
-    marks, names = [0], [None]
+    marks, names = [0], [(None, False)]
     for i, ch in enumerate(src):
         if i in owners:
             pending = owners[i]
@@ -129,8 +144,9 @@ def owner_index(src):
         else:
             continue
         marks.append(i + 1)
-        names.append(stack[-1][1] if stack else None)
-    return lambda pos: names[bisect.bisect_right(marks, pos) - 1]
+        names.append(stack[-1][1] if stack else (None, False))
+    at = lambda pos: names[bisect.bisect_right(marks, pos) - 1]
+    return at if kind else lambda pos: at(pos)[0]
 
 
 def skip_ws(src, i):
@@ -218,6 +234,9 @@ class Scope:
         self.aliases = {b: a for a, b in re.findall(r"\b(\w+)\s*=>\s*(\w+)\s*[,}]", src)}
         self.aliases.update(re.findall(r"\bval\s+([A-Z]\w*)\s*=\s*[\w.]*?\b(\w+)\s*$", src, re.M))
         self.imports = imported_names(src)
+        self.bound = set(re.findall(r"\b(?:val|var)\s+([\w$]+)", src))
+        self.bound.update(re.findall(r"[(,]\s*(?:(?:implicit|val|var)\s+)?([\w$]+)\s*:(?!:)", src))
+        self.bound.update(re.findall(r"([\w$]+)\s*=>", src))
 
     def qualifier(self, src, start):
         """The owner name a use at `start` is qualified by: a name, "." for
@@ -229,10 +248,10 @@ class Scope:
             return None if q == "this" else q
         return "." if re.search(r"\.\s*$", before) else None
 
-    def resolve(self, ds, name, qual, n):
-        """The defs of `ds` (each with .rel, .owner, .lo, .hi) that a use of
-        `name` qualified by `qual` with `n` arguments reaches, and whether
-        the use resolved (an unresolved one reaches every def of `ds`)."""
+    def resolve(self, ds, name, qual, n, bare=False):
+        """The defs of `ds` (each with .rel, .owner, .obj, .lo, .hi) that a
+        use of `name` qualified by `qual` with `n` arguments (`bare`: no
+        argument list) reaches, and whether the use resolved."""
         fit = lambda cands: [d for d in cands if admits(d.lo, d.hi, n)]
         if qual and qual[0].isupper():
             # a capitalized qualifier names an object (ours, or a foreign
@@ -243,18 +262,27 @@ class Scope:
             # to an imported one
             if any(admits(lo, hi, n) for lo, hi in self.local.get(name, ())):
                 return fit([d for d in ds if d.rel == self.rel]), True
+            if name in self.bound:
+                # a value the file binds shadows other objects' defs
+                return fit([d for d in ds if d.rel == self.rel or not d.obj]), True
             owners = self.imports.get(name, set()) | self.imports.get("_", set())
             cands = [d for d in ds if d.owner in owners]
             if cands:
                 return fit(cands), True
-        return ds, False
+            return ds, False
+        # a use on a value (`spark.read`) reaches no object's def, and one on
+        # an expression without an argument list (`f(x).write.mode(...)`)
+        # only the defs callable without arguments
+        if qual != ".":
+            ds = [d for d in ds if not d.obj]
+        return [d for d in ds if d.lo == 0] if bare else ds, False
 
 
 class Decl:
-    def __init__(self, rel, pos, line, owner, name, lo, hi, public=True, extra=None):
+    def __init__(self, rel, pos, line, owner, name, lo, hi, public=True, extra=None, obj=False):
         self.rel, self.pos, self.line, self.owner, self.name = rel, pos, line, owner, name
         self.call = owner if name == "apply" and owner else name
-        self.lo, self.hi, self.public, self.extra = lo, hi, public, extra
+        self.lo, self.hi, self.public, self.extra, self.obj = lo, hi, public, extra, obj
 
 
 def definitions(root):
@@ -263,17 +291,17 @@ def definitions(root):
     out = []
     for rel in scala_files(root, "src/main"):
         src = strip(open(os.path.join(root, rel), encoding="utf-8").read())
-        owner_at = owner_index(src)
+        owner_at = owner_index(src, kind=True)
         for m in DEF.finditer(src):
             kind, name = m.group(1), m.group(2)
-            owner = owner_at(m.start())
+            owner, obj = owner_at(m.start())
             lo, hi = def_arity(src, m.start(2) + len(name))
             for li, plist in enumerate(param_lists(src, m.end() - 1)):
                 for pi, p in enumerate(split_top(plist)):
                     if is_defaulted(p):
                         pname = re.match(r"\s*(?:(?:implicit|val|var|private|override)\s+)*([\w$]+)", p).group(1)
                         line = src.count("\n", 0, m.start()) + 1
-                        out.append(Decl(rel, m.start(), line, owner, name, lo, hi,
+                        out.append(Decl(rel, m.start(), line, owner, name, lo, hi, obj=obj,
                                         extra=(kind != "def", li, pi, pname, " ".join(p.split()))))
     return out
 
@@ -361,13 +389,64 @@ def print_sites(root):
             print("  unresolved: " + ", ".join(unresolved[d]))
 
 
-# Public entry points whose callers are not graft's own code: the streaming
-# ones are called by deployments (no batch twin exists for them to be called
-# through), and `SparkEntry.entry` by the driver that loads the jar.
-OPERATOR_EXEMPT = ("StreamOps.availableNow", "StreamOps.decontaminateStream",
-                   "StreamOps.sessionizeStream", "SparkEntry.entry")
+# Defs whose callers are not graft's own code, each with its reason.
+OPERATOR_EXEMPT = {
+    # entry points
+    "StreamOps.availableNow": "the streaming driver deployments call; no batch twin calls it",
+    "StreamOps.decontaminateStream": "a streaming entry point deployments call",
+    "StreamOps.sessionizeStream": "a streaming entry point deployments call",
+    "SparkEntry.entry": "called by the driver that loads the jar",
+    # the reference pipeline's own I/O (SURVEY maps it to test.py)
+    "Xlsx.read": "reads the reference's Excel forms export and metadata state (test.py:101,113)",
+    "Xlsx.write": "writes the reference's Excel metadata state (test.py:197-201)",
+    "BinaryCorpus.scan": "the reference's recursive image scan (trial-img-processor.py:59-62)",
+    "BinaryCorpus.withPathKeys": "the reference's path-to-key split (test.py:172-173)",
+    "IdempotentBlobSink.upload": "the reference's versioned upload (test.py:62-93)",
+    # corpus ingest formats; the query fixtures arrive as parquet
+    "CsvCorpus.read": "CSV/TSV corpus ingest",
+    "CsvCorpus.readWithCorrupt": "CSV/TSV corpus ingest with corrupt-row quarantine",
+    "CsvCorpus.write": "CSV corpus export",
+    "JsonlCorpus.read": "JSONL corpus ingest",
+    "JsonlCorpus.readWithCorrupt": "JSONL corpus ingest with corrupt-line quarantine",
+    "Warc.parseAll": "full-record WARC parse; queries read responses through readWithCorrupt",
+    # state maintenance a deployment schedules between runs
+    "Sketches.compactKmvState": "folds KMV sketch state at its retention horizon",
+    "Sketches.compactHllState": "folds HLL sketch state",
+    "Sketches.compactMgState": "folds Misra-Gries sketch state",
+    "Sketches.compactHistState": "folds histogram sketch state",
+    "Sketches.compactKllState": "folds KLL sketch state",
+    "Sketches.kmvStateSketch": "reads KMV state under the compaction-k bound compactKmvState records",
+    "Dedup.compactSignatureStateKeys": "folds signature state to the latest version per key",
+    "VectorIndex.rebuildIfDrifted": "rebuilds the vector index when its centroids drift",
+    "VectorIndex.calibrateNprobe": "picks nprobe for a sampled query workload",
+    "IndexStore.upsert": "re-ingests changed documents into either index under one lease",
+    # operators whose guard or plan shape is what their spec pins
+    "Relational.transitiveClosure": "the quadratic pair list behind its node-count guard",
+    "Relational.cpmSchedule": "the reference's stage-dependency schedule (test.mmd:52-58)",
+    "Skew.saltedEquiJoin": "skew salting behind its key-salt guard",
+    "TokenIndex.containmentJoinIndexedFiltered": "pushes a metadata predicate into the postings scan",
+    "CorpusPipeline.writeRelease": "writes a release whose manifest is read back from the files",
+    "Bpe.encodeUdf": "applies learned merges to new text; q103 checks training only",
+    "AvOps.audioFeatures": "the WAV feature kernel; no fixture table holds audio",
+    "AvOps.sampleFrames": "the byte-window frame fallback for payloads no demuxer claims",
+    "ImageOps.gridBlob": "a spec fixture over private decode and grid helpers",
+}
 # Entry points named by the JVM, not by code.
 ENTRY_POINTS = ("main",)
+# A modifier that hides a def or a type from the rest of graft.
+HIDDEN = re.compile(r"\b(?:private(?!\s*\[graft\])|protected)\b")
+# An environment or system-property read, and the reads that fetch a
+# platform fact rather than choose behaviour.
+OPTION_READ = re.compile(r'\b(?:sys\.env|sys\.props|System\.getenv|System\.getProperty)\b[^"\n]*"([^"]+)"')
+PLATFORM_FACTS = ("java.io.tmpdir", "java.vm.version")
+# A SQL function registered by name.
+REGISTERED = re.compile(r'FunctionIdentifier\s*\(\s*"(\w+)"')
+
+
+def uncommented(src):
+    """Comments blanked, string literals kept; newlines and offsets kept."""
+    keep = lambda m: m.group(0) if m.group(0)[0] == '"' else re.sub(r"[^\n]", " ", m.group(0))
+    return re.sub(r'"""(?:.|\n)*?"""|"(?:\\.|[^"\\\n])*"|/\*.*?\*/|//[^\n]*', keep, src, flags=re.S)
 
 
 def code_text(src):
@@ -390,7 +469,7 @@ def code_text(src):
 
 def template_bodies(src):
     """{offset of each `{` that opens an object, class or trait body: True if
-    that declaration is private or protected}. A `{` opens one when the text
+    that declaration is private (not `private[graft]`) or protected}. A `{` opens one when the text
     back to the start of its statement declares a type and is no `new`."""
     out = {}
     for i, ch in enumerate(src):
@@ -410,16 +489,17 @@ def template_bodies(src):
             j -= 1
         head = src[j + 1:i]
         if re.search(r"\b(?:object|class|trait)\s+\w+", head) and not re.search(r"\bnew\b", head):
-            out[i] = bool(re.search(r"\b(?:private|protected)\b", head))
+            out[i] = bool(HIDDEN.search(head))
     return out
 
 
 def declarations(rel, src):
-    """A Decl for every `def` of `src`; `public` when it is not private,
+    """A Decl for every `def` of `src`; `public` when it is not private
+    (`private[graft]` is public here: any graft code may call it),
     protected or override and sits directly in an object, class or trait
     body that is itself public (not in a method)."""
     bodies = template_bodies(src)
-    owner_at = owner_index(src)
+    owner_at = owner_index(src, kind=True)
     defs = [(m.start(), m.group(1)) for m in re.finditer(r"\bdef\s+([\w$]+)", src)]
     out, stack, k = [], [], 0
     for i, ch in enumerate(src):
@@ -428,10 +508,11 @@ def declarations(rel, src):
             k += 1
             mods = src[max(src.rfind("\n", 0, pos), src.rfind("{", 0, pos), src.rfind(";", 0, pos)) + 1:pos]
             public = (bool(stack) and all(b in bodies and not bodies[b] for b in stack)
-                      and not re.search(r"\b(?:private|protected|override)\b", mods)
+                      and not HIDDEN.search(mods) and not re.search(r"\boverride\b", mods)
                       and name not in ENTRY_POINTS)
             lo, hi = def_arity(src, src.index(name, pos + 3) + len(name))
-            out.append(Decl(rel, pos, src.count("\n", 0, pos) + 1, owner_at(pos), name, lo, hi, public))
+            owner, obj = owner_at(pos)
+            out.append(Decl(rel, pos, src.count("\n", 0, pos) + 1, owner, name, lo, hi, public, obj=obj))
         if ch == "{":
             stack.append(i)
         elif ch == "}" and stack:
@@ -441,15 +522,18 @@ def declarations(rel, src):
 
 def operators(root):
     """[(file, line, Owner.name, spec files reaching it)] for each public def
-    in src/main that no src/main or perfbench/src use reaches, and the same
-    rows for the exempt ones."""
-    texts = {}
+    in src/main that no src/main or perfbench/src use reaches, and for each
+    registered SQL function that no src/main or perfbench/src string names
+    outside a def of the first kind; and the same rows for the exempt ones."""
+    texts, raw = {}, {}
     for g in GROUPS:
         for rel in scala_files(root, g):
-            texts[rel] = (g, code_text(open(os.path.join(root, rel), encoding="utf-8").read()))
-    by_name = {}
+            src = open(os.path.join(root, rel), encoding="utf-8").read()
+            texts[rel], raw[rel] = (g, code_text(src)), uncommented(src)
+    by_name, decls = {}, {}
     for rel in scala_files(root, "src/main"):
-        for d in declarations(rel, texts[rel][1]):
+        decls[rel] = declarations(rel, texts[rel][1])
+        for d in decls[rel]:
             by_name.setdefault(d.call, []).append(d)
     uses = {}
     for rel, (g, t) in texts.items():
@@ -465,27 +549,44 @@ def operators(root):
                     or re.match(r"\s*=(?![=>])", t[m.end():m.end() + 3])):
                 continue
             qual = scope.qualifier(t, m.start())
-            reached, _ = scope.resolve(ds, m.group(1), qual, call_arity(t, m.end()))
+            bare = t[skip_type_args(t, m.end()):][:1] not in "({"
+            reached, _ = scope.resolve(ds, m.group(1), qual, call_arity(t, m.end()), bare)
             for d in reached:
                 uses.setdefault(id(d), set()).add((g, rel))
-    found, exempt = [], []
+    rows, spec_only = [], set()
     for ds in by_name.values():
         for d in ds:
             hits = uses.get(id(d), set())
-            if not d.public or any(g != "src/test" for g, _ in hits):
-                continue
-            where = f"{d.owner}.{d.name}" if d.owner else d.name
-            row = (d.rel, d.line, where, sorted(r for _, r in hits))
-            (exempt if where in OPERATOR_EXEMPT else found).append(row)
-    return sorted(found), sorted(exempt)
+            if d.public and not any(g != "src/test" for g, _ in hits):
+                where = f"{d.owner}.{d.name}" if d.owner else d.name
+                rows.append((d.rel, d.line, where, sorted(r for _, r in hits)))
+                spec_only.add(id(d))
+    registered = {m.group(1): (rel, raw[rel].count("\n", 0, m.start()) + 1)
+                  for rel in decls for m in REGISTERED.finditer(raw[rel])}
+    def last_def(rel, pos):
+        before = [d for d in decls.get(rel, ()) if d.pos < pos]
+        return before[-1] if before else None
+    for fn, (home, line) in registered.items():
+        # a call: `call_function("fn", ...)` or `fn(...)` in SQL text
+        call = re.compile(r"(?<![\w$])" + fn + r'(?=\s*\(|"\s*[,)])')
+        users = [(texts[rel][0], rel, m.start()) for rel, text in raw.items() if rel != home
+                 for m in call.finditer(text)]
+        # a main use counts unless it sits in a def only specs reach
+        if all(g == "src/test" or id(last_def(rel, pos)) in spec_only for g, rel, pos in users):
+            rows.append((home, line, fn, sorted({rel for g, rel, _ in users if g == "src/test"})))
+    found = [r for r in rows if r[2] not in OPERATOR_EXEMPT]
+    return sorted(found), sorted(r for r in rows if r[2] in OPERATOR_EXEMPT)
 
 
 def print_operators(root):
     found, exempt = operators(root)
-    print(f"public defs not referenced outside src/test {len(found)}")
+    print(f"defs not referenced outside src/test {len(found)}")
     for rel, line, where, tests in found:
         print(f"{rel}:{line}  {where}  src/test: " + (", ".join(sorted({os.path.basename(t) for t in tests})) or "-"))
     print("exempt: " + ", ".join(where for _, _, where, _ in exempt))
+    # an exemption whose def is gone or has gained a caller outside src/test
+    stale = sorted(set(OPERATOR_EXEMPT) - {where for _, _, where, _ in exempt})
+    print(f"stale exemptions {len(stale)}" + "".join(f"\n  {w}" for w in stale))
 
 if __name__ == "__main__":
     args = sys.argv[1:]
@@ -503,3 +604,9 @@ if __name__ == "__main__":
     for f, n in sorted(counts.items(), key=lambda kv: (-kv[1], kv[0])):
         if n:
             print(f"{n:5d}  {f}")
+    reads = [(rel, key) for rel in scala_files(root, "src/main")
+             for key in OPTION_READ.findall(uncommented(open(os.path.join(root, rel), encoding="utf-8").read()))
+             if key not in PLATFORM_FACTS]
+    print(f"option reads {len(reads)}")
+    for rel, key in reads:
+        print(f"  {rel}  {key}")
