@@ -623,8 +623,8 @@ object Queries {
       // roundTo = 6 ranks over the ROUNDED similarity (matches the
       // oracle's ORDER BY sim — rounding after ranking could disagree on
       // rank ties); the helper's plan shape is the audited one: broadcast
-      // queries, heap-bounded partitions BEFORE the exchange, no
-      // one-reducer-per-query window over the full scored set
+      // queries, WindowGroupLimit-bounded partitions BEFORE the
+      // exchange, no one-reducer-per-query window over the full scored set
       Similarity.bruteForceCosineTopK(
           emb, "vec_id", "embedding",
           emb.filter(col("vec_id") < 10), "vec_id", "embedding",
@@ -1037,9 +1037,9 @@ object Queries {
   private val q45 = Q(
     "q45_topk_native_operator",
     (s, d) => {
-      // the custom whole-stage TopK operator (TopKPartialExec bounds each
-      // partition BEFORE the shuffle); same rows as the window form
-      Relational.topKPerGroupNative(
+      // the window top-k, bounded per partition BEFORE the shuffle by
+      // Spark's WindowGroupLimit Partial; same rows as the SQL form
+      Relational.topKPerGroup(
         Tables.orders(s, d),
         Seq(col("o_custkey")),
         Seq(col("o_totalprice").desc, col("o_orderkey").asc), 3)
@@ -1386,14 +1386,14 @@ object Queries {
       // dominate the corpus). The fixture has no URL column, so one is
       // synthesized deterministically from (source, doc_id) and the
       // domain is re-parsed out of the url string — the real pipeline
-      // shape. The cap is the native TopK operator: per-partition heaps
-      // bound every domain to k rows BEFORE the exchange, so the shuffle
-      // carries <= k*domains*partitions rows however large the crawl.
+      // shape. The cap is the window top-k: Spark's WindowGroupLimit
+      // Partial bounds every domain to k rows BEFORE the exchange, so the
+      // shuffle carries <= k*domains*partitions rows however large the crawl.
       val docs = Tables.documents(s, d)
         .withColumn("url", concat(lit("https://www."), col("source"),
           lit(".example.com/docs/"), col("doc_id").cast("string")))
         .withColumn("domain", regexp_extract(col("url"), "^https://([^/]+)/", 1))
-      Relational.topKPerGroupNative(docs,
+      Relational.topKPerGroup(docs,
         Seq(col("domain")), Seq(col("n_chars").desc, col("doc_id").asc), 5)
         .select(col("doc_id"), col("domain"), col("n_chars"))
         .orderBy(col("domain"), col("n_chars").desc, col("doc_id"))
@@ -1936,7 +1936,8 @@ object Queries {
     (s, d) => {
       // deterministic k-per-stratum sample (CorpusPipeline.samplePerStratum):
       // rank by salted sha-256 of the id, keep the 7 smallest per source
-      // through the native TopK operator — heap-bounded BEFORE the exchange
+      // through the window top-k — bounded BEFORE the exchange by Spark's
+      // WindowGroupLimit Partial
       graft.pipeline.CorpusPipeline.samplePerStratum(
         Tables.documents(s, d).select(col("doc_id"), col("source"), col("lang"),
           col("n_chars")),
@@ -2314,8 +2315,8 @@ object Queries {
       // deterministic weighted sampling (CorpusPipeline.weightedSample):
       // 100 eval docs drawn with probability ∝ token count via the
       // Efraimidis–Spirakis exponential race — reproducible anywhere the
-      // salt travels; the native TopK bounds the shuffle to k rows per
-      // partition.
+      // salt travels; TakeOrderedAndProject keeps k rows per partition
+      // before the single merge.
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("source"),
           TF.tokenCount(col("text")).cast("long").as("n_tokens"))
@@ -2871,7 +2872,7 @@ object Queries {
     (s, d) => {
       // q34's twin: the FULL lshCosineTopK operator (hyperplane
       // signatures on both sides, per-table explode, (table, sig)
-      // candidate equi-join, dedup, exact cosine re-rank, native TopK)
+      // candidate equi-join, dedup, exact cosine re-rank, window top-k)
       // with its one probabilistic degree of freedom — LSH recall —
       // pinned shut by the q94 trick: queries are ×2 copies of every
       // 5th corpus vector. Doubling is EXACT in float, so sign(dot) is

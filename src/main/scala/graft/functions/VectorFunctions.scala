@@ -4,52 +4,19 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Embedding-vector column functions over `array<float>` / `array<double>`
-  * columns, built from Catalyst higher-order functions (`zip_with`,
-  * `aggregate`, `transform`) — codegen-friendly, no UDFs, no driver-side
+  * columns: native Catalyst expressions (`graft.plans`) and Catalyst
+  * higher-order functions — codegen-friendly, no UDFs, no driver-side
   * collection. At 100 TB the embedding column never leaves the executors.
   *
-  * Accumulation is double-precision and strictly left-to-right (the
-  * `aggregate` HOF contract), which makes results bit-reproducible and
-  * comparable across engines.
+  * Accumulation is double-precision and strictly left-to-right, which
+  * makes results bit-reproducible and comparable across engines.
   */
 object VectorFunctions {
 
-  /** Double-precision dot product of two array columns. */
-  def dot(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0),
-      (acc, x) => acc + x)
-
-  /** Euclidean (L2) norm. */
-  def l2Norm(a: Column): Column = sqrt(dot(a, a))
-
-  /** Cosine similarity. Degenerate-input contract (shared bit-for-bit
-    * with [[cosineNative]] — see the semantics note on
-    * [[graft.plans.CosineSimilarity]]):
-    *   - NULL input ARRAY on either side → NULL (standard SQL null-in
-    *     null-out; without the explicit guard the `when` condition would
-    *     be null and `otherwise` would silently turn a missing embedding
-    *     into 0.0);
-    *   - null ELEMENT / zero norm / empty array → 0.0;
-    *   - NaN anywhere → 0.0 (matches the native expression, whose Java
-    *     `na > 0` is false for NaN; without the explicit isnan guard
-    *     Spark's NaN-largest ordering makes `NaN > 0` TRUE here, the HOF
-    *     would return NaN, and — worse — that NaN would PASS any
-    *     `cosine >= threshold` near-dup filter);
-    *   - length mismatch with both norms positive → NULL.
-    */
-  def cosine(a: Column, b: Column): Column = {
-    val na = l2Norm(a)
-    val nb = l2Norm(b)
-    when(a.isNull || b.isNull, lit(null).cast("double"))
-      .otherwise(when(na > 0 && nb > 0 && !isnan(na) && !isnan(nb),
-        dot(a, b) / (na * nb)).otherwise(lit(0.0)))
-  }
-
   /** Cosine via the native fused-loop Catalyst expression
-    * ([[graft.plans.CosineSimilarity]]) — bit-identical to [[cosine]],
-    * zero per-row allocation, full codegen. Requires a session built with
+    * ([[graft.plans.CosineSimilarity]]) — bit-identical to the HOF
+    * `aggregate`/`zip_with` form the specs keep as its reference, zero
+    * per-row allocation, full codegen. Requires a session built with
     * [[graft.plans.GraftExtensions]] (graft.Sessions.local does this).
     */
   def cosineNative(a: Column, b: Column): Column = call_function("graft_cosine", a, b)

@@ -969,8 +969,7 @@ object Dedup {
     // cosines order below every real score) and pile into one quadratic
     // self-join block.
     val blocked = df.withColumn("__sem_cluster",
-      when(usable, Similarity.assignCluster(
-        Some(df.sparkSession), col(embCol), cents.map(_.toSeq).toSeq)))
+      when(usable, Similarity.assignCluster(col(embCol), cents.map(_.toSeq).toSeq)))
     val pairs = embeddingNearDuplicates(blocked, idCol, embCol, "__sem_cluster", threshold)
     scoreCol match {
       case Some(s) => keepBestPerCluster(df, idCol, s, pairs)

@@ -39,8 +39,11 @@ private[graft] object IndexStore {
   }
 
   /** The changed-document upsert of either index as ONE call:
-    * re-ingest `batch` under `runId` through `append`, masking every row
-    * its ids had in runs BELOW it. The horizon is `runId - 1` —
+    * re-ingest `batch` under `runId` through `append` (the index's own
+    * append, e.g. `TokenIndex.append(_, idCol, textCol, indexDir, _, _)`,
+    * called with `batch`, `runId` and `metaCols`, so the appended run and
+    * metadata set are the ones checked here), masking every row its ids
+    * had in runs BELOW it. The horizon is `runId - 1` —
     * explicit, not derived — so the call is idempotent under redelivery
     * even when other appends interleave, and a crash between the two
     * steps leaves only the benign delete-applied/append-missing state a
@@ -48,7 +51,8 @@ private[graft] object IndexStore {
     * and its reserved posting columns; callers own run monotonicity.
     */
   def upsert(batch: DataFrame, idCol: String, key: String, reserved: Set[String],
-      indexDir: String, runId: Long, metaCols: Seq[String])(append: => Unit): Unit =
+      indexDir: String, runId: Long, metaCols: Seq[String])(
+      append: (DataFrame, Long, Seq[String]) => Unit): Unit =
     // ONE lease across both steps (withLease is reentrant), so no other
     // writer can interleave between the delete and the append
     graft.sources.Lease.withLease(batch.sparkSession, indexDir) {
@@ -57,7 +61,7 @@ private[graft] object IndexStore {
       requireMetaSet(batch, metaCols, s"$indexDir/postings", reserved)
       appendTombstones(batch.select(col(idCol)), idCol, key, indexDir,
         s"$indexDir/postings", runId - 1)
-      append
+      append(batch, runId, metaCols)
     }
 
   /** Append `ids` to the ledger under horizon `asofRun`. [[DeriveAsof]]

@@ -51,6 +51,11 @@ object Relational {
   /** Top-k rows per group, deterministic via explicit tie-break columns.
     * One shuffle (the window partition); with AQE this is the canonical
     * scalable "first-match" (reference `/root/reference/test.py:163-164`).
+    * Spark bounds the shuffle itself: its `InferWindowGroupLimit` rule
+    * plans the `row_number() <= k` filter as `WindowGroupLimit` Partial
+    * below the exchange and Final above it, so each input partition
+    * sends at most k rows per group, for k below
+    * `spark.sql.optimizer.windowGroupLimitThreshold` (1000).
     */
   def topKPerGroup(df: DataFrame, partitionCols: Seq[Column], orderCols: Seq[Column], k: Int,
       rankName: String = "rank"): DataFrame = {
@@ -109,30 +114,6 @@ object Relational {
       .withColumn("session_id",
         sum(col("__new")).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .drop("__new")
-  }
-
-  /** Per-group top-k through the engine's custom whole-stage operator
-    * ([[graft.plans.TopKPerGroupPlan]] → TopKPartialExec/TopKFinalExec):
-    * bounded per-group heaps BEFORE the shuffle, so only ≤ k rows per
-    * group per partition hit the exchange — unlike the window form,
-    * which shuffles every input row to rank it. Same row set as
-    * `topKPerGroup` (minus the rank column); requires the graft
-    * extensions (Sessions.local installs them).
-    */
-  def topKPerGroupNative(df: DataFrame, partitionCols: Seq[Column], orderCols: Seq[Column],
-      k: Int): DataFrame = {
-    // the partial operator's heap iterator dereferences heap.peek() once
-    // the heap is non-empty-by-contract; k <= 0 would NPE in the task
-    require(k > 0, s"topKPerGroupNative: k must be positive, got $k")
-    import org.apache.spark.sql.GraftSqlBridge
-    import org.apache.spark.sql.catalyst.expressions.{Ascending, SortOrder}
-    val groupExprs = partitionCols.map(GraftSqlBridge.expression)
-    val sortOrders = orderCols.map(GraftSqlBridge.expression).map {
-      case so: SortOrder => so
-      case e => SortOrder(e, Ascending)
-    }
-    GraftSqlBridge.ofRows(df.sparkSession,
-      graft.plans.TopKPerGroupPlan(groupExprs, sortOrders, k, GraftSqlBridge.logicalPlan(df)))
   }
 
   /** Point-in-interval range join (the IP-to-geo / price-to-bracket

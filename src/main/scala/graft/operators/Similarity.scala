@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions
 
@@ -28,28 +27,26 @@ object Similarity {
     * hash-cut sample of about this many rows. */
   val KmeansMaxTrainRows: Int = 1 << 21
 
-  /** Rank a scored candidate set down to k per query: the custom TopK
-    * operator bounds each input partition to k rows per query BEFORE the
-    * exchange (TopKPartialExec), so the shuffle moves ≤ k·|queries| rows
-    * per partition instead of every scored row — the window form's
-    * one-reducer-per-query straggler is the single worst scaling hazard
-    * in this file. The rank column is recovered with a window AFTER the
-    * bound: its input is already ≤ k rows per query and already hash
-    * partitioned by query_id by TopKFinalExec, so no third exchange.
+  /** Rank a scored candidate set down to k per query with one
+    * `row_number()` window ([[Relational.topKPerGroup]]). Spark plans it
+    * as `WindowGroupLimit` Partial below the exchange, so the shuffle
+    * moves ≤ k·|queries| rows per partition instead of every scored row
+    * — an unbounded window's one-reducer-per-query straggler is the
+    * single worst scaling hazard in this file. The bound holds for k
+    * below `spark.sql.optimizer.windowGroupLimitThreshold` (1000); above
+    * it every scored row reaches the exchange.
     */
-  def rankTopK(scored: DataFrame, k: Int): DataFrame = {
-    val order = Seq(col("cosine").desc, col("neighbor_id").asc)
-    val bounded = Relational.topKPerGroupNative(scored, Seq(col("query_id")), order, k)
-    val w = Window.partitionBy(col("query_id")).orderBy(order: _*)
-    bounded.withColumn("rank", row_number().over(w))
+  def rankTopK(scored: DataFrame, k: Int): DataFrame =
+    Relational.topKPerGroup(scored, Seq(col("query_id")),
+      Seq(col("cosine").desc, col("neighbor_id").asc), k)
       .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank"))
-  }
 
   /** Exact top-k cosine neighbors for each query vector.
     *
     * `queries` must be small (it is broadcast). Corpus rows never shuffle
     * at full width: the cross product is a BroadcastNestedLoopJoin and the
-    * per-query top-k is heap-bounded per partition before its exchange.
+    * per-query top-k is bounded per partition before its exchange
+    * ([[rankTopK]]).
     */
   def bruteForceCosineTopK(
       corpus: DataFrame,
@@ -117,7 +114,7 @@ object Similarity {
   }
 
   /** Embedding-space benchmark decontamination — the semantic-similarity
-    * counterpart of the n-gram pass ([[Dedup.decontaminate]]): flag every
+    * counterpart of the n-gram pass ([[Dedup.flagContaminated]]): flag every
     * corpus row whose embedding has cosine ≥ `threshold` to ANY benchmark
     * embedding, reporting the best-matching benchmark id. Catches the
     * paraphrased test-set leakage that exact n-gram overlap misses.
@@ -150,41 +147,19 @@ object Similarity {
   }
 
   /** Nearest-centroid id for a vector under cosine similarity, as a PURE
-    * PROJECTION: the centroid list rides along as one `typedLit`, every
-    * centroid is scored inside a single `transform`, and `array_max` over
-    * `struct(cosine, id)` picks the winner (ties → larger id — total and
+    * PROJECTION: the centroid list rides along as one `typedLit` and the
+    * native fused argmax ([[graft.plans.ArgmaxCosine]]) scores every
+    * centroid and picks the winner (ties → larger id — total and
     * deterministic). No join, no shuffle: assigning a 100 TB corpus to k
-    * clusters is a map-only stage.
-    *
-    * Resolved against an EXPLICIT session's function registry: the
-    * active session can, in a multi-session app, differ from the one
-    * that will analyze the returned Column, so callers pass the target
-    * DataFrame's `sparkSession`.
+    * clusters is a map-only stage. The HOF form it replaced,
+    * `array_max(transform(centroids, struct(cosine, idx)))`, allocated k
+    * structs + an array PER ROW, which dominated every Lloyd iteration at
+    * k ≈ 100 (q94 sf1 profile); VectorExpressionsSpec pins the two
+    * equivalent case by case.
     */
-  def assignCluster(session: Option[org.apache.spark.sql.SparkSession],
-      emb: Column, centroids: Seq[Seq[Double]]): Column = {
+  def assignCluster(emb: Column, centroids: Seq[Seq[Double]]): Column = {
     require(centroids.nonEmpty, "assignCluster: need at least one centroid")
-    // native fused argmax (plans/ArgmaxCosine): the HOF form below —
-    // array_max(transform(centsLit, struct(cosine, idx))) — allocated
-    // k structs + an array PER ROW, which dominated every Lloyd
-    // iteration at k ≈ 100 (q94 sf1 profile). Semantics are pinned
-    // equivalent case-by-case by VectorExpressionsSpec. Sessions built
-    // without GraftExtensions (an external consumer's own
-    // SparkSession) keep working: fall back to the pure-Column HOF
-    // form — the pre-round-12 implementation — when the native
-    // function is not registered, instead of failing analysis.
-    val nativeAvailable =
-      session.exists(graft.plans.GraftExtensions.hasFunction(_, "graft_argmax_cos"))
-    if (nativeAvailable)
-      call_function("graft_argmax_cos", emb, typedLit(centroids))
-    else {
-      // pure-Column throughout: VectorFunctions.cosine is the HOF
-      // cosine (bit-identical to the native expression by spec), so
-      // this branch resolves in ANY session, registry or not
-      val scored = transform(typedLit(centroids), (c, ci) =>
-        struct(VectorFunctions.cosine(emb, c).as("cd"), ci.as("cid")))
-      array_max(scored).getField("cid")
-    }
+    call_function("graft_argmax_cos", emb, typedLit(centroids))
   }
 
   /** Spherical k-means (Lloyd's algorithm, cosine distance): returns the
@@ -308,7 +283,7 @@ object Similarity {
       var shift = Double.MaxValue
       while (iter < maxIter && shift > KmeansTol) {
         val stats = normed
-          .select(assignCluster(Some(spark), col("__e"),
+          .select(assignCluster(col("__e"),
             cents.map(_.toSeq).toSeq).as("__c"), col("__e"))
           .groupBy(col("__c"))
           .agg(sumAgg(col("__e")).as("__s"), count(lit(1)).as("__n"))

@@ -17,7 +17,7 @@ import graft.sources.ParquetRead
   * probe sets arrive repeatedly, and re-paying the full corpus scan per
   * probe batch is the dominant cost (the r13 sf10 probe put it at
   * ~64 ms/probe of corpus-side work). This is the signature-state
-  * pattern ([[Dedup.incrementalNearDuplicates]] + `compactSignatureStateKeys`)
+  * pattern ([[Dedup.minHashNearDuplicatesVsState]] + `compactSignatureStateKeys`)
   * applied to the token index: write per-ingest deltas once, probe
   * incrementally forever, compact at the retention horizon.
   *

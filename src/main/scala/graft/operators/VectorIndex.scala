@@ -542,9 +542,9 @@ object VectorIndex {
     * assign to their `nprobe` best cells (the same slice-sort rule as
     * `ivfCosineTopK` — cosine desc, centroid_id asc), the probed cells'
     * postings join back by cell id, and the exact cosine re-rank runs
-    * on that candidate-sized set through the native TopK. The corpus
-    * never re-assigns, never re-trains, never shuffles at full width —
-    * the one exchange is the ≤ k·|queries| TopK bound.
+    * on that candidate-sized set through [[Similarity.rankTopK]]. The
+    * corpus never re-assigns, never re-trains, never shuffles at full
+    * width — the top-k exchange carries ≤ k rows per query per partition.
     *
     * On an sq8 index ([[build]]'s `sq8 = true`) the re-rank scores the
     * int8 codes (scale-invariant cosine; per-element rounding error ≤
@@ -801,7 +801,7 @@ object VectorIndex {
     // (query, neighbor) pairs broadcast onto it (plan-pinned in
     // VectorIndexSpec — no SortMergeJoin/ShuffledHashJoin anywhere, so
     // the corpus never shuffles and the first exchange in the plan is
-    // the candidate-sized TopK one)
+    // the candidate-sized top-k one)
     Similarity.rankTopK(
       corpus.select(col(corpusId).as("neighbor_id"), col(corpusEmb).as("__ce"))
         .join(broadcast(cand), "neighbor_id")

@@ -247,10 +247,11 @@ object CorpusPipeline {
     * reproducible, and externally replayable, the same determinism
     * contract as [[deterministicSplit]]/[[samplePerStratum]] (which this
     * generalizes — constant weights reduce to the uniform sampler).
-    * Selection goes through the native TopK operator, so per-partition
-    * heaps bound the shuffle to k rows per partition however large the
-    * corpus. Non-positive weights are excluded (they'd divide by zero or
-    * invert the race).
+    * Selection is `orderBy(key, id).limit(k)`, which Spark plans as
+    * `TakeOrderedAndProject`: each partition keeps its k smallest keys
+    * and only those reach the single merge, however large the corpus.
+    * Non-positive weights are excluded (they'd divide by zero or invert
+    * the race).
     */
   def weightedSample(df: DataFrame, idCol: String, weightCol: String, k: Int): DataFrame =
     weightedSample(df, idCol, weightCol, k, WeightedSampleSalt)
@@ -264,10 +265,9 @@ object CorpusPipeline {
     val u = (graft.operators.Sketches.sha60(
       concat(col(idCol).cast("string"), lit(salt))).cast("double") + 1.0) /
       graft.operators.Sketches.M
-    Relational.topKPerGroupNative(
-      df.filter(col(weightCol) > 0)
-        .withColumn("__key", -log(u) / col(weightCol)),
-      Seq(lit(1)), Seq(col("__key").asc, col(idCol).asc), k)
+    df.filter(col(weightCol) > 0)
+      .withColumn("__key", -log(u) / col(weightCol))
+      .orderBy(col("__key").asc, col(idCol).asc).limit(k)
       .drop("__key")
   }
 
@@ -305,19 +305,20 @@ object CorpusPipeline {
     * 500 random docs per language for eval" op): rank by the sha-256 of
     * the id salted with "sample" — uniform AND reproducible (partition-count- and
     * rerun-invariant, the [[deterministicSplit]] property) — and keep the
-    * k smallest per stratum through the native TopK operator
-    * ([[graft.operators.Relational.topKPerGroupNative]]), whose
-    * per-partition heaps bound every stratum to k rows BEFORE the
-    * exchange: the shuffle moves ≤ k·strata·partitions rows however large
-    * the corpus, where a window row_number would shuffle everything.
+    * k smallest per stratum ([[graft.operators.Relational.topKPerGroup]]).
+    * Spark plans that window as `WindowGroupLimit` Partial below the
+    * exchange, which bounds every stratum to k rows per partition BEFORE
+    * the shuffle: it moves ≤ k·strata·partitions rows however large the
+    * corpus, for k below `spark.sql.optimizer.windowGroupLimitThreshold`
+    * (1000).
     */
   def samplePerStratum(df: DataFrame, idCol: String, stratumCol: String,
       k: Int): DataFrame =
-    Relational.topKPerGroupNative(
+    Relational.topKPerGroup(
       df.withColumn("__h", sha2(concat(col(idCol).cast("string"), lit("sample")), 256)),
       Seq(col(stratumCol)),
-      Seq(col("__h").asc, col(idCol).asc), k)
-      .drop("__h")
+      Seq(col("__h").asc, col(idCol).asc), k, "__rn")
+      .drop("__h", "__rn")
 
   /** Deterministic training-mix interleave: assign every row a global
     * `slot` such that ordering by it cycles round-robin across strata
@@ -402,19 +403,10 @@ object CorpusPipeline {
       .groupBy(col(idCol)).agg(collect_set(col("pos")).as("dup_starts"))
     // per-token mask: native sorted-starts two-pointer sweep
     // (plans/SpanMask, O(tokens + windows·log windows)) — the HOF
-    // `exists` form below is O(tokens × windows) per doc and was the
-    // engine's #1 CPU sink at sf1 (VERDICT r12). Kept as the fallback
-    // for sessions built without GraftExtensions; SpanMaskSpec pins the
-    // two forms equivalent on randomized overlap cases.
-    val kept =
-      if (graft.plans.GraftExtensions.hasFunction(docs.sparkSession, "graft_span_mask"))
-        call_function("graft_span_mask", col("w"), col("ds"), lit(n))
-      else
-        filter(
-          transform(col("w"), (t, i) =>
-            when(exists(col("ds"), p => i >= p && i < p + lit(n)),
-              lit(null).cast("string")).otherwise(t)),
-          _.isNotNull)
+    // `exists` form it replaced is O(tokens × windows) per doc and was
+    // the engine's #1 CPU sink at sf1 (VERDICT r12); SpanMaskSpec pins
+    // the two forms equivalent on randomized overlap cases.
+    val kept = call_function("graft_span_mask", col("w"), col("ds"), lit(n))
     toks.join(dupStarts, Seq(idCol), "left")
       .select(col(idCol), col("w"),
         coalesce(col("dup_starts"), array().cast("array<int>")).as("ds"))

@@ -11,26 +11,9 @@ import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType}
   * `SparkSession.builder.withExtensions(new GraftExtensions)` (done by
   * [[graft.Sessions.local]]).
   */
-object GraftExtensions {
-
-  /** Is a graft native function registered in `session`'s catalog?
-    * Operators that prefer a native expression but must keep working in
-    * sessions built WITHOUT GraftExtensions probe with this and fall
-    * back to the pure-Column HOF form. Resolve against the session that
-    * OWNS the target DataFrame (`df.sparkSession`), never
-    * `getActiveSession`, which can be a different session in
-    * multi-session apps (ADVICE r12).
-    */
-  def hasFunction(session: org.apache.spark.sql.SparkSession, name: String): Boolean =
-    session.sessionState.catalog.isRegisteredFunction(FunctionIdentifier(name))
-}
-
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectPlannerStrategy(_ => TopKPerGroupStrategy)
-    ext.injectOptimizerRule(_ => TopKColumnPruning)
-
     ext.injectFunction((
       FunctionIdentifier("graft_cosine"),
       new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),

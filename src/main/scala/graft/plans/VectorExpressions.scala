@@ -42,8 +42,9 @@ case class CosineSimilarity(left: Expression, right: Expression)
   @inline private def elemAt(a: ArrayData, i: Int, isFloat: Boolean): Double =
     if (isFloat) a.getFloat(i).toDouble else a.getDouble(i)
 
-  /** Degenerate-input semantics, shared with the HOF form
-    * ([[graft.functions.VectorFunctions.cosine]]), case by case:
+  /** Degenerate-input semantics, shared with the HOF form (the
+    * `aggregate`/`zip_with` cosine the specs keep as its reference),
+    * case by case:
     *   - NULL input ARRAY on either side → **NULL** (null-in null-out;
     *     `nullSafeEval`/`nullSafeCodeGen` never run — the HOF form carries
     *     an explicit `isNull` guard to match);

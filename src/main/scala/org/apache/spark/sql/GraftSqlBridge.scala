@@ -1,27 +1,20 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Minimal package-placed bridge to the `private[sql]` constructors the
-  * engine needs for its custom logical operator: build a DataFrame from
-  * a LogicalPlan and convert public `Column`s to Catalyst `Expression`s.
-  * This is the standard extension seam used by Spark-native libraries —
-  * no Spark internals are modified, only constructed.
+/** Minimal package-placed bridge to the `private[sql]` conversions the
+  * engine's native expressions need: public `Column`s to Catalyst
+  * `Expression`s and back. This is the standard extension seam used by
+  * Spark-native libraries — no Spark internals are modified, only
+  * constructed.
   */
 object GraftSqlBridge {
-
-  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
-    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
   /** Eager ColumnNode→Expression conversion (ExpressionUtils.expression
     * returns a lazy ColumnNodeExpression wrapper that would reach
     * executors unconverted and non-serializable).
     */
   def expression(c: Column): Expression = classic.ColumnNodeToExpressionConverter(c.node)
-
-  def logicalPlan(df: DataFrame): LogicalPlan =
-    df.asInstanceOf[classic.Dataset[Row]].logicalPlan
 
   /** Expression→Column (the inverse of [[expression]]) — for custom
     * expressions whose construction carries non-literal driver state

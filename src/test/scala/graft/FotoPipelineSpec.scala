@@ -158,6 +158,24 @@ class FotoPipelineSpec extends SparkSpec {
     assert(violations == 1, s"one extra copy of a key must be one violation, got $violations")
   }
 
+  test("a rerun after a crash between the image and metadata writes stores each image once") {
+    val tmp = Files.createTempDirectory("foto_crash").toString
+    FotoFixture.generate(spark, s"$tmp/corpus", 8)
+    // a regular file where metadata/ goes: the images land, then the
+    // metadata write fails
+    val obstacle = new java.io.File(s"$tmp/out/metadata")
+    assert(obstacle.getParentFile.mkdirs())
+    Files.write(obstacle.toPath, Array[Byte](1))
+    intercept[Exception](FotoFixture.runPipeline(spark, s"$tmp/corpus", s"$tmp/out"))
+    assert(ParquetRead(spark, s"$tmp/out/images").count() == 7)
+    assert(obstacle.delete())
+    // the state is still empty, so the rerun's delta is all 7 images again
+    assert(FotoFixture.runPipeline(spark, s"$tmp/corpus", s"$tmp/out") == 7)
+    val (violations, checked) = FotoFixture.checkGolden(spark, s"$tmp/out")
+    assert(violations == 0, s"$violations of $checked images break the golden contract")
+    assert(checked == 7, s"images/ holds $checked rows for 7 metadata rows")
+  }
+
   test("raw binary tree sink writes the reference layout and overwrites idempotently") {
     val tmp = Files.createTempDirectory("btree").toString
     val df = Seq(

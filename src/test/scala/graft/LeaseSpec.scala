@@ -85,7 +85,7 @@ class LeaseSpec extends SparkSpec {
     // upsert = delete + append under ONE lease (reentrant), and the
     // vector mutators share the same guard
     IndexStore.upsert(corpus, "id", "corpus_id", TokenIndex.ReservedPostingCols, idxDir, 2L, Nil)(
-      TokenIndex.append(corpus, "id", "text", idxDir, 2L, Nil))
+      TokenIndex.append(_, "id", "text", idxDir, _, _))
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val vecDir = s"$base/vec"
     VectorIndex.build(emb, "vec_id", "embedding", vecDir, k = 4, maxIter = 3)

@@ -333,15 +333,12 @@ class PlansAndSkewSpec extends SparkSpec {
     assert(read.contains("doc_id") && read.contains("text") && !read.contains("lang"), read)
   }
 
-  test("q60 plan: domain cap runs through TopKPartial below the exchange") {
+  test("q60 plan: domain cap runs through WindowGroupLimit Partial below the exchange") {
     val df = Queries.all.find(_.name == "q60_domain_cap").get
       .run(spark, "/root/testdata/sf0.001")
-    df.write.mode("overwrite").format("noop").save()
-    val plan = df.queryExecution.executedPlan.toString
-    // the partial heap must sit below the exchange so each partition sends
-    // at most k rows per domain; the window form would shuffle every row
-    assert(plan.contains("TopKPartial"), s"expected native TopK operator:\n$plan")
-    assert(!plan.contains("Window"), s"cap must not fall back to the window form:\n$plan")
+    // the partial bound must sit below the exchange so each partition
+    // sends at most k rows per domain, not every row
+    TopKPerGroupSpec.assertBoundBeforeShuffle(df)
   }
 
   test("q69/q70 plans: extraction and chunking are shuffle-free (presentation sort only)") {

@@ -197,7 +197,7 @@ class SimilaritySpec extends SparkSpec {
       assert(math.abs(math.sqrt(c.map(x => x * x).sum) - 1.0) < 1e-9)
     }
     val assigned = data.withColumn("c",
-        Similarity.assignCluster(Some(spark), col("embedding"), cents.map(_.toSeq).toSeq))
+        Similarity.assignCluster(col("embedding"), cents.map(_.toSeq).toSeq))
       .select(col("vec_id"), col("c")).as[(Long, Int)].collect().toMap
     // each planted bundle lands in ONE cluster, and the three differ
     val groups = Seq(0L until 20L, 100L until 120L, 200L until 220L)
@@ -220,7 +220,7 @@ class SimilaritySpec extends SparkSpec {
     val cents = Similarity.kmeansCentroids(data, "vec_id", "embedding",
       k = 3, maxIter = 10, maxTrainRows = 30)
     val assigned = data.withColumn("c",
-        Similarity.assignCluster(Some(spark), col("embedding"), cents.map(_.toSeq).toSeq))
+        Similarity.assignCluster(col("embedding"), cents.map(_.toSeq).toSeq))
       .select(col("vec_id"), col("c")).as[(Long, Int)].collect().toMap
     val groups = Seq(0L until 20L, 100L until 120L, 200L until 220L)
       .map(r => r.map(assigned).toSet)
@@ -282,7 +282,7 @@ class SimilaritySpec extends SparkSpec {
     // assignment is a pure function (identical vectors agree trivially)
     val fdf = Seq((1L, v.map(_.toFloat)), (2L, v.map(x => (x * 2).toFloat)))
       .toDF("id", "e")
-    val co = fdf.select(Similarity.assignCluster(Some(spark), col("e"), cents))
+    val co = fdf.select(Similarity.assignCluster(col("e"), cents))
       .as[Int].collect()
     assert(co(0) == co(1), s"x2 copy must co-assign: ${co.toSeq}")
 
@@ -293,7 +293,7 @@ class SimilaritySpec extends SparkSpec {
       (3L, Option(Seq.fill(dim)(0.0))),
       (4L, Option(Seq(1.0, 2.0)))) // dim mismatch: all 300 norms positive → k-1
       .toDF("id", "e")
-    val degs = bad.select(Similarity.assignCluster(Some(spark), col("e"), cents))
+    val degs = bad.select(Similarity.assignCluster(col("e"), cents))
       .as[Int].collect().toSet
     assert(degs == Set(cents.size - 1), s"degenerates must hit k-1: $degs")
   }
@@ -371,7 +371,7 @@ class SimilaritySpec extends SparkSpec {
     // assignment: a pure projection — the corpus is never joined against
     // the model (the centroid list rides as a literal)
     val assigned = data.withColumn("c",
-      Similarity.assignCluster(Some(spark), col("embedding"), cents.map(_.toSeq).toSeq))
+      Similarity.assignCluster(col("embedding"), cents.map(_.toSeq).toSeq))
     val aPlan = assigned.queryExecution.executedPlan.toString
     assert(!aPlan.contains("Join"), s"assignment must not join:\n$aPlan")
     // pair stage: equi-join on the learned block key only

@@ -282,7 +282,7 @@ class TokenIndexSpec extends SparkSpec {
     val changed = Seq((1L, "nu xi omicron pi")).toDF("doc_id", "text")
     def upsert() = IndexStore.upsert(changed, "doc_id", "corpus_id",
         TokenIndex.ReservedPostingCols, dir, runId = 2L, metaCols = Nil)(
-      TokenIndex.append(changed, "doc_id", "text", dir, 2L, Nil))
+      TokenIndex.append(_, "doc_id", "text", dir, _, _))
     upsert()
     check()
     upsert()
@@ -372,7 +372,7 @@ class TokenIndexSpec extends SparkSpec {
     // an empty metaCols differs from the stored set {lang}
     def upsert(b: org.apache.spark.sql.DataFrame, metaCols: Seq[String]) =
       IndexStore.upsert(b, "doc_id", "corpus_id", TokenIndex.ReservedPostingCols, dir, 1L,
-        metaCols)(TokenIndex.append(b, "doc_id", "text", dir, 1L, metaCols))
+        metaCols)(TokenIndex.append(_, "doc_id", "text", dir, _, _))
     intercept[IllegalArgumentException] {
       upsert(batch.filter(col("doc_id") === 1L), Nil)
     }

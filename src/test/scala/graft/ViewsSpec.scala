@@ -87,13 +87,12 @@ class ViewsSpec extends SparkSpec {
   }
 
   test("SQL-text top-k-per-group is shuffle-bounded natively (no TopK syntax needed)") {
-    // the SURVEY §0 descope note said the custom TopK operator has no
-    // SQL syntax; this pins why that is FINE: Catalyst's own
-    // InferWindowGroupLimit bounds a row_number() <= k filter to k
-    // rows per group per partition BEFORE the exchange
-    // (WindowGroupLimit Partial/Final) — the same pre-shuffle bound
-    // TopKPerGroupPlan gives the DataFrame API. A SQL-string user
-    // writing the standard idiom gets the scale-correct plan for free.
+    // Catalyst's own InferWindowGroupLimit bounds a row_number() <= k
+    // filter to k rows per group per partition BEFORE the exchange
+    // (WindowGroupLimit Partial/Final) — the same pre-shuffle bound the
+    // DataFrame API's Relational.topKPerGroup gets from the same rule. A
+    // SQL-string user writing the standard idiom gets the scale-correct
+    // plan for free.
     views
     val df = spark.sql("""
         SELECT * FROM (

@@ -8,7 +8,39 @@ import org.apache.spark.sql.functions._
   * expression against. Never on a production path. */
 object HofReference {
   import HashFunctions.minHashGeneric
-  import VectorFunctions.{dot, l2Norm}
+
+  /** Double-precision dot product of two array columns. */
+  def dot(a: Column, b: Column): Column =
+    aggregate(
+      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
+      lit(0.0),
+      (acc, x) => acc + x)
+
+  /** Euclidean (L2) norm. */
+  def l2Norm(a: Column): Column = sqrt(dot(a, a))
+
+  /** Cosine similarity. Degenerate-input contract (shared bit-for-bit
+    * with [[VectorFunctions.cosineNative]] — see the semantics note on
+    * [[graft.plans.CosineSimilarity]]):
+    *   - NULL input ARRAY on either side → NULL (standard SQL null-in
+    *     null-out; without the explicit guard the `when` condition would
+    *     be null and `otherwise` would silently turn a missing embedding
+    *     into 0.0);
+    *   - null ELEMENT / zero norm / empty array → 0.0;
+    *   - NaN anywhere → 0.0 (matches the native expression, whose Java
+    *     `na > 0` is false for NaN; without the explicit isnan guard
+    *     Spark's NaN-largest ordering makes `NaN > 0` TRUE here, the HOF
+    *     would return NaN, and — worse — that NaN would PASS any
+    *     `cosine >= threshold` near-dup filter);
+    *   - length mismatch with both norms positive → NULL.
+    */
+  def cosine(a: Column, b: Column): Column = {
+    val na = l2Norm(a)
+    val nb = l2Norm(b)
+    when(a.isNull || b.isNull, lit(null).cast("double"))
+      .otherwise(when(na > 0 && nb > 0 && !isnan(na) && !isnan(nb),
+        dot(a, b) / (na * nb)).otherwise(lit(0.0)))
+  }
 
   /** The original HOF shingle formulation, kept as the independent
     * reference the equivalence spec checks the native expression against.
@@ -71,7 +103,7 @@ object HofReference {
     * form's Java `nrm > 0` (false for NaN): without it Spark's
     * NaN-largest ordering makes `NaN > 0` TRUE and a NaN-norm vector
     * would normalize to all-NaN instead of passing through — the same
-    * guard [[VectorFunctions.cosine]] carries.
+    * guard [[cosine]] carries.
     */
   def l2NormalizeHof(a: Column): Column = {
     val n = l2Norm(a)
